@@ -41,7 +41,6 @@ class CrawlConfig:
     url_seen_shards: int = 8
     bloom_bits_per_shard: int = 1 << 20
     bloom_num_hashes: int = 5
-    use_bloom: bool = True
     # skew salting: a host's selected rows split into
     # ceil(n_selected / fetch_rows_per_salt) salted sub-partitions, so no
     # fetch task is dominated by one hot host

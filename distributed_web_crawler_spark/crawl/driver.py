@@ -34,6 +34,7 @@ import json
 import os
 import time
 from concurrent.futures import ThreadPoolExecutor
+from pathlib import Path
 from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
@@ -535,7 +536,6 @@ class Crawler:
             else seen_hashes.select("content_hash"),
             seen_urls=seen_urls.select("url"),
             blooms=self.store.read(self.spark, "bloom", [r]),
-            hash_blooms=self.store.read(self.spark, "hash_bloom", [r]),
             # feeds_compact@c covers feeds rounds 0..c-1 → tail = c..r-1
             feeds=hist("feeds_compact", ["feed_url", "fetched_round"],
                        "feeds", lambda c: c, r),
@@ -617,20 +617,6 @@ class Crawler:
             if ff is not None:
                 ff.result()
 
-    def _hash_bloom_next(self, res, state: RoundState) -> DataFrame:
-        """hash_bloom @ r+1 = hash_bloom @ r extended by round r's stored
-        hashes. If no committed hash_bloom exists but prior stored rounds
-        do (a store created before hash blooms existed, resumed now), the
-        filter must be seeded from the FULL stored history — a delta-only
-        bloom would test old hashes negative and re-store duplicates.
-        Reuses the frames _state_for already loaded for this round."""
-        delta = res.stored.select("content_hash")
-        if state.hash_blooms is None and state.seen_hashes is not None:
-            delta = delta.unionByName(state.seen_hashes)
-        return build_bloom_shards(delta, self.cfg,
-                                  existing=state.hash_blooms,
-                                  key="content_hash")
-
     def _adaptive_overrides(self, r: int):
         """AIMD politeness feedback (cfg.adaptive_budget): hosts whose
         PREVIOUS round had a >10% fetch-failure rate get their budget
@@ -685,11 +671,13 @@ class Crawler:
                 # path, then drop the claim — a crash between stage and
                 # drop re-consumes the identical batch (inject rows
                 # dedup on url), so no URL is lost or double-crawled.
+                # Another run() process may have scavenged and removed
+                # the same consuming-* claim already.
                 pend_urls, claimed = _take_pending_urls(root)
                 if pend_urls:
                     self.inject(pend_urls)
                 for path in claimed:
-                    os.remove(path)
+                    Path(path).unlink(missing_ok=True)
             frontier = self.store.read(self.spark, "frontier", [r])
             if frontier is None:
                 if not self.store.exists("inject", r):
@@ -739,8 +727,7 @@ class Crawler:
                         robots=state.robots,
                         seen_hashes=state.seen_hashes,
                         seen_urls=seen_plus,
-                        blooms=blooms_plus,
-                        hash_blooms=state.hash_blooms)
+                        blooms=blooms_plus)
             # phase A: fetch → pages shards in ONE pass, written by the
             # Arrow workers themselves — payload bytes never cross the
             # Python→JVM boundary, never shuffle, never hit the cache. The
@@ -800,11 +787,6 @@ class Crawler:
                                .stage_write("bloom", build_bloom_shards(
                                    res.new_urls.select("url"), self.cfg,
                                    existing=state.blooms), r + 1))
-                # content-hash bloom (D1 front): delta = this round's stored
-                f4 = ex.submit(_timed, "hash_bloom", lambda: self.store
-                               .stage_write("hash_bloom",
-                                            self._hash_bloom_next(res, state),
-                                            r + 1))
                 # lineage is tiny (≤ shards × metrics rows): one collect
                 # feeds both the lineage table and the round counts
                 f3 = ex.submit(_timed, "lineage",
@@ -829,7 +811,7 @@ class Crawler:
                         "feed_entries", res.feed_entries
                         .withColumn("fetched_round", F.lit(r)), r)))
                       if res.feeds_new is not None else None)
-                f1.result(), f2.result(), f4.result()
+                f1.result(), f2.result()
                 if f5 is not None:
                     f5.result()
                 if f6 is not None:
@@ -894,7 +876,9 @@ class Crawler:
         With committed head h and latest compaction generation c:
         - older compaction generations of url_seen / hash_seen /
           robots_compact (resume reads only the latest ≤ h);
-        - bloom / hash_bloom dirs at rounds < h (resume reads @h only);
+        - bloom dirs at rounds < h (resume reads @h only);
+        - every hash_bloom dir: a content-hash filter table that older
+          stores wrote each round and nothing reads any more;
         - frontier dirs ≤ min(c, h-1) (url_seen@c absorbs rounds 0..c;
           round h is the live frontier) — at 10^10 scale these carry
           full frontier snapshots and dominate derived-state bytes;
@@ -923,9 +907,7 @@ class Crawler:
         c = self._latest_compact("url_seen", h)
         drop("bloom", [r for r in self.store.rounds_present("bloom")
                        if r < h])
-        drop("hash_bloom",
-             [r for r in self.store.rounds_present("hash_bloom")
-              if r < h])
+        drop("hash_bloom", self.store.rounds_present("hash_bloom"))
         if c is not None:
             drop("frontier",
                  [r for r in self.store.rounds_present("frontier")

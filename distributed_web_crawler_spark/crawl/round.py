@@ -64,7 +64,6 @@ class RoundState:
     seen_hashes: DataFrame | None  # (content_hash,)
     seen_urls: DataFrame | None    # (url,) — every URL ever enqueued
     blooms: DataFrame | None       # URL-seen shards (shard, filter_bytes, …)
-    hash_blooms: DataFrame | None = None  # content-hash shards (D1 front)
     feeds: DataFrame | None = None  # (feed_url,) feeds ever attempted
 
 
@@ -216,9 +215,7 @@ def finish_round(spark: SparkSession, raw: DataFrame, plan: FetchPlan,
 
     extra_cached: list = []
     fetched_ok = raw.where(F.col("fetched")).select(*STORED_COLS)
-    stored = dedup_content(fetched_ok, state.seen_hashes,            # D1
-                           state.hash_blooms, cfg,
-                           cached=extra_cached).persist()
+    stored = dedup_content(fetched_ok, state.seen_hashes).persist()  # D1
 
     # -- children: explode + filters + URL-seen -----------------------------
     # links live in raw; the stored-winner semi-join stays on slim columns.

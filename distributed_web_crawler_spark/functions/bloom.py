@@ -53,8 +53,3 @@ def probe(filter_bytes: bytes, h1: np.ndarray, h2: np.ndarray,
     bits = np.unpackbits(np.frombuffer(filter_bytes, dtype=np.uint8))
     pos = _positions(h1, h2, m_bits, k)
     return bits[pos].all(axis=0)
-
-
-def merge(a: bytes, b: bytes) -> bytes:
-    return (np.frombuffer(a, dtype=np.uint8) |
-            np.frombuffer(b, dtype=np.uint8)).tobytes()

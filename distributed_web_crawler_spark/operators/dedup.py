@@ -58,57 +58,19 @@ def content_hash_col() -> F.Column:
     return F.sha2(F.concat(F.col("bytes"), F.encode(F.col("caption"), "utf-8")), 256)
 
 
-def dedup_content(fetched: DataFrame, seen_hashes: DataFrame | None,
-                  blooms: DataFrame | None = None,
-                  cfg: CrawlConfig | None = None,
-                  cached: list | None = None) -> DataFrame:
+def dedup_content(fetched: DataFrame,
+                  seen_hashes: DataFrame | None) -> DataFrame:
     """D1. ``fetched`` must carry content_hash/priority/host/url. Returns the
-    rows to store; dropped rows are duplicates.
-
-    With ``blooms`` (sharded content-hash filters over all previously
-    stored rounds): bloom negatives are definitely new and skip the history
-    entirely; only positives are re-checked exactly (see
-    _recheck_positives for the join-strategy rationale). Without blooms
-    (tests / first round): plain anti-join. Results are bit-identical
-    either way."""
+    rows to store; dropped rows are duplicates: the within-round winner per
+    content_hash, then one exact left-anti join against the hashes of all
+    previously stored rounds (none on round 0)."""
     w = Window.partitionBy("content_hash").orderBy("priority", "host", "url")
     first = (fetched.withColumn("_rn", F.row_number().over(w))
              .where(F.col("_rn") == 1).drop("_rn"))
     if seen_hashes is None:
         return first
     seen = seen_hashes.select("content_hash").distinct()
-    if blooms is None or cfg is None or not cfg.use_bloom:
-        return first.join(seen, "content_hash", "left_anti")
-    probed = probe_bloom_shards(first, blooms, cfg, key="content_hash")
-    if cached is not None:
-        probed = probed.persist()
-        cached.append(probed)
-    negatives = (probed.where(~F.col("_maybe_seen"))
-                 .drop("_h1", "_h2", "shard", "_maybe_seen"))
-    positives = (probed.where(F.col("_maybe_seen"))
-                 .drop("_h1", "_h2", "shard", "_maybe_seen"))
-    return negatives.unionByName(
-        _recheck_positives(positives, seen, "content_hash"))
-
-
-def _recheck_positives(positives: DataFrame, seen: DataFrame,
-                       key: str) -> DataFrame:
-    """Exact re-check of bloom positives: rows of ``positives`` whose key
-    is NOT in ``seen``.
-
-    A plain left-anti join, deliberately: a driver-side flip (broadcast
-    the positive keys, scan-reduce the history) would be faster per round
-    but dies when rediscovery is heavy — in a steady-state crawl MOST
-    discovered links are already-seen, so the positive set is NOT
-    driver-bounded at 10^10 scale. Spark's runtime bloom-filter join
-    pruning (spark.sql.optimizer.runtime.bloomFilter.*, on by default in
-    Spark 4) gives the same history-side scan reduction safely: a
-    FIXED-SIZE bloom aggregated from the positives side is injected into
-    the history scan when that scan is large, so the big side shrinks
-    before the shuffle without any driver materialization. On Iceberg the
-    bucket-transform storage-partitioned join removes the history shuffle
-    entirely; this module keeps the join key exposed for that swap."""
-    return positives.join(seen, key, "left_anti")
+    return first.join(seen, "content_hash", "left_anti")
 
 
 def with_key_hashes(df: DataFrame, n_shards: int, key: str = "url") -> DataFrame:
@@ -120,15 +82,11 @@ def with_key_hashes(df: DataFrame, n_shards: int, key: str = "url") -> DataFrame
                         .cast("int")))
 
 
-# retained name for round-1 call sites/tests
-with_url_hashes = with_key_hashes
-
-
 def build_bloom_shards(keys: DataFrame, cfg: CrawlConfig,
                        existing: DataFrame | None = None,
                        key: str = "url") -> DataFrame:
-    """Build/extend per-shard filters from a key DataFrame (URLs or content
-    hashes). The groupBy/cogroup parallelizes across shards; each task does
+    """Build/extend per-shard filters from a key DataFrame (the URL-seen
+    set). The groupBy/cogroup parallelizes across shards; each task does
     pure numpy bit math. Extension is ONE cogroup pass — new keys insert
     directly into their shard's existing filter bytes (no separate
     build-then-merge stage); shards with no new keys pass through."""
@@ -237,12 +195,12 @@ def filter_unseen_urls(candidates: DataFrame, seen_urls: DataFrame | None,
     """D4: rows of ``candidates`` whose url was never enqueued.
 
     With blooms: negatives pass immediately; only positives are re-checked
-    exactly (_recheck_positives — runtime bloom-filter pruning reduces the
-    history side before its shuffle). Without: plain anti-join."""
+    exactly against the seen table. Without (round 0, direct callers):
+    plain anti-join. Results are bit-identical either way."""
     if seen_urls is None:
         return candidates
     seen = seen_urls.select("url").distinct()
-    if blooms is None or not cfg.use_bloom:
+    if blooms is None:
         return candidates.join(seen, "url", "left_anti")
 
     probed = probe_bloom_shards(candidates, blooms, cfg, key="url")
@@ -257,4 +215,17 @@ def filter_unseen_urls(candidates: DataFrame, seen_urls: DataFrame | None,
                  .drop("_h1", "_h2", "shard", "_maybe_seen"))
     positives = (probed.where(F.col("_maybe_seen"))
                  .drop("_h1", "_h2", "shard", "_maybe_seen"))
-    return negatives.unionByName(_recheck_positives(positives, seen, "url"))
+    # Exact re-check of the positives: a plain left-anti join, on purpose.
+    # A driver-side flip (broadcast the positive keys, scan-reduce the
+    # history) would be faster per round but dies when rediscovery is
+    # heavy — in a steady-state crawl MOST discovered links are
+    # already-seen, so the positive set is NOT driver-bounded at 10^10
+    # scale. Spark's runtime bloom-filter join pruning
+    # (spark.sql.optimizer.runtime.bloomFilter.*, on by default in Spark 4)
+    # gives the same history-side scan reduction safely: a FIXED-SIZE bloom
+    # aggregated from the positives side is injected into the history scan
+    # when that scan is large, so the big side shrinks before the shuffle
+    # without any driver materialization. On Iceberg the bucket-transform
+    # storage-partitioned join removes the history shuffle entirely; the
+    # join key stays exposed for that swap.
+    return negatives.unionByName(positives.join(seen, "url", "left_anti"))

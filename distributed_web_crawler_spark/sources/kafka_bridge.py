@@ -84,7 +84,10 @@ def frontier_from_json(values: DataFrame, round_no: int = 0,
     """CrawlRequest JSON strings → FRONTIER_SCHEMA rows. Absent and
     explicit-null optionals both parse to null; host re-derives from the
     URL (the frontier's partition key never rides the wire — the
-    reference keys the ProducerRecord by URL for the same reason)."""
+    reference keys the ProducerRecord by URL for the same reason).
+    Lines that yield no url (blank, malformed JSON, ``{}``) are dropped:
+    a null-url row would pass URL-seen and the gates and then fail the
+    round it is staged into on every resume."""
     r = F.from_json(F.col(value_col), CRAWL_REQUEST_JSON_SCHEMA)
     host = host_of(r["url"])  # X1, the engine's host extract
 
@@ -106,7 +109,8 @@ def frontier_from_json(values: DataFrame, round_no: int = 0,
         r["priority"].alias("priority"),
         r["retryCount"].alias("retry_count"),
         ms(r["scheduledFor"]).alias("scheduled_for_ms"),
-        F.lit(round_no).cast("int").alias("round"))
+        F.lit(round_no).cast("int").alias("round"),
+    ).where(F.col("url").isNotNull())
 
 
 def wire_inject_stream(crawler, topic_dir: str,
@@ -129,13 +133,14 @@ def wire_inject_stream(crawler, topic_dir: str,
     stream's source offsets, so re-invoking after new files land
     consumes ONLY the new records — the committed-offset semantics of
     the reference's manual ``ack.acknowledge()``. Returns the number of
-    wire records injected by THIS invocation."""
+    wire records with a url injected by THIS invocation."""
     spark = crawler.spark
     injected = {"n": 0}
 
     def one_batch(df, _epoch_id) -> None:
-        injected["n"] += df.count()
-        crawler.inject_frontier(frontier_from_json(df))
+        rows = frontier_from_json(df)
+        injected["n"] += rows.count()
+        crawler.inject_frontier(rows)
 
     q = (spark.readStream.text(topic_dir)
          .writeStream

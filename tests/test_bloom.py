@@ -38,16 +38,6 @@ def test_fp_rate_bounded():
     assert fp < 0.05  # m/n=16 bits/key, k=5 → theoretical ≈ 0.5%
 
 
-def test_merge_is_union():
-    a1, a2 = _hashes(50, 3)
-    b1, b2 = _hashes(50, 4)
-    fa = B.insert(B.empty_filter(M), a1, a2, M, K)
-    fb = B.insert(B.empty_filter(M), b1, b2, M, K)
-    merged = B.merge(fa, fb)
-    assert B.probe(merged, a1, a2, M, K).all()
-    assert B.probe(merged, b1, b2, M, K).all()
-
-
 def test_sharded_filter_matches_exact_anti_join(spark):
     cfg = CrawlConfig(url_seen_shards=4, bloom_bits_per_shard=1 << 12)
     seen = spark.createDataFrame(
@@ -63,10 +53,9 @@ def test_sharded_filter_matches_exact_anti_join(spark):
             cands.join(seen, "url", "left_anti").collect()}
     assert got == want  # bloom path must be exactly the anti-join
 
-    # and with bloom disabled, same answer
-    cfg2 = CrawlConfig(use_bloom=False)
+    # and without a filter (plain anti-join), same answer
     got2 = {r["url"] for r in
-            filter_unseen_urls(cands, seen, None, cfg2).collect()}
+            filter_unseen_urls(cands, seen, None, cfg).collect()}
     assert got2 == want
 
 

@@ -218,8 +218,7 @@ def test_pages_mixed_date_layout_reads(spark, tmp_path):
     """A store committed by pre-date-partition code has FLAT pages round
     dirs (no fetch_date= layer). Reading a store that mixes flat and
     nested rounds must union with fetch_date null for the flat rounds
-    instead of raising a missing-column AnalysisException — mirroring the
-    pre-hash-bloom resume support."""
+    instead of raising a missing-column AnalysisException."""
     import glob
     import os
     import shutil
@@ -250,22 +249,34 @@ def test_pages_mixed_date_layout_reads(spark, tmp_path):
     assert later and all(r["n_dated"] == r["n"] for r in later)
 
 
-def test_resume_from_pre_hash_bloom_store(spark, tmp_path, golden):
-    """A store created before the hash_bloom table existed must reseed the
-    filter from the FULL stored history on resume — a delta-only bloom
-    would test old hashes negative and re-store duplicates."""
+def test_resume_ignores_and_expires_legacy_hash_bloom(spark, tmp_path,
+                                                      golden):
+    """Content dedup (D1) is one exact anti-join, so a crawl writes no
+    hash_bloom table. A store from older code still holds a content-hash
+    filter at its head round: resume must neither read nor extend it
+    (golden parity holds), and expire_state() must delete it."""
     import os
     import shutil
 
-    root = str(tmp_path / "mig_store")
+    root = str(tmp_path / "legacy_store")
     c1 = Crawler(spark, CFG, SYNTH, root)
     c1.bootstrap(SEEDS)
     c1.run(max_rounds=3)
-    shutil.rmtree(os.path.join(root, "tables", "hash_bloom"))
+    tables = os.path.join(root, "tables")
+    assert not os.path.exists(os.path.join(tables, "hash_bloom"))
+
+    head = c1.store.last_round()
+    legacy = os.path.join(tables, "hash_bloom", f"round={head}")
+    shutil.copytree(os.path.join(tables, "bloom", f"round={head}"), legacy)
 
     c2 = Crawler(spark, CFG, SYNTH, root)
     c2.run()
     assert c2.visit_sequence() == golden.visits
+    assert c2.store.last_round() > head
+    assert c2.store.rounds_present("hash_bloom") == [head]
+
+    assert c2.expire_state().get("hash_bloom") == 1
+    assert not os.path.exists(legacy)
 
 
 def test_crawl_delay_budget_override(spark, tmp_path):

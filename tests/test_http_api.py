@@ -159,6 +159,38 @@ def test_enqueue_via_http_consumed_with_golden_parity(
     assert g.visits == c.visit_sequence()
 
 
+def test_claim_removed_by_another_process_still_commits(spark, tmp_path):
+    """Two run() processes can both claim a consuming-* leftover; when the
+    other one has already staged and removed it, dropping the claim must
+    not raise and the round must still commit."""
+    import glob
+    import os
+
+    store = str(tmp_path / "store")
+    seeds = seed_urls(SYNTH, 2)
+    c = Crawler(spark, CFG, SYNTH, store)
+    c.bootstrap(seeds)
+    c.run(max_rounds=1)
+    extra = "http://h0007.example.com/p/3"
+    enqueue_urls(store, [extra])
+
+    stage = c.inject
+
+    def stage_then_lose_claim(urls):
+        out = stage(urls)
+        claims = glob.glob(os.path.join(store, "_control", "consuming-*"))
+        assert claims
+        for path in claims:
+            os.remove(path)
+        return out
+
+    c.inject = stage_then_lose_claim
+    stats = c.run(max_rounds=2)
+    assert stats["rounds"] == 1
+    assert c.store.last_round() == 2
+    assert stats["per_round"][0]["injected"] == 1
+
+
 def test_enqueue_urls_file_semantics(tmp_path):
     store = str(tmp_path / "s")
     assert enqueue_urls(store, ["http://a.example.com/"]) == 1

@@ -180,3 +180,27 @@ def test_wire_instant_precision_variants_inject_cleanly(spark, tmp_path):
         "http://h0004.example.com/p/3": base + 123,
         "http://h0004.example.com/p/4": base + 123,
     }
+
+
+def test_wire_lines_without_url_are_dropped(spark, tmp_path):
+    """Blank, malformed and ``{}`` wire lines carry no url: the bridge
+    drops them, so only the valid record is staged and the round that
+    consumes the batch commits."""
+    seeds = seed_urls(SYNTH, 1)
+    c = Crawler(spark, CFG, SYNTH, str(tmp_path / "store"))
+    c.bootstrap(seeds)
+    c.run(max_rounds=1)
+    target = c.store.last_round()
+    ok = "http://h0005.example.com/p/1"
+    valid = frontier_to_json(
+        seeds_frontier(spark, [ok], CFG, round_no=target)).first()["value"]
+    topic = _write_topic(tmp_path, "topic", ["", "{not json", "{}", valid])
+    assert wire_inject_stream(
+        c, topic, checkpoint=str(tmp_path / "ckpt")) == 1
+    staged = spark.read.parquet(c.store.round_dir("inject", target))
+    assert [r["url"] for r in staged.collect()] == [ok]
+
+    stats = c.run(max_rounds=target + 1)
+    assert stats["rounds"] == 1
+    assert c.store.last_round() == target + 1
+    assert ok in {u for _, _, u in c.visit_sequence()}
