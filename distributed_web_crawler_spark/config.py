@@ -14,6 +14,7 @@ closures (no driver-side globals captured by reference).
 from __future__ import annotations
 
 from dataclasses import dataclass, field
+from typing import ClassVar
 
 
 @dataclass(frozen=True)
@@ -59,13 +60,8 @@ class CrawlConfig:
     # maintenance pass; buckets = pmod(xxhash64(key), seen_state_buckets).
     compact_every_rounds: int = 8
     seen_state_buckets: int = 32
-    # URL-seen filter backend: "bloom" (default; OR-mergeable, smallest
-    # bytes) or "cuckoo" (functions/cuckoo.py; supports DELETE so recrawl
-    # maintenance can evict retired URLs without a rebuild). The backend
-    # is a per-store commitment — filter bytes persist across rounds, so
-    # never flip it on an existing store.
-    url_seen_backend: str = "bloom"
-    cuckoo_buckets_per_shard: int = 1 << 15
+    # a constant, not an option: perfbench.workloads.url_seen_probe reads it
+    url_seen_backend: ClassVar[str] = "bloom"
     # AIMD politeness feedback: hosts whose previous round had a >10%
     # fetch-failure rate get max(1, host_budget_per_round // 2) this
     # round (tightening only — composes with Crawl-delay by minimum);

@@ -30,6 +30,7 @@ parquet stand-in for Iceberg table maintenance + bucket-transform layout
 
 from __future__ import annotations
 
+import dataclasses
 import json
 import os
 import time
@@ -268,7 +269,12 @@ def _take_pending_urls(root: str) -> tuple[list[str], list[str]]:
         taken.append(tgt)
     urls: list[str] = []
     for path in taken:
-        with open(path) as fh:
+        try:
+            fh = open(path)
+        except FileNotFoundError:
+            # another run() staged and removed this claim after listdir
+            continue
+        with fh:
             for line in fh:
                 line = line.strip()
                 if not line:
@@ -723,11 +729,8 @@ class Crawler:
                                    build_bloom_shards(
                                        injected.select("url"), self.cfg,
                                        existing=state.blooms))
-                    state = RoundState(
-                        robots=state.robots,
-                        seen_hashes=state.seen_hashes,
-                        seen_urls=seen_plus,
-                        blooms=blooms_plus)
+                    state = dataclasses.replace(
+                        state, seen_urls=seen_plus, blooms=blooms_plus)
             # phase A: fetch → pages shards in ONE pass, written by the
             # Arrow workers themselves — payload bytes never cross the
             # Python→JVM boundary, never shuffle, never hit the cache. The

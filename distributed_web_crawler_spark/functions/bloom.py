@@ -1,8 +1,10 @@
 """Sharded bloom filter for the URL-seen set (SURVEY.md §2.3 D4).
 
 The reference has *no* URL-seen dedup (README claims it, code lacks it —
-SURVEY.md D4); BASELINE.json north_rule mandates a partitioned bloom/cuckoo
-filter. Design for 10^10 URLs:
+SURVEY.md D4); BASELINE.json north_rule mandates a partitioned
+approximate-membership filter, and this bloom is the engine's only one:
+the seen set only grows, so a delete-capable filter would buy nothing.
+Design for 10^10 URLs:
 
 - shard by ``pmod(xxhash64(url), n_shards)`` — filters stay bounded per
   shard and build/probe parallelize across executors;

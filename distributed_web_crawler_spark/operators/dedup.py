@@ -27,29 +27,12 @@ from pyspark.sql import types as T
 
 from ..config import CrawlConfig
 from ..functions import bloom as B
-from ..functions import cuckoo as C
 
 URL_SEEN_FILTER_SCHEMA = T.StructType([
     T.StructField("shard", T.IntegerType()),
     T.StructField("filter_bytes", T.BinaryType()),
     T.StructField("n_items", T.LongType()),
 ])
-
-
-def _seen_backend(cfg: CrawlConfig):
-    """(empty, insert, probe) closures for the configured URL-seen filter
-    backend — bloom (default) or cuckoo (delete-capable). Both share the
-    shard/cogroup plumbing and the positives-re-checked-exactly contract,
-    so the engine result is backend-independent bit-for-bit."""
-    if cfg.url_seen_backend == "cuckoo":
-        nb = cfg.cuckoo_buckets_per_shard
-        return (lambda: C.empty_filter(nb),
-                lambda fb, h1, h2: C.insert(fb, h1, h2, nb),
-                lambda fb, h1, h2: C.probe(fb, h1, h2, nb))
-    m, k = cfg.bloom_bits_per_shard, cfg.bloom_num_hashes
-    return (lambda: B.empty_filter(m),
-            lambda fb, h1, h2: B.insert(fb, h1, h2, m, k),
-            lambda fb, h1, h2: B.probe(fb, h1, h2, m, k))
 
 
 def content_hash_col() -> F.Column:
@@ -73,29 +56,30 @@ def dedup_content(fetched: DataFrame,
     return first.join(seen, "content_hash", "left_anti")
 
 
-def with_key_hashes(df: DataFrame, n_shards: int, key: str = "url") -> DataFrame:
-    """JVM-side base hashes for the bloom (no Python in this step)."""
+def with_key_hashes(df: DataFrame, n_shards: int) -> DataFrame:
+    """JVM-side base hashes of ``url`` for the bloom (no Python in this
+    step)."""
     return (df
-            .withColumn("_h1", F.xxhash64(key))
-            .withColumn("_h2", F.xxhash64(key, F.lit(1)))
-            .withColumn("shard", F.pmod(F.xxhash64(key), F.lit(n_shards))
+            .withColumn("_h1", F.xxhash64("url"))
+            .withColumn("_h2", F.xxhash64("url", F.lit(1)))
+            .withColumn("shard", F.pmod(F.xxhash64("url"), F.lit(n_shards))
                         .cast("int")))
 
 
-def build_bloom_shards(keys: DataFrame, cfg: CrawlConfig,
-                       existing: DataFrame | None = None,
-                       key: str = "url") -> DataFrame:
-    """Build/extend per-shard filters from a key DataFrame (the URL-seen
-    set). The groupBy/cogroup parallelizes across shards; each task does
-    pure numpy bit math. Extension is ONE cogroup pass — new keys insert
-    directly into their shard's existing filter bytes (no separate
-    build-then-merge stage); shards with no new keys pass through."""
-    f_empty, f_insert, _ = _seen_backend(cfg)
-    hashed = with_key_hashes(keys.select(key), cfg.url_seen_shards, key)
+def build_bloom_shards(urls: DataFrame, cfg: CrawlConfig,
+                       existing: DataFrame | None = None) -> DataFrame:
+    """Build/extend per-shard filters from a ``url`` DataFrame (the
+    URL-seen set). The groupBy/cogroup parallelizes across shards; each
+    task does pure numpy bit math. Extension is ONE cogroup pass — new
+    URLs insert directly into their shard's existing filter bytes (no
+    separate build-then-merge stage); shards with no new URLs pass
+    through."""
+    m, k = cfg.bloom_bits_per_shard, cfg.bloom_num_hashes
+    hashed = with_key_hashes(urls.select("url"), cfg.url_seen_shards)
 
     def build(gkey, pdf: pd.DataFrame) -> pd.DataFrame:
-        filt = f_insert(f_empty(), pdf["_h1"].to_numpy(),
-                        pdf["_h2"].to_numpy())
+        filt = B.insert(B.empty_filter(m), pdf["_h1"].to_numpy(),
+                        pdf["_h2"].to_numpy(), m, k)
         return pd.DataFrame({"shard": [gkey[0]], "filter_bytes": [filt],
                              "n_items": [len(pdf)]})
 
@@ -109,11 +93,11 @@ def build_bloom_shards(keys: DataFrame, cfg: CrawlConfig,
             prior = int(filt["n_items"].iloc[0])
             shard = int(filt["shard"].iloc[0])
         else:
-            base, prior = f_empty(), 0
+            base, prior = B.empty_filter(m), 0
             shard = int(cand["shard"].iloc[0])
         if len(cand) > 0:
-            base = f_insert(base, cand["_h1"].to_numpy(),
-                            cand["_h2"].to_numpy())
+            base = B.insert(base, cand["_h1"].to_numpy(),
+                            cand["_h2"].to_numpy(), m, k)
         return pd.DataFrame({"shard": [shard], "filter_bytes": [base],
                              "n_items": [prior + len(cand)]})
 
@@ -122,46 +106,8 @@ def build_bloom_shards(keys: DataFrame, cfg: CrawlConfig,
             .applyInPandas(extend, URL_SEEN_FILTER_SCHEMA))
 
 
-def evict_filter_shards(filters: DataFrame, keys: DataFrame,
-                        cfg: CrawlConfig, key: str = "url") -> DataFrame:
-    """Seen-state eviction: remove ``keys`` from their shard's filter —
-    the maintenance pass that lets a recrawl scheduler or mirror collapse
-    retire URLs so they become fetchable again WITHOUT rebuilding the
-    filter table. Cuckoo backend only (bloom bits are shared between
-    keys; deleting would corrupt other keys' membership — callers on the
-    bloom backend rebuild via build_bloom_shards instead). Same one-pass
-    cogroup shape as build/extend: each shard's bytes cross the shuffle
-    once; shards with no evictions pass through untouched. Callers must
-    also delete the rows from the exact seen table (the filter is only
-    the probe front)."""
-    if cfg.url_seen_backend != "cuckoo":
-        raise ValueError("filter eviction requires url_seen_backend="
-                         "'cuckoo'; bloom filters cannot delete — "
-                         "rebuild with build_bloom_shards instead")
-    nb = cfg.cuckoo_buckets_per_shard
-    hashed = with_key_hashes(keys.select(key), cfg.url_seen_shards, key)
-
-    def evict(cand: pd.DataFrame, filt: pd.DataFrame) -> pd.DataFrame:
-        if len(filt) == 0:
-            return pd.DataFrame({"shard": [], "filter_bytes": [],
-                                 "n_items": []}).astype(
-                {"shard": "int32", "n_items": "int64"})
-        base = bytes(filt["filter_bytes"].iloc[0])
-        shard = int(filt["shard"].iloc[0])
-        prior = int(filt["n_items"].iloc[0])
-        if len(cand) > 0:
-            base = C.delete(base, cand["_h1"].to_numpy(),
-                            cand["_h2"].to_numpy(), nb)
-        return pd.DataFrame({"shard": [shard], "filter_bytes": [base],
-                             "n_items": [max(0, prior - len(cand))]})
-
-    return (hashed.groupBy("shard")
-            .cogroup(filters.groupBy("shard"))
-            .applyInPandas(evict, URL_SEEN_FILTER_SCHEMA))
-
-
 def probe_bloom_shards(candidates: DataFrame, blooms: DataFrame,
-                       cfg: CrawlConfig, key: str = "url") -> DataFrame:
+                       cfg: CrawlConfig) -> DataFrame:
     """Tag each candidate row with ``_maybe_seen`` from its shard's filter.
 
     Cogroup candidates with their shard's filter: one shuffle on `shard`
@@ -169,8 +115,8 @@ def probe_bloom_shards(candidates: DataFrame, blooms: DataFrame,
     replicated per row (an equi-join would materialize |candidates| ×
     filter_size), never through the driver, so 4096 × 4 MiB of filter
     state stays distributed at 10^10 scale."""
-    _, _, f_probe = _seen_backend(cfg)
-    hashed = with_key_hashes(candidates, cfg.url_seen_shards, key)
+    m, k = cfg.bloom_bits_per_shard, cfg.bloom_num_hashes
+    hashed = with_key_hashes(candidates, cfg.url_seen_shards)
     probe_schema = T.StructType(
         hashed.schema.fields + [T.StructField("_maybe_seen", T.BooleanType())])
 
@@ -179,9 +125,9 @@ def probe_bloom_shards(candidates: DataFrame, blooms: DataFrame,
         if len(filt) == 0:
             out["_maybe_seen"] = False
         else:
-            out["_maybe_seen"] = f_probe(
+            out["_maybe_seen"] = B.probe(
                 bytes(filt["filter_bytes"].iloc[0]),
-                cand["_h1"].to_numpy(), cand["_h2"].to_numpy())
+                cand["_h1"].to_numpy(), cand["_h2"].to_numpy(), m, k)
         return out
 
     return (hashed.groupBy("shard")
@@ -203,7 +149,7 @@ def filter_unseen_urls(candidates: DataFrame, seen_urls: DataFrame | None,
     if blooms is None:
         return candidates.join(seen, "url", "left_anti")
 
-    probed = probe_bloom_shards(candidates, blooms, cfg, key="url")
+    probed = probe_bloom_shards(candidates, blooms, cfg)
     if cached is not None:
         # persist: both branches below consume `probed`; without it the
         # whole cogroup + Arrow probe pipeline executes twice. Only cache

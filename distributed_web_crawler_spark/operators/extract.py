@@ -176,13 +176,6 @@ def make_synth_conditional_fetcher(synth_cfg, changed=None,
     return fetch
 
 
-def fetch_pages(selected: DataFrame, fetcher) -> DataFrame:
-    """S6 over the selected frontier rows. Input columns: url, host, depth,
-    parent_url, priority."""
-    cols = ["url", "host", "depth", "parent_url", "priority"]
-    return selected.select(*cols).mapInPandas(fetcher, FETCH_SCHEMA)
-
-
 # Per-task receipt returned to the JVM by the payload-sinking fetch — the
 # data itself lives in the worker-written parquet shards.
 FETCH_SUMMARY_SCHEMA = T.StructType([

@@ -191,6 +191,40 @@ def test_claim_removed_by_another_process_still_commits(spark, tmp_path):
     assert stats["per_round"][0]["injected"] == 1
 
 
+def test_claim_vanished_before_read_still_commits(spark, tmp_path,
+                                                  monkeypatch):
+    """A run() lists a consuming-* leftover, but another run() stages and
+    removes it before this one opens it: the vanished claim is skipped,
+    the fresh pending batch is still consumed and the round commits."""
+    import builtins
+    import os
+
+    from distributed_web_crawler_spark.crawl import driver
+
+    store = str(tmp_path / "store")
+    seeds = seed_urls(SYNTH, 2)
+    c = Crawler(spark, CFG, SYNTH, store)
+    c.bootstrap(seeds)
+    c.run(max_rounds=1)
+    extra = "http://h0007.example.com/p/3"
+    enqueue_urls(store, [extra])
+    leftover = os.path.join(store, "_control", "consuming-1-1")
+    with open(leftover, "w") as fh:
+        fh.write(json.dumps({"url": "http://h0008.example.com/p/1"}) + "\n")
+
+    def open_after_other_process(path, *args, **kwargs):
+        if path == leftover:
+            os.remove(path)
+        return builtins.open(path, *args, **kwargs)
+
+    monkeypatch.setattr(driver, "open", open_after_other_process,
+                        raising=False)
+    stats = c.run(max_rounds=2)
+    assert stats["rounds"] == 1
+    assert c.store.last_round() == 2
+    assert stats["per_round"][0]["injected"] == 1
+
+
 def test_enqueue_urls_file_semantics(tmp_path):
     store = str(tmp_path / "s")
     assert enqueue_urls(store, ["http://a.example.com/"]) == 1

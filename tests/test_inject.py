@@ -80,3 +80,34 @@ def test_inject_revives_drained_crawl(spark, tmp_path):
     g = golden_crawl(seeds, cfg, tiny, injections={target: extra})
     assert g.visits == c.visit_sequence()
     assert drained_round <= target
+
+
+def test_inject_round_keeps_feed_state(spark, tmp_path):
+    """A round that consumes an inject batch must keep the accumulated
+    feeds state: feeds fetched in earlier rounds are not refetched, and
+    the compaction in that round snapshots the full feed history.
+    Per-round lineage and the visit sequence match golden."""
+    synth = SynthWebConfig(n_hosts=8, base_pages_per_host=48,
+                           feed_every=2, feed_drift_round=2,
+                           robots_every=3, max_out_links=2)
+    cfg = CrawlConfig(max_depth=5, host_budget_per_round=3, max_rounds=6,
+                      allowed_domains=(r".*\.example\.com",),
+                      url_seen_shards=2, bloom_bits_per_shard=1 << 12,
+                      feed_discovery=True, compact_every_rounds=4)
+    seeds = seed_urls(synth, 3)
+    extra = [synth.url(7, 11)]
+    c = Crawler(spark, cfg, synth, str(tmp_path))
+    c.bootstrap(seeds)
+    c.run(max_rounds=3)
+    assert c.inject(extra) == 3
+    c.run()
+    g = golden_crawl(seeds, cfg, synth, injections={3: extra})
+    lin = {(r["round"], r["metric"]): r["value"]
+           for r in c.lineage().groupBy("round", "metric")
+           .sum("value").withColumnRenamed("sum(value)", "value")
+           .collect()}
+    for row in g.lineage:
+        for metric in ("feed_candidates", "discovered"):
+            got = lin.get((row["round"], metric), 0)
+            assert got == row.get(metric, 0), (row["round"], metric, got)
+    assert g.visits == c.visit_sequence()
