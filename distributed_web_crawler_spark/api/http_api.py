@@ -5,15 +5,21 @@ missing" #3 (no HTTP analog).
 
 Architecture is deliberately NOT a Spark service: the store's snapshot
 layout makes every read endpoint answerable from committed parquet with
-DuckDB (already a dependency for the oracle harness), and every control
-endpoint is a file-based handshake the crawl loop already honors
-(crawl/driver.py _control conventions). So the API server is a plain
-stdlib ``ThreadingHTTPServer`` that can run on ANY box with read access
-to the store — next to the Spark driver, on a bastion, in a sidecar —
-without holding a SparkSession, exactly like ``tools/run_crawl.py
---status``. At 10^10 scale the reads stay cheap because they only ever
-touch pruned columns (never the payload ``bytes``) of the committed
-round directories, and pagination/search push LIMIT into DuckDB.
+pyarrow, and every control endpoint is a file-based handshake the crawl
+loop already honors (crawl/driver.py _control conventions). So the API
+server is a plain stdlib ``ThreadingHTTPServer`` that can run on ANY box
+with read access to the store — next to the Spark driver, on a bastion,
+in a sidecar — without holding a SparkSession, exactly like
+``tools/run_crawl.py --status``.
+
+The page endpoints are served from one in-memory index of the committed
+stored pages (``StoreReader``), keyed by the head commit marker and
+extended by the new rounds' files only when a marker commits; status reads
+fold only new markers (``crawl.driver.CrawlStatus``). A request therefore
+costs the page it asks for, not the store. The index holds the slim
+columns (never the payload ``bytes``) of every committed page row, so the
+API process's memory is O(committed pages); a crawl whose page count
+outgrows one process needs a paged on-disk index in its place.
 
 Endpoint parity map (reference → here):
 
@@ -23,7 +29,7 @@ Endpoint parity map (reference → here):
   URL-substring search (F10/X5 semantics, L2 cap)
 - ``GET  /api/data/pages/count``            → total stored pages (A1)
 - ``GET  /api/data/stats``                  → statistics rollup
-- ``GET  /api/crawler/status``              → live crawl_status (A5; commit
+- ``GET  /api/crawler/status``              → live CrawlStatus (A5; commit
   markers + heartbeat, readable while another process crawls)
 - ``POST /api/crawler/stop``                → request_stop (graceful, at
   the round barrier)
@@ -42,54 +48,57 @@ from __future__ import annotations
 
 import json
 import os
-import re
 import threading
+from dataclasses import dataclass
 from datetime import datetime, timezone
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from urllib.parse import parse_qs, urlsplit
 
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
+
 from ..crawl.driver import (
+    CrawlStatus,
     clear_stop,
-    crawl_status,
     enqueue_urls,
+    marker_stamp,
     request_stop,
+    round_marks,
     stop_requested,
 )
 
-_ROUND_RE = re.compile(r"^round-(\d+)\.json$")
-
 # PageMetadata projection (storage/StorageService.java:61-69): everything
-# but the payload — `bytes` is NEVER in any select this module issues.
+# but the payload — `bytes` is NEVER among the columns this module reads.
 _PAGE_COLS = ("url", "content_hash", "fetch_time_ms", "http_status",
               "links", "depth", "host", "round")
 
 
-def _committed_processed_rounds(root: str) -> list[int]:
-    """Processed-round directories visible to readers: marker ``round-k``
-    commits round k-1's execution, so with head marker N the readable
-    pages/stored dirs are 0..N-1 (mirrors Crawler._rounds_upto)."""
-    d = os.path.join(root, "_commits")
-    if not os.path.isdir(d):
-        return []
-    head = -1
-    for name in os.listdir(d):
-        m = _ROUND_RE.match(name)
-        if m:
-            head = max(head, int(m.group(1)))
-    return list(range(max(0, head)))
-
-
-def _table_globs(root: str, name: str, rounds: list[int]) -> list[str]:
-    out = []
+def _read_rounds(root: str, name: str, rounds: range,
+                 cols: tuple[str, ...]) -> pa.Table | None:
+    """``cols`` of one table's round directories, read file by file so
+    only those column chunks are touched. pages nests a fetch_date=… level
+    that a store from pre-date-partition code lacks; both layouts read,
+    and a column a file does not have reads as null."""
+    parts = []
     for r in rounds:
         base = os.path.join(root, "tables", name, f"round={r}")
-        if os.path.isdir(base):
-            # pages nests a fetch_date=… hive level; stored does not
-            if any(e.startswith("fetch_date=") for e in os.listdir(base)):
-                out.append(os.path.join(base, "*", "*.parquet"))
-            else:
-                out.append(os.path.join(base, "*.parquet"))
-    return out
+        for d, subdirs, files in os.walk(base):
+            subdirs[:] = sorted(s for s in subdirs
+                                if not s.startswith((".", "_")))
+            for f in sorted(files):
+                if f.startswith((".", "_")) or not f.endswith(".parquet"):
+                    continue
+                pf = pq.ParquetFile(os.path.join(d, f))
+                have = [c for c in cols if c in pf.schema_arrow.names]
+                t = pf.read(columns=have)
+                for c in cols:
+                    if c not in have:
+                        t = t.append_column(c, pa.nulls(t.num_rows))
+                parts.append(t.select(list(cols)))
+    if not parts:
+        return None
+    return pa.concat_tables(parts, promote_options="permissive")
 
 
 def _iso_ms(ms: int | None) -> str | None:
@@ -99,70 +108,109 @@ def _iso_ms(ms: int | None) -> str | None:
         .strftime("%Y-%m-%dT%H:%M:%S.") + f"{ms % 1000:03d}Z"
 
 
+_EMPTY = pa.table({c: pa.array([], pa.null()) for c in _PAGE_COLS})
+
+
+@dataclass(frozen=True)
+class _PageView:
+    """One committed head's stored pages: ``pages ⋉ stored(url)`` in url
+    order, plus the lowercased urls search scans. Never mutated — a
+    request keeps its reference while a newer view is built."""
+
+    head: tuple[int, tuple[int, int] | None]
+    table: pa.Table
+    url_lower: pa.StringArray
+
+
 class StoreReader:
-    """DuckDB reads over the store's committed snapshot — one instance
-    per server; every query opens a fresh cursor (thread-safe)."""
+    """The page reads over the store's committed snapshot, served from one
+    in-memory index keyed by the committed head marker.
+
+    Each request lists ``_commits`` and stats the head marker. At the
+    indexed head it slices the cached view. When newer markers have
+    committed, the index reads only the new rounds' ``pages``/``stored``
+    files (slim columns, never the payload) and rebuilds the url-sorted
+    view under a lock; a head that moved backwards, or a head marker that
+    is no longer the file indexed (store replaced), rebuilds from scratch.
+    Built lazily, on the first read. Memory: the slim ``_PAGE_COLS`` of
+    every committed ``pages`` row plus the stored urls — O(committed pages)
+    in the API process, payload bytes excluded."""
 
     def __init__(self, root: str):
         self.root = root
+        self._lock = threading.Lock()
+        self._pages: pa.Table | None = None   # every committed pages row
+        self._stored: pa.ChunkedArray | None = None  # every stored url
+        self._view: _PageView | None = None
 
-    def _con(self):
-        import duckdb
+    def _head(self) -> tuple[int, tuple[int, int] | None]:
+        marks = round_marks(self.root)
+        if not marks:
+            return -1, None
+        return marks[-1], marker_stamp(self.root, marks[-1])
 
-        return duckdb.connect()
-
-    def _pages_rel(self, con) -> str | None:
-        rounds = _committed_processed_rounds(self.root)
-        pg = _table_globs(self.root, "pages", rounds)
-        st = _table_globs(self.root, "stored", rounds)
-        if not pg or not st:
-            return None
-        cols = ", ".join(f"p.{c}" for c in _PAGE_COLS)
-        return (f"SELECT {cols} FROM read_parquet({pg!r}, "
-                f"hive_partitioning=1, union_by_name=1) p "
-                f"SEMI JOIN read_parquet({st!r}, hive_partitioning=1, "
-                f"union_by_name=1) s ON p.url = s.url")
+    def view(self) -> _PageView:
+        head = self._head()
+        view = self._view
+        if view is not None and view.head == head:
+            return view
+        with self._lock:
+            view = self._view
+            if view is not None and view.head == head:
+                return view
+            old, stamp = view.head if view is not None else (-1, None)
+            if old > head[0] or (old >= 0
+                                 and marker_stamp(self.root, old) != stamp):
+                self._pages = self._stored = None
+                old = -1
+            # marker k commits round k-1's execution, so at head marker N
+            # the readable pages/stored dirs are 0..N-1
+            new_rounds = range(max(0, old), max(0, head[0]))
+            pages = _read_rounds(self.root, "pages", new_rounds, _PAGE_COLS)
+            stored = _read_rounds(self.root, "stored", new_rounds, ("url",))
+            if pages is not None:
+                self._pages = (pages if self._pages is None else
+                               pa.concat_tables([self._pages, pages],
+                                                promote_options="permissive"))
+            if stored is not None:
+                self._stored = pa.chunked_array(
+                    ([] if self._stored is None else self._stored.chunks)
+                    + stored.column("url").chunks, pa.string())
+            table = _EMPTY
+            if self._pages is not None and self._stored is not None:
+                table = self._pages.filter(pc.is_in(
+                    self._pages.column("url"),
+                    value_set=self._stored.combine_chunks(),
+                    skip_nulls=True)).sort_by("url")
+            # one contiguous array: pc.indices_nonzero crashes on a
+            # chunked array with no chunks (an empty view)
+            self._view = _PageView(head, table, pc.utf8_lower(
+                table.column("url").cast(pa.string())).combine_chunks())
+            return self._view
 
     @staticmethod
-    def _row(t) -> dict:
-        url, chash, ms, status, links, depth, host, rnd = t
-        return {
-            "url": url,
-            "contentHash": chash,
-            "fetchTime": _iso_ms(ms),
-            "httpStatus": status,
-            "links": sorted(set(links or [])),
-            "metadata": {"depth": str(depth), "host": host,
-                         "round": str(rnd)},
-        }
+    def _rows(table: pa.Table) -> list[dict]:
+        return [{
+            "url": t["url"],
+            "contentHash": t["content_hash"],
+            "fetchTime": _iso_ms(t["fetch_time_ms"]),
+            "httpStatus": t["http_status"],
+            "links": sorted(set(t["links"] or [])),
+            "metadata": {"depth": str(t["depth"]), "host": t["host"],
+                         "round": str(t["round"])},
+        } for t in table.to_pylist()]
 
     def pages(self, limit: int, offset: int) -> list[dict]:
-        con = self._con()
-        rel = self._pages_rel(con)
-        if rel is None:
-            return []
-        rows = con.sql(
-            f"SELECT * FROM ({rel}) ORDER BY url LIMIT {int(limit)} "
-            f"OFFSET {int(offset)}").fetchall()
-        return [self._row(t) for t in rows]
+        return self._rows(self.view().table.slice(offset, limit))
 
     def search(self, query: str, limit: int) -> list[dict]:
-        con = self._con()
-        rel = self._pages_rel(con)
-        if rel is None:
-            return []
-        rows = con.sql(
-            f"SELECT * FROM ({rel}) WHERE contains(lower(url), "
-            f"lower(?)) ORDER BY url LIMIT {int(limit)}",
-            params=[query]).fetchall()
-        return [self._row(t) for t in rows]
+        view = self.view()
+        needle = pc.utf8_lower(pa.scalar(query)).as_py()
+        hits = pc.indices_nonzero(pc.match_substring(view.url_lower, needle))
+        return self._rows(view.table.take(hits.slice(0, limit)))
 
     def count(self) -> int:
-        con = self._con()
-        rel = self._pages_rel(con)
-        if rel is None:
-            return 0
-        return con.sql(f"SELECT count(*) FROM ({rel})").fetchone()[0]
+        return self.view().table.num_rows
 
 
 class _ApiServer(ThreadingHTTPServer):
@@ -172,6 +220,11 @@ class _ApiServer(ThreadingHTTPServer):
         super().__init__(addr, handler)
         self.root = root
         self.reader = StoreReader(root)
+        self.status = CrawlStatus(root)
+
+
+class _BadRequest(ValueError):
+    """Client input the API answers with 400."""
 
 
 class CrawlApiHandler(BaseHTTPRequestHandler):
@@ -191,7 +244,12 @@ class CrawlApiHandler(BaseHTTPRequestHandler):
         self.wfile.write(body)
 
     def _body(self) -> dict:
-        n = int(self.headers.get("Content-Length") or 0)
+        try:
+            n = int(self.headers.get("Content-Length") or 0)
+        except ValueError:
+            raise _BadRequest("Content-Length is not an integer") from None
+        if n < 0:
+            raise _BadRequest("Content-Length is negative")
         raw = self.rfile.read(n) if n else b""
         if not raw:
             return {}
@@ -203,10 +261,15 @@ class CrawlApiHandler(BaseHTTPRequestHandler):
 
     @staticmethod
     def _int(qs, key, default):
+        raw = qs.get(key, [default])[0]
         try:
-            return int(qs.get(key, [default])[0])
-        except (TypeError, ValueError):
-            return default
+            n = int(raw)
+        except ValueError:
+            raise _BadRequest(f"{key} must be an integer, got {raw!r}") \
+                from None
+        if n < 0:
+            raise _BadRequest(f"{key} must be >= 0, got {n}")
+        return n
 
     # -- routes --------------------------------------------------------------
 
@@ -238,7 +301,7 @@ class CrawlApiHandler(BaseHTTPRequestHandler):
                 self._json(200, {"status": "success",
                                  "totalPages": self.server.reader.count()})
             elif path == "/api/data/stats":
-                st = crawl_status(root)
+                st = self.server.status.read()
                 self._json(200, {"status": "success", "statistics": {
                     "totalPages": self.server.reader.count(),
                     "totals": st["totals"],
@@ -246,7 +309,7 @@ class CrawlApiHandler(BaseHTTPRequestHandler):
                     "lastRound": st["last_round"],
                 }})
             elif path == "/api/crawler/status":
-                st = crawl_status(root)
+                st = self.server.status.read()
                 hb = st.get("heartbeat") or {}
                 st["isRunning"] = bool(hb) and hb.get("age_sec", 1e9) < 600
                 self._json(200, st)
@@ -265,6 +328,8 @@ class CrawlApiHandler(BaseHTTPRequestHandler):
             else:
                 self._json(404, {"status": "error",
                                  "message": f"unknown path {path}"})
+        except _BadRequest as e:
+            self._json(400, {"status": "error", "message": str(e)})
         except Exception as e:  # mirror the reference's exceptionally()
             self._json(500, {"status": "error",
                              "message": f"request failed: {e}"})
@@ -313,6 +378,8 @@ class CrawlApiHandler(BaseHTTPRequestHandler):
             else:
                 self._json(404, {"status": "error",
                                  "message": f"unknown path {path}"})
+        except _BadRequest as e:
+            self._json(400, {"status": "error", "message": str(e)})
         except Exception as e:
             self._json(500, {"status": "error",
                              "message": f"request failed: {e}"})

@@ -33,6 +33,7 @@ from __future__ import annotations
 import dataclasses
 import json
 import os
+import threading
 import time
 from concurrent.futures import ThreadPoolExecutor
 from pathlib import Path
@@ -297,45 +298,110 @@ def _write_heartbeat(root: str, round_no: int) -> None:
     os.replace(tmp, os.path.join(d, "heartbeat.json"))
 
 
-def crawl_status(root: str) -> dict:
+def round_marks(root: str) -> list[int]:
+    """Committed crawl-round marker numbers, ascending — a read-only
+    listing (a store that does not exist yet has none)."""
+    try:
+        names = os.listdir(os.path.join(root, "_commits"))
+    except FileNotFoundError:
+        return []
+    return sorted(int(n[len("round-"):-len(".json")]) for n in names
+                  if n.startswith("round-") and n.endswith(".json"))
+
+
+def _marker_path(root: str, mark: int) -> str:
+    return os.path.join(root, "_commits", f"round-{mark}.json")
+
+
+def marker_stamp(root: str, mark: int) -> tuple[int, int] | None:
+    """Identity of one committed round marker file (inode, mtime). A
+    reader that caches what it derived from the marker log checks that the
+    marker it stopped at is still the same file before it reads only the
+    newer ones: a store replaced under it fails the check and is re-read
+    from scratch."""
+    try:
+        st = os.stat(_marker_path(root, mark))
+    except FileNotFoundError:
+        return None
+    return st.st_ino, st.st_mtime_ns
+
+
+class CrawlStatus:
     """Live status of a crawl store — the GET /status analog. Pure
     filesystem reads (commit markers + heartbeat), so it is safe and
     cheap to call from another process while a crawl runs.
 
-    Returns: last committed marker, per-metric totals summed over all
-    committed rounds, the last round's counts/stage timings, heartbeat
-    (pid/round/age of the in-flight process, if any), and whether a stop
-    has been requested."""
-    store = SnapshotStore(root)
-    rounds = store.committed_rounds()
-    totals: dict[str, int] = {}
-    last_meta: dict | None = None
-    for m in rounds:
-        meta = store.round_meta(m) or {}
-        for k, v in (meta.get("counts") or {}).items():
-            totals[k] = totals.get(k, 0) + v
-        if meta.get("counts") is not None:
-            last_meta = meta
-    hb = None
-    hb_path = os.path.join(_control_dir(root), "heartbeat.json")
-    if os.path.exists(hb_path):
-        with open(hb_path) as fh:
-            hb = json.load(fh)
-        hb["age_sec"] = round(time.time() - hb["ts"], 1)
-    return {
-        "store": root,
-        "last_committed_marker": rounds[-1] if rounds else None,
-        "rounds_processed": max(0, len(rounds) - 1),
-        "totals": totals,
-        "last_round": None if last_meta is None else {
-            "round": last_meta.get("round_processed"),
-            "counts": last_meta.get("counts"),
-            "stage_sec": last_meta.get("stage_sec"),
-            "sec": last_meta.get("sec"),
-        },
-        "heartbeat": hb,
-        "stop_requested": stop_requested(root),
-    }
+    The marker fold (per-metric totals over every committed round, the
+    last round's meta) is kept between calls: ``read()`` parses only the
+    markers it has not folded yet, so a long-lived reader (the HTTP API)
+    pays per new round, not per round of the crawl. A marker log that no
+    longer extends the folded one (store replaced) is folded afresh. The
+    heartbeat and the STOP file are read on every call."""
+
+    def __init__(self, root: str):
+        self.root = root
+        self._lock = threading.Lock()
+        self._marks: list[int] = []
+        self._stamp: tuple[int, int] | None = None
+        self._totals: dict[str, int] = {}
+        self._last_meta: dict | None = None
+
+    def _fold(self) -> tuple[list[int], dict[str, int], dict | None]:
+        with self._lock:
+            marks = round_marks(self.root)
+            n = len(self._marks)
+            if (marks[:n] != self._marks
+                    or (n and marker_stamp(self.root, marks[n - 1])
+                        != self._stamp)):
+                self._marks, self._totals, self._last_meta = [], {}, None
+                n = 0
+            for m in marks[n:]:
+                try:
+                    with open(_marker_path(self.root, m)) as fh:
+                        meta = json.load(fh)
+                except FileNotFoundError:
+                    meta = {}
+                for k, v in (meta.get("counts") or {}).items():
+                    self._totals[k] = self._totals.get(k, 0) + v
+                if meta.get("counts") is not None:
+                    self._last_meta = meta
+            if marks[n:]:
+                self._stamp = marker_stamp(self.root, marks[-1])
+            self._marks = marks
+            return marks, dict(self._totals), self._last_meta
+
+    def read(self) -> dict:
+        """Last committed marker, per-metric totals summed over all
+        committed rounds, the last round's counts/stage timings, heartbeat
+        (pid/round/age of the in-flight process, if any), and whether a
+        stop has been requested."""
+        rounds, totals, last_meta = self._fold()
+        hb = None
+        hb_path = os.path.join(_control_dir(self.root), "heartbeat.json")
+        if os.path.exists(hb_path):
+            with open(hb_path) as fh:
+                hb = json.load(fh)
+            hb["age_sec"] = round(time.time() - hb["ts"], 1)
+        return {
+            "store": self.root,
+            "last_committed_marker": rounds[-1] if rounds else None,
+            "rounds_processed": max(0, len(rounds) - 1),
+            "totals": totals,
+            "last_round": None if last_meta is None else {
+                "round": last_meta.get("round_processed"),
+                "counts": last_meta.get("counts"),
+                "stage_sec": last_meta.get("stage_sec"),
+                "sec": last_meta.get("sec"),
+            },
+            "heartbeat": hb,
+            "stop_requested": stop_requested(self.root),
+        }
+
+
+def crawl_status(root: str) -> dict:
+    """One-shot status of a crawl store (``tools/run_crawl.py --status``):
+    a fresh CrawlStatus fold over every committed marker."""
+    return CrawlStatus(root).read()
 
 
 class Crawler:
