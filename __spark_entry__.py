@@ -4,11 +4,14 @@ entry(spark)   — flagship 3-round BSP crawl over the deterministic
                  synthetic web (distributed_web_crawler_spark/crawl/) plus a
                  sf0.001 corpus summary row; returns the lineage metrics
                  DataFrame (round, metric, value).
-queries()      — one callable per implemented operator from SURVEY.md §2 +
-                 the training-data pipeline ops; (spark, sf_dir) → DataFrame.
-oracle_sql()   — matching DuckDB SQL for EVERY query (200/200, round 4).
-                 Hash-seeded / Arrow-UDF / iterative ops that DuckDB cannot
-                 evaluate directly get generated oracles: independent Python
+queries()      — one callable per crawl operator: each runs a package
+                 function the crawl itself runs (gates, politeness,
+                 robots, link extraction, discovery, Kafka wire format,
+                 revalidation, the training-manifest image rungs, the
+                 flagship crawl); (spark, sf_dir) → DataFrame.
+oracle_sql()   — matching DuckDB SQL for every query. Hash-seeded /
+                 Arrow-UDF / iterative ops that DuckDB cannot evaluate
+                 directly get generated oracles: independent Python
                  mirrors (property-tested XXH64, the synthetic codec, the
                  golden crawl) compute the hash-dependent inputs as VALUES
                  and the relational part is restated in SQL

@@ -1,19 +1,21 @@
-"""Benchmark harness — prints ONE JSON line the driver records as BENCH_r{N}.
+"""Crawl scaling benchmark — prints ONE JSON line.
 
-Default mode: headline queries at $SPARK_GRAFT_SF_DIR (default
-/root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS], plus a synthetic-web
-crawl sized to the SF. Output:
-  {"metric": "...", "value": <total sec>, "unit": "sec",
-   "queries": {name: sec, ...}, "sf": ..., "crawl": {...}}
+The crawl-path yardstick is perfbench/ (end-to-end and per-layer
+metrics, two workloads). This script measures what perfbench does not:
+N→4N scaling.
 
-Scaling mode (`--scaling`): the BASELINE.json north_rule requires >=0.8
-throughput scaling efficiency from N to 4N executors. No real cluster in
-this sandbox, so the evidence is the same crawl job at local[8] vs
-local[32] on identical input (fresh JVM per level via subprocess);
+`--scaling`: the BASELINE.json north_rule requires >=0.8 throughput
+scaling efficiency from N to 4N executors. No real cluster in this
+sandbox, so the evidence is the same crawl job at local[N] vs local[4N]
+on identical input (fresh JVM per level via subprocess);
 efficiency = (urls_per_sec@4N / urls_per_sec@N) / 4.
 
+`--scaling-mix`: the same protocol over image_training_mix (the
+crawl→training handoff's image rungs).
+
 `--crawl-only --cores K` is the single-level worker the scaling mode spawns
-(also the spark-submit-shaped entry: all state flows through the store dir).
+(also the spark-submit-shaped entry: all state flows through the store dir);
+`--mix-only` is the worker of `--scaling-mix`.
 """
 
 from __future__ import annotations
@@ -28,165 +30,6 @@ import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
-# headline operator queries (names resolve via the driver contract)
-HEADLINE = [
-    "pricing_summary",       # shuffle agg w/ partial (map-side) combine
-    "segment_revenue",       # 3-way join, small dim broadcast
-    "token_explode_df",      # explode + distinct + filter + agg
-    "text_lang_quality",     # pure-Catalyst text analysis scan
-    "ngram_jaccard",         # shingle self-join (df-capped)
-    "minhash_lsh_dedup",     # minhash aggs + banded LSH + verify
-    "simhash_neardup",       # applyInPandas signatures + banded join
-    "ann_topk",              # brute-force cosine top-k (broadcast queries)
-    "ann_ivf_topk",          # IVF inverted-list ANN (scale path)
-    "embedding_neardup",     # O(n^2) cosine pairs (verification scale)
-]
-
-# measured and reported, but EXCLUDED from the headline total so the
-# round-over-round `value` series stays comparable (ops added round 3)
-EXTRAS = [
-    "ann_sq8_topk",          # quantized-corpus ANN (int8 scan path)
-    "hybrid_rrf",            # BM25 ⊕ dense-cosine reciprocal-rank fusion
-    "mirror_hosts",          # host-pair containment mirror detection
-    "adaptive_budget",       # AIMD politeness budget from telemetry
-    "ann_ivf_sq8_topk",      # IVF probe over int8 inverted lists
-    "ann_pq_topk",           # PQ codes + ADC distance-table scan
-    "ann_ivf_pq_topk",       # IVF probe over byte-code inverted lists
-    "pii_stats",             # chained JVM regex curation scan
-    "doc_sample",            # xxhash64 deterministic sampling
-    "curation_pipeline",     # composed gate→dedup→scrub→sample flagship
-    "neardup_clusters",      # iterative large-star/small-star components
-    "line_dedup",            # explode → df-count → anti-join → reassemble
-    "repetition_signals",    # Gopher dup-line/2-gram fractions, map-only
-    "events_asof_join",      # union+running-last, one exchange + sort
-    "audio_features",        # Arrow map-only media decode
-    "video_frame_sample",    # worker-side frame explode
-    "vocab_topk",            # token heavy hitters, TakeOrdered top-k
-    "tfidf_topterms",        # staged aggs + WindowGroupLimit top-k
-    "host_pagerank",         # iterative broadcast-rank PageRank
-    "caption_phash_dedup",   # cross-modal dedup, one shared exchange
-    "image_curation",        # map-only integer curation gates
-    "incremental_dedup",     # new-batch vs history two-tier dedup
-    "range_bracket_join",    # interval lookup as bucketized hash join
-    "sequence_packing",      # per-shard cumulative-window chunk layout
-    "bigram_lm_counts",      # corpus bigram LM stats, staged aggs
-    "lm_perplexity",         # CCNet-style bigram-LM quality scoring
-    "dup_span_stats",        # Lee-et-al duplicated-window signals
-    "decontaminate",         # eval-overlap flags, broadcast probe
-    "source_quota",          # per-domain cap, WindowGroupLimit
-    "semantic_dedup",        # SemDeDup cluster-then-prune
-    "mix_weights",           # temperature data-mixing table
-    "training_mix",          # composed corpus→packed-sequences flagship
-    "corpus_drift",          # snapshot JS-divergence drift table
-    "chunk_manifest",        # per-chunk dataloader gather list
-    "stratified_split",      # exact per-stratum 90/5/5 split
-    "knn_label_vote",        # kNN majority-vote embedding probe
-    "events_stream_enrich",  # stream-static broadcast join + windowed agg
-    "events_stream_dedup",   # bounded-state dedup within watermark
-    "bpe_merges",            # iterative BPE merge training (12 merges)
-    "bpe_encode",            # distinct-word tokenizer replay + join-back
-    "bm25_search",           # BM25 scoring, TakeOrdered top-k
-    "inverted_index",        # postings build, sort-pinned collect_list
-    "url_canonical_dedup",   # seen-set alias collapse, one partial agg
-    "zipf_fit",              # log-log least squares per source
-    "cohort_retention",      # first-seen cohorts × activity days
-    "funnel_stages",         # 4-stage ordered funnel chain
-    "hll_distinct",          # mergeable HLL cardinality vs exact
-    "cms_heavy_hitters",     # count-min point estimates vs exact
-    "reservoir_sample",      # weighted A-Res per-source sample
-    "cross_doc_spans",       # cross-document duplicate 6-token spans
-    "quality_classifier",    # hashed-feature linear scorer, model-as-table
-    "quantile_stats",        # exact percentile() length distribution
-    "trap_detection",        # URL-template collapse per host
-    "snapshot_diff",         # recrawl delta, one full-outer join
-    "recrawl_schedule",      # Poisson change-rate next-fetch intervals
-    "frontier_scoring",      # pagerank × trap × depth composed top-k
-    "containment_pairs",     # asymmetric shingle containment
-    "host_hits",             # division-free HITS hubs/authorities
-    "seed_distance",         # min-plus BFS crawl depth
-    "budget_allocation",     # largest-remainder host quotas
-    "pmi_collocations",      # integer-count PMI phrase detection
-    "chunk_texts",           # manifest gather list executed to text
-    "centroid_drift",        # SQ8 per-label centroid drift, no explode
-    "link_degree_stats",     # degree + reciprocity partial aggs
-    "two_hop_reach",         # edge self-join neighborhood size
-    "latency_anomalies",     # per-host z-scores from integer moments
-    "json_props_rollup",     # get_json_object scan projection + agg
-    "triangle_count",        # degree-oriented triangle enumeration
-    "degree_histogram",      # log2-bucketed degree distribution
-    "packing_efficiency",    # pad-vs-pack waste decision table
-    "lang_source_pivot",     # explicit-vocabulary crosstab
-    "redirect_resolve",      # pointer-doubling redirect chains
-    "aspect_bucket",         # SDXL aspect-bucket batch layout
-    "sitemap_extract",       # scan-side sitemap XML parse
-    "hard_negatives",        # contrastive hard-negative mining
-    "ann_recall",            # recall@k eval of IVF vs brute truth
-    "oov_rate",              # per-source tokenizer coverage audit
-    "embedding_outliers",    # label-noise scrub vs SQ8 centroids
-    "html_meta",             # head-metadata regex scan, map-only
-    "anchor_text",           # per-target modal anchor, two hash aggs
-    "warc_ingest",           # WARC pointer segmentation, Arrow map-only
-    "caption_align",         # CLIP-score pair filter, one shuffle
-    "tokenizer_fertility",   # per source×lang fertility rollup
-    "wilson_quality",        # Wilson-bound source ranking
-    "scd2_history",          # SCD2 MERGE, one full-outer join
-    "robots_wildcard",       # RFC 9309 matching, map-only array fold
-    "margin_pairs",          # CCMatrix margin mining, integer denoms
-    "cdc_chunks",            # FastCDC gear chunk dedup
-    "jsonl_ingest",          # from_json + corrupt quarantine
-    "robots_semantics_diff",  # substring-vs-REP divergence audit
-    "blocklist_gate",        # UT1 category rules, map-side literal fold
-    "robots_sitemaps",       # Sitemap: directive discovery
-    "host_boilerplate",      # host-grain template chrome removal
-    "dup_span_scrub",        # executed Lee-et-al span removal
-    "discovery_pipeline",    # robots→sitemap→blocklist→seen flagship
-    "html_to_text",          # body-text extraction, map-only regex chain
-    "extraction_pipeline",   # html→text→boilerplate→span-scrub flagship
-    "sitemap_recrawl",       # lastmod-vs-store recrawl verdicts
-    "sitemap_index",         # two-level index→child sitemap parse
-    "span_corruption",       # T5/UL2 denoising pair construction
-    "fim_transform",         # fill-in-the-middle PSM reordering
-    "epoch_expansion",       # temperature-mix stream materialization
-    "dedup_eval",            # LSH band-config recall/precision report
-    "main_content",          # densest-run main-content selection
-    "mime_sniff",            # magic-byte vs declared content type
-    "psnr_neardup",          # phash proposes, decoded-pixel PSNR verifies
-    "image_variant_dedup",   # PSNR-verified clusters, lossless survivor
-    "revalidate_merge",      # conditional-GET verdicts folded into store
-    "cache_ttl",             # RFC 7234 freshness → revalidation schedule
-    "revalidation_planner",  # TTL-due × change-rate × host-cap pick list
-    "phash_band_eval",       # proposal-tier precision/recall vs pixels
-    "warc_export",           # cdx index of the sharded WARC export
-    "change_prediction",     # cold-start change prior, model-as-table
-    "audio_snr_neardup",     # energy-hash proposes, decoded PCM verifies
-    "video_psnr_neardup",    # temporal-hash proposes, frames verify
-    "audio_variant_dedup",   # verified clusters, largest-payload winner
-    "video_variant_dedup",   # verified clusters, largest-payload winner
-    "image_training_mix",    # curation→dedup→variant→batches flagship
-    "incremental_image_dedup",  # new image batch vs history two-tier
-    "image_mix_report",      # per-rung dataset-card counts
-    "link_rel_policy",       # REP rel-hint token parse, map-only
-    "meta_refresh",          # document-level redirect edges
-    "hreflang_reciprocal",   # alternate reciprocity semi-join
-    "feed_discovery",        # RSS/Atom autodiscovery scan
-    "atom_feed_parse",       # RFC 4287 entry parse, ISO dates
-    "charset_sniff",         # header>BOM>meta>default precedence
-    "rss_feed_parse",        # RFC-822 date fold, locale-free
-    "feed_recrawl",          # feed dates through the recrawl verdicts
-    "robots_group_select",   # RFC 9309 UA-group parse, Catalyst fold
-    "robots_rfc9309_decide", # group parse -> wildcard decisions e2e
-]
-
-
-def _sf_of(sf_dir: str) -> float:
-    base = os.path.basename(sf_dir.rstrip("/"))
-    try:
-        return float(base.replace("sf", ""))
-    except ValueError:
-        return -1.0
 
 
 def pin_to_cores(cores: int) -> None:
@@ -400,74 +243,6 @@ def run_scaling_mix(levels: tuple[int, int] = (2, 8),
     }
 
 
-def run_headline() -> dict:
-    import __spark_entry__ as entrymod
-    from distributed_web_crawler_spark.session import get_spark
-
-    cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    # sandbox host capacity swings 2-3x minute-to-minute; record a raw-CPU
-    # probe alongside so cross-round comparisons can be normalized, and
-    # time each query best-of-2 (declared in the output) to reject
-    # one-sided noise + cold-JIT effects
-    probe = cpu_baseline(min(cores, 16), seconds=2.0)
-    spark = get_spark("bench")
-    qs = entrymod.queries()
-    timings: dict[str, float] = {}
-    # construction is INSIDE the timed region: for declarative queries it
-    # is millisecond plan building, but iterative operators (e.g. the
-    # connected-components loop in neardup_clusters) do their distributed
-    # work during construction — timing only the final action would
-    # under-report them by orders of magnitude
-    for name in HEADLINE:
-        best = float("inf")
-        for _ in range(2):
-            t0 = time.time()
-            qs[name](spark, SF_DIR).write.format("noop") \
-                .mode("overwrite").save()
-            best = min(best, time.time() - t0)
-        timings[name] = round(best, 3)
-
-    extras: dict[str, float] = {}
-    for name in EXTRAS:
-        best = float("inf")
-        for _ in range(2):
-            t0 = time.time()
-            qs[name](spark, SF_DIR).write.format("noop") \
-                .mode("overwrite").save()
-            best = min(best, time.time() - t0)
-        extras[name] = round(best, 3)
-
-    # crawl best-of-2 like the queries: this box stalls for 10+ s
-    # mid-run often enough that a single shot regularly eats one
-    # ([[bench-box-variance]] — only best-of comparisons are meaningful)
-    crawl, crawl_best = None, float("inf")
-    for _ in range(2):
-        store = tempfile.mkdtemp(prefix="bench_crawl_")
-        try:
-            t0 = time.time()
-            attempt = crawl_job(cores, store)
-            dt = time.time() - t0
-            if dt < crawl_best:
-                crawl, crawl_best = attempt, dt
-        finally:
-            shutil.rmtree(store, ignore_errors=True)
-    timings["crawl_4rounds"] = round(crawl_best, 3)
-
-    total = round(sum(timings.values()), 3)
-    return {
-        "metric": "headline_queries_plus_crawl_total",
-        "value": total,
-        "unit": "sec",
-        "timing": "queries and crawl best-of-2 in one warm session",
-        "cpu_probe_units_per_sec": round(probe),
-        "queries": timings,
-        "extra_queries": extras,
-        "sf": _sf_of(SF_DIR),
-        "crawl": {k: (round(v, 3) if isinstance(v, float) else v)
-                  for k, v in crawl.items()},
-    }
-
-
 def cpu_baseline(procs: int, seconds: float = 5.0) -> float:
     """Aggregate units/s of an embarrassingly-parallel sha256+zlib probe —
     the same CPU mix as the synthetic fetch. Run immediately before each
@@ -594,7 +369,7 @@ def main() -> None:
     elif args.scaling:
         print(json.dumps(run_scaling()))
     else:
-        print(json.dumps(run_headline()))
+        ap.error("choose --scaling, --scaling-mix or --crawl-only")
 
 
 if __name__ == "__main__":

@@ -1390,7 +1390,7 @@ class Crawler:
         deployment injects an HTTP conditional fetcher instead.
 
         urls: restrict the epoch to a pick list — a list[str] or a
-        DataFrame with a url column, e.g. revalidation_planner output —
+        DataFrame with a url column, e.g. sitemap_recrawl_picks output —
         via one url-keyed semi-join; everything else (latest-wins
         hashes, views) stays global, so partial epochs compose."""
         from ..pipeline.recrawl import revalidate_merge
@@ -1467,7 +1467,7 @@ class Crawler:
         revalidation history: every committed epoch contributes one
         observation per URL (changed ⇔ verdict 'changed'; failed
         epochs carry no signal and are excluded). Feeds the next
-        revalidation_planner pass — the closed recrawl loop:
+        revalidation pick list — the closed recrawl loop:
         revalidate → observe → re-estimate → re-plan. Reads the O(1)
         per-URL statistics (compact ⊕ tail), never the full epoch log."""
         stats = self._reval_stats()

@@ -114,18 +114,6 @@ def split_meta(buf: bytes) -> tuple[dict[str, str], bytes]:
     return meta, buf[pos:]
 
 
-def meta_for_key(key: int) -> dict[str, str]:
-    """Deterministic per-image metadata fixture: every image carries a
-    device tag, every third a GPS pair, every fifth a software tag —
-    pure function of the image key so the DuckDB mirror can restate it."""
-    meta = {"device": f"cam-{key % 5}"}
-    if key % 3 == 0:
-        meta["gps"] = f"{key % 90}.0,{key % 180}.0"
-    if key % 5 == 0:
-        meta["software"] = "synthcam 1.0"
-    return meta
-
-
 def decode_image(buf: bytes) -> tuple[np.ndarray, str]:
     if buf[:4] == _META_MAGIC:
         # metadata envelope is transparent to the decoder, the way real

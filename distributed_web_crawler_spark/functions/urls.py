@@ -28,11 +28,6 @@ def host_of(url: Column) -> Column:
     return F.try_parse_url(url, F.lit("HOST"))
 
 
-def protocol_of(url: Column) -> Column:
-    """X2: URL → scheme."""
-    return F.try_parse_url(url, F.lit("PROTOCOL"))
-
-
 def path_of(url: Column) -> Column:
     return F.try_parse_url(url, F.lit("PATH"))
 
@@ -42,12 +37,6 @@ def is_http_url(url: Column) -> Column:
     any java.net.URL scheme at core/WebCrawler.java:355; we restrict to
     http(s), which the golden model mirrors.)"""
     return url.rlike(HTTP_URL_RE) & host_of(url).isNotNull()
-
-
-def normalize_scheme(url: Column) -> Column:
-    """X8: prepend https:// when no scheme (ui/MainView.java:281-283)."""
-    return F.when(url.rlike(HTTP_URL_RE), url).otherwise(
-        F.concat(F.lit("https://"), url))
 
 
 def _normalize_path(path: Column) -> Column:
@@ -246,41 +235,6 @@ def combined_exclude_pattern(patterns: tuple[str, ...]) -> str | None:
     if not patterns:
         return None
     return "^(?:" + "|".join(f"(?:{p})" for p in patterns) + ")$"
-
-
-# crawl seen-set canonicalization: two URLs that differ only in scheme/host
-# case, an explicit default port, a fragment, tracking query params, or
-# query-param order name the same resource — canonicalizing before the
-# URL-seen probe collapses them so the frontier never re-fetches aliases.
-TRACKING_PARAM_RE = r"^(utm_[^=]*|gclid|fbclid|ref)="
-
-
-def canonicalize_url(url: Column) -> Column:
-    """Canonical form of an absolute http(s) URL, pure Catalyst:
-    lowercase scheme+host, drop the fragment, drop an explicit default
-    port (:80 http / :443 https), drop tracking query params
-    (TRACKING_PARAM_RE), sort the surviving params bytewise, collapse
-    trailing path slashes ('' -> '/'). One expression tree, whole-stage
-    codegen — no UDF on the per-link hot path."""
-    scheme = F.lower(F.regexp_extract(url, r"^([A-Za-z][A-Za-z0-9+.-]*)://",
-                                      1))
-    hostport = F.lower(F.regexp_extract(url, r"^[^:]+://([^/?#]*)", 1))
-    host = (F.when(scheme == "http",
-                   F.regexp_replace(hostport, r":80$", ""))
-            .when(scheme == "https",
-                  F.regexp_replace(hostport, r":443$", ""))
-            .otherwise(hostport))
-    raw_path = F.regexp_extract(url, r"^[^:]+://[^/?#]*([^?#]*)", 1)
-    path = F.when(F.regexp_replace(raw_path, r"/+$", "") == "", F.lit("/")) \
-            .otherwise(F.regexp_replace(raw_path, r"/+$", ""))
-    query = F.array_join(
-        F.array_sort(F.filter(
-            F.split(F.regexp_extract(url, r"\?([^#]*)", 1), "&"),
-            lambda p: (p != "") & ~p.rlike(TRACKING_PARAM_RE))),
-        "&")
-    return F.concat(scheme, F.lit("://"), host, path,
-                    F.when(query == "", F.lit(""))
-                    .otherwise(F.concat(F.lit("?"), query)))
 
 
 # URL category blocklist (UT1 / Shallalist shape): production crawlers

@@ -1,10 +1,10 @@
 """Pure-Python mirror of Spark's ``xxhash64`` expression (XXH64, seed 42).
 
 Independent golden-model arithmetic for oracles over hash-seeded operators
-(minhash/simhash signatures): DuckDB cannot evaluate Spark's xxhash64, but
-a verified Python mirror can compute the expected signatures, which the
-oracle SQL then consumes as literal VALUES while re-doing the relational
-part (banding, joins, Hamming/Jaccard) independently in SQL.
+(the WDS shard assignment, the training mix's shard keys): DuckDB cannot
+evaluate Spark's xxhash64, but a verified Python mirror can compute the
+expected hashes, which the oracle SQL then consumes as literal VALUES
+while re-doing the relational part independently in SQL.
 
 Algorithm: reference XXH64 (public spec, github.com/Cyan4973/xxHash;
 Spark's port is sql/catalyst XXH64.java — reference class, not copied:

@@ -1,158 +1,18 @@
-"""Link-level HTML semantics beyond bare ``<a href>`` collection: REP
-link hints (rel=nofollow/ugc/sponsored), meta-refresh redirect targets,
-hreflang alternate clusters, feed autodiscovery (RSS/Atom), an Atom
-entry parse, and charset sniffing.
+"""Atom feed parsing for feed-driven discovery (CrawlConfig
+feed_discovery): one row per ``<entry>`` of a fetched feed document,
+feeding `operators.feeds.feed_frontier_candidates` and the recrawl
+verdicts.
 
-The reference collects every anchor href indiscriminately
-(core/WebCrawler.java:339-345 — Jsoup ``select("a[href]")``), which the
-crawl hot path keeps bug-for-bug. These operators are the
-standards-correct analytics/curation tier over STORED pages — the same
-posture as `operators.robots.wildcard_rule_decisions` (RFC 9309) next
-to the naive substring gate: selectable per pipeline, never silently
-changing reference parity.
-
-Scale shape: every function here is pure Catalyst — regexp extraction
-and array folds that ride the page scan inside whole-stage codegen (no
-UDF, no Python). The only exchanges are each op's own declared
-aggregate or join (first-wins collapses, the hreflang reciprocity
-self-join), all keyed on (url)-class columns that hash-partition
-evenly; nothing shuffles page payloads.
+Scale shape: pure Catalyst — regexp extraction and a posexplode that
+ride the feed scan inside whole-stage codegen (no UDF, no Python). The
+only exchange is the first-wins collapse keyed on (feed_url, entry_id);
+nothing shuffles page payloads.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-# REP link-level hints (rel values that tell a crawler not to follow /
-# credit the edge): nofollow is the classic directive; sponsored and ugc
-# are its 2019 refinements. `followable` keys on nofollow alone — the
-# conservative crawl reading — while all three flags are exposed so a
-# curation policy can treat sponsored/ugc links however it likes.
-_HINTS = ("nofollow", "sponsored", "ugc")
-
-
-def anchor_rel_links(pages: DataFrame, url_col: str = "url",
-                     html_col: str = "html") -> DataFrame:
-    """Every ``<a>`` tag WITH its rel policy: (url, anchor_idx, href,
-    rel, nofollow, sponsored, ugc, followable).
-
-    rel is an HTML space-separated token list (the attribute's defined
-    microsyntax), so hint detection is token membership over the split
-    array — ``rel="nofollowed"`` does NOT match. Anchors without an
-    href are dropped (they are fragment targets, not links); href and
-    rel parse case-canonically (attribute names lower-case, values
-    verbatim) — the synthetic corpus is canonical HTML, and a real
-    corpus normalizes upstream of this tier."""
-    anchors = F.regexp_extract_all(F.col(html_col),
-                                   F.lit("<a ([^>]*)>"), F.lit(1))
-    attrs = F.col("_attrs")
-    href = F.regexp_extract(attrs, 'href="([^"]*)"', 1)
-    rel = F.regexp_extract(attrs, 'rel="([^"]*)"', 1)
-    toks = F.filter(F.split(F.lower(rel), " +"),
-                    lambda t: F.length(t) > 0)
-    flags = {h: F.array_contains(toks, h) for h in _HINTS}
-    return (pages
-            .select(F.col(url_col).alias("url"),
-                    F.posexplode(anchors).alias("anchor_idx", "_attrs"))
-            .select("url", "anchor_idx", href.alias("href"),
-                    rel.alias("rel"),
-                    *[flags[h].alias(h) for h in _HINTS],
-                    (~flags["nofollow"]).alias("followable"))
-            .where(F.length("href") > 0))
-
-
-def meta_refresh_targets(pages: DataFrame, url_col: str = "url",
-                         html_col: str = "html") -> DataFrame:
-    """``<meta http-equiv="refresh">`` redirect edges: (url, delay_sec,
-    refresh_url). The content microsyntax is ``<delay>[;url=<target>]``;
-    rows without a target are pure reloads and dropped (they are not
-    edges). The output composes with `operators.redirects
-    .resolve_redirects` exactly like HTTP 3xx edges — meta refresh is
-    the document-level redirect a status-200 fetch can still carry."""
-    content = F.regexp_extract(
-        F.col(html_col),
-        '<meta http-equiv="refresh" content="([^"]*)"', 1)
-    delay = F.regexp_extract(content, "^([0-9]+)", 1).try_cast("int")
-    target = F.regexp_extract(content, "(?i);\\s*url=(.*)$", 1)
-    return (pages
-            .select(F.col(url_col).alias("url"), delay.alias("delay_sec"),
-                    target.alias("refresh_url"))
-            .where(F.length("refresh_url") > 0))
-
-
-def hreflang_alternates(pages: DataFrame, url_col: str = "url",
-                        html_col: str = "html") -> DataFrame:
-    """``<link rel="alternate" hreflang=… href=…>`` language alternates:
-    (url, hreflang, href), first tag wins per (url, href) — document
-    order, the same collapse rule as sitemap entries."""
-    tags = F.regexp_extract_all(
-        F.col(html_col),
-        F.lit('<link rel="alternate" hreflang="[^"]*" href="[^"]*"'),
-        F.lit(0))
-    tag = F.col("_tag")
-    return (pages
-            .select(F.col(url_col).alias("url"),
-                    F.posexplode(tags).alias("tag_idx", "_tag"))
-            .select("url", "tag_idx",
-                    F.regexp_extract(tag, 'hreflang="([^"]*)"', 1)
-                    .alias("hreflang"),
-                    F.regexp_extract(tag, 'href="([^"]*)"', 1)
-                    .alias("href"))
-            .where(F.length("href") > 0)
-            .groupBy("url", "href")
-            .agg(F.min(F.struct("tag_idx", "hreflang")).alias("_w"))
-            .select("url", F.col("_w.hreflang").alias("hreflang"), "href"))
-
-
-def hreflang_reciprocal(alternates: DataFrame) -> DataFrame:
-    """Validated hreflang clusters: the spec requires alternates to be
-    RECIPROCAL (if a lists b, b must list a back, else the annotation is
-    ignored). One self-join on the (href, url) reversal; pairs ordered
-    url < href so each cluster edge reports once.
-
-    Scale shape: both sides are the slim alternates table hash-joined on
-    url-class keys — no payloads, no skew beyond genuine mega-clusters
-    (a page listing millions of alternates), which the upstream
-    first-wins collapse already bounds to distinct hrefs per page."""
-    fwd = alternates.select("url", "href", "hreflang")
-    rev = alternates.select(F.col("url").alias("href"),
-                            F.col("href").alias("url"))
-    return (fwd.join(rev, ["url", "href"], "left_semi")
-            .where(F.col("url") < F.col("href"))
-            .select("url", "href", "hreflang"))
-
-
-# feed autodiscovery MIME types (rel="alternate" link types a crawler
-# subscribes to) — the '+' needs escaping inside the regex
-_FEED_TYPE_RE = 'type="application/(rss|atom)\\+xml"'
-
-
-def feed_links(pages: DataFrame, url_col: str = "url",
-               html_col: str = "html") -> DataFrame:
-    """RSS/Atom autodiscovery: ``<link rel="alternate"
-    type="application/rss+xml|atom+xml" href=…>`` → (url, feed_type,
-    feed_url), first tag wins per (url, feed_url). Feeds are the third
-    standard discovery source next to anchors and sitemaps — and like
-    sitemap lastmod, a feed's entry timestamps drive recrawl planning."""
-    tags = F.regexp_extract_all(
-        F.col(html_col),
-        F.lit(f'<link rel="alternate" {_FEED_TYPE_RE} href="[^"]*"'),
-        F.lit(0))
-    tag = F.col("_tag")
-    return (pages
-            .select(F.col(url_col).alias("url"),
-                    F.posexplode(tags).alias("tag_idx", "_tag"))
-            .select("url", "tag_idx",
-                    F.regexp_extract(tag, _FEED_TYPE_RE, 1)
-                    .alias("feed_type"),
-                    F.regexp_extract(tag, 'href="([^"]*)"', 1)
-                    .alias("feed_url"))
-            .where(F.length("feed_url") > 0)
-            .groupBy("url", "feed_url")
-            .agg(F.min(F.struct("tag_idx", "feed_type")).alias("_w"))
-            .select("url", F.col("_w.feed_type").alias("feed_type"),
-                    "feed_url"))
 
 
 def parse_atom_feeds(feeds: DataFrame, feed_col: str = "feed_url",
@@ -199,91 +59,3 @@ def parse_atom_feeds(feeds: DataFrame, feed_col: str = "feed_url",
                     F.col("_w.title").alias("title")))
 
 
-_RFC822_MONTHS = ("Jan", "Feb", "Mar", "Apr", "May", "Jun",
-                  "Jul", "Aug", "Sep", "Oct", "Nov", "Dec")
-
-
-def parse_rss_feeds(feeds: DataFrame, feed_col: str = "feed_url",
-                    xml_col: str = "xml") -> DataFrame:
-    """RSS 2.0 feed documents → one row per ``<item>``: (feed_url,
-    item_key, link, pub_date, title). RSS items have no required id —
-    the de-facto key is ``<guid>`` falling back to ``<link>``; items
-    with neither are unkeyable and dropped. ``<pubDate>`` is RFC 822
-    ("Mon, 05 Mar 2024 01:02:03 GMT"), whose month is an ENGLISH NAME —
-    parsed locale-free by extracting day/month-name/year with one regex
-    and folding the twelve fixed tokens through a when-chain into
-    an ISO string try_cast (a SimpleDateFormat-style EEE/MMM parse
-    would follow the JVM locale and break oracle parity; make_date
-    raises under ANSI for impossible combos like 31 Feb where try_cast
-    nulls). Malformed dates null out (advisory, like sitemap lastmod).
-    Duplicate keys collapse first-in-document-order, the Atom/sitemap
-    rule."""
-    entries = F.regexp_extract_all(F.col(xml_col),
-                                   F.lit("(?s)<item>(.*?)</item>"), F.lit(1))
-    block = F.col("_block")
-
-    def field(tag):
-        return F.regexp_extract(block, f"(?s)<{tag}>(.*?)</{tag}>", 1)
-
-    months = "|".join(_RFC822_MONTHS)
-    date_re = f"<pubDate>[^<]*?([0-9]{{1,2}}) ({months}) ([0-9]{{4}})"
-    day = F.regexp_extract(block, date_re, 1).try_cast("int")
-    mon_name = F.regexp_extract(block, date_re, 2)
-    year = F.regexp_extract(block, date_re, 3).try_cast("int")
-    mon = F.lit(None).cast("int")
-    for i, name in enumerate(_RFC822_MONTHS):
-        mon = F.when(mon_name == name, F.lit(i + 1)).otherwise(mon)
-    # concat null-propagates (unmatched regex ⇒ null components ⇒ null
-    # date) and try_cast nulls impossible combos (31 Feb)
-    pub_date = F.concat(
-        year.cast("string"), F.lit("-"),
-        F.lpad(mon.cast("string"), 2, "0"), F.lit("-"),
-        F.lpad(day.cast("string"), 2, "0")).try_cast("date")
-    key = F.coalesce(F.nullif(field("guid"), F.lit("")),
-                     F.nullif(F.col("_link"), F.lit("")))
-    return (feeds
-            .select(F.col(feed_col).alias("feed_url"),
-                    F.posexplode(entries).alias("entry_idx", "_block"))
-            .withColumn("_link", field("link"))
-            .select("feed_url", "entry_idx", key.alias("item_key"),
-                    F.col("_link").alias("link"),
-                    pub_date.alias("pub_date"),
-                    F.nullif(field("title"), F.lit("")).alias("title"))
-            .where(F.col("item_key").isNotNull())
-            .groupBy("feed_url", "item_key")
-            .agg(F.min(F.struct("entry_idx", "link", "pub_date",
-                                "title")).alias("_w"))
-            .select("feed_url", "item_key", F.col("_w.link").alias("link"),
-                    F.col("_w.pub_date").alias("pub_date"),
-                    F.col("_w.title").alias("title")))
-
-
-# byte-order marks, hex of the payload prefix → charset
-_BOMS = (("EFBBBF", "utf-8"), ("FFFE", "utf-16le"), ("FEFF", "utf-16be"))
-
-
-def sniff_charset(pages: DataFrame, ct_col: str = "content_type",
-                  body_col: str = "body",
-                  default: str = "windows-1252") -> DataFrame:
-    """Document charset per the HTML encoding-sniffing precedence:
-    Content-Type header ``charset=`` parameter, else a byte-order mark
-    (UTF-8 / UTF-16LE / UTF-16BE), else ``<meta charset=…>`` in the
-    byte prefix, else the legacy default (HTML5 maps unlabeled documents
-    to windows-1252). Adds a lower-cased ``charset`` column.
-
-    The BOM test is hex arithmetic over the first 3 payload bytes and
-    the meta scan decodes only a bounded 1 KiB prefix — the payload
-    column itself never leaves the scan."""
-    header = F.nullif(
-        F.lower(F.regexp_extract(F.col(ct_col), "(?i)charset=([^;\\s]+)", 1)),
-        F.lit(""))
-    hex3 = F.hex(F.substring(F.col(body_col), 1, 3))
-    bom = F.when(hex3.startswith(_BOMS[0][0]), F.lit(_BOMS[0][1]))
-    for prefix, name in _BOMS[1:]:
-        bom = bom.when(hex3.startswith(prefix), F.lit(name))
-    prefix_text = F.decode(F.substring(F.col(body_col), 1, 1024), "UTF-8")
-    meta = F.nullif(
-        F.lower(F.regexp_extract(prefix_text, '<meta charset="([^"]*)"', 1)),
-        F.lit(""))
-    return pages.withColumn(
-        "charset", F.coalesce(header, bom, meta, F.lit(default)))

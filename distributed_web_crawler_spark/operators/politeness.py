@@ -47,9 +47,8 @@ def apply_politeness(frontier: DataFrame, cfg: CrawlConfig,
     (schema.cql:19-24). Absent/invalid delay ⇒ the configured budget.
 
     ``overrides`` (optional, broadcast) carries per-host
-    ``next_budget`` rows — the integration seam for
-    pipeline.recrawl.adaptive_host_budget's AIMD output (or any other
-    budget policy). An override can only TIGHTEN the effective budget
+    ``next_budget`` rows — the integration seam for a budget policy's
+    output (e.g. an AIMD per-host controller). An override can only TIGHTEN the effective budget
     (least of the tiers, floored at 1): politeness layers compose by
     minimum, never relax each other. No caller in the crawl loop
     passes one yet, so flagship golden parity is untouched.

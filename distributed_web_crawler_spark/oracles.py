@@ -1,26 +1,24 @@
-"""Golden-model oracle SQL generators for the hash-seeded operators.
+"""Golden-model oracle SQL generators for the hash-seeded crawl operators.
 
-These queries were rows-only checks in rounds 1-2 because DuckDB cannot
-evaluate Spark's xxhash64 / the Arrow codec UDFs / the crawl loop. Each
-generator here computes the *hash-dependent inputs* with an independent
-pure-Python mirror (functions/xxh64.py, property-tested against Spark;
-crawl/synthweb.py's deterministic codec; golden.py's sequential crawl) and
-embeds them as literal VALUES, while the *relational* part of the operator
-— banding, self-joins, Hamming distance, Jaccard arithmetic, threshold
-filters — is restated in DuckDB SQL and recomputed independently.
+DuckDB cannot evaluate Spark's xxhash64, the Arrow codec UDFs or the crawl
+loop. Each generator here computes the *hash-dependent inputs* with an
+independent pure-Python mirror (functions/xxh64.py, property-tested
+against Spark; crawl/synthweb.py's deterministic codec; golden.py's
+sequential crawl) and embeds them as literal VALUES, while the
+*relational* part of the operator — banding, self-joins, Hamming
+distance, PSNR and curation thresholds, connected components, batch
+layout — is restated in DuckDB SQL and recomputed independently.
 
-The driver's correctness harness runs oracles at sf=0.01 (driver
-contract); generators that depend on document text therefore mirror over
-``ORACLE_SF_DIR`` (default /root/testdata/sf0.01). The image-table and
-crawl oracles are scale-free: image content is a pure function of
-doc_id % dup_mod and the crawl is a pure function of (seed, config), so
-their SQL is valid at any sf.
+Image content is a pure function of doc_id % dup_mod and the crawl is
+a pure function of (seed, config). The generators that list image keys
+(wds_index, image_training_mix, aspect_bucket) read the first doc_ids of
+``ORACLE_SF_DIR`` (default /root/testdata/sf0.01), the scale the
+driver's correctness harness runs oracles at.
 """
 
 from __future__ import annotations
 
 import os
-import re
 
 ORACLE_SF_DIR = os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR",
                                "/root/testdata/sf0.01")
@@ -28,63 +26,21 @@ ORACLE_SF_DIR = os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR",
 _cache: dict = {}
 
 
-def _docs(sf_dir: str) -> list[tuple[int, str]]:
-    key = ("docs", sf_dir)
+def _first_doc_ids(n: int, sf_dir: str = ORACLE_SF_DIR) -> list[int]:
+    key = ("doc_ids", sf_dir)
     if key not in _cache:
         import pyarrow.parquet as pq
 
         t = pq.read_table(os.path.join(sf_dir, "documents.parquet"),
-                          columns=["doc_id", "text"])
-        _cache[key] = list(zip(t.column("doc_id").to_pylist(),
-                               t.column("text").to_pylist()))
-    return _cache[key]
-
-
-# -- text mirrors (tokenize/shingle exactly as pipeline/dedup.py) -----------
-
-def _tokens(text: str) -> list[str]:
-    """split(trim(lower(text)), '[ \\t\\n\\r\\f\\x0B]+') — trim strips spaces only, like
-    Spark's trim; split keeps interior empty-token semantics. The split
-    class is Java regex \\s ([ \\t\\n\\x0b\\f\\r], ASCII-only) spelled
-    out: Python's \\s is Unicode-aware and would split on NBSP etc. where
-    the engine does not."""
-    return re.split(r"[ \t\n\x0b\f\r]+", text.lower().strip(" "))
-
-
-def _shingles(toks: list[str], n: int) -> set[str]:
-    """Mirror of pipeline.dedup.shingles: documents with fewer than n
-    tokens produce NO shingles (the engine filters size(toks) >= n; the
-    naive slice formula would emit one truncated shingle instead)."""
-    if len(toks) < n:
-        return set()
-    return {" ".join(toks[i:i + n])
-            for i in range(len(toks) - n + 1)}
-
-
-# -- SimHash ----------------------------------------------------------------
-
-def simhash_py(text: str) -> int:
-    """Mirror of pipeline.dedup.simhash_signatures for one document."""
-    from collections import Counter
-
-    from .functions.xxh64 import xxhash64
-
-    votes = [0] * 64
-    for tok, cnt in Counter(_tokens(text)).items():
-        th = xxhash64(tok) & ((1 << 64) - 1)
-        for i in range(64):
-            votes[i] += cnt if (th >> i) & 1 else -cnt
-    val = 0
-    for i in range(64):
-        if votes[i] > 0:
-            val += (1 << i) if i < 63 else -(1 << 63)
-    return val
+                          columns=["doc_id"])
+        _cache[key] = sorted(t.column("doc_id").to_pylist())
+    return _cache[key][:n]
 
 
 def _hamming_band_join_sql(sig_cte: str, id_col: str, out_a: str,
                            out_b: str, max_hamming: int) -> str:
     """Banded self-join + bit_count Hamming — the relational half of
-    simhash/phash near-dup, recomputed by DuckDB from signature VALUES."""
+    phash near-dup, recomputed by DuckDB from signature VALUES."""
     return f"""
   bands AS (
     SELECT DISTINCT {id_col}, sig, b.band_no,
@@ -97,216 +53,6 @@ def _hamming_band_join_sql(sig_cte: str, id_col: str, out_a: str,
       ON a.band_no = b.band_no AND a.bkt = b.bkt
          AND a.{id_col} < b.{id_col})
   WHERE hamming <= {max_hamming}"""
-
-
-def simhash_neardup_sql(sf_dir: str = ORACLE_SF_DIR,
-                        max_hamming: int = 8) -> str:
-    key = ("simhash_sql", sf_dir, max_hamming)
-    if key in _cache:
-        return _cache[key]
-    vals = ",\n    ".join(
-        f"({doc_id}, {simhash_py(text)})" for doc_id, text in _docs(sf_dir))
-    _cache[key] = f"""
-  WITH sig(doc_id, sig0) AS (VALUES
-    {vals}),
-  sigs AS (SELECT CAST(doc_id AS BIGINT) AS doc_id,
-                  CAST(sig0 AS BIGINT) AS sig FROM sig),
-  {_hamming_band_join_sql('sigs', 'doc_id', 'doc_a', 'doc_b', max_hamming)}
-"""
-    return _cache[key]
-
-
-# -- MinHash + LSH ----------------------------------------------------------
-
-def minhash_candidate_rows(sf_dir: str = ORACLE_SF_DIR,
-                           num_hashes: int = 16, bands: int = 8,
-                           n: int = 3,
-                           threshold: float = 0.5,
-                           docs: list[tuple] | None = None,
-                           docs_tag: str = "") -> list[tuple]:
-    """(doc_a, doc_b, n_a, n_b, n_common) for every LSH candidate pair —
-    the full minhash_lsh_verified pipeline mirrored in Python: shingle
-    fingerprints, per-seed min signatures, banding (by band-value tuple:
-    bucket-hash collisions in the engine can only ADD candidates, which
-    exact verification then filters identically), size-ratio prefilter,
-    exact intersection counts. Jaccard arithmetic + threshold stay in
-    SQL."""
-    from .functions.xxh64 import hash_int, hash_long, xxhash64
-
-    key = ("minhash_rows", sf_dir, num_hashes, bands, n, threshold,
-           docs_tag)
-    if key in _cache:
-        return _cache[key]
-    rpb = num_hashes // bands
-    fps: dict[int, set] = {}
-    sigs: dict[int, list[int]] = {}
-    for doc_id, text in (docs if docs is not None else _docs(sf_dir)):
-        sh = _shingles(_tokens(text), n)
-        f = {(xxhash64(s), xxhash64(("i32", 1), s)) for s in sh}
-        fps[doc_id] = f
-        mins = [None] * num_hashes
-        for h1, h2 in f:
-            base = hash_long(h2, hash_long(h1, 42))
-            for i in range(num_hashes):
-                v = hash_int(i, base)
-                v = v - (1 << 64) if v >= (1 << 63) else v
-                if mins[i] is None or v < mins[i]:
-                    mins[i] = v
-        sigs[doc_id] = mins
-    cands = set()
-    for b in range(bands):
-        buckets: dict[tuple, list[int]] = {}
-        for doc_id, mins in sigs.items():
-            buckets.setdefault(tuple(mins[b * rpb:(b + 1) * rpb]),
-                               []).append(doc_id)
-        for ids in buckets.values():
-            ids.sort()
-            for i, a in enumerate(ids):
-                for bb in ids[i + 1:]:
-                    na, nb = len(fps[a]), len(fps[bb])
-                    if min(na, nb) >= (threshold - 5e-7) * max(na, nb):
-                        cands.add((a, bb))
-    rows = [(a, b, len(fps[a]), len(fps[b]), len(fps[a] & fps[b]))
-            for a, b in sorted(cands)]
-    _cache[key] = rows
-    return rows
-
-
-def minhash_lsh_sql(sf_dir: str = ORACLE_SF_DIR, num_hashes: int = 16,
-                    bands: int = 8, threshold: float = 0.5,
-                    docs: list[tuple] | None = None,
-                    docs_tag: str = "") -> str:
-    rows = minhash_candidate_rows(sf_dir, num_hashes, bands,
-                                  threshold=threshold, docs=docs,
-                                  docs_tag=docs_tag)
-    vals = ",\n    ".join(f"({a}, {b}, {na}, {nb}, {nc})"
-                          for a, b, na, nb, nc in rows)
-    return f"""
-  WITH cand(doc_a, doc_b, n_a, n_b, n_common) AS (VALUES
-    {vals})
-  SELECT CAST(doc_a AS BIGINT) AS doc_a, CAST(doc_b AS BIGINT) AS doc_b,
-         round(CAST(n_common AS DOUBLE)
-               / (n_a + n_b - n_common), 6) AS jaccard
-  FROM cand
-  WHERE round(CAST(n_common AS DOUBLE)
-              / (n_a + n_b - n_common), 6) >= {threshold}
-"""
-
-
-# -- IVF ANN ----------------------------------------------------------------
-
-def ivf_centroid_ids(sf_dir: str = ORACLE_SF_DIR,
-                     n_lists: int = 16) -> list[int]:
-    """The engine's deterministic centroid sample: the n_lists vec_ids
-    with the smallest (xxhash64(vec_id), vec_id) — mirrored with the
-    property-tested XXH64 reimplementation."""
-    from .functions.xxh64 import hash_long
-
-    key = ("ivf_cents", sf_dir, n_lists)
-    if key not in _cache:
-        import pyarrow.parquet as pq
-
-        ids = pq.read_table(os.path.join(sf_dir, "embeddings.parquet"),
-                            columns=["vec_id"]).column("vec_id").to_pylist()
-
-        def signed(x):
-            return x - (1 << 64) if x >= (1 << 63) else x
-
-        _cache[key] = [v for v in sorted(
-            ids, key=lambda v: (signed(hash_long(v, 42)), v))[:n_lists]]
-    return _cache[key]
-
-
-def ann_ivf_sql(sf_dir: str = ORACLE_SF_DIR, k: int = 5, n_lists: int = 16,
-                nprobe: int = 4) -> str:
-    """IVF top-k restated in SQL: centroid ids come from the XXH64 mirror
-    as VALUES; DuckDB independently recomputes unit-cosine assignment
-    (argmax, ties to the lowest list_id — the engine quantizes sims to
-    1e-6 so ties are exact cross-engine), probe-list ranking, and the
-    final top-k, all with its own float arithmetic + round(·, 6)."""
-    cents = ",".join(f"({v})" for v in ivf_centroid_ids(sf_dir, n_lists))
-    return f"""
-  WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb
-             FROM embeddings),
-  cents AS (SELECT e.vec_id AS list_id, e.emb AS c_emb
-            FROM e JOIN (VALUES {cents}) c(vec_id) USING (vec_id)),
-  assign AS (
-    SELECT vec_id, list_id FROM (
-      SELECT e.vec_id, c.list_id,
-             row_number() OVER (PARTITION BY e.vec_id
-               ORDER BY round(list_cosine_similarity(e.emb, c.c_emb), 6)
-                        DESC, c.list_id) AS rn
-      FROM e, cents c) WHERE rn = 1),
-  q AS (SELECT vec_id AS query_id, emb AS q_emb FROM e WHERE vec_id < 8),
-  probes AS (
-    SELECT query_id, q_emb, list_id FROM (
-      SELECT q.query_id, q.q_emb, c.list_id,
-             row_number() OVER (PARTITION BY q.query_id
-               ORDER BY round(list_cosine_similarity(q.q_emb, c.c_emb), 6)
-                        DESC, c.list_id) AS rn
-      FROM q, cents c) WHERE rn <= {nprobe}),
-  scored AS (
-    SELECT p.query_id, a.vec_id,
-           round(list_cosine_similarity(p.q_emb, e.emb), 6) AS cosine
-    FROM probes p
-    JOIN assign a ON a.list_id = p.list_id AND a.vec_id <> p.query_id
-    JOIN e ON e.vec_id = a.vec_id)
-  SELECT query_id, vec_id, cosine, CAST(rank AS INTEGER) AS rank
-  FROM (SELECT *, row_number() OVER (
-          PARTITION BY query_id ORDER BY cosine DESC, vec_id) AS rank
-        FROM scored)
-  WHERE rank <= {k}
-"""
-
-
-def ann_ivf_sq8_sql(sf_dir: str = ORACLE_SF_DIR, k: int = 5,
-                    n_lists: int = 16, nprobe: int = 4) -> str:
-    """ann_ivf_sql with the probed-list scoring done against SQ8-quantized
-    vectors (the engine's ivf_sq8_topk): the quantizer is restated in SQL
-    exactly as in the ann_sq8_topk oracle — quantization is of the raw
-    embedding, cosine scale-invariance makes ranking independent of the
-    dropped per-vector scale."""
-    cents = ",".join(f"({v})" for v in ivf_centroid_ids(sf_dir, n_lists))
-    return f"""
-  WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb
-             FROM embeddings),
-  qz AS (SELECT vec_id,
-           list_transform(emb, x -> floor(x / greatest(
-               list_aggregate(list_transform(emb, y -> abs(y)), 'max')
-                 / 127.0, 1e-30) + 0.5)) AS qd
-         FROM e),
-  cents AS (SELECT e.vec_id AS list_id, e.emb AS c_emb
-            FROM e JOIN (VALUES {cents}) c(vec_id) USING (vec_id)),
-  assign AS (
-    SELECT vec_id, list_id FROM (
-      SELECT e.vec_id, c.list_id,
-             row_number() OVER (PARTITION BY e.vec_id
-               ORDER BY round(list_cosine_similarity(e.emb, c.c_emb), 6)
-                        DESC, c.list_id) AS rn
-      FROM e, cents c) WHERE rn = 1),
-  q AS (SELECT vec_id AS query_id, emb AS q_emb FROM e WHERE vec_id < 8),
-  probes AS (
-    SELECT query_id, q_emb, list_id FROM (
-      SELECT q.query_id, q.q_emb, c.list_id,
-             row_number() OVER (PARTITION BY q.query_id
-               ORDER BY round(list_cosine_similarity(q.q_emb, c.c_emb), 6)
-                        DESC, c.list_id) AS rn
-      FROM q, cents c) WHERE rn <= {nprobe}),
-  scored AS (
-    SELECT p.query_id, a.vec_id,
-           CASE WHEN list_sum(list_transform(z.qd, x -> x * x)) = 0
-                THEN 0.0
-                ELSE round(list_cosine_similarity(p.q_emb, z.qd), 6)
-           END AS cosine
-    FROM probes p
-    JOIN assign a ON a.list_id = p.list_id AND a.vec_id <> p.query_id
-    JOIN qz z ON z.vec_id = a.vec_id)
-  SELECT query_id, vec_id, cosine, CAST(rank AS INTEGER) AS rank
-  FROM (SELECT *, row_number() OVER (
-          PARTITION BY query_id ORDER BY cosine DESC, vec_id) AS rank
-        FROM scored)
-  WHERE rank <= {k}
-"""
 
 
 # -- image-table oracles (scale-free: content is f(doc_id % dup_mod)) -------
@@ -391,58 +137,6 @@ def image_clusters_sql(n: int = 128, dup_mod: int = 96,
 """
 
 
-def image_stats_sql(n: int = 128, dup_mod: int = 96) -> str:
-    # float moments ride as quoted strings: a bare decimal literal parses
-    # as DECIMAL in DuckDB and the later DOUBLE cast would re-round, while
-    # string→DOUBLE parses correctly rounded (repr is shortest-roundtrip)
-    vals = ",\n    ".join(
-        "({m}, {w}, {h}, '{fmt}', '{mean!r}', '{std!r}', {phash})".format(
-            m=m, w=g["w"], h=g["h"], fmt=g["fmt"], mean=g["mean"],
-            std=g["std"], phash=g["phash"])
-        for m, g in ((m, _image_group(m, dup_mod)) for m in range(dup_mod)))
-    return f"""
-  WITH {_IDS_CTE.format(n=n)},
-  v(m, w, h, fmt, mean_px, std_px, phash) AS (VALUES
-    {vals})
-  SELECT printf('img-%08d', ids.doc_id) AS image_id,
-         CAST(v.w AS INTEGER) AS w, CAST(v.h AS INTEGER) AS h, v.fmt,
-         CAST(v.mean_px AS DOUBLE) AS mean_px,
-         CAST(v.std_px AS DOUBLE) AS std_px,
-         CAST(v.phash AS BIGINT) AS phash
-  FROM ids JOIN v ON ids.doc_id % {dup_mod} = v.m
-"""
-
-
-def image_resize_sql(n: int = 128, dup_mod: int = 96,
-                     target: int = 8) -> str:
-    import numpy as np
-
-    def thumb(pix) -> bytes:
-        ys = np.linspace(0, pix.shape[0], target + 1).astype(int)
-        xs = np.linspace(0, pix.shape[1], target + 1).astype(int)
-        return np.array([
-            [pix[ys[i]:max(ys[i] + 1, ys[i + 1]),
-                 xs[j]:max(xs[j] + 1, xs[j + 1])].mean()
-             for j in range(target)] for i in range(target)
-        ], dtype=np.uint8).tobytes()
-
-    vals = ",\n    ".join(
-        "({m}, '{hx}')".format(
-            m=m,
-            hx="".join(f"\\x{b:02X}"
-                       for b in thumb(_image_group(m, dup_mod)["pix"])))
-        for m in range(dup_mod))
-    return f"""
-  WITH {_IDS_CTE.format(n=n)},
-  v(m, thumb_hex) AS (VALUES
-    {vals})
-  SELECT printf('img-%08d', ids.doc_id) AS image_id,
-         CAST(v.thumb_hex AS BLOB) AS thumb,
-         CAST({target} AS INTEGER) AS tw, CAST({target} AS INTEGER) AS th
-  FROM ids JOIN v ON ids.doc_id % {dup_mod} = v.m
-"""
-
-
 def _image_member(m: int, dup_mod: int):
     """Payload/caption member sizes for one duplicate group — the codec
     mirror at the grain the WebDataset member index needs (byte lengths
@@ -478,7 +172,7 @@ def wds_index_sql(n: int = 64, dup_mod: int = 48, n_shards: int = 4) -> str:
     offsets in (image_id, member_name) order) is restated relationally."""
     from .functions.xxh64 import xxhash64
 
-    ids = sorted(d for d, _ in _docs(ORACLE_SF_DIR))[:n]
+    ids = _first_doc_ids(n)
     sh_vals = ", ".join(
         f"({d}, {xxhash64('img-%08d' % d) % n_shards})" for d in ids)
     mem_vals = ",\n    ".join(
@@ -508,91 +202,6 @@ def wds_index_sql(n: int = 64, dup_mod: int = 48, n_shards: int = 4) -> str:
               - blocks + 512 AS BIGINT) AS data_offset,
          size_bytes
   FROM b
-"""
-
-
-def image_meta_stats_sql(n: int = 64, dup_mod: int = 48) -> str:
-    """Mirror of pipeline.multimodal.image_meta_stats over the
-    meta-wrapped image fixture: per-image envelope contents come from
-    the same pure function (synthweb.meta_for_key) as VALUES, and the
-    scrubbed-payload sha256 is the codec mirror's hash of the UNWRAPPED
-    group buffer — so a scrub that leaves envelope bytes behind (or
-    strips pixel bytes) hash-mismatches."""
-    from .crawl.synthweb import meta_for_key
-
-    ids = sorted(d for d, _ in _docs(ORACLE_SF_DIR))[:n]
-    dvals = ", ".join(
-        "({d}, {n}, {g})".format(
-            d=d, n=len(meta_for_key(d)),
-            g=str("gps" in meta_for_key(d)).upper())
-        for d in ids)
-    svals = ",\n    ".join(
-        f"({m}, '{_image_member(m, dup_mod)['sha']}')"
-        for m in range(dup_mod))
-    return f"""
-  WITH {_IDS_CTE.format(n=n)},
-  dm(doc_id, n_meta, has_gps) AS (VALUES {dvals}),
-  s(m, sha) AS (VALUES
-    {svals})
-  SELECT printf('img-%08d', ids.doc_id) AS image_id,
-         CAST(dm.n_meta AS INTEGER) AS n_meta, dm.has_gps,
-         s.sha AS payload_sha256
-  FROM ids JOIN dm ON dm.doc_id = ids.doc_id
-           JOIN s ON ids.doc_id % {dup_mod} = s.m
-"""
-
-
-def wds_incremental_plan_sql(n_old: int = 72, n_new: int = 64,
-                             dup_mod: int = 48, n_shards: int = 4) -> str:
-    """Mirror of sources.wds.wds_incremental_plan over (old = clean
-    images, new = meta-wrapped images): both generations' member shas
-    come from the codec/envelope mirrors as VALUES, and the full-outer
-    membership diff + per-shard dirtiness is restated relationally."""
-    import hashlib
-
-    from .crawl.synthweb import meta_for_key, wrap_with_meta
-    from .functions.xxh64 import xxhash64
-
-    ids = sorted(d for d, _ in _docs(ORACLE_SF_DIR))
-    rows_old, rows_new = [], []
-    for d in ids[:max(n_old, n_new)]:
-        m = _image_member(d % dup_mod, dup_mod)
-        iid = f"img-{d:08d}"
-        shard = xxhash64(iid) % n_shards
-        pay, txt = f"{iid}.{m['fmt']}", f"{iid}.txt"
-        if d in set(ids[:n_old]):
-            rows_old += [(shard, pay, m["sha"]), (shard, txt, m["csha"])]
-        if d in set(ids[:n_new]):
-            wsha = hashlib.sha256(
-                wrap_with_meta(m["buf"], meta_for_key(d))).hexdigest()
-            rows_new += [(shard, pay, wsha), (shard, txt, m["csha"])]
-
-    def vals(rows):
-        return ", ".join(f"({s}, '{n}', '{h}')" for s, n, h in rows)
-
-    return f"""
-  WITH o(shard, member_name, old_sha) AS (VALUES {vals(rows_old)}),
-  nn(shard, member_name, new_sha) AS (VALUES {vals(rows_new)}),
-  j AS (
-    SELECT coalesce(o.shard, nn.shard) AS shard,
-           CASE WHEN o.old_sha IS NULL THEN 'added'
-                WHEN nn.new_sha IS NULL THEN 'removed'
-                WHEN o.old_sha <> nn.new_sha THEN 'changed'
-                ELSE 'same' END AS status
-    FROM o FULL OUTER JOIN nn
-      ON o.shard = nn.shard AND o.member_name = nn.member_name)
-  SELECT CAST(shard AS INTEGER) AS shard,
-         CAST(sum(CASE WHEN status = 'added' THEN 1 ELSE 0 END)
-              AS BIGINT) AS n_added,
-         CAST(sum(CASE WHEN status = 'removed' THEN 1 ELSE 0 END)
-              AS BIGINT) AS n_removed,
-         CAST(sum(CASE WHEN status = 'changed' THEN 1 ELSE 0 END)
-              AS BIGINT) AS n_changed,
-         CAST(sum(CASE WHEN status = 'same' THEN 1 ELSE 0 END)
-              AS BIGINT) AS n_same,
-         (sum(CASE WHEN status IN ('added', 'removed', 'changed')
-              THEN 1 ELSE 0 END) > 0) AS dirty
-  FROM j GROUP BY 1
 """
 
 
@@ -794,7 +403,7 @@ def _image_mix_ctes(n: int, dup_mod: int, caption_dup_mod: int,
                 f"({m * nf + fi}, {reason == 'ok'}, '{reason}')")
     cur_vals = ",\n    ".join(cur_rows)
     dim_vals = ",\n    ".join(dim_rows)
-    ids = sorted(d for d, _ in _docs(ORACLE_SF_DIR))[:n]
+    ids = _first_doc_ids(n)
     shard_vals = ",\n    ".join(
         f"('img-{int(d):08d}', {xxhash64(f'img-{int(d):08d}') % n_shards})"
         for d in ids)
@@ -870,522 +479,6 @@ def image_training_mix_sql(n: int = 384, dup_mod: int = 96,
 """
 
 
-def image_mix_report_sql(n: int = 384, dup_mod: int = 96,
-                         caption_dup_mod: int = 48,
-                         max_hamming: int = 10, min_psnr: float = 40.0,
-                         batch_size: int = 4, n_shards: int = 4) -> str:
-    """Mirror of pipeline.multimodal.image_mix_report: per-rung counts
-    and the curation reject breakdown, recomputed from the shared
-    _image_mix_ctes chain."""
-    return f"""
-  WITH RECURSIVE {_image_mix_ctes(n, dup_mod, caption_dup_mod,
-                                  max_hamming, min_psnr, n_shards)}
-  SELECT 'stage' AS kind, 'raw' AS key, count(*) AS "rows" FROM imgs
-  UNION ALL
-  SELECT 'stage', 'curated', count(*)
-  FROM imgs i JOIN curv ON curv.cid = i.cid AND curv.ok
-  UNION ALL
-  SELECT 'stage', 'payload_unique', count(*) FROM exact_surv
-  UNION ALL
-  SELECT 'stage', 'variant_survivors', count(*) FROM survivors
-  UNION ALL
-  SELECT 'stage', 'batched', count(*) FROM rn
-  WHERE (r - 1) // {batch_size} < cnt // {batch_size}
-  UNION ALL
-  SELECT 'reject', curv.reason, count(*)
-  FROM imgs i JOIN curv ON curv.cid = i.cid AND NOT curv.ok
-  GROUP BY curv.reason
-"""
-
-
-def incremental_image_dedup_sql(n: int = 384, n_old: int = 48,
-                                dup_mod: int = 96, max_hamming: int = 10,
-                                min_psnr: float = 40.0) -> str:
-    """Mirror of pipeline.multimodal.incremental_image_dedup over the
-    history/new split of the variant-encoded corpus (first n_old ids are
-    the accepted history; the rest are the incoming batch). The engine's
-    sha2-byte exact tier is restated as combo-id equality (byte-identical
-    ⟺ same (pixel-group, encoding) combo — the synthetic codec is
-    deterministic and injective across groups), the banded probe as the
-    old-endpoint × new-endpoint restriction of the full banded self-join
-    (both equal "all cross pairs with Hamming ≤ max" — banding is
-    lossless there), and the PSNR verify joins the codec mirror's
-    per-combo-pair verdict VALUES."""
-    return f"""
-  WITH {_psnr_combo_ctes(n, dup_mod, max_hamming, min_psnr)},
-  olds AS (SELECT image_id, cid FROM imgs ORDER BY image_id LIMIT {n_old}),
-  news AS (SELECT image_id, cid FROM imgs
-           WHERE image_id NOT IN (SELECT image_id FROM olds)),
-  exact_m AS (
-    SELECT nw.image_id, min(o.image_id) AS exact_old
-    FROM news nw JOIN olds o ON o.cid = nw.cid
-    GROUP BY nw.image_id),
-  cand AS (
-    SELECT nw.image_id, o.image_id AS old_id, p.hamming,
-           pv.exact0, CAST(pv.psnr0 AS DOUBLE) AS psnr0
-    FROM pairs p
-    JOIN olds o ON o.image_id = p.img_a
-    JOIN news nw ON nw.image_id = p.img_b
-    JOIN pv ON pv.c_lo = least(o.cid, nw.cid)
-           AND pv.c_hi = greatest(o.cid, nw.cid)
-    WHERE pv.verified0
-      AND nw.image_id NOT IN (SELECT image_id FROM exact_m)),
-  best AS (
-    SELECT image_id, old_id, hamming, psnr0,
-           row_number() OVER (PARTITION BY image_id
-                              ORDER BY exact0 DESC,
-                                       psnr0 DESC NULLS LAST,
-                                       old_id ASC) AS rk
-    FROM cand)
-  SELECT nw.image_id,
-         (e.exact_old IS NULL AND b.old_id IS NULL) AS keep,
-         CASE WHEN e.exact_old IS NOT NULL THEN 'exact'
-              WHEN b.old_id IS NOT NULL THEN 'psnr' END AS match_kind,
-         coalesce(e.exact_old, b.old_id) AS matched_old,
-         CAST(b.hamming AS INTEGER) AS hamming,
-         b.psnr0 AS psnr_db
-  FROM news nw
-  LEFT JOIN exact_m e ON e.image_id = nw.image_id
-  LEFT JOIN (SELECT * FROM best WHERE rk = 1) b ON b.image_id = nw.image_id
-"""
-
-
-def phash_band_eval_sql(n: int = 384, dup_mod: int = 96,
-                        thresholds: tuple[int, ...] = (0, 2, 4, 6, 8, 10),
-                        max_hamming: int = 12,
-                        min_psnr: float = 40.0) -> str:
-    """Mirror of pipeline.multimodal.phash_band_eval: the verified pair
-    stream (combo machinery) crossed with the threshold list, counted
-    per cutoff, plus precision/recall against the superset truth."""
-    th_vals = ", ".join(f"({t})" for t in thresholds)
-    return f"""
-  WITH {_psnr_combo_ctes(n, dup_mod, max_hamming, min_psnr)},
-  vp AS (SELECT p.hamming, pv.verified0 AS verified
-         FROM pairs p
-         JOIN sigs sa ON sa.image_id = p.img_a
-         JOIN sigs sb ON sb.image_id = p.img_b
-         JOIN pv ON pv.c_lo = least(sa.cid, sb.cid)
-                AND pv.c_hi = greatest(sa.cid, sb.cid)),
-  tt AS (SELECT count(*) AS n_truth FROM vp WHERE verified),
-  th(threshold) AS (VALUES {th_vals}),
-  per AS (SELECT th.threshold,
-                 count(*) AS n_candidates,
-                 CAST(sum(CASE WHEN verified THEN 1 ELSE 0 END) AS BIGINT)
-                   AS n_verified
-          FROM vp JOIN th ON vp.hamming <= th.threshold
-          GROUP BY th.threshold)
-  SELECT CAST(threshold AS INTEGER) AS threshold, n_candidates, n_verified,
-         round(n_verified / CAST(n_candidates AS DOUBLE), 6)
-           AS "precision",
-         round(n_verified / CAST(tt.n_truth AS DOUBLE), 6)
-           AS recall_in_superset
-  FROM per, tt
-"""
-
-
-_AUDIO_SHIFTS = (0, 4, 12)
-
-
-def _audio_combo(m: int, shift: int):
-    """Decoded PCM + energy hash for one (group, requantize-shift) combo
-    — the audio codec mirror at the grain audio_snr_neardup needs."""
-    from .pipeline.multimodal import (
-        _audio_payload,
-        audio_energy_hash,
-        decode_audio,
-        quantize_pcm,
-    )
-
-    from .pipeline.multimodal import encode_audio
-
-    key = ("audcombo", m, shift)
-    if key in _cache:
-        return _cache[key]
-    buf, _, _ = _audio_payload(42, m)
-    pcm, rate = decode_audio(buf)
-    if shift:
-        pcm = quantize_pcm(pcm, shift)
-        buf = encode_audio(pcm, rate)
-    _cache[key] = {"pcm": pcm, "rate": rate,
-                   "ahash": audio_energy_hash(pcm),
-                   "nbytes": len(buf)}
-    return _cache[key]
-
-
-def _media_combo_ctes(kind: str, n: int, dup_mod: int, max_hamming: int,
-                      min_bar: float) -> str:
-    """Shared CTE chain for the variant-requantized audio/video corpora:
-    per-combo fingerprint VALUES (ph), per-combo-pair sample verdicts
-    (pv), per-combo payload byte lengths (nb), the id→combo map, per-id
-    signatures (sigs) and the banded Hamming candidate pairs (pairs).
-    kind='aud' (energy hash / peak-SNR) or 'vid' (temporal hash /
-    frame PSNR)."""
-    from .pipeline.multimodal import audio_psnr, video_psnr
-
-    if kind == "aud":
-        shifts, combo, hkey, ref = (_AUDIO_SHIFTS, _audio_combo,
-                                    "ahash", "pcm")
-        psnr_fn, idp = audio_psnr, "aud"
-
-        def shape_of(c):
-            return (c["pcm"].shape, c["rate"])
-    else:
-        shifts, combo, hkey, ref = (_VIDEO_SHIFTS, _video_combo,
-                                    "vhash", "frames")
-        psnr_fn, idp = video_psnr, "vid"
-
-        def shape_of(c):
-            return (c["frames"].shape, c["fps"])
-
-    nv = len(shifts)
-    combos = [(m, si) for m in range(dup_mod) for si in range(nv)]
-    sig_vals = ",\n    ".join(
-        f"({m}, {si}, {combo(m, shifts[si])[hkey]})" for m, si in combos)
-    nb_vals = ",\n    ".join(
-        f"({m * nv + si}, {combo(m, shifts[si])['nbytes']})"
-        for m, si in combos)
-
-    pair_rows = []
-    for i, (ma, sa) in enumerate(combos):
-        for mb, sb in combos[i:]:
-            a, b = combo(ma, shifts[sa]), combo(mb, shifts[sb])
-            ham = bin((a[hkey] ^ b[hkey]) & ((1 << 64) - 1)).count("1")
-            if ham > max_hamming:
-                continue
-            ca, cb = ma * nv + sa, mb * nv + sb
-            if shape_of(a) != shape_of(b):
-                pair_rows.append(f"({ca}, {cb}, FALSE, FALSE, NULL, FALSE)")
-                continue
-            v = psnr_fn(a[ref], b[ref])
-            if v == float("inf"):
-                pair_rows.append(f"({ca}, {cb}, TRUE, TRUE, NULL, TRUE)")
-            else:
-                r = round(v, 6)
-                pair_rows.append(
-                    f"({ca}, {cb}, TRUE, FALSE, '{r!r}', {r >= min_bar})")
-    pair_vals = ",\n    ".join(pair_rows)
-
-    return f"""{_IDS_CTE.format(n=n)},
-  ph(m, si, hsig) AS (VALUES
-    {sig_vals}),
-  nb(cid, nbytes) AS (VALUES
-    {nb_vals}),
-  pv(c_lo, c_hi, same_shape0, exact0, snr0, verified0) AS (VALUES
-    {pair_vals}),
-  items AS (SELECT printf('{idp}-%08d', doc_id) AS item_id,
-                   (doc_id % {dup_mod}) * {nv}
-                   + ((doc_id // {dup_mod}) % {nv}) AS cid
-            FROM ids),
-  sigs AS (SELECT i.item_id, i.cid, CAST(ph.hsig AS BIGINT) AS sig
-           FROM items i
-           JOIN ph ON ph.m * {nv} + ph.si = i.cid),
-  pairs AS (WITH {_hamming_band_join_sql('sigs', 'item_id',
-                                         'id_a', 'id_b', max_hamming)})"""
-
-
-def incremental_media_dedup_sql(kind: str, id_col: str, value_col: str,
-                                match_label: str, n: int = 288,
-                                n_old: int = 48, dup_mod: int = 96,
-                                max_hamming: int = 10,
-                                min_bar: float = 40.0) -> str:
-    """Mirror of pipeline.multimodal.incremental_audio/video_dedup over
-    the history/new split of the variant-requantized corpus (first n_old
-    ids = accepted history, the rest = incoming batch). Same derivation
-    strategy as incremental_image_dedup_sql: exact tier restated as
-    combo-id equality (injective deterministic codec — NOTE the fixture's
-    shifts are distinct, so this split has no exact matches and the tier
-    contributes empty; byte-exact coverage lives in the pytest), the
-    banded probe as the old×new restriction of the full banded join, and
-    the sample verdicts joined from the codec mirror's per-combo-pair
-    VALUES. History ids sort before new ids, so the pair's id_a endpoint
-    is always the old side (matching banded_hamming_probe's (new, old)
-    orientation after the swap)."""
-    return f"""
-  WITH {_media_combo_ctes(kind, n, dup_mod, max_hamming, min_bar)},
-  olds AS (SELECT item_id, cid FROM items ORDER BY item_id LIMIT {n_old}),
-  news AS (SELECT item_id, cid FROM items
-           WHERE item_id NOT IN (SELECT item_id FROM olds)),
-  exact_m AS (
-    SELECT nw.item_id, min(o.item_id) AS exact_old
-    FROM news nw JOIN olds o ON o.cid = nw.cid
-    GROUP BY nw.item_id),
-  cand AS (
-    SELECT nw.item_id, o.item_id AS old_id, p.hamming,
-           pv.exact0, CAST(pv.snr0 AS DOUBLE) AS val0
-    FROM pairs p
-    JOIN olds o ON o.item_id = p.id_a
-    JOIN news nw ON nw.item_id = p.id_b
-    JOIN pv ON pv.c_lo = least(o.cid, nw.cid)
-           AND pv.c_hi = greatest(o.cid, nw.cid)
-    WHERE pv.verified0
-      AND nw.item_id NOT IN (SELECT item_id FROM exact_m)),
-  best AS (
-    SELECT item_id, old_id, hamming, val0,
-           row_number() OVER (PARTITION BY item_id
-                              ORDER BY exact0 DESC,
-                                       val0 DESC NULLS LAST,
-                                       old_id ASC) AS rk
-    FROM cand)
-  SELECT nw.item_id AS {id_col},
-         (e.exact_old IS NULL AND b.old_id IS NULL) AS keep,
-         CASE WHEN e.exact_old IS NOT NULL THEN 'exact'
-              WHEN b.old_id IS NOT NULL THEN '{match_label}'
-              END AS match_kind,
-         coalesce(e.exact_old, b.old_id) AS matched_old,
-         CAST(b.hamming AS INTEGER) AS hamming,
-         b.val0 AS {value_col}
-  FROM news nw
-  LEFT JOIN exact_m e ON e.item_id = nw.item_id
-  LEFT JOIN (SELECT * FROM best WHERE rk = 1) b ON b.item_id = nw.item_id
-"""
-
-
-def audio_snr_neardup_sql(n: int = 288, dup_mod: int = 96,
-                          max_hamming: int = 10,
-                          min_snr_db: float = 40.0) -> str:
-    """Mirror of pipeline.multimodal.audio_snr_verified_neardup over the
-    variant-requantized audio table (variant_shifts = 0/4/12): banded
-    Hamming join recomputed relationally from per-combo energy-hash
-    VALUES; the sample verdict joins per-combo-pair SNR VALUES from the
-    codec mirror (PCM content is f(doc_id % dup_mod, shift))."""
-    return f"""
-  WITH {_media_combo_ctes('aud', n, dup_mod, max_hamming, min_snr_db)}
-  SELECT p.id_a AS aud_a, p.id_b AS aud_b, p.hamming,
-         pv.same_shape0 AS same_shape, pv.exact0 AS exact_samples,
-         CAST(pv.snr0 AS DOUBLE) AS snr_db, pv.verified0 AS verified
-  FROM pairs p
-  JOIN sigs sa ON sa.item_id = p.id_a
-  JOIN sigs sb ON sb.item_id = p.id_b
-  JOIN pv ON pv.c_lo = least(sa.cid, sb.cid)
-         AND pv.c_hi = greatest(sa.cid, sb.cid)
-"""
-
-
-def _media_variant_dedup_sql(kind: str, id_col: str, n: int, dup_mod: int,
-                             max_hamming: int, min_bar: float) -> str:
-    """Mirror of pipeline.multimodal.media_variant_dedup: verified pairs
-    → recursive reachability → min-id cluster labels → one survivor per
-    cluster by (payload bytes DESC, id ASC)."""
-    return f"""
-  WITH RECURSIVE {_media_combo_ctes(kind, n, dup_mod, max_hamming,
-                                    min_bar)},
-  vpairs AS (SELECT p.id_a, p.id_b
-             FROM pairs p
-             JOIN sigs sa ON sa.item_id = p.id_a
-             JOIN sigs sb ON sb.item_id = p.id_b
-             JOIN pv ON pv.c_lo = least(sa.cid, sb.cid)
-                    AND pv.c_hi = greatest(sa.cid, sb.cid)
-             WHERE pv.verified0),
-  edges AS (SELECT id_a AS a, id_b AS b FROM vpairs
-            UNION SELECT id_b, id_a FROM vpairs),
-  reach(node, comp) AS (
-    SELECT a, a FROM edges
-    UNION
-    SELECT e.b, r.comp FROM reach r JOIN edges e ON e.a = r.node),
-  labels AS (SELECT node, min(comp) AS cluster_id FROM reach
-             GROUP BY node),
-  lab AS (SELECT s.item_id,
-                 coalesce(l.cluster_id, s.item_id) AS cluster_id,
-                 CAST(nb.nbytes AS BIGINT) AS nbytes
-          FROM sigs s
-          LEFT JOIN labels l ON l.node = s.item_id
-          JOIN nb ON nb.cid = s.cid)
-  SELECT item_id AS {id_col}, cluster_id, nbytes,
-         row_number() OVER (PARTITION BY cluster_id
-                            ORDER BY nbytes DESC, item_id) = 1 AS keep
-  FROM lab
-"""
-
-
-def audio_variant_dedup_sql(n: int = 288, dup_mod: int = 96,
-                            max_hamming: int = 10,
-                            min_snr_db: float = 40.0) -> str:
-    return _media_variant_dedup_sql("aud", "audio_id", n, dup_mod,
-                                    max_hamming, min_snr_db)
-
-
-def video_variant_dedup_sql(n: int = 288, dup_mod: int = 96,
-                            max_hamming: int = 10,
-                            min_psnr: float = 40.0) -> str:
-    return _media_variant_dedup_sql("vid", "video_id", n, dup_mod,
-                                    max_hamming, min_psnr)
-
-
-_VIDEO_SHIFTS = (0, 1, 4)
-
-
-def _video_combo(m: int, shift: int):
-    """Decoded frames + spatiotemporal hash for one (group, shift) combo."""
-    from .pipeline.multimodal import (
-        _video_payload,
-        decode_video,
-        quantize_frames,
-        video_temporal_hash,
-    )
-
-    from .pipeline.multimodal import encode_video
-
-    key = ("vidcombo", m, shift)
-    if key in _cache:
-        return _cache[key]
-    buf, _, _, _, _ = _video_payload(42, m)
-    frames, fps = decode_video(buf)
-    if shift:
-        frames = quantize_frames(frames, shift)
-        buf = encode_video(frames, fps)
-    _cache[key] = {"frames": frames, "fps": fps,
-                   "vhash": video_temporal_hash(frames),
-                   "nbytes": len(buf)}
-    return _cache[key]
-
-
-def video_psnr_neardup_sql(n: int = 288, dup_mod: int = 96,
-                           max_hamming: int = 10,
-                           min_psnr: float = 40.0) -> str:
-    """Mirror of pipeline.multimodal.video_psnr_verified_neardup over the
-    variant-requantized video table (variant_shifts = 0/1/4) — the
-    audio_snr_neardup_sql shape on the video codec mirror."""
-    return f"""
-  WITH {_media_combo_ctes('vid', n, dup_mod, max_hamming, min_psnr)}
-  SELECT p.id_a AS vid_a, p.id_b AS vid_b, p.hamming,
-         pv.same_shape0 AS same_shape, pv.exact0 AS exact_frames,
-         CAST(pv.snr0 AS DOUBLE) AS psnr_db, pv.verified0 AS verified
-  FROM pairs p
-  JOIN sigs sa ON sa.item_id = p.id_a
-  JOIN sigs sb ON sb.item_id = p.id_b
-  JOIN pv ON pv.c_lo = least(sa.cid, sb.cid)
-         AND pv.c_hi = greatest(sa.cid, sb.cid)
-"""
-
-
-def warc_export_sql(n_shards: int = 4) -> str:
-    """Mirror of sources.warc.warc_export_index over the documents-derived
-    page fixture: the shard key pmod(xxhash64(uri), n_shards) comes from
-    the Python XXH64 mirror as VALUES; the record grammar, lengths,
-    sha256 and the within-shard running offset are restated relationally
-    (chr(13)||chr(10) spells CRLF so the literal survives SQL quoting)."""
-    from .functions.xxh64 import xxhash64
-
-    vals = ", ".join(
-        f"({d}, {xxhash64('https://h%04d.example.com/p/%d' % (d % 20, d)) % n_shards})"
-        for d, _ in _docs(ORACLE_SF_DIR))
-    return f"""
-  WITH sh(doc_id, shard) AS (VALUES {vals}),
-  p AS (
-    SELECT d.doc_id, sh.shard,
-           'https://h' || lpad(CAST(d.doc_id % 20 AS VARCHAR), 4, '0')
-             || '.example.com/p/' || d.doc_id AS uri,
-           d.text AS body
-    FROM documents d JOIN sh USING (doc_id)),
-  rec AS (
-    SELECT shard, uri, length(body) AS content_length,
-           'WARC/1.0' || chr(13) || chr(10)
-             || 'WARC-Type: response' || chr(13) || chr(10)
-             || 'WARC-Target-URI: ' || uri || chr(13) || chr(10)
-             || 'Content-Length: ' || length(body)
-             || chr(13) || chr(10) || chr(13) || chr(10)
-             || body || chr(13) || chr(10) || chr(13) || chr(10)
-             AS record
-    FROM p)
-  SELECT shard, uri,
-         sum(length(record)) OVER (PARTITION BY shard ORDER BY uri
-                                   ROWS UNBOUNDED PRECEDING)
-           - length(record) AS rec_offset,
-         content_length,
-         sha256(record) AS record_sha256
-  FROM rec
-"""
-
-
-def sample_keep_ids(rate: float, denom: int = 1_000_000) -> list[int]:
-    """doc_ids the deterministic sample keeps — the XXH64-mirror
-    restatement of pipeline.text.deterministic_sample's bucket test."""
-    from .functions.xxh64 import xxhash64
-
-    thresh = int(round(rate * denom))
-    return [d for d, _ in _docs(ORACLE_SF_DIR)
-            if xxhash64(int(d)) % denom < thresh]
-
-
-def doc_sample_sql(rate: float = 0.25, denom: int = 1_000_000) -> str:
-    """Mirror of pipeline.text.deterministic_sample over doc_id: the kept
-    bucket membership is recomputed with the Python XXH64 mirror and
-    embedded as VALUES."""
-    ids = sample_keep_ids(rate, denom)
-    if not ids:
-        return ("SELECT doc_id, CAST(length(text) AS INTEGER) AS n_chars "
-                "FROM documents WHERE FALSE")
-    vals = ", ".join(f"({d})" for d in ids)
-    return f"""
-  WITH keep(doc_id) AS (VALUES {vals})
-  SELECT d.doc_id, CAST(length(d.text) AS INTEGER) AS n_chars
-  FROM documents d JOIN keep USING (doc_id)
-"""
-
-
-# -- audio/video oracles (scale-free: content is f(doc_id % dup_mod)) -------
-
-def audio_features_sql(n: int = 96, dup_mod: int = 64,
-                       seed: int = 42) -> str:
-    """VALUES mirror of pipeline.multimodal.audio_features: each group's
-    features come from the SAME audio_feature_row the Spark operator runs,
-    so both sides execute one IEEE op sequence; floats ride as repr strings
-    (shortest-roundtrip) cast to DOUBLE."""
-    from .pipeline.multimodal import _audio_payload, audio_feature_row
-
-    rows = []
-    for m in range(dup_mod):
-        buf, _, _ = _audio_payload(seed, m)
-        r = audio_feature_row(buf)
-        rows.append(
-            "({m}, {sr}, {ns}, '{dur!r}', '{rms!r}', {pk}, {zc})".format(
-                m=m, sr=r["sample_rate"], ns=r["n_samples"],
-                dur=r["duration_s"], rms=r["rms"], pk=r["peak"],
-                zc=r["zero_crossings"]))
-    vals = ",\n    ".join(rows)
-    return f"""
-  WITH {_IDS_CTE.format(n=n)},
-  v(m, sample_rate, n_samples, duration_s, rms, peak, zero_crossings)
-    AS (VALUES
-    {vals})
-  SELECT printf('aud-%08d', ids.doc_id) AS audio_id,
-         CAST(v.sample_rate AS INTEGER) AS sample_rate,
-         CAST(v.n_samples AS INTEGER) AS n_samples,
-         CAST(v.duration_s AS DOUBLE) AS duration_s,
-         CAST(v.rms AS DOUBLE) AS rms,
-         CAST(v.peak AS INTEGER) AS peak,
-         CAST(v.zero_crossings AS BIGINT) AS zero_crossings
-  FROM ids JOIN v ON ids.doc_id % {dup_mod} = v.m
-"""
-
-
-def video_frame_sample_sql(n: int = 96, dup_mod: int = 64,
-                           every_k: int = 3, seed: int = 42) -> str:
-    """VALUES mirror of pipeline.multimodal.video_frame_sample — one row
-    per (group, sampled frame), via the shared video_frames function."""
-    from .pipeline.multimodal import _video_payload, video_frames
-
-    rows = []
-    for m in range(dup_mod):
-        buf, *_ = _video_payload(seed, m)
-        for fr in video_frames(buf, every_k):
-            rows.append("({m}, {fi}, {t}, '{mp!r}', {ph})".format(
-                m=m, fi=fr["frame_idx"], t=fr["t_ms"], mp=fr["mean_px"],
-                ph=fr["phash"]))
-    vals = ",\n    ".join(rows)
-    return f"""
-  WITH {_IDS_CTE.format(n=n)},
-  v(m, frame_idx, t_ms, mean_px, phash) AS (VALUES
-    {vals})
-  SELECT printf('vid-%08d', ids.doc_id) AS video_id,
-         CAST(v.frame_idx AS INTEGER) AS frame_idx,
-         CAST(v.t_ms AS BIGINT) AS t_ms,
-         CAST(v.mean_px AS DOUBLE) AS mean_px,
-         CAST(v.phash AS BIGINT) AS phash
-  FROM ids JOIN v ON ids.doc_id % {dup_mod} = v.m
-"""
-
-
 # -- crawl flagship (scale-free: pure function of seed + config) ------------
 
 def crawl_flagship_sql() -> str:
@@ -1410,52 +503,6 @@ def crawl_flagship_sql() -> str:
   SELECT CAST(round AS INTEGER) AS round, metric, CAST(value AS BIGINT) AS value
   FROM (VALUES
     {vals}) t(round, metric, value)
-"""
-
-
-def _pagerank_ctes(n_nodes: int = 32, iterations: int = 6,
-                   damping: float = 0.5) -> str:
-    """The unrolled PageRank CTE chain (nodes … r{iterations}); shared by
-    host_pagerank_sql and frontier_scoring_sql so the composed oracle can
-    never drift from the standalone one."""
-    from .pipeline.graph import HOST_EDGE_FNS
-
-    teleport = (1.0 - damping) / n_nodes
-    edge_sel = "\n    UNION ALL ".join(
-        f"SELECT node AS src, (node * {a} + {b}) % {n_nodes} AS dst "
-        f"FROM nodes"
-        for a, b in HOST_EDGE_FNS)
-    ctes = [f"""nodes AS (
-    SELECT DISTINCT doc_id % {n_nodes} AS node FROM documents),
-  edges AS (
-    {edge_sel}),
-  deg AS (SELECT src, count(*) AS outdeg FROM edges GROUP BY src),
-  edeg AS (SELECT e.src, e.dst, d.outdeg
-           FROM edges e JOIN deg d ON d.src = e.src),
-  r0 AS (SELECT node, CAST(1 AS DOUBLE) / {n_nodes} AS rank FROM nodes)"""]
-    for k in range(iterations):
-        ctes.append(f"""r{k + 1} AS (
-    SELECT n.node,
-           CAST('{teleport!r}' AS DOUBLE)
-             + CAST('{damping!r}' AS DOUBLE)
-               * coalesce(inc.s, CAST(0 AS DOUBLE)) AS rank
-    FROM nodes n LEFT JOIN (
-      SELECT e.dst AS node, sum(r.rank / e.outdeg) AS s
-      FROM edeg e JOIN r{k} r ON r.node = e.src
-      GROUP BY e.dst) inc ON inc.node = n.node)""")
-    return ",\n  ".join(ctes)
-
-
-def host_pagerank_sql(n_nodes: int = 32, iterations: int = 6,
-                      damping: float = 0.5) -> str:
-    """Unrolled-iteration PageRank oracle. Bit-exact vs Spark because the
-    query's parameters keep every intermediate a dyadic rational (see
-    pipeline/graph.pagerank docstring): summation order cannot matter.
-    Constants ride as quoted strings → DOUBLE (bare decimals parse as
-    DECIMAL and would re-round)."""
-    return f"""
-  WITH {_pagerank_ctes(n_nodes, iterations, damping)}
-  SELECT node, rank FROM r{iterations}
 """
 
 
@@ -1486,30 +533,6 @@ def _image_caption_ctes(n: int, dup_mod: int, caption_dup_mod: int) -> str:
                   CAST(v.w AS INTEGER) AS w, CAST(v.h AS INTEGER) AS h,
                   v.fmt, v.caption, CAST(v.phash AS BIGINT) AS phash
            FROM ids JOIN v ON ids.doc_id % {dup_mod} = v.m)"""
-
-
-def caption_phash_dedup_sql(n: int = 128, dup_mod: int = 96,
-                            caption_dup_mod: int = 48) -> str:
-    return rf"""
-  WITH {_image_caption_ctes(n, dup_mod, caption_dup_mod)},
-  base AS (
-    SELECT image_id,
-           sha256(regexp_replace(lower(trim(caption)), '[ \t\n\r\f\x0B]+', ' ', 'g'))
-             AS caption_fp,
-           phash
-    FROM imgs),
-  grp AS (SELECT caption_fp, count(*) AS n_caption_dups,
-                 count(DISTINCT phash) AS n_phash_variants
-          FROM base GROUP BY caption_fp),
-  var AS (SELECT caption_fp, phash, min(image_id) AS keeper
-          FROM base GROUP BY caption_fp, phash)
-  SELECT b.image_id, b.caption_fp, g.n_caption_dups,
-         CAST(g.n_phash_variants AS BIGINT) AS n_phash_variants,
-         b.image_id = var.keeper AS keep
-  FROM base b
-  JOIN grp g USING (caption_fp)
-  JOIN var ON var.caption_fp = b.caption_fp AND var.phash = b.phash
-"""
 
 
 def image_curation_sql(n: int = 128, dup_mod: int = 96,
@@ -1547,847 +570,6 @@ def image_curation_sql(n: int = 128, dup_mod: int = 96,
 """
 
 
-def doc_hash_values(denom: int = 1_000_000) -> str:
-    """VALUES rows `(doc_id, pmod(xxhash64(doc_id), denom))` for every
-    document — the XXH64-mirror rank keys shared by the source_quota and
-    training_mix oracles."""
-    from .functions.xxh64 import xxhash64
-
-    return ", ".join(f"({d}, {xxhash64(int(d)) % denom})"
-                     for d, _ in _docs(ORACLE_SF_DIR))
-
-
-def sequence_packing_ffd_sql(ctx_len: int = 256, n_shards: int = 8) -> str:
-    """Golden-model oracle for pipeline.text.sequence_packing_ffd: the
-    SAME pure ffd_pack_py kernel the engine's per-shard applyInPandas
-    group runs, executed here over the oracle corpus and emitted as
-    VALUES — the distributed result is pinned to the sequential
-    first-fit-decreasing order bit-for-bit."""
-    from .pipeline.text import ffd_pack_py
-
-    shards: dict[int, list[tuple[int, int]]] = {}
-    n_of: dict[int, int] = {}
-    for doc_id, text in _docs(ORACLE_SF_DIR):
-        n = len(_tokens(text))
-        n_of[doc_id] = n
-        shards.setdefault(doc_id % n_shards, []).append((doc_id, n))
-    rows = []
-    for shard, items in shards.items():
-        for doc_id, packed, bin_id, off in ffd_pack_py(items, ctx_len):
-            rows.append((doc_id, shard, n_of[doc_id], packed, bin_id,
-                         off))
-    vals = ", ".join(f"({d}, {s}, {n}, {p}, {b}, {o})"
-                     for d, s, n, p, b, o in sorted(rows))
-    return f"""
-  SELECT CAST(doc_id AS BIGINT) AS doc_id, CAST(shard AS BIGINT) AS shard,
-         CAST(n_tokens AS BIGINT) AS n_tokens,
-         CAST(packed_tokens AS BIGINT) AS packed_tokens,
-         CAST(bin_id AS BIGINT) AS bin_id,
-         CAST(offset_in_bin AS BIGINT) AS offset_in_bin
-  FROM (VALUES {vals})
-       t(doc_id, shard, n_tokens, packed_tokens, bin_id, offset_in_bin)
-"""
-
-
-def epoch_shuffle_sql(epoch: int, n_shards: int = 8) -> str:
-    """Oracle for pipeline.text.epoch_shuffle: the permutation keys come
-    from the independent XXH64 mirror (chained doc_id, epoch longs —
-    seed 42, Spark's xxhash64 semantics); DuckDB independently re-derives
-    the shard assignment (pmod) and in-shard rank."""
-    from .functions.xxh64 import xxhash64
-
-    vals = ", ".join(
-        f"({d}, {xxhash64(int(d), int(epoch))})"
-        for d, _ in _docs(ORACLE_SF_DIR))
-    return f"""
-  WITH h(doc_id, k) AS (VALUES {vals}),
-  s AS (SELECT doc_id, k,
-               ((k % {n_shards}) + {n_shards}) % {n_shards} AS shard
-        FROM h)
-  SELECT CAST(doc_id AS BIGINT) AS doc_id,
-         CAST({epoch} AS INTEGER) AS epoch,
-         CAST(shard AS INTEGER) AS shard,
-         CAST(row_number() OVER (PARTITION BY shard ORDER BY k, doc_id)
-              AS BIGINT) AS position
-  FROM s
-"""
-
-
-def source_quota_sql(cap: int = 10, denom: int = 1_000_000) -> str:
-    """Mirror of pipeline.text.source_quota_sample: the per-doc rank key
-    pmod(xxhash64(doc_id), denom) is recomputed with the Python XXH64
-    mirror and embedded as VALUES; DuckDB re-derives the per-source
-    window rank and the cap filter."""
-    vals = doc_hash_values(denom)
-    return f"""
-  WITH h(doc_id, hk) AS (VALUES {vals}),
-  r AS (
-    SELECT d.doc_id, d.source,
-           row_number() OVER (PARTITION BY d.source
-                              ORDER BY h.hk, d.doc_id) AS rn
-    FROM documents d JOIN h USING (doc_id))
-  SELECT doc_id, source, CAST(rn AS INTEGER) AS quota_rank
-  FROM r WHERE rn <= {cap}
-"""
-
-
-def _bpe_apply_py(syms: list, a: str, b: str) -> list:
-    """Greedy left-to-right application of one merge — the exact Python
-    mirror of pipeline.text._apply_merge's Catalyst fold."""
-    merged, out, i = a + b, [], 0
-    while i < len(syms):
-        if i + 1 < len(syms) and syms[i] == a and syms[i + 1] == b:
-            out.append(merged)
-            i += 2
-        else:
-            out.append(syms[i])
-            i += 1
-    return out
-
-
-def _bpe_merges_py(n_merges: int, pairs_per_pass: int = 1) -> list:
-    """Train-and-cache the golden BPE merge table [(rank, a, b, cnt)]:
-    pure-Python Sennrich BPE over the oracle corpus — ASCII-whitespace
-    tokenization (mirroring Java \\s), greedy left-to-right merge
-    application, ties to the lexicographically smallest pair.
-    ``pairs_per_pass=M>1`` mirrors pipeline.text.bpe_train's batched
-    variant VERBATIM: per pass, the top 4M pairs by (cnt desc, pair) are
-    the candidate window, select_compatible_merges accepts up to M, all
-    accepted merges apply before the next recount."""
-    import re
-    from collections import Counter
-
-    from .pipeline.text import select_compatible_merges
-
-    key = ("bpe", ORACLE_SF_DIR, n_merges, pairs_per_pass)
-    if key not in _cache:
-        freq: Counter = Counter()
-        for _, text in _docs(ORACLE_SF_DIR):
-            for w in re.split(r"[ \t\n\x0b\f\r]+", text.lower()):
-                if w:
-                    freq[w] += 1
-        words = [(list(w), c) for w, c in freq.items()]
-        merges = []
-        m = max(1, pairs_per_pass)
-        while len(merges) < n_merges:
-            want = min(m, n_merges - len(merges))
-            pc: Counter = Counter()
-            for syms, c in words:
-                for i in range(len(syms) - 1):
-                    pc[(syms[i], syms[i + 1])] += c
-            if not pc:
-                break
-            window = sorted(pc.items(),
-                            key=lambda kv: (-kv[1], kv[0]))[:4 * m]
-            accepted = select_compatible_merges(
-                [(a, b, cnt) for (a, b), cnt in window], want)
-            for a, b, cnt in accepted:
-                merges.append((len(merges) + 1, a, b, cnt))
-                for idx, (syms, c) in enumerate(words):
-                    words[idx] = (_bpe_apply_py(syms, a, b), c)
-        _cache[key] = merges
-    return _cache[key]
-
-
-def bpe_merges_sql(n_merges: int = 10, pairs_per_pass: int = 1) -> str:
-    """Golden-model oracle for pipeline.text.bpe_train, emitted as
-    VALUES."""
-    def sq(s: str) -> str:
-        return "'" + s.replace("'", "''") + "'"
-
-    vals = ", ".join(f"({r}, {sq(a)}, {sq(b)}, {c})"
-                     for r, a, b, c in _bpe_merges_py(n_merges,
-                                                      pairs_per_pass))
-    return f"""
-  SELECT CAST(rank AS INTEGER) AS rank, "left", "right",
-         CAST(freq AS BIGINT) AS freq
-  FROM (VALUES {vals}) t(rank, "left", "right", freq)
-"""
-
-
-def bpe_encode_sql(n_merges: int = 12) -> str:
-    """Golden-model oracle for pipeline.text.bpe_encode_lengths: train the
-    same merge table, encode every word greedily in rank order, and emit
-    per-document (n_words, n_tokens) as VALUES."""
-    import re
-
-    merges = [(a, b) for _, a, b, _ in _bpe_merges_py(n_merges)]
-    enc_len: dict = {}
-
-    def wlen(w: str) -> int:
-        if w not in enc_len:
-            syms = list(w)
-            for a, b in merges:
-                syms = _bpe_apply_py(syms, a, b)
-            enc_len[w] = len(syms)
-        return enc_len[w]
-
-    rows = []
-    for doc_id, text in _docs(ORACLE_SF_DIR):
-        ws = [w for w in re.split(r"[ \t\n\x0b\f\r]+", text.lower()) if w]
-        if ws:
-            rows.append((doc_id, len(ws), sum(wlen(w) for w in ws)))
-    vals = ", ".join(f"({d}, {nw}, {nt})" for d, nw, nt in rows)
-    return f"""
-  SELECT CAST(doc_id AS BIGINT) AS doc_id,
-         CAST(n_words AS BIGINT) AS n_words,
-         CAST(n_tokens AS BIGINT) AS n_tokens
-  FROM (VALUES {vals}) t(doc_id, n_words, n_tokens)
-"""
-
-
-def semantic_dedup_sql(sf_dir: str = ORACLE_SF_DIR, n_lists: int = 16,
-                       threshold: float = 0.4) -> str:
-    """SemDeDup restated in SQL: ann_ivf_sql's centroid/assignment CTEs,
-    a within-list self-join for above-threshold pairs, and the min-id
-    survivor rule as a distinct + left join."""
-    cents = ",".join(f"({v})" for v in ivf_centroid_ids(sf_dir, n_lists))
-    return f"""
-  WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb
-             FROM embeddings),
-  cents AS (SELECT e.vec_id AS list_id, e.emb AS c_emb
-            FROM e JOIN (VALUES {cents}) c(vec_id) USING (vec_id)),
-  assign AS (
-    SELECT vec_id, list_id FROM (
-      SELECT e.vec_id, c.list_id,
-             row_number() OVER (PARTITION BY e.vec_id
-               ORDER BY round(list_cosine_similarity(e.emb, c.c_emb), 6)
-                        DESC, c.list_id) AS rn
-      FROM e, cents c) WHERE rn = 1),
-  p AS (
-    SELECT b.vec_id AS vb
-    FROM assign a
-    JOIN assign b ON a.list_id = b.list_id AND a.vec_id < b.vec_id
-    JOIN e ea ON ea.vec_id = a.vec_id
-    JOIN e eb ON eb.vec_id = b.vec_id
-    WHERE round(list_cosine_similarity(ea.emb, eb.emb), 6)
-          >= {threshold}),
-  drops AS (SELECT DISTINCT vb AS vec_id FROM p)
-  SELECT a.vec_id, a.list_id, (d.vec_id IS NULL) AS keep
-  FROM assign a LEFT JOIN drops d USING (vec_id)
-"""
-
-
-def ann_ivf_pq_sql(sf_dir: str = ORACLE_SF_DIR, k: int = 5,
-                   n_lists: int = 16, nprobe: int = 4, m_sub: int = 4,
-                   k_cent: int = 16, dim: int = 64) -> str:
-    """IVF×PQ restated in SQL: ann_ivf_sql's coarse assignment/probe CTEs
-    composed with ann_pq_sql's encode/distance-table CTEs — candidates
-    come only from probed lists, scored by the ADC table-lookup sum."""
-    d_sub = dim // m_sub
-    cents = ",".join(f"({v})" for v in ivf_centroid_ids(sf_dir, n_lists))
-    ids = ivf_centroid_ids(sf_dir, k_cent)
-    cbv = ", ".join(f"({c}, {v})" for c, v in enumerate(ids))
-
-    def d2(a: str, b: str) -> str:
-        return (f"round(list_sum(list_transform(range(1, {d_sub + 1}), "
-                f"i -> ({a}[s.j * {d_sub} + i]"
-                f" - {b}[s.j * {d_sub} + i]) ^ 2)), 6)")
-
-    return f"""
-  WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb
-             FROM embeddings),
-  cents AS (SELECT e.vec_id AS list_id, e.emb AS c_emb
-            FROM e JOIN (VALUES {cents}) c(vec_id) USING (vec_id)),
-  assign AS (
-    SELECT vec_id, list_id FROM (
-      SELECT e.vec_id, c.list_id,
-             row_number() OVER (PARTITION BY e.vec_id
-               ORDER BY round(list_cosine_similarity(e.emb, c.c_emb), 6)
-                        DESC, c.list_id) AS rn
-      FROM e, cents c) WHERE rn = 1),
-  cbv(code, vec_id) AS (VALUES {cbv}),
-  cb AS (SELECT cbv.code, e.emb AS cemb FROM cbv JOIN e USING (vec_id)),
-  subs AS (SELECT unnest(range(0, {m_sub})) AS j),
-  enc AS (
-    SELECT vec_id, j, code FROM (
-      SELECT e.vec_id, s.j, cb.code,
-             row_number() OVER (PARTITION BY e.vec_id, s.j ORDER BY
-               {d2('e.emb', 'cb.cemb')},
-               cb.code) AS rn
-      FROM e, subs s, cb) WHERE rn = 1),
-  q AS (SELECT vec_id AS query_id, emb AS qemb FROM e WHERE vec_id < 8),
-  probes AS (
-    SELECT query_id, list_id FROM (
-      SELECT q.query_id, c.list_id,
-             row_number() OVER (PARTITION BY q.query_id
-               ORDER BY round(list_cosine_similarity(q.qemb, c.c_emb), 6)
-                        DESC, c.list_id) AS rn
-      FROM q, cents c) WHERE rn <= {nprobe}),
-  qtab AS (
-    SELECT q.query_id, s.j, cb.code,
-           {d2('q.qemb', 'cb.cemb')} AS d2
-    FROM q, subs s, cb),
-  scored AS (
-    SELECT t.query_id, c.vec_id, round(sum(t.d2), 6) AS adist
-    FROM probes p
-    JOIN assign a ON a.list_id = p.list_id
-    JOIN enc c ON c.vec_id = a.vec_id
-    JOIN qtab t ON t.query_id = p.query_id
-              AND t.j = c.j AND t.code = c.code
-    WHERE c.vec_id <> p.query_id
-    GROUP BY t.query_id, c.vec_id)
-  SELECT query_id, vec_id, adist, CAST(rank AS INTEGER) AS rank
-  FROM (SELECT *, row_number() OVER (
-          PARTITION BY query_id ORDER BY adist, vec_id) AS rank
-        FROM scored)
-  WHERE rank <= {k}
-"""
-
-
-def ann_pq_sql(sf_dir: str = ORACLE_SF_DIR, k: int = 5, m_sub: int = 4,
-               k_cent: int = 16, dim: int = 64) -> str:
-    """PQ/ADC top-k restated in SQL. Codebook vec_ids come from the XXH64
-    mirror (the same deterministic sample order as IVF centroids); DuckDB
-    independently re-derives subspace codes (argmin on 1e-6-rounded
-    squared L2, ties to the lowest code), the per-query distance tables,
-    and the table-lookup sums."""
-    d_sub = dim // m_sub
-    ids = ivf_centroid_ids(sf_dir, k_cent)
-    cbv = ", ".join(f"({c}, {v})" for c, v in enumerate(ids))
-    def d2(a: str, b: str) -> str:
-        return (f"round(list_sum(list_transform(range(1, {d_sub + 1}), "
-                f"i -> ({a}[s.j * {d_sub} + i]"
-                f" - {b}[s.j * {d_sub} + i]) ^ 2)), 6)")
-    return f"""
-  WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb
-             FROM embeddings),
-  cbv(code, vec_id) AS (VALUES {cbv}),
-  cb AS (SELECT cbv.code, e.emb AS cemb FROM cbv JOIN e USING (vec_id)),
-  subs AS (SELECT unnest(range(0, {m_sub})) AS j),
-  enc AS (
-    SELECT vec_id, j, code FROM (
-      SELECT e.vec_id, s.j, cb.code,
-             row_number() OVER (PARTITION BY e.vec_id, s.j ORDER BY
-               {d2('e.emb', 'cb.cemb')},
-               cb.code) AS rn
-      FROM e, subs s, cb) WHERE rn = 1),
-  q AS (SELECT vec_id AS query_id, emb AS qemb FROM e WHERE vec_id < 8),
-  qtab AS (
-    SELECT q.query_id, s.j, cb.code,
-           {d2('q.qemb', 'cb.cemb')} AS d2
-    FROM q, subs s, cb),
-  scored AS (
-    SELECT t.query_id, c.vec_id, round(sum(t.d2), 6) AS adist
-    FROM enc c JOIN qtab t ON t.j = c.j AND t.code = c.code
-    WHERE c.vec_id <> t.query_id
-    GROUP BY t.query_id, c.vec_id)
-  SELECT query_id, vec_id, adist, CAST(rank AS INTEGER) AS rank
-  FROM (SELECT *, row_number() OVER (
-          PARTITION BY query_id ORDER BY adist, vec_id) AS rank
-        FROM scored)
-  WHERE rank <= {k}
-"""
-
-
-# -- sketch-and-sample mirrors (pipeline/sketches.py) ------------------------
-
-def _docs_src(sf_dir: str) -> list[tuple[int, str, str]]:
-    key = ("docs_src", sf_dir)
-    if key not in _cache:
-        import pyarrow.parquet as pq
-
-        t = pq.read_table(os.path.join(sf_dir, "documents.parquet"),
-                          columns=["doc_id", "source", "text"])
-        _cache[key] = list(zip(t.column("doc_id").to_pylist(),
-                               t.column("source").to_pylist(),
-                               t.column("text").to_pylist()))
-    return _cache[key]
-
-
-def _sql_str(s: str) -> str:
-    return "'" + s.replace("'", "''") + "'"
-
-
-def hll_distinct_sql(sf_dir: str = ORACLE_SF_DIR, n: int = 3, p: int = 8,
-                     cap: int = 40) -> str:
-    """Mirror of pipeline.sketches.hll_distinct: the hash-dependent
-    register inputs (bucket, rho) for every distinct (source, n-gram)
-    are recomputed with the Python XXH64 mirror and embedded as VALUES;
-    DuckDB independently re-derives the max-per-bucket registers, the
-    integer harmonic sum, the bias/linear-counting estimate AND the
-    exact distinct count straight from the text."""
-    from .functions.xxh64 import xxhash64
-
-    m = 1 << p
-    alpha_m2 = (0.7213 / (1.0 + 1.079 / m)) * m * m
-    rows = set()
-    for _, src, text in _docs_src(sf_dir):
-        toks = _tokens(text)
-        if len(toks) < n:
-            continue
-        for i in range(len(toks) - n + 1):
-            g = " ".join(toks[i:i + n])
-            h = xxhash64(g) & 0xFFFFFFFFFFFFFFFF
-            bucket = h & (m - 1)
-            w = h >> p
-            rho = (64 - p) + 1 if w == 0 else (64 - p) - w.bit_length() + 1
-            rows.add((src, bucket, min(rho, cap)))
-    vals = ", ".join(f"({_sql_str(s)}, {b}, {r})"
-                     for s, b, r in sorted(rows))
-    big = 1 << cap
-    return f"""
-  WITH hv(source, bucket, rho) AS (VALUES {vals}),
-  regs AS (
-    SELECT source, bucket, max(rho) AS reg FROM hv GROUP BY source, bucket),
-  agg AS (
-    SELECT source, count(*) AS present,
-           CAST(sum(CAST(pow(2.0, {cap} - reg) AS BIGINT)) AS BIGINT)
-             AS s_int
-    FROM regs GROUP BY source),
-  est0 AS (
-    SELECT source,
-           ({m} - present) AS zeros,
-           {alpha_m2!r} / (CAST(s_int + ({m} - present)
-                                * CAST({big} AS BIGINT) AS DOUBLE)
-                           / {float(big)!r}) AS e_raw
-    FROM agg),
-  sk AS (
-    SELECT source,
-           round(CASE WHEN e_raw <= {2.5 * m!r} AND zeros > 0
-                      THEN {float(m)!r}
-                           * ln({float(m)!r} / CAST(zeros AS DOUBLE))
-                      ELSE e_raw END, 6) AS hll_estimate
-    FROM est0),
-  toks AS (
-    SELECT source, string_split_regex(trim(lower(text)), '[ \\t\\n\\r\\f\\x0B]+') AS t
-    FROM documents),
-  g0 AS (
-    SELECT source, array_to_string(t[i:i+{n - 1}], ' ') AS gram
-    FROM toks, UNNEST(range(1, len(t) - {n - 2})) AS u(i)
-    WHERE len(t) >= {n}),
-  ex AS (
-    SELECT source, count(DISTINCT gram) AS exact_distinct
-    FROM g0 GROUP BY source)
-  SELECT ex.source, ex.exact_distinct, sk.hll_estimate,
-         round((sk.hll_estimate - CAST(ex.exact_distinct AS DOUBLE))
-               / CAST(ex.exact_distinct AS DOUBLE), 6) AS rel_error
-  FROM ex JOIN sk USING (source)
-"""
-
-
-def cms_heavy_hitters_sql(sf_dir: str = ORACLE_SF_DIR, d: int = 4,
-                          w: int = 16, k: int = 20) -> str:
-    """Mirror of pipeline.sketches.cms_heavy_hitters: the d per-token
-    column indices pmod(xxhash64(token, r), w) come from the XXH64
-    mirror as VALUES; DuckDB independently rebuilds the additive
-    sketch grid, the exact frequency table, the top-k candidate list
-    and the min-over-rows point estimates."""
-    from .functions.xxh64 import xxhash64
-
-    toks = set()
-    for _, _, text in _docs_src(sf_dir):
-        toks.update(t for t in _tokens(text) if t != "")
-    vals = ", ".join(
-        "(" + _sql_str(t) + ", "
-        + ", ".join(str(xxhash64(t, r) % w) for r in range(d)) + ")"
-        for t in sorted(toks))
-    cols = ", ".join(f"c{r}" for r in range(d))
-    case = " ".join(f"WHEN {r} THEN th.c{r}" for r in range(d))
-    return f"""
-  WITH th(token, {cols}) AS (VALUES {vals}),
-  tok0 AS (
-    SELECT unnest(string_split_regex(trim(lower(text)), '[ \\t\\n\\r\\f\\x0B]+')) AS token
-    FROM documents),
-  tf AS (
-    SELECT token, count(*) AS exact_count
-    FROM tok0 WHERE token <> '' GROUP BY token),
-  hashed AS (
-    SELECT tf.token, tf.exact_count, u.r,
-           CASE u.r {case} END AS col
-    FROM tf JOIN th USING (token), UNNEST(range(0, {d})) AS u(r)),
-  sketch AS (
-    SELECT r, col, CAST(sum(exact_count) AS BIGINT) AS cell
-    FROM hashed GROUP BY r, col),
-  cand AS (
-    SELECT token, exact_count FROM tf
-    ORDER BY exact_count DESC, token LIMIT {k}),
-  probe AS (
-    SELECT c.token, c.exact_count, h.r, h.col
-    FROM cand c JOIN hashed h USING (token, exact_count))
-  SELECT p.token, p.exact_count, min(s.cell) AS cms_estimate,
-         min(s.cell) - p.exact_count AS overestimate
-  FROM probe p JOIN sketch s USING (r, col)
-  GROUP BY p.token, p.exact_count
-"""
-
-
-def weighted_reservoir_sql(k: int = 8, denom: int = 1 << 30) -> str:
-    """Mirror of pipeline.sketches.weighted_reservoir: the per-doc hash
-    rank input pmod(xxhash64(doc_id), denom) is mirrored as VALUES
-    (shared doc_hash_values generator); DuckDB re-derives the uniform,
-    the ln(u)/weight key (quantized to 1e-9, the cross-engine ranking
-    contract) and the per-source top-k window."""
-    vals = doc_hash_values(denom)
-    return f"""
-  WITH h(doc_id, hk) AS (VALUES {vals}),
-  keyed AS (
-    SELECT d.source, d.doc_id, d.n_chars AS weight,
-           round(ln((h.hk + 1) / {float(denom)!r})
-                 / CAST(d.n_chars AS DOUBLE), 9) AS samp_key
-    FROM documents d JOIN h USING (doc_id)),
-  r AS (
-    SELECT *, row_number() OVER (PARTITION BY source
-                                 ORDER BY samp_key DESC, doc_id) AS rn
-    FROM keyed)
-  SELECT source, doc_id, weight, samp_key, CAST(rn AS INTEGER) AS wr_rank
-  FROM r WHERE rn <= {k}
-"""
-
-
-def hashed_classifier_sql(sf_dir: str = ORACLE_SF_DIR,
-                          n_buckets: int = 256) -> str:
-    """Mirror of pipeline.text.hashed_quality_classifier: both hash
-    families — the bucket weights pmod(xxhash64(b), 2001)-1000 and the
-    per-token feature buckets pmod(xxhash64(token), B) — come from the
-    XXH64 mirror as VALUES; DuckDB re-derives the integer score sum,
-    the logit, the sigmoid and the keep threshold."""
-    from .functions.xxh64 import xxhash64
-
-    wvals = ", ".join(f"({b}, {xxhash64(b) % 2001 - 1000})"
-                      for b in range(n_buckets))
-    toks = set()
-    for _, _, text in _docs_src(sf_dir):
-        toks.update(t for t in _tokens(text) if t != "")
-    tvals = ", ".join(f"({_sql_str(t)}, {xxhash64(t) % n_buckets})"
-                      for t in sorted(toks))
-    return f"""
-  WITH wt(bucket, w) AS (VALUES {wvals}),
-  tb(token, bucket) AS (VALUES {tvals}),
-  tok0 AS (
-    SELECT doc_id,
-           unnest(string_split_regex(trim(lower(text)), '[ \\t\\n\\r\\f\\x0B]+')) AS token
-    FROM documents),
-  scored AS (
-    SELECT t.doc_id, count(*) AS n_toks,
-           CAST(sum(wt.w) AS BIGINT) AS score_int
-    FROM tok0 t JOIN tb USING (token) JOIN wt USING (bucket)
-    WHERE t.token <> ''
-    GROUP BY t.doc_id)
-  SELECT doc_id, n_toks, score_int,
-         round(1.0 / (1.0 + exp(-(CAST(score_int AS DOUBLE)
-                                  / (250.0 * CAST(n_toks AS DOUBLE))))),
-               6) AS prob,
-         CASE WHEN score_int >= 0 THEN 1 ELSE 0 END AS keep
-  FROM scored
-"""
-
-
-def change_prediction_sql(frontier_sql: str, n_buckets: int = 128) -> str:
-    """Mirror of pipeline.recrawl.change_prediction: both hash families
-    — bucket weights pmod(xxhash64(b), 2001)-1000 and the feature→bucket
-    map pmod(xxhash64(feat), B) over the closed 36-string feature
-    vocabulary (20 hosts × 8 depths × 3 priorities × 5 retries per the
-    frontier fixture) — come from the XXH64 mirror as VALUES."""
-    from .functions.xxh64 import xxhash64
-
-    wvals = ", ".join(f"({b}, {xxhash64(b) % 2001 - 1000})"
-                      for b in range(n_buckets))
-    feats = ([f"host=h{i:04d}.example.com" for i in range(20)]
-             + [f"depth={d}" for d in range(8)]
-             + [f"prio={p}" for p in range(1, 4)]
-             + [f"retry={r}" for r in range(5)])
-    fvals = ", ".join(f"('{s}', {xxhash64(s) % n_buckets})" for s in feats)
-    return f"""
-  WITH fr AS ({frontier_sql}),
-  wt(bucket, w) AS (VALUES {wvals}),
-  fb(feat, bucket) AS (VALUES {fvals}),
-  f AS (
-    SELECT url, host,
-           unnest(['host=' || host,
-                   'depth=' || depth,
-                   'prio=' || priority,
-                   'retry=' || retry_count]) AS feat
-    FROM fr),
-  scored AS (
-    SELECT f.url, f.host, count(*) AS n_feats,
-           CAST(sum(wt.w) AS BIGINT) AS score_int
-    FROM f JOIN fb USING (feat) JOIN wt USING (bucket)
-    GROUP BY f.url, f.host)
-  SELECT url, host, score_int,
-         round(1.0 / (1.0 + exp(-(CAST(score_int AS DOUBLE)
-                                  / (250.0 * CAST(n_feats AS DOUBLE))))),
-               6) AS prob,
-         CASE WHEN score_int >= 0 THEN 1 ELSE 0 END AS predicted_hot
-  FROM scored
-"""
-
-
-def frontier_scoring_sql(k: int = 100, n_nodes: int = 32,
-                         iterations: int = 6, damping: float = 0.5) -> str:
-    """Full-chain mirror of pipeline.recrawl.frontier_scoring: the
-    unrolled PageRank CTE chain (shared with host_pagerank_sql), the
-    frontier URL synthesis, the template/trap aggregate and the scored
-    top-k are ALL restated relationally — no mirrored values. Score
-    arithmetic is mul/div only, so round(·, 9) is engine-exact."""
-    return f"""
-  WITH {_pagerank_ctes(n_nodes, iterations, damping)},
-  urls AS (
-    SELECT 'h' || lpad(CAST(o_custkey % 20 AS VARCHAR), 4, '0')
-             || '.example.com' AS host,
-           o_custkey % 20 AS node,
-           o_orderkey % 6 AS depth,
-           CASE
-             WHEN o_custkey % 20 >= 15 THEN
-               '/' || repeat(chr(97 + CAST(o_orderkey % 26 AS INTEGER)),
-                             CAST(1 + o_orderkey % 3 AS INTEGER))
-                   || '/detail'
-             WHEN o_orderkey % 2 = 0 THEN
-               '/p/' || CAST(o_orderkey AS VARCHAR)
-               || CASE WHEN o_orderkey % 5 = 0
-                       THEN '?sess=' || CAST(o_custkey AS VARCHAR)
-                       ELSE '' END
-             ELSE '/cat/' || CAST(o_orderkey % 7 AS VARCHAR)
-                  || '/item' || CAST(o_orderkey AS VARCHAR)
-           END AS path
-    FROM orders),
-  tpl AS (
-    SELECT host,
-           regexp_replace(regexp_replace(path, '\\?.*$', ''),
-                          '[0-9]+', 'N', 'g') AS template
-    FROM urls),
-  traps AS (
-    SELECT host,
-           CASE WHEN count(*) >= 100
-                     AND CAST(count(DISTINCT template) AS DOUBLE)
-                         / CAST(count(*) AS DOUBLE) < 0.05
-                THEN 1 ELSE 0 END AS is_trap
-    FROM tpl GROUP BY host),
-  scored AS (
-    SELECT 'https://' || u.host || u.path AS url, u.host, u.depth,
-           round(r.rank, 9) AS host_rank, t.is_trap,
-           round(r.rank
-                 * CASE WHEN t.is_trap = 1 THEN CAST('0.1' AS DOUBLE)
-                        ELSE CAST(1 AS DOUBLE) END
-                 / (CAST(1 AS DOUBLE) + CAST(u.depth AS DOUBLE)), 9)
-             AS score
-    FROM urls u
-    JOIN r{iterations} r ON r.node = u.node
-    JOIN traps t ON t.host = u.host)
-  SELECT url, host, depth, host_rank, is_trap, score
-  FROM scored ORDER BY score DESC, url LIMIT {k}
-"""
-
-
-def _irregular_edges_sql(n_nodes: int) -> str:
-    """Edge CTE body for the variable-degree HITS/BFS graph — mirrors
-    pipeline.graph.irregular_graph (keep edge (a,b) from src unless
-    (src + 3a + b) % 5 == 0)."""
-    from .pipeline.graph import HOST_EDGE_FNS
-
-    return "\n    UNION ALL ".join(
-        f"SELECT node AS src, (node * {a} + {b}) % {n_nodes} AS dst "
-        f"FROM nodes WHERE (node + {3 * a + b}) % 5 <> 0"
-        for a, b in HOST_EDGE_FNS)
-
-
-def hits_sql(n_nodes: int = 32, iterations: int = 4) -> str:
-    """Unrolled division-free HITS mirror: scores stay exact integer-
-    valued doubles through every iteration (see pipeline.graph.hits), so
-    summation order is irrelevant and the final max-normalized quotients
-    are engine-identical."""
-    ctes = [f"""nodes AS (
-    SELECT DISTINCT doc_id % {n_nodes} AS node FROM documents),
-  edges AS (
-    {_irregular_edges_sql(n_nodes)}),
-  h0 AS (SELECT node, CAST(1 AS DOUBLE) AS h FROM nodes)"""]
-    for k in range(iterations):
-        ctes.append(f"""a{k + 1} AS (
-    SELECT n.node, coalesce(s.v, CAST(0 AS DOUBLE)) AS a
-    FROM nodes n LEFT JOIN (
-      SELECT e.dst AS node, sum(h.h) AS v
-      FROM edges e JOIN h{k} h ON h.node = e.src
-      GROUP BY e.dst) s ON s.node = n.node)""")
-        ctes.append(f"""h{k + 1} AS (
-    SELECT n.node, coalesce(s.v, CAST(0 AS DOUBLE)) AS h
-    FROM nodes n LEFT JOIN (
-      SELECT e.src AS node, sum(a.a) AS v
-      FROM edges e JOIN a{k + 1} a ON a.node = e.dst
-      GROUP BY e.src) s ON s.node = n.node)""")
-    joined = ",\n  ".join(ctes)
-    return f"""
-  WITH {joined},
-  sc AS (SELECT a.node, a.a, h.h
-         FROM a{iterations} a JOIN h{iterations} h ON h.node = a.node),
-  mx AS (SELECT max(a) AS a_max, max(h) AS h_max FROM sc)
-  SELECT sc.node, round(sc.a / mx.a_max, 6) AS authority,
-         round(sc.h / mx.h_max, 6) AS hub
-  FROM sc, mx
-"""
-
-
-def seed_distance_sql(n_nodes: int = 32, seed_mod: int = 8,
-                      iterations: int = 6) -> str:
-    """Unrolled min-plus BFS mirror over the irregular graph — pure
-    integer arithmetic, bit-exact. least()/min() skip NULLs identically
-    in both engines (property-tested in tests/test_graph_ops.py)."""
-    ctes = [f"""nodes AS (
-    SELECT DISTINCT doc_id % {n_nodes} AS node FROM documents),
-  edges AS (
-    {_irregular_edges_sql(n_nodes)}),
-  d0 AS (SELECT node,
-                CASE WHEN node % {seed_mod} = 0 THEN 0 ELSE NULL END
-                  AS dist
-         FROM nodes)"""]
-    for k in range(iterations):
-        ctes.append(f"""d{k + 1} AS (
-    SELECT n.node, least(p.dist, s.di) AS dist
-    FROM nodes n
-    JOIN d{k} p ON p.node = n.node
-    LEFT JOIN (
-      SELECT e.dst AS node, min(d.dist + 1) AS di
-      FROM edges e JOIN d{k} d ON d.node = e.src
-      WHERE d.dist IS NOT NULL
-      GROUP BY e.dst) s ON s.node = n.node)""")
-    joined = ",\n  ".join(ctes)
-    return f"""
-  WITH {joined}
-  SELECT node, CAST(coalesce(dist, -1) AS INTEGER) AS dist
-  FROM d{iterations}
-"""
-
-
-def degree_stats_sql(n_nodes: int = 32) -> str:
-    """Mirror of pipeline.graph.degree_stats over the irregular graph —
-    INTERSECT carries the same set semantics as the engine's
-    edges.intersect(reversed) reciprocity probe."""
-    return f"""
-  WITH nodes AS (
-    SELECT DISTINCT doc_id % {n_nodes} AS node FROM documents),
-  edges AS (
-    {_irregular_edges_sql(n_nodes)}),
-  o AS (SELECT src AS node, CAST(count(*) AS BIGINT) AS out_deg
-        FROM edges GROUP BY src),
-  i AS (SELECT dst AS node, CAST(count(*) AS BIGINT) AS in_deg
-        FROM edges GROUP BY dst),
-  r AS (SELECT src AS node, CAST(count(*) AS BIGINT) AS reciprocal
-        FROM (SELECT src, dst FROM edges
-              INTERSECT
-              SELECT dst AS src, src AS dst FROM edges)
-        GROUP BY src)
-  SELECT n.node,
-         coalesce(o.out_deg, 0) AS out_deg,
-         coalesce(i.in_deg, 0) AS in_deg,
-         coalesce(r.reciprocal, 0) AS reciprocal
-  FROM nodes n
-  LEFT JOIN o ON o.node = n.node
-  LEFT JOIN i ON i.node = n.node
-  LEFT JOIN r ON r.node = n.node
-"""
-
-
-def two_hop_reach_sql(n_nodes: int = 32) -> str:
-    """Mirror of pipeline.graph.two_hop_reach over the irregular graph."""
-    return f"""
-  WITH nodes AS (
-    SELECT DISTINCT doc_id % {n_nodes} AS node FROM documents),
-  edges AS (
-    {_irregular_edges_sql(n_nodes)}),
-  h2 AS (SELECT a.src, b.dst
-         FROM edges a JOIN edges b ON a.dst = b.src),
-  rch AS (
-    SELECT src AS node, CAST(count(*) AS BIGINT) AS reach
-    FROM (SELECT DISTINCT src, dst FROM (
-            SELECT src, dst FROM edges
-            UNION ALL
-            SELECT src, dst FROM h2)
-          WHERE src <> dst)
-    GROUP BY src)
-  SELECT n.node, coalesce(rch.reach, 0) AS reach
-  FROM nodes n LEFT JOIN rch ON rch.node = n.node
-"""
-
-
-def triangle_counts_sql(n_nodes: int = 32) -> str:
-    """Mirror of pipeline.graph.triangle_counts — enumerates the same
-    (orientation-invariant) triangle set under plain node-id ordering
-    a < b < c instead of the engine's degree ordering."""
-    return f"""
-  WITH nodes AS (
-    SELECT DISTINCT doc_id % {n_nodes} AS node FROM documents),
-  edges AS (
-    {_irregular_edges_sql(n_nodes)}),
-  und AS (
-    SELECT DISTINCT least(src, dst) AS u, greatest(src, dst) AS v
-    FROM edges WHERE src <> dst),
-  tri AS (
-    SELECT e1.u AS a, e1.v AS b, e2.v AS c
-    FROM und e1
-    JOIN und e2 ON e2.u = e1.v
-    JOIN und e3 ON e3.u = e1.u AND e3.v = e2.v),
-  cnt AS (
-    SELECT node, CAST(count(*) AS BIGINT) AS triangles
-    FROM (SELECT a AS node FROM tri
-          UNION ALL SELECT b FROM tri
-          UNION ALL SELECT c FROM tri)
-    GROUP BY node)
-  SELECT n.node, coalesce(c.triangles, 0) AS triangles
-  FROM nodes n LEFT JOIN cnt c ON c.node = n.node
-"""
-
-
-def degree_histogram_sql(n_nodes: int = 32) -> str:
-    """Mirror of pipeline.graph.degree_histogram — identical integer
-    length(bin(deg)) - 1 bucketing."""
-    return f"""
-  WITH nodes AS (
-    SELECT DISTINCT doc_id % {n_nodes} AS node FROM documents),
-  edges AS (
-    {_irregular_edges_sql(n_nodes)}),
-  o AS (SELECT src AS node, count(*) AS out_deg FROM edges GROUP BY src),
-  i AS (SELECT dst AS node, count(*) AS in_deg FROM edges GROUP BY dst),
-  degs AS (
-    SELECT n.node, coalesce(o.out_deg, 0) AS out_deg,
-           coalesce(i.in_deg, 0) AS in_deg
-    FROM nodes n
-    LEFT JOIN o ON o.node = n.node
-    LEFT JOIN i ON i.node = n.node),
-  rows_ AS (
-    SELECT 'out' AS direction, out_deg AS deg FROM degs
-    UNION ALL SELECT 'in', in_deg FROM degs)
-  SELECT direction,
-         CAST(CASE WHEN deg = 0 THEN -1
-                   ELSE length(bin(deg)) - 1 END AS INTEGER) AS bucket,
-         CAST(count(*) AS BIGINT) AS n_nodes
-  FROM rows_ GROUP BY direction, bucket
-"""
-
-
-def redirect_resolve_sql(max_hops: int = 8) -> str:
-    """Independent resolution of the synthetic redirect map: DuckDB walks
-    the chains one hop at a time with a recursive CTE (bounded at
-    max_hops), while the engine resolves by pointer doubling — same
-    fixpoint, different algorithm, so a doubling bug cannot hide."""
-    u = "printf('http://h%03d.example.com/r/%d', {c} % 50, {c})"
-    return f"""
-  WITH RECURSIVE succ AS (
-    SELECT CAST(doc_id AS BIGINT) AS d,
-           CAST(CASE WHEN doc_id % 128 = 32 THEN doc_id + 64
-                     WHEN doc_id % 128 = 96 THEN doc_id - 64
-                     WHEN doc_id % 2 = 1 THEN doc_id - 1
-                     WHEN doc_id % 4 = 2 THEN doc_id - 2
-                     WHEN doc_id % 8 = 4 THEN doc_id - 4
-                     WHEN doc_id % 16 = 8 THEN doc_id - 8
-                END AS BIGINT) AS nxt
-    FROM documents),
-  edges AS (SELECT d, nxt FROM succ WHERE nxt IS NOT NULL),
-  walk(src, cur, hops) AS (
-    SELECT d, nxt, 1 FROM edges
-    UNION ALL
-    SELECT w.src, e.nxt, w.hops + 1
-    FROM walk w JOIN edges e ON e.d = w.cur
-    WHERE w.hops < {max_hops}),
-  last AS (
-    SELECT src, cur, hops FROM walk
-    QUALIFY row_number() OVER (PARTITION BY src ORDER BY hops DESC) = 1)
-  SELECT {u.format(c='l.src')} AS url,
-         {u.format(c='l.cur')} AS final_url,
-         CAST(l.hops AS BIGINT) AS hops,
-         (e2.d IS NOT NULL) AS capped
-  FROM last l LEFT JOIN edges e2 ON e2.d = l.cur
-"""
-
-
 def aspect_bucket_sql(n: int = 128, dup_mod: int = 96,
                       batch_size: int = 4, n_shards: int = 4) -> str:
     """Aspect-bucket batch layout: (w, h) per image from the codec mirror
@@ -2396,7 +578,7 @@ def aspect_bucket_sql(n: int = 128, dup_mod: int = 96,
     recomputed independently by DuckDB."""
     from .functions.xxh64 import xxhash64
 
-    ids = sorted(d for d, _ in _docs(ORACLE_SF_DIR))[:n]
+    ids = _first_doc_ids(n)
     rows = []
     for d in ids:
         g = _image_group(int(d) % dup_mod, dup_mod)
@@ -2426,288 +608,4 @@ def aspect_bucket_sql(n: int = 128, dup_mod: int = 96,
          CAST((r - 1) // {batch_size} AS BIGINT) AS batch_id
   FROM rn
   WHERE (r - 1) // {batch_size} < n // {batch_size}
-"""
-
-
-def ann_recall_sql(sf_dir: str = ORACLE_SF_DIR, k: int = 5,
-                   n_lists: int = 16, nprobe: int = 4,
-                   n_queries: int = 8) -> str:
-    """Recall@k of the IVF tier vs brute-force ground truth, with BOTH
-    retrievals recomputed independently by DuckDB (brute as in ann_topk,
-    IVF as in ann_ivf_sql) and intersected relationally."""
-    cents = ",".join(f"({v})" for v in ivf_centroid_ids(sf_dir, n_lists))
-    return f"""
-  WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb
-             FROM embeddings),
-  q AS (SELECT vec_id AS query_id, emb AS q_emb FROM e
-        WHERE vec_id < {n_queries}),
-  bscored AS (
-    SELECT query_id, vec_id,
-           round(list_cosine_similarity(q_emb, emb), 6) AS cosine
-    FROM q JOIN e ON vec_id <> query_id),
-  btop AS (
-    SELECT query_id, vec_id FROM (
-      SELECT *, row_number() OVER (
-        PARTITION BY query_id ORDER BY cosine DESC, vec_id) AS rn
-      FROM bscored) WHERE rn <= {k}),
-  cents AS (SELECT e.vec_id AS list_id, e.emb AS c_emb
-            FROM e JOIN (VALUES {cents}) c(vec_id) USING (vec_id)),
-  assign AS (
-    SELECT vec_id, list_id FROM (
-      SELECT e.vec_id, c.list_id,
-             row_number() OVER (PARTITION BY e.vec_id
-               ORDER BY round(list_cosine_similarity(e.emb, c.c_emb), 6)
-                        DESC, c.list_id) AS rn
-      FROM e, cents c) WHERE rn = 1),
-  probes AS (
-    SELECT query_id, q_emb, list_id FROM (
-      SELECT q.query_id, q.q_emb, c.list_id,
-             row_number() OVER (PARTITION BY q.query_id
-               ORDER BY round(list_cosine_similarity(q.q_emb, c.c_emb), 6)
-                        DESC, c.list_id) AS rn
-      FROM q, cents c) WHERE rn <= {nprobe}),
-  iscored AS (
-    SELECT p.query_id, a.vec_id,
-           round(list_cosine_similarity(p.q_emb, e.emb), 6) AS cosine
-    FROM probes p
-    JOIN assign a ON a.list_id = p.list_id AND a.vec_id <> p.query_id
-    JOIN e ON e.vec_id = a.vec_id),
-  itop AS (
-    SELECT query_id, vec_id FROM (
-      SELECT *, row_number() OVER (
-        PARTITION BY query_id ORDER BY cosine DESC, vec_id) AS rn
-      FROM iscored) WHERE rn <= {k}),
-  hits AS (
-    SELECT b.query_id, count(*) AS n
-    FROM btop b JOIN itop i USING (query_id, vec_id)
-    GROUP BY 1)
-  SELECT q.query_id,
-         CAST(coalesce(h.n, 0) AS BIGINT) AS n_hits,
-         coalesce(h.n, 0) / {float(k)} AS recall
-  FROM q LEFT JOIN hits h USING (query_id)
-"""
-
-
-# -- content-defined chunking mirror ----------------------------------------
-
-def _cdc_spans_py(text: str, min_len: int, max_len: int,
-                  mask: int) -> list:
-    """Standalone gear-hash boundary walk (independent restatement of
-    pipeline/dedup.cdc_boundaries for the oracle side)."""
-    spans, start, h, i = [], 0, 0, 0
-    n = len(text)
-    while i < n:
-        h = ((h * 2) + ord(text[i]) * 2654435761) % (1 << 32)
-        if (i - start + 1 >= min_len and h % (mask + 1) == 0) \
-                or i - start + 1 >= max_len:
-            spans.append((start, i - start + 1))
-            start, h = i + 1, 0
-        i += 1
-    if start < n:
-        spans.append((start, n - start))
-    return spans
-
-
-def cdc_chunk_sql(sf_dir: str = ORACLE_SF_DIR, min_len: int = 8,
-                  max_len: int = 48, mask: int = 0x1F) -> str:
-    """VALUES = the mirrored (doc_id, start, length) spans; chunk text
-    extraction, md5 and the dedup rollup are recomputed relationally."""
-    rows = ",".join(
-        f"({d},{s},{ln})"
-        for d, t in _docs(sf_dir)
-        for s, ln in _cdc_spans_py(t, min_len, max_len, mask))
-    return f"""
-  WITH spans(doc_id, s, ln) AS (VALUES {rows}),
-  chunks AS (
-    SELECT sp.doc_id, sp.ln AS length,
-           md5(substring(d.text, CAST(sp.s + 1 AS INTEGER),
-                         CAST(sp.ln AS INTEGER))) AS chunk_hash
-    FROM spans sp JOIN documents d ON d.doc_id = sp.doc_id)
-  SELECT chunk_hash, CAST(any_value(length) AS BIGINT) AS chunk_len,
-         CAST(count(*) AS BIGINT) AS n_copies,
-         CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs
-  FROM chunks GROUP BY chunk_hash
-"""
-
-
-def span_corruption_sql(span_len: int = 3, block: int = 16,
-                        sf_dir: str = ORACLE_SF_DIR) -> str:
-    """Mirror of pipeline.text.span_corruption: the hash-derived mask
-    starts (pmod(xxhash64(doc_id, blk), width) + blk*block + 1, full
-    blocks only) are recomputed with the XXH64 mirror and embedded as
-    VALUES; the token explode, masking and sequence reassembly are
-    restated relationally."""
-    from .functions.xxh64 import xxhash64
-
-    width = block - span_len + 1
-    rows = []
-    for d, text in _docs(sf_dir):
-        n = len(text.strip().split())
-        for b in range(n // block):
-            s = xxhash64(int(d), int(b)) % width + b * block + 1
-            rows.append((int(d), b, s))
-    vals = ", ".join(f"({d},{b},{s})" for d, b, s in rows)
-    if not vals:
-        vals = "(NULL, NULL, NULL)"
-    return f"""
-  WITH starts(doc_id, blk, s) AS (VALUES {vals}),
-  dt AS (SELECT doc_id, string_split_regex(trim(text), '[ \\t\\n\\r\\f\\x0B]+') AS t
-         FROM documents),
-  tok AS (SELECT doc_id, i AS tpos, t[i] AS tok, len(t) AS n
-          FROM dt, UNNEST(range(1, len(t) + 1)) AS u(i)),
-  fl AS (
-    SELECT k.doc_id, k.tpos, k.tok, k.n,
-           (k.tpos - 1) // {block} AS blk, s.s AS s
-    FROM tok k LEFT JOIN starts s
-      ON s.doc_id = k.doc_id AND s.blk = (k.tpos - 1) // {block}),
-  pieces AS (
-    SELECT doc_id, tpos, n,
-      CASE WHEN s IS NOT NULL AND tpos = s
-             THEN '<extra_id_' || CAST(blk AS VARCHAR) || '>'
-           WHEN s IS NOT NULL AND tpos >= s AND tpos < s + {span_len}
-             THEN NULL
-           ELSE tok END AS ip,
-      CASE WHEN s IS NOT NULL AND tpos = s
-             THEN '<extra_id_' || CAST(blk AS VARCHAR) || '> ' || tok
-           WHEN s IS NOT NULL AND tpos >= s AND tpos < s + {span_len}
-             THEN tok END AS gp,
-      CASE WHEN s IS NOT NULL AND tpos >= s AND tpos < s + {span_len}
-             THEN 1 ELSE 0 END AS m
-    FROM fl)
-  SELECT doc_id,
-         coalesce(string_agg(ip, ' ' ORDER BY tpos), '') AS input_text,
-         coalesce(string_agg(gp, ' ' ORDER BY tpos), '') AS target_text,
-         CAST(max(n) AS BIGINT) AS n_tokens,
-         CAST(sum(m) AS BIGINT) AS n_masked
-  FROM pieces GROUP BY doc_id
-"""
-
-
-def fim_transform_sql(rate_denom: int = 2,
-                      sf_dir: str = ORACLE_SF_DIR) -> str:
-    """Mirror of pipeline.text.fim_transform: the hash decisions
-    (applied flag + ordered cut points) come from the XXH64 mirror as
-    VALUES; the PSM reordering is restated with DuckDB list slicing."""
-    from .functions.xxh64 import xxhash64
-
-    rows = []
-    for d, text in _docs(sf_dir):
-        n = len(text.strip().split())
-        applied = xxhash64(int(d)) % rate_denom == 0
-        c1 = xxhash64(int(d), 1) % (n + 1)
-        c2 = xxhash64(int(d), 2) % (n + 1)
-        lo, hi = min(c1, c2), max(c1, c2)
-        rows.append((int(d), "TRUE" if applied else "FALSE", lo, hi))
-    vals = ", ".join(f"({d},{a},{lo},{hi})" for d, a, lo, hi in rows)
-    return f"""
-  WITH cuts(doc_id, applied, lo, hi) AS (VALUES {vals}),
-  dt AS (SELECT doc_id, text,
-                string_split_regex(trim(text), '[ \\t\\n\\r\\f\\x0B]+') AS t
-         FROM documents)
-  SELECT d.doc_id, c.applied AS fim_applied,
-    CASE WHEN c.applied THEN
-      '<fim_prefix> ' || coalesce(array_to_string(d.t[1:c.lo], ' '), '')
-      || ' <fim_suffix> '
-      || coalesce(array_to_string(d.t[c.hi + 1:len(d.t)], ' '), '')
-      || ' <fim_middle> '
-      || coalesce(array_to_string(d.t[c.lo + 1:c.hi], ' '), '')
-    ELSE d.text END AS text
-  FROM dt d JOIN cuts c USING (doc_id)
-"""
-
-
-def epoch_expansion_sql(alpha: float = 0.3, denom: int = 1_000_000,
-                        max_copies: int = 12,
-                        sf_dir: str = ORACLE_SF_DIR) -> str:
-    """Mirror of pipeline.text.epoch_expansion over the SKEWED corpus
-    subset the query derives ((doc_id // 20) % 20 <= src_idx). Hash-dependent
-    inputs come from the XXH64 mirror as VALUES — the per-doc uniform u
-    and the (doc_id, copy_idx) order keys up to max_copies — while the
-    temperature rule, copy counts and the explode are restated in SQL.
-    max_copies must exceed the largest repeat factor (asserted by the
-    join's inner semantics: a missing order key would DROP rows and
-    fail the row-count gate, not silently pass)."""
-    from .functions.xxh64 import xxhash64
-
-    uvals, kvals = [], []
-    for d, _ in _docs(sf_dir):
-        uvals.append((int(d), xxhash64(int(d), 7) % denom))
-        for k in range(1, max_copies + 1):
-            kvals.append((int(d), k, xxhash64(int(d), k)))
-    uv = ", ".join(f"({d},{u})" for d, u in uvals)
-    kv = ", ".join(f"({d},{k},{o})" for d, k, o in kvals)
-    return f"""
-  WITH sub AS (
-    SELECT doc_id, source FROM documents
-    WHERE (doc_id // 20) % 20 <= CAST(substr(source, 4) AS INTEGER)),
-  u(doc_id, u) AS (VALUES {uv}),
-  okey(doc_id, copy_idx, order_key) AS (VALUES {kv}),
-  c AS (SELECT source, count(*) AS n_docs,
-               CAST(round(power(count(*), {alpha}) * 1e9, 0) AS BIGINT)
-                 AS p
-        FROM sub GROUP BY source),
-  z AS (SELECT CAST(sum(p) AS BIGINT) AS z,
-               CAST(sum(n_docs) AS BIGINT) AS n FROM c),
-  mw AS (SELECT source,
-                CAST(round(round(CAST(p AS DOUBLE) / CAST(z.z AS DOUBLE)
-                                 * z.n / n_docs, 6) * {denom}, 0)
-                     AS BIGINT) AS rfm
-         FROM c, z),
-  j AS (
-    SELECT s.doc_id, s.source,
-           (m.rfm // {denom})
-             + CASE WHEN u.u < m.rfm - (m.rfm // {denom}) * {denom}
-                    THEN 1 ELSE 0 END AS n_copies
-    FROM sub s JOIN mw m USING (source) JOIN u USING (doc_id))
-  SELECT j.doc_id, j.source, k.copy_idx, k.order_key
-  FROM j JOIN okey k
-    ON k.doc_id = j.doc_id AND k.copy_idx <= j.n_copies
-  WHERE j.n_copies > 0
-"""
-
-
-def sibling_docs(sf_dir: str = ORACLE_SF_DIR) -> list[tuple]:
-    """The dedup_eval corpus: every document plus, for doc_id%10==3, a
-    'sibling' (doc_id+10000) sharing its first ceil(0.7·n) tokens with
-    unique filler after — token Jaccard ≈ 0.54, the band-sensitivity
-    regime where 16×2 LSH misses pairs that 16×8 catches."""
-    import math
-
-    key = ("sibling_docs", sf_dir)
-    if key in _cache:
-        return _cache[key]
-    out = list(_docs(sf_dir))
-    for d, text in _docs(sf_dir):
-        if d % 10 == 3:
-            toks = text.strip().split()
-            k = math.ceil(0.7 * len(toks))
-            fill = [f"u{d}x{i}" for i in range(1, len(toks) - k + 1)]
-            out.append((d + 10000, " ".join(toks[:k] + fill)))
-    _cache[key] = out
-    return out
-
-
-def mime_sniff_sql(n: int = 128, dup_mod: int = 96) -> str:
-    """Mirror of pipeline.multimodal.mime_sniff over _images_df with the
-    query's planted mislabels (doc_id%7==0 declares the flipped format).
-    The TRUE format per payload group comes from the codec mirror
-    (_image_group); the sniff result must equal it — the oracle asserts
-    the magic-byte read against independent knowledge of what the codec
-    wrote, not against a re-read of the bytes."""
-    vals = ",\n    ".join(
-        f"({m}, '{_image_group(m, dup_mod)['fmt']}')"
-        for m in range(dup_mod))
-    return f"""
-  WITH {_IDS_CTE.format(n=n)},
-  v(m, fmt) AS (VALUES
-    {vals}),
-  j AS (
-    SELECT ids.doc_id, v.fmt AS true_fmt,
-           CASE WHEN ids.doc_id % 7 = 0
-                THEN CASE v.fmt WHEN 'png' THEN 'jpeg' ELSE 'png' END
-                ELSE v.fmt END AS declared
-    FROM ids JOIN v ON ids.doc_id % {dup_mod} = v.m)
-  SELECT printf('img-%08d', doc_id) AS image_id, declared,
-         true_fmt AS sniffed, declared <> true_fmt AS mismatch
-  FROM j
 """

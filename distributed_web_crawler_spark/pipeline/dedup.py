@@ -1,32 +1,18 @@
-"""Corpus deduplication operators (training-data pipeline).
+"""Dedup-group formation for the training handoff, plus three corpus
+dedup steps.
 
-Five families over the `documents` / `embeddings` tables, each designed
-around its shuffle profile at 100 TB:
-
-- exact: hash-groupBy — one shuffle on a 64-hex key, map-side combine free.
-- n-gram Jaccard: shingle-explode + self-join on shingle. The join key is
-  the shingle hash; hot shingles are capped by document frequency before
-  the join (a shingle in >max_df docs generates O(df²) candidate pairs —
-  dropping them bounds the blowup and barely affects recall).
-- MinHash + LSH: per-doc signatures via `min(xxhash64(shingle, band_seed))`
-  aggregates (JVM-side, no UDF), banded into buckets; bucket-join emits
-  candidates, exact Jaccard verifies. Shuffle is O(docs × bands), never
-  O(docs²).
-- SimHash: 64-bit signature via numpy in one applyInPandas; near-dups are
-  bucket-joined on rotated prefix bands (Hamming ≤ k search).
-- Embedding cosine: brute-force for small sets; random-hyperplane LSH
-  bucketing as the scale path (pipeline/similarity.py shares the planes).
+- connected_components / assign_clusters turn the pairwise output of a
+  near-dup generator into dedup groups. The training manifest runs them
+  inside `pipeline.multimodal.image_variant_dedup`.
+- exact_dedup and decontaminate_flags are rungs of the text training mix
+  (`pipeline.text.training_mix_stages`); cdc_boundaries is the
+  content-defined chunker. These three sit outside the crawl.
 """
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-
-from .text import WS_PLUS
 
 
 # --------------------------------------------------------------------------
@@ -51,394 +37,6 @@ def exact_dedup(documents: DataFrame, text_col: str = "text") -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# shingles + n-gram Jaccard
-# --------------------------------------------------------------------------
-
-def shingles(documents: DataFrame, n: int = 3,
-             text_col: str = "text", distinct: bool = True) -> DataFrame:
-    """(doc_id, shingle) pairs: word n-grams, distinct per doc. Built from
-    explode + slice over the token array — JVM-side.
-
-    ``distinct=False`` skips the per-doc dedup exchange and returns the
-    raw exploded stream WITH duplicates — for consumers that dedup on a
-    cheaper derived key (the 128-bit fingerprint paths dedup on fixed
-    16-byte hashes instead of shuffling variable-length shingle text)."""
-    toks = F.split(F.trim(F.lower(F.col(text_col))), WS_PLUS)
-    df = documents.select(
-        "doc_id",
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(0), F.greatest(F.size(toks) - n, F.lit(0))),
-                lambda i: F.array_join(F.slice(toks, i + 1, n), " "),
-            )
-        ).alias("shingle"),
-    ).where(F.size(toks) >= n)
-    return df.distinct() if distinct else df
-
-
-def ngram_jaccard_pairs(documents: DataFrame, n: int = 3,
-                        threshold: float = 0.5, max_df: int = 100,
-                        text_col: str = "text") -> DataFrame:
-    """Near-duplicate pairs (a<b) with Jaccard(shingles) ≥ threshold.
-
-    Self-join on shingle with a document-frequency cap; Jaccard from
-    |∩| / (|A|+|B|-|∩|). Returns (doc_a, doc_b, jaccard).
-
-    The join/groupBy keys are a 128-bit shingle fingerprint (two
-    independent xxhash64 values) instead of the shingle string — fixed
-    16-byte keys shuffle and compare far cheaper than variable-length
-    n-gram text at corpus scale, and a collision needs both 64-bit hashes
-    to collide (~2^-128 per pair, never observable)."""
-    sh = _shingle_fingerprints(documents, n, text_col)
-    # per-doc shingle-set size rides along on every row (size-ratio
-    # pre-filter below needs it pair-side, BEFORE the groupBy)
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
-    dfreq = sh.groupBy("h1", "h2").agg(F.count("*").alias("df"))
-    sh_capped = (sh.join(dfreq.where(F.col("df") <= max_df),
-                         ["h1", "h2"], "inner")
-                 .join(sizes, "doc_id")
-                 .select("doc_id", "h1", "h2", "n_sh"))
-    a = sh_capped.alias("a")
-    b = sh_capped.alias("b")
-    # size-ratio pre-filter: Jaccard ≥ t ⇒ min(|A|,|B|) ≥ t·max(|A|,|B|),
-    # applied in the join condition so incompatible pairs never reach the
-    # pair aggregation (the O(df²) candidate stream is the dominant cost).
-    # Slackened by the final filter's round(·,6) epsilon so the pre-filter
-    # stays a strict superset of pairs whose rounded Jaccard passes.
-    ratio_ok = (F.least(F.col("a.n_sh"), F.col("b.n_sh"))
-                >= F.lit(threshold - 5e-7) * F.greatest(F.col("a.n_sh"),
-                                                        F.col("b.n_sh")))
-    common = (
-        a.join(b, (F.col("a.h1") == F.col("b.h1"))
-               & (F.col("a.h2") == F.col("b.h2"))
-               & (F.col("a.doc_id") < F.col("b.doc_id"))
-               & ratio_ok)
-        # group on the pair ids ONLY: n_a/n_b are functionally dependent
-        # on the ids, and carrying them as extra grouping columns would
-        # double the exchange key width on the dominant candidate stream.
-        # Sizes rejoin onto the (much smaller) aggregated pair table.
-        .groupBy(F.col("a.doc_id").alias("doc_a"),
-                 F.col("b.doc_id").alias("doc_b"))
-        .agg(F.count("*").alias("n_common"))
-    )
-    sa = sizes.select(F.col("doc_id").alias("doc_a"),
-                      F.col("n_sh").alias("n_a"))
-    sb = sizes.select(F.col("doc_id").alias("doc_b"),
-                      F.col("n_sh").alias("n_b"))
-    return (
-        common
-        .join(sa, "doc_a").join(sb, "doc_b")
-        .withColumn("jaccard", F.round(
-            F.col("n_common") /
-            (F.col("n_a") + F.col("n_b") - F.col("n_common")), 6))
-        .where(F.col("jaccard") >= threshold)
-        .select("doc_a", "doc_b", "jaccard")
-    )
-
-
-# --------------------------------------------------------------------------
-# MinHash + LSH
-# --------------------------------------------------------------------------
-
-def _shingle_fingerprints(documents: DataFrame, n: int,
-                          text_col: str) -> DataFrame:
-    """(doc_id, h1, h2): 128-bit shingle fingerprints (two independent
-    xxhash64), distinct per doc. The shingle STRING is dropped before ANY
-    shuffle — the raw exploded stream is hashed map-side and the per-doc
-    dedup exchange itself runs on the fixed 16-byte key, so no
-    variable-length n-gram text ever crosses the wire (set-equal to
-    deduping the strings up to a ~2^-128 double-collision, the same
-    accepted fingerprint argument as the candidate join). Every downstream
-    consumer (signatures, bucket join, exact verification) shares this one
-    subtree, so Catalyst's exchange reuse materializes the distinct once
-    per query."""
-    return shingles(documents, n, text_col, distinct=False).select(
-        "doc_id",
-        F.xxhash64("shingle").alias("h1"),
-        F.xxhash64(F.lit(1), "shingle").alias("h2")).distinct()
-
-
-def _minhash_aggs(num_hashes: int) -> list:
-    """The signature family: per-seed min of xxhash64 over the 128-bit
-    shingle fingerprint — single definition shared by minhash_signatures
-    and minhash_lsh_verified so the two paths can never drift apart."""
-    return [F.min(F.xxhash64("h1", "h2", F.lit(i))).alias(f"mh{i}")
-            for i in range(num_hashes)]
-
-
-def minhash_signatures(documents: DataFrame, num_hashes: int = 16,
-                       n: int = 3, text_col: str = "text") -> DataFrame:
-    """num_hashes column-wise min-aggregates of seeded xxhash64 over the
-    doc's shingle fingerprints — one shuffle, no Python. Seeding hashes
-    the 128-bit fingerprint (not the shingle text): an equally valid
-    min-wise family at a fraction of the hashing/shuffle bytes."""
-    sh = _shingle_fingerprints(documents, n, text_col)
-    return sh.groupBy("doc_id").agg(*_minhash_aggs(num_hashes))
-
-
-def minhash_lsh_verified(documents: DataFrame, num_hashes: int = 16,
-                         bands: int = 4, n: int = 3, threshold: float = 0.5,
-                         text_col: str = "text") -> DataFrame:
-    """LSH candidates ∩ exact-Jaccard verification (the production shape).
-
-    The shingle-fingerprint frame is ONE subtree consumed by both the
-    signature aggregation and the verification join (reused exchange, not
-    recomputed), and candidates are size-ratio-filtered before the
-    verification join."""
-    rows_per_band = num_hashes // bands
-    sh = _shingle_fingerprints(documents, n, text_col)
-    sigs = sh.groupBy("doc_id").agg(*_minhash_aggs(num_hashes),
-                                    F.count("*").alias("n_sh"))
-    stacked = sigs.select(
-        "doc_id", "n_sh",
-        F.explode(F.array(*[
-            F.struct(
-                F.lit(bnd).alias("band_no"),
-                F.hash(*[F.col(f"mh{bnd * rows_per_band + i}")
-                         for i in range(rows_per_band)]).alias("bkt"))
-            for bnd in range(bands)])).alias("bb"),
-    ).select("doc_id", "n_sh", "bb.band_no", "bb.bkt")
-    a, b = stacked.alias("a"), stacked.alias("b")
-    # same rounding-epsilon slack as ngram_jaccard_pairs
-    ratio_ok = (F.least(F.col("a.n_sh"), F.col("b.n_sh"))
-                >= F.lit(threshold - 5e-7) * F.greatest(F.col("a.n_sh"),
-                                                        F.col("b.n_sh")))
-    cands = (
-        a.join(b, (F.col("a.band_no") == F.col("b.band_no"))
-               & (F.col("a.bkt") == F.col("b.bkt"))
-               & (F.col("a.doc_id") < F.col("b.doc_id"))
-               & ratio_ok)
-        # ids only past this point: n_a/n_b are functionally dependent on
-        # the ids, and carrying them would widen both the candidate
-        # distinct AND every row of the shingle-intersection fan-out
-        # (O(|A∩B|) rows per pair) entering the verification exchange.
-        # Sizes rejoin onto the aggregated pair table from `sigs`.
-        .select(F.col("a.doc_id").alias("doc_a"),
-                F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
-    sh_a = sh.select(F.col("doc_id").alias("doc_a"), "h1", "h2")
-    sh_b = sh.select(F.col("doc_id").alias("doc_b"), "h1", "h2")
-    n_common = (
-        cands.join(sh_a, "doc_a").join(sh_b, ["doc_b", "h1", "h2"])
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count("*").alias("n_common"))
-    )
-    sz = sigs.select("doc_id", "n_sh")
-    return (
-        n_common
-        .join(sz.select(F.col("doc_id").alias("doc_a"),
-                        F.col("n_sh").alias("n_a")), "doc_a")
-        .join(sz.select(F.col("doc_id").alias("doc_b"),
-                        F.col("n_sh").alias("n_b")), "doc_b")
-        .withColumn("jaccard", F.round(
-            F.col("n_common") /
-            (F.col("n_a") + F.col("n_b") - F.col("n_common")), 6))
-        .where(F.col("jaccard") >= threshold)
-        .select("doc_a", "doc_b", "jaccard")
-    )
-
-
-# --------------------------------------------------------------------------
-# SimHash
-# --------------------------------------------------------------------------
-
-SIMHASH_SCHEMA = T.StructType([
-    T.StructField("doc_id", T.LongType()),
-    T.StructField("simhash", T.LongType()),
-])
-
-
-def simhash_signatures(documents: DataFrame,
-                       text_col: str = "text") -> DataFrame:
-    """64-bit SimHash per doc: sign of per-bit sums of token hashes.
-
-    Token hashes come from xxhash64; the per-bit ±1 votes are 64 plain
-    `sum(when(bit,1,-1))` aggregates over the exploded tokens — one
-    hash-agg shuffle with map-side partial combine, fully JVM/codegen (the
-    earlier applyInPandas-per-doc version paid a Python round-trip per
-    document). The signature reassembles from the votes as a sum of
-    disjoint bit terms (bit 63 is the two's-complement sign term)."""
-    toks = (documents
-            .select("doc_id", F.explode(
-                F.split(F.trim(F.lower(F.col(text_col))), WS_PLUS)).alias("tok"))
-            .withColumn("th", F.xxhash64("tok")))
-    votes = [
-        F.sum(F.when(F.shiftrightunsigned("th", i).bitwiseAND(F.lit(1)) == 1,
-                     1).otherwise(-1)).alias(f"_v{i}")
-        for i in range(64)
-    ]
-    agg = toks.groupBy("doc_id").agg(*votes)
-    bit_terms = [
-        F.when(F.col(f"_v{i}") > 0,
-               F.lit(1 << i if i < 63 else -(1 << 63)).cast("long"))
-        .otherwise(F.lit(0).cast("long"))
-        for i in range(64)
-    ]
-    sig = bit_terms[0]
-    for term in bit_terms[1:]:
-        sig = sig + term
-    return agg.select("doc_id", sig.alias("simhash"))
-
-
-def simhash_neardup_pairs(documents: DataFrame, max_hamming: int = 8,
-                          text_col: str = "text") -> DataFrame:
-    """Near-dup pairs by SimHash Hamming distance ≤ max_hamming, candidate
-    generation via 4 16-bit prefix bands (any pair within Hamming 3 shares
-    ≥1 exact band; wider distances trade recall for the bounded join)."""
-    sigs = simhash_signatures(documents, text_col)
-    bands = sigs.select(
-        "doc_id", "simhash",
-        F.explode(F.array(*[
-            F.struct(F.lit(i).alias("band_no"),
-                     F.shiftright("simhash", i * 16).bitwiseAND(F.lit(0xFFFF))
-                     .alias("bkt"))
-            for i in range(4)])).alias("bb"),
-    ).select("doc_id", "simhash", "bb.band_no", "bb.bkt")
-    a, b = bands.alias("a"), bands.alias("b")
-    cands = (
-        a.join(b, (F.col("a.band_no") == F.col("b.band_no"))
-               & (F.col("a.bkt") == F.col("b.bkt"))
-               & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .select(F.col("a.doc_id").alias("doc_a"),
-                F.col("b.doc_id").alias("doc_b"),
-                F.col("a.simhash").alias("sh_a"),
-                F.col("b.simhash").alias("sh_b"))
-        .distinct()
-    )
-    hamming = F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b")))
-    return (cands.withColumn("hamming", hamming)
-            .where(F.col("hamming") <= max_hamming)
-            .select("doc_a", "doc_b", "hamming"))
-
-
-# --------------------------------------------------------------------------
-# embedding cosine near-dup
-# --------------------------------------------------------------------------
-
-_PAIR_SCHEMA = T.StructType([
-    T.StructField("vec_a", T.LongType()),
-    T.StructField("vec_b", T.LongType()),
-    T.StructField("cosine", T.DoubleType()),
-])
-
-
-def _pair_frame(ids_a: np.ndarray, U_a: np.ndarray,
-                ids_b: np.ndarray, U_b: np.ndarray,
-                threshold: float, same_block: bool) -> pd.DataFrame:
-    """All (a<b) pairs with round(cos,6) ≥ threshold from one BLAS product."""
-    cos = np.round(U_a @ U_b.T, 6)
-    if same_block:
-        ii, jj = np.triu_indices(len(ids_a), k=1)
-    else:
-        ii, jj = np.meshgrid(np.arange(len(ids_a)), np.arange(len(ids_b)),
-                             indexing="ij")
-        ii, jj = ii.ravel(), jj.ravel()
-    c = cos[ii, jj]
-    m = c >= threshold
-    ia, ib = ids_a[ii[m]], ids_b[jj[m]]
-    return pd.DataFrame({"vec_a": np.minimum(ia, ib),
-                         "vec_b": np.maximum(ia, ib),
-                         "cosine": c[m]})
-
-
-def _unit_rows(ids, embs) -> tuple[np.ndarray, np.ndarray]:
-    M = np.array([np.asarray(v, dtype=np.float64) for v in embs])
-    norms = np.sqrt((M * M).sum(axis=1))
-    norms[norms == 0.0] = 1.0
-    return np.asarray(ids, dtype=np.int64), M / norms[:, None]
-
-
-def _tiled_pairs(e: DataFrame, bucket: F.Column, threshold: float,
-                 block_size: int) -> DataFrame:
-    """All (a<b) pairs with round(cos,6) ≥ threshold WITHIN each bucket,
-    with every task bounded to ≤ ~2·block_size rows regardless of bucket
-    skew.
-
-    Rows salt into ⌈bucket_count/block_size⌉ sub-blocks per bucket; the
-    per-bucket counts come from a groupBy aggregate (tiny: one row per
-    bucket, partial-aggregated map-side — NOT a count window, which would
-    stage the whole bucket in one task) broadcast back onto the rows. Each
-    sub-block pair (blk_a ≤ blk_b) computes one BLAS |A|×|B| product in an
-    Arrow batch. A degenerate corpus that lands every vector in one bucket
-    therefore costs O((n/B)²) bounded tasks, never one O(n²) task."""
-    e = e.withColumn("bucket", bucket)
-    counts = e.groupBy("bucket").agg(F.count("*").alias("_n"))
-    n_sub = F.greatest(F.lit(1), F.ceil(F.col("_n") / F.lit(block_size)))
-    salted = (e.join(F.broadcast(counts), "bucket")
-              .withColumn("blk", F.pmod(F.xxhash64("vec_id"), n_sub)
-                          .cast("int"))
-              .drop("_n"))
-    blocks = (salted.groupBy("bucket", "blk")
-              .agg(F.collect_list(F.struct("vec_id", "emb")).alias("rows")))
-    pairs = (
-        blocks.alias("a")
-        .join(blocks.alias("b"),
-              (F.col("a.bucket") == F.col("b.bucket"))
-              & (F.col("a.blk") <= F.col("b.blk")))
-        .select(F.col("a.blk").alias("blk_a"), F.col("b.blk").alias("blk_b"),
-                F.col("a.rows").alias("rows_a"),
-                F.col("b.rows").alias("rows_b")))
-
-    def block_pairs(batches):
-        for pdf in batches:
-            for rows_a, rows_b, same in zip(pdf["rows_a"], pdf["rows_b"],
-                                            (pdf["blk_a"] == pdf["blk_b"])):
-                ids_a, U_a = _unit_rows([r["vec_id"] for r in rows_a],
-                                        [r["emb"] for r in rows_a])
-                if same:
-                    yield _pair_frame(ids_a, U_a, ids_a, U_a,
-                                      threshold, same_block=True)
-                else:
-                    ids_b, U_b = _unit_rows([r["vec_id"] for r in rows_b],
-                                            [r["emb"] for r in rows_b])
-                    yield _pair_frame(ids_a, U_a, ids_b, U_b,
-                                      threshold, same_block=False)
-
-    return pairs.mapInPandas(block_pairs, _PAIR_SCHEMA)
-
-
-def embedding_neardup_pairs(embeddings: DataFrame, threshold: float = 0.95,
-                            use_lsh: bool = False, n_planes: int = 8,
-                            plane_seed: int = 7, dim: int | None = None,
-                            block_size: int = 4096) -> DataFrame:
-    """Pairs (a<b) with cosine ≥ threshold over `embedding:array<float>`.
-
-    Exact mode: blocked all-pairs (one global bucket) — the O(n²/B)
-    verification tier. use_lsh=True is the 100 TB path: rows bucket by
-    random-hyperplane sign bits (JVM expressions) and only within-bucket
-    pairs are computed; recall <1 for pairs straddling a plane — raise
-    n_planes to trade. Both tiers share the same skew-bounded tiling
-    (_tiled_pairs), so an over-dense LSH bucket (correlated corpus)
-    degrades to more bounded tasks, not one O(bucket²) task.
-
-    ``dim`` (embedding dimensionality) should be passed by scale callers;
-    when None it is read from one row — a driver action acceptable only in
-    tests/ad-hoc use."""
-    e = embeddings.select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("emb"))
-
-    if not use_lsh:
-        return _tiled_pairs(e, F.lit(0), threshold, block_size)
-
-    if dim is None:
-        dim = len(embeddings.select("embedding").first()["embedding"])
-    planes = np.random.default_rng(plane_seed).standard_normal(
-        (n_planes, dim))
-    # sign(raw · plane) == sign(unit · plane): bucket on the raw vector
-    sign_bits = [
-        (F.aggregate(
-            F.zip_with("emb", F.array(*[F.lit(float(v)) for v in p]),
-                       lambda x, y: x * y),
-            F.lit(0.0), lambda acc, x: acc + x) > 0).cast("int")
-        for p in planes
-    ]
-    bucket = sum((bit * F.lit(2 ** i) for i, bit in enumerate(sign_bits)),
-                 F.lit(0))
-    return _tiled_pairs(e, bucket, threshold, block_size)
-
-
-# --------------------------------------------------------------------------
 # near-dup cluster formation: distributed connected components
 # --------------------------------------------------------------------------
 
@@ -452,7 +50,8 @@ def connected_components(pairs: DataFrame, src: str = "doc_a",
     MinHash / SimHash / pHash / embedding) into dedup groups — the step
     between "these documents look alike" and "keep one representative per
     group". Reference analog: the content_hash grouping intent of
-    /root/reference/schema.cql:17, generalized to fuzzy edges.
+    the reference schema's content_hash index, generalized to fuzzy
+    edges.
 
     Algorithm: alternating large-star / small-star (Kiveris et al.,
     "Connected Components in MapReduce and Beyond", public). Converges in
@@ -528,124 +127,16 @@ def assign_clusters(documents: DataFrame, pairs: DataFrame,
                         (F.col(id_col) == F.col("cluster_id"))))
 
 
-# --------------------------------------------------------------------------
-# incremental (cross-snapshot) dedup: new batch vs historical corpus
-# --------------------------------------------------------------------------
-
-def _norm_fp(c):
-    """Normalized-text sha256 fingerprint (the exact-dedup key)."""
-    return F.sha2(F.regexp_replace(F.lower(F.trim(c)), WS_PLUS, " "), 256)
-
-
-def history_index(old_docs: DataFrame, n: int = 3, max_df: int = 100,
-                  text_col: str = "text") -> dict[str, DataFrame]:
-    """The historical corpus's dedup index: exact fingerprints and the
-    df-capped shingle-fingerprint index every incoming batch probes.
-
-    At production scale this is a MATERIALIZED artifact — built once,
-    written to hash-partitioned tables (fp / (h1,h2) respectively), and
-    appended to as batches are accepted — so the 100 TB history is never
-    re-shingled per batch. incremental_dedup() accepts this dict (each
-    DataFrame may be a table read back from storage) via `index=`; tests
-    pin that a round-tripped index yields identical output."""
-    ofp = old_docs.select(F.col("doc_id").alias("old_id"),
-                          _norm_fp(F.col(text_col)).alias("fp"))
-    sh_old = _shingle_fingerprints(old_docs, n, text_col)
-    sizes_old = sh_old.groupBy("doc_id").agg(F.count("*").alias("n_old"))
-    dfreq = sh_old.groupBy("h1", "h2").agg(F.count("*").alias("df"))
-    shingle_idx = (sh_old.join(dfreq.where(F.col("df") <= max_df),
-                               ["h1", "h2"])
-                   .join(sizes_old, "doc_id")
-                   .select(F.col("doc_id").alias("old_id"), "h1", "h2",
-                           "n_old"))
-    return {"fp": ofp, "shingles": shingle_idx}
-
-
-def incremental_dedup(new_docs: DataFrame, old_docs: DataFrame | None,
-                      n: int = 3, threshold: float = 0.3,
-                      max_df: int = 100, text_col: str = "text",
-                      index: dict[str, DataFrame] | None = None
-                      ) -> DataFrame:
-    """Dedup a NEW document batch against the HISTORICAL corpus — the
-    steady-state shape of a growing training corpus, where new×new and
-    old×old comparisons are never re-done.
-
-    Two tiers, cheap one first:
-    1. exact: normalized-sha256 fingerprint probe of the history (an
-       equi-join on a 32-byte key; at scale the history side is a
-       hash-partitioned compacted table, the same access path the
-       crawl's seen-state uses).
-    2. fuzzy: survivors only. The HISTORY side is indexed — shingle
-       fingerprints df-capped on history frequency — and the new batch
-       probes it; the candidate join is new×old only, with the same
-       lossless size-ratio prefilter as ngram_jaccard_pairs. Best match
-       per new doc by (jaccard desc, old_id asc) on the 1e-6-quantized
-       score.
-
-    Pass `index=history_index(...)` (typically read back from
-    materialized tables) to skip re-deriving the history side; otherwise
-    it is built inline from `old_docs`.
-
-    Returns one row per new doc:
-    (doc_id, keep, match_kind 'exact'|'fuzzy'|null, matched_old, jaccard
-    — null for exact matches)."""
-    from pyspark.sql import Window
-
-    if index is None:
-        index = history_index(old_docs, n=n, max_df=max_df,
-                              text_col=text_col)
-    ofp, old_idx = index["fp"], index["shingles"]
-
-    nfp = new_docs.select("doc_id", _norm_fp(F.col(text_col)).alias("fp"))
-    exact = (nfp.join(ofp, "fp")
-             .groupBy("doc_id").agg(F.min("old_id").alias("matched_old")))
-
-    surv = new_docs.join(exact.select("doc_id"), "doc_id", "left_anti")
-    sh_new = _shingle_fingerprints(surv, n, text_col)
-    sizes_new = sh_new.groupBy("doc_id").agg(F.count("*").alias("n_new"))
-    new_probe = sh_new.join(sizes_new, "doc_id")
-    ratio_ok = (F.least(F.col("n_new"), F.col("n_old"))
-                >= F.lit(threshold - 5e-7) * F.greatest(F.col("n_new"),
-                                                        F.col("n_old")))
-    common = (new_probe
-              .join(old_idx,
-                    (new_probe["h1"] == old_idx["h1"])
-                    & (new_probe["h2"] == old_idx["h2"]) & ratio_ok)
-              .groupBy("doc_id", "old_id", "n_new", "n_old")
-              .agg(F.count("*").alias("n_common")))
-    scored = (common
-              .withColumn("jaccard", F.round(
-                  F.col("n_common")
-                  / (F.col("n_new") + F.col("n_old") - F.col("n_common")),
-                  6))
-              .where(F.col("jaccard") >= threshold))
-    w = Window.partitionBy("doc_id").orderBy(F.desc("jaccard"),
-                                             F.asc("old_id"))
-    best = (scored.withColumn("rn", F.row_number().over(w))
-            .where(F.col("rn") == 1)
-            .select("doc_id", F.col("old_id").alias("matched_old"),
-                    "jaccard"))
-
-    matches = (exact
-               .select("doc_id", "matched_old",
-                       F.lit("exact").alias("match_kind"),
-                       F.lit(None).cast("double").alias("jaccard"))
-               .unionByName(best.select(
-                   "doc_id", "matched_old",
-                   F.lit("fuzzy").alias("match_kind"), "jaccard")))
-    return (new_docs.select("doc_id")
-            .join(matches, "doc_id", "left")
-            .select("doc_id",
-                    F.col("match_kind").isNull().alias("keep"),
-                    "match_kind", "matched_old", "jaccard"))
-
+# -- text training-mix decontamination ---------------------------------------
 
 def _window_fps(documents: DataFrame, w: int,
                 text_col: str = "text") -> DataFrame:
     """(doc_id, pos, h1, h2): every w-token window of every document as a
     128-bit xxhash64 fingerprint — fixed 16-byte keys; the window text
     never leaves the map stage. Documents with < w tokens produce no
-    rows. Shared by duplicate_span_stats and decontaminate_flags."""
+    rows."""
+    from .multimodal import WS_PLUS
+
     toks = F.split(F.trim(F.lower(F.col(text_col))), WS_PLUS)
     staged = (documents.select("doc_id", toks.alias("_t"))
               .where(F.size(F.col("_t")) >= w))
@@ -658,51 +149,6 @@ def _window_fps(documents: DataFrame, w: int,
         "doc_id", "pos",
         F.xxhash64(key).alias("h1"),
         F.xxhash64(F.lit(1), key).alias("h2"))
-
-
-def duplicate_span_stats(documents: DataFrame, w: int = 8,
-                         text_col: str = "text") -> DataFrame:
-    """Cross-document repeated-substring signals (the exact-substring
-    dedup criterion of Lee et al., "Deduplicating Training Data Makes
-    Language Models Better": a span repeated anywhere in the corpus is
-    memorization fuel). Every w-token window of every document is
-    fingerprinted; a window is DUP if its fingerprint occurs more than
-    once corpus-wide (another document OR another position of the same
-    document). Per document:
-
-      (doc_id, n_windows, n_dup_windows, dup_fraction, max_dup_run)
-
-    max_dup_run = the longest run of consecutive duplicated windows — a
-    run of r windows ≈ a verbatim shared span of w+r-1 tokens, the thing
-    span-removal would cut.
-
-    Scale shape: windows shuffle as 128-bit xxhash64 fingerprints (fixed
-    16-byte keys, like ngram_jaccard — the window TEXT never crosses an
-    exchange); one (h1,h2) count agg (map-side partial), one join back,
-    then doc-keyed aggregation + an islands window (pos − row_number)
-    for the run lengths. Documents with < w tokens have no windows and
-    are excluded."""
-    from pyspark.sql import Window
-
-    keyed = _window_fps(documents, w, text_col)
-    cnts = keyed.groupBy("h1", "h2").agg(F.count("*").alias("_c"))
-    flagged = (keyed.join(cnts, ["h1", "h2"])
-               .select("doc_id", "pos", (F.col("_c") > 1).alias("dup")))
-    tot = (flagged.groupBy("doc_id")
-           .agg(F.count("*").alias("n_windows"),
-                F.sum(F.col("dup").cast("long")).alias("n_dup_windows")))
-    rn = F.row_number().over(
-        Window.partitionBy("doc_id").orderBy("pos"))
-    runs = (flagged.where("dup")
-            .withColumn("_grp", F.col("pos") - rn)
-            .groupBy("doc_id", "_grp").agg(F.count("*").alias("_run")))
-    mx = runs.groupBy("doc_id").agg(F.max("_run").alias("max_dup_run"))
-    return (tot.join(mx, "doc_id", "left")
-            .select("doc_id", "n_windows", "n_dup_windows",
-                    F.round(F.col("n_dup_windows") / F.col("n_windows"), 6)
-                    .alias("dup_fraction"),
-                    F.coalesce(F.col("max_dup_run"), F.lit(0).cast("long"))
-                    .alias("max_dup_run")))
 
 
 def decontaminate_flags(documents: DataFrame, eval_documents: DataFrame,
@@ -739,178 +185,6 @@ def decontaminate_flags(documents: DataFrame, eval_documents: DataFrame,
                     .alias("hit_fraction")))
 
 
-def contamination_report(documents: DataFrame,
-                         eval_documents: DataFrame, w: int = 8,
-                         text_col: str = "text") -> DataFrame:
-    """The eval-side view of decontamination — per BENCHMARK document,
-    how badly it leaks into the training corpus: which eval docs a
-    benchmark owner must treat as compromised, and how much of each is
-    verbatim-recoverable. Returns one row per contaminated eval doc:
-    (eval_doc_id, n_train_docs, n_leaked_windows, n_windows,
-    leak_fraction) — n_train_docs = distinct training documents sharing
-    ≥1 verbatim w-gram, n_leaked_windows = the eval doc's own window
-    POSITIONS found anywhere in the corpus.
-
-    Scale shape: the eval windows (tiny) broadcast into a map-side join
-    over the corpus window stream — the corpus is scanned once with no
-    corpus-keyed shuffle; both aggregates run at matched-pair volume
-    (≪ corpus windows) keyed by eval doc. The window totals aggregate
-    the eval side alone."""
-    ev = (_window_fps(eval_documents, w, text_col)
-          .select(F.col("doc_id").alias("eval_doc_id"),
-                  F.col("pos").alias("eval_pos"), "h1", "h2"))
-    corpus = _window_fps(documents, w, text_col)
-    hits = corpus.join(F.broadcast(ev), ["h1", "h2"])
-    per_eval = (hits.groupBy("eval_doc_id")
-                .agg(F.countDistinct("doc_id").alias("n_train_docs"),
-                     F.countDistinct("eval_pos")
-                     .alias("n_leaked_windows")))
-    totals = (ev.groupBy("eval_doc_id")
-              .agg(F.count("*").alias("n_windows")))
-    return (per_eval.join(totals, "eval_doc_id")
-            .select("eval_doc_id", "n_train_docs", "n_leaked_windows",
-                    "n_windows",
-                    F.round(F.col("n_leaked_windows")
-                            / F.col("n_windows"), 6)
-                    .alias("leak_fraction")))
-
-
-def semantic_dedup(embeddings: DataFrame, n_lists: int = 16,
-                   threshold: float = 0.9) -> DataFrame:
-    """SemDeDup-style semantic deduplication (Abbas et al. 2023): cluster
-    the embedding space, compare pairs only WITHIN a cluster, and drop
-    every vector that is ≥ threshold cosine-similar to a lower-id vector
-    of its cluster (the deterministic survivor rule; the paper's
-    farthest-from-centroid keeper is a one-line ORDER BY swap).
-
-    The cluster pass is what makes semantic dedup tractable: the
-    quadratic pair search runs per cluster — O(Σ|list|²) ≈ O(n²/k) for k
-    balanced lists — never corpus². Clustering reuses ivf_assign (the
-    deterministic hash-sampled centroids + broadcast argmax assignment,
-    optional Lloyd refinement), so the ANN index and the dedup pass
-    share one clustering. A pathologically hot list is an AQE skew-join
-    cell; at extreme skew swap the self-join for dedup's _tiled_pairs.
-
-    Returns (vec_id, list_id, keep)."""
-    from .similarity import _cos, ivf_assign
-
-    _, assigned = ivf_assign(embeddings, n_lists)
-    a = assigned.select("list_id", F.col("vec_id").alias("vec_a"),
-                        F.col("unit").alias("_ua"))
-    b = assigned.select("list_id", F.col("vec_id").alias("vec_b"),
-                        F.col("unit").alias("_ub"))
-    pairs = (a.join(b, "list_id")
-             .where((F.col("vec_a") < F.col("vec_b"))
-                    & (F.round(_cos(F.col("_ua"), F.col("_ub")), 6)
-                       >= threshold)))
-    drops = (pairs.select(F.col("vec_b").alias("vec_id")).distinct()
-             .withColumn("_d", F.lit(1)))
-    return (assigned.join(drops, "vec_id", "left")
-            .select("vec_id", "list_id",
-                    F.col("_d").isNull().alias("keep")))
-
-
-def cross_doc_spans(documents: DataFrame, n: int = 6,
-                    key_mode: str = "fp") -> DataFrame:
-    """Cross-document duplicate-span detection — the distributed analog
-    of Lee et al. 2022's exact-substring dedup (suffix-array pass): for
-    every document, how many of its n-token windows also appear verbatim
-    in ANOTHER document. Complements dup_span_stats (WITHIN-doc
-    repetition): this is the cross-corpus boilerplate/mirror signal a
-    training pipeline trims before near-dup passes even run.
-
-    Plan shape: one window explode → distinct(doc_id, key) → a key
-    document-frequency agg → rejoin → per-doc rollup. Every stage is a
-    partial-aggregatable hash shuffle on the span key. key_mode picks
-    that key:
-
-    - "fp" (DEFAULT, the 100 TB path): the raw n-gram string is hashed
-      MAP-SIDE to a 128-bit fingerprint (two independent xxhash64, the
-      _shingle_fingerprints / minhash_lsh pattern) before any exchange,
-      so the distinct, the document-frequency agg and the rejoin all
-      shuffle fixed 16-byte keys instead of variable-length text
-      (~10× shuffle-byte shrink at n=6; double-collision odds
-      ~spans²/2^128 — the same accepted fingerprint argument as the
-      candidate joins).
-    - "gram": shuffles the raw strings; kept because the DuckDB oracle
-      restates THIS variant relationally with zero mirrored values, and
-      tests/test_sketches.py pins both variants result-equal.
-
-    Returns (doc_id, total_spans, dup_spans, dup_frac) for documents
-    with at least one duplicated span."""
-    if key_mode not in ("fp", "gram"):
-        raise ValueError(f"key_mode must be 'fp' or 'gram': {key_mode!r}")
-    from .text import tokens as _tok
-
-    t = _tok(F.lower(F.col("text")))
-    grams = F.when(
-        F.size(t) >= n,
-        F.transform(F.sequence(F.lit(1), F.size(t) - n + 1),
-                    lambda i: F.concat_ws(" ", F.slice(t, i, n))))
-    raw = documents.select("doc_id", F.explode(grams).alias("gram"))
-    if key_mode == "fp":
-        keyed = raw.select("doc_id", F.xxhash64("gram").alias("k1"),
-                           F.xxhash64(F.lit(1), F.col("gram")).alias("k2"))
-        key_cols = ["k1", "k2"]
-    else:
-        keyed = raw.select("doc_id", F.col("gram").alias("k1"))
-        key_cols = ["k1"]
-    gd = keyed.distinct()
-    gdf = gd.groupBy(*key_cols).agg(F.count(F.lit(1)).alias("ndocs"))
-    per = (gd.join(gdf, key_cols)
-           .groupBy("doc_id")
-           .agg(F.count(F.lit(1)).alias("total_spans"),
-                F.sum(F.when(F.col("ndocs") >= 2, 1).otherwise(0))
-                .alias("dup_spans")))
-    return (per.where(F.col("dup_spans") > 0)
-            .select("doc_id", "total_spans", "dup_spans",
-                    F.round(F.col("dup_spans").cast("double")
-                            / F.col("total_spans").cast("double"), 6)
-                    .alias("dup_frac")))
-
-
-def containment_pairs(documents: DataFrame, n: int = 3,
-                      threshold: float = 0.6, max_df: int = 100,
-                      text_col: str = "text") -> DataFrame:
-    """ASYMMETRIC near-dup detection: shingle containment
-    C(A→B) = |S(A)∩S(B)| / |S(A)| (Broder's resemblance companion) —
-    catches quotes, partial mirrors and page-in-page embeddings whose
-    Jaccard is low because the containing document is much larger.
-    Emits (doc_a, doc_b, c_ab, c_ba) for pairs where EITHER direction
-    reaches the threshold.
-
-    The operator is defined over the df-capped shingle sets (the same
-    O(df²)-bounding cap as ngram_jaccard_pairs); no size-ratio
-    pre-filter exists here BY DESIGN — a tiny doc contained in a huge
-    one is exactly the signal, so the asymmetric metric forbids the
-    symmetric prune. Shuffle shrink instead: the pair aggregation
-    groups on (doc_a, doc_b) alone and the per-doc set sizes join back
-    AFTER the candidate stream is reduced to one row per pair."""
-    sh = _shingle_fingerprints(documents, n, text_col)
-    dfreq = sh.groupBy("h1", "h2").agg(F.count("*").alias("df"))
-    capped = (sh.join(dfreq.where(F.col("df") <= max_df), ["h1", "h2"])
-              .select("doc_id", "h1", "h2"))
-    sizes = capped.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
-    a, b = capped.alias("a"), capped.alias("b")
-    pairs = (a.join(b, (F.col("a.h1") == F.col("b.h1"))
-                    & (F.col("a.h2") == F.col("b.h2"))
-                    & (F.col("a.doc_id") < F.col("b.doc_id")))
-             .groupBy(F.col("a.doc_id").alias("doc_a"),
-                      F.col("b.doc_id").alias("doc_b"))
-             .agg(F.count("*").alias("n_common")))
-    sa = sizes.select(F.col("doc_id").alias("doc_a"),
-                      F.col("n_sh").alias("n_a"))
-    sb = sizes.select(F.col("doc_id").alias("doc_b"),
-                      F.col("n_sh").alias("n_b"))
-    return (pairs.join(sa, "doc_a").join(sb, "doc_b")
-            .select("doc_a", "doc_b",
-                    F.round(F.col("n_common") / F.col("n_a"), 6)
-                    .alias("c_ab"),
-                    F.round(F.col("n_common") / F.col("n_b"), 6)
-                    .alias("c_ba"))
-            .where(F.greatest(F.col("c_ab"), F.col("c_ba")) >= threshold))
-
-
 # -- content-defined chunking -----------------------------------------------
 
 CDC_GEAR_MULT = 2654435761  # Knuth multiplicative constant
@@ -937,109 +211,3 @@ def cdc_boundaries(text: str, min_len: int = 8, max_len: int = 48,
     return out
 
 
-def cdc_chunk_stats(documents: DataFrame, min_len: int = 8,
-                    max_len: int = 48, mask: int = 0x1F,
-                    text_col: str = "text") -> DataFrame:
-    """Cross-document chunk dedup over content-defined boundaries:
-    (chunk_hash, chunk_len, n_copies, n_docs) per distinct chunk. The
-    boundary walk is a linear Arrow-batched pass (mapInPandas — the
-    per-char recurrence is inherently sequential); hashing and the
-    dedup rollup stay JVM-side (md5 + one hash aggregate). Map-only
-    before the single groupBy shuffle, so 100 TB shards chunk
-    independently."""
-    import pandas as pd
-
-    def run(batches):
-        for pdf in batches:
-            rows = [(int(d), ln, t[s:s + ln])
-                    for d, t in zip(pdf["doc_id"], pdf[text_col])
-                    for s, ln in cdc_boundaries(t, min_len, max_len, mask)]
-            yield pd.DataFrame(rows, columns=["doc_id", "length", "chunk"])
-
-    chunks = (documents.select("doc_id", text_col)
-              .mapInPandas(run, "doc_id long, length long, chunk string")
-              .select("doc_id", "length",
-                      F.md5("chunk").alias("chunk_hash")))
-    return (chunks.groupBy("chunk_hash")
-            .agg(F.first("length").alias("chunk_len"),
-                 F.count(F.lit(1)).alias("n_copies"),
-                 F.count_distinct("doc_id").alias("n_docs")))
-
-
-def duplicate_span_scrub(documents: DataFrame, w: int = 8,
-                         text_col: str = "text") -> DataFrame:
-    """EXECUTE the Lee-et-al exact-substring dedup that
-    `duplicate_span_stats` only measures: every w-token window whose
-    (case-sensitive) text occurs more than once corpus-wide is removed
-    from every document EXCEPT the canonical first occurrence — the
-    minimum (doc_id, pos) — so exactly one copy of each repeated span
-    survives. Overlapping and adjacent flagged windows merge into
-    maximal spans before removal, so a long verbatim quote is cut once,
-    not window-by-window.
-
-    Returns (doc_id, clean_text, n_tokens, n_removed) for EVERY
-    document; clean_text is the surviving tokens joined by single
-    spaces (the operator is defined over the token stream, as in the
-    paper — original inter-token whitespace is not preserved).
-
-    Scale shape: windows shuffle as 128-bit xxhash64 fingerprints (the
-    window text never crosses an exchange); ONE (h1,h2) hash agg
-    produces both the count and the min-(doc_id,pos) owner; the
-    join-back reuses that clustering; span merging is one doc-keyed
-    window (running max of span end — islands); removal positions
-    explode only from MERGED spans (volume = tokens actually cut) and
-    anti-join the token stream on (doc_id, tpos); reassembly is one
-    doc-keyed agg. No sort wider than a document's own flagged spans.
-    """
-    from pyspark.sql import Window
-
-    toks = F.split(F.trim(F.col(text_col)), WS_PLUS)
-    base = documents.select("doc_id", toks.alias("_t"))
-    win = (base.where(F.size("_t") >= w)
-           .select("doc_id", "_t",
-                   F.explode(F.sequence(F.lit(1), F.size("_t") - w + 1))
-                   .alias("pos")))
-    key = F.array_join(F.slice(F.col("_t"), F.col("pos"), w), " ")
-    keyed = win.select("doc_id", "pos",
-                       F.xxhash64(key).alias("h1"),
-                       F.xxhash64(F.lit(1), key).alias("h2"))
-    owners = keyed.groupBy("h1", "h2").agg(
-        F.count(F.lit(1)).alias("_c"),
-        F.min(F.struct("doc_id", "pos")).alias("_own"))
-    flagged = (keyed.join(owners, ["h1", "h2"])
-               .where((F.col("_c") > 1) &
-                      ~((F.col("doc_id") == F.col("_own.doc_id")) &
-                        (F.col("pos") == F.col("_own.pos"))))
-               .select("doc_id", "pos",
-                       (F.col("pos") + w - 1).alias("end")))
-    prev_end = F.max("end").over(
-        Window.partitionBy("doc_id").orderBy("pos")
-        .rowsBetween(Window.unboundedPreceding, -1))
-    spans = (flagged
-             .withColumn("_new", F.when(
-                 prev_end.isNull() | (F.col("pos") > prev_end + 1),
-                 F.lit(1)).otherwise(F.lit(0)))
-             .withColumn("_grp", F.sum("_new").over(
-                 Window.partitionBy("doc_id").orderBy("pos")
-                 .rowsBetween(Window.unboundedPreceding, 0)))
-             .groupBy("doc_id", "_grp")
-             .agg(F.min("pos").alias("_s"), F.max("end").alias("_e")))
-    cut = spans.select(
-        "doc_id", F.explode(F.sequence("_s", "_e")).alias("tpos"))
-    tokens = base.select(
-        "doc_id", F.posexplode("_t").alias("_p", "tok")
-    ).select("doc_id", (F.col("_p") + 1).alias("tpos"), "tok")
-    kept = tokens.join(cut, ["doc_id", "tpos"], "left_anti")
-    rebuilt = kept.groupBy("doc_id").agg(
-        F.array_join(
-            F.transform(F.array_sort(F.collect_list(
-                F.struct("tpos", "tok"))), lambda s: s["tok"]),
-            " ").alias("clean_text"),
-        F.count(F.lit(1)).alias("_n_kept"))
-    totals = base.select("doc_id", F.size("_t").alias("n_tokens"))
-    return (totals.join(rebuilt, "doc_id", "left")
-            .select("doc_id",
-                    F.coalesce("clean_text", F.lit("")).alias("clean_text"),
-                    F.col("n_tokens").cast("long").alias("n_tokens"),
-                    (F.col("n_tokens") - F.coalesce("_n_kept", F.lit(0)))
-                    .cast("long").alias("n_removed")))

@@ -1,14 +1,14 @@
-"""Multimodal (image/audio/video) column plumbing.
+"""Image rungs of the crawl→training handoff.
 
-Media are opaque `binary` columns + typed metadata, processed by Arrow-
-batched UDFs over `mapInPandas` — the schema, partitioning, UDF signature
-and batch shape are the real production design; only the codec boundary is
-synthetic in this container:
-
-- our crawl's image payloads use the deterministic stand-in codec from
-  crawl/synthweb.py (decode IS implemented and exercised end-to-end);
-- real-world codecs (libjpeg/PIL, ffmpeg) are gated behind import-tries and
-  raise NotImplementedError with a clear message when absent.
+`Crawler.training_manifest` runs `image_training_mix` over the crawl's
+stored images: metadata scrub → curation gates → exact payload dedup →
+phash-proposed, PSNR-verified variant dedup → aspect-bucket batches.
+Images are opaque `binary` columns + typed metadata, processed by Arrow-
+batched UDFs over `mapInPandas`; the crawl's payloads use the
+deterministic stand-in codec from crawl/synthweb.py, and a real-world
+codec is gated behind an import-try that raises NotImplementedError when
+absent. The module also keeps the synthetic audio/video containers
+(encode/decode) and their gated real-codec stubs.
 """
 
 from __future__ import annotations
@@ -19,21 +19,18 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from .text import WS_PLUS
 from pyspark.sql import types as T
 
-from ..crawl.synthweb import average_phash, decode_image, psnr
+from ..crawl.synthweb import decode_image, psnr
 
-IMAGE_STATS_SCHEMA = T.StructType([
-    T.StructField("image_id", T.StringType()),
-    T.StructField("w", T.IntegerType()),
-    T.StructField("h", T.IntegerType()),
-    T.StructField("fmt", T.StringType()),
-    T.StructField("mean_px", T.DoubleType()),
-    T.StructField("std_px", T.DoubleType()),
-    T.StructField("phash", T.LongType()),
-])
+# Whitespace pinned to an EXPLICIT character class so the engine (Java
+# regex) and every DuckDB oracle (RE2) tokenize byte-identically: Java's
+# \s is [ \t\n\x0B\f\r] while RE2's \s omits \x0B — one vertical tab in
+# a caption silently flips its token count between the two engines. Both
+# regex dialects parse this class the same way. Keep WS/WS_PLUS in
+# lock-step with the SQL literal the caption oracles use (oracles.py).
+WS = r"[ \t\n\r\f\x0B]"
+WS_PLUS = WS + "+"
 
 
 def decode_real_image(buf: bytes) -> np.ndarray:
@@ -50,75 +47,6 @@ def decode_real_image(buf: bytes) -> np.ndarray:
     import io
     from PIL import Image
     return np.asarray(Image.open(io.BytesIO(buf)).convert("L"))
-
-
-def image_stats(pages: DataFrame, bytes_col: str = "bytes",
-                id_col: str = "image_id") -> DataFrame:
-    """Decode + feature-extract per image: dims, pixel moments, phash.
-    One Arrow batch in, one out; numpy per image inside the batch (the
-    decode itself is inherently per-payload, like fetch)."""
-
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, ws, hs, fmts, means, stds, phs = [], [], [], [], [], [], []
-            for iid, buf in zip(pdf[id_col], pdf[bytes_col]):
-                pix, fmt = decode_image(bytes(buf))
-                ids.append(iid)
-                hs.append(pix.shape[0])
-                ws.append(pix.shape[1])
-                fmts.append(fmt)
-                means.append(float(pix.mean()))
-                stds.append(float(pix.std()))
-                phs.append(average_phash(pix))
-            yield pd.DataFrame({
-                "image_id": ids,
-                "w": pd.array(ws, dtype="Int32"),
-                "h": pd.array(hs, dtype="Int32"),
-                "fmt": fmts,
-                "mean_px": means,
-                "std_px": stds,
-                "phash": pd.array(phs, dtype="Int64"),
-            })
-
-    return pages.select(id_col, bytes_col).mapInPandas(
-        stats, IMAGE_STATS_SCHEMA)
-
-
-RESIZE_SCHEMA = T.StructType([
-    T.StructField("image_id", T.StringType()),
-    T.StructField("thumb", T.BinaryType()),
-    T.StructField("tw", T.IntegerType()),
-    T.StructField("th", T.IntegerType()),
-])
-
-
-def image_resize(pages: DataFrame, target: int = 8,
-                 bytes_col: str = "bytes", id_col: str = "image_id") -> DataFrame:
-    """Block-mean resize to target×target (the frame-sample/thumbnail shape;
-    real bilinear/ffmpeg paths plug into the same batch signature)."""
-
-    def resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"image_id": [], "thumb": [], "tw": [], "th": []}
-            for iid, buf in zip(pdf[id_col], pdf[bytes_col]):
-                pix, _ = decode_image(bytes(buf))
-                ys = np.linspace(0, pix.shape[0], target + 1).astype(int)
-                xs = np.linspace(0, pix.shape[1], target + 1).astype(int)
-                thumb = np.array([
-                    [pix[ys[i]:max(ys[i] + 1, ys[i + 1]),
-                         xs[j]:max(xs[j] + 1, xs[j + 1])].mean()
-                     for j in range(target)] for i in range(target)
-                ], dtype=np.uint8)
-                out["image_id"].append(iid)
-                out["thumb"].append(thumb.tobytes())
-                out["tw"].append(target)
-                out["th"].append(target)
-            yield pd.DataFrame({
-                "image_id": out["image_id"], "thumb": out["thumb"],
-                "tw": pd.array(out["tw"], dtype="Int32"),
-                "th": pd.array(out["th"], dtype="Int32")})
-
-    return pages.select(id_col, bytes_col).mapInPandas(resize, RESIZE_SCHEMA)
 
 
 def phash_hamming_neardup(pages: DataFrame, max_hamming: int = 6) -> DataFrame:
@@ -226,8 +154,8 @@ def psnr_verified_neardup(images: DataFrame, max_hamming: int = 10,
     are dropped before any payload byte moves, so the verified edge set
     is unchanged but the output no longer carries a verdict row for
     every banded candidate — use the default for candidate-level
-    accounting (phash_band_eval), the screen for edge consumers
-    (variant dedup / clustering / the training mixes).
+    accounting, the screen for edge consumers (variant dedup / the
+    training mix).
     ``prefilter="auto"`` runs the two-phase screen_gate (volume +
     sampled-effectiveness probe) and screens only when it pays."""
     if prefilter not in (None, "thumb", "auto"):
@@ -249,10 +177,9 @@ def psnr_verified_neardup(images: DataFrame, max_hamming: int = 10,
 
 
 def _psnr_verify_map(cand: DataFrame, min_psnr: float) -> DataFrame:
-    """The decode-compare verify tier shared by the self-join
-    (psnr_verified_neardup) and the new-vs-history probe
-    (incremental_image_dedup): a map-only Arrow batch walk over candidate
-    rows (img_a, img_b, hamming, bytes_a, bytes_b) → PSNR_VERIFY_SCHEMA."""
+    """The decode-compare verify tier of psnr_verified_neardup: a
+    map-only Arrow batch walk over candidate rows (img_a, img_b, hamming,
+    bytes_a, bytes_b) → PSNR_VERIFY_SCHEMA."""
 
     def verify(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -356,7 +283,6 @@ def image_thumb_sigs(images: DataFrame, t: int = THUMB_T) -> DataFrame:
 
 def thumb_screened_pairs(images: DataFrame, pairs: DataFrame,
                          min_psnr: float, t: int = THUMB_T,
-                         images_b: DataFrame | None = None,
                          a_col: str = "img_a",
                          b_col: str = "img_b") -> DataFrame:
     """Prune candidate pairs to the thumbnail-plausible subset: keep a
@@ -365,17 +291,13 @@ def thumb_screened_pairs(images: DataFrame, pairs: DataFrame,
     PROVABLY not verifiable, so `where(verified)` consumers see identical
     results. ~1 KB sigs join at candidate volume; full payloads join only
     for survivors. The 1e-3 dB slack covers float32 sig storage (the
-    bound itself is exact in float64). ``images_b`` switches to the
-    cross-table probe shape (a-side ids from ``images``, b-side from
-    ``images_b`` — the incremental new-vs-history screen; at scale the
-    history side's sigs are the materialized index table).
+    bound itself is exact in float64).
 
     Sig computation is RESTRICTED to ids that actually appear in the
     candidate pairs (a semi-join ahead of the decode mapInPandas) —
     Catalyst cannot push a join below a Python map, so without this the
     whole corpus on BOTH sides is decoded even when banding proposed a
-    handful of pairs; that was the round-4 incremental_image_dedup 1.6×
-    regression. Screen cost is therefore O(candidate ids + candidate
+    handful of pairs. Screen cost is therefore O(candidate ids + candidate
     pairs), never O(corpus), which is what makes the screen safe to
     leave on by default at any candidate volume. (At 10^10 the sig
     table is materialized next to the phash index and the semi-join
@@ -385,23 +307,13 @@ def thumb_screened_pairs(images: DataFrame, pairs: DataFrame,
     # move them at corpus volume — the exact exchange the screen exists
     # to avoid (candidate ids ≫ broadcast ⇒ the sig table is the
     # materialized index and this restriction prunes its scan instead)
-    if images_b is None:
-        ids = (pairs.select(F.col(a_col).alias("image_id"))
-               .union(pairs.select(F.col(b_col).alias("image_id")))
-               .distinct())
-        sigs = image_thumb_sigs(
-            images.join(F.broadcast(ids), "image_id", "left_semi"), t)
-        sigs_b = sigs
-    else:
-        ids_a = pairs.select(F.col(a_col).alias("image_id")).distinct()
-        ids_b = pairs.select(F.col(b_col).alias("image_id")).distinct()
-        sigs = image_thumb_sigs(
-            images.join(F.broadcast(ids_a), "image_id", "left_semi"), t)
-        sigs_b = image_thumb_sigs(
-            images_b.join(F.broadcast(ids_b), "image_id", "left_semi"),
-            t)
+    ids = (pairs.select(F.col(a_col).alias("image_id"))
+           .union(pairs.select(F.col(b_col).alias("image_id")))
+           .distinct())
+    sigs = image_thumb_sigs(
+        images.join(F.broadcast(ids), "image_id", "left_semi"), t)
     cand = (
-        gather_pair_payloads(pairs, a_col, b_col, sigs, sigs_b,
+        gather_pair_payloads(pairs, a_col, b_col, sigs, sigs,
                              "image_id", F.struct("w", "h", "thumb"),
                              "_sa", "_sb")
         .select(a_col, b_col, "hamming",
@@ -488,58 +400,11 @@ def image_variant_dedup(images: DataFrame, max_hamming: int = 10,
                     (F.col("image_id") == F.col("survivor")).alias("keep")))
 
 
-def phash_band_eval(images: DataFrame,
-                    thresholds: tuple[int, ...] = (0, 2, 4, 6, 8, 10),
-                    max_hamming: int = 12) -> DataFrame:
-    """Threshold-tuning report for the phash proposal tier (the image
-    analog of dedup_eval): for each candidate Hamming cutoff, how many
-    pairs the banding would propose and what fraction the decoded-pixel
-    PSNR tier then confirms — precision of the cheap tier against pixel
-    truth, and recall relative to everything verified within the
-    max_hamming proposal superset. The operator that answers "is
-    Hamming ≤ 10 too loose (wasted pixel decodes) or too tight (missed
-    dups)?" before committing a corpus-wide run.
-
-    Sample contract (dedup_eval's): truth is the verified set WITHIN the
-    ≤ max_hamming superset — banding misses beyond that radius are by
-    construction invisible, so run this on a corpus slice with
-    max_hamming comfortably above the production cutoff.
-
-    Scale shape: one psnr_verified_neardup pass (bytes at candidate
-    volume only), then a |thresholds|-way explode of the PAIR table (≪
-    corpus) into one global hash agg — no second pass over payloads."""
-    pairs = psnr_verified_neardup(images, max_hamming=max_hamming)
-    th = F.explode(F.array(*[F.lit(t) for t in thresholds]))
-    tagged = (pairs.select("hamming", "verified", th.alias("threshold"))
-              .where(F.col("hamming") <= F.col("threshold")))
-    total_truth = (pairs.where("verified")
-                   .agg(F.count(F.lit(1)).alias("n_truth")))
-    per = (tagged.groupBy("threshold")
-           .agg(F.count(F.lit(1)).alias("n_candidates"),
-                F.sum(F.col("verified").cast("long")).alias("n_verified")))
-    return (per.crossJoin(F.broadcast(total_truth))
-            .select("threshold", "n_candidates", "n_verified",
-                    F.round(F.col("n_verified")
-                            / F.col("n_candidates").cast("double"), 6)
-                    .alias("precision"),
-                    F.round(F.col("n_verified")
-                            / F.col("n_truth").cast("double"), 6)
-                    .alias("recall_in_superset")))
-
-
 # ---------------------------------------------------------------------------
-# audio / video plumbing — same opaque-binary + typed-metadata design as
-# images. The synthetic container formats below are deterministic stand-ins
-# (counter-mode sha256 payloads, zlib frames) so encode→decode→feature can
-# be tested bit-for-bit; real codecs (libsndfile, ffmpeg/PyAV) are gated
-# behind import-tries exactly like decode_real_image.
-#
-# Scale shape: every operator here is a map-only mapInPandas — no shuffle.
-# Raw media bytes never cross an exchange; frame sampling explodes WORKER-
-# side and only the per-frame feature rows (a few dozen bytes each) flow
-# downstream. At 100 TB the input split carries the parallelism and the
-# Arrow batch (spark.sql.execution.arrow.maxRecordsPerBatch) bounds worker
-# memory to batch_rows × max_media_bytes.
+# audio / video containers — deterministic synthetic stand-ins (zlib PCM,
+# zlib frames) so encode→decode round-trips bit-for-bit; real codecs
+# (libsndfile, ffmpeg/PyAV) are gated behind import-tries exactly like
+# decode_real_image.
 # ---------------------------------------------------------------------------
 
 import struct
@@ -606,151 +471,12 @@ def decode_real_video(buf: bytes) -> tuple[np.ndarray, int]:
     raise NotImplementedError("wire PyAV frame iteration here")
 
 
-SYNTH_AUDIO_SCHEMA = "audio_id string, bytes binary, sample_rate int, n_samples int"
-SYNTH_VIDEO_SCHEMA = ("video_id string, bytes binary, fps int, n_frames int, "
-                      "w int, h int")
-
-
-def _audio_payload(seed: int, m: int) -> tuple[bytes, int, int]:
-    from ..crawl.synthweb import _byte_stream, _dint
-    h = _dint(seed, "aud", m)
-    n = 2048 + h % 2048
-    rate = 8000 if (h >> 16) % 2 == 0 else 16000
-    pcm = (_byte_stream(seed, f"aud:{m}", 2 * n)
-           .view("<i2").astype(np.int16))
-    return encode_audio(pcm, rate), rate, n
-
-
-def _video_payload(seed: int, m: int) -> tuple[bytes, int, int, int, int]:
-    from ..crawl.synthweb import _byte_stream, _dint
-    hsh = _dint(seed, "vid", m)
-    n = 8 + hsh % 9                  # 8..16 frames
-    w = 16 + (hsh >> 8) % 17         # 16..32 px
-    h = 16 + (hsh >> 16) % 17
-    fps = 4 if (hsh >> 24) % 2 == 0 else 8
-    frames = _byte_stream(seed, f"vid:{m}", n * h * w).reshape(n, h, w)
-    return encode_video(frames, fps), fps, n, w, h
-
-
-def quantize_pcm(samples: np.ndarray, shift: int) -> np.ndarray:
-    """Requantize int16 PCM by an arithmetic bit-shift (the synthetic
-    stand-in for a lossy transcode): shift 4 ≈ 71 dB (inaudible), shift
-    12 ≈ 23 dB (badly degraded). Arithmetic shift floors negatives the
-    same way in numpy and the oracle mirror."""
-    return ((samples.astype(np.int64) >> shift) << shift).astype(np.int16)
-
-
-def audio_energy_hash(samples: np.ndarray) -> int:
-    """64-bit energy fingerprint (the aHash/chromaprint analog for
-    audio): 64 equal windows over |PCM|, bit i = window mean > global
-    mean. Robust to light requantization (≤1 bit flips at ~71 dB), a
-    few bits adrift under heavy requantization — the proposal tier
-    audio_snr_verified_neardup bands on. Signed-int64 convention matches
-    Spark's LongType."""
-    ax = np.abs(samples.astype(np.int64))
-    n = len(ax)
-    bounds = np.linspace(0, n, 65).astype(int)
-    g = ax.mean() if n else 0.0
-    bits = 0
-    for i in range(64):
-        w = ax[bounds[i]:max(bounds[i] + 1, bounds[i + 1])]
-        if len(w) and w.mean() > g:
-            bits |= 1 << i
-    return bits if bits < (1 << 63) else bits - (1 << 64)
-
-
-def audio_psnr(a: np.ndarray, b: np.ndarray) -> float:
-    """Peak-referenced SNR between two equal-length int16 PCM signals
-    (peak 32767, the audio analog of the image psnr); inf ⇔ identical."""
-    d = a.astype(np.int64) - b.astype(np.int64)
-    mse = float((d * d).mean())
-    if mse == 0.0:
-        return float("inf")
-    return 10.0 * float(np.log10(32767.0 ** 2 / mse))
-
-
-def audios_for_keys(seed: int = 42, dup_mod: int = 0,
-                    variant_shifts: tuple[int, ...] | None = None):
-    """Arrow-batched generator of synthetic audio rows keyed by `doc_id`
-    (the images_for_keys analog). dup_mod > 0 folds keys into
-    exact-duplicate payload groups; variant_shifts (with dup_mod) picks
-    the requantization shift per key REPETITION —
-    ``variant_shifts[(key // dup_mod) % len]`` — so one PCM group yields
-    lossless/light/heavy encodings of the SAME signal (the corpus shape
-    the SNR-verified dedup tier needs)."""
-
-    def gen(batches):
-        for pdf in batches:
-            rows = {k: [] for k in
-                    ("audio_id", "bytes", "sample_rate", "n_samples")}
-            for key in pdf["doc_id"]:
-                m = int(key) % dup_mod if dup_mod else int(key)
-                buf, rate, n = _audio_payload(seed, m)
-                if variant_shifts and dup_mod:
-                    shift = variant_shifts[
-                        (int(key) // dup_mod) % len(variant_shifts)]
-                    if shift:
-                        pcm, rate = decode_audio(buf)
-                        buf = encode_audio(quantize_pcm(pcm, shift), rate)
-                rows["audio_id"].append(f"aud-{int(key):08d}")
-                rows["bytes"].append(buf)
-                rows["sample_rate"].append(rate)
-                rows["n_samples"].append(n)
-            yield pd.DataFrame({
-                "audio_id": rows["audio_id"], "bytes": rows["bytes"],
-                "sample_rate": pd.array(rows["sample_rate"], dtype="Int32"),
-                "n_samples": pd.array(rows["n_samples"], dtype="Int32")})
-
-    return gen
-
-
-AUDIO_SNR_SCHEMA = T.StructType([
-    T.StructField("aud_a", T.StringType()),
-    T.StructField("aud_b", T.StringType()),
-    T.StructField("hamming", T.IntegerType()),
-    T.StructField("same_shape", T.BooleanType()),
-    T.StructField("exact_samples", T.BooleanType()),
-    T.StructField("snr_db", T.DoubleType()),
-    T.StructField("verified", T.BooleanType()),
-])
-
-
-def audio_snr_verified_neardup(audios: DataFrame, max_hamming: int = 10,
-                               min_snr_db: float = 40.0,
-                               prefilter: str | None = None) -> DataFrame:
-    """Two-tier audio near-dup — the psnr_verified_neardup pattern over
-    PCM: a cheap 64-bit energy fingerprint PROPOSES via a banded Hamming
-    join, decoded samples VERIFY at the peak-SNR bar. A light requantize
-    (~71 dB) passes; a heavy one (~23 dB) sits a few fingerprint bits
-    from its source yet FAILS — the call a signature-only dedup cannot
-    make.
-
-    Scale shape (the shared _verified_pairs engine): fingerprints are
-    one map-only Arrow pass; the banded self-join prunes before any
-    payload moves; bytes join at CANDIDATE volume only; the sample
-    compare is a map-only Arrow batch walk with snr rounded at 1e-6 so
-    the verdict is engine-exact vs the codec mirror. Different
-    (length, rate) ⇒ unverifiable (never a dup).
-
-    ``prefilter="screen"`` inserts the block-mean screen rung (AUDIO
-    descriptor of the shared media screen tier) — identical verified
-    edges, unverifiable candidate rows dropped pre-byte-gather; "auto"
-    gates on banded candidate volume."""
-    return _verified_pairs(
-        audios, id_col="audio_id", a_col="aud_a", b_col="aud_b",
-        sig_col="ahash", fingerprint_fn=audio_energy_hash,
-        decode_fn=decode_audio, psnr_fn=audio_psnr,
-        max_hamming=max_hamming, min_bar=min_snr_db,
-        out_schema=AUDIO_SNR_SCHEMA, exact_col="exact_samples",
-        value_col="snr_db", screen=AUDIO_SCREEN, prefilter=prefilter)
-
-
 def banded_hamming_pairs(sigs: DataFrame, id_col: str, sig_col: str,
                          a_col: str, b_col: str,
                          max_hamming: int) -> DataFrame:
-    """Banded 64-bit Hamming self-join (4 × 16-bit bands): the shared
-    proposal tier of the image/audio/video two-tier near-dups (and the
-    relational half the oracles restate via _hamming_band_join_sql)."""
+    """Banded 64-bit Hamming self-join (4 × 16-bit bands): the proposal
+    tier of the two-tier image near-dups (and the relational half the
+    oracles restate via _hamming_band_join_sql)."""
     bands = sigs.select(
         id_col, sig_col,
         F.explode(F.array(*[
@@ -773,180 +499,10 @@ def banded_hamming_pairs(sigs: DataFrame, id_col: str, sig_col: str,
         .where(F.col("hamming") <= max_hamming))
 
 
-def banded_hamming_probe(new_sigs: DataFrame, old_sigs: DataFrame,
-                         new_id: str, old_id: str, sig_col: str,
-                         a_col: str, b_col: str,
-                         max_hamming: int) -> DataFrame:
-    """Cross-table variant of banded_hamming_pairs: the NEW batch probes
-    the HISTORY signature index (4 × 16-bit bands), yielding only
-    new×old candidates — new×new and old×old pairs are never formed.
-    Lossless for Hamming ≤ 48 by pigeonhole (any such pair agrees on at
-    least one full band); in practice max_hamming ≪ 16.
-
-    Scale shape: both sides explode to 4 band rows and meet in ONE
-    (band_no, bkt) hash join; at 10^10 the history side is a
-    materialized table bucketed on (band_no, bkt) so only the new
-    batch shuffles."""
-    def bands(df: DataFrame, id_c: str) -> DataFrame:
-        return df.select(
-            id_c, sig_col,
-            F.explode(F.array(*[
-                F.struct(F.lit(i).alias("band_no"),
-                         F.shiftright(sig_col, i * 16)
-                         .bitwiseAND(F.lit(0xFFFF)).alias("bkt"))
-                for i in range(4)])).alias("bb"),
-        ).select(id_c, sig_col, "bb.band_no", "bb.bkt").distinct()
-
-    a, b = bands(new_sigs, new_id).alias("a"), bands(old_sigs,
-                                                     old_id).alias("b")
-    return (
-        a.join(b, (F.col("a.band_no") == F.col("b.band_no"))
-               & (F.col("a.bkt") == F.col("b.bkt")))
-        .select(F.col(f"a.{new_id}").alias(a_col),
-                F.col(f"b.{old_id}").alias(b_col),
-                F.bit_count(F.col(f"a.{sig_col}")
-                            .bitwiseXOR(F.col(f"b.{sig_col}")))
-                .alias("hamming"))
-        .distinct()
-        .where(F.col("hamming") <= max_hamming))
-
-
-def _media_fp_pass(items: DataFrame, id_col: str, sig_col: str,
-                   fingerprint_fn, decode_fn) -> DataFrame:
-    """One Arrow decode+fingerprint pass: (id, 64-bit signature)."""
-    def fp(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {id_col: [], sig_col: []}
-            for mid, buf in zip(pdf[id_col], pdf["bytes"]):
-                payload, _ = decode_fn(bytes(buf))
-                out[id_col].append(mid)
-                out[sig_col].append(fingerprint_fn(payload))
-            yield pd.DataFrame({
-                id_col: out[id_col],
-                sig_col: pd.array(out[sig_col], dtype="Int64")})
-
-    return items.select(id_col, "bytes").mapInPandas(
-        fp, f"{id_col} string, {sig_col} long")
-
-
-def _make_media_verifier(decode_fn, psnr_fn, a_col: str, b_col: str,
-                         exact_col: str, value_col: str, min_bar: float):
-    """The decode-compare Arrow kernel shared by the self-join tiers and
-    the incremental new-vs-history probes. decode_fn returns
-    (payload, meta); differing (payload.shape, meta) ⇒ unverifiable;
-    psnr_fn inf ⇔ exact; values rounded 1e-6 (engine-exact vs the codec
-    mirror oracles)."""
-    def verify(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            same, exact, vals, ok = [], [], [], []
-            for ba, bb in zip(pdf["bytes_a"], pdf["bytes_b"]):
-                pa, ma = decode_fn(bytes(ba))
-                pb, mb = decode_fn(bytes(bb))
-                if pa.shape != pb.shape or ma != mb:
-                    same.append(False)
-                    exact.append(False)
-                    vals.append(None)
-                    ok.append(False)
-                    continue
-                same.append(True)
-                v = psnr_fn(pa, pb)
-                if v == float("inf"):
-                    exact.append(True)
-                    vals.append(None)
-                    ok.append(True)
-                else:
-                    r = round(v, 6)
-                    exact.append(False)
-                    vals.append(r)
-                    ok.append(r >= min_bar)
-            yield pd.DataFrame({
-                a_col: pdf[a_col], b_col: pdf[b_col],
-                "hamming": pdf["hamming"].astype("int32"),
-                "same_shape": same, exact_col: exact,
-                value_col: pd.array(vals, dtype="float64"),
-                "verified": ok})
-
-    return verify
-
-
-# -- audio/video screen tier -------------------------------------------------
-# The image thumbnail screen generalized to every opaque modality: a
-# coarse BLOCK-MEAN signature (float32, ~1 KB) joined at candidate
-# volume instead of the payload bytes, rejecting pairs that PROVABLY
-# cannot reach the verify bar. Soundness is the same Jensen argument as
-# the image tier (multimodal.py thumbnail-screen comment): with both
-# payloads reduced by the SAME fixed partition of the sample/pixel
-# domain, count-weighted MSE over block-mean differences is ≤ the full
-# MSE, hence the screen's PSNR/SNR upper-bounds the full verify —
-# screen < bar ⇒ the decode-compare fails too. Audio partitions the PCM
-# stream into ≤256 sample blocks; video partitions every frame into an
-# 8×8 block grid (a per-frame partition of the n·h·w pixel domain, so
-# temporal structure is preserved frame-by-frame). Meta-mismatched pairs
-# (length/rate, n/h/w/fps) are never verifiable and drop on the slim
-# meta columns without decoding anything.
-
-AUDIO_SCREEN_K = 256  # PCM sample blocks per signature
-VIDEO_SCREEN_T = 8    # per-frame block-grid side
-
-
-def audio_screen_means(pcm: np.ndarray,
-                       k: int = AUDIO_SCREEN_K) -> np.ndarray:
-    """Count-exact block means over ≤k equal PCM windows, float64."""
-    n = len(pcm)
-    kk = max(1, min(k, n))
-    bounds = np.linspace(0, n, kk + 1).astype(np.int64)
-    sums = np.add.reduceat(pcm.astype(np.float64), bounds[:-1])
-    return sums / np.diff(bounds)
-
-
-def _audio_screen_counts(n: int, k: int = AUDIO_SCREEN_K) -> np.ndarray:
-    kk = max(1, min(k, n))
-    return np.diff(np.linspace(0, n, kk + 1).astype(np.int64)) \
-        .astype(np.float64)
-
-
-def video_screen_means(frames: np.ndarray,
-                       t: int = VIDEO_SCREEN_T) -> np.ndarray:
-    """Per-frame t×t block means (the thumbnail grid applied to every
-    frame), concatenated along time — one fixed partition of the full
-    n·h·w pixel domain."""
-    return np.concatenate(
-        [thumb_block_means(f, t).ravel() for f in frames])
-
-
-def _video_screen_counts(n: int, h: int, w: int,
-                         t: int = VIDEO_SCREEN_T) -> np.ndarray:
-    ys, xs = _thumb_grid(h, w, t)
-    per = np.outer(np.diff(ys), np.diff(xs)).ravel().astype(np.float64)
-    return np.tile(per, n)
-
-
-def _audio_screen_row(buf: bytes):
-    pcm, rate = decode_audio(buf)
-    return (len(pcm), int(rate), 0, 0), audio_screen_means(pcm)
-
-
-def _video_screen_row(buf: bytes):
-    frames, fps = decode_video(buf)
-    n, h, w = frames.shape
-    return (int(n), int(h), int(w), int(fps)), video_screen_means(frames)
-
-
-# modality descriptors: the decode→(meta, block-means) row function, the
-# meta→block-count reconstruction, and the PSNR peak reference
-AUDIO_SCREEN = {"row": _audio_screen_row,
-                "counts": lambda m: _audio_screen_counts(int(m[0])),
-                "peak": 32767.0}
-VIDEO_SCREEN = {"row": _video_screen_row,
-                "counts": lambda m: _video_screen_counts(
-                    int(m[0]), int(m[1]), int(m[2])),
-                "peak": 255.0}
-
-
 def screen_gate(pairs: DataFrame, screen_fn, min_pairs: int,
                 probe_pairs: int = 512,
                 max_keep_frac: float = 0.8) -> tuple[DataFrame, bool]:
-    """AQE-style two-phase runtime gate shared by every screen rung.
+    """AQE-style two-phase runtime gate for the thumbnail screen rung.
     Returns (persisted pairs, engage?).
 
     Phase 1 (volume): persist + count the banded candidate frame (the
@@ -975,581 +531,11 @@ def screen_gate(pairs: DataFrame, screen_fn, min_pairs: int,
     return pairs, kept <= max_keep_frac * min(n, probe_pairs)
 
 
-def media_screen_sigs(items: DataFrame, id_col: str, row_fn) -> DataFrame:
-    """One decode per item → (id, m0..m3 meta ints, float32 block-mean
-    signature): the screen tier's signature table. At 10^10 this is
-    MATERIALIZED next to the banding signature index (both are per-item
-    signatures) so re-screens never re-decode the corpus."""
-
-    def sigs(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {id_col: [], "m0": [], "m1": [], "m2": [], "m3": [],
-                   "sig": []}
-            for iid, buf in zip(pdf[id_col], pdf["bytes"]):
-                meta, means = row_fn(bytes(buf))
-                out[id_col].append(iid)
-                for j in range(4):
-                    out[f"m{j}"].append(meta[j])
-                out["sig"].append(means.astype(np.float32).tobytes())
-            yield pd.DataFrame({
-                id_col: out[id_col],
-                **{f"m{j}": pd.array(out[f"m{j}"], dtype="Int32")
-                   for j in range(4)},
-                "sig": out["sig"]})
-
-    return items.select(id_col, "bytes").mapInPandas(
-        sigs, f"{id_col} string, m0 int, m1 int, m2 int, m3 int, "
-              f"sig binary")
-
-
-def media_screened_pairs(items: DataFrame, pairs: DataFrame,
-                         min_bar: float, screen: dict,
-                         id_col: str, a_col: str, b_col: str,
-                         items_b: DataFrame | None = None) -> DataFrame:
-    """Prune candidate (a, b, hamming) pairs to the screen-plausible
-    subset for any opaque modality: keep a pair iff metas match AND the
-    block-mean PSNR bound clears min_bar (1e-3 dB slack for float32 sig
-    storage; the bound itself is exact in float64). Dropped pairs are
-    PROVABLY unverifiable, so `where(verified)` consumers see identical
-    results. Sig computation is semi-join-restricted to ids that appear
-    in the pairs (the image-screen lesson: Catalyst can't push a join
-    below mapInPandas, so without this both corpora decode wholesale)."""
-    # broadcast the candidate-id lists — the item side carries payload
-    # bytes and must never shuffle for this semi join (see the image
-    # screen's identical note)
-    if items_b is None:
-        ids = (pairs.select(F.col(a_col).alias(id_col))
-               .union(pairs.select(F.col(b_col).alias(id_col)))
-               .distinct())
-        sigs = media_screen_sigs(
-            items.join(F.broadcast(ids), id_col, "left_semi"), id_col,
-            screen["row"])
-        sigs_b = sigs
-    else:
-        ids_a = pairs.select(F.col(a_col).alias(id_col)).distinct()
-        ids_b = pairs.select(F.col(b_col).alias(id_col)).distinct()
-        sigs = media_screen_sigs(
-            items.join(F.broadcast(ids_a), id_col, "left_semi"), id_col,
-            screen["row"])
-        sigs_b = media_screen_sigs(
-            items_b.join(F.broadcast(ids_b), id_col, "left_semi"),
-            id_col, screen["row"])
-
-    cand = (
-        gather_pair_payloads(pairs, a_col, b_col, sigs, sigs_b, id_col,
-                             F.struct("m0", "m1", "m2", "m3", "sig"),
-                             "_sa", "_sb")
-        # meta mismatch ⇒ never verified: drop on slim columns
-        .where((F.col("_sa.m0") == F.col("_sb.m0"))
-               & (F.col("_sa.m1") == F.col("_sb.m1"))
-               & (F.col("_sa.m2") == F.col("_sb.m2"))
-               & (F.col("_sa.m3") == F.col("_sb.m3")))
-        .select(a_col, b_col, "hamming",
-                F.col("_sa.m0").alias("m0"), F.col("_sa.m1").alias("m1"),
-                F.col("_sa.m2").alias("m2"),
-                F.col("_sa.sig").alias("sig_a"),
-                F.col("_sb.sig").alias("sig_b")))
-
-    bar = min_bar - 1e-3
-    counts_fn, peak = screen["counts"], screen["peak"]
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            keep = np.zeros(len(pdf), dtype=bool)
-            for i, (sa, sb, m0, m1, m2) in enumerate(zip(
-                    pdf["sig_a"], pdf["sig_b"],
-                    pdf["m0"], pdf["m1"], pdf["m2"])):
-                ma = np.frombuffer(sa, dtype=np.float32).astype(np.float64)
-                mb = np.frombuffer(sb, dtype=np.float32).astype(np.float64)
-                cnts = counts_fn((m0, m1, m2))
-                d = ma - mb
-                mse = float((cnts * d * d).sum() / cnts.sum())
-                keep[i] = (mse == 0.0 or
-                           20.0 * np.log10(peak) - 10.0 * np.log10(mse)
-                           >= bar)
-            out = pdf.loc[keep, [a_col, b_col, "hamming"]]
-            yield pd.DataFrame({
-                a_col: out[a_col], b_col: out[b_col],
-                "hamming": out["hamming"].astype("int32")})
-
-    return cand.mapInPandas(
-        kernel,
-        T.StructType([T.StructField(a_col, T.StringType()),
-                      T.StructField(b_col, T.StringType()),
-                      T.StructField("hamming", T.IntegerType())]))
-
-
-def _verified_pairs(items: DataFrame, id_col: str, a_col: str,
-                    b_col: str, sig_col: str, fingerprint_fn,
-                    decode_fn, psnr_fn, max_hamming: int,
-                    min_bar: float, out_schema: T.StructType,
-                    exact_col: str, value_col: str,
-                    screen: dict | None = None,
-                    prefilter: str | None = None,
-                    screen_min_pairs: int = 20_000) -> DataFrame:
-    """The shared two-tier engine for opaque media: an Arrow fingerprint
-    pass → banded_hamming_pairs proposal → payload bytes gathered at
-    CANDIDATE volume (gather_pair_payloads — the corpus never
-    broadcasts or shuffles) → an Arrow decode-compare verify at the
-    quality bar.
-
-    ``prefilter`` (requires a ``screen`` descriptor): "screen" inserts
-    the block-mean screen rung between banding and the byte gather —
-    provably-unverifiable pairs die on ~1 KB sigs before any payload
-    byte moves, so the VERIFIED edge set is unchanged but unverifiable
-    candidate rows disappear from the output (use None for
-    candidate-level accounting, the screen for `where(verified)` edge
-    consumers). "auto" engages the screen only when the banded
-    candidate count reaches screen_min_pairs (the persisted-count gate
-    of incremental_image_dedup)."""
-    if prefilter not in (None, "screen", "auto"):
-        raise ValueError(f"prefilter must be None, 'screen' or 'auto': "
-                         f"{prefilter!r}")
-    sigs = _media_fp_pass(items, id_col, sig_col, fingerprint_fn,
-                          decode_fn)
-    pairs = banded_hamming_pairs(sigs, id_col, sig_col, a_col, b_col,
-                                 max_hamming)
-    use_screen = prefilter == "screen"
-    if prefilter == "auto":
-        pairs, use_screen = screen_gate(
-            pairs,
-            lambda p: media_screened_pairs(items, p, min_bar, screen,
-                                           id_col, a_col, b_col),
-            min_pairs=screen_min_pairs)
-    if use_screen:
-        pairs = media_screened_pairs(items, pairs, min_bar, screen,
-                                     id_col, a_col, b_col)
-    payload = items.select(id_col, "bytes")
-    cand = gather_pair_payloads(pairs, a_col, b_col, payload, payload,
-                                id_col, F.col("bytes"),
-                                "bytes_a", "bytes_b")
-    return cand.mapInPandas(
-        _make_media_verifier(decode_fn, psnr_fn, a_col, b_col,
-                             exact_col, value_col, min_bar), out_schema)
-
-
-def media_history_index(old_items: DataFrame, id_col: str,
-                        fingerprint_fn, decode_fn) -> dict[str, DataFrame]:
-    """The accepted media corpus's dedup index — exact payload
-    fingerprints + 64-bit perceptual signatures — that every incoming
-    batch probes (the audio/video analog of image_history_index; at
-    production scale both tables are MATERIALIZED and appended to, so
-    the history is never re-decoded per batch: fp hash-partitioned on
-    fp, sig bucketed on its 16-bit bands)."""
-    return {
-        "fp": old_items.select(F.col(id_col).alias("old_id"),
-                               F.sha2("bytes", 256).alias("fp")),
-        "sig": _media_fp_pass(old_items, id_col, "sig", fingerprint_fn,
-                              decode_fn)
-        .select(F.col(id_col).alias("old_id"), "sig"),
-    }
-
-
-def _incremental_media_dedup(new_items: DataFrame, old_items: DataFrame,
-                             id_col: str, fingerprint_fn, decode_fn,
-                             psnr_fn, max_hamming: int, min_bar: float,
-                             exact_col: str, value_col: str,
-                             match_label: str,
-                             index: dict[str, DataFrame] | None = None,
-                             screen: dict | None = None,
-                             prefilter: str | None = None,
-                             screen_min_pairs: int = 20_000,
-                             ) -> DataFrame:
-    """Generic new-batch-vs-accepted-corpus media dedup — the
-    incremental_image_dedup shape for ANY opaque payload: exact sha2
-    probe of the history fp index first, then the survivors' signatures
-    probe the history sig index via banded_hamming_probe (new×old
-    candidates only; neither self-join side is ever formed), payload
-    bytes gathered at candidate volume (new + history tables
-    role-tagged, both stream), best verified match per new item wins.
-    Returns (id, keep, match_kind ∈ {exact, <match_label>, null},
-    matched_old, hamming, <value_col>).
-
-    ``prefilter`` (with a ``screen`` descriptor) inserts the block-mean
-    screen rung between the banded probe and the byte gather; the
-    output is per-item verdicts AFTER `where(verified)`, so the screen
-    never changes results here. "auto" (the incremental_image_dedup
-    gate) counts the persisted probe frame and screens only at
-    ≥ screen_min_pairs candidates."""
-    from pyspark.sql import Window
-
-    if prefilter not in (None, "screen", "auto"):
-        raise ValueError(f"prefilter must be None, 'screen' or 'auto': "
-                         f"{prefilter!r}")
-    if index is None:
-        index = media_history_index(old_items, id_col, fingerprint_fn,
-                                    decode_fn)
-    exact = (new_items
-             .select(id_col, F.sha2("bytes", 256).alias("fp"))
-             .join(index["fp"], "fp")
-             .groupBy(id_col)
-             .agg(F.min("old_id").alias("exact_old")))
-    survivors = new_items.join(exact, id_col, "left_anti")
-    new_sigs = _media_fp_pass(survivors, id_col, "sig", fingerprint_fn,
-                              decode_fn)
-    pairs = banded_hamming_probe(new_sigs, index["sig"], id_col,
-                                 "old_id", "sig", "med_a", "med_b",
-                                 max_hamming)
-    use_screen = prefilter == "screen"
-    if prefilter == "auto":
-        pairs, use_screen = screen_gate(
-            pairs,
-            lambda p: media_screened_pairs(
-                survivors, p, min_bar, screen, id_col, "med_a", "med_b",
-                items_b=old_items.select(id_col, "bytes")),
-            min_pairs=screen_min_pairs)
-    if use_screen:
-        pairs = media_screened_pairs(
-            survivors, pairs, min_bar, screen, id_col, "med_a", "med_b",
-            items_b=old_items.select(id_col, "bytes"))
-    cand = gather_pair_payloads(
-        pairs, "med_a", "med_b",
-        survivors.select(id_col, "bytes"),
-        old_items.select(id_col, "bytes"),
-        id_col, F.col("bytes"), "bytes_a", "bytes_b")
-    schema = T.StructType([
-        T.StructField("med_a", T.StringType()),
-        T.StructField("med_b", T.StringType()),
-        T.StructField("hamming", T.IntegerType()),
-        T.StructField("same_shape", T.BooleanType()),
-        T.StructField(exact_col, T.BooleanType()),
-        T.StructField(value_col, T.DoubleType()),
-        T.StructField("verified", T.BooleanType()),
-    ])
-    verified = cand.mapInPandas(
-        _make_media_verifier(decode_fn, psnr_fn, "med_a", "med_b",
-                             exact_col, value_col, min_bar),
-        schema).where(F.col("verified"))
-    win = Window.partitionBy("med_a").orderBy(
-        F.col(exact_col).desc(),
-        F.col(value_col).desc_nulls_last(),
-        F.col("med_b").asc())
-    best = (verified
-            .withColumn("_rk", F.row_number().over(win))
-            .where(F.col("_rk") == 1)
-            .select(F.col("med_a").alias(id_col),
-                    F.col("med_b").alias("near_old"),
-                    "hamming", value_col))
-    return (new_items.select(id_col)
-            .join(exact, id_col, "left")
-            .join(best, id_col, "left")
-            .select(
-                id_col,
-                (F.col("exact_old").isNull()
-                 & F.col("near_old").isNull()).alias("keep"),
-                F.when(F.col("exact_old").isNotNull(), F.lit("exact"))
-                .when(F.col("near_old").isNotNull(), F.lit(match_label))
-                .alias("match_kind"),
-                F.coalesce("exact_old", "near_old").alias("matched_old"),
-                "hamming", value_col))
-
-
-def incremental_audio_dedup(new_audios: DataFrame, old_audios: DataFrame,
-                            max_hamming: int = 10,
-                            min_snr_db: float = 40.0,
-                            index: dict[str, DataFrame] | None = None,
-                            prefilter: str | None = "auto",
-                            screen_min_pairs: int = 20_000,
-                            ) -> DataFrame:
-    """Dedup a NEW audio batch against the ACCEPTED corpus — the
-    incremental_image_dedup shape over PCM (exact sha2 tier, then
-    energy-hash banded probe + peak-SNR verify of survivors). The
-    block-mean screen rung engages automatically at candidate volume
-    (prefilter='auto'; output identical either way)."""
-    return _incremental_media_dedup(
-        new_audios, old_audios, "audio_id", audio_energy_hash,
-        decode_audio, audio_psnr, max_hamming, min_snr_db,
-        "exact_samples", "snr_db", "snr", index=index,
-        screen=AUDIO_SCREEN, prefilter=prefilter,
-        screen_min_pairs=screen_min_pairs)
-
-
-def incremental_video_dedup(new_videos: DataFrame, old_videos: DataFrame,
-                            max_hamming: int = 10,
-                            min_psnr_db: float = 40.0,
-                            index: dict[str, DataFrame] | None = None,
-                            prefilter: str | None = "auto",
-                            screen_min_pairs: int = 20_000,
-                            ) -> DataFrame:
-    """Dedup a NEW video batch against the ACCEPTED corpus — the same
-    incremental shape over frame stacks (temporal-hash banded probe +
-    frame-PSNR verify). The per-frame block-mean screen rung engages
-    automatically at candidate volume (prefilter='auto'; output
-    identical either way)."""
-    return _incremental_media_dedup(
-        new_videos, old_videos, "video_id", video_temporal_hash,
-        decode_video, video_psnr, max_hamming, min_psnr_db,
-        "exact_frames", "psnr_db", "psnr", index=index,
-        screen=VIDEO_SCREEN, prefilter=prefilter,
-        screen_min_pairs=screen_min_pairs)
-
-
-def media_variant_dedup(items: DataFrame, verified_pairs: DataFrame,
-                        id_col: str, a_col: str, b_col: str) -> DataFrame:
-    """Variant-aware survivor selection for opaque media (audio/video —
-    the image tier has its own fmt-ranked variant): connected components
-    over the VERIFIED pair set, one survivor per cluster preferring the
-    LARGEST payload — under a fixed codec the least-quantized encoding
-    compresses worst, so byte length is the fidelity rank a schemaless
-    store can always compute — ties to the lowest id. Same scale shape
-    as image_variant_dedup: components iterate over verified edges only;
-    the survivor pick is one cluster-keyed min(struct) hash agg joined
-    back at corpus volume."""
-    from .dedup import assign_clusters
-
-    clustered = assign_clusters(
-        items.select(F.col(id_col),
-                     F.length(F.col("bytes")).alias("nbytes")),
-        verified_pairs, id_col=id_col, src=a_col, dst=b_col)
-    winners = (clustered.groupBy("cluster_id")
-               .agg(F.min(F.struct((-F.col("nbytes")).alias("neg"),
-                                   F.col(id_col).alias("win")))
-                    .getField("win").alias("survivor")))
-    return (clustered.join(winners, "cluster_id")
-            .select(id_col, "cluster_id", "nbytes",
-                    (F.col(id_col) == F.col("survivor")).alias("keep")))
-
-
-def quantize_frames(frames: np.ndarray, shift: int) -> np.ndarray:
-    """Requantize uint8 frames by a bit-shift (lossy re-encode stand-in):
-    shift 1 ≈ 51 dB (visually identical), shift 4 ≈ 29 dB (degraded)."""
-    return ((frames >> shift) << shift)
-
-
-def video_temporal_hash(frames: np.ndarray) -> int:
-    """64-bit spatiotemporal energy fingerprint: the audio energy hash
-    over the flattened frame stream (windows span the time axis first,
-    so temporal structure dominates the bits)."""
-    return audio_energy_hash(frames.astype(np.int16).ravel())
-
-
-def video_psnr(a: np.ndarray, b: np.ndarray) -> float:
-    """PSNR (peak 255) across all frames; inf ⇔ identical."""
-    d = a.astype(np.int64) - b.astype(np.int64)
-    mse = float((d * d).mean())
-    if mse == 0.0:
-        return float("inf")
-    return 10.0 * float(np.log10(255.0 ** 2 / mse))
-
-
-VIDEO_PSNR_SCHEMA = T.StructType([
-    T.StructField("vid_a", T.StringType()),
-    T.StructField("vid_b", T.StringType()),
-    T.StructField("hamming", T.IntegerType()),
-    T.StructField("same_shape", T.BooleanType()),
-    T.StructField("exact_frames", T.BooleanType()),
-    T.StructField("psnr_db", T.DoubleType()),
-    T.StructField("verified", T.BooleanType()),
-])
-
-
-def video_psnr_verified_neardup(videos: DataFrame, max_hamming: int = 10,
-                                min_psnr: float = 40.0,
-                                prefilter: str | None = None) -> DataFrame:
-    """Two-tier video near-dup — the psnr_neardup pattern on frame
-    streams: spatiotemporal energy fingerprints PROPOSE via a banded
-    Hamming join, decoded frames VERIFY at the 40 dB bar. A light
-    re-encode (~51 dB) merges; a heavy one (~29 dB) sits ≤4 fingerprint
-    bits away yet is REJECTED. Same scale shape as the image/audio
-    tiers (the shared _verified_pairs engine): fingerprints map-only,
-    bytes join at candidate volume, the frame compare a map-only Arrow
-    walk; (fps, n, h, w) mismatch ⇒ unverifiable.
-
-    ``prefilter="screen"`` inserts the per-frame block-mean screen rung
-    (VIDEO descriptor of the shared media screen tier) — identical
-    verified edges, unverifiable candidate rows dropped pre-byte-gather;
-    "auto" gates on banded candidate volume."""
-    return _verified_pairs(
-        videos, id_col="video_id", a_col="vid_a", b_col="vid_b",
-        sig_col="vhash", fingerprint_fn=video_temporal_hash,
-        decode_fn=decode_video, psnr_fn=video_psnr,
-        max_hamming=max_hamming, min_bar=min_psnr,
-        out_schema=VIDEO_PSNR_SCHEMA, exact_col="exact_frames",
-        value_col="psnr_db", screen=VIDEO_SCREEN, prefilter=prefilter)
-
-
-def videos_for_keys(seed: int = 42, dup_mod: int = 0,
-                    variant_shifts: tuple[int, ...] | None = None):
-    """Arrow-batched generator of synthetic video rows keyed by `doc_id`.
-    variant_shifts (with dup_mod): requantization shift per key
-    repetition — lossless/light/heavy encodings of the SAME frames."""
-
-    def gen(batches):
-        for pdf in batches:
-            rows = {k: [] for k in
-                    ("video_id", "bytes", "fps", "n_frames", "w", "h")}
-            for key in pdf["doc_id"]:
-                m = int(key) % dup_mod if dup_mod else int(key)
-                buf, fps, n, w, h = _video_payload(seed, m)
-                if variant_shifts and dup_mod:
-                    shift = variant_shifts[
-                        (int(key) // dup_mod) % len(variant_shifts)]
-                    if shift:
-                        frames, fps0 = decode_video(buf)
-                        buf = encode_video(quantize_frames(frames, shift),
-                                           fps0)
-                rows["video_id"].append(f"vid-{int(key):08d}")
-                rows["bytes"].append(buf)
-                rows["fps"].append(fps)
-                rows["n_frames"].append(n)
-                rows["w"].append(w)
-                rows["h"].append(h)
-            yield pd.DataFrame({
-                "video_id": rows["video_id"], "bytes": rows["bytes"],
-                **{c: pd.array(rows[c], dtype="Int32")
-                   for c in ("fps", "n_frames", "w", "h")}})
-
-    return gen
-
-
-AUDIO_FEATURES_SCHEMA = T.StructType([
-    T.StructField("audio_id", T.StringType()),
-    T.StructField("sample_rate", T.IntegerType()),
-    T.StructField("n_samples", T.IntegerType()),
-    T.StructField("duration_s", T.DoubleType()),
-    T.StructField("rms", T.DoubleType()),
-    T.StructField("peak", T.IntegerType()),
-    T.StructField("zero_crossings", T.LongType()),
-])
-
-
-def audio_feature_row(buf: bytes) -> dict:
-    """Decode + feature-extract one payload — shared verbatim by the Spark
-    operator and the DuckDB VALUES-oracle mirror (oracles._audio_group), so
-    both sides run the identical IEEE op sequence."""
-    pcm, rate = decode_audio(buf)
-    x = pcm.astype(np.float64)
-    return {
-        "sample_rate": rate,
-        "n_samples": len(pcm),
-        "duration_s": float(len(pcm)) / float(rate),
-        "rms": float(np.sqrt(np.mean(x * x))),
-        "peak": int(np.max(np.abs(pcm.astype(np.int32)))),
-        "zero_crossings": int(np.sum(x[:-1] * x[1:] < 0.0)),
-    }
-
-
-def audio_features(audios: DataFrame, bytes_col: str = "bytes",
-                   id_col: str = "audio_id") -> DataFrame:
-    """Per-clip acoustic features (duration, RMS energy, peak, zero-crossing
-    count) — the language-/quality-filter primitives of an audio training
-    pipeline. Map-only; raw bytes never shuffle."""
-
-    def feats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k.name: [] for k in AUDIO_FEATURES_SCHEMA}
-            for aid, buf in zip(pdf[id_col], pdf[bytes_col]):
-                row = audio_feature_row(bytes(buf))
-                out["audio_id"].append(aid)
-                for k, v in row.items():
-                    out[k].append(v)
-            yield pd.DataFrame({
-                "audio_id": out["audio_id"],
-                "sample_rate": pd.array(out["sample_rate"], dtype="Int32"),
-                "n_samples": pd.array(out["n_samples"], dtype="Int32"),
-                "duration_s": out["duration_s"],
-                "rms": out["rms"],
-                "peak": pd.array(out["peak"], dtype="Int32"),
-                "zero_crossings": pd.array(out["zero_crossings"],
-                                           dtype="Int64")})
-
-    return audios.select(id_col, bytes_col).mapInPandas(
-        feats, AUDIO_FEATURES_SCHEMA)
-
-
-VIDEO_FRAME_SCHEMA = T.StructType([
-    T.StructField("video_id", T.StringType()),
-    T.StructField("frame_idx", T.IntegerType()),
-    T.StructField("t_ms", T.LongType()),
-    T.StructField("mean_px", T.DoubleType()),
-    T.StructField("phash", T.LongType()),
-])
-
-
-def video_frames(buf: bytes, every_k: int) -> list[dict]:
-    """Sampled-frame feature rows for one payload — shared by the operator
-    and the oracle mirror."""
-    frames, fps = decode_video(buf)
-    out = []
-    for i in range(0, frames.shape[0], every_k):
-        out.append({
-            "frame_idx": i,
-            "t_ms": i * 1000 // fps,
-            "mean_px": float(frames[i].mean()),
-            "phash": average_phash(frames[i]),
-        })
-    return out
-
-
-def video_frame_sample(videos: DataFrame, every_k: int = 4,
-                       bytes_col: str = "bytes",
-                       id_col: str = "video_id") -> DataFrame:
-    """Sample every k-th frame and emit per-frame features — the
-    frame-extraction stage of a video training pipeline. The explode
-    happens WORKER-side inside the Arrow batch: one input row fans out to
-    ceil(n_frames/k) small feature rows, and the multi-GB raw payload is
-    dropped before anything reaches a shuffle."""
-
-    def sample(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k.name: [] for k in VIDEO_FRAME_SCHEMA}
-            for vid, buf in zip(pdf[id_col], pdf[bytes_col]):
-                for row in video_frames(bytes(buf), every_k):
-                    out["video_id"].append(vid)
-                    for k, v in row.items():
-                        out[k].append(v)
-            yield pd.DataFrame({
-                "video_id": out["video_id"],
-                "frame_idx": pd.array(out["frame_idx"], dtype="Int32"),
-                "t_ms": pd.array(out["t_ms"], dtype="Int64"),
-                "mean_px": out["mean_px"],
-                "phash": pd.array(out["phash"], dtype="Int64")})
-
-    return videos.select(id_col, bytes_col).mapInPandas(
-        sample, VIDEO_FRAME_SCHEMA)
-
-
 # ---------------------------------------------------------------------------
-# cross-modal dedup + curation over the image+caption input table
-# (BASELINE.json input_hint shape). Both are pure Catalyst — the payload
-# `bytes` column is never touched, so the scans column-prune it away.
+# curation over the image+caption input table (BASELINE.json input_hint
+# shape). Pure Catalyst — the payload `bytes` column is never touched, so
+# the scan column-prunes it away.
 # ---------------------------------------------------------------------------
-
-def caption_phash_dedup(images: DataFrame) -> DataFrame:
-    """Caption-group dedup verified cross-modally against the pixels.
-
-    Images are grouped by a normalized caption fingerprint; within a
-    caption group, rows whose phash also matches are true duplicates (keep
-    one), while rows sharing the caption but differing in pixels are
-    distinct training pairs that text-only dedup would wrongly collapse —
-    they all survive, one per payload variant:
-        keep = image_id == min(image_id) over (caption_fp, phash).
-
-    Scale shape: ONE exchange. The caption-level window runs first (hash
-    clustering on caption_fp), then the (caption_fp, phash) window — its
-    clustering requirement is satisfied by the existing caption_fp
-    partitioning, so Spark adds only a re-sort, no second shuffle
-    (pinned in tests/test_plans.py).
-
-    Returns (image_id, caption_fp, n_caption_dups, n_phash_variants,
-    keep)."""
-    from pyspark.sql import Window
-
-    fp = F.sha2(F.regexp_replace(F.lower(F.trim(F.col("caption"))),
-                                 WS_PLUS, " "), 256)
-    base = images.select("image_id", fp.alias("caption_fp"), "phash")
-    w_cap = Window.partitionBy("caption_fp")
-    w_var = Window.partitionBy("caption_fp", "phash")
-    return (base
-            .withColumn("n_caption_dups",
-                        F.count(F.lit(1)).over(w_cap))
-            .withColumn("n_phash_variants",
-                        F.size(F.collect_set("phash").over(w_cap))
-                        .cast("long"))
-            .withColumn("keep",
-                        F.col("image_id") == F.min("image_id").over(w_var))
-            .select("image_id", "caption_fp", "n_caption_dups",
-                    "n_phash_variants", "keep"))
 
 
 # curation rule thresholds (LAION-style pre-training filters)
@@ -1610,7 +596,7 @@ def aspect_bucket_batches(images: DataFrame, batch_size: int = 4,
     n_shards): each dataloader worker packs its own shard independently,
     so the only exchange is ONE hash partition on (bucket, shard) and the
     per-key window never serializes a whole bucket through one task —
-    the same sharded-window shape as sequence_packing. At 100 TB the
+    the sharded-window shape of a dataloader's packer. At 100 TB the
     bucket count is fixed (5) but shards scale with the cluster, so
     parallelism is n_buckets x n_shards, and batch ids stay deterministic
     per shard regardless of cluster size.
@@ -1636,77 +622,6 @@ def aspect_bucket_batches(images: DataFrame, batch_size: int = 4,
                 Window.partitionBy("bucket", "shard")))
             .where(F.col("batch_id") < F.expr(f"_n DIV {batch_size}"))
             .select("image_id", "bucket", "shard", "batch_id"))
-
-
-# (magic, mime) table for the synthetic container formats
-# (crawl/synthweb.py _PNG_MAGIC/_JPG_MAGIC); a real deployment swaps in
-# the PNG/JPEG/GIF/RIFF signatures — same fold, different literals.
-SNIFF_MAGIC = ((b"sPNG", "png"), (b"sJPG", "jpeg"))
-
-
-def mime_sniff(images: DataFrame, bytes_col: str = "bytes",
-               declared_col: str = "fmt",
-               id_col: str = "image_id") -> DataFrame:
-    """Magic-byte content sniffing vs the declared type — the
-    mislabeled-payload gate every crawler needs before handing bytes to
-    a decoder (a Content-Type header is attacker-controlled; the
-    4-byte signature is not). Returns
-    (image_id, declared, sniffed, mismatch); unknown signatures sniff
-    as 'unknown' and count as mismatches.
-
-    Scale shape: a map-only when-chain over a 4-byte binary substring —
-    rides the scan inside codegen, no Python, no exchange. (Parquet
-    still reads the full bytes column; at 100 TB the real win is
-    running this INSIDE the fetch worker before payload write — the
-    operator form exists for auditing stored corpora.)"""
-    prefix = F.substring(F.col(bytes_col), 1, 4)
-    sniffed = F.lit("unknown")
-    for magic, mime in reversed(SNIFF_MAGIC):
-        sniffed = F.when(prefix == F.lit(bytearray(magic)),
-                         F.lit(mime)).otherwise(sniffed)
-    return images.select(
-        F.col(id_col).alias("image_id"),
-        F.col(declared_col).alias("declared"),
-        sniffed.alias("sniffed"),
-        (F.col(declared_col) != sniffed).alias("mismatch"))
-
-
-META_STATS_SCHEMA = ("image_id string, n_meta int, has_gps boolean, "
-                     "payload_sha256 string")
-
-
-def image_meta_stats(images: DataFrame, bytes_col: str = "bytes",
-                     id_col: str = "image_id") -> DataFrame:
-    """Metadata-envelope audit + scrub evidence in one pass: per image,
-    the number of embedded metadata pairs, whether a GPS tag is present
-    (the privacy flag an image-training curation run gates on — LAION
-    strips EXIF/GPS before release), and the sha256 of the payload with
-    the envelope REMOVED. The synthetic envelope (crawl/synthweb.py
-    wrap_with_meta) stands in for JPEG APP1/EXIF; real-EXIF parsing
-    belongs to the env-gated real codec, same as decode_real_image.
-
-    Scale shape: map-only Arrow batch walk (header parse + one hash per
-    payload), no exchange; payload bytes never leave the task."""
-    from ..crawl.synthweb import split_meta
-
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
-        for pdf in batches:
-            ids, ns, gps, shas = [], [], [], []
-            for iid, buf in zip(pdf[id_col], pdf[bytes_col]):
-                meta, inner = split_meta(bytes(buf))
-                ids.append(iid)
-                ns.append(len(meta))
-                gps.append("gps" in meta)
-                shas.append(hashlib.sha256(inner).hexdigest())
-            yield pd.DataFrame({
-                "image_id": ids,
-                "n_meta": pd.array(ns, dtype="Int32"),
-                "has_gps": gps,
-                "payload_sha256": shas})
-
-    return images.select(id_col, bytes_col).mapInPandas(
-        stats, META_STATS_SCHEMA)
 
 
 def image_meta_scrub(images: DataFrame, bytes_col: str = "bytes") \
@@ -1765,9 +680,8 @@ def image_training_mix(images: DataFrame, max_hamming: int = 10,
 def _mix_stages(images: DataFrame, max_hamming: int, min_psnr: float,
                 batch_size: int, n_shards: int,
                 scrub_meta: bool = False) -> dict[str, DataFrame]:
-    """The training-mix cost ladder as named stages, shared by
-    image_training_mix (returns the final manifest) and image_mix_report
-    (counts every rung)."""
+    """The training-mix cost ladder as named stages; image_training_mix
+    returns the final one."""
     if scrub_meta:
         # scrub FIRST so every downstream hash/decode sees clean bytes
         # (map-only, schema-preserving — the ladder shape is unchanged)
@@ -1803,153 +717,3 @@ def _mix_stages(images: DataFrame, max_hamming: int, min_psnr: float,
     }
 
 
-def image_mix_report(images: DataFrame, max_hamming: int = 10,
-                     min_psnr: float = 40.0, batch_size: int = 4,
-                     n_shards: int = 4) -> DataFrame:
-    """Dataset-card accounting for image_training_mix — the auditable
-    "where did my corpus go" report a 100 TB curation run publishes next
-    to its manifest. One row per pipeline rung with surviving-row
-    counts (kind='stage': raw → curated → payload_unique →
-    variant_survivors → batched), plus the curation rejection breakdown
-    (kind='reject', one row per first-failing rule observed).
-
-    Scale shape: each rung's count is one partial agg over an id
-    projection of the shared stage ladder (payload bytes never enter
-    any count); the reject breakdown is a map-only groupBy on the
-    curation verdict column. The report costs roughly one extra pass
-    of the mix pipeline's CHEAP tiers — the PSNR verify tier is reused
-    from the ladder, not re-run per rung."""
-    stages = _mix_stages(images, max_hamming, min_psnr, batch_size,
-                         n_shards)
-
-    def stage_count(df: DataFrame, key: str) -> DataFrame:
-        return df.agg(F.count(F.lit(1)).alias("rows")).select(
-            F.lit("stage").alias("kind"), F.lit(key).alias("key"), "rows")
-
-    rejects = (stages["curation"].where(~F.col("keep"))
-               .groupBy(F.col("reason").alias("key"))
-               .agg(F.count(F.lit(1)).alias("rows"))
-               .select(F.lit("reject").alias("kind"), "key", "rows"))
-    out = stage_count(images, "raw")
-    for key in ("curated", "payload_unique", "variant_survivors",
-                "batched"):
-        out = out.unionByName(stage_count(stages[key], key))
-    return out.unionByName(rejects)
-
-
-def image_history_index(old_images: DataFrame) -> dict[str, DataFrame]:
-    """The accepted image corpus's dedup index: exact payload
-    fingerprints and the phash signature table every incoming crawl
-    batch probes. At production scale both are MATERIALIZED —
-    fp hash-partitioned on fp, phash bucketed on its 16-bit bands — and
-    appended to as batches are accepted, so the 10^10-image history is
-    never re-hashed per batch. incremental_image_dedup() accepts this
-    dict (each DataFrame may be a table read back from storage) via
-    `index=`."""
-    return {
-        "fp": old_images.select(F.col("image_id").alias("old_id"),
-                                F.sha2("bytes", 256).alias("fp")),
-        "phash": old_images.select(F.col("image_id").alias("old_id"),
-                                   "phash"),
-    }
-
-
-def incremental_image_dedup(new_images: DataFrame,
-                            old_images: DataFrame,
-                            max_hamming: int = 10, min_psnr: float = 40.0,
-                            index: dict[str, DataFrame] | None = None,
-                            prefilter: str | None = "auto",
-                            screen_min_pairs: int = 20_000,
-                            ) -> DataFrame:
-    """Dedup a NEW image batch against the ACCEPTED corpus — the
-    steady-state shape of a continuously-crawled text-image training
-    set, where new×new and old×old comparisons are never re-done (the
-    image analog of pipeline.dedup.incremental_dedup).
-
-    Two tiers, cheap one first:
-    1. exact: sha2(bytes) probe of the history fp index — an equi-join
-       on a 32-byte key; match is the min old image_id per fingerprint.
-    2. psnr: survivors only. The new batch's stored phash probes the
-       history phash index via banded_hamming_probe (new×old only);
-       payload bytes join at CANDIDATE volume (new side from the batch,
-       old side a point join into the history table); decoded pixels
-       verify at min_psnr. Best match per new image by
-       (exact_pixels DESC, psnr DESC, old_id ASC) on the 1e-6-quantized
-       score — deterministic under any partitioning.
-
-    Pass `index=image_history_index(...)` (typically read back from
-    materialized tables) to skip re-hashing the history; old_images is
-    still consulted for BYTES, but only at candidate volume.
-
-    ``prefilter`` controls the thumbnail screen rung between banding
-    and the payload gather: "thumb" always screens, None never does,
-    and "auto" (DEFAULT) runs the two-phase ``screen_gate`` — a volume
-    check (below ``screen_min_pairs`` the screen's fixed stages can't
-    pay; measured 4.8 s vs 2.6 s at sf0.1's ~500-pair probe) followed
-    by a sampled-effectiveness probe (screen 512 pairs, engage only if
-    it discriminates — see screen_gate's physics note). Output is
-    identical in every mode (the screen is provably sound), so the
-    gate is pure plan adaptation.
-
-    Returns one row per new image: (image_id, keep, match_kind
-    'exact'|'psnr'|null, matched_old, hamming, psnr_db). hamming/psnr
-    are NULL for exact-byte matches (tier 2 never sees them); psnr is
-    NULL when the verified match is exact-pixel (different container,
-    identical pixels)."""
-    from pyspark.sql import Window
-
-    if prefilter not in (None, "thumb", "auto"):
-        raise ValueError(f"prefilter must be None, 'thumb' or 'auto': "
-                         f"{prefilter!r}")
-    if index is None:
-        index = image_history_index(old_images)
-    exact = (new_images
-             .select("image_id", F.sha2("bytes", 256).alias("fp"))
-             .join(index["fp"], "fp")
-             .groupBy("image_id")
-             .agg(F.min("old_id").alias("exact_old")))
-    survivors = new_images.join(exact, "image_id", "left_anti")
-    probe_pairs = banded_hamming_probe(
-        survivors.select("image_id", "phash"), index["phash"],
-        "image_id", "old_id", "phash", "img_a", "img_b", max_hamming)
-    use_screen = prefilter == "thumb"
-    if prefilter == "auto":
-        probe_pairs, use_screen = screen_gate(
-            probe_pairs,
-            lambda p: thumb_screened_pairs(survivors, p, min_psnr,
-                                           images_b=old_images),
-            min_pairs=screen_min_pairs)
-    if use_screen:
-        # cross-table thumbnail screen: provably non-verifiable
-        # candidates die on ~1 KB sigs before any payload byte moves
-        # (at scale the history side's sigs are a materialized index)
-        probe_pairs = thumb_screened_pairs(
-            survivors, probe_pairs, min_psnr, images_b=old_images)
-    cand = gather_pair_payloads(
-        probe_pairs, "img_a", "img_b",
-        survivors.select("image_id", "bytes"),
-        old_images.select("image_id", "bytes"),
-        "image_id", F.col("bytes"), "bytes_a", "bytes_b")
-    verified = _psnr_verify_map(cand, min_psnr).where(F.col("verified"))
-    win = Window.partitionBy("img_a").orderBy(
-        F.col("exact_pixels").desc(),
-        F.col("psnr_db").desc_nulls_last(),
-        F.col("img_b").asc())
-    best = (verified
-            .withColumn("_rk", F.row_number().over(win))
-            .where(F.col("_rk") == 1)
-            .select(F.col("img_a").alias("image_id"),
-                    F.col("img_b").alias("psnr_old"),
-                    "hamming", "psnr_db"))
-    return (new_images.select("image_id")
-            .join(exact, "image_id", "left")
-            .join(best, "image_id", "left")
-            .select(
-                "image_id",
-                (F.col("exact_old").isNull()
-                 & F.col("psnr_old").isNull()).alias("keep"),
-                F.when(F.col("exact_old").isNotNull(), F.lit("exact"))
-                .when(F.col("psnr_old").isNotNull(), F.lit("psnr"))
-                .alias("match_kind"),
-                F.coalesce("exact_old", "psnr_old").alias("matched_old"),
-                "hamming", "psnr_db"))

@@ -1,29 +1,17 @@
-"""Recrawl / crawl-maintenance operators.
+"""Recrawl operators the crawl runs.
 
-The reference crawls once and stores pages (core/WebCrawler.java,
-storage/PageRepository.java); everything a production crawl does NEXT —
-diff the new snapshot against the old, estimate per-URL change rates,
-decide what to fetch again and in which order — is left to the operator
-of the system. These are those operators, built over the same tables.
+The reference crawls once and stores pages; a production crawl also
+decides what to fetch again. `Crawler` runs these three:
 
-Every input here is synthesized deterministically from the driver's
-parquet tables (BASELINE.json input_hint), so each operator carries a
-full relational DuckDB oracle: the snapshot pair is a pure modular
-function of doc_id, the fetch history a pure modular function of
-(doc_id, fetch_idx), the frontier a pure function of the orders keys.
-Swapping in real crawl output is a parquet read of the same shape.
+- revalidate_merge folds conditional-GET verdicts (304 / changed /
+  refreshed / failed) into the page store for `Crawler.revalidate`;
+- cho_from_counts turns the compacted per-URL revalidation history into
+  Cho-Garcia-Molina change-rate estimates and next-fetch intervals;
+- sitemap_recrawl_candidates gives sitemap and feed entries their
+  new / modified / fresh verdicts against the store.
 
-Scale notes (the 100 TB shapes):
-- snapshot_diff is ONE full-outer join keyed on the URL. At scale both
-  snapshots are bucketed by url (the crawl store's layout), so the join
-  is a storage-partitioned join with zero exchanges; content equality
-  compares fixed-width sha2 digests, never page bytes.
-- recrawl_schedule is explode + one partial-agg shuffle on doc_id; the
-  estimator is closed-form per group (no iteration, no window).
-- frontier_scoring joins the (tiny) host-rank and host-trap tables into
-  the frontier as broadcasts; the only full-size pass is the scan, and
-  the top-k is TakeOrderedAndProject (per-partition heaps, no global
-  sort).
+revalidation_fixture synthesizes a deterministic verdict mix from
+`documents` for the driver-contract query and its DuckDB oracle.
 """
 
 from __future__ import annotations
@@ -32,104 +20,15 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-# snapshot-pair derivation constants (shared with the SQL oracle)
-ADDED_MOD, ADDED_RES = 11, 3      # doc_id % 11 == 3 → absent from OLD
-REMOVED_MOD, REMOVED_RES = 13, 5  # doc_id % 13 == 5 → absent from NEW
-CHANGED_MOD = 7                   # doc_id % 7 == 0 → content differs
-
-
-def snapshot_pair(documents: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """Two deterministic crawl snapshots of the corpus: OLD is missing
-    the later-discovered docs, NEW is missing the since-deleted docs,
-    and every doc_id % 7 == 0 page changed content between them."""
-    d = F.col("doc_id")
-    old = (documents
-           .where(d % ADDED_MOD != ADDED_RES)
-           .select("doc_id", "source",
-                   F.when(d % CHANGED_MOD == 0,
-                          F.concat(F.col("text"), F.lit(" [v1]")))
-                   .otherwise(F.col("text")).alias("content")))
-    new = (documents
-           .where(d % REMOVED_MOD != REMOVED_RES)
-           .select("doc_id", "source", F.col("text").alias("content")))
-    return old, new
-
-
-def snapshot_diff(documents: DataFrame) -> DataFrame:
-    """Recrawl delta: per-source added/removed/changed/unchanged counts
-    between two snapshots, plus the churn rate relative to the old
-    snapshot. Content comparison is on sha2-256 digests — the crawler's
-    D1 key (core/WebCrawler.java content hash), a fixed-width compare
-    that never moves page bytes through the join."""
-    old, new = snapshot_pair(documents)
-    o = old.select("doc_id", "source",
-                   F.sha2(F.col("content"), 256).alias("h_old"))
-    n = new.select(F.col("doc_id").alias("n_doc_id"),
-                   F.col("source").alias("n_source"),
-                   F.sha2(F.col("content"), 256).alias("h_new"))
-    j = o.join(n, o["doc_id"] == n["n_doc_id"], "full_outer")
-    status = (F.when(F.col("h_old").isNull(), F.lit("added"))
-              .when(F.col("h_new").isNull(), F.lit("removed"))
-              .when(F.col("h_old") != F.col("h_new"), F.lit("changed"))
-              .otherwise(F.lit("unchanged")))
-    per = (j.select(F.coalesce(F.col("source"), F.col("n_source"))
-                    .alias("source"),
-                    status.alias("status"))
-           .groupBy("source")
-           .agg(*[F.sum(F.when(F.col("status") == s, 1).otherwise(0))
-                  .alias("n_" + s)
-                  for s in ("added", "removed", "changed", "unchanged")]))
-    n_old = (F.col("n_removed") + F.col("n_changed")
-             + F.col("n_unchanged"))
-    churn = (F.col("n_added") + F.col("n_removed")
-             + F.col("n_changed")).cast("double") / n_old.cast("double")
-    return per.select("source", "n_added", "n_removed", "n_changed",
-                      "n_unchanged", F.round(churn, 6).alias("churn_rate"))
-
-
-def fetch_history(documents: DataFrame) -> DataFrame:
-    """Synthetic per-URL fetch history in the shape a recrawl loop
-    accumulates: (doc_id, fetch_idx, changed) — one row per consecutive
-    fetch pair, changed = whether the content hash moved between them.
-    Deterministic modular rule so the SQL oracle restates it exactly:
-    doc_id has 4 + doc_id % 4 fetches; observation i (1-based) changed
-    iff (doc_id * 7 + i * 5) % 3 == 0."""
-    d = F.col("doc_id")
-    idx = F.explode(F.sequence(F.lit(1), (d % 4 + 3).cast("int")))
-    return (documents
-            .select("doc_id", idx.alias("fetch_idx"))
-            .select("doc_id", "fetch_idx",
-                    ((d * 7 + F.col("fetch_idx") * 5) % 3 == 0)
-                    .alias("changed")))
-
-
-def cho_intervals(hist: DataFrame, key_col: str = "doc_id",
-                  interval_days: float = 7.0) -> DataFrame:
-    """The Cho & Garcia-Molina (2003) Poisson estimator over any
-    fixed-cadence observation stream (key_col, changed): with n
-    observations of which x detected a change, lambda_hat =
-    -ln((n - x + 0.5) / (n + 0.5)) / interval, and the next interval
-    targets one expected change (1 / lambda_hat, clamped to [1, 90]
-    days). One partial-agg shuffle on the key.
-
-    Numeric contract: (n - x + 0.5) and (n + 0.5) are exact doubles and
-    their IEEE quotient is engine-identical; ln() has 1-ulp latitude,
-    absorbed by round(·, 6); the next interval divides the ROUNDED
-    lambda (both engines see the identical double), so the only libm
-    call in the chain is the one guarded ln."""
-    agg = (hist.groupBy(key_col)
-           .agg(F.count(F.lit(1)).alias("n_obs"),
-                F.sum(F.col("changed").cast("int")).alias("n_changes")))
-    return cho_from_counts(agg, key_col, interval_days)
-
 
 def cho_from_counts(agg: DataFrame, key_col: str = "doc_id",
                     interval_days: float = 7.0) -> DataFrame:
-    """cho_intervals' closed-form half over PRE-AGGREGATED observation
-    counts (key, n_obs, n_changes) — the entry point for state kept as
-    per-key sufficient statistics (e.g. the crawl driver's compacted
-    revalidation history), where the raw observation stream is never
-    replayed."""
+    """Cho & Garcia-Molina change-rate estimate over PRE-AGGREGATED
+    observation counts (key, n_obs, n_changes): lambda_hat =
+    -ln((n - X + 0.5) / (n + 0.5)) / interval, next interval = 1/λ
+    clamped to [1, 90] days. State is kept as per-key sufficient
+    statistics (the crawl driver's compacted revalidation history), so
+    the raw observation stream is never replayed."""
     ratio = ((F.col("n_obs") - F.col("n_changes") + 0.5)
              / (F.col("n_obs") + 0.5))
     lam = F.round(-F.log(ratio) / F.lit(interval_days), 6)
@@ -143,306 +42,6 @@ def cho_from_counts(agg: DataFrame, key_col: str = "doc_id",
                        lam.alias("lambda_hat"))
             .select(key_col, "n_obs", "n_changes", "lambda_hat",
                     nxt.alias("next_interval_days")))
-
-
-def recrawl_schedule(documents: DataFrame,
-                     interval_days: float = 7.0) -> DataFrame:
-    """Per-URL change-rate estimate and next-fetch interval: the Cho
-    estimator over the synthetic fixed-cadence fetch history (see
-    cho_intervals for the math and numeric contract)."""
-    return cho_intervals(fetch_history(documents), "doc_id",
-                         interval_days)
-
-
-# frontier synthesis constants (shared with trap detection + the oracle)
-N_HOSTS = 20
-TRAP_PENALTY = "0.1"  # parsed as the identical double in both engines
-
-
-def synth_urls(orders: DataFrame) -> DataFrame:
-    """Deterministic frontier from the orders keys: 20 hosts; hosts
-    custkey%20 >= 15 serve low-diversity slug pages (the trap shape),
-    the rest a mix of /p/<id>[?sess=] and /cat/<c>/item<id> pages.
-    Returns (host, node, depth, path) — node is the host's id in the
-    pipeline.graph host graph, depth a synthetic discovery depth."""
-    okey, ckey = F.col("o_orderkey"), F.col("o_custkey")
-    host = F.concat(F.lit("h"),
-                    F.lpad((ckey % N_HOSTS).cast("string"), 4, "0"),
-                    F.lit(".example.com"))
-    slug_path = F.concat(
-        F.lit("/"),
-        F.repeat(F.char(F.lit(97) + okey % 26), (1 + okey % 3).cast("int")),
-        F.lit("/detail"))
-    p_path = F.concat(
-        F.lit("/p/"), okey.cast("string"),
-        F.when(okey % 5 == 0,
-               F.concat(F.lit("?sess="), ckey.cast("string")))
-        .otherwise(F.lit("")))
-    cat_path = F.concat(F.lit("/cat/"), (okey % 7).cast("string"),
-                        F.lit("/item"), okey.cast("string"))
-    path = (F.when(ckey % N_HOSTS >= 15, slug_path)
-            .when(okey % 2 == 0, p_path)
-            .otherwise(cat_path))
-    return orders.select(host.alias("host"),
-                         (ckey % N_HOSTS).alias("node"),
-                         (okey % 6).alias("depth"),
-                         path.alias("path"))
-
-
-def host_templates(urls: DataFrame) -> DataFrame:
-    """(host, n_urls, n_templates, template_ratio, is_trap): collapse
-    each path to a template (query stripped, digit runs folded to 'N')
-    and flag hosts whose template diversity collapses. The fold is a
-    pure scan projection; one partial-agg shuffle on host."""
-    template = F.regexp_replace(
-        F.regexp_replace(F.col("path"), r"\?.*$", ""), "[0-9]+", "N")
-    nt, nu = F.col("n_templates"), F.col("n_urls")
-    return (urls.select("host", template.alias("template"))
-            .groupBy("host")
-            .agg(F.count(F.lit(1)).alias("n_urls"),
-                 F.countDistinct("template").alias("n_templates"))
-            .select("host", "n_urls", "n_templates",
-                    F.round(nt.cast("double") / nu.cast("double"), 6)
-                    .alias("template_ratio"),
-                    F.when((nu >= 100)
-                           & (nt.cast("double") / nu.cast("double") < 0.05),
-                           1).otherwise(0).alias("is_trap")))
-
-
-def frontier_scoring(documents: DataFrame, orders: DataFrame,
-                     k: int = 100) -> DataFrame:
-    """Composed crawl-side flagship: prioritize the frontier by
-    score = host_pagerank × trap_penalty / (1 + depth) and take the
-    global top-k — the scheduler pass that decides what a polite
-    crawler fetches next (reference analog: the priority field on
-    model/CrawlTask.java, which the reference sets statically).
-
-    Composition: pipeline.graph PageRank supplies the host authority
-    (bit-exact dyadic ranks), host_templates supplies the trap penalty,
-    both joined into the frontier as broadcasts (one row per host —
-    never a shuffle of the frontier). Score arithmetic is mul/div only
-    (no libm), so round(·, 9) is engine-exact; top-k is
-    TakeOrderedAndProject on (score desc, url)."""
-    from .graph import host_graph, pagerank
-
-    nodes, edges = host_graph(documents, n_nodes=32)
-    ranks = pagerank(nodes, edges, n_nodes=32)
-    urls = synth_urls(orders)
-    traps = host_templates(urls)
-    penalty = (F.when(F.col("is_trap") == 1,
-                      F.lit(float(TRAP_PENALTY))).otherwise(F.lit(1.0)))
-    score = F.round(F.col("rank") * penalty
-                    / (F.lit(1.0) + F.col("depth").cast("double")), 9)
-    url = F.concat(F.lit("https://"), F.col("host"), F.col("path"))
-    return (urls
-            .join(F.broadcast(ranks), urls["node"] == ranks["node"])
-            .join(F.broadcast(traps), "host")
-            .select(url.alias("url"), "host", "depth",
-                    F.round(F.col("rank"), 9).alias("host_rank"),
-                    "is_trap", score.alias("score"))
-            .orderBy(F.col("score").desc(), "url")
-            .limit(k))
-
-
-def budget_allocation(orders: DataFrame, budget: int = 1000) -> DataFrame:
-    """Global fetch-budget allocation across hosts by the largest-
-    remainder method (Hamilton apportionment): each host gets
-    floor(budget × share) plus one extra unit for the R largest
-    fractional remainders, so per-host quotas are integers that sum to
-    EXACTLY the budget — the fairness contract a politeness scheduler
-    needs before it hands budgets to operators/politeness.py.
-
-    Shuffle shape: the frontier reduces to ONE row per host before
-    anything global happens (partial-agg shuffle); the global pieces —
-    total pending, total base quota — are 1-row aggregates broadcast
-    back. The remainder ranking is a single window over the per-HOST
-    table, which is orders of magnitude smaller than the frontier; at
-    extreme host counts (10^8+) the swap-in is a quantile threshold on
-    the remainder instead of an exact rank.
-
-    Exactness: budget × n / total is one IEEE multiply + divide on
-    identical inputs (engine-identical bits), so floor() and the
-    remainder compare identically; ranking ties break on host."""
-    from pyspark.sql import Window
-
-    per = (synth_urls(orders)
-           .groupBy("host").agg(F.count(F.lit(1)).alias("n_pending")))
-    tot = per.agg(F.sum("n_pending").alias("_tot"))
-    q = (per.crossJoin(F.broadcast(tot))
-         .select("host", "n_pending",
-                 (F.lit(float(budget)) * F.col("n_pending")
-                  / F.col("_tot").cast("double")).alias("_exact")))
-    q = q.select("host", "n_pending",
-                 F.floor(F.col("_exact")).cast("bigint").alias("base_quota"),
-                 (F.col("_exact") - F.floor(F.col("_exact"))).alias("_rem"))
-    tot_base = q.agg(F.sum("base_quota").alias("_base_sum"))
-    w = Window.orderBy(F.col("_rem").desc(), "host")
-    ranked = (q.crossJoin(F.broadcast(tot_base))
-              .select("host", "n_pending", "base_quota",
-                      F.row_number().over(w).alias("_rk"),
-                      (F.lit(budget) - F.col("_base_sum")).alias("_r")))
-    return (ranked
-            .select("host", "n_pending", "base_quota",
-                    F.when(F.col("_rk") <= F.col("_r"), 1).otherwise(0)
-                    .alias("extra"))
-            .select("host", "n_pending", "base_quota", "extra",
-                    (F.col("base_quota") + F.col("extra")).alias("quota")))
-
-
-def fetch_latency_anomalies(orders: DataFrame,
-                            z_threshold: float = 3.0) -> DataFrame:
-    """Per-host fetch-latency anomaly detection: flag fetches whose
-    z-score against their host's latency distribution exceeds the
-    threshold — the timeout/tarpit monitor a crawl operator watches.
-
-    Latency is synthesized as integers (base + modular jitter + a 1/97
-    spike), so the host moments come from EXACT integer sums S1 = Σx,
-    S2 = Σx² (summation order irrelevant), and every downstream step —
-    mean, variance, sqrt, the z quotient — is a correctly-rounded IEEE
-    op on identical inputs: engine-exact without any quantize-before-
-    sum contract. Moments reduce to one row per host (partial-agg
-    shuffle) and broadcast back onto the scan; only anomalies leave.
-
-    Returns (host, o_orderkey, latency_ms, z) for |z| >= threshold."""
-    okey, ckey = F.col("o_orderkey"), F.col("o_custkey")
-    host = F.concat(F.lit("h"),
-                    F.lpad((ckey % N_HOSTS).cast("string"), 4, "0"),
-                    F.lit(".example.com"))
-    lat = (F.lit(50) + (okey * 13 + ckey * 7) % 2000
-           + F.when(okey % 97 == 0, F.lit(5000)).otherwise(F.lit(0)))
-    base = orders.select(host.alias("host"), okey.alias("o_orderkey"),
-                         lat.alias("latency_ms"))
-    mom = (base.groupBy("host")
-           .agg(F.count(F.lit(1)).alias("n"),
-                F.sum("latency_ms").alias("s1"),
-                F.sum(F.col("latency_ms") * F.col("latency_ms"))
-                .alias("s2")))
-    mu = F.col("s1").cast("double") / F.col("n").cast("double")
-    var = (F.col("s2").cast("double") / F.col("n").cast("double")
-           - mu * mu)
-    z = ((F.col("latency_ms").cast("double") - mu) / F.sqrt(var))
-    return (base.join(F.broadcast(mom), "host")
-            .select("host", "o_orderkey", "latency_ms",
-                    F.round(z, 6).alias("z"))
-            .where(F.abs(F.col("z")) >= z_threshold))
-
-
-def mirror_hosts(urls: DataFrame, threshold: float = 0.9,
-                 max_df: int = 64) -> DataFrame:
-    """Host-mirror detection (Bharat & Broder, WWW'99 "A comparison of
-    techniques to find mirrored hosts"): two hosts mirror each other
-    when the content-key set of one is largely CONTAINED in the
-    other's — the crawl-maintenance pass that collapses mirror sites
-    out of the frontier before they burn fetch budget (the reference
-    has no analog; its dedup is post-fetch per-page content_hash,
-    schema.cql:17 — this prevents the fetch instead).
-
-    Content key = query-stripped path (the URL shape that survives
-    mirroring); C(A→B) = |K(A)∩K(B)| / |K(A)| computed per host pair,
-    emitted when EITHER direction reaches the threshold. Keys shared
-    by more than max_df hosts are boilerplate ('/', '/index.html') and
-    are dropped — the same df-cap that bounds every fingerprint
-    self-join here to O(df²) per key.
-
-    Scale shape: keys shuffle as 128-bit md5 fingerprints, never path
-    strings; per-host set sizes and the df table are partial aggs; the
-    pair aggregation groups on (host_a, host_b) alone and sizes rejoin
-    onto the reduced pair table (the containment_pairs contract). At
-    10^7 hosts the candidate volume is Σ_key df(key)², bounded by the
-    cap — not hosts²."""
-    key = F.regexp_replace(F.col("path"), r"\?.*$", "")
-    hk = (urls.select("host", F.md5(key).alias("k")).distinct())
-    dfreq = hk.groupBy("k").agg(F.count("*").alias("df"))
-    capped = (hk.join(dfreq.where(F.col("df") <= max_df), "k")
-              .select("host", "k"))
-    sizes = capped.groupBy("host").agg(F.count("*").alias("n_keys"))
-    a, b = capped.alias("a"), capped.alias("b")
-    pairs = (a.join(b, (F.col("a.k") == F.col("b.k"))
-                    & (F.col("a.host") < F.col("b.host")))
-             .groupBy(F.col("a.host").alias("host_a"),
-                      F.col("b.host").alias("host_b"))
-             .agg(F.count("*").alias("n_common")))
-    sa = sizes.select(F.col("host").alias("host_a"),
-                      F.col("n_keys").alias("n_a"))
-    sb = sizes.select(F.col("host").alias("host_b"),
-                      F.col("n_keys").alias("n_b"))
-    return (pairs.join(sa, "host_a").join(sb, "host_b")
-            .select("host_a", "host_b", "n_common",
-                    F.round(F.col("n_common") / F.col("n_a"), 6)
-                    .alias("c_ab"),
-                    F.round(F.col("n_common") / F.col("n_b"), 6)
-                    .alias("c_ba"))
-            .where(F.greatest(F.col("c_ab"), F.col("c_ba")) >= threshold))
-
-
-def fetch_observations(orders: DataFrame) -> DataFrame:
-    """Synthetic last-round fetch telemetry: (host, latency_ms, failed)
-    per fetch, same deterministic integer synthesis as
-    fetch_latency_anomalies plus a 1/23 failure flag."""
-    okey, ckey = F.col("o_orderkey"), F.col("o_custkey")
-    host = F.concat(F.lit("h"),
-                    F.lpad((ckey % N_HOSTS).cast("string"), 4, "0"),
-                    F.lit(".example.com"))
-    lat = (F.lit(50) + (okey * 13 + ckey * 7) % 2000
-           + F.when(okey % 97 == 0, F.lit(5000)).otherwise(F.lit(0)))
-    return orders.select(
-        host.alias("host"), lat.alias("latency_ms"),
-        F.when(okey % 23 == 0, F.lit(1)).otherwise(F.lit(0))
-        .alias("failed"))
-
-
-def adaptive_host_budget(observations: DataFrame, base_budget: int = 64,
-                         target_ms: int = 1500, min_budget: int = 4,
-                         max_budget: int = 256,
-                         add_step: int = 8) -> DataFrame:
-    """AIMD per-host politeness budget from observed fetch telemetry —
-    the feedback loop between one round's (latency, failure) receipts
-    and the NEXT round's per-host budget, completing the politeness
-    stack: static budget (F5) → robots Crawl-delay override → this
-    server-health adaptation. Reference analog: crawl_state.crawl_delay
-    (/root/reference/schema.cql:19-24) is a static field; real crawlers
-    adapt it (multiplicative decrease on failure, as in TCP AIMD).
-
-    Rules, evaluated in order per host over (n, err_cnt, p95_ms):
-      err_cnt*10 > n        → halve       (error rate above 10%)
-      p95_ms > target_ms    → base*target/p95 (proportional backoff)
-      otherwise             → base + add_step (additive increase)
-    clamped to [min_budget, max_budget]. p95 is the DISCRETE rank
-    statistic at ceil(0.95·n) — computed as (19n+19) div 20 — over the
-    latency order, and every rule is integer arithmetic on integer
-    telemetry: the output is engine-exact with no float contract.
-
-    Scale shape: one shuffle total. The rank statistic uses a per-host
-    window over the observation partition (partitionBy host), and the
-    per-host aggregate rides the SAME clustering, so Catalyst plans a
-    single exchange; output is one row per host. Returns
-    (host, n_obs, err_cnt, p95_ms, next_budget)."""
-    from pyspark.sql import Window
-    w = Window.partitionBy("host").orderBy("latency_ms")
-    wall = Window.partitionBy("host")
-    ranked = observations.select(
-        "host", "latency_ms", "failed",
-        F.row_number().over(w).alias("rn"),
-        F.count(F.lit(1)).over(wall).alias("n"),
-        F.sum("failed").over(wall).alias("err_cnt"))
-    p95 = (ranked
-           .where(F.col("rn")
-                  == F.floor((F.col("n") * 19 + 19) / F.lit(20)))
-           .select("host", F.col("latency_ms").alias("p95_ms"),
-                   F.col("n").alias("n_obs"), "err_cnt"))
-    # integer-div semantics spelled as floor-of-positive-quotient: Spark
-    # truncates double→long casts while other engines round, so the
-    # floor happens explicitly BEFORE any cast on both sides
-    nxt = (F.when(F.col("err_cnt") * 10 > F.col("n_obs"),
-                  F.lit(base_budget // 2))
-           .when(F.col("p95_ms") > target_ms,
-                 F.floor(F.lit(base_budget * target_ms)
-                         / F.col("p95_ms")))
-           .otherwise(F.lit(base_budget + add_step))).cast("long")
-    clamped = F.greatest(F.lit(min_budget),
-                         F.least(F.lit(max_budget), nxt))
-    return p95.select("host", "n_obs", "err_cnt", "p95_ms",
-                      clamped.alias("next_budget"))
 
 
 # conditional-GET verdict rows, as produced by
@@ -476,11 +75,11 @@ def revalidate_merge(stored: DataFrame, verdicts: DataFrame,
                     payload, only the validators);
       'changed'   — 200 with new content; new hash + validators win.
     Returns (url, verdict, http_status, content_hash, etag) — the slim
-    columns a recrawl scheduler feeds back into recrawl_schedule's
-    change history; payload rewrite rides the same verdict filter.
+    columns a recrawl scheduler feeds back into its change history;
+    payload rewrite rides the same verdict filter.
 
     Scale shape: ONE url-keyed left join (storage-partitioned over
-    url-bucketed stores at 10^10 — the snapshot_diff contract); the
+    url-bucketed stores at 10^10); the
     comparison is a fixed-width sha2 against the STORED hash column, so
     stored page bytes never move — only the round's fetched bodies are
     hashed, map-side, at candidate volume.
@@ -558,170 +157,6 @@ def revalidation_fixture(documents: DataFrame) -> tuple[DataFrame,
     return stored, verdicts
 
 
-# cache-TTL fixture constants (shared with the SQL oracle)
-TTL_NOCACHE_MOD = 7    # doc_id % 7 == 0 → Cache-Control: no-cache
-TTL_MAXAGE_MOD = 5     # else % 5 == 0  → Cache-Control: max-age=3600
-TTL_HEURISTIC_MOD = 3  # else % 3 == 0  → no CC, Last-Modified known
-DEFAULT_TTL_SEC = 86_400
-MAX_AGE_SEC = 3_600
-
-
-def cache_ttl_schedule(stored: DataFrame,
-                       default_ttl_sec: int = DEFAULT_TTL_SEC,
-                       max_ttl_sec: int = 7 * 86_400) -> DataFrame:
-    """RFC 7234 freshness → per-URL earliest-revalidation time: the
-    server-declared half of the recrawl scheduler (the observed half is
-    recrawl_schedule's Cho estimator; a scheduler takes the min of the
-    two intervals and respects this floor before issuing the
-    revalidate_merge round's conditional GETs).
-
-    Input: (url, cache_control, last_modified_ms, fetch_time_ms). Policy
-    precedence per RFC 7234 §4.2: no-store/no-cache → revalidate always
-    (ttl 0); max-age=N wins over Expires; no explicit freshness but a
-    known Last-Modified → the §4.2.2 heuristic, 10% of the age at fetch
-    time; otherwise a crawler-default TTL. TTLs clamp to max_ttl_sec.
-
-    Scale shape: pure scan projection — regexp_extract + integer
-    arithmetic, no UDF, no shuffle; the directive parse and the
-    heuristic division are integer-exact (floor spelled explicitly), so
-    the oracle restates them bit-for-bit."""
-    cc = F.coalesce(F.lower(F.col("cache_control")), F.lit(""))
-    max_age = F.regexp_extract(cc, r"max-age=(\d+)", 1)
-    heuristic = F.floor((F.col("fetch_time_ms")
-                         - F.col("last_modified_ms")) / F.lit(10_000))
-    ttl = (
-        F.when(cc.contains("no-store") | cc.contains("no-cache"), F.lit(0))
-        .when(max_age != "", max_age.cast("long"))
-        .when(F.col("last_modified_ms").isNotNull(),
-              F.greatest(F.lit(0), heuristic))
-        .otherwise(F.lit(default_ttl_sec)))
-    policy = (
-        F.when(cc.contains("no-store") | cc.contains("no-cache"),
-               F.lit("no-cache"))
-        .when(max_age != "", F.lit("max-age"))
-        .when(F.col("last_modified_ms").isNotNull(), F.lit("heuristic"))
-        .otherwise(F.lit("default")))
-    ttl_c = F.least(ttl, F.lit(max_ttl_sec)).cast("long")
-    return stored.select(
-        "url", policy.alias("policy"), ttl_c.alias("ttl_sec"),
-        (F.col("fetch_time_ms") + ttl_c * 1000)
-        .alias("next_revalidate_ms"))
-
-
-def cache_ttl_fixture(documents: DataFrame) -> DataFrame:
-    """Deterministic stored-header table for cache_ttl_schedule, pure
-    modular functions of doc_id: % 7 == 0 → no-cache; else % 5 == 0 →
-    max-age=3600; else % 3 == 0 → heuristic (Last-Modified known, age
-    = doc_id % 1000 hours); else no freshness info at all."""
-    d = F.col("doc_id")
-    url = F.concat(F.lit("https://h"),
-                   F.lpad((d % 20).cast("string"), 4, "0"),
-                   F.lit(".example.com/p/"), d.cast("string"))
-    fetch_ms = F.lit(1_700_000_000_000) + d * 1000
-    age_ms = (d % 1000) * 3_600_000
-    return documents.select(
-        url.alias("url"),
-        F.when(d % TTL_NOCACHE_MOD == 0, F.lit("private, no-cache"))
-        .when(d % TTL_MAXAGE_MOD == 0,
-              F.lit(f"public, max-age={MAX_AGE_SEC}"))
-        .otherwise(F.lit(None).cast("string")).alias("cache_control"),
-        F.when((d % TTL_NOCACHE_MOD != 0) & (d % TTL_MAXAGE_MOD != 0)
-               & (d % TTL_HEURISTIC_MOD == 0), fetch_ms - age_ms)
-        .otherwise(F.lit(None).cast("long")).alias("last_modified_ms"),
-        fetch_ms.alias("fetch_time_ms"))
-
-
-def change_prediction(frontier: DataFrame,
-                      n_buckets: int = 128) -> DataFrame:
-    """Cold-start change prediction (Radinsky & Bennett, WWW'13
-    "Predicting content change on the web"): a URL with NO fetch history
-    cannot have a Cho estimate, so the scheduler needs a PRIOR — a
-    change propensity predicted from URL-shape features alone. Scored
-    with the hashed-feature linear-model shape of
-    pipeline.text.hashed_quality_classifier: score = Σ w[h(feat) mod B]
-    over the (host, depth, priority, retry) features, sigmoid-squashed.
-    The blend rule: observed Cho lambda when verdict history exists
-    (cho_intervals / Crawler.recrawl_intervals), else this prior.
-
-    Model-as-table: integer weights w[b] = pmod(xxhash64(b), 2001)-1000
-    stand in for trained parameters; a real model is a parquet read of
-    the same (bucket, w) shape. Scale shape: one 4-rows-per-URL explode,
-    a broadcast weights join, one url-keyed partial agg — no Python, no
-    corpus-sized shuffle beyond the agg. Integer score ⇒ the hot
-    decision is bit-exact; the sigmoid's 1-ulp exp is absorbed by
-    round(·, 6)."""
-    spark = frontier.sparkSession
-    weights = spark.range(n_buckets).select(
-        F.col("id").alias("bucket"),
-        (F.pmod(F.xxhash64("id"), F.lit(2001)) - 1000).alias("w"))
-    feats = F.array(
-        F.concat(F.lit("host="), F.col("host")),
-        F.concat(F.lit("depth="), F.col("depth").cast("string")),
-        F.concat(F.lit("prio="), F.col("priority").cast("string")),
-        F.concat(F.lit("retry="), F.col("retry_count").cast("string")))
-    ex = (frontier
-          .select("url", "host", F.explode(feats).alias("feat"))
-          .select("url", "host",
-                  F.pmod(F.xxhash64("feat"), F.lit(n_buckets))
-                  .alias("bucket")))
-    scored = (ex.join(F.broadcast(weights), "bucket")
-              .groupBy("url", "host")
-              .agg(F.count(F.lit(1)).alias("n_feats"),
-                   F.sum("w").alias("score_int")))
-    logit = (F.col("score_int").cast("double")
-             / (F.lit(250.0) * F.col("n_feats").cast("double")))
-    return scored.select(
-        "url", "host", "score_int",
-        F.round(F.lit(1.0) / (F.lit(1.0) + F.exp(-logit)), 6)
-        .alias("prob"),
-        F.when(F.col("score_int") >= 0, 1).otherwise(0)
-        .alias("predicted_hot"))
-
-
-# planner "now" (ms): ~28h past the fixture's fetch epoch, so the
-# policy mix splits into due/not-due non-trivially at every scale
-PLANNER_NOW_MS = 1_700_100_000_000
-
-
-def revalidation_planner(documents: DataFrame,
-                         now_ms: int = PLANNER_NOW_MS,
-                         host_budget: int = 8) -> DataFrame:
-    """Composed recrawl flagship: WHICH URLs get this round's conditional
-    GETs. cache_ttl_schedule supplies the server-declared freshness floor
-    (only URLs whose TTL has expired are candidates), recrawl_schedule's
-    Cho estimator supplies the priority (highest observed change rate
-    first), and a per-host cap enforces politeness — the three standalone
-    operators composed exactly as a production recrawl scheduler chains
-    them ahead of revalidate_merge.
-
-    Scale shape: the TTL side is a scan projection; the estimator side is
-    one doc-keyed partial-agg shuffle; they meet in ONE url-keyed join at
-    due-URL volume. The per-host cap is a WindowGroupLimit (rank ≤ K
-    filters below the exchange); at skewed hosts the swap-in is the
-    salted two-stage top-K of operators/politeness.py (provably equal).
-
-    Returns (url, host, lambda_hat, next_revalidate_ms, rk) for the
-    capped per-host pick, rk the within-host priority rank."""
-    from pyspark.sql import Window
-
-    d = F.col("doc_id")
-    url = F.concat(F.lit("https://h"),
-                   F.lpad((d % 20).cast("string"), 4, "0"),
-                   F.lit(".example.com/p/"), d.cast("string"))
-    ttl = cache_ttl_schedule(cache_ttl_fixture(documents))
-    due = ttl.where(F.col("next_revalidate_ms") <= now_ms)
-    sched = recrawl_schedule(documents).select(
-        url.alias("url"), "lambda_hat")
-    j = due.join(sched, "url")
-    host = F.regexp_extract(F.col("url"), r"https://([^/]+)/", 1)
-    w = (Window.partitionBy("host")
-         .orderBy(F.col("lambda_hat").desc(), "url"))
-    return (j.select("url", host.alias("host"), "lambda_hat",
-                     "next_revalidate_ms")
-            .withColumn("rk", F.row_number().over(w))
-            .where(F.col("rk") <= host_budget))
-
-
 def sitemap_recrawl_candidates(candidates: DataFrame,
                                stored: DataFrame) -> DataFrame:
     """Close the discovery→recrawl loop: decide, per sitemap entry,
@@ -737,9 +172,8 @@ def sitemap_recrawl_candidates(candidates: DataFrame,
     `fetch_needed` = verdict in (new, modified).
 
     Scale shape: ONE left join on the url key (at 10^10: a
-    storage-partitioned join over url-bucketed stores — the
-    snapshot_diff contract) followed by a map-side when-chain; sitemap
-    tables are discovery-grain, far below the page store, so AQE
+    storage-partitioned join over url-bucketed stores) followed by a
+    map-side when-chain; sitemap tables are discovery-grain, far below the page store, so AQE
     broadcasts them when small."""
     j = candidates.join(stored, "url", "left")
     verdict = (F.when(F.col("last_fetch").isNull(), F.lit("new"))

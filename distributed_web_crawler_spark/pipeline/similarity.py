@@ -1,21 +1,13 @@
-"""Approximate-nearest-neighbor search over `embeddings.embedding`.
+"""Image↔caption alignment over paired embeddings, outside the crawl.
 
-Baseline: brute-force cosine top-k per query — broadcast the (small) query
-set against every vector, dot products via JVM higher-order functions
-(`zip_with` + `aggregate`, whole-stage codegen), rank with a per-query
-window. One shuffle (the window), no Python.
-
-Scale path (IVF): k-means-free inverted file — centroids are a
-deterministic sample of the corpus, every vector is assigned to its nearest
-centroid once (broadcast join), and a query probes only its `nprobe`
-closest lists. Recall trades against nprobe; probing all lists equals brute
-force. At 10^10 vectors the assignment is the only full scan; each query
-touches ~nprobe/n_lists of the data.
+`caption_alignment` pairs each image-tower vector with its caption-tower
+vector and thresholds their cosine (the CLIP-score filter of LAION-style
+curation); the dot products are JVM higher-order folds, no Python.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -27,672 +19,6 @@ def _unit(col) -> F.Column:
 def _cos(a, b) -> F.Column:
     return F.aggregate(F.zip_with(a, b, lambda x, y: x * y),
                        F.lit(0.0), lambda acc, x: acc + x)
-
-
-def brute_force_topk(embeddings: DataFrame, queries: DataFrame,
-                     k: int = 5) -> DataFrame:
-    """Top-k cosine neighbors per query (excluding self).
-
-    queries: (query_id, embedding). Returns (query_id, vec_id, cosine, rank).
-    """
-    corpus = embeddings.select(
-        "vec_id", _unit(F.col("embedding")).alias("unit"))
-    q = queries.select(
-        "query_id", _unit(F.col("embedding")).alias("q_unit"))
-    scored = (
-        corpus.join(F.broadcast(q), F.col("vec_id") != F.col("query_id"))
-        .select("query_id", "vec_id",
-                F.round(_cos(F.col("q_unit"), F.col("unit")), 6).alias("cosine"))
-    )
-    return _rank_topk(scored, k)
-
-
-def _lloyd_refine(corpus: DataFrame, cent_arr: DataFrame,
-                  scored_fold) -> DataFrame:
-    """One k-means|| style Lloyd pass: broadcast-argmax assign every
-    corpus vector to its list, then replace each centroid with the
-    normalized per-list mean. The mean is computed JVM-side by
-    position-exploding the unit vectors — (list_id, pos) partial sums
-    combine map-side, so the exploded row count entering the exchange is
-    ≤ n_lists × dim per input partition, never corpus × dim. Lists that
-    end up empty drop out (their probes redistribute). No global sort, no
-    driver-side data movement."""
-    assigned = (corpus.join(F.broadcast(cent_arr))
-                .select("vec_id", scored_fold()["list_id"].alias("list_id"),
-                        "unit"))
-    sums = (assigned.select("list_id", F.posexplode("unit").alias("pos", "v"))
-            .groupBy("list_id", "pos").agg(F.sum("v").alias("s")))
-    means = (sums.groupBy("list_id")
-             .agg(F.array_sort(F.collect_list(F.struct("pos", "s")))
-                  .alias("ps"))
-             .select("list_id",
-                     F.transform("ps", lambda x: x["s"]).alias("mean")))
-    return means.select("list_id", _unit(F.col("mean")).alias("c_unit"))
-
-
-def ivf_assign(embeddings: DataFrame, n_lists: int = 16,
-               refine_iters: int = 0,
-               carry_embedding: bool = False) -> tuple[DataFrame, DataFrame]:
-    """Deterministic centroids and max-cosine list assignment.
-
-    Centroid pick: the n_lists corpus vectors with the smallest
-    xxhash64(vec_id) — a uniform deterministic sample computed by
-    TakeOrderedAndProject (per-partition top-K, then a K×partitions merge),
-    so there is NO global sort, NO single-partition window, and NO
-    driver-side count(); at 10^10 vectors this stage stays fully parallel.
-
-    Assignment: each corpus row folds over a broadcast ARRAY of centroids
-    (n_lists is small by construction) with a Catalyst `aggregate` argmax —
-    a map-only stage with zero shuffle, replacing the previous
-    corpus×n_lists window ranking. Ties break to the lowest list_id via the
-    array_sort + strict-> fold order.
-
-    ``refine_iters`` > 0 runs that many Lloyd passes over the hash-sampled
-    seed centroids (_lloyd_refine): one broadcast-assign + per-list mean
-    per pass, trading refine_iters extra corpus scans for tighter lists
-    (higher recall at equal nprobe — pinned by the recall pytest). Scale
-    callers running several passes should persist/checkpoint the (tiny)
-    centroid frame between iterations to truncate the growing lineage.
-
-    ``carry_embedding`` keeps the raw embedding column on the assigned
-    frame, so a downstream per-row transform (e.g. SQ8 quantization of
-    the inverted lists) fuses into the SAME map stage — no second corpus
-    scan, no corpus-sized self-join."""
-    centroids = (
-        embeddings
-        .select("vec_id", "embedding", F.xxhash64("vec_id").alias("_hk"))
-        .orderBy("_hk", "vec_id").limit(n_lists)
-        .select(F.col("vec_id").alias("list_id"),
-                _unit(F.col("embedding")).alias("c_unit"))
-    )
-    extra = ["embedding"] if carry_embedding else []
-    corpus = embeddings.select(
-        "vec_id", _unit(F.col("embedding")).alias("unit"), *extra)
-
-    def cent_arr(c: DataFrame) -> DataFrame:
-        return c.agg(
-            F.array_sort(F.collect_list(F.struct("list_id", "c_unit")))
-            .alias("cents"))
-
-    # compute each centroid's cosine ONCE via transform, then fold for the
-    # argmax — Catalyst does not CSE inside higher-order lambdas, so a
-    # when(cos > acc).then(struct(cos, …)) form would evaluate the
-    # dim-length dot product twice per centroid per row
-    def argmax_fold() -> F.Column:
-        # sim quantized to 1e-6 before comparison (matching the query-side
-        # cosine rounding): near-equal centroids then tie EXACTLY and break
-        # to the lowest list_id in the fold, so the assignment is stable
-        # across evaluation orders and independent engines (the DuckDB
-        # oracle recomputes it) instead of flipping on the last ulp
-        scored_cents = F.transform(
-            F.col("cents"),
-            lambda c: F.struct(
-                F.round(_cos(F.col("unit"), c["c_unit"]), 6).alias("sim"),
-                c["list_id"].alias("list_id")))
-        return F.aggregate(
-            scored_cents,
-            F.struct(F.lit(-2.0).alias("sim"),
-                     F.lit(None).cast("long").alias("list_id")),
-            lambda acc, s: F.when(s["sim"] > acc["sim"], s).otherwise(acc))
-
-    for _ in range(refine_iters):
-        centroids = _lloyd_refine(corpus, cent_arr(centroids), argmax_fold)
-    assigned = (
-        corpus.join(F.broadcast(cent_arr(centroids)))
-        .select("vec_id", argmax_fold()["list_id"].alias("list_id"), "unit",
-                *extra)
-    )
-    return centroids, assigned
-
-
-def _probe_lists(queries: DataFrame, centroids: DataFrame,
-                 nprobe: int) -> DataFrame:
-    """Per query: the nprobe nearest inverted lists (rounded-cosine ties
-    break to the lowest list_id, mirroring the assignment tie rule).
-    Returns (query_id, q_unit, list_id)."""
-    q = queries.select("query_id", _unit(F.col("embedding")).alias("q_unit"))
-    qc = q.join(F.broadcast(centroids))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("csim").desc(), F.col("list_id"))
-    return (
-        qc.withColumn("csim", F.round(_cos(F.col("q_unit"),
-                                           F.col("c_unit")), 6))
-        .withColumn("_r", F.row_number().over(w)).where(F.col("_r") <= nprobe)
-        .select("query_id", "q_unit", "list_id")
-    )
-
-
-def _q8_cosine() -> F.Column:
-    """Quantized cosine of q_unit against an int qd vector, zero-guarded:
-    an all-zero qvec scores 0.0 (never NaN, which Spark ranks above every
-    real neighbor). Shared by sq8_topk and ivf_sq8_topk so the ANN
-    variants cannot fork semantics."""
-    qnorm = F.sqrt(F.aggregate(F.col("qd"), F.lit(0.0),
-                               lambda a, x: a + x * x))
-    return F.when(qnorm == 0.0, F.lit(0.0)).otherwise(
-        F.round(_cos(F.col("q_unit"), F.col("qd")) / qnorm, 6))
-
-
-def _rank_topk(scored: DataFrame, k: int) -> DataFrame:
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("vec_id"))
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k))
-
-
-def build_ivf_index(embeddings: DataFrame, n_lists: int = 16,
-                    refine_iters: int = 0) -> dict[str, DataFrame]:
-    """The IVF index as a MATERIALIZABLE artifact — the history_index
-    pattern applied to ANN: at 10^10 vectors the index is built once,
-    its two frames written to tables ('lists' bucketed/partitioned by
-    list_id so a probe reads only the nprobe lists it touches;
-    'centroids' is n_lists rows), and every later query batch probes the
-    stored tables via ivf_topk(..., index=...) — zero rebuild cost per
-    batch, and new vectors append to their argmax list without touching
-    the rest. Each frame may be a table read back from storage (unit
-    arrays round-trip parquet bit-exact; pinned by test). The SQ8/PQ
-    variants take the same seam: quantize/encode the 'lists' frame once
-    at build time."""
-    centroids, assigned = ivf_assign(embeddings, n_lists, refine_iters)
-    return {"centroids": centroids,
-            "lists": assigned.select("list_id", "vec_id", "unit")}
-
-
-def ivf_topk(embeddings: DataFrame | None, queries: DataFrame, k: int = 5,
-             n_lists: int = 16, nprobe: int = 4,
-             refine_iters: int = 0,
-             index: dict[str, DataFrame] | None = None) -> DataFrame:
-    """ANN top-k probing the nprobe nearest inverted lists per query.
-    index: a prebuilt build_ivf_index artifact (possibly read back from
-    storage) — skips the build; embeddings may then be None."""
-    if index is None:
-        index = build_ivf_index(embeddings, n_lists, refine_iters)
-    scored = (
-        _probe_lists(queries, index["centroids"], nprobe)
-        .join(index["lists"], "list_id")
-        .where(F.col("vec_id") != F.col("query_id"))
-        .select("query_id", "vec_id",
-                F.round(_cos(F.col("q_unit"), F.col("unit")), 6).alias("cosine"))
-    )
-    return _rank_topk(scored, k)
-
-
-def quantize_embeddings(embeddings: DataFrame,
-                        col: str = "embedding") -> DataFrame:
-    """SQ8 scalar quantization: per-vector symmetric max-abs scale,
-    components mapped to integers in [-127, 127] via floor(x/scale + 0.5)
-    (floor-based so Spark and any SQL mirror round identically; plain
-    round() half-mode differs across engines).
-
-    At 10^9+ vectors this is the memory/scan-bandwidth path: int8
-    components are 4× smaller than float32 (8× vs float64), and cosine is
-    scale-invariant, so ranking against quantized vectors needs NO
-    dequantization — the per-vector scale can even be dropped when only
-    cosine ranking is required. Map-only, pure Catalyst, zero shuffle."""
-    emb = F.col(col)
-    scale = F.greatest(
-        F.aggregate(emb, F.lit(0.0), lambda a, x: F.greatest(a, F.abs(x)))
-        / F.lit(127.0),
-        F.lit(1e-30))
-    return embeddings.withColumn("_scale", scale).select(
-        *[c for c in embeddings.columns if c != col],
-        F.transform(emb, lambda x: F.floor(x / F.col("_scale") + 0.5)
-                    .cast("int")).alias("qvec"),
-        F.col("_scale").alias("scale"))
-
-
-def sq8_topk(corpus: DataFrame, queries: DataFrame,
-             k: int = 5) -> DataFrame:
-    """Brute-force cosine top-k against an SQ8-quantized corpus
-    (asymmetric: full-precision queries, int8 corpus). Same plan shape as
-    brute_force_topk — broadcast queries, codegen'd integer dot products,
-    one window shuffle.
-
-    ``corpus`` is either a pre-quantized frame carrying ``qvec`` (the
-    quantize_embeddings output persisted to parquet — the scale path,
-    where the corpus scan reads 4-8× fewer bytes) or a raw ``embedding``
-    frame, quantized on the fly as a convenience. Returns
-    (query_id, vec_id, cosine, rank) with the quantized cosine
-    approximation; an all-zero corpus vector scores cosine 0.0 (never
-    NaN, which Spark would rank above every real neighbor)."""
-    if "qvec" not in corpus.columns:
-        corpus = quantize_embeddings(corpus)
-    corpus = corpus.select(
-        "vec_id", F.col("qvec").cast("array<double>").alias("qd"))
-    q = queries.select("query_id", _unit(F.col("embedding")).alias("q_unit"))
-    scored = (
-        corpus.join(F.broadcast(q), F.col("vec_id") != F.col("query_id"))
-        .select("query_id", "vec_id", _q8_cosine().alias("cosine"))
-    )
-    return _rank_topk(scored, k)
-
-
-def ivf_sq8_topk(embeddings: DataFrame, queries: DataFrame, k: int = 5,
-                 n_lists: int = 16, nprobe: int = 4,
-                 refine_iters: int = 0) -> DataFrame:
-    """IVF probe over SQ8-quantized inverted lists — the combined
-    memory + compute path for 10^10-vector corpora: each query touches
-    only ~nprobe/n_lists of the data (IVF) AND the stored list vectors
-    are int8, so the probed partitions scan 4-8× fewer bytes (SQ8).
-
-    The index build (centroid pick + argmax assignment + quantization) is
-    ONE full-precision corpus pass: assignment carries the raw embedding
-    through (ivf_assign carry_embedding) and quantization fuses into the
-    same map stage — no second corpus scan, no corpus-sized self-join.
-    At scale the output (list_id, vec_id, qvec) is what gets persisted,
-    partitioned by list_id so a probe prunes to nprobe partitions.
-    Quantization is of the RAW embedding (not the unit vector): cosine is
-    scale-invariant, so ranking is unchanged and an independent SQL
-    mirror can restate the quantizer without replicating the
-    normalization op order. Scoring shares sq8_topk's zero-guarded
-    quantized cosine."""
-    centroids, assigned = ivf_assign(embeddings, n_lists, refine_iters,
-                                     carry_embedding=True)
-    lists = quantize_embeddings(
-        assigned.select("vec_id", "list_id", "embedding")).select(
-        "vec_id", "list_id", F.col("qvec").cast("array<double>").alias("qd"))
-    scored = (
-        _probe_lists(queries, centroids, nprobe).join(lists, "list_id")
-        .where(F.col("vec_id") != F.col("query_id"))
-        .select("query_id", "vec_id", _q8_cosine().alias("cosine"))
-    )
-    return _rank_topk(scored, k)
-
-
-# ---------------------------------------------------------------------------
-# Product quantization (PQ) — the memory-bound 10^10 tier: each vector is
-# stored as m_sub small codes (4 bytes here vs 256 bytes of floats, 64×),
-# queries scan codes with precomputed distance tables (ADC).
-# ---------------------------------------------------------------------------
-
-def _pq_l2q(a, b) -> F.Column:
-    """Subspace squared-L2 quantized to 1e-6 — the shared distance unit of
-    encode and ADC, so ties are exact cross-engine."""
-    return F.round(
-        F.aggregate(F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-                    F.lit(0.0), lambda acc, v: acc + v), 6)
-
-
-def _pq_codebook(embeddings: DataFrame, k_cent: int) -> DataFrame:
-    """1-row frame carrying the broadcastable codebook array: the k_cent
-    corpus vectors with the smallest xxhash64(vec_id)
-    (TakeOrderedAndProject — no global sort, no driver count); subspace
-    j's codebook is their j-th dim/m_sub-slice, code = array position."""
-    return (embeddings
-            .select("vec_id", "embedding", F.xxhash64("vec_id").alias("_hk"))
-            .orderBy("_hk", "vec_id").limit(k_cent)
-            .agg(F.array_sort(
-                F.collect_list(F.struct(
-                    "_hk", "vec_id", F.col("embedding").alias("emb"))))
-                .alias("cb")))
-
-
-def _pq_codes(emb, m_sub: int, d_sub: int) -> F.Column:
-    """codes array for one vector vs the in-scope `cb` column: per
-    subspace, an argmin fold over the codebook on 1e-6-quantized
-    distances (strict < keeps the EARLIEST minimum → ties to the lowest
-    code, stable cross-engine)."""
-    def sub(arr, j):
-        return F.slice(arr, j * d_sub + 1, d_sub)
-
-    def code_for(j) -> F.Column:
-        scored = F.transform(
-            F.col("cb"),
-            lambda c, i: F.struct(_pq_l2q(sub(emb, j), sub(c["emb"], j))
-                                  .alias("d"), i.alias("code")))
-        return F.aggregate(
-            scored,
-            F.struct(F.lit(float("inf")).alias("d"),
-                     F.lit(None).cast("integer").alias("code")),
-            lambda acc, s: F.when(s["d"] < acc["d"], s).otherwise(acc)
-        )["code"]
-
-    return F.transform(F.sequence(F.lit(0), F.lit(m_sub - 1)),
-                       lambda j: code_for(j))
-
-
-def _pq_qtables(queries: DataFrame, cb: DataFrame, m_sub: int,
-                d_sub: int, extra_cols: tuple = ()) -> DataFrame:
-    """(query_id, *extra_cols, tables): each query's m_sub × k_cent ADC
-    distance tables, computed ONCE map-only over the broadcast codebook.
-    ``extra_cols`` carries through e.g. the probed list_id for the
-    residual variant (one table set per (query, list))."""
-    def sub(arr, j):
-        return F.slice(arr, j * d_sub + 1, d_sub)
-
-    return (queries.crossJoin(F.broadcast(cb))
-            .select("query_id", *extra_cols,
-                    F.transform(
-                        F.sequence(F.lit(0), F.lit(m_sub - 1)),
-                        lambda j: F.transform(
-                            F.col("cb"),
-                            lambda c: _pq_l2q(sub(F.col("embedding"), j),
-                                              sub(c["emb"], j))))
-                    .alias("tables")))
-
-
-def _pq_adist(m_sub: int) -> F.Column:
-    """ADC sum: m_sub table lookups + adds per candidate — never a
-    per-dim product."""
-    return F.round(
-        F.aggregate(
-            F.sequence(F.lit(0), F.lit(m_sub - 1)), F.lit(0.0),
-            lambda acc, j: acc + F.element_at(
-                F.element_at(F.col("tables"), j + 1),
-                F.element_at(F.col("codes"), j + 1) + 1)), 6)
-
-
-def _pq_rank(scored: DataFrame, k: int) -> DataFrame:
-    w = Window.partitionBy("query_id").orderBy(F.asc("adist"),
-                                               F.asc("vec_id"))
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k))
-
-
-def pq_topk(embeddings: DataFrame, queries: DataFrame, k: int = 5,
-            m_sub: int = 4, k_cent: int = 16, dim: int = 64) -> DataFrame:
-    """PQ approximate top-k by squared-L2 with asymmetric distance
-    computation.
-
-    Encode: ONE map-only corpus scan (_pq_codes over the broadcast
-    codebook). At scale the (vec_id, codes) table IS the stored index:
-    m_sub bytes/vector instead of 4·dim.
-
-    Query (ADC): per-query distance tables precomputed once map-only
-    (_pq_qtables); the candidate scan costs m_sub table lookups + adds
-    per vector. Top-k per query by (adist asc, vec_id asc) on quantized
-    sums.
-
-    Returns (query_id, vec_id, adist, rank)."""
-    d_sub = dim // m_sub
-    cb = _pq_codebook(embeddings, k_cent)
-    corpus = (embeddings.crossJoin(F.broadcast(cb))
-              .select("vec_id",
-                      _pq_codes(F.col("embedding"), m_sub, d_sub)
-                      .alias("codes")))
-    qtab = _pq_qtables(queries, cb, m_sub, d_sub)
-    scored = (corpus
-              .join(F.broadcast(qtab), F.col("vec_id") != F.col("query_id"))
-              .select("query_id", "vec_id", _pq_adist(m_sub).alias("adist")))
-    return _pq_rank(scored, k)
-
-
-def ivf_pq_topk(embeddings: DataFrame, queries: DataFrame, k: int = 5,
-                n_lists: int = 16, nprobe: int = 4, m_sub: int = 4,
-                k_cent: int = 16, dim: int = 64,
-                residual: bool = False) -> DataFrame:
-    """IVF coarse pruning × PQ byte codes — the FAISS-IVFPQ shape, the
-    full memory+compute answer for 10^10-vector corpora: a query touches
-    only ~nprobe/n_lists of the index (IVF) AND the index rows it scans
-    are m_sub BYTES each (PQ), so the probed partitions are ~64× smaller
-    than float lists and scoring is ADC table lookups, not dot products.
-
-    Index build is ONE full-precision corpus pass: the coarse argmax
-    assignment carries the raw embedding through (ivf_assign
-    carry_embedding) and PQ encoding folds over a second broadcast (the
-    codebook) in the SAME map stage — no second corpus scan, no
-    corpus-sized self-join. At scale the persisted index is
-    (list_id, vec_id, codes) partitioned by list_id, so a probe prunes
-    to nprobe partitions of byte codes.
-
-    By default codes are of the RAW embedding (not the per-list
-    residual): residual encoding ties every code to its list's centroid
-    — a refinement that buys accuracy at the cost of an independent SQL
-    restatement; the simpler form is what the oracle proves.
-    ``residual=True`` enables the FAISS-style refinement: vectors are
-    unit-normalized, each encodes (unit − c_unit[list]) against a
-    RESIDUAL codebook (the hash-sampled vectors' own residuals), and the
-    query builds one distance-table set PER PROBED LIST on
-    (q_unit − c_unit). Because ‖(u−c)−(q−c)‖ = ‖u−q‖, approximation
-    error comes only from codebook coverage — and residual clouds are
-    far tighter than raw clouds on clustered data (pinned by the
-    error-reduction pytest). Same plan shape: the per-(query, list)
-    tables are nprobe× more rows of an already-tiny broadcast; encode
-    is still one map-only pass. Coarse layer ranks by unit cosine
-    (shared with ivf_topk); ADC by subspace squared-L2 (shared with
-    pq_topk).
-
-    Returns (query_id, vec_id, adist, rank)."""
-    d_sub = dim // m_sub
-    if not residual:
-        centroids, assigned = ivf_assign(embeddings, n_lists,
-                                         carry_embedding=True)
-        cb = _pq_codebook(embeddings, k_cent)
-        lists = (assigned.crossJoin(F.broadcast(cb))
-                 .select("list_id", "vec_id",
-                         _pq_codes(F.col("embedding"), m_sub, d_sub)
-                         .alias("codes")))
-        qtab = _pq_qtables(queries, cb, m_sub, d_sub)
-        scored = (
-            _probe_lists(queries, centroids, nprobe)
-            .select("query_id", "list_id")
-            .join(lists, "list_id")
-            .where(F.col("vec_id") != F.col("query_id"))
-            .join(F.broadcast(qtab), "query_id")
-            .select("query_id", "vec_id", _pq_adist(m_sub).alias("adist")))
-        return _pq_rank(scored, k)
-
-    centroids, assigned = ivf_assign(embeddings, n_lists)
-    base = (assigned.join(F.broadcast(centroids), "list_id")
-            .select("vec_id", "list_id",
-                    F.zip_with("unit", "c_unit", lambda x, y: x - y)
-                    .alias("res")))
-    cb = (base
-          .select("vec_id", "res", F.xxhash64("vec_id").alias("_hk"))
-          .orderBy("_hk", "vec_id").limit(k_cent)
-          .agg(F.array_sort(
-              F.collect_list(F.struct(
-                  "_hk", "vec_id", F.col("res").alias("emb"))))
-              .alias("cb")))
-    lists = (base.crossJoin(F.broadcast(cb))
-             .select("list_id", "vec_id",
-                     _pq_codes(F.col("res"), m_sub, d_sub).alias("codes")))
-    qres = (_probe_lists(queries, centroids, nprobe)
-            .join(F.broadcast(centroids), "list_id")
-            .select("query_id", "list_id",
-                    F.zip_with("q_unit", "c_unit", lambda x, y: x - y)
-                    .alias("embedding")))
-    qtab = _pq_qtables(qres, cb, m_sub, d_sub, extra_cols=("list_id",))
-    scored = (lists
-              .join(F.broadcast(qtab), "list_id")
-              .where(F.col("vec_id") != F.col("query_id"))
-              .select("query_id", "vec_id", _pq_adist(m_sub).alias("adist")))
-    return _pq_rank(scored, k)
-
-
-def knn_label_vote(embeddings: DataFrame, queries: DataFrame,
-                   k: int = 5) -> DataFrame:
-    """k-NN label prediction by neighbor majority vote — the standard
-    embedding-quality probe (kNN accuracy): each query's k nearest
-    corpus neighbors (cosine, self excluded) vote with their labels;
-    ties break (votes desc, label asc). ``embeddings`` carries
-    (vec_id, embedding, label); ``queries`` (query_id, embedding,
-    true_label).
-
-    Plan: the vote stage runs on query×k rows (tiny), so the cost IS
-    the neighbor search — brute-force here; at 10^9+ swap in
-    ivf_topk/ivf_pq_topk unchanged, since only (query_id, vec_id) pairs
-    feed the vote. Returns
-    (query_id, true_label, pred_label, votes, correct)."""
-    top = brute_force_topk(
-        embeddings.select("vec_id", "embedding"), queries, k)
-    votes = (top.join(embeddings.select("vec_id", "label"), "vec_id")
-             .groupBy("query_id", "label")
-             .agg(F.count("*").alias("votes")))
-    w = Window.partitionBy("query_id").orderBy(F.desc("votes"),
-                                               F.asc("label"))
-    pred = (votes.withColumn("_r", F.row_number().over(w))
-            .where(F.col("_r") == 1)
-            .select("query_id", F.col("label").alias("pred_label"),
-                    "votes"))
-    return (pred.join(queries.select("query_id", "true_label"), "query_id")
-            .select("query_id", "true_label", "pred_label", "votes",
-                    (F.col("pred_label") == F.col("true_label"))
-                    .alias("correct")))
-
-
-def label_centroid_drift(embeddings: DataFrame, dim: int = 64) -> DataFrame:
-    """Per-label embedding-centroid drift from the corpus centroid —
-    the cluster-health report a curation run reads to spot a source or
-    label whose embedding distribution has wandered (bad scrape, model
-    change, contamination).
-
-    Exactness via SQ8: centroids are computed over the int-quantized
-    components (quantize_embeddings), so every per-dimension sum is an
-    exact integer — summation order cannot matter — and cosine needs
-    only IEEE mul/div/sqrt (all correctly rounded, engine-identical).
-    Cosine is scale-invariant, so the unnormalized integer SUM vector
-    stands in for the mean with no division.
-
-    Scale shape: ONE partial-agg shuffle keyed on label producing dim
-    sum columns (no posexplode — the dim×n row blowup never exists);
-    the global centroid is the 1-row re-aggregate of the label sums,
-    broadcast back. Returns (label, n_vecs, centroid_cosine, drift)."""
-    qz = quantize_embeddings(embeddings)
-    sums = (qz.groupBy("label")
-            .agg(F.count(F.lit(1)).alias("n_vecs"),
-                 *[F.sum(F.element_at("qvec", i + 1)).alias(f"s{i}")
-                   for i in range(dim)]))
-    g = sums.agg(*[F.sum(f"s{i}").alias(f"g{i}") for i in range(dim)])
-    joined = sums.crossJoin(F.broadcast(g))
-    dot = sum((F.col(f"s{i}") * F.col(f"g{i}") for i in range(dim)),
-              F.lit(0).cast("long"))
-    na = sum((F.col(f"s{i}") * F.col(f"s{i}") for i in range(dim)),
-             F.lit(0).cast("long"))
-    nb = sum((F.col(f"g{i}") * F.col(f"g{i}") for i in range(dim)),
-             F.lit(0).cast("long"))
-    cosine = F.round(dot.cast("double")
-                     / (F.sqrt(na.cast("double"))
-                        * F.sqrt(nb.cast("double"))), 6)
-    return (joined
-            .select("label", "n_vecs", cosine.alias("centroid_cosine"))
-            .select("label", "n_vecs", "centroid_cosine",
-                    F.round(1.0 - F.col("centroid_cosine"), 6)
-                    .alias("drift")))
-
-
-def hard_negative_mining(embeddings: DataFrame, queries: DataFrame,
-                         k: int = 5) -> DataFrame:
-    """Contrastive-training hard negatives: per anchor, the k most-similar
-    corpus vectors carrying a DIFFERENT label, with the margin against
-    the anchor's hardest positive.
-
-    embeddings: (vec_id, embedding, label); queries: (query_id,
-    embedding, label). Returns (query_id, vec_id, neg_label, cosine,
-    rank, pos_cosine, margin) where pos_cosine is the best same-label
-    cosine (excluding self; null when the anchor's class has no other
-    member) and margin = cosine - pos_cosine — positive margin means the
-    negative outranks every positive, the pairs a contrastive loss
-    learns most from (the triplet-mining recipe of FaceNet,
-    arXiv:1503.03832 §3.2).
-
-    Scale shape: anchors broadcast, ONE corpus scan scores everything
-    (cosine rounded 1e-6 pre-ranking, the cross-engine tie contract);
-    positives reduce map-side to one row per anchor (partial-agg max),
-    negatives top-k via per-anchor window over the broadcast-sized key
-    space. Margin subtracts two already-rounded doubles — engine-exact.
-    For 10^10 corpora swap the scan tier for the IVF probe
-    (ivf_topk/_probe_lists) without touching the margin logic."""
-    corpus = embeddings.select(
-        "vec_id", F.col("label").alias("neg_label"),
-        _unit(F.col("embedding")).alias("unit"))
-    q = queries.select(
-        F.col("query_id"), F.col("label").alias("q_label"),
-        _unit(F.col("embedding")).alias("q_unit"))
-    scored = (corpus.join(F.broadcast(q),
-                          F.col("vec_id") != F.col("query_id"))
-              .select("query_id", "q_label", "vec_id", "neg_label",
-                      F.round(_cos(F.col("q_unit"), F.col("unit")),
-                              6).alias("cosine")))
-    pos = (scored.where(F.col("neg_label") == F.col("q_label"))
-           .groupBy("query_id")
-           .agg(F.max("cosine").alias("pos_cosine")))
-    negs = _rank_topk(scored.where(F.col("neg_label") != F.col("q_label"))
-                      .select("query_id", "vec_id", "neg_label", "cosine"),
-                      k)
-    return (negs.join(pos, "query_id", "left")
-            .select("query_id", "vec_id", "neg_label", "cosine", "rank",
-                    "pos_cosine",
-                    (F.col("cosine") - F.col("pos_cosine")).alias("margin")))
-
-
-def ann_recall_at_k(embeddings: DataFrame, queries: DataFrame, k: int = 5,
-                    n_lists: int = 16, nprobe: int = 4,
-                    refine_iters: int = 0) -> DataFrame:
-    """Retrieval-quality eval: per-query recall@k of the IVF tier against
-    brute-force ground truth — the index-tuning report a pipeline runs
-    before trusting an ANN tier at scale (the FAISS benchmark protocol).
-
-    Returns (query_id, n_hits, recall). Both retrievals reuse the
-    production operators unchanged; the intersection is a hash join on
-    (query_id, vec_id) and recall divides by the literal k, so the
-    double is the same IEEE op on both engines. Scale: ground truth is
-    the O(corpus x queries) brute scan — run it on a SAMPLED query set
-    (standard eval practice), the IVF side stays the production plan."""
-    truth = (brute_force_topk(embeddings, queries, k)
-             .select("query_id", "vec_id"))
-    approx = (ivf_topk(embeddings, queries, k, n_lists, nprobe,
-                       refine_iters)
-              .select("query_id", "vec_id"))
-    hits = (truth.join(approx, ["query_id", "vec_id"])
-            .groupBy("query_id").agg(F.count(F.lit(1)).alias("n")))
-    return (queries.select("query_id").distinct()
-            .join(hits, "query_id", "left")
-            .select("query_id",
-                    F.coalesce("n", F.lit(0)).cast("long").alias("n_hits"),
-                    (F.coalesce("n", F.lit(0)) / F.lit(float(k)))
-                    .alias("recall")))
-
-
-def embedding_outliers(embeddings: DataFrame, dim: int = 64,
-                       flag_per_label: int = 3) -> DataFrame:
-    """Label-noise scrub: each vector's cosine to its own label's
-    centroid, with the worst ``flag_per_label`` per label flagged — the
-    mislabeled-example sweep a curation run does before training on
-    labeled embeddings (low self-centroid cosine = probable wrong or
-    noisy label).
-
-    Exactness by the label_centroid_drift recipe: SQ8-quantized
-    components make every per-dimension centroid sum an exact integer
-    (summation order free), each vector·centroid dot is an exact
-    integer expression, and only the final div/sqrt are IEEE ops both
-    engines round identically; cosines quantize at 1e-6 before the
-    per-label rank so ties are engine-exact (vec_id breaks them).
-
-    Scale shape: ONE label-keyed partial agg produces the dim sum
-    columns; the label-count-sized centroid table broadcasts back onto
-    the corpus scan (map-only dot); the rank window partitions by label
-    over rows that already carry nothing but (ids, one double).
-    Returns (vec_id, label, centroid_cosine, outlier_rank, is_outlier).
-    """
-    qz = quantize_embeddings(embeddings)
-    sums = (qz.groupBy("label")
-            .agg(*[F.sum(F.element_at("qvec", i + 1)).alias(f"s{i}")
-                   for i in range(dim)]))
-    nb = sum((F.col(f"s{i}") * F.col(f"s{i}") for i in range(dim)),
-             F.lit(0).cast("long"))
-    cent = sums.select("label", *[f"s{i}" for i in range(dim)],
-                       nb.alias("_nb"))
-    joined = qz.select("vec_id", "label", "qvec").join(
-        F.broadcast(cent), "label")
-    dot = sum((F.element_at("qvec", i + 1).cast("long")
-               * F.col(f"s{i}") for i in range(dim)),
-              F.lit(0).cast("long"))
-    na = sum((F.element_at("qvec", i + 1).cast("long")
-              * F.element_at("qvec", i + 1).cast("long")
-              for i in range(dim)),
-             F.lit(0).cast("long"))
-    cosine = F.round(dot.cast("double")
-                     / (F.sqrt(na.cast("double"))
-                        * F.sqrt(F.col("_nb").cast("double"))), 6)
-    scored = joined.select("vec_id", "label",
-                           cosine.alias("centroid_cosine"))
-    w = Window.partitionBy("label").orderBy(
-        F.asc("centroid_cosine"), F.asc("vec_id"))
-    return (scored.withColumn("outlier_rank", F.row_number().over(w))
-            .select("vec_id", "label", "centroid_cosine", "outlier_rank",
-                    (F.col("outlier_rank") <= flag_per_label)
-                    .alias("is_outlier")))
 
 
 def caption_alignment(embeddings: DataFrame, threshold: float = 0.1,
@@ -726,95 +52,3 @@ def caption_alignment(embeddings: DataFrame, threshold: float = 0.1,
                         F.col("img_label") == F.col("cap_label")))
 
 
-def margin_pairs(embeddings: DataFrame, k: int = 4,
-                 threshold: float = 1.0,
-                 id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
-    """Margin-based bitext pair mining (Artetxe & Schwenk, ACL 2019;
-    the CCMatrix/LASER miner): even ids are source-side vectors, odd
-    ids target-side; each source picks the target maximizing
-    cos(x,y) / ((avgNN_k(x) + avgNN_k(y)) / 2) — the ratio margin that
-    cancels hubness, which raw cosine thresholds can't.
-
-    Plumbing is the scale story: cosines are rounded 1e-6 then held as
-    *integer* micro-units so the kNN-denominator sums are
-    order-independent BIGINT adds (bit-stable across engines and
-    partitionings); the candidate generator here is the brute tier —
-    at corpus scale the scored set plugs in from ivf_topk and the
-    margin normalization (two bounded top-k windows + one join) is
-    unchanged. Returns (src_id, tgt_id, cosine, margin)."""
-    e = embeddings.select(F.col(id_col).alias("id"),
-                          _unit(F.col(vec_col).cast("array<double>"))
-                          .alias("u"))
-    # hash-spread the source side BEFORE the broadcast fan-out: a small
-    # snapshot otherwise arrives as one file = one partition, and the
-    # O(n_src·n_tgt·d) scoring fold would run as a single task. Keying
-    # the repartition on src_id also pre-satisfies the per-src top-k
-    # window's clustering, so topx needs no second exchange.
-    par = embeddings.sparkSession.sparkContext.defaultParallelism
-    src = (e.where(F.col("id") % 2 == 0)
-           .select(F.col("id").alias("src_id"), F.col("u").alias("su"))
-           .repartition(par, "src_id"))
-    tgt = e.where(F.col("id") % 2 == 1).select(
-        F.col("id").alias("tgt_id"), F.col("u").alias("tu"))
-    cos = F.round(_cos(F.col("su"), F.col("tu")), 6)
-    scored = (src.join(F.broadcast(tgt))
-              .select("src_id", "tgt_id",
-                      F.round(cos * 1e6, 0).cast("long").alias("c6")))
-
-    from pyspark.sql import Window
-    wx = Window.partitionBy("src_id").orderBy(F.col("c6").desc(), "tgt_id")
-    wy = Window.partitionBy("tgt_id").orderBy(F.col("c6").desc(), "src_id")
-    topx = (scored.withColumn("rx", F.row_number().over(wx))
-            .where(F.col("rx") <= k))
-    topy = (scored.withColumn("ry", F.row_number().over(wy))
-            .where(F.col("ry") <= k))
-    ax = topx.groupBy("src_id").agg(F.sum("c6").alias("ax_sum"),
-                                    F.count(F.lit(1)).alias("kx"))
-    ay = topy.groupBy("tgt_id").agg(F.sum("c6").alias("ay_sum"),
-                                    F.count(F.lit(1)).alias("ky"))
-    d = lambda c: F.col(c).cast("double")
-    denom = (d("ax_sum") / d("kx") / F.lit(1e6)
-             + d("ay_sum") / d("ky") / F.lit(1e6)) / F.lit(2.0)
-    cand = (topx.join(ax, "src_id").join(ay, "tgt_id")
-            .withColumn("cosine", d("c6") / F.lit(1e6))
-            .withColumn("margin", F.round(F.col("cosine") / denom, 6)))
-    wbest = Window.partitionBy("src_id").orderBy(
-        F.col("margin").desc(), "tgt_id")
-    return (cand.withColumn("rb", F.row_number().over(wbest))
-            .where((F.col("rb") == 1) & (F.col("margin") >= threshold))
-            .select("src_id", "tgt_id", "cosine", "margin"))
-
-
-def rrf_fuse(sparse: DataFrame, dense: DataFrame, k: int = 20,
-             rrf_k: int = 60) -> DataFrame:
-    """Reciprocal-rank fusion (Cormack/Clarke/Buettcher, SIGIR 2009) of a
-    sparse (BM25) and a dense (embedding-cosine) ranked list — the
-    standard hybrid-retrieval combiner a curation pipeline uses to pull
-    topical subsets with both lexical and semantic recall.
-
-    Inputs are (doc_id, rank) frames, each already truncated to a bounded
-    top-N (so this whole fusion runs on ≤2N rows regardless of corpus
-    size — the upstream rankers did the 10^10-scale work). Per-list
-    contribution 1/(rrf_k + rank) is held as *integer* micro-units so the
-    two-term sum is a bit-stable BIGINT add on any engine; a missing rank
-    contributes 0 (the full-outer join keeps docs surfaced by only one
-    retriever). Returns (doc_id, rrf_score, sparse_rank, dense_rank, rank)
-    for the fused top-k; the final global window is over ≤2N rows by
-    construction, not a corpus-scale sort."""
-    micro = lambda r: F.coalesce(
-        F.round(F.lit(1e6) / (F.lit(rrf_k) + r), 0).cast("long"), F.lit(0))
-    s = sparse.select("doc_id", F.col("rank").alias("sparse_rank"))
-    d = dense.select("doc_id", F.col("rank").alias("dense_rank"))
-    fused = (s.join(d, "doc_id", "full_outer")
-             .select("doc_id", "sparse_rank", "dense_rank",
-                     (micro(F.col("sparse_rank"))
-                      + micro(F.col("dense_rank"))).alias("micro")))
-    w = Window.orderBy(F.col("micro").desc(), "doc_id")
-    return (fused
-            .select("doc_id",
-                    F.round(F.col("micro").cast("double") / F.lit(1e6), 6)
-                    .alias("rrf_score"),
-                    F.col("sparse_rank").cast("int").alias("sparse_rank"),
-                    F.col("dense_rank").cast("int").alias("dense_rank"),
-                    F.row_number().over(w).cast("int").alias("rank"))
-            .where(F.col("rank") <= k))

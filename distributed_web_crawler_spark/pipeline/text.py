@@ -1,19 +1,18 @@
-"""Text-analysis operators for a training-data pipeline over `documents`.
+"""Text training-mix heuristics over `documents`, outside the crawl.
 
-All four are pure Catalyst expressions (JVM-side, whole-stage codegen) — no
-UDFs — so they survive a 100 TB corpus: each is a single scan with the text
-column pruned to exactly what's needed, no shuffle except the caller's.
-
-- token_count: whitespace tokenization + a BPE-ish sub-token estimate
-- quality_score: length / punctuation / stopword-ratio heuristics
-- lang_id: n-gram / stopword-hit heuristic
-- fingerprint: rolling normalization + sha256 document fingerprint
+Pure Catalyst expressions (JVM-side, whole-stage codegen, no UDFs):
+whitespace and sub-token counts, a quality score, a stopword-hit
+language ID, and the four table operators built on them — the text
+training-mix stage ladder and its dataset-card report, tokenizer
+fertility, and Wilson-bounded per-source quality.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from .multimodal import WS_PLUS
 
 # tiny per-language marker lexicons for the heuristic language-ID
 LANG_MARKERS = {
@@ -23,16 +22,6 @@ LANG_MARKERS = {
     "de": ["der", "die", "das", "und"],
 }
 STOPWORDS = ("the", "a", "of", "and", "to", "in")
-
-# Whitespace pinned to an EXPLICIT character class so the engine (Java
-# regex) and every DuckDB oracle (RE2) tokenize byte-identically: Java's
-# \s is [ \t\n\x0B\f\r] while RE2's \s omits \x0B — one vertical tab in
-# a document silently flips token counts (and every downstream cum-sum)
-# between the two engines. Both regex dialects parse this class the same
-# way. Keep WS/WS_PLUS in lock-step with the SQL literal used in every
-# string_split_regex oracle (queries.py / oracles.py).
-WS = r"[ \t\n\r\f\x0B]"
-WS_PLUS = WS + "+"
 
 
 # Every word the scoring heuristics look for, folded into ONE alternation:
@@ -44,7 +33,7 @@ WS_PLUS = WS + "+"
 # (the form the DuckDB oracle mirrors). The collapsed expression tree also
 # keeps the enclosing whole-stage-codegen method under the JVM's 64 KB
 # limit — the per-word form blew past it when fused with a partial
-# aggregate in curation_pipeline and fell back to interpreted execution.
+# aggregate and fell back to interpreted execution.
 _SCORED_WORDS = tuple(sorted(
     set(STOPWORDS) | {w for ws in LANG_MARKERS.values() for w in ws}))
 _HITS_PATTERN = r"\b(" + "|".join(_SCORED_WORDS) + r")\b"
@@ -111,78 +100,6 @@ def lang_id(text: Column, hits: Column | None = None) -> Column:
     return expr.otherwise(F.lit("und"))
 
 
-def fingerprint(text: Column) -> Column:
-    """Document fingerprint: sha256 over case/whitespace-normalized text."""
-    return F.sha2(F.regexp_replace(F.lower(F.trim(text)), WS_PLUS, " "), 256)
-
-
-def analyze(documents: DataFrame, text_col: str = "text") -> DataFrame:
-    t = F.col(text_col)
-    h = word_hits(t)
-    return documents.select(
-        "doc_id",
-        token_count(t).alias("n_tokens"),
-        bpe_ish_token_count(t).alias("n_subtokens"),
-        quality_score(t, hits=h).alias("quality"),
-        lang_id(t, hits=h).alias("lang_pred"),
-        fingerprint(t).alias("fingerprint"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# PII detection / scrubbing — the redaction stage of a curation pipeline.
-# Patterns use only explicit ASCII classes (no \d, \s, \w, \b) so Java
-# regex (Spark) and RE2 (DuckDB oracle) match identically; categories are
-# applied in PII_ORDER on both sides, so overlap resolution is fixed.
-# Pure Catalyst — one scan, zero UDFs, zero shuffle.
-# ---------------------------------------------------------------------------
-
-PII_PATTERNS = {
-    "email": r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}",
-    "ipv4": r"[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}",
-    "ssn": r"[0-9]{3}-[0-9]{2}-[0-9]{4}",
-    "phone": r"\+[0-9]{7,15}|[0-9]{3}-[0-9]{3}-[0-9]{4}",
-}
-PII_ORDER = ("email", "ipv4", "ssn", "phone")
-
-
-def pii_stats(documents: DataFrame, text_col: str = "text") -> DataFrame:
-    """Per-document PII hit counts by category, counted on the residual
-    text after scrubbing the EARLIER categories — so an SSN inside an
-    already-redacted email is not double-counted, and the counts equal
-    exactly what pii_scrub redacts."""
-    t = F.col(text_col)
-    out = [F.col("doc_id")]
-    for cat in PII_ORDER:
-        out.append(F.regexp_count(t, F.lit(PII_PATTERNS[cat]))
-                   .cast("long").alias(f"n_{cat}"))
-        t = F.regexp_replace(t, PII_PATTERNS[cat], f"[{cat.upper()}]")
-    total = None
-    for cat in PII_ORDER:
-        c = F.col(f"n_{cat}")
-        total = c if total is None else total + c
-    return documents.select(*out).withColumn("n_pii", total.cast("long"))
-
-
-def pii_scrub(documents: DataFrame, text_col: str = "text") -> DataFrame:
-    """Replace each PII category with a typed sentinel, in PII_ORDER."""
-    t = F.col(text_col)
-    for cat in PII_ORDER:
-        t = F.regexp_replace(t, PII_PATTERNS[cat], f"[{cat.upper()}]")
-    return documents.select("doc_id", t.alias("clean_text"))
-
-
-def deterministic_sample(df: DataFrame, key_col: str, rate: float,
-                         denom: int = 1_000_000) -> DataFrame:
-    """Stable corpus sampling: keep rows where
-    pmod(xxhash64(key), denom) < rate*denom. The same key always lands on
-    the same side at any scale and any partitioning — the reproducible
-    train/eval-split primitive (a random() sample is neither reproducible
-    nor stable under retries)."""
-    return df.where(F.pmod(F.xxhash64(F.col(key_col)), F.lit(denom))
-                    < F.lit(int(round(rate * denom))))
-
-
 def source_quota_sample(df: DataFrame, cap: int = 10,
                         group_col: str = "source",
                         id_col: str = "doc_id",
@@ -210,949 +127,13 @@ def source_quota_sample(df: DataFrame, cap: int = 10,
             .where(F.col("quota_rank") <= cap))
 
 
-# ---------------------------------------------------------------------------
-# Cross-document line-level dedup (CCNet-style boilerplate removal):
-# drop every line shared by more than max_df documents, keep the rest in
-# original order. The public CCNet pipeline does this with line hashes;
-# we anti-join on the exact trimmed line so no collision can drop a good
-# line (at extreme scale, key the exchange on xxhash64(line) and verify
-# the few positives exactly — same two-tier shape as the crawl's bloom
-# probes).
-# ---------------------------------------------------------------------------
-
-def line_dedup(documents: DataFrame, max_df: int = 5,
-               text_col: str = "text") -> DataFrame:
-    """(doc_id, clean_text, n_lines, n_kept): remove boilerplate lines.
-
-    Shuffle profile at 100 TB: explode lines (map-side) → distinct
-    (doc_id, line) → line-frequency count (one exchange on the line key,
-    partial agg combines map-side) → anti-join lines against the
-    over-frequent set (same key, exchange reused; AQE broadcasts when the
-    violator set is small, which boilerplate usually is) → per-document
-    reassembly (one exchange on doc_id). Empty/whitespace-only lines are
-    dropped outright. A document whose every line is boilerplate still
-    yields a row with clean_text = ''.
-    """
-    d = documents.select("doc_id", F.col(text_col).alias("_t"))
-    lines = (d.select("doc_id",
-                      F.posexplode(F.split("_t", "\n"))
-                      .alias("pos", "raw"))
-             .select("doc_id", "pos", F.trim("raw").alias("line"))
-             .where(F.length("line") > 0))
-    # document frequency: a line counts once per document containing it
-    too_common = (lines.select("line", "doc_id").distinct()
-                  .groupBy("line").agg(F.count(F.lit(1)).alias("df"))
-                  .where(F.col("df") > max_df)
-                  .select("line"))
-    kept = lines.join(too_common, "line", "left_anti")
-    rebuilt = (kept.groupBy("doc_id")
-               .agg(F.array_join(
-                        F.transform(
-                            F.array_sort(F.collect_list(
-                                F.struct("pos", "line"))),
-                            lambda s: s["line"]),
-                        "\n").alias("clean_text"),
-                    F.count(F.lit(1)).alias("n_kept")))
-    totals = lines.groupBy("doc_id").agg(
-        F.count(F.lit(1)).alias("n_lines"))
-    return (totals.join(rebuilt, "doc_id", "left")
-            .select("doc_id",
-                    F.coalesce("clean_text", F.lit("")).alias("clean_text"),
-                    F.col("n_lines").cast("long").alias("n_lines"),
-                    F.coalesce("n_kept", F.lit(0)).cast("long")
-                    .alias("n_kept")))
-
-
-# ---------------------------------------------------------------------------
-# Within-document repetition signals (the Gopher-paper quality filters):
-# duplicate-line fraction, duplicate-line character fraction, duplicate
-# 2-gram fraction, top-2-gram fraction. Pure Catalyst array expressions —
-# a single scan with zero exchange and zero Python, so at 100 TB the cost
-# is scan bandwidth; per-row work is O(lines² + grams·distinct_grams)
-# over one document's own content, bounded by document size.
-# ---------------------------------------------------------------------------
-
-def _frac(num: Column, den: Column) -> Column:
-    return F.round(F.when(den > 0, num.cast("double") / den.cast("double"))
-                   .otherwise(F.lit(0.0)), 6)
-
-
-def _char_sum(arr: Column) -> Column:
-    return F.aggregate(arr, F.lit(0),
-                       lambda acc, x: acc + F.length(x)).cast("double")
-
-
-def repetition_signals(documents: DataFrame,
-                       text_col: str = "text") -> DataFrame:
-    # Each intermediate array is pinned to its own projection on purpose:
-    # higher-order functions are CodegenFallback expressions with no
-    # common-subexpression elimination, so if `grams` stayed an inline
-    # expression the nested top-count lambda would re-derive it (split,
-    # transform and all) once PER DISTINCT GRAM — O(n²) document
-    # re-parses. Referencing a non-cheap alias more than once stops
-    # Catalyst's CollapseProject from inlining, so every array below is
-    # computed exactly once per row.
-    t = F.col(text_col)
-    toks = F.split(F.trim(F.lower(t)), WS_PLUS)
-    s1 = documents.select(
-        "doc_id",
-        F.filter(F.transform(F.split(t, "\n"), lambda x: F.trim(x)),
-                 lambda x: F.length(x) > 0).alias("_lines"),
-        toks.alias("_toks"))
-    n_grams = F.size(F.col("_toks")) - 1
-    s2 = s1.select(
-        "doc_id", "_lines",
-        F.array_distinct("_lines").alias("_dlines"),
-        F.when(
-            n_grams >= 1,
-            F.transform(F.sequence(F.lit(1), n_grams),
-                        lambda i: F.concat(F.element_at(F.col("_toks"), i),
-                                           F.lit(" "),
-                                           F.element_at(F.col("_toks"),
-                                                        i + 1)))
-        ).otherwise(F.array().cast("array<string>")).alias("_grams"))
-    s3 = s2.select("doc_id", "_lines", "_dlines", "_grams",
-                   F.array_distinct("_grams").alias("_dgrams"))
-
-    lines, dlines = F.col("_lines"), F.col("_dlines")
-    grams, dgrams = F.col("_grams"), F.col("_dgrams")
-    n_lines = F.size(lines)
-    top_count = F.when(
-        F.size(grams) >= 1,
-        F.array_max(F.transform(
-            dgrams, lambda g: F.size(F.filter(grams, lambda x: x == g))))
-    ).otherwise(F.lit(0))
-    return s3.select(
-        "doc_id",
-        n_lines.cast("long").alias("n_lines"),
-        _frac(n_lines - F.size(dlines), n_lines).alias("dup_line_frac"),
-        _frac(_char_sum(lines) - _char_sum(dlines),
-              _char_sum(lines)).alias("dup_line_char_frac"),
-        _frac(F.size(grams) - F.size(dgrams),
-              F.size(grams)).alias("dup_2gram_frac"),
-        _frac(top_count, F.size(grams)).alias("top_2gram_frac"))
-
-
-# ---------------------------------------------------------------------------
-# corpus vocabulary — heavy hitters and per-document TF-IDF keywords.
-# The building blocks of tokenizer training (BPE seed vocab) and of
-# keyword-based corpus slicing at training-pipeline scale.
-# ---------------------------------------------------------------------------
-
-def _token_rows(documents: DataFrame, text_col: str) -> DataFrame:
-    """(doc_id, token) rows: lowercased whitespace tokens, empties dropped.
-    explode() runs inside the scan stage, so the shuffle downstream carries
-    tokens, never document text."""
-    return (documents
-            .select("doc_id",
-                    F.explode(tokens(F.lower(F.col(text_col))))
-                    .alias("token"))
-            .where(F.col("token") != ""))
-
-
-def vocab_topk(documents: DataFrame, k: int = 50,
-               text_col: str = "text") -> DataFrame:
-    """Top-k corpus vocabulary by term frequency (ties broken by token).
-
-    Scale shape: one partial-aggregating shuffle on the token, then a
-    per-partition top-k merged on the driver (TakeOrderedAndProject) — no
-    global sort. df (document frequency) rides on the same aggregate as a
-    distinct-count, which Spark plans as the standard two-phase expand;
-    at 100 TB swap count_distinct for approx_count_distinct and the plan
-    collapses back to a single phase (kept exact here for oracle parity).
-    Returns (token, tf, df)."""
-    return (_token_rows(documents, text_col)
-            .groupBy("token")
-            .agg(F.count("*").alias("tf"),
-                 F.count_distinct("doc_id").alias("df"))
-            .orderBy(F.desc("tf"), F.asc("token"))
-            .limit(k))
-
-
-def tfidf_topterms(documents: DataFrame, k: int = 3,
-                   text_col: str = "text") -> DataFrame:
-    """Per-document top-k terms by smoothed TF-IDF.
-
-    tfidf = tf * ln((N+1)/(df+1)), quantized to 1e-6 before ranking so
-    float ties break identically on any engine (ranking order:
-    tfidf desc, token asc). N (corpus size) is a one-row aggregate
-    broadcast into the scoring join — never a driver-side count.
-
-    Scale shape: tf = one shuffle on (doc_id, token) with map-side
-    combine; df = a second partial agg over the *already reduced* tf
-    table; the df table joins back on the token (shuffle join — df is
-    O(vocabulary), broadcastable in practice but kept robust here); the
-    final top-k per document is a window over the doc_id partition.
-    Returns (doc_id, token, tf, df, tfidf, rank)."""
-    from pyspark.sql import Window
-
-    tf = (_token_rows(documents, text_col)
-          .groupBy("doc_id", "token").agg(F.count("*").alias("tf")))
-    dfreq = tf.groupBy("token").agg(F.count("*").alias("df"))
-    n_docs = documents.agg(F.count_distinct("doc_id").alias("n_docs"))
-    scored = (tf.join(dfreq, "token")
-              .crossJoin(F.broadcast(n_docs))
-              .withColumn(
-                  "tfidf",
-                  F.round(F.col("tf").cast("double") *
-                          F.log((F.col("n_docs") + F.lit(1)).cast("double")
-                                / (F.col("df") + F.lit(1)).cast("double")),
-                          6)))
-    w = Window.partitionBy("doc_id").orderBy(F.desc("tfidf"),
-                                             F.asc("token"))
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k)
-            .select("doc_id", "token", "tf", "df", "tfidf", "rank"))
-
-
-def sequence_packing(documents: DataFrame, ctx_len: int = 256,
-                     n_shards: int = 8,
-                     text_col: str = "text") -> DataFrame:
-    """Concat-and-chunk sequence packing: lay documents end to end and cut
-    fixed ctx_len-token training sequences — the last preprocessing step
-    before a pre-training run. Emits, per document, where its tokens land:
-    (doc_id, shard, n_tokens, offset_in_chunk, chunk_start, chunk_end).
-
-    Packing is inherently sequential (each doc's offset depends on every
-    predecessor), so the corpus is split into independent shards packed in
-    parallel: ONE window (cumulative token count over a deterministic
-    in-shard order) per shard partition — a single exchange, integer
-    arithmetic only, any per-shard tail waste < ctx_len tokens. shard =
-    doc_id % n_shards keeps the oracle pure SQL; production would use
-    pmod(xxhash64(doc_id), n_shards) for balance under arbitrary id
-    distributions (same plan)."""
-    n_tok = token_count(F.col(text_col)).cast("long")
-    from pyspark.sql import Window
-
-    w = (Window.partitionBy("shard").orderBy("doc_id")
-         .rowsBetween(Window.unboundedPreceding, -1))
-    staged = (documents
-              .select("doc_id",
-                      (F.col("doc_id") % n_shards).alias("shard"),
-                      n_tok.alias("n_tokens"))
-              .withColumn("cum_before",
-                          F.coalesce(F.sum("n_tokens").over(w),
-                                     F.lit(0).cast("long"))))
-    ctx = F.lit(ctx_len)
-    return staged.select(
-        "doc_id", "shard", "n_tokens",
-        (F.col("cum_before") % ctx).alias("offset_in_chunk"),
-        F.expr(f"cum_before DIV {ctx_len}").alias("chunk_start"),
-        F.expr(f"(cum_before + n_tokens - 1) DIV {ctx_len}")
-        .alias("chunk_end"))
-
-
-def bigram_lm_counts(documents: DataFrame,
-                     text_col: str = "text") -> DataFrame:
-    """Corpus bigram language-model counts: per bigram (w1, w2) its count,
-    the left-context total c_w1 = Σ_w c(w1, w), and the Kneser-Ney
-    continuation fan-out n_followers = |{w : c(w1, w) > 0}| — the three
-    ingredients of an interpolated bigram LM (the KenLM-prep shape).
-
-    Scale: bigrams explode worker-side from the token array (the array is
-    aliased to its own projection first — higher-order functions get no
-    common-subexpression elimination, so an inline expression would
-    re-split the document once per element); one partial-agg shuffle on
-    (w1, w2); the context marginals aggregate the ALREADY-REDUCED bigram
-    table (second, vocabulary-sized shuffle) and join back on w1."""
-    toks = tokens(F.lower(F.col(text_col)))
-    staged = documents.select(toks.alias("_t"))
-    t = F.col("_t")
-    pairs = staged.select(F.explode(
-        F.when(F.size(t) >= 2,
-               F.transform(F.sequence(F.lit(1), F.size(t) - 1),
-                           lambda i: F.struct(
-                               F.element_at(t, i).alias("w1"),
-                               F.element_at(t, i + 1).alias("w2"))))
-        .otherwise(F.array().cast(
-            "array<struct<w1:string,w2:string>>"))).alias("bg"))
-    big = (pairs.groupBy(F.col("bg.w1").alias("w1"),
-                         F.col("bg.w2").alias("w2"))
-           .agg(F.count("*").alias("c_big")))
-    ctx = (big.groupBy("w1")
-           .agg(F.sum("c_big").alias("c_w1"),
-                F.count("*").alias("n_followers")))
-    return big.join(ctx, "w1").select("w1", "w2", "c_big", "c_w1",
-                                      "n_followers")
-
-
-def lm_perplexity(documents: DataFrame, model_documents: DataFrame | None = None,
-                  text_col: str = "text") -> DataFrame:
-    """Bigram-LM perplexity scoring — the CCNet-style quality filter: train
-    bigram counts on a reference corpus (``model_documents``; defaults to
-    the scored corpus itself), score every document's bigram stream, and
-    emit per-document log-likelihood and perplexity. Low ppl ≈ fluent,
-    in-domain text; high ppl ≈ boilerplate/gibberish — threshold or
-    bucket downstream exactly like the CCNet head/middle/tail split.
-
-    Smoothing is Laplace on the bigram with the context marginal:
-    p(w2|w1) = (c(w1,w2) + 1) / (c_w1 + V), V = |distinct contexts| —
-    an unseen context scores 1/V. (Interpolated Kneser-Ney is the
-    production refinement; bigram_lm_counts already carries its
-    continuation fan-out, but Laplace keeps the independent SQL
-    restatement exact.)
-
-    Scale shape: the model is a corpus-level TABLE, never a broadcast —
-    at 100 TB the bigram table is itself huge. Scoring is two hash joins
-    of the exploded doc-bigram stream against the reduced model tables
-    (keyed (w1,w2) and (w1)), then one per-doc aggregation; V rides along
-    as a 1-row broadcast cross join (never a driver count). Per-bigram
-    logprobs are rounded to 1e-6 BEFORE summation so independent engines
-    aggregate the identical multiset, and ppl = exp(−avg) is taken of the
-    already-rounded average so both engines exponentiate the same input.
-
-    Documents with < 2 tokens have no bigrams and are excluded.
-    Returns (doc_id, n_bigrams, n_oov, avg_logprob, ppl)."""
-    model = bigram_lm_counts(
-        documents if model_documents is None else model_documents, text_col)
-    big = model.select("w1", "w2", "c_big")
-    ctx = model.select("w1", "c_w1").distinct()
-    vocab = ctx.agg(F.count("*").cast("double").alias("_V"))
-
-    toks = tokens(F.lower(F.col(text_col)))
-    staged = documents.select("doc_id", toks.alias("_t"))
-    t = F.col("_t")
-    pairs = (staged.select("doc_id", F.explode(
-        F.when(F.size(t) >= 2,
-               F.transform(F.sequence(F.lit(1), F.size(t) - 1),
-                           lambda i: F.struct(
-                               F.element_at(t, i).alias("w1"),
-                               F.element_at(t, i + 1).alias("w2"))))
-        .otherwise(F.array().cast(
-            "array<struct<w1:string,w2:string>>"))).alias("bg"))
-        .select("doc_id", F.col("bg.w1").alias("w1"),
-                F.col("bg.w2").alias("w2")))
-    scored = (pairs
-              .join(big, ["w1", "w2"], "left")
-              .join(ctx, ["w1"], "left")
-              .crossJoin(F.broadcast(vocab))
-              .select("doc_id",
-                      F.col("c_big").isNull().cast("long").alias("oov"),
-                      # micro-nat INTEGER logprob: summing the rounded
-                      # DOUBLES would still be order-dependent in the last
-                      # ulps (Spark's partition order is nondeterministic,
-                      # DuckDB's differs) — ×1e6 and round to long makes
-                      # the per-doc sum exact under any order
-                      F.round(F.round(F.log(
-                          (F.coalesce(F.col("c_big"), F.lit(0)) + F.lit(1.0))
-                          / (F.coalesce(F.col("c_w1"), F.lit(0))
-                             + F.col("_V"))), 6) * F.lit(1e6), 0)
-                      .cast("long").alias("lp_micro")))
-    agg = (scored.groupBy("doc_id")
-           .agg(F.count("*").alias("n_bigrams"),
-                F.sum("oov").alias("n_oov"),
-                F.round(F.sum("lp_micro").cast("double")
-                        / (F.count("*") * F.lit(1e6)), 6)
-                .alias("avg_logprob")))
-    return agg.select("doc_id", "n_bigrams", "n_oov", "avg_logprob",
-                      F.round(F.exp(-F.col("avg_logprob")), 6).alias("ppl"))
-
-
-def mixture_weights(documents: DataFrame, alpha: float = 0.3,
-                    group_col: str = "source") -> DataFrame:
-    """Temperature-scaled data-mixing table (the multilingual-LM n^α
-    rule): a group's sampling weight is n_s^α / Σ n^α — α < 1 upsamples
-    the tail and damps dominant sources; α = 1 is proportional, α = 0
-    uniform. ``repeat_factor`` = weight · N / n_s is the expected epochs
-    over that source when drawing N documents under the mix (> 1 means
-    the source repeats, the low-resource upsampling signal).
-
-    Plan: one count aggregation (map-side partial) over the corpus, then
-    the Σ n^α normalizer and corpus total ride a 1-row broadcast cross
-    join over the GROUP-level table (never a driver collect; the second
-    agg is groups-sized, not corpus-sized). Weights round to 1e-6 for
-    cross-engine parity.
-
-    Returns (source, n_docs, weight, repeat_factor)."""
-    counts = (documents.groupBy(group_col)
-              .agg(F.count("*").alias("n_docs")))
-    # nano-scaled INTEGER n^α terms: summing raw pow() doubles would be
-    # order-dependent across engines/partitionings; quantizing each term
-    # to a long makes the normalizer exact under any order
-    p_nano = (F.round(F.pow(F.col("n_docs"), F.lit(alpha)) * F.lit(1e9), 0)
-              .cast("long"))
-    counts = counts.withColumn("_p", p_nano)
-    norm = counts.agg(F.sum("_p").alias("_z"), F.sum("n_docs").alias("_n"))
-    share = F.col("_p").cast("double") / F.col("_z").cast("double")
-    return (counts.crossJoin(F.broadcast(norm))
-            .select(group_col, "n_docs",
-                    F.round(share, 6).alias("weight"),
-                    F.round(share * F.col("_n") / F.col("n_docs"), 6)
-                    .alias("repeat_factor")))
-
-
-def distribution_drift(old_docs: DataFrame, new_docs: DataFrame,
-                       group_col: str = "source") -> DataFrame:
-    """Corpus drift between two snapshots: per group, its share in each
-    snapshot and its Jensen-Shannon divergence contribution
-    (Σ js_term = JSD(P‖Q), base-2, bounded [0,1]) — the
-    retrain-the-mix / data-drift alarm for a recurring crawl. JS is used
-    instead of KL because a group present in only ONE snapshot (p or q
-    zero) still has a finite, defined term (0·log0 = 0).
-
-    Scale: one count agg per snapshot (map-side partial, group-level
-    output), a full outer join on the group key, totals via a 1-row
-    broadcast cross join — nothing corpus-sized past the first aggs.
-
-    Returns (source, p_old, q_new, js_term), shares and terms rounded
-    1e-6."""
-    oc = old_docs.groupBy(group_col).agg(F.count("*").alias("_no"))
-    nc = new_docs.groupBy(group_col).agg(F.count("*").alias("_nn"))
-    both = (oc.join(nc, group_col, "full_outer")
-            .select(group_col,
-                    F.coalesce("_no", F.lit(0)).alias("_no"),
-                    F.coalesce("_nn", F.lit(0)).alias("_nn")))
-    tot = both.agg(F.sum("_no").cast("double").alias("_to"),
-                   F.sum("_nn").cast("double").alias("_tn"))
-    p = F.col("_no") / F.col("_to")
-    q = F.col("_nn") / F.col("_tn")
-    m = (p + q) / 2
-
-    def term(x):
-        return F.when(x > 0, x / 2 * F.log2(x / m)).otherwise(F.lit(0.0))
-
-    return (both.crossJoin(F.broadcast(tot))
-            .select(group_col,
-                    F.round(p, 6).alias("p_old"),
-                    F.round(q, 6).alias("q_new"),
-                    F.round(term(p) + term(q), 6).alias("js_term")))
-
-
-def packed_chunk_manifest(documents: DataFrame, ctx_len: int = 256,
-                          n_shards: int = 8,
-                          text_col: str = "text") -> DataFrame:
-    """The trainer-facing shard manifest: sequence_packing's per-document
-    layout exploded into per-(shard, chunk) slice rows — for every chunk
-    a document touches, which of its tokens land there and where:
-
-      (shard, chunk_id, doc_id, tok_from, tok_to, chunk_off)
-
-    tok_from/tok_to are the doc-local token span [from, to) and
-    chunk_off the position inside the chunk — exactly the gather list a
-    dataloader executes to emit chunk chunk_id of shard shard. Rows per
-    doc = chunks touched (≥ 1); Σ (tok_to − tok_from) per chunk = ctx_len
-    for every full chunk. Integer-only arithmetic on top of the packing
-    window — one exchange (the per-shard cumulative sum), then a
-    map-side explode of at most ⌈n/ctx⌉+1 rows per doc."""
-    packed = sequence_packing(documents, ctx_len, n_shards, text_col)
-    c = F.col("chunk_id")
-    b = F.col("cum_before")
-    n = F.col("n_tokens")
-    ctx = F.lit(ctx_len)
-    return (packed
-            .withColumn("cum_before",
-                        F.col("chunk_start") * ctx + F.col("offset_in_chunk"))
-            .select("doc_id", "shard", "n_tokens", "cum_before",
-                    F.explode(F.sequence(F.col("chunk_start"),
-                                         F.col("chunk_end")))
-                    .alias("chunk_id"))
-            .select("shard", "chunk_id", "doc_id",
-                    F.greatest(c * ctx - b, F.lit(0).cast("long"))
-                    .alias("tok_from"),
-                    F.least(n, (c + 1) * ctx - b).alias("tok_to"),
-                    F.greatest(b - c * ctx, F.lit(0).cast("long"))
-                    .alias("chunk_off")))
-
-
-def stratified_split(df: DataFrame, key_col: str = "doc_id",
-                     strata_col: str = "lang",
-                     pct: tuple[int, int, int] = (90, 5, 5),
-                     denom: int = 1_000_000) -> DataFrame:
-    """Exact deterministic train/val/test split, stratified: within each
-    stratum, rows rank by (pmod(xxhash64(key), denom), key) and integer
-    percentile cuts assign splits — rank·100 ≤ n·pct comparisons are
-    pure integer arithmetic, so the boundaries are bit-exact
-    cross-engine and the split is reproducible under any partitioning.
-    Unlike a global hash-threshold split (deterministic_sample), the
-    per-stratum fractions here are EXACT (±1 row), which is what keeps
-    a rare language from losing its whole eval slice to hash variance.
-
-    One exchange on the stratum key: the rank window and the stratum
-    count share it. Returns (key, stratum, split)."""
-    from pyspark.sql import Window
-
-    p_train, p_val, _ = pct
-    w = Window.partitionBy(strata_col).orderBy(
-        F.pmod(F.xxhash64(F.col(key_col)), F.lit(denom)), F.col(key_col))
-    n = F.count("*").over(Window.partitionBy(strata_col))
-    rank = F.row_number().over(w)
-    split = (F.when(rank * 100 <= n * p_train, "train")
-             .when(rank * 100 <= n * (p_train + p_val), "val")
-             .otherwise("test"))
-    return df.select(key_col, strata_col,
-                     split.alias("split"))
-
-
-def _apply_merge(a: str, b: str, col: Column | None = None) -> Column:
-    """One BPE merge applied to a `syms` array column: greedy
-    left-to-right fold replacing each adjacent (a, b) with a+b. Correct
-    without an overlap flag because a merged symbol's text can never
-    equal its own left half (b is non-empty). ``col`` lets a batched
-    pass chain several merges in ONE projection (fold of folds)."""
-    merged = a + b
-    return F.aggregate(
-        F.col("syms") if col is None else col,
-        F.array().cast("array<string>"),
-        lambda acc, sym: F.when(
-            (F.size(acc) > 0) & (F.element_at(acc, -1) == F.lit(a))
-            & (sym == F.lit(b)),
-            F.concat(F.slice(acc, F.lit(1), F.size(acc) - 1),
-                     F.array(F.lit(merged))))
-        .otherwise(F.concat(acc, F.array(sym))))
-
-
-def select_compatible_merges(cands: list, m: int) -> list:
-    """Deterministic driver-side selection for one batched-BPE pass:
-    walk candidates in (cnt desc, a, b) order, accept a pair iff it
-    shares NO symbol with any already-accepted pair (so the accepted
-    merges commute — none consumes or produces the other's operands
-    within this pass), stop at ``m``. Pure function of the candidate
-    list — the Python oracle mirror replicates it verbatim."""
-    accepted, used = [], set()
-    for a, b, cnt in cands:
-        if a in used or b in used:
-            continue
-        accepted.append((a, b, cnt))
-        used.update((a, b, a + b))
-        if len(accepted) >= m:
-            break
-    return accepted
-
-
-def bpe_train(documents: DataFrame, n_merges: int = 10,
-              text_col: str = "text",
-              pairs_per_pass: int = 1) -> DataFrame:
-    """Distributed BPE vocabulary training (the tokenizer-prep step): from
-    character symbols, repeatedly merge the corpus-wide most frequent
-    adjacent symbol pair (ties → lexicographically smallest pair), the
-    Sennrich et al. algorithm. Returns the merge table
-    (rank, left, right, freq) — rank is the merge order, freq the pair's
-    weighted count at merge time.
-
-    Scale shape: the working set is the WORD-FREQUENCY table (vocabulary-
-    sized, not corpus-sized — one corpus scan builds it, every iteration
-    after that touches only distinct words). Per merge: one pair-explode
-    + sum aggregate (map-side partial) and one TakeOrderedAndProject
-    argmax — the only driver-side data is the single winning pair
-    (a few bytes, like host_pagerank's convergence probe). The merge
-    application is a map-only greedy left-to-right fold (correct without
-    an overlap flag: a merged symbol's text can never equal its own left
-    half). Each iteration localCheckpoints the (small) vocab frame —
-    without it the fold-in-fold lambda nesting grows the plan
-    exponentially.
-
-    Driver-loop bound: ``pairs_per_pass=1`` (default) is EXACT Sennrich —
-    one count job + one apply per merge, so a 32k-merge vocabulary is
-    32k serialized jobs; fine for small rule tables, not for production
-    training. ``pairs_per_pass=M>1`` is the documented batched variant
-    (the parallel-BPE approximation): each pass counts once, collects the
-    top 4M candidate pairs, accepts up to M mutually-compatible ones
-    (select_compatible_merges — no shared/produced symbol, so counts
-    taken from this pass's table are exact for every accepted pair), and
-    applies them in ONE chained-fold projection. Job count is
-    O(n_merges / M) — sublinear in merges — at the cost of deviating
-    from strict merge-at-a-time ordering exactly where classic BPE would
-    have re-counted between accepted pairs; the deviation is pinned by
-    the Python golden mirror (oracles._bpe_merges_py), which replicates
-    the batched selection verbatim."""
-    vocab = (documents
-             .select(F.explode(tokens(F.lower(F.col(text_col)))).alias("w"))
-             .where(F.length("w") > 0)
-             .groupBy("w").agg(F.count("*").alias("freq"))
-             .select("freq", F.split("w", "").alias("syms"))
-             .localCheckpoint(eager=True))
-
-    def pair_counts(v: DataFrame) -> DataFrame:
-        s = F.col("syms")
-        prs = F.when(
-            F.size(s) >= 2,
-            F.transform(F.sequence(F.lit(1), F.size(s) - 1),
-                        lambda i: F.struct(
-                            F.element_at(s, i).alias("a"),
-                            F.element_at(s, i + 1).alias("b")))
-        ).otherwise(F.array().cast(
-            "array<struct<a:string,b:string>>"))
-        return (v.select("freq", F.explode(prs).alias("p"))
-                .groupBy(F.col("p.a").alias("a"), F.col("p.b").alias("b"))
-                .agg(F.sum("freq").alias("cnt")))
-
-    merges = []
-    m = max(1, pairs_per_pass)
-    while len(merges) < n_merges:
-        want = min(m, n_merges - len(merges))
-        cand = (pair_counts(vocab)
-                .orderBy(F.desc("cnt"), "a", "b").limit(4 * m).collect())
-        if not cand:
-            break
-        accepted = select_compatible_merges(
-            [(r["a"], r["b"], r["cnt"]) for r in cand], want)
-        col = F.col("syms")
-        for a, b, cnt in accepted:
-            merges.append((len(merges) + 1, a, b, cnt))
-            col = _apply_merge(a, b, col)
-        vocab = (vocab.select("freq", col.alias("syms"))
-                 .localCheckpoint(eager=True))
-    spark = documents.sparkSession
-    return spark.createDataFrame(
-        merges, "rank int, left string, right string, freq long")
-
-
-def bm25_search(documents: DataFrame, query_terms: list[str], k: int = 20,
-                k1: float = 1.2, b: float = 0.75,
-                text_col: str = "text") -> DataFrame:
-    """BM25 ranked retrieval (Robertson/Lucene formulation) for a fixed
-    bag of query terms — the relevance-ranking counterpart to
-    tfidf_topterms, and the scoring layer a corpus-slicing pipeline uses
-    to pull topical subsets out of a crawl.
-
-    score(D) = sum_t idf(t) * tf * (k1+1) / (tf + k1*(1 - b + b*len/avg))
-    with idf(t) = ln(1 + (N - df + 0.5)/(df + 0.5)) (always positive).
-    Per-term scores are quantized to 1e-6 BEFORE the per-doc sum and the
-    sum re-quantized, so ln()'s ~1-ulp engine latitude cannot reorder the
-    final ranking (same contract as tfidf/lm_perplexity).
-
-    Scale shape: the token explode filters to the query terms inside the
-    scan stage, so only matching postings ever shuffle — tf is one
-    partial-agg shuffle on (doc_id, token), O(postings of the query
-    terms), not O(corpus tokens). Document length is a map-only column on
-    the same scan (no second pass); N/avgdl is a one-row aggregate
-    cross-joined broadcast; df is a tiny per-term aggregate over the
-    already-reduced tf table, also broadcast. Top-k is orderBy().limit()
-    = TakeOrderedAndProject (per-partition heap merge, no global sort).
-    Returns (doc_id, score, n_terms) — n_terms = distinct query terms hit.
-    """
-    tf = (documents
-          .select("doc_id",
-                  token_count(F.col(text_col)).alias("doclen"),
-                  F.explode(F.filter(
-                      tokens(F.lower(F.col(text_col))),
-                      lambda t: t.isin(*query_terms)))
-                  .alias("token"))
-          .groupBy("doc_id", "token", "doclen")
-          .agg(F.count("*").alias("tf")))
-    stats = documents.agg(
-        F.count("*").alias("n_docs"),
-        F.avg(token_count(F.col(text_col))).alias("avgdl"))
-    dfreq = tf.groupBy("token").agg(F.count("*").alias("df"))
-    idf = F.log(F.lit(1.0) + (F.col("n_docs") - F.col("df") + F.lit(0.5))
-                / (F.col("df") + F.lit(0.5)))
-    tfn = (F.col("tf") * (F.lit(k1) + 1.0)
-           / (F.col("tf") + F.lit(k1)
-              * (F.lit(1.0 - b)
-                 + F.lit(b) * F.col("doclen") / F.col("avgdl"))))
-    return (tf.join(F.broadcast(dfreq), "token")
-            .crossJoin(F.broadcast(stats))
-            # micro-unit INTEGER term scores (the lm_perplexity contract):
-            # an order-dependent double sum could flip the rounded score
-            # at a ulp boundary between engines/runs
-            .select("doc_id",
-                    F.round(F.round(idf * tfn, 6) * F.lit(1e6), 0)
-                    .cast("long").alias("ts_micro"))
-            .groupBy("doc_id")
-            .agg(F.round(F.sum("ts_micro").cast("double") / F.lit(1e6), 6)
-                 .alias("score"),
-                 F.count("*").alias("n_terms"))
-            .orderBy(F.desc("score"), F.asc("doc_id"))
-            .limit(k))
-
-
-def bpe_encode_lengths(documents: DataFrame, n_merges: int = 12,
-                       checkpoint_every: int = 4,
-                       text_col: str = "text") -> DataFrame:
-    """Tokenize every document with a BPE vocabulary trained in-flight by
-    bpe_train and return the per-document encoded length
-    (doc_id, n_words, n_tokens) — the sizing pass a training pipeline
-    runs before sequence packing.
-
-    Scale shape: the merge table (the tokenizer model) is O(n_merges)
-    rows collected to the driver — a model artifact, same footprint class
-    as pagerank's convergence probe. Encoding work is done once per
-    DISTINCT word (vocabulary-sized, not corpus-sized): the merge rules
-    replay over the distinct-word table as chained map-only folds
-    (localCheckpoint every `checkpoint_every` merges bounds codegen
-    depth), then word→token_len maps back onto the (doc_id, word) stream
-    with a hash join (vocab side broadcastable in practice; kept a
-    shuffle join for robustness at 10^9-word vocabularies) and a per-doc
-    partial-agg sum."""
-    merges = [(r["left"], r["right"])
-              for r in bpe_train(documents, n_merges, text_col)
-              .orderBy("rank").collect()]
-    words = (documents
-             .select("doc_id",
-                     F.explode(tokens(F.lower(F.col(text_col))))
-                     .alias("w"))
-             .where(F.length("w") > 0))
-    vocab = (words.select("w").distinct()
-             .select("w", F.split("w", "").alias("syms")))
-    for i, (a, b) in enumerate(merges):
-        vocab = vocab.select("w", _apply_merge(a, b).alias("syms"))
-        if (i + 1) % checkpoint_every == 0 and i + 1 < len(merges):
-            vocab = vocab.localCheckpoint(eager=True)
-    enc = vocab.select("w", F.size("syms").alias("wlen"))
-    return (words.join(enc, "w")
-            .groupBy("doc_id")
-            .agg(F.count("*").alias("n_words"),
-                 F.sum("wlen").alias("n_tokens")))
-
-
-def inverted_index(documents: DataFrame, text_col: str = "text") -> DataFrame:
-    """Token → postings list (token, df, tf_total, postings) with
-    postings serialized "doc:tf,doc:tf,…" in doc_id order — the search-
-    index build step over a curated corpus.
-
-    Scale shape: tf is one partial-agg shuffle on (doc_id, token) —
-    document text never shuffles; the postings build re-shuffles the
-    already-reduced tf table on the token. collect_list order is
-    partition-nondeterministic, so the list is pinned by array_sort on
-    the (doc_id, tf) struct BEFORE serialization — deterministic output
-    under any partitioning. A 10^10-doc stopword posting would overflow
-    one aggregation buffer; real deployments shard hot tokens by
-    (token, doc_id range) — here df-bounded corpora are the target
-    (see ngram_jaccard's max_df treatment of the same skew)."""
-    tf = (_token_rows(documents, text_col)
-          .groupBy("token", "doc_id").agg(F.count("*").alias("tf")))
-    return (tf.groupBy("token")
-            .agg(F.count("*").alias("df"),
-                 F.sum("tf").alias("tf_total"),
-                 F.array_join(
-                     F.transform(
-                         F.array_sort(
-                             F.collect_list(F.struct("doc_id", "tf"))),
-                         lambda s: F.concat_ws(
-                             ":", s["doc_id"].cast("string"),
-                             s["tf"].cast("string"))),
-                     ",").alias("postings")))
-
-
-def hashed_quality_classifier(documents: DataFrame,
-                              n_buckets: int = 256,
-                              text_col: str = "text") -> DataFrame:
-    """fastText-style hashed-feature linear classifier scoring pass —
-    the shape of every learned quality/toxicity filter in a training
-    pipeline (CCNet, Gopher, FineWeb): score = Σ w[h(token) mod B] over
-    token occurrences, squashed through a sigmoid, thresholded to a
-    keep/drop label.
-
-    The model here is synthesized IN-ENGINE — integer weights
-    w[b] = pmod(xxhash64(b), 2001) - 1000 over B buckets — standing in
-    for trained parameters; swapping in a real model is a parquet read
-    of the same (bucket, w) shape. Model-as-table is the point: the
-    weights broadcast to every executor and scoring is one hash join +
-    one partial-agg sum, no Python in the loop, identical plan whether
-    B is 2^8 or 2^24.
-
-    Numeric contract: the per-doc score accumulates as an exact BIGINT
-    (integer weights), so no float-summation order exists; the logit
-    divides once by (250.0 * n_toks); the sigmoid's exp() 1-ulp
-    latitude is absorbed by round(.., 6); and the keep label compares
-    the INTEGER score against 0, so the decision is bit-exact.
-
-    Returns (doc_id, n_toks, score_int, prob, keep)."""
-    spark = documents.sparkSession
-    weights = spark.range(n_buckets).select(
-        F.col("id").alias("bucket"),
-        (F.pmod(F.xxhash64("id"), F.lit(2001)) - 1000).alias("w"))
-    tok = (documents
-           .select("doc_id",
-                   F.explode(tokens(F.lower(F.col(text_col))))
-                   .alias("token"))
-           .where(F.col("token") != "")
-           .select("doc_id",
-                   F.pmod(F.xxhash64("token"), F.lit(n_buckets))
-                   .alias("bucket")))
-    scored = (tok.join(F.broadcast(weights), "bucket")
-              .groupBy("doc_id")
-              .agg(F.count(F.lit(1)).alias("n_toks"),
-                   F.sum("w").alias("score_int")))
-    logit = (F.col("score_int").cast("double")
-             / (F.lit(250.0) * F.col("n_toks").cast("double")))
-    return scored.select(
-        "doc_id", "n_toks", "score_int",
-        F.round(F.lit(1.0) / (F.lit(1.0) + F.exp(-logit)), 6).alias("prob"),
-        F.when(F.col("score_int") >= 0, 1).otherwise(0).alias("keep"))
-
-
-def pmi_collocations(documents: DataFrame, min_count: int = 5,
-                     text_col: str = "text") -> DataFrame:
-    """Collocation extraction by pointwise mutual information:
-    PMI(a, b) = ln( c(ab)·N / (c(a·)·c(·b)) ) over the corpus bigram
-    table — the classic phrase-detection signal (word2vec's phrase
-    pass, KenLM pruning) a curation run uses to pick multi-word units
-    worth protecting from tokenizer splits.
-
-    All inputs to the single ln() are exact integer counts (bigram
-    count, left/right marginals, total N), multiplied/divided as
-    doubles in a fixed order, so the 1-ulp ln latitude absorbed by
-    round(·, 6) is the only cross-engine freedom. Marginals aggregate
-    the ALREADY-REDUCED bigram table (vocabulary-sized shuffles); N is
-    a 1-row broadcast."""
-    toks = tokens(F.lower(F.col(text_col)))
-    staged = documents.select(toks.alias("_t"))
-    t = F.col("_t")
-    pairs = staged.select(F.explode(
-        F.when(F.size(t) >= 2,
-               F.transform(F.sequence(F.lit(1), F.size(t) - 1),
-                           lambda i: F.struct(
-                               F.element_at(t, i).alias("w1"),
-                               F.element_at(t, i + 1).alias("w2"))))
-        .otherwise(F.array().cast(
-            "array<struct<w1:string,w2:string>>"))).alias("bg"))
-    big = (pairs.groupBy(F.col("bg.w1").alias("w1"),
-                         F.col("bg.w2").alias("w2"))
-           .agg(F.count("*").alias("c_big")))
-    left = big.groupBy("w1").agg(F.sum("c_big").alias("c_w1"))
-    right = big.groupBy("w2").agg(F.sum("c_big").alias("c_w2"))
-    tot = big.agg(F.sum("c_big").alias("_N"))
-    pmi = F.round(F.log(
-        (F.col("c_big").cast("double") * F.col("_N").cast("double"))
-        / (F.col("c_w1").cast("double") * F.col("c_w2").cast("double"))), 6)
-    return (big.where(F.col("c_big") >= min_count)
-            .join(left, "w1").join(right, "w2")
-            .crossJoin(F.broadcast(tot))
-            .select("w1", "w2", "c_big", "c_w1", "c_w2",
-                    pmi.alias("pmi")))
-
-
-def chunk_texts(documents: DataFrame, ctx_len: int = 256,
-                n_shards: int = 8, text_col: str = "text") -> DataFrame:
-    """Materialize the ACTUAL training chunks the packed_chunk_manifest
-    gather list describes: join the manifest back onto the tokenized
-    corpus, slice each document's token span, and assemble every
-    (shard, chunk) in gather order — proof the manifest is a faithful
-    dataloader program, and the text-producing final stage of the
-    packing pipeline.
-
-    Shuffle shape: one doc_id hash join (manifest rows ≈ docs), then
-    one partial-agg shuffle on (shard, chunk_id); the assembled order
-    is pinned by array_sort over (chunk_off, piece) structs — chunk_off
-    is unique within a chunk, so the output is deterministic under any
-    partitioning (the inverted_index trick). Token arrays never cross
-    the first join; only the sliced pieces shuffle."""
-    man = packed_chunk_manifest(documents, ctx_len, n_shards, text_col)
-    tk = documents.select("doc_id", tokens(F.col(text_col)).alias("_t"))
-    ln = (F.col("tok_to") - F.col("tok_from")).cast("int")
-    pieces = (man.join(tk, "doc_id")
-              .select("shard", "chunk_id", "chunk_off",
-                      ln.cast("long").alias("n_toks"),
-                      F.concat_ws(" ", F.slice(
-                          F.col("_t"),
-                          (F.col("tok_from") + 1).cast("int"), ln))
-                      .alias("piece")))
-    return (pieces.groupBy("shard", "chunk_id")
-            .agg(F.count("*").alias("n_docs"),
-                 F.sum("n_toks").alias("n_tokens"),
-                 F.concat_ws(" ", F.transform(
-                     F.array_sort(F.collect_list(
-                         F.struct("chunk_off", "piece"))),
-                     lambda s: s["piece"])).alias("text")))
-
-
-def packing_efficiency(documents: DataFrame, ctx_len: int = 256,
-                       bucket_tokens: int = 64,
-                       text_col: str = "text") -> DataFrame:
-    """Padding-waste audit for the pad-to-context batching alternative to
-    sequence_packing: bucket documents by token length and report, per
-    bucket, how many tokens a pad-to-ctx_len loader would burn. The
-    decision table for choosing packing vs padding before a training
-    run. Map-only token counts + one partial-agg shuffle; all sums are
-    integers, the single waste quotient is one correctly-rounded IEEE op
-    on identical inputs — engine-exact. Returns (bucket, n_docs,
-    total_tokens, padded_tokens, waste_frac)."""
-    n_tok = token_count(F.col(text_col)).cast("long")
-    ctx = F.lit(ctx_len).cast("long")
-    padded = (F.floor((F.col("n_tokens") + ctx - 1) / ctx) * ctx)
-    return (documents
-            .select((n_tok / bucket_tokens).cast("long").alias("bucket"),
-                    n_tok.alias("n_tokens"))
-            .select("bucket", "n_tokens", padded.alias("padded"))
-            .groupBy("bucket")
-            .agg(F.count(F.lit(1)).alias("n_docs"),
-                 F.sum("n_tokens").alias("total_tokens"),
-                 F.sum("padded").alias("padded_tokens"),
-                 F.round(F.lit(1.0)
-                         - F.sum("n_tokens").cast("double")
-                         / F.sum("padded").cast("double"), 6)
-                 .alias("waste_frac")))
-
-
-def ffd_pack_py(items: list[tuple[int, int]],
-                ctx_len: int) -> list[tuple[int, int, int, int]]:
-    """First-fit-decreasing bin packing of (doc_id, n_tokens) items into
-    ctx_len-capacity bins: items sorted by (n_tokens desc, doc_id),
-    each placed in the LOWEST-id open bin with room, else a new bin.
-    Oversize items truncate to ctx_len (fit-or-truncate). Returns
-    (doc_id, packed_tokens, bin_id, offset_in_bin) rows. Pure function —
-    the engine's per-shard kernel AND the oracle mirror both call it, so
-    the distributed result is pinned to this exact sequential order."""
-    out = []
-    fill: list[int] = []   # bin_id -> used tokens
-    for doc_id, n in sorted(items, key=lambda x: (-x[1], x[0])):
-        n = min(n, ctx_len)
-        for b, used in enumerate(fill):
-            if used + n <= ctx_len:
-                out.append((doc_id, n, b, used))
-                fill[b] = used + n
-                break
-        else:
-            out.append((doc_id, n, len(fill), 0))
-            fill.append(n)
-    return out
-
-
-def sequence_packing_ffd(documents: DataFrame, ctx_len: int = 256,
-                         n_shards: int = 8,
-                         text_col: str = "text") -> DataFrame:
-    """Bin-packed sequence packing — the NO-SPLIT alternative to
-    sequence_packing's concat-and-chunk: documents keep their boundaries
-    (each lands whole in exactly one ctx_len bin; attention never spans
-    a document break), packed first-fit-decreasing to minimize padding
-    waste (FFD guarantees ≤ 11/9·OPT + 6/9 bins, Dósa 2007 — the
-    fill-or-pad tradeoff packing_efficiency's audit table prices).
-    Returns (doc_id, shard, n_tokens, packed_tokens, bin_id,
-    offset_in_bin); packed_tokens < n_tokens ⇔ the document was
-    truncated to fit (n_tokens > ctx_len).
-
-    Scale shape: packing is inherently sequential WITHIN a bin stream,
-    so the corpus splits into independent shards (doc_id % n_shards,
-    sequence_packing's rule) and each shard packs in one
-    applyInPandas group — parallel across shards, Arrow-batched, the
-    per-shard item list is corpus/n_shards rows of two ints (a 10^10
-    corpus at n_shards=10^5 puts ~10^5 id+count pairs per task, far
-    under Arrow group limits; the token texts never enter the plan).
-    The kernel is the same pure function the oracle mirror runs, so
-    engine output is bit-pinned to the sequential FFD order."""
-    import pandas as pd
-
-    n_tok = token_count(F.col(text_col)).cast("long")
-    staged = documents.select(
-        "doc_id", (F.col("doc_id") % n_shards).alias("shard"),
-        n_tok.alias("n_tokens"))
-
-    def pack(pdf: pd.DataFrame) -> pd.DataFrame:
-        rows = ffd_pack_py(
-            list(zip((int(x) for x in pdf["doc_id"]),
-                     (int(x) for x in pdf["n_tokens"]))), ctx_len)
-        by_id = {d: (p, b, o) for d, p, b, o in rows}
-        packed = [by_id[int(d)] for d in pdf["doc_id"]]
-        out = pdf[["doc_id", "shard", "n_tokens"]].copy()
-        out["packed_tokens"] = [p for p, _, _ in packed]
-        out["bin_id"] = [b for _, b, _ in packed]
-        out["offset_in_bin"] = [o for _, _, o in packed]
-        return out
-
-    schema = ("doc_id long, shard long, n_tokens long, "
-              "packed_tokens long, bin_id long, offset_in_bin long")
-    return staged.groupBy("shard").applyInPandas(pack, schema)
-
-
 def training_mix_stages(documents: DataFrame, quality_bar: float = 0.5,
                         holdout_mod: int = 5, decontam_w: int = 8,
                         quota_cap: int = 10) -> dict[str, DataFrame]:
     """The text training-mix cost ladder as named stages (the text twin
     of multimodal._mix_stages): lang/quality gate → exact dedup →
     eval-split holdout → w-gram decontamination → per-source quota.
-    Shared by the training_mix flagship (which packs the final stage)
-    and training_mix_report (which counts every rung)."""
+    training_mix_report counts every rung."""
     from .dedup import decontaminate_flags, exact_dedup
 
     t = F.col("text")
@@ -1180,8 +161,7 @@ def training_mix_stages(documents: DataFrame, quality_bar: float = 0.5,
 def training_mix_report(documents: DataFrame, quality_bar: float = 0.5,
                         holdout_mod: int = 5, decontam_w: int = 8,
                         quota_cap: int = 10) -> DataFrame:
-    """Dataset-card accounting for the TEXT training mix — the text twin
-    of multimodal.image_mix_report, the auditable "where did my corpus
+    """Dataset-card accounting for the TEXT training mix — the auditable "where did my corpus
     go" table a 100 TB curation run publishes next to its packed
     manifest. One row per pipeline rung (kind='stage': raw → gated →
     deduped → train → clean → quota) plus the gate's rejection
@@ -1214,93 +194,6 @@ def training_mix_report(documents: DataFrame, quality_bar: float = 0.5,
                .groupBy("key").agg(F.count(F.lit(1)).alias("rows"))
                .select(F.lit("reject").alias("kind"), "key", "rows"))
     return out.unionByName(rejects)
-
-
-def epoch_shuffle(documents: DataFrame, epoch: int,
-                  n_shards: int = 8) -> DataFrame:
-    """Deterministic per-epoch global training shuffle: order key =
-    xxhash64(doc_id, epoch) — a seeded permutation that CHANGES every
-    epoch but is identical across re-runs and resumes (the dataloader-
-    order analog of the crawl's (round, url)-derived determinism; no
-    RNG, no driver state, so a killed epoch resumes mid-order exactly).
-    Returns (doc_id, epoch, shard, position): shard = pmod(key,
-    n_shards) spreads the permutation across writers, position is the
-    document's rank within its shard's read order.
-
-    Scale shape: one hash exchange on shard + a per-shard sort — exactly
-    the shape of a shuffled-shard write; the sort is per-shard (never
-    global), and shard count scales with the cluster."""
-    from pyspark.sql import Window
-
-    key = F.xxhash64(F.col("doc_id"), F.lit(epoch).cast("long"))
-    w = Window.partitionBy("shard").orderBy("_k", "doc_id")
-    return (documents
-            .select("doc_id", key.alias("_k"))
-            .withColumn("shard",
-                        F.pmod(F.col("_k"), F.lit(n_shards)).cast("int"))
-            .withColumn("epoch", F.lit(epoch).cast("int"))
-            .withColumn("position",
-                        F.row_number().over(w).cast("long"))
-            .select("doc_id", "epoch", "shard", "position"))
-
-
-LANGS = ("de", "en", "es", "fr", "zh")
-
-
-def language_source_matrix(documents: DataFrame,
-                           langs: tuple[str, ...] = LANGS) -> DataFrame:
-    """Per-source language-distribution crosstab — the corpus-composition
-    sheet a data-mixing decision reads. pivot() is given the EXPLICIT
-    language vocabulary: without it Spark first runs a blocking distinct
-    job over the full corpus and collects the values to the driver — the
-    anti-pattern at 10^10 rows. One partial-agg shuffle; absent cells
-    coalesce to 0. Returns (source, <one long column per lang>, total)."""
-    z = F.lit(0).cast("long")
-    piv = (documents.groupBy("source")
-           .pivot("lang", list(langs))
-           .agg(F.count(F.lit(1))))
-    total = sum((F.coalesce(F.col(lg), z) for lg in langs),
-                F.lit(0).cast("long"))
-    return piv.select("source",
-                      *[F.coalesce(F.col(lg), z).alias(lg) for lg in langs],
-                      total.alias("total"))
-
-
-def oov_rate(documents: DataFrame, vocab_size: int = 50,
-             text_col: str = "text") -> DataFrame:
-    """Tokenizer-coverage report: per-source out-of-vocabulary rate
-    against the corpus top-``vocab_size`` vocabulary — the coverage
-    audit run before freezing a tokenizer (high OOV in one source means
-    the vocab under-serves it).
-
-    Returns (source, n_tokens, n_oov, oov_rate). Shuffle shape: tokens
-    explode map-side → ONE partial-agg exchange on (source, token); the
-    vocabulary re-aggregates that already-reduced table (token-keyed
-    exchange over distinct tokens only) and comes back as a broadcast
-    top-k (TakeOrderedAndProject — no global sort); the per-source
-    rollup reduces the counts table again. Document text never crosses
-    an exchange. oov_rate is one long/long→double division — the same
-    IEEE op on any engine."""
-    toks = (documents.select(
-        "source",
-        F.explode(tokens(F.lower(F.col(text_col)))).alias("token"))
-        .where(F.col("token") != ""))
-    counts = (toks.groupBy("source", "token")
-              .agg(F.count(F.lit(1)).alias("cnt")))
-    vocab = (counts.groupBy("token").agg(F.sum("cnt").alias("tf"))
-             .orderBy(F.desc("tf"), F.asc("token")).limit(vocab_size)
-             .select("token", F.lit(1).alias("_in")))
-    per_source = (counts.join(F.broadcast(vocab), "token", "left")
-                  .groupBy("source")
-                  .agg(F.sum("cnt").alias("n_tokens"),
-                       F.sum(F.when(F.col("_in").isNull(), F.col("cnt"))
-                             .otherwise(F.lit(0))).alias("n_oov")))
-    return per_source.select(
-        "source",
-        F.col("n_tokens").cast("long").alias("n_tokens"),
-        F.col("n_oov").cast("long").alias("n_oov"),
-        (F.col("n_oov").cast("double") / F.col("n_tokens").cast("double"))
-        .alias("oov_rate"))
 
 
 def tokenizer_fertility(documents: DataFrame,
@@ -1359,276 +252,3 @@ def source_quality_bounds(documents: DataFrame, tau: float = 0.5,
         F.round((center - margin) / denom, 6).alias("wilson_lb"))
 
 
-def host_boilerplate_scrub(documents: DataFrame, min_docs: int = 5,
-                           frac: float = 0.5, host_col: str = "source",
-                           text_col: str = "text") -> DataFrame:
-    """Host-scoped template-boilerplate removal: a line that appears on
-    at least ``frac`` of ONE host's pages (hosts with >= ``min_docs``
-    pages) is that host's nav/footer chrome and is stripped — from that
-    host only. Complements `line_dedup`, which removes lines by ABSOLUTE
-    corpus-wide document frequency: a host's "home | about | contact"
-    bar is boilerplate at 100% of its own 40 pages yet may fall under a
-    corpus-wide max_df, while a popular quotation crossing many hosts is
-    exactly what the host grain must NOT strip. (This is the host-grain
-    half of the CCNet/trafilatura recipe; the reference stores raw HTML
-    with no content cleaning — service/WebPageFetcher.java.)
-
-    Returns (doc_id, host, clean_text, n_lines, n_kept); documents whose
-    every line is chrome still yield a row with clean_text = ''.
-
-    Scale shape: explode lines map-side → distinct (host, doc_id, line)
-    → (host, line) document-frequency agg (partial combine; one exchange
-    on the host+line key) → per-host page counts (host-keyed agg over
-    the already-reduced doc grain) → threshold join back on (host, line)
-    — same key, exchange reused, and the chrome set is small so AQE
-    broadcasts it → per-document reassembly (one doc-keyed exchange).
-    Page text crosses the wire once, at the line grain."""
-    d = documents.select(F.col(host_col).alias("host"), "doc_id",
-                         F.col(text_col).alias("_t"))
-    lines = (d.select("host", "doc_id",
-                      F.posexplode(F.split("_t", "\n")).alias("pos", "raw"))
-             .select("host", "doc_id", "pos", F.trim("raw").alias("line"))
-             .where(F.length("line") > 0))
-    per_host = (d.groupBy("host")
-                .agg(F.count(F.lit(1)).alias("n_docs")))
-    df_ = (lines.select("host", "doc_id", "line").distinct()
-           .groupBy("host", "line").agg(F.count(F.lit(1)).alias("df")))
-    chrome = (df_.join(per_host, "host")
-              .where((F.col("n_docs") >= min_docs) &
-                     (F.col("df") >= F.greatest(
-                         F.ceil(F.lit(frac) * F.col("n_docs")), F.lit(2))))
-              .select("host", "line"))
-    kept = lines.join(chrome, ["host", "line"], "left_anti")
-    rebuilt = (kept.groupBy("host", "doc_id")
-               .agg(F.array_join(
-                        F.transform(
-                            F.array_sort(F.collect_list(
-                                F.struct("pos", "line"))),
-                            lambda s: s["line"]),
-                        "\n").alias("clean_text"),
-                    F.count(F.lit(1)).alias("n_kept")))
-    totals = lines.groupBy("host", "doc_id").agg(
-        F.count(F.lit(1)).alias("n_lines"))
-    return (totals.join(rebuilt, ["host", "doc_id"], "left")
-            .select("doc_id", "host",
-                    F.coalesce("clean_text", F.lit("")).alias("clean_text"),
-                    F.col("n_lines").cast("long").alias("n_lines"),
-                    F.coalesce("n_kept", F.lit(0)).cast("long")
-                    .alias("n_kept")))
-
-
-def span_corruption(documents: DataFrame, span_len: int = 3,
-                    block: int = 16, text_col: str = "text") -> DataFrame:
-    """T5/UL2-style span-corruption example construction (Raffel et al.
-    2020 §3.1.4): turn each document into a denoising training pair —
-    `input_text` with masked spans replaced by sentinel tokens
-    (`<extra_id_k>`), `target_text` listing each sentinel followed by
-    the tokens it hid.
-
-    Deterministic masking rule (reproducible across runs/partitions, no
-    RNG): the token stream splits into fixed blocks of ``block`` tokens;
-    every FULL block b masks one span of ``span_len`` tokens starting at
-    offset pmod(xxhash64(doc_id, b), block - span_len + 1) — one span
-    per full block ≈ the T5 corruption rate span_len/block (18.75% at
-    3/16), with sentinel k = the block index (spans are one-per-block,
-    so numbering is sequential as in T5). The tail partial block is
-    never masked. Documents shorter than one block pass through with an
-    empty target.
-
-    Returns (doc_id, input_text, target_text, n_tokens, n_masked).
-
-    Scale shape: mask starts are computed INLINE on the exploded token
-    row (xxhash64 + pmod — no join against a per-block table), so the
-    whole construction is one map-side projection plus ONE doc-keyed
-    aggregation building both sequences via null-skipping collect_list;
-    order is pinned by array_sort on (tpos, piece)."""
-    toks = F.split(F.trim(F.col(text_col)), WS_PLUS)
-    base = documents.select("doc_id", toks.alias("_t"))
-    rows = (base.select("doc_id", F.size("_t").alias("_n"),
-                        F.posexplode("_t").alias("_p", "tok"))
-            .select("doc_id", "_n",
-                    (F.col("_p") + 1).alias("tpos"), "tok"))
-    blk = F.floor((F.col("tpos") - 1) / block).cast("long")
-    nfull = F.floor(F.col("_n") / block).cast("long")
-    width = block - span_len + 1
-    s = (F.pmod(F.xxhash64(F.col("doc_id"), blk), F.lit(width))
-         + blk * block + 1)
-    masked = (blk < nfull) & (F.col("tpos") >= s) & \
-        (F.col("tpos") < s + span_len)
-    is_first = masked & (F.col("tpos") == s)
-    sentinel = F.concat(F.lit("<extra_id_"), blk.cast("string"),
-                        F.lit(">"))
-    inp_piece = (F.when(is_first, sentinel)
-                 .when(masked, F.lit(None).cast("string"))
-                 .otherwise(F.col("tok")))
-    tgt_piece = (F.when(is_first,
-                        F.concat(sentinel, F.lit(" "), F.col("tok")))
-                 .when(masked, F.col("tok")))
-    tagged = rows.select(
-        "doc_id", "_n",
-        F.when(inp_piece.isNotNull(),
-               F.struct(F.col("tpos"), inp_piece.alias("piece")))
-        .alias("_i"),
-        F.when(tgt_piece.isNotNull(),
-               F.struct(F.col("tpos"), tgt_piece.alias("piece")))
-        .alias("_g"),
-        masked.cast("long").alias("_m"))
-    joined = lambda c: F.array_join(
-        F.transform(F.array_sort(F.collect_list(c)),
-                    lambda x: x["piece"]), " ")
-    return (tagged.groupBy("doc_id")
-            .agg(joined("_i").alias("input_text"),
-                 joined("_g").alias("target_text"),
-                 F.max("_n").cast("long").alias("n_tokens"),
-                 F.sum("_m").cast("long").alias("n_masked")))
-
-
-def fim_transform(documents: DataFrame, rate_denom: int = 2,
-                  text_col: str = "text") -> DataFrame:
-    """Fill-in-the-middle transformation (Bavarian et al. 2022,
-    arXiv:2207.14255): reorder a document into PSM form —
-    `<fim_prefix> prefix <fim_suffix> suffix <fim_middle> middle` — so
-    an autoregressive model learns infilling. Applied to a
-    deterministic xxhash64-selected subset (1/rate_denom of docs, the
-    paper's 50% default at 2); the rest pass through unchanged (the
-    paper's joint FIM+AR training mix).
-
-    Cut points are hash-derived, not random: for a doc of n tokens the
-    two cuts are c1 = pmod(xxhash64(doc_id, 1), n+1) and
-    c2 = pmod(xxhash64(doc_id, 2), n+1), ordered — prefix = toks[:lo],
-    middle = toks[lo:hi], suffix = toks[hi:]; any part may be empty,
-    as in the paper's uniform splitting.
-
-    Returns (doc_id, fim_applied, text): a pure map-side projection —
-    slice/array_join over the token array, zero explode, zero
-    aggregation, zero shuffle. The cheapest possible plan shape: at
-    100 TB this is scan bandwidth."""
-    toks = F.split(F.trim(F.col(text_col)), WS_PLUS)
-    n = F.size(toks)
-    applied = F.pmod(F.xxhash64(F.col("doc_id")),
-                     F.lit(rate_denom)) == 0
-    c1 = F.pmod(F.xxhash64(F.col("doc_id"), F.lit(1).cast("long")),
-                (n + 1).cast("long"))
-    c2 = F.pmod(F.xxhash64(F.col("doc_id"), F.lit(2).cast("long")),
-                (n + 1).cast("long"))
-    lo, hi = F.least(c1, c2), F.greatest(c1, c2)
-    part = lambda s, ln: F.array_join(
-        F.slice(toks, s + 1, ln), " ")  # slice is 1-based; len 0 -> ''
-    psm = F.concat(
-        F.lit("<fim_prefix> "), part(F.lit(0), lo),
-        F.lit(" <fim_suffix> "), part(hi, n - hi),
-        F.lit(" <fim_middle> "), part(lo, hi - lo))
-    return documents.select(
-        "doc_id", applied.alias("fim_applied"),
-        F.when(applied, psm).otherwise(F.col(text_col)).alias("text"))
-
-
-def epoch_expansion(documents: DataFrame, alpha: float = 0.3,
-                    group_col: str = "source",
-                    denom: int = 1_000_000) -> DataFrame:
-    """Materialize the temperature-mix TRAINING STREAM that
-    `mixture_weights` only tabulates: every document appears
-    floor(repeat_factor) times, plus one more with probability
-    frac(repeat_factor) — decided deterministically per document by
-    comparing a hash uniform u = pmod(xxhash64(doc_id, 7), denom)
-    against the micro-quantized fraction (no RNG: the same corpus
-    always expands to the same stream, under any partitioning). Each
-    copy carries order_key = xxhash64(doc_id, copy_idx) — the
-    deterministic global shuffle a dataloader range-partitions by.
-
-    Returns (doc_id, source, copy_idx, order_key).
-
-    Scale shape: the group-level mix table (one row per source)
-    broadcasts onto the doc stream; copy counts are a map-side
-    expression; the explode emits exactly the stream (Σ n_copies rows —
-    no corpus-sized intermediate beyond the output itself); no shuffle
-    at all until the consumer repartitions by order_key. repeat_factor
-    is already 1e-6-rounded by mixture_weights, so the micro-integer
-    comparison is engine-exact."""
-    mw = mixture_weights(documents, alpha=alpha, group_col=group_col)
-    rfm = F.round(F.col("repeat_factor") * denom, 0).cast("long")
-    j = (documents.select("doc_id", group_col)
-         .join(F.broadcast(mw.select(group_col, rfm.alias("_rfm"))),
-               group_col))
-    base = F.floor(F.col("_rfm") / F.lit(denom)).cast("long")
-    fracm = F.col("_rfm") - base * denom
-    u = F.pmod(F.xxhash64(F.col("doc_id"), F.lit(7).cast("long")),
-               F.lit(denom))
-    n_copies = base + (u < fracm).cast("long")
-    return (j.select("doc_id", group_col, n_copies.alias("_nc"))
-            .where(F.col("_nc") > 0)
-            .select("doc_id", group_col,
-                    F.explode(F.sequence(F.lit(1).cast("long"),
-                                         F.col("_nc"))).alias("copy_idx"))
-            .select("doc_id", group_col, "copy_idx",
-                    F.xxhash64(F.col("doc_id"), F.col("copy_idx"))
-                    .alias("order_key")))
-
-
-def main_content_block(documents: DataFrame, min_words: int = 5,
-                       text_col: str = "text") -> DataFrame:
-    """Main-content selection over rendered page lines — the
-    boilerpipe/trafilatura density heuristic in relational form: short
-    sparse lines (nav crumbs, button labels, bylines) are noise; the
-    page's substance is the longest dense RUN of lines. A line
-    qualifies when it has >= ``min_words`` whitespace words; qualifying
-    lines group into contiguous runs (islands), and the run with the
-    most total words wins (ties: the earliest run).
-
-    Returns (doc_id, main_text, n_lines, block_lines, block_words);
-    documents with no qualifying line yield main_text = ''.
-
-    Complements the other two extraction tiers: `host_boilerplate_scrub`
-    removes lines REPEATED across a host, `duplicate_span_scrub` removes
-    spans repeated across the corpus — this removes lines that are
-    sparse in isolation, catching one-off chrome no frequency rule sees.
-
-    Scale shape: line explode map-side; the island grouping is one
-    doc-keyed window pass; the winner pick is a doc-keyed min_by
-    aggregate over the (few) runs, then one join back to collect the
-    winning run's lines. Two doc-keyed exchanges, text crosses once."""
-    from pyspark.sql import Window
-
-    d = documents.select("doc_id", F.col(text_col).alias("_t"))
-    lines = (d.select("doc_id",
-                      F.posexplode(F.split("_t", "\n")).alias("pos", "raw"))
-             .select("doc_id", "pos", F.trim("raw").alias("line"))
-             .withColumn("words", F.size(F.split(
-                 F.col("line"), WS_PLUS)) *
-                 (F.length("line") > 0).cast("int")))
-    qual = lines.where(F.col("words") >= min_words)
-    rn = F.row_number().over(Window.partitionBy("doc_id").orderBy("pos"))
-    runs = qual.withColumn("_grp", F.col("pos") - rn)
-    per_run = (runs.groupBy("doc_id", "_grp")
-               .agg(F.sum("words").alias("block_words"),
-                    F.count(F.lit(1)).alias("block_lines"),
-                    F.min("pos").alias("_start")))
-    # winner: max words, earliest start on ties — min_by over a struct
-    # whose first field is -block_words (hash agg, no window sort)
-    best = (per_run.groupBy("doc_id")
-            .agg(F.min_by(
-                F.struct("_grp", "block_words", "block_lines"),
-                F.struct((-F.col("block_words")).alias("nw"),
-                         F.col("_start"))).alias("_b"))
-            .select("doc_id", F.col("_b._grp").alias("_grp"),
-                    F.col("_b.block_words").alias("block_words"),
-                    F.col("_b.block_lines").alias("block_lines")))
-    win_lines = runs.join(best, ["doc_id", "_grp"])
-    rebuilt = (win_lines.groupBy("doc_id")
-               .agg(F.array_join(
-                        F.transform(
-                            F.array_sort(F.collect_list(
-                                F.struct("pos", "line"))),
-                            lambda s: s["line"]), "\n").alias("main_text"),
-                    F.max("block_words").alias("block_words"),
-                    F.max("block_lines").alias("block_lines")))
-    totals = (lines.where(F.length("line") > 0)
-              .groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_lines")))
-    return (totals.join(rebuilt, "doc_id", "left")
-            .select("doc_id",
-                    F.coalesce("main_text", F.lit("")).alias("main_text"),
-                    F.col("n_lines").cast("long").alias("n_lines"),
-                    F.coalesce("block_lines", F.lit(0)).cast("long")
-                    .alias("block_lines"),
-                    F.coalesce("block_words", F.lit(0)).cast("long")
-                    .alias("block_words")))

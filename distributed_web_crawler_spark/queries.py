@@ -1,21 +1,25 @@
-"""Driver-contract queries: every SURVEY.md §2 operator as a
-(spark callable, DuckDB oracle SQL) pair over the /root/testdata tables.
+"""Driver-contract queries: the crawl's own operators as (spark callable,
+DuckDB oracle SQL) pairs over the /root/testdata tables.
+
+Each query runs a package function the crawl itself runs (in some
+CrawlConfig mode, or in the training-manifest / WDS export) and returns
+that function's output; nothing else belongs on this board. The families:
+the gate chain, per-host politeness and Crawl-delay, retry deferral,
+robots (substring, RFC 9309 wildcards, UA-group parsing), registered
+domains, link-children extraction and URL resolution, sitemap / sitemap
+index / Atom feed discovery and their recrawl verdicts, the Kafka wire
+format, conditional-GET revalidation, the image rungs of the training
+manifest and its WDS member index, and the 3-round flagship crawl.
 
 Each callable takes (spark, sf_dir) and returns a DataFrame; the oracle is
-ANSI SQL DuckDB runs on the same parquet (views: region nation customer
-supplier part orders lineitem events documents embeddings). The driver
-compares row count + schema + order-insensitive value hash, so every
-computed column is aliased identically on both sides and float math mirrors
-the exact operation order (same IEEE op sequence ⇒ bit-identical doubles).
-
-Crawl-domain operators (gates, politeness, robots, dedup joins) run the
-*real* engine operators on a frontier deterministically derived from the
-`orders` table, so the oracle can re-state the input in pure SQL while the
-Spark side exercises the production code path.
-
-Ops with no SQL-expressible oracle (bloom probe, Arrow fetch/decode UDFs,
-minhash/simhash signatures seeded by xxhash64) are registered without an
-oracle → the driver records a rows-only check (SURVEY.md §5.2).
+ANSI SQL DuckDB runs on the same parquet (views used: orders part
+documents). The driver compares row count + schema + order-insensitive
+value hash, so every computed column is aliased identically on both sides.
+Inputs are derived deterministically from those tables (a frontier from
+`orders`, hosts from `part`, fixtures and images from `documents`), so the
+oracle can restate the input in pure SQL while the Spark side exercises
+the production code path. Hash-seeded and codec-dependent oracles are
+generated by the Python mirrors in oracles.py.
 """
 
 from __future__ import annotations
@@ -28,16 +32,13 @@ from pyspark.sql import functions as F
 
 from . import oracles as _oracles
 from .config import CrawlConfig, SynthWebConfig
-from .operators.asof import asof_join
 from .operators.extract import extract_children
 from .operators.gates import apply_gates
 from .operators.politeness import apply_politeness
-from .operators.redirects import resolve_redirects
 from .operators.robots import filter_robots
 from .pipeline import dedup as pdedup
-from .pipeline import multimodal, similarity
+from .pipeline import multimodal
 from .pipeline import recrawl as precrawl
-from .pipeline import text as ptext
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 # value: SQL string, or a zero-arg callable producing one (golden-model
@@ -252,23 +253,6 @@ def robots_filter_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# X1: parse_url host extraction (core/WebCrawler.java:199-200)
-# ---------------------------------------------------------------------------
-
-@q("url_host_extract", f"""
-  WITH frontier AS ({_FRONTIER_SQL})
-  SELECT regexp_extract(url, '^https?://([^/]+)', 1) AS parsed_host,
-         count(*) AS n
-  FROM frontier GROUP BY 1
-""")
-def url_host_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    frontier = _frontier_from_orders(spark, sf_dir)
-    return (frontier
-            .select(F.parse_url("url", F.lit("HOST")).alias("parsed_host"))
-            .groupBy("parsed_host").agg(F.count("*").alias("n")))
-
-
-# ---------------------------------------------------------------------------
 # X1b: registered-domain (eTLD+1) extraction + PLD-level politeness rollup.
 # The reference keys politeness on the raw hostname (crawl_state host rows,
 # core/WebCrawler.java:214-220); production crawlers group at eTLD+1 so a
@@ -348,1868 +332,24 @@ def registered_domain_q(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.count("*").alias("n")))
 
 
-@q("pld_politeness", f"""
-  SELECT registered_domain,
-         CAST(count(DISTINCT host) AS BIGINT) AS n_hosts,
-         CAST(sum(p_partkey % 17 + 1) AS BIGINT) AS n_urls,
-         CAST(sum(p_partkey % 17 + 1) AS BIGINT) > 400 AS over_budget
-  FROM ({_PLD_SQL}) GROUP BY registered_domain
-""")
-def pld_politeness_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """F5 at the registered-domain grain: per-eTLD+1 host/URL rollup with a
-    budget flag. ONE hash-agg shuffle on the PLD key (host count is
-    distinct-within-group; URL weights are map-side partial sums); the
-    eTLD+1 column itself costs no shuffle. Suffix-only hosts group under
-    null = 'no registrable domain', surfaced rather than dropped."""
-    from .functions.urls import registered_domain_of
-    pk = F.col("p_partkey")
-    return (_pld_hosts(spark, sf_dir)
-            .select("host", (pk % 17 + 1).alias("w"),
-                    registered_domain_of(F.col("host"))
-                    .alias("registered_domain"))
-            .groupBy("registered_domain")
-            .agg(F.countDistinct("host").cast("long").alias("n_hosts"),
-                 F.sum("w").cast("long").alias("n_urls"),
-                 (F.sum("w") > 400).alias("over_budget")))
-
-
 # ---------------------------------------------------------------------------
-# D1: content-hash dedup as left-anti join (core/WebCrawler.java:333-336)
+# synthetic image table (crawl/synthweb.py codec) keyed by doc_id
 # ---------------------------------------------------------------------------
-
-@q("dedup_anti_join", """
-  SELECT doc_id, source FROM documents
-  WHERE source IN ('src0','src1','src2','src3','src4')
-    AND md5(text) NOT IN (
-      SELECT md5(text) FROM documents
-      WHERE source NOT IN ('src0','src1','src2','src3','src4'))
-""")
-def dedup_anti_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _t(spark, sf_dir, "documents")
-    batch = docs.where(F.col("source").isin("src0", "src1", "src2",
-                                            "src3", "src4"))
-    seen = (docs.where(~F.col("source").isin("src0", "src1", "src2",
-                                             "src3", "src4"))
-            .select(F.md5("text").alias("content_hash")).distinct())
-    return (batch.withColumn("content_hash", F.md5("text"))
-            .join(seen, "content_hash", "left_anti")
-            .select("doc_id", "source"))
-
-
-# ---------------------------------------------------------------------------
-# D1 within-batch winner: exact corpus dedup (pipeline/dedup.exact_dedup)
-# ---------------------------------------------------------------------------
-
-@q("dedup_exact", """
-  SELECT doc_id, source FROM documents
-  QUALIFY row_number() OVER (PARTITION BY md5(text) ORDER BY doc_id) = 1
-""")
-def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return (pdedup.exact_dedup(_t(spark, sf_dir, "documents"))
-            .select("doc_id", "source"))
-
-
-# ---------------------------------------------------------------------------
-# D2/X4: sha-256 content hash (core/WebCrawler.java:442-456)
-# ---------------------------------------------------------------------------
-
-@q("content_sha2",
-   "SELECT doc_id, sha256(text) AS content_hash FROM documents")
-def content_sha2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _t(spark, sf_dir, "documents").select(
-        "doc_id", F.sha2("text", 256).alias("content_hash"))
-
-
-# ---------------------------------------------------------------------------
-# E1/D3/F8: explode + distinct + validity filter (link extraction shape,
-# core/WebCrawler.java:339-397) — tokens stand in for hrefs
-# ---------------------------------------------------------------------------
-
-@q("token_explode_df", r"""
-  WITH toks AS (
-    SELECT doc_id, unnest(string_split_regex(trim(text), '[ \t\n\r\f\x0B]+')) AS token
-    FROM documents),
-  dedup AS (SELECT DISTINCT doc_id, token FROM toks
-            WHERE regexp_matches(token, '^[a-z]+$'))
-  SELECT token, count(*) AS df FROM dedup GROUP BY 1
-""")
-def token_explode_df(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _t(spark, sf_dir, "documents")
-    toks = docs.select(
-        "doc_id",
-        F.explode(F.array_distinct(
-            F.split(F.trim("text"), ptext.WS_PLUS))).alias("token"))
-    return (toks.where(F.col("token").rlike("^[a-z]+$"))
-            .groupBy("token").agg(F.count("*").alias("df")))
-
-
-# ---------------------------------------------------------------------------
-# D4: URL-seen anti-join (north_rule; SURVEY.md §2.3 D4)
-# ---------------------------------------------------------------------------
-
-_SHINGLE_SQL = r"""
-    SELECT DISTINCT array_to_string(t[i:i+2], ' ') AS token
-    FROM (SELECT string_split_regex(trim(lower(text)), '[ \t\n\r\f\x0B]+') AS t
-          FROM documents WHERE lang {op} 'en') s,
-         UNNEST(range(1, len(t) - 1)) AS u(i)
-    WHERE len(t) >= 3
-"""
-
-@q("url_seen_anti_join",
-   _SHINGLE_SQL.format(op="=") + " EXCEPT " + _SHINGLE_SQL.format(op="<>"))
-def url_seen_anti_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """D4 shape: candidate keys anti-joined against the seen set — word
-    3-grams stand in for discovered URLs."""
-    docs = _t(spark, sf_dir, "documents")
-    new = (pdedup.shingles(docs.where(F.col("lang") == "en"))
-           .select(F.col("shingle").alias("token")).distinct())
-    seen = (pdedup.shingles(docs.where(F.col("lang") != "en"))
-            .select(F.col("shingle").alias("token")).distinct())
-    return new.join(seen, "token", "left_anti")
-
-
-# ---------------------------------------------------------------------------
-# A1: total count (storage/HybridStorageService.java:178-188)
-# ---------------------------------------------------------------------------
-
-@q("page_count",
-   "SELECT count(*) AS n_pages, count(DISTINCT source) AS n_sources "
-   "FROM documents")
-def page_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _t(spark, sf_dir, "documents").agg(
-        F.count("*").alias("n_pages"),
-        F.countDistinct("source").alias("n_sources"))
-
-
-# ---------------------------------------------------------------------------
-# A3: lineage rollup — per-shard metrics (north_rule lineage)
-# ---------------------------------------------------------------------------
-
-@q("lineage_rollup", """
-  SELECT CAST(event_id % 32 AS INTEGER) AS host_shard, event_type,
-         count(*) AS n, max(value) AS max_value
-  FROM events GROUP BY 1, 2
-""")
-def lineage_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return (_t(spark, sf_dir, "events")
-            .groupBy((F.col("event_id") % 32).cast("int").alias("host_shard"),
-                     "event_type")
-            .agg(F.count("*").alias("n"), F.max("value").alias("max_value")))
-
-
-# ---------------------------------------------------------------------------
-# A4: per-host last-fetch max (core/WebCrawler.java:33,241,322)
-# ---------------------------------------------------------------------------
-
-@q("host_last_fetch", """
-  SELECT user_id AS host_key, count(*) AS n_events,
-         epoch_us(max(ts)) AS last_fetch_us
-  FROM events GROUP BY 1
-""")
-def host_last_fetch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # parquet ts is TIMESTAMP_NTZ; session tz is UTC so the cast matches
-    # DuckDB's epoch_us on the naive value
-    return (_t(spark, sf_dir, "events")
-            .groupBy(F.col("user_id").alias("host_key"))
-            .agg(F.count("*").alias("n_events"),
-                 F.unix_micros(F.max("ts").cast("timestamp"))
-                 .alias("last_fetch_us")))
-
-
-# ---------------------------------------------------------------------------
-# F7: scheduled-time gate (core/WebCrawler.java:172-177)
-# ---------------------------------------------------------------------------
-
-@q("scheduled_gate", """
-  SELECT event_type, count(*) AS n FROM events
-  WHERE ts <= TIMESTAMP '2024-01-15 00:00:00' GROUP BY 1
-""")
-def scheduled_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return (_t(spark, sf_dir, "events")
-            .where(F.col("ts") <= F.lit("2024-01-15 00:00:00").cast("timestamp"))
-            .groupBy("event_type").agg(F.count("*").alias("n")))
-
-
-# ---------------------------------------------------------------------------
-# L1: pagination — orderBy + offset + limit
-# (storage/HybridStorageService.java:111-140)
-# ---------------------------------------------------------------------------
-
-@q("pagination", """
-  SELECT o_orderkey, o_totalprice FROM orders
-  ORDER BY o_orderkey LIMIT 50 OFFSET 1000
-""")
-def pagination(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return (_t(spark, sf_dir, "orders")
-            .orderBy("o_orderkey").offset(1000).limit(50)
-            .select("o_orderkey", "o_totalprice"))
-
-
-# ---------------------------------------------------------------------------
-# L3/L4: priority top-k ordering
-# ---------------------------------------------------------------------------
-
-@q("priority_topk", """
-  SELECT event_id, event_type, value FROM events
-  ORDER BY value DESC, event_id LIMIT 100
-""")
-def priority_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return (_t(spark, sf_dir, "events")
-            .orderBy(F.col("value").desc(), "event_id").limit(100)
-            .select("event_id", "event_type", "value"))
-
-
-# ---------------------------------------------------------------------------
-# F10/X5: substring search (storage/HybridStorageService.java:143-175)
-# ---------------------------------------------------------------------------
-
-@q("url_search", """
-  SELECT doc_id, n_chars FROM documents
-  WHERE contains(lower(text), 'merge batch')
-""")
-def url_search(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return (_t(spark, sf_dir, "documents")
-            .where(F.lower(F.col("text")).contains("merge batch"))
-            .select("doc_id", "n_chars"))
-
-
-# ---------------------------------------------------------------------------
-# headline agg: TPC-H Q1 shape (exact decimal sums, AQE partial aggs)
-# ---------------------------------------------------------------------------
-
-@q("pricing_summary", """
-  SELECT l_returnflag, l_linestatus,
-         CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
-         CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE)
-             AS sum_base_price,
-         count(*) AS count_order
-  FROM lineitem GROUP BY 1, 2
-""")
-def pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
-    return (li.groupBy("l_returnflag", "l_linestatus")
-            .agg(F.sum(F.col("l_quantity").cast("decimal(18,2)"))
-                 .cast("double").alias("sum_qty"),
-                 F.sum(F.col("l_extendedprice").cast("decimal(18,2)"))
-                 .cast("double").alias("sum_base_price"),
-                 F.count("*").alias("count_order")))
-
-
-# ---------------------------------------------------------------------------
-# broadcast join + agg: revenue by segment (robots-join shape at scale)
-# ---------------------------------------------------------------------------
-
-@q("segment_revenue", """
-  SELECT c_mktsegment,
-         CAST(sum(CAST(l_extendedprice * (1 - l_discount)
-                       AS DECIMAL(18,4))) AS DOUBLE) AS revenue,
-         count(*) AS n_items
-  FROM customer
-  JOIN orders ON c_custkey = o_custkey
-  JOIN lineitem ON l_orderkey = o_orderkey
-  GROUP BY 1
-""")
-def segment_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cust = _t(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
-    orders = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    li = _t(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_extendedprice", "l_discount")
-    rev = (F.col("l_extendedprice") * (F.lit(1) - F.col("l_discount")))
-    return (li.join(orders, li.l_orderkey == orders.o_orderkey)
-            .join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
-            .groupBy("c_mktsegment")
-            .agg(F.sum(rev.cast("decimal(18,4)")).cast("double")
-                 .alias("revenue"),
-                 F.count("*").alias("n_items")))
-
-
-# ---------------------------------------------------------------------------
-# six-table star join: regional supplier revenue (TPC-H Q5 shape) — the
-# join-strategy showcase: dims broadcast, fact shuffles once per key
-# ---------------------------------------------------------------------------
-
-@q("regional_revenue", """
-  SELECT n_name,
-         CAST(sum(CAST(l_extendedprice * (1 - l_discount)
-                       AS DECIMAL(18,4))) AS DOUBLE) AS revenue,
-         count(*) AS n_items
-  FROM customer
-  JOIN orders   ON c_custkey = o_custkey
-  JOIN lineitem ON l_orderkey = o_orderkey
-  JOIN supplier ON l_suppkey = s_suppkey AND c_nationkey = s_nationkey
-  JOIN nation   ON s_nationkey = n_nationkey
-  JOIN region   ON n_regionkey = r_regionkey
-  WHERE r_name = 'ASIA'
-    AND o_orderdate >= TIMESTAMP '1996-01-01'
-    AND o_orderdate <  TIMESTAMP '1998-01-01'
-  GROUP BY 1
-""")
-def regional_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q5: revenue per nation where customer and supplier share the
-    nation, one region, two-year order window. 100 TB plan: region/nation/
-    supplier/customer broadcast (region filter prunes nation then supplier
-    BEFORE the fact joins — the dim reduction rides the broadcast build
-    side), so lineitem crosses ONE exchange (the l_orderkey join against
-    the date-filtered orders, which Catalyst pushes to the orders scan);
-    the c_nationkey = s_nationkey correlation is an extra equi-key on the
-    broadcast customer probe, never a shuffle. Decimal-summed, double-cast
-    (bit-exact vs the oracle)."""
-    region = (_t(spark, sf_dir, "region")
-              .where(F.col("r_name") == "ASIA").select("r_regionkey"))
-    nation = (_t(spark, sf_dir, "nation")
-              .join(F.broadcast(region),
-                    F.col("n_regionkey") == F.col("r_regionkey"))
-              .select("n_nationkey", "n_name"))
-    supp = (_t(spark, sf_dir, "supplier")
-            .join(F.broadcast(nation),
-                  F.col("s_nationkey") == F.col("n_nationkey"))
-            .select("s_suppkey", "s_nationkey", "n_name"))
-    cust = _t(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    orders = (_t(spark, sf_dir, "orders")
-              .where((F.col("o_orderdate") >= "1996-01-01")
-                     & (F.col("o_orderdate") < "1998-01-01"))
-              .select("o_orderkey", "o_custkey"))
-    li = _t(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_suppkey", "l_extendedprice", "l_discount")
-    rev = (F.col("l_extendedprice") * (F.lit(1) - F.col("l_discount")))
-    return (li.join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
-            .join(F.broadcast(supp),
-                  F.col("l_suppkey") == F.col("s_suppkey"))
-            .join(F.broadcast(cust),
-                  (F.col("o_custkey") == F.col("c_custkey"))
-                  & (F.col("c_nationkey") == F.col("s_nationkey")))
-            .groupBy("n_name")
-            .agg(F.sum(rev.cast("decimal(18,4)")).cast("double")
-                 .alias("revenue"),
-                 F.count("*").alias("n_items")))
-
-
-# ---------------------------------------------------------------------------
-# event-time tumbling window aggregation (streaming-shape batch analog)
-# ---------------------------------------------------------------------------
-
-@q("events_tumbling", """
-  SELECT epoch_us(date_trunc('hour', ts)) AS win_start_us, event_type,
-         count(*) AS n
-  FROM events GROUP BY 1, 2
-""")
-def events_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return (_t(spark, sf_dir, "events")
-            .withColumn("ts", F.col("ts").cast("timestamp"))
-            .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-            .agg(F.count("*").alias("n"))
-            .select(F.unix_micros(F.col("w.start")).alias("win_start_us"),
-                    "event_type", "n"))
-
-
-# ---------------------------------------------------------------------------
-# text analysis (pipeline/text.py) — training-data pipeline ops
-# ---------------------------------------------------------------------------
-
-@q("text_token_count", r"""
-  SELECT doc_id,
-         len(string_split_regex(trim(text), '[ \t\n\r\f\x0B]+')) AS n_tokens,
-         len(string_split_regex(trim(text), '[^A-Za-z0-9]+'))
-           + length(regexp_replace(text, '[A-Za-z0-9 \t\n\r\f\x0B]', '', 'g'))
-           AS n_subtokens
-  FROM documents
-""")
-def text_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _t(spark, sf_dir, "documents")
-    t = F.col("text")
-    return docs.select(
-        "doc_id",
-        ptext.token_count(t).alias("n_tokens"),
-        ptext.bpe_ish_token_count(t).alias("n_subtokens"))
-
-
-@q("text_fingerprint", r"""
-  SELECT doc_id,
-         sha256(regexp_replace(lower(trim(text)), '[ \t\n\r\f\x0B]+', ' ', 'g'))
-           AS fingerprint
-  FROM documents
-""")
-def text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _t(spark, sf_dir, "documents").select(
-        "doc_id", ptext.fingerprint(F.col("text")).alias("fingerprint"))
-
-
-def _sql_count_word(word: str) -> str:
-    return (rf"(len(string_split_regex(lower(text), '\b{word}\b')) - 1)")
-
-
-_STOP_HITS_SQL = " + ".join(_sql_count_word(w) for w in ptext.STOPWORDS)
-_LANG_SCORE_SQL = {
-    lang: " + ".join(_sql_count_word(w) for w in words)
-    for lang, words in ptext.LANG_MARKERS.items()
-}
-
-def _lang_quality_ctes(src: str) -> str:
-    """The lang-ID + quality-score SQL mirror as CTEs over ``src``
-    (columns doc_id, text) — the ONE restatement of pipeline.text's
-    lang_id/quality_score arithmetic, shared by the text_lang_quality and
-    curation_pipeline oracles so the formula cannot drift between them."""
-    return rf"""scored0 AS (
-    SELECT doc_id, text,
-      CAST(length(text) AS DOUBLE) AS n_len,
-      CAST(len(string_split_regex(trim(text), '[ \t\n\r\f\x0B]+')) AS DOUBLE) AS words,
-      CAST(length(regexp_replace(text, '[A-Za-z0-9 \t\n\r\f\x0B]', '', 'g'))
-           AS DOUBLE) AS punct,
-      CAST({_STOP_HITS_SQL} AS DOUBLE) AS stop_hits,
-      {_LANG_SCORE_SQL['en']} AS s_en, {_LANG_SCORE_SQL['es']} AS s_es,
-      {_LANG_SCORE_SQL['fr']} AS s_fr, {_LANG_SCORE_SQL['de']} AS s_de
-    FROM {src}),
-  scored AS (
-    SELECT doc_id, text,
-      CASE WHEN greatest(s_en, s_es, s_fr, s_de) <= 0 THEN 'und'
-           WHEN s_en = greatest(s_en, s_es, s_fr, s_de) THEN 'en'
-           WHEN s_es = greatest(s_en, s_es, s_fr, s_de) THEN 'es'
-           WHEN s_fr = greatest(s_en, s_es, s_fr, s_de) THEN 'fr'
-           WHEN s_de = greatest(s_en, s_es, s_fr, s_de) THEN 'de'
-           ELSE 'und' END AS lang_pred,
-      round(0.5::DOUBLE * least(n_len / 500::DOUBLE, 1.0::DOUBLE)
-          + 0.3::DOUBLE * least(stop_hits / greatest(words, 1.0::DOUBLE)
-                                * 5.0::DOUBLE, 1.0::DOUBLE)
-          + 0.2::DOUBLE * (1.0::DOUBLE
-              - least(punct / greatest(words, 1.0::DOUBLE), 1.0::DOUBLE)),
-        6) AS quality
-    FROM scored0)"""
-
-
-@q("text_lang_quality", f"""
-  WITH {_lang_quality_ctes('documents')}
-  SELECT doc_id, lang_pred, quality FROM scored
-""")
-def text_lang_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _t(spark, sf_dir, "documents")
-    t = F.col("text")
-    h = ptext.word_hits(t)
-    return docs.select(
-        "doc_id",
-        ptext.lang_id(t, hits=h).alias("lang_pred"),
-        ptext.quality_score(t, hits=h).alias("quality"))
-
-
-@q("corpus_stats", f"""
-  WITH {_lang_quality_ctes('documents')},
-  toks AS (
-    SELECT s.doc_id, s.lang_pred, s.quality,
-           len(string_split_regex(trim(d.text), '[ \\t\\n\\r\\f\\x0B]+')) AS n_tokens
-    FROM scored s JOIN documents d ON d.doc_id = s.doc_id)
-  SELECT lang_pred, count(*) AS n_docs,
-         round(avg(quality), 6) AS avg_quality,
-         round(quantile_cont(n_tokens, 0.5), 6) AS med_tokens,
-         round(quantile_cont(n_tokens, 0.9), 6) AS p90_tokens
-  FROM toks GROUP BY lang_pred
-""")
-def corpus_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-language corpus profile with EXACT quantiles (sort-based
-    percentile, linear interpolation — matches DuckDB quantile_cont
-    bit-for-bit after rounding). One shuffle on lang_pred; the percentile
-    buffer is per-group. At extreme cardinality swap percentile for
-    approx_percentile and accept the sketch (documented trade)."""
-    docs = _t(spark, sf_dir, "documents")
-    t = F.col("text")
-    h = ptext.word_hits(t)
-    scored = docs.select(
-        ptext.lang_id(t, hits=h).alias("lang_pred"),
-        ptext.quality_score(t, hits=h).alias("quality"),
-        ptext.token_count(t).alias("n_tokens"))
-    return (scored.groupBy("lang_pred")
-            .agg(F.count(F.lit(1)).alias("n_docs"),
-                 F.round(F.avg("quality"), 6).alias("avg_quality"),
-                 F.round(F.percentile("n_tokens", F.lit(0.5)), 6)
-                 .alias("med_tokens"),
-                 F.round(F.percentile("n_tokens", F.lit(0.9)), 6)
-                 .alias("p90_tokens")))
-
-
-@q("corpus_rollup", f"""
-  WITH {_lang_quality_ctes('documents')}
-  SELECT coalesce(lang_pred, '(all)') AS lang,
-         coalesce(CAST(floor(quality * 5) AS INT), -1) AS q_bucket,
-         count(*) AS n_docs
-  FROM scored
-  GROUP BY ROLLUP (lang_pred, CAST(floor(quality * 5) AS INT))
-""")
-def corpus_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hierarchical (language × quality-bucket) rollup — subtotals and a
-    grand total in one pass; Spark plans ROLLUP as a single Expand +
-    hash aggregate, still one exchange. Null grouping keys are projected
-    to sentinels so the compare harness never sorts mixed None/str."""
-    docs = _t(spark, sf_dir, "documents")
-    t = F.col("text")
-    h = ptext.word_hits(t)
-    scored = docs.select(
-        ptext.lang_id(t, hits=h).alias("lang_pred"),
-        F.floor(ptext.quality_score(t, hits=h) * 5).cast("int")
-        .alias("qb"))
-    return (scored.rollup("lang_pred", "qb")
-            .agg(F.count(F.lit(1)).alias("n_docs"))
-            .select(F.coalesce("lang_pred", F.lit("(all)")).alias("lang"),
-                    F.coalesce("qb", F.lit(-1)).alias("q_bucket"),
-                    "n_docs"))
-
-
-# ---------------------------------------------------------------------------
-# vocabulary heavy hitters + per-document TF-IDF keywords (pipeline/text)
-# ---------------------------------------------------------------------------
-
-@q("vocab_topk", r"""
-  WITH tok0 AS (
-    SELECT doc_id,
-           unnest(string_split_regex(trim(lower(text)), '[ \t\n\r\f\x0B]+')) AS token
-    FROM documents),
-  agg AS (
-    SELECT token, count(*) AS tf, count(DISTINCT doc_id) AS df
-    FROM tok0 WHERE token <> '' GROUP BY token)
-  SELECT token, tf, df FROM agg ORDER BY tf DESC, token LIMIT 50
-""")
-def vocab_topk_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Corpus vocabulary top-50: partial-agg shuffle on the token, then
-    TakeOrderedAndProject (per-partition top-k, no global sort)."""
-    return ptext.vocab_topk(_t(spark, sf_dir, "documents"), k=50)
-
-
-@q("zipf_fit", r"""
-  WITH tok0 AS (
-    SELECT source,
-           unnest(string_split_regex(trim(lower(text)), '[ \t\n\r\f\x0B]+')) AS token
-    FROM documents),
-  tf AS (
-    SELECT source, token, count(*) AS freq
-    FROM tok0 WHERE token <> '' GROUP BY source, token),
-  r AS (
-    SELECT source, token, freq,
-           row_number() OVER (PARTITION BY source
-                              ORDER BY freq DESC, token) AS rnk
-    FROM tf),
-  pts AS (
-    SELECT source,
-           CAST(round(round(ln(CAST(rnk AS DOUBLE)), 6) * 1e6, 0)
-                AS BIGINT) AS x,
-           CAST(round(round(ln(CAST(freq AS DOUBLE)), 6) * 1e6, 0)
-                AS BIGINT) AS y
-    FROM r WHERE rnk <= 100)
-  SELECT source, count(*) AS n_terms,
-         round(CAST(count(*) * sum(x*y) - sum(x) * sum(y) AS DOUBLE)
-               / CAST(count(*) * sum(x*x) - sum(x) * sum(x) AS DOUBLE), 6)
-           AS zipf_slope
-  FROM pts GROUP BY source
-""")
-def zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-source Zipf exponent: least-squares slope of ln(freq) vs
-    ln(rank) over the top-100 terms — the corpus-health diagnostic that
-    flags template/boilerplate sources (slope near 0) vs natural text
-    (near -1). ln() inputs are quantized to 1e-6 before the sums (the
-    lm_perplexity contract) so both engines reduce identical values; the
-    closed-form slope avoids regr_slope's engine-specific accumulation.
-    Scale: one token shuffle, a WindowGroupLimit top-100 per source,
-    then a per-source partial agg — no driver math."""
-    from pyspark.sql import Window
-
-    tf = (_t(spark, sf_dir, "documents")
-          .select("source",
-                  F.explode(ptext.tokens(F.lower(F.col("text"))))
-                  .alias("token"))
-          .where(F.col("token") != "")
-          .groupBy("source", "token").agg(F.count("*").alias("freq")))
-    w = Window.partitionBy("source").orderBy(F.desc("freq"), "token")
-    # micro-scaled INTEGER coordinates: the least-squares sums are then
-    # exact under any partition order (a raw double Σxy drifts in the
-    # last ulps between engines); the 1e12 scale cancels between the
-    # slope's numerator and denominator
-    def micro(c):
-        return F.round(F.round(F.log(c), 6) * F.lit(1e6), 0).cast("long")
-
-    pts = (tf.withColumn("rnk", F.row_number().over(w))
-           .where(F.col("rnk") <= 100)
-           .select("source",
-                   micro(F.col("rnk").cast("double")).alias("x"),
-                   micro(F.col("freq").cast("double")).alias("y")))
-    n = F.count("*")
-    num = (n * F.sum(F.col("x") * F.col("y"))
-           - F.sum("x") * F.sum("y")).cast("double")
-    den = (n * F.sum(F.col("x") * F.col("x"))
-           - F.sum("x") * F.sum("x")).cast("double")
-    return (pts.groupBy("source")
-            .agg(n.alias("n_terms"),
-                 F.round(num / den, 6).alias("zipf_slope")))
-
-
-@q("inverted_index", r"""
-  WITH tok0 AS (
-    SELECT doc_id,
-           unnest(string_split_regex(trim(lower(text)), '[ \t\n\r\f\x0B]+')) AS token
-    FROM documents),
-  tf AS (
-    SELECT token, doc_id, count(*) AS tf
-    FROM tok0 WHERE token <> '' GROUP BY token, doc_id)
-  SELECT token, count(*) AS df, CAST(sum(tf) AS BIGINT) AS tf_total,
-         string_agg(CAST(doc_id AS VARCHAR) || ':' || CAST(tf AS VARCHAR),
-                    ',' ORDER BY doc_id) AS postings
-  FROM tf GROUP BY token
-""")
-def inverted_index_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Search-index build: per-token postings lists in doc_id order,
-    deterministic under any partitioning (array_sort pins the
-    collect_list order before serialization)."""
-    return ptext.inverted_index(_t(spark, sf_dir, "documents"))
-
-
-@q("tfidf_topterms", r"""
-  WITH tok0 AS (
-    SELECT doc_id,
-           unnest(string_split_regex(trim(lower(text)), '[ \t\n\r\f\x0B]+')) AS token
-    FROM documents),
-  tfreq AS (
-    SELECT doc_id, token, count(*) AS tf
-    FROM tok0 WHERE token <> '' GROUP BY doc_id, token),
-  dfreq AS (SELECT token, count(*) AS df FROM tfreq GROUP BY token),
-  n AS (SELECT count(DISTINCT doc_id) AS n_docs FROM documents),
-  scored AS (
-    SELECT t.doc_id, t.token, t.tf, d.df,
-           round(CAST(t.tf AS DOUBLE)
-                 * ln(CAST(n.n_docs + 1 AS DOUBLE)
-                      / CAST(d.df + 1 AS DOUBLE)), 6) AS tfidf
-    FROM tfreq t JOIN dfreq d USING (token) CROSS JOIN n),
-  ranked AS (
-    SELECT *, row_number() OVER (
-      PARTITION BY doc_id ORDER BY tfidf DESC, token) AS rank
-    FROM scored)
-  SELECT doc_id, token, tf, df, tfidf, CAST(rank AS INTEGER) AS rank
-  FROM ranked WHERE rank <= 3
-""")
-def tfidf_topterms_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-document top-3 TF-IDF keywords. tfidf is quantized to 1e-6 on
-    BOTH sides before ranking, so the window order (tfidf desc, token)
-    cannot be perturbed by the ~1-ulp latitude engines have on ln()."""
-    return ptext.tfidf_topterms(_t(spark, sf_dir, "documents"), k=3)
-
-
-@q("bm25_search", r"""
-  WITH tok AS (
-    SELECT doc_id,
-           len(string_split_regex(trim(text), '[ \t\n\r\f\x0B]+')) AS doclen,
-           unnest(string_split_regex(trim(lower(text)), '[ \t\n\r\f\x0B]+')) AS token
-    FROM documents),
-  tf AS (
-    SELECT doc_id, token, doclen, count(*) AS tf
-    FROM tok WHERE token IN ('spark', 'merge', 'vector')
-    GROUP BY doc_id, token, doclen),
-  stats AS (
-    SELECT count(*) AS n_docs,
-           avg(len(string_split_regex(trim(text), '[ \t\n\r\f\x0B]+'))) AS avgdl
-    FROM documents),
-  dfreq AS (SELECT token, count(*) AS df FROM tf GROUP BY token),
-  scored AS (
-    SELECT t.doc_id,
-           CAST(round(round(
-             ln(1 + (s.n_docs - d.df + 0.5) / (d.df + 0.5))
-                 * (t.tf * (1.2 + 1.0))
-                 / (t.tf + 1.2 * (1 - 0.75 + 0.75 * t.doclen / s.avgdl)),
-             6) * 1e6, 0) AS BIGINT) AS ts_micro
-    FROM tf t JOIN dfreq d USING (token) CROSS JOIN stats s)
-  SELECT doc_id,
-         round(CAST(sum(ts_micro) AS DOUBLE) / 1e6, 6) AS score,
-         count(*) AS n_terms
-  FROM scored GROUP BY doc_id
-  ORDER BY score DESC, doc_id LIMIT 20
-""")
-def bm25_search_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BM25 top-20 for the fixed query bag (spark, merge, vector).
-    Per-term scores quantized to 1e-6 pre-sum on both engines (the
-    lm_perplexity contract), so ln() latitude cannot reorder the top-k."""
-    return ptext.bm25_search(_t(spark, sf_dir, "documents"),
-                             ["spark", "merge", "vector"], k=20)
-
-
-# ---------------------------------------------------------------------------
-# bucketized range join (operators/rangejoin): interval lookup as hash join
-# ---------------------------------------------------------------------------
-
-@q("range_bracket_join", """
-  WITH brackets AS (
-    SELECT p_partkey AS bracket_id,
-           CAST((p_partkey % 59) * 8 AS DOUBLE) AS lo,
-           CAST((p_partkey % 59) * 8 + 5 + p_partkey % 23 AS DOUBLE) AS hi
-    FROM part WHERE p_partkey < 300)
-  SELECT e.event_id, e.value, b.bracket_id, b.lo, b.hi
-  FROM events e JOIN brackets b ON e.value >= b.lo AND e.value < b.hi
-""")
-def range_bracket_join_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Overlapping value brackets matched to events by a bucketized hash
-    join; the oracle states the NAIVE non-equi join, so the hash-match
-    proves the bucket rewrite lossless."""
-    from .operators.rangejoin import range_bucket_join
-    pk = F.col("p_partkey")
-    brackets = (_t(spark, sf_dir, "part")
-                .where(pk < 300)
-                .select(pk.alias("bracket_id"),
-                        ((pk % 59) * 8).cast("double").alias("lo"),
-                        ((pk % 59) * 8 + 5 + pk % 23).cast("double")
-                        .alias("hi")))
-    points = _t(spark, sf_dir, "events").select("event_id", "value")
-    return range_bucket_join(points, brackets, value_col="value",
-                             bucket_width=16)
-
-
-# ---------------------------------------------------------------------------
-# iterative host PageRank over the link graph (pipeline/graph)
-# ---------------------------------------------------------------------------
-
-@q("host_pagerank", lambda: _oracles.host_pagerank_sql(
-    n_nodes=32, iterations=6, damping=0.5))
-def host_pagerank_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Six PageRank iterations over a 4-regular host graph whose node set
-    is discovered from the data. Edges are partitioned by dst once and
-    cached; each iteration broadcasts the rank vector and aggregates
-    exchange-free. Bit-exact vs the unrolled-CTE oracle because damping,
-    1/n and every out-degree are powers of two (dyadic doubles: summation
-    order cannot change the result)."""
-    from .pipeline import graph as pgraph
-    nodes, edges = pgraph.host_graph(_t(spark, sf_dir, "documents"),
-                                     n_nodes=32)
-    return pgraph.pagerank(nodes, edges, n_nodes=32, iterations=6,
-                           damping=0.5)
-
-
-@q("bigram_lm_counts", r"""
-  WITH toks AS (
-    SELECT string_split_regex(trim(lower(text)), '[ \t\n\r\f\x0B]+') AS t
-    FROM documents),
-  bg AS (
-    SELECT t[i] AS w1, t[i + 1] AS w2
-    FROM toks, UNNEST(range(1, len(t))) AS u(i)
-    WHERE len(t) >= 2),
-  big AS (SELECT w1, w2, count(*) AS c_big FROM bg GROUP BY w1, w2),
-  ctx AS (SELECT w1, CAST(sum(c_big) AS BIGINT) AS c_w1,
-                 count(*) AS n_followers
-          FROM big GROUP BY w1)
-  SELECT big.w1, big.w2, big.c_big, ctx.c_w1, ctx.n_followers
-  FROM big JOIN ctx USING (w1)
-""")
-def bigram_lm_counts_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bigram LM counts with Kneser-Ney continuation fan-out."""
-    return ptext.bigram_lm_counts(_t(spark, sf_dir, "documents"))
-
-
-@q("bpe_encode", lambda: _oracles.bpe_encode_sql(n_merges=12))
-def bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Corpus tokenization sizing pass: train 12 BPE merges in-flight,
-    encode every distinct word once, and roll up per-document encoded
-    lengths — oracled against the pure-Python golden tokenizer."""
-    return ptext.bpe_encode_lengths(_t(spark, sf_dir, "documents"),
-                                    n_merges=12)
-
-
-@q("bpe_merges", lambda: _oracles.bpe_merges_sql(n_merges=64,
-                                                 pairs_per_pass=8))
-def bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distributed BPE vocabulary training: 64 merge rules learned with
-    the BATCHED variant (top-8 mutually-compatible pairs per counting
-    pass — ~n_merges/8 Spark jobs instead of one per merge, the bound a
-    32k-merge production vocabulary needs), oracled against a pure-Python
-    golden model that replicates the batched selection verbatim. The
-    exact merge-at-a-time Sennrich path stays the default
-    (pairs_per_pass=1) and is oracled via bpe_encode."""
-    return ptext.bpe_train(_t(spark, sf_dir, "documents"), n_merges=64,
-                           pairs_per_pass=8)
-
-
-@q("lm_perplexity", r"""
-  WITH mt AS (
-    SELECT string_split_regex(trim(lower(text)), '[ \t\n\r\f\x0B]+') AS t
-    FROM documents WHERE doc_id % 2 = 0),
-  mbg AS (
-    SELECT t[i] AS w1, t[i + 1] AS w2
-    FROM mt, UNNEST(range(1, len(t))) AS u(i)
-    WHERE len(t) >= 2),
-  big AS (SELECT w1, w2, count(*) AS c_big FROM mbg GROUP BY w1, w2),
-  ctx AS (SELECT w1, CAST(sum(c_big) AS BIGINT) AS c_w1
-          FROM big GROUP BY w1),
-  v AS (SELECT CAST(count(*) AS DOUBLE) AS vsz FROM ctx),
-  dt AS (
-    SELECT doc_id, string_split_regex(trim(lower(text)), '[ \t\n\r\f\x0B]+') AS t
-    FROM documents),
-  dbg AS (
-    SELECT doc_id, t[i] AS w1, t[i + 1] AS w2
-    FROM dt, UNNEST(range(1, len(t))) AS u(i)
-    WHERE len(t) >= 2),
-  sc AS (
-    SELECT d.doc_id,
-           CASE WHEN big.c_big IS NULL THEN 1 ELSE 0 END AS oov,
-           CAST(round(round(ln((coalesce(big.c_big, 0) + 1.0)
-                    / (coalesce(ctx.c_w1, 0) + v.vsz)), 6) * 1e6, 0)
-                AS BIGINT) AS lp_micro
-    FROM dbg d
-    LEFT JOIN big ON big.w1 = d.w1 AND big.w2 = d.w2
-    LEFT JOIN ctx ON ctx.w1 = d.w1, v),
-  agg AS (
-    SELECT doc_id, count(*) AS n_bigrams,
-           CAST(sum(oov) AS BIGINT) AS n_oov,
-           round(CAST(sum(lp_micro) AS DOUBLE) / (count(*) * 1e6), 6)
-             AS avg_logprob
-    FROM sc GROUP BY doc_id)
-  SELECT doc_id, n_bigrams, n_oov, avg_logprob,
-         round(exp(-avg_logprob), 6) AS ppl
-  FROM agg
-""")
-def lm_perplexity_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CCNet-style bigram-LM quality scoring: model trained on the even
-    half of the corpus (the 'reference'), every document scored — odd
-    documents exercise the unseen-bigram smoothing path."""
-    docs = _t(spark, sf_dir, "documents")
-    return ptext.lm_perplexity(docs, docs.where(F.col("doc_id") % 2 == 0))
-
-
-@q("sequence_packing", r"""
-  WITH staged AS (
-    SELECT doc_id, doc_id % 8 AS shard,
-           CAST(len(string_split_regex(trim(text), '[ \t\n\r\f\x0B]+')) AS BIGINT)
-             AS n_tokens
-    FROM documents),
-  packed AS (
-    SELECT doc_id, shard, n_tokens,
-           CAST(coalesce(sum(n_tokens) OVER (
-             PARTITION BY shard ORDER BY doc_id
-             ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-             0) AS BIGINT) AS cum_before
-    FROM staged)
-  SELECT doc_id, shard, n_tokens,
-         CAST(cum_before % 256 AS BIGINT) AS offset_in_chunk,
-         CAST(cum_before // 256 AS BIGINT) AS chunk_start,
-         CAST((cum_before + n_tokens - 1) // 256 AS BIGINT) AS chunk_end
-  FROM packed
-""")
-def sequence_packing_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Concat-and-chunk packing into 256-token training sequences, 8
-    independent shards packed in parallel (one window exchange)."""
-    return ptext.sequence_packing(_t(spark, sf_dir, "documents"),
-                                  ctx_len=256, n_shards=8)
-
-
-@q("epoch_shuffle", lambda: _oracles.epoch_shuffle_sql(epoch=3, n_shards=8))
-def epoch_shuffle_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic epoch-3 training shuffle: xxhash64(doc_id, epoch)
-    permutation keys, pmod shard spread, in-shard read order — oracled
-    against the independent XXH64 mirror + a DuckDB re-derivation of
-    shard and rank."""
-    return ptext.epoch_shuffle(_t(spark, sf_dir, "documents"),
-                               epoch=3, n_shards=8)
-
-
-@q("sequence_packing_ffd",
-   lambda: _oracles.sequence_packing_ffd_sql(ctx_len=256, n_shards=8))
-def sequence_packing_ffd_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bin-packed (no-split) sequence packing: documents keep their
-    boundaries, first-fit-decreasing into 256-token bins per shard —
-    the padding-minimizing alternative to concat-and-chunk when
-    attention must not span document breaks. Oracled against the same
-    pure FFD kernel run sequentially."""
-    return ptext.sequence_packing_ffd(_t(spark, sf_dir, "documents"),
-                                      ctx_len=256, n_shards=8)
-
-
-@q("chunk_manifest", r"""
-  WITH staged AS (
-    SELECT doc_id, doc_id % 8 AS shard,
-           CAST(len(string_split_regex(trim(text), '[ \t\n\r\f\x0B]+')) AS BIGINT)
-             AS n_tokens
-    FROM documents),
-  packed AS (
-    SELECT doc_id, shard, n_tokens,
-           CAST(coalesce(sum(n_tokens) OVER (
-             PARTITION BY shard ORDER BY doc_id
-             ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-             0) AS BIGINT) AS cum_before
-    FROM staged),
-  m AS (
-    SELECT doc_id, shard, n_tokens, cum_before,
-           unnest(range(cum_before // 256,
-                        (cum_before + n_tokens - 1) // 256 + 1))
-             AS chunk_id
-    FROM packed)
-  SELECT shard, chunk_id, doc_id,
-         greatest(chunk_id * 256 - cum_before, 0) AS tok_from,
-         least(n_tokens, (chunk_id + 1) * 256 - cum_before) AS tok_to,
-         greatest(cum_before - chunk_id * 256, 0) AS chunk_off
-  FROM m
-""")
-def chunk_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Trainer-facing shard manifest: per (shard, chunk) the ordered
-    document token slices a dataloader gathers to emit that chunk."""
-    return ptext.packed_chunk_manifest(_t(spark, sf_dir, "documents"),
-                                       ctx_len=256, n_shards=8)
-
-
-# ---------------------------------------------------------------------------
-# PII scrub/stats (pipeline/text.pii_*). The synthetic corpus carries no
-# PII, so both sides append the same deterministic PII suffixes (keyed by
-# doc_id) before the operator runs — the operator itself is what's under
-# test; the injection is restated in the oracle CTE.
-# ---------------------------------------------------------------------------
-
-def _pii_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = F.col("doc_id")
-    suffix = (
-        F.when(d % 4 == 0, F.concat(F.lit(" mail u"), d.cast("string"),
-                                    F.lit("@mail.example.com")))
-        .when(d % 4 == 1, F.concat(F.lit(" ip 10.0.0."),
-                                   (d % 256).cast("string")))
-        .when(d % 4 == 2, F.lit(" ssn 123-45-6789"))
-        .otherwise(F.lit(" call +14155551234 or 555-867-5309")))
-    return (_t(spark, sf_dir, "documents")
-            .select("doc_id", F.concat(F.col("text"), suffix).alias("text")))
-
-
-_PII_DOCS_SQL = """pii_docs AS (
-    SELECT doc_id, text || CASE CAST(doc_id % 4 AS INTEGER)
-      WHEN 0 THEN ' mail u' || CAST(doc_id AS VARCHAR) || '@mail.example.com'
-      WHEN 1 THEN ' ip 10.0.0.' || CAST(doc_id % 256 AS VARCHAR)
-      WHEN 2 THEN ' ssn 123-45-6789'
-      ELSE ' call +14155551234 or 555-867-5309' END AS text
-    FROM documents)"""
-
-
-def _scrub_chain(base: str) -> str:
-    """The nested regexp_replace scrub expression over ``base`` — the one
-    SQL restatement of pipeline.text.pii_scrub's category chain."""
-    expr = base
-    for cat in ptext.PII_ORDER:
-        expr = (f"regexp_replace({expr}, '{ptext.PII_PATTERNS[cat]}', "
-                f"'[{cat.upper()}]', 'g')")
-    return expr
-
-
-def _pii_stats_sql() -> str:
-    prev, ctes = "pii_docs", [_PII_DOCS_SQL]
-    for i, cat in enumerate(ptext.PII_ORDER):
-        pat = ptext.PII_PATTERNS[cat]
-        ctes.append(
-            f"""s{i} AS (
-    SELECT *, CAST(len(regexp_extract_all(t_{i}, '{pat}')) AS BIGINT)
-                AS n_{cat},
-           regexp_replace(t_{i}, '{pat}', '[{cat.upper()}]', 'g')
-                AS t_{i + 1}
-    FROM {'(SELECT doc_id, text AS t_0 FROM pii_docs)' if i == 0 else prev})""")
-        prev = f"s{i}"
-    cols = ", ".join(f"n_{c}" for c in ptext.PII_ORDER)
-    total = " + ".join(f"n_{c}" for c in ptext.PII_ORDER)
-    return (f"\n  WITH {', '.join(ctes)}\n"
-            f"  SELECT doc_id, {cols}, CAST({total} AS BIGINT) AS n_pii\n"
-            f"  FROM {prev}\n")
-
-
-def _pii_scrub_sql() -> str:
-    return (f"\n  WITH {_PII_DOCS_SQL}\n"
-            f"  SELECT doc_id, {_scrub_chain('text')} AS clean_text "
-            f"FROM pii_docs\n")
-
-
-@q("pii_stats", _pii_stats_sql)
-def pii_stats_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return ptext.pii_stats(_pii_docs(spark, sf_dir))
-
-
-@q("pii_scrub", _pii_scrub_sql)
-def pii_scrub_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return ptext.pii_scrub(_pii_docs(spark, sf_dir))
-
-
-def _training_mix_ctes() -> str:
-    """The shared WITH-body of the training-mix chain: lang/quality gate
-    (_lang_quality_ctes) → exact dedup (QUALIFY min-id) → eval-split
-    holdout + 8-gram decontamination → per-source quota (XXH64-mirror
-    rank VALUES). Used by the training_mix oracle AND the
-    training_mix_report stage-count oracle."""
-    return rf"""{_lang_quality_ctes('documents')},
-  kept AS (SELECT s.doc_id, d.source, s.text
-           FROM scored s JOIN documents d USING (doc_id)
-           WHERE s.lang_pred = 'en' AND s.quality >= 0.5),
-  dedup AS (SELECT doc_id, source, text FROM kept
-            QUALIFY row_number() OVER (PARTITION BY md5(text)
-                                       ORDER BY doc_id) = 1),
-  train AS (SELECT * FROM dedup WHERE doc_id % 5 <> 0),
-  etok AS (SELECT string_split_regex(trim(lower(text)), '[ \t\n\r\f\x0B]+') AS t
-           FROM documents WHERE doc_id % 5 = 0),
-  ew AS (SELECT DISTINCT array_to_string(t[i:i + 7], ' ') AS key
-         FROM etok, UNNEST(range(1, len(t) - 8 + 2)) AS u(i)
-         WHERE len(t) >= 8),
-  dtok AS (SELECT doc_id,
-                  string_split_regex(trim(lower(text)), '[ \t\n\r\f\x0B]+') AS t
-           FROM train),
-  cw AS (SELECT doc_id, array_to_string(t[i:i + 7], ' ') AS key
-         FROM dtok, UNNEST(range(1, len(t) - 8 + 2)) AS u(i)
-         WHERE len(t) >= 8),
-  contam AS (SELECT DISTINCT c.doc_id FROM cw c JOIN ew e USING (key)),
-  clean AS (SELECT * FROM train
-            WHERE doc_id NOT IN (SELECT doc_id FROM contam)),
-  h(doc_id, hk) AS (VALUES {_oracles.doc_hash_values()}),
-  quota AS (SELECT c.doc_id, c.source, c.text
-            FROM clean c JOIN h USING (doc_id)
-            QUALIFY row_number() OVER (PARTITION BY c.source
-                                       ORDER BY h.hk, c.doc_id) <= 10)"""
-
-
-def _training_mix_sql() -> str:
-    """training_mix = the shared chain + sequence packing."""
-    return rf"""
-  WITH {_training_mix_ctes()},
-  staged AS (
-    SELECT doc_id, doc_id % 8 AS shard,
-           CAST(len(string_split_regex(trim(text), '[ \t\n\r\f\x0B]+')) AS BIGINT)
-             AS n_tokens
-    FROM quota),
-  packed AS (
-    SELECT doc_id, shard, n_tokens,
-           CAST(coalesce(sum(n_tokens) OVER (
-             PARTITION BY shard ORDER BY doc_id
-             ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-             0) AS BIGINT) AS cum_before
-    FROM staged)
-  SELECT doc_id, shard, n_tokens,
-         CAST(cum_before % 256 AS BIGINT) AS offset_in_chunk,
-         CAST(cum_before // 256 AS BIGINT) AS chunk_start,
-         CAST((cum_before + n_tokens - 1) // 256 AS BIGINT) AS chunk_end
-  FROM packed
-"""
-
-
-@q("training_mix", _training_mix_sql)
-def training_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """End-to-end TRAINING-MIX flagship — raw corpus to packed training
-    sequences in one declarative plan: lang/quality gate → exact dedup →
-    eval-split holdout (doc_id % 5 == 0) → 8-gram benchmark
-    decontamination → per-source quota cap → concat-and-chunk sequence
-    packing. Every stage is the same operator the standalone queries
-    run; Catalyst stitches them — the gate fuses into the dedup scan,
-    the decontamination probe is a broadcast join, the quota and packing
-    windows are the only added exchanges."""
-    stages = ptext.training_mix_stages(_t(spark, sf_dir, "documents"))
-    return ptext.sequence_packing(stages["quota"], ctx_len=256,
-                                  n_shards=8)
-
-
-def _training_mix_report_sql() -> str:
-    """Stage/reject counts restated from the SAME shared CTE chain the
-    training_mix oracle uses — the two oracles cannot drift."""
-    return rf"""
-  WITH {_training_mix_ctes()}
-  SELECT 'stage' AS kind, 'raw' AS key,
-         CAST(count(*) AS BIGINT) AS rows FROM documents
-  UNION ALL SELECT 'stage', 'gated', CAST(count(*) AS BIGINT) FROM kept
-  UNION ALL SELECT 'stage', 'deduped', CAST(count(*) AS BIGINT) FROM dedup
-  UNION ALL SELECT 'stage', 'train', CAST(count(*) AS BIGINT) FROM train
-  UNION ALL SELECT 'stage', 'clean', CAST(count(*) AS BIGINT) FROM clean
-  UNION ALL SELECT 'stage', 'quota', CAST(count(*) AS BIGINT) FROM quota
-  UNION ALL
-  SELECT 'reject',
-         CASE WHEN lang_pred <> 'en' THEN 'non_en'
-              ELSE 'low_quality' END,
-         CAST(count(*) AS BIGINT)
-  FROM scored WHERE NOT (lang_pred = 'en' AND quality >= 0.5)
-  GROUP BY 2
-"""
-
-
-@q("training_mix_report", _training_mix_report_sql)
-def training_mix_report_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Dataset-card accounting for the text training mix: per-rung
-    surviving-row counts (raw -> gated -> deduped -> train -> clean ->
-    quota) plus the gate rejection breakdown, all counted from the SAME
-    stage ladder the flagship runs."""
-    return ptext.training_mix_report(_t(spark, sf_dir, "documents"))
-
-
-@q("corpus_drift", r"""
-  WITH oc AS (SELECT source, count(*) AS no FROM documents
-              WHERE doc_id % 3 = 0 GROUP BY source),
-  nc AS (SELECT source, count(*) AS nn FROM documents
-         WHERE doc_id % 3 <> 0 GROUP BY source),
-  both_ AS (
-    SELECT COALESCE(oc.source, nc.source) AS source,
-           COALESCE(no, 0) AS no, COALESCE(nn, 0) AS nn
-    FROM oc FULL OUTER JOIN nc ON oc.source = nc.source),
-  tot AS (SELECT CAST(sum(no) AS DOUBLE) AS t_o,
-                 CAST(sum(nn) AS DOUBLE) AS t_n FROM both_)
-  SELECT source,
-         round(no / t_o, 6) AS p_old,
-         round(nn / t_n, 6) AS q_new,
-         round(CASE WHEN no > 0 THEN no / t_o / 2 * log2(
-                 (no / t_o) / ((no / t_o + nn / t_n) / 2)) ELSE 0 END
-             + CASE WHEN nn > 0 THEN nn / t_n / 2 * log2(
-                 (nn / t_n) / ((no / t_o + nn / t_n) / 2)) ELSE 0 END,
-               6) AS js_term
-  FROM both_, tot
-""")
-def corpus_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Snapshot drift: per-source share in two deterministic snapshot
-    splits plus the Jensen-Shannon divergence contribution."""
-    docs = _t(spark, sf_dir, "documents")
-    return ptext.distribution_drift(
-        docs.where(F.col("doc_id") % 3 == 0),
-        docs.where(F.col("doc_id") % 3 != 0))
-
-
-@q("mix_weights", r"""
-  WITH c AS (SELECT source, count(*) AS n_docs,
-                    CAST(round(power(count(*), 0.3) * 1e9, 0) AS BIGINT)
-                      AS p
-             FROM documents GROUP BY source),
-  z AS (SELECT CAST(sum(p) AS BIGINT) AS z,
-               CAST(sum(n_docs) AS BIGINT) AS n FROM c)
-  SELECT source, n_docs,
-         round(CAST(p AS DOUBLE) / CAST(z.z AS DOUBLE), 6) AS weight,
-         round(CAST(p AS DOUBLE) / CAST(z.z AS DOUBLE) * z.n / n_docs, 6)
-           AS repeat_factor
-  FROM c, z
-""")
-def mix_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Temperature-scaled data-mixing table: per-source sampling weight
-    n^0.3 / sum(n^0.3) and the implied repeat factor (epochs) per
-    source."""
-    return ptext.mixture_weights(_t(spark, sf_dir, "documents"), alpha=0.3)
-
-
-def _stratified_split_sql() -> str:
-    return f"""
-  WITH h(doc_id, hk) AS (VALUES {_oracles.doc_hash_values()}),
-  r AS (
-    SELECT d.doc_id, d.lang,
-           row_number() OVER (PARTITION BY d.lang
-                              ORDER BY h.hk, d.doc_id) AS rn,
-           count(*) OVER (PARTITION BY d.lang) AS n
-    FROM documents d JOIN h USING (doc_id))
-  SELECT doc_id, lang,
-         CASE WHEN rn * 100 <= n * 90 THEN 'train'
-              WHEN rn * 100 <= n * 95 THEN 'val'
-              ELSE 'test' END AS split
-  FROM r
-"""
-
-
-@q("stratified_split", _stratified_split_sql)
-def stratified_split_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact per-language 90/5/5 train/val/test split: per-stratum hash
-    rank + integer percentile cuts (bit-exact cross-engine)."""
-    return ptext.stratified_split(_t(spark, sf_dir, "documents"),
-                                  strata_col="lang", pct=(90, 5, 5))
-
-
-@q("source_quota", lambda: _oracles.source_quota_sql(cap=10))
-def source_quota(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Domain-balancing quota: at most 10 docs per source, picked by the
-    deterministic xxhash64 rank (WindowGroupLimit partial below the
-    exchange)."""
-    return ptext.source_quota_sample(_t(spark, sf_dir, "documents"), cap=10)
-
-
-@q("doc_sample", lambda: _oracles.doc_sample_sql(rate=0.25))
-def doc_sample_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic xxhash64-bucket corpus sample (reproducible
-    train/eval split) — oracled through the Python XXH64 mirror."""
-    docs = _t(spark, sf_dir, "documents")
-    return ptext.deterministic_sample(docs, "doc_id", 0.25).select(
-        "doc_id", F.length("text").cast("int").alias("n_chars"))
-
-
-# ---------------------------------------------------------------------------
-# line-level dedup (pipeline/text.line_dedup). The synthetic corpus is flat
-# word-soup, so both sides derive the same multi-line corpus: tokens folded
-# into 8-word lines plus three appended boilerplate lines with document
-# frequencies 500 / 10 / 1 — the operator under test is the cross-document
-# line-frequency dedup, the derivation is restated in the oracle CTE.
-# ---------------------------------------------------------------------------
-
-def _multiline_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _t(spark, sf_dir, "documents")
-    toks = F.split(F.col("text"), " ")
-    n_lines = F.ceil(F.size(toks) / F.lit(8.0)).cast("int")
-    body = F.array_join(
-        F.transform(F.sequence(F.lit(0), n_lines - 1),
-                    lambda i: F.array_join(
-                        F.slice(toks, i * 8 + 1, 8), " ")),
-        "\n")
-    d = F.col("doc_id")
-    return docs.select(
-        "doc_id",
-        F.concat(body,
-                 F.lit("\nfollow us\ncopyright host "),
-                 (d % 50).cast("string"),
-                 F.lit("\nsection "), d.cast("string")).alias("text"))
-
-
-_MULTILINE_DOCS_SQL = """mdocs AS (
-    SELECT doc_id,
-      array_to_string(
-        list_transform(range(0, CAST(ceil(len(toks) / 8.0) AS INT)),
-                       i -> array_to_string(toks[i*8+1 : i*8+8], ' ')),
-        chr(10))
-      || chr(10) || 'follow us'
-      || chr(10) || 'copyright host ' || CAST(doc_id % 50 AS VARCHAR)
-      || chr(10) || 'section ' || CAST(doc_id AS VARCHAR) AS text
-    FROM (SELECT doc_id, string_split(text, ' ') AS toks FROM documents))"""
-
-
-@q("line_dedup", f"""
-  WITH {_MULTILINE_DOCS_SQL},
-  lines AS (
-    SELECT doc_id, i AS pos, trim(l[i]) AS line
-    FROM (SELECT doc_id, string_split(text, chr(10)) AS l FROM mdocs),
-         UNNEST(range(1, len(l) + 1)) AS u(i)
-    WHERE length(trim(l[i])) > 0),
-  toocommon AS (
-    SELECT line FROM (SELECT DISTINCT line, doc_id FROM lines)
-    GROUP BY line HAVING count(*) > 5),
-  kept AS (SELECT * FROM lines
-           WHERE line NOT IN (SELECT line FROM toocommon)),
-  rebuilt AS (
-    SELECT doc_id, string_agg(line, chr(10) ORDER BY pos) AS clean_text,
-           count(*) AS n_kept
-    FROM kept GROUP BY doc_id),
-  totals AS (SELECT doc_id, count(*) AS n_lines FROM lines GROUP BY doc_id)
-  SELECT t.doc_id, coalesce(r.clean_text, '') AS clean_text,
-         CAST(t.n_lines AS BIGINT) AS n_lines,
-         CAST(coalesce(r.n_kept, 0) AS BIGINT) AS n_kept
-  FROM totals t LEFT JOIN rebuilt r USING (doc_id)
-""")
-def line_dedup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CCNet-style boilerplate removal: drop lines shared by >5 documents,
-    reassemble the survivors in order."""
-    return ptext.line_dedup(_multiline_docs(spark, sf_dir), max_df=5)
-
-
-@q("repetition_signals", f"""
-  WITH {_MULTILINE_DOCS_SQL},
-  sig AS (
-    SELECT doc_id,
-      list_filter(list_transform(string_split(text, chr(10)),
-                                 x -> trim(x)),
-                  x -> length(x) > 0) AS lines,
-      string_split_regex(trim(lower(text)), '[ \\t\\n\\r\\f\\x0B]+') AS toks
-    FROM mdocs),
-  g AS (
-    SELECT doc_id, lines, list_distinct(lines) AS dlines,
-      CASE WHEN len(toks) >= 2
-           THEN list_transform(range(1, len(toks)),
-                               i -> toks[i] || ' ' || toks[i+1])
-           ELSE CAST([] AS VARCHAR[]) END AS grams
-    FROM sig),
-  h AS (
-    SELECT doc_id, lines, dlines, grams, list_distinct(grams) AS dgrams,
-      coalesce(list_sum(list_transform(lines, x -> length(x))), 0)
-        AS lchars,
-      coalesce(list_sum(list_transform(dlines, x -> length(x))), 0)
-        AS dchars
-    FROM g)
-  SELECT doc_id,
-    CAST(len(lines) AS BIGINT) AS n_lines,
-    round(CASE WHEN len(lines) > 0 THEN
-      CAST(len(lines) - len(dlines) AS DOUBLE) / len(lines)
-      ELSE 0.0 END, 6) AS dup_line_frac,
-    round(CASE WHEN lchars > 0 THEN
-      CAST(lchars - dchars AS DOUBLE) / lchars ELSE 0.0 END, 6)
-      AS dup_line_char_frac,
-    round(CASE WHEN len(grams) > 0 THEN
-      CAST(len(grams) - len(dgrams) AS DOUBLE) / len(grams)
-      ELSE 0.0 END, 6) AS dup_2gram_frac,
-    round(CASE WHEN len(grams) > 0 THEN
-      CAST(list_max(list_transform(dgrams,
-             g2 -> len(list_filter(grams, x -> x = g2)))) AS DOUBLE)
-        / len(grams)
-      ELSE 0.0 END, 6) AS top_2gram_frac
-  FROM h
-""")
-def repetition_signals_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gopher-style within-document repetition quality signals over the
-    derived multi-line corpus — single scan, zero exchange."""
-    return ptext.repetition_signals(_multiline_docs(spark, sf_dir))
-
-
-def _curation_pipeline_sql() -> str:
-    """The full curation chain restated in SQL: PII-injected corpus →
-    lang/quality gate → exact dedup → PII scrub → deterministic sample.
-    Every stage is the SHARED per-stage mirror (_lang_quality_ctes,
-    _scrub_chain, XXH64 sample membership) — no formula is restated a
-    second time, so engine/oracle parity has one source of truth."""
-    keep = ", ".join(f"({d})"
-                     for d in _oracles.sample_keep_ids(0.5)) or "(NULL)"
-    return f"""
-  WITH {_PII_DOCS_SQL},
-  {_lang_quality_ctes('pii_docs')},
-  kept AS (SELECT doc_id, text FROM scored
-           WHERE lang_pred = 'en' AND quality >= 0.5),
-  dedup AS (SELECT doc_id, text FROM kept
-            QUALIFY row_number() OVER (PARTITION BY md5(text)
-                                       ORDER BY doc_id) = 1),
-  keep(doc_id) AS (VALUES {keep})
-  SELECT d.doc_id, {_scrub_chain('d.text')} AS clean_text
-  FROM dedup d JOIN keep USING (doc_id)
-"""
-
-
-@q("curation_pipeline", _curation_pipeline_sql)
-def curation_pipeline_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """End-to-end curation flagship: one declarative plan chaining the
-    stages a training-data pass runs — language/quality gate → exact
-    dedup → PII scrub → reproducible 50% sample. Catalyst fuses the
-    scans; the only exchange is the dedup hash aggregate."""
-    docs = _pii_docs(spark, sf_dir)
-    t = F.col("text")
-    h = ptext.word_hits(t)
-    kept = (docs.select("doc_id", "text",
-                        ptext.lang_id(t, hits=h).alias("lang_pred"),
-                        ptext.quality_score(t, hits=h).alias("quality"))
-            .where((F.col("lang_pred") == "en") & (F.col("quality") >= 0.5))
-            .select("doc_id", "text"))
-    deduped = pdedup.exact_dedup(kept)
-    scrubbed = ptext.pii_scrub(deduped)
-    return ptext.deterministic_sample(scrubbed, "doc_id", 0.5)
-
-
-# ---------------------------------------------------------------------------
-# n-gram Jaccard near-dup pairs (pipeline/dedup.ngram_jaccard_pairs)
-# ---------------------------------------------------------------------------
-
-# the word-3-gram Jaccard candidate/verify chain as CTEs ending in
-# njp(doc_a, doc_b, jaccard) — the ONE SQL restatement, shared by the
-# ngram_jaccard oracle and the neardup_clusters recursive-CTE oracle
-_NGRAM_PAIRS_CTES = r"""toks AS (
-    SELECT doc_id, string_split_regex(trim(lower(text)), '[ \t\n\r\f\x0B]+') AS t
-    FROM documents),
-  sh AS (
-    SELECT DISTINCT doc_id, array_to_string(t[i:i+2], ' ') AS shingle
-    FROM toks, UNNEST(range(1, len(t) - 1)) AS u(i)
-    WHERE len(t) >= 3),
-  sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY 1),
-  dfreq AS (SELECT shingle, count(*) AS df FROM sh GROUP BY 1),
-  capped AS (SELECT s.doc_id, s.shingle FROM sh s
-             JOIN dfreq USING (shingle) WHERE df <= 200),
-  common AS (
-    SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS n_common
-    FROM capped a JOIN capped b
-      ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-    GROUP BY 1, 2),
-  njp AS (
-    SELECT doc_a, doc_b,
-           round(CAST(n_common AS DOUBLE)
-                 / (na.n_sh + nb.n_sh - n_common), 6) AS jaccard
-    FROM common
-    JOIN sizes na ON na.doc_id = doc_a
-    JOIN sizes nb ON nb.doc_id = doc_b
-    WHERE round(CAST(n_common AS DOUBLE)
-                / (na.n_sh + nb.n_sh - n_common), 6) >= 0.3)"""
-
-
-@q("dup_span_stats", r"""
-  WITH dt AS (
-    SELECT doc_id, string_split_regex(trim(lower(text)), '[ \t\n\r\f\x0B]+') AS t
-    FROM documents),
-  win AS (
-    SELECT doc_id, i AS pos, array_to_string(t[i:i + 7], ' ') AS key
-    FROM dt, UNNEST(range(1, len(t) - 8 + 2)) AS u(i)
-    WHERE len(t) >= 8),
-  cnt AS (SELECT key, count(*) AS c FROM win GROUP BY key),
-  fl AS (SELECT w.doc_id, w.pos, (c.c > 1) AS dup
-         FROM win w JOIN cnt c USING (key)),
-  tot AS (
-    SELECT doc_id, count(*) AS n_windows,
-           CAST(sum(CASE WHEN dup THEN 1 ELSE 0 END) AS BIGINT)
-             AS n_dup_windows
-    FROM fl GROUP BY doc_id),
-  runs AS (
-    SELECT doc_id, count(*) AS run FROM (
-      SELECT doc_id,
-             pos - row_number() OVER (PARTITION BY doc_id ORDER BY pos)
-               AS grp
-      FROM fl WHERE dup)
-    GROUP BY doc_id, grp),
-  mx AS (SELECT doc_id, max(run) AS max_dup_run FROM runs GROUP BY doc_id)
-  SELECT t.doc_id, t.n_windows, t.n_dup_windows,
-         round(CAST(t.n_dup_windows AS DOUBLE) / t.n_windows, 6)
-           AS dup_fraction,
-         CAST(COALESCE(mx.max_dup_run, 0) AS BIGINT) AS max_dup_run
-  FROM tot t LEFT JOIN mx ON mx.doc_id = t.doc_id
-""")
-def dup_span_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact-substring dedup signals (Lee et al.): per-document duplicated
-    8-token-window counts and the longest consecutive duplicated run."""
-    return pdedup.duplicate_span_stats(_t(spark, sf_dir, "documents"), w=8)
-
-
-@q("contamination_report", r"""
-  WITH dt AS (
-    SELECT doc_id, string_split_regex(trim(lower(text)), '[ \t\n\r\f\x0B]+') AS t
-    FROM documents),
-  ew AS (
-    SELECT doc_id AS eval_doc_id, i AS pos,
-           array_to_string(t[i:i + 7], ' ') AS key
-    FROM dt, UNNEST(range(1, len(t) - 8 + 2)) AS u(i)
-    WHERE len(t) >= 8 AND doc_id % 5 = 0),
-  cw AS (
-    SELECT doc_id, array_to_string(t[i:i + 7], ' ') AS key
-    FROM dt, UNNEST(range(1, len(t) - 8 + 2)) AS u(i)
-    WHERE len(t) >= 8 AND doc_id % 5 <> 0),
-  hits AS (
-    SELECT e.eval_doc_id, e.pos, c.doc_id
-    FROM cw c JOIN ew e USING (key)),
-  per AS (
-    SELECT eval_doc_id,
-           CAST(count(DISTINCT doc_id) AS BIGINT) AS n_train_docs,
-           CAST(count(DISTINCT pos) AS BIGINT) AS n_leaked_windows
-    FROM hits GROUP BY 1),
-  tot AS (SELECT eval_doc_id, CAST(count(*) AS BIGINT) AS n_windows
-          FROM ew GROUP BY 1)
-  SELECT p.eval_doc_id, p.n_train_docs, p.n_leaked_windows, t.n_windows,
-         round(CAST(p.n_leaked_windows AS DOUBLE) / t.n_windows, 6)
-           AS leak_fraction
-  FROM per p JOIN tot t USING (eval_doc_id)
-""")
-def contamination_report_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Eval-side decontamination audit: per benchmark document, how many
-    train docs share a verbatim 8-gram with it and what fraction of its
-    own windows is verbatim-recoverable from the corpus."""
-    docs = _t(spark, sf_dir, "documents")
-    return pdedup.contamination_report(
-        docs.where(F.col("doc_id") % 5 != 0),
-        docs.where(F.col("doc_id") % 5 == 0), w=8)
-
-
-@q("decontaminate", r"""
-  WITH dt AS (
-    SELECT doc_id, string_split_regex(trim(lower(text)), '[ \t\n\r\f\x0B]+') AS t
-    FROM documents),
-  ew AS (
-    SELECT DISTINCT array_to_string(t[i:i + 7], ' ') AS key
-    FROM dt, UNNEST(range(1, len(t) - 8 + 2)) AS u(i)
-    WHERE len(t) >= 8 AND doc_id % 5 = 0),
-  cw AS (
-    SELECT doc_id, array_to_string(t[i:i + 7], ' ') AS key
-    FROM dt, UNNEST(range(1, len(t) - 8 + 2)) AS u(i)
-    WHERE len(t) >= 8 AND doc_id % 5 <> 0),
-  agg AS (
-    SELECT c.doc_id, count(*) AS n_windows,
-           CAST(sum(CASE WHEN e.key IS NOT NULL THEN 1 ELSE 0 END)
-                AS BIGINT) AS n_hit_windows
-    FROM cw c LEFT JOIN ew e USING (key)
-    GROUP BY c.doc_id)
-  SELECT doc_id, n_hit_windows, n_windows,
-         round(CAST(n_hit_windows AS DOUBLE) / n_windows, 6)
-           AS hit_fraction
-  FROM agg WHERE n_hit_windows > 0
-""")
-def decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Benchmark decontamination: train docs (doc_id % 5 != 0) sharing a
-    verbatim 8-token window with the eval split (doc_id % 5 == 0)."""
-    docs = _t(spark, sf_dir, "documents")
-    return pdedup.decontaminate_flags(
-        docs.where(F.col("doc_id") % 5 != 0),
-        docs.where(F.col("doc_id") % 5 == 0), w=8)
-
-
-@q("ngram_jaccard", f"""
-  WITH {_NGRAM_PAIRS_CTES}
-  SELECT doc_a, doc_b, jaccard FROM njp
-""")
-def ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return pdedup.ngram_jaccard_pairs(
-        _t(spark, sf_dir, "documents"), n=3, threshold=0.3, max_df=200)
-
-
-@q("incremental_dedup", r"""
-  WITH newd AS (SELECT doc_id, text FROM documents WHERE doc_id % 2 = 1),
-  old AS (SELECT doc_id, text FROM documents WHERE doc_id % 2 = 0),
-  nfp AS (
-    SELECT doc_id,
-           sha256(regexp_replace(lower(trim(text)), '[ \t\n\r\f\x0B]+', ' ', 'g')) AS fp
-    FROM newd),
-  ofp AS (
-    SELECT doc_id AS old_id,
-           sha256(regexp_replace(lower(trim(text)), '[ \t\n\r\f\x0B]+', ' ', 'g')) AS fp
-    FROM old),
-  exact AS (
-    SELECT n.doc_id, min(o.old_id) AS matched_old
-    FROM nfp n JOIN ofp o USING (fp) GROUP BY n.doc_id),
-  survt AS (SELECT doc_id, text FROM newd
-            WHERE doc_id NOT IN (SELECT doc_id FROM exact)),
-  ntoks AS (SELECT doc_id, string_split_regex(trim(lower(text)), '[ \t\n\r\f\x0B]+')
-              AS t FROM survt),
-  otoks AS (SELECT doc_id, string_split_regex(trim(lower(text)), '[ \t\n\r\f\x0B]+')
-              AS t FROM old),
-  nsh AS (
-    SELECT DISTINCT doc_id, array_to_string(t[i:i+2], ' ') AS shingle
-    FROM ntoks, UNNEST(range(1, len(t) - 1)) AS u(i) WHERE len(t) >= 3),
-  osh AS (
-    SELECT DISTINCT doc_id AS old_id, array_to_string(t[i:i+2], ' ')
-      AS shingle
-    FROM otoks, UNNEST(range(1, len(t) - 1)) AS u(i) WHERE len(t) >= 3),
-  nsz AS (SELECT doc_id, count(*) AS n_new FROM nsh GROUP BY 1),
-  osz AS (SELECT old_id, count(*) AS n_old FROM osh GROUP BY 1),
-  odf AS (SELECT shingle, count(*) AS df FROM osh GROUP BY 1),
-  ocap AS (SELECT o.old_id, o.shingle FROM osh o
-           JOIN odf USING (shingle) WHERE df <= 100),
-  common AS (
-    SELECT n.doc_id, o.old_id, count(*) AS n_common
-    FROM nsh n JOIN ocap o USING (shingle) GROUP BY 1, 2),
-  fz AS (
-    SELECT c.doc_id, c.old_id,
-           round(CAST(n_common AS DOUBLE)
-                 / (nsz.n_new + osz.n_old - n_common), 6) AS jaccard
-    FROM common c JOIN nsz USING (doc_id) JOIN osz USING (old_id)
-    WHERE round(CAST(n_common AS DOUBLE)
-                / (nsz.n_new + osz.n_old - n_common), 6) >= 0.3),
-  best AS (
-    SELECT doc_id, old_id AS matched_old, jaccard
-    FROM (SELECT *, row_number() OVER (
-            PARTITION BY doc_id ORDER BY jaccard DESC, old_id) AS rn
-          FROM fz)
-    WHERE rn = 1),
-  matches AS (
-    SELECT doc_id, matched_old, 'exact' AS match_kind,
-           CAST(NULL AS DOUBLE) AS jaccard
-    FROM exact
-    UNION ALL
-    SELECT doc_id, matched_old, 'fuzzy', jaccard FROM best)
-  SELECT n.doc_id, m.doc_id IS NULL AS keep,
-         m.match_kind, m.matched_old, m.jaccard
-  FROM newd n LEFT JOIN matches m ON m.doc_id = n.doc_id
-""")
-def incremental_dedup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cross-snapshot dedup: odd doc_ids are the incoming batch, even ones
-    the historical corpus — exact fingerprint probe first, then the
-    history-indexed fuzzy tier over survivors only."""
-    docs = _t(spark, sf_dir, "documents")
-    return pdedup.incremental_dedup(
-        docs.where(F.col("doc_id") % 2 == 1),
-        docs.where(F.col("doc_id") % 2 == 0),
-        n=3, threshold=0.3, max_df=100)
-
-
-@q("neardup_clusters", f"""
-  WITH RECURSIVE {_NGRAM_PAIRS_CTES},
-  edges AS (SELECT doc_a AS a, doc_b AS b FROM njp
-            UNION SELECT doc_b, doc_a FROM njp),
-  reach(node, comp) AS (
-    SELECT a, a FROM edges
-    UNION
-    SELECT e.b, r.comp FROM reach r JOIN edges e ON e.a = r.node),
-  labels AS (SELECT node, min(comp) AS cluster_id FROM reach GROUP BY node)
-  SELECT d.doc_id,
-         coalesce(l.cluster_id, d.doc_id) AS cluster_id,
-         coalesce(l.cluster_id, d.doc_id) = d.doc_id AS is_canonical
-  FROM documents d LEFT JOIN labels l ON l.node = d.doc_id
-""")
-def neardup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fuzzy-dedup group formation: n-gram near-dup pairs → connected
-    components (alternating large-star/small-star, O(log² n) rounds) →
-    per-document (cluster_id, is_canonical). `where(is_canonical)` is the
-    dedup; the oracle recomputes reachability as a DuckDB recursive CTE,
-    so the iterative distributed algorithm is value-checked end to end."""
-    docs = _t(spark, sf_dir, "documents")
-    pairs = pdedup.ngram_jaccard_pairs(docs, n=3, threshold=0.3, max_df=200)
-    return (pdedup.assign_clusters(docs, pairs)
-            .select("doc_id", "cluster_id", "is_canonical"))
-
-
-# ---------------------------------------------------------------------------
-# embedding cosine near-dup + ANN top-k (pipeline/dedup, pipeline/similarity)
-# ---------------------------------------------------------------------------
-
-@q("semantic_dedup", lambda: _oracles.semantic_dedup_sql(
-    n_lists=16, threshold=0.4))
-def semantic_dedup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SemDeDup: within-cluster near-identical vectors dropped (min-id
-    survivor), clustering shared with the IVF ANN index."""
-    emb = _t(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("embedding"))
-    return pdedup.semantic_dedup(emb, n_lists=16, threshold=0.4)
-
-
-@q("embedding_neardup", """
-  WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb
-             FROM embeddings)
-  SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
-         round(list_cosine_similarity(a.emb, b.emb), 6) AS cosine
-  FROM e a JOIN e b ON a.vec_id < b.vec_id
-  WHERE round(list_cosine_similarity(a.emb, b.emb), 6) >= 0.4
-""")
-def embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = _t(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("embedding"))
-    return pdedup.embedding_neardup_pairs(emb, threshold=0.4)
-
-
-@q("ann_topk", """
-  WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb
-             FROM embeddings),
-  q AS (SELECT vec_id AS query_id, emb AS q_emb FROM e WHERE vec_id < 8),
-  scored AS (
-    SELECT query_id, vec_id,
-           round(list_cosine_similarity(q_emb, emb), 6) AS cosine
-    FROM q JOIN e ON vec_id <> query_id)
-  SELECT query_id, vec_id, cosine,
-         CAST(rank AS INTEGER) AS rank
-  FROM (SELECT *, row_number() OVER (
-          PARTITION BY query_id ORDER BY cosine DESC, vec_id) AS rank
-        FROM scored)
-  WHERE rank <= 5
-""")
-def ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = _t(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("embedding"))
-    queries = (emb.where(F.col("vec_id") < 8)
-               .select(F.col("vec_id").alias("query_id"), "embedding"))
-    return similarity.brute_force_topk(emb, queries, k=5)
-
-
-@q("ann_sq8_topk", """
-  WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb
-             FROM embeddings),
-  qz AS (SELECT vec_id,
-           list_transform(emb, x -> floor(x / greatest(
-               list_aggregate(list_transform(emb, y -> abs(y)), 'max')
-                 / 127.0, 1e-30) + 0.5)) AS qd
-         FROM e),
-  q AS (SELECT vec_id AS query_id, emb AS q_emb FROM e WHERE vec_id < 8),
-  scored AS (
-    SELECT query_id, vec_id,
-           CASE WHEN list_sum(list_transform(qd, x -> x * x)) = 0
-                THEN 0.0
-                ELSE round(list_cosine_similarity(q_emb, qd), 6)
-           END AS cosine
-    FROM q JOIN qz ON vec_id <> query_id)
-  SELECT query_id, vec_id, cosine,
-         CAST(rank AS INTEGER) AS rank
-  FROM (SELECT *, row_number() OVER (
-          PARTITION BY query_id ORDER BY cosine DESC, vec_id) AS rank
-        FROM scored)
-  WHERE rank <= 5
-""")
-def ann_sq8_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Quantized-corpus ANN: int8 scalar quantization (4-8× smaller scan
-    at 10^9+ vectors), cosine ranked against full-precision queries."""
-    emb = _t(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("embedding"))
-    queries = (emb.where(F.col("vec_id") < 8)
-               .select(F.col("vec_id").alias("query_id"), "embedding"))
-    return similarity.sq8_topk(emb, queries, k=5)
-
-
-@q("hybrid_rrf", r"""
-  WITH tok AS (
-    SELECT doc_id,
-           len(string_split_regex(trim(text), '[ \t\n\r\f\x0B]+')) AS doclen,
-           unnest(string_split_regex(trim(lower(text)), '[ \t\n\r\f\x0B]+')) AS token
-    FROM documents),
-  tf AS (
-    SELECT doc_id, token, doclen, count(*) AS tf
-    FROM tok WHERE token IN ('spark', 'merge', 'vector')
-    GROUP BY doc_id, token, doclen),
-  stats AS (
-    SELECT count(*) AS n_docs,
-           avg(len(string_split_regex(trim(text), '[ \t\n\r\f\x0B]+'))) AS avgdl
-    FROM documents),
-  dfreq AS (SELECT token, count(*) AS df FROM tf GROUP BY token),
-  bm25 AS (
-    SELECT doc_id,
-           sum(CAST(round(round(
-             ln(1 + (s.n_docs - d.df + 0.5) / (d.df + 0.5))
-                 * (t.tf * (1.2 + 1.0))
-                 / (t.tf + 1.2 * (1 - 0.75 + 0.75 * t.doclen / s.avgdl)),
-             6) * 1e6, 0) AS BIGINT)) AS s_micro
-    FROM tf t JOIN dfreq d USING (token) CROSS JOIN stats s
-    GROUP BY doc_id),
-  bm25r AS (
-    SELECT doc_id, r_sparse FROM (
-      SELECT doc_id, row_number() OVER (
-        ORDER BY s_micro DESC, doc_id) AS r_sparse FROM bm25)
-    WHERE r_sparse <= 50),
-  e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb
-        FROM embeddings),
-  qv AS (SELECT emb AS q_emb FROM e WHERE vec_id = 0),
-  dense AS (
-    SELECT vec_id, round(list_cosine_similarity(q_emb, emb), 6) AS cosine
-    FROM e CROSS JOIN qv WHERE vec_id <> 0),
-  denser AS (
-    SELECT vec_id, r_dense FROM (
-      SELECT vec_id, row_number() OVER (
-        ORDER BY cosine DESC, vec_id) AS r_dense FROM dense)
-    WHERE r_dense <= 50),
-  fused AS (
-    SELECT COALESCE(b.doc_id, d.vec_id) AS doc_id,
-           COALESCE(CAST(round(1e6 / (60 + b.r_sparse), 0) AS BIGINT), 0)
-         + COALESCE(CAST(round(1e6 / (60 + d.r_dense), 0) AS BIGINT), 0)
-           AS micro,
-           b.r_sparse, d.r_dense
-    FROM bm25r b FULL OUTER JOIN denser d ON b.doc_id = d.vec_id)
-  SELECT doc_id,
-         round(CAST(micro AS DOUBLE) / 1e6, 6) AS rrf_score,
-         CAST(r_sparse AS INTEGER) AS sparse_rank,
-         CAST(r_dense AS INTEGER) AS dense_rank,
-         CAST(row_number() OVER (ORDER BY micro DESC, doc_id) AS INTEGER)
-           AS rank
-  FROM fused ORDER BY micro DESC, doc_id LIMIT 20
-""")
-def hybrid_rrf_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hybrid retrieval: BM25 top-50 for the fixed query bag fused with
-    the dense cosine top-50 around vec 0 (doc i ↔ embedding i) by
-    reciprocal-rank fusion, k=60. Both input rankings reuse the already
-    hash-green bm25_search / ann_topk scoring (per-term and per-pair
-    scores quantized 1e-6 pre-rank), and the RRF contributions are
-    integer micro-units, so the fused order is engine-exact. The final
-    window runs on ≤100 rows by construction."""
-    docs = _t(spark, sf_dir, "documents")
-    emb = _t(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("embedding"))
-    from pyspark.sql import Window
-    sparse = ptext.bm25_search(docs, ["spark", "merge", "vector"], k=50)
-    # micro-units for the rank order: score is already round(·,6) on both
-    # engines, so comparing score*1e6 as BIGINT is the same total order
-    sw = Window.orderBy(
-        F.round(F.col("score") * 1e6, 0).cast("long").desc(), "doc_id")
-    sparse_r = sparse.select(
-        "doc_id", F.row_number().over(sw).alias("rank"))
-    q0 = (emb.where(F.col("vec_id") == 0)
-          .select(F.col("vec_id").alias("query_id"), "embedding"))
-    dense_r = (similarity.brute_force_topk(emb, q0, k=50)
-               .select(F.col("vec_id").alias("doc_id"), "rank"))
-    return similarity.rrf_fuse(sparse_r, dense_r, k=20, rrf_k=60)
-
-
-# ---------------------------------------------------------------------------
-# golden-model oracles: DuckDB cannot evaluate xxhash64 / the Arrow codec /
-# the crawl loop, so these oracles embed hash-dependent inputs as VALUES
-# computed by independent Python mirrors (oracles.py; xxh64 mirror is
-# property-tested vs Spark) and restate the relational part in SQL
-# ---------------------------------------------------------------------------
-
-@q("minhash_lsh_dedup", lambda: _oracles.minhash_lsh_sql(
-    num_hashes=16, bands=8, threshold=0.5))
-def minhash_lsh_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return pdedup.minhash_lsh_verified(
-        _t(spark, sf_dir, "documents"), num_hashes=16, bands=8, threshold=0.5)
-
-
-@q("simhash_neardup", lambda: _oracles.simhash_neardup_sql(max_hamming=8))
-def simhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return pdedup.simhash_neardup_pairs(
-        _t(spark, sf_dir, "documents"), max_hamming=8)
-
-
-@q("ann_ivf_sq8_topk", lambda: _oracles.ann_ivf_sq8_sql(
-    k=5, n_lists=16, nprobe=4))
-def ann_ivf_sq8_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF probe over SQ8-quantized inverted lists — nprobe/n_lists data
-    touched AND int8 list storage (the combined 10^10-vector path)."""
-    emb = _t(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("embedding"))
-    queries = (emb.where(F.col("vec_id") < 8)
-               .select(F.col("vec_id").alias("query_id"), "embedding"))
-    return similarity.ivf_sq8_topk(emb, queries, k=5, n_lists=16, nprobe=4)
-
-
-@q("ann_ivf_pq_topk", lambda: _oracles.ann_ivf_pq_sql(
-    k=5, n_lists=16, nprobe=4, m_sub=4, k_cent=16, dim=64))
-def ann_ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF coarse pruning x PQ byte codes (the FAISS-IVFPQ shape): probes
-    touch ~nprobe/n_lists of an index whose rows are m_sub bytes."""
-    emb = _t(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("embedding"))
-    queries = (emb.where(F.col("vec_id") < 8)
-               .select(F.col("vec_id").alias("query_id"), "embedding"))
-    return similarity.ivf_pq_topk(emb, queries, k=5, n_lists=16, nprobe=4,
-                                  m_sub=4, k_cent=16, dim=64)
-
-
-@q("knn_label_vote", """
-  WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb, label
-             FROM embeddings),
-  q AS (SELECT vec_id AS query_id, emb AS q_emb, label AS true_label
-        FROM e WHERE vec_id < 40),
-  scored AS (
-    SELECT query_id, vec_id,
-           round(list_cosine_similarity(q_emb, emb), 6) AS cosine
-    FROM q JOIN e ON vec_id <> query_id),
-  topk AS (
-    SELECT query_id, vec_id FROM (
-      SELECT *, row_number() OVER (
-        PARTITION BY query_id ORDER BY cosine DESC, vec_id) AS rn
-      FROM scored) WHERE rn <= 5),
-  votes AS (
-    SELECT t.query_id, e.label, count(*) AS votes
-    FROM topk t JOIN e ON e.vec_id = t.vec_id
-    GROUP BY 1, 2),
-  pred AS (
-    SELECT query_id, label AS pred_label, CAST(votes AS BIGINT) AS votes
-    FROM (SELECT *, row_number() OVER (
-            PARTITION BY query_id ORDER BY votes DESC, label) AS rn
-          FROM votes) WHERE rn = 1)
-  SELECT p.query_id, q.true_label, p.pred_label, p.votes,
-         (p.pred_label = q.true_label) AS correct
-  FROM pred p JOIN q USING (query_id)
-""")
-def knn_label_vote_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embedding-quality probe: k-NN majority-vote label prediction for
-    the first 40 vectors, scored against their true labels."""
-    emb = _t(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("embedding"),
-        "label")
-    queries = (emb.where(F.col("vec_id") < 40)
-               .select(F.col("vec_id").alias("query_id"), "embedding",
-                       F.col("label").alias("true_label")))
-    return similarity.knn_label_vote(emb, queries, k=5)
-
-
-@q("ann_pq_topk", lambda: _oracles.ann_pq_sql(
-    k=5, m_sub=4, k_cent=16, dim=64))
-def ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Product-quantization ANN (the memory-bound tier): vectors stored as
-    4 one-byte codes (64x smaller scan), queried via precomputed
-    per-query distance tables (ADC)."""
-    emb = _t(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("embedding"))
-    queries = (emb.where(F.col("vec_id") < 8)
-               .select(F.col("vec_id").alias("query_id"), "embedding"))
-    return similarity.pq_topk(emb, queries, k=5, m_sub=4, k_cent=16,
-                              dim=64)
-
-
-@q("ann_ivf_topk", lambda: _oracles.ann_ivf_sql(k=5, n_lists=16, nprobe=4))
-def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF ANN (scale path). Oracle: centroid ids from the XXH64 mirror as
-    VALUES; assignment/probe/top-k recomputed independently by DuckDB
-    (sims quantized to 1e-6 on both sides, so ties break identically).
-    Recall vs brute force is additionally covered in
-    tests/test_pipeline.py."""
-    emb = _t(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("embedding"))
-    queries = (emb.where(F.col("vec_id") < 8)
-               .select(F.col("vec_id").alias("query_id"), "embedding"))
-    return similarity.ivf_topk(emb, queries, k=5, n_lists=16, nprobe=4)
-
-
-def _media_keys(spark: SparkSession, sf_dir: str, n: int) -> DataFrame:
-    """Deterministic key frame shared by every synthetic-media table."""
-    return (_t(spark, sf_dir, "documents").select("doc_id")
-            .orderBy("doc_id").limit(n))
-
 
 def _images_df(spark: SparkSession, sf_dir: str, n: int = 128,
                dup_mod: int = 96,
                caption_dup_mod: int | None = None,
-               variant_fmts: tuple[str, ...] | None = None,
-               keys: DataFrame | None = None) -> DataFrame:
+               variant_fmts: tuple[str, ...] | None = None) -> DataFrame:
     """Deterministic image table per BASELINE.json input_hint, derived from
-    doc_ids through the synthetic codec (crawl/synthweb.py). dup_mod < n
-    creates exact-duplicate payload groups (phash Hamming 0) so the image
-    near-dup operator has real work; a coarser caption_dup_mod makes
-    caption groups span several payload variants (cross-modal dedup);
-    variant_fmts re-encodes each group's pixels per repetition (lossless /
-    lossy / heavy-requantize variants for the PSNR verify tier)."""
+    the first n doc_ids through the synthetic codec (crawl/synthweb.py).
+    dup_mod < n creates exact-duplicate payload groups (phash Hamming 0) so
+    the image near-dup operator has real work; a coarser caption_dup_mod
+    makes caption groups span several payload variants; variant_fmts
+    re-encodes each group's pixels per repetition (lossless / lossy /
+    heavy-requantize variants for the PSNR verify tier)."""
     from .crawl.synthweb import SYNTH_IMAGE_SCHEMA, images_for_keys
-    if keys is None:
-        keys = _media_keys(spark, sf_dir, n)
+    keys = (_t(spark, sf_dir, "documents").select("doc_id")
+            .orderBy("doc_id").limit(n))
     return keys.mapInPandas(
         images_for_keys(SynthWebConfig(), dup_mod=dup_mod,
                         caption_dup_mod=caption_dup_mod,
@@ -2217,47 +357,10 @@ def _images_df(spark: SparkSession, sf_dir: str, n: int = 128,
         SYNTH_IMAGE_SCHEMA)
 
 
-def _meta_images_df(spark: SparkSession, sf_dir: str, n: int = 64,
-                    dup_mod: int = 48) -> DataFrame:
-    """Image table with the synthetic metadata envelope attached —
-    meta pairs are a pure function of the image key
-    (synthweb.meta_for_key), so the DuckDB mirror restates them."""
-    from .crawl.synthweb import meta_for_key, wrap_with_meta
-
-    imgs = _images_df(spark, sf_dir, n=n, dup_mod=dup_mod)
-    schema = imgs.schema
-
-    def wrap(batches):
-        for pdf in batches:
-            pdf = pdf.copy()
-            keys = [int(i.rsplit("-", 1)[1]) for i in pdf["image_id"]]
-            pdf["bytes"] = [wrap_with_meta(bytes(b), meta_for_key(k))
-                            for b, k in zip(pdf["bytes"], keys)]
-            yield pdf
-
-    return imgs.mapInPandas(wrap, schema)
-
-
-@q("image_meta_stats", lambda: _oracles.image_meta_stats_sql(n=64,
-                                                             dup_mod=48))
-def image_meta_stats_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EXIF-envelope audit + scrub evidence: per-image metadata pair
-    count, GPS privacy flag, and the sha256 of the scrubbed payload —
-    oracled against the codec mirror's hash of the unwrapped buffer, so
-    envelope-stripping correctness is inside the hash check."""
-    return multimodal.image_meta_stats(
-        _meta_images_df(spark, sf_dir, n=64, dup_mod=48))
-
-
-@q("image_stats", lambda: _oracles.image_stats_sql())
-def image_stats_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return multimodal.image_stats(_images_df(spark, sf_dir))
-
-
-@q("image_resize", lambda: _oracles.image_resize_sql())
-def image_resize_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return multimodal.image_resize(_images_df(spark, sf_dir), target=8)
-
+# ---------------------------------------------------------------------------
+# image rungs of the training manifest (pipeline/multimodal.py), over the
+# deterministic synthetic image table
+# ---------------------------------------------------------------------------
 
 @q("phash_neardup", lambda: _oracles.phash_neardup_sql(max_hamming=10))
 def phash_neardup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2292,42 +395,6 @@ def image_variant_dedup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         max_hamming=10, min_psnr=40.0)
 
 
-@q("image_mix_report", lambda: _oracles.image_mix_report_sql(
-    n=384, dup_mod=96, caption_dup_mod=48, max_hamming=10, min_psnr=40.0,
-    batch_size=4, n_shards=4))
-def image_mix_report_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Dataset-card accounting for the image training-mix pipeline:
-    surviving-row counts per rung (raw → curated → payload_unique →
-    variant_survivors → batched) plus the curation reject breakdown —
-    the audit a 100 TB curation run publishes next to its manifest."""
-    return multimodal.image_mix_report(
-        _images_df(spark, sf_dir, n=384, dup_mod=96, caption_dup_mod=48,
-                   variant_fmts=("png", "jpeg", "jpeg16", "png")),
-        max_hamming=10, min_psnr=40.0, batch_size=4, n_shards=4)
-
-
-@q("incremental_image_dedup", lambda: _oracles.incremental_image_dedup_sql(
-    n=384, n_old=48, dup_mod=96, max_hamming=10, min_psnr=40.0))
-def incremental_image_dedup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """New image batch vs accepted history (steady-state crawl shape):
-    the first 48 keys are the committed png corpus, the remaining 336 the
-    incoming batch — which carries byte-identical re-crawls (exact tier),
-    ~51 dB jpeg re-encodes (PSNR-verified matches), ~29 dB requantizes
-    (proposed but REJECTED at the 40 dB bar) and genuinely novel groups
-    (kept). new×new duplicates are deliberately not compared — that is
-    image_training_mix's intra-batch job."""
-    vf = ("png", "jpeg", "jpeg16", "png")
-    old_keys = _media_keys(spark, sf_dir, 48)
-    new_keys = _media_keys(spark, sf_dir, 384).join(
-        old_keys, "doc_id", "left_anti")
-    return multimodal.incremental_image_dedup(
-        _images_df(spark, sf_dir, dup_mod=96, variant_fmts=vf,
-                   keys=new_keys),
-        _images_df(spark, sf_dir, dup_mod=96, variant_fmts=vf,
-                   keys=old_keys),
-        max_hamming=10, min_psnr=40.0)
-
-
 @q("image_training_mix", lambda: _oracles.image_training_mix_sql(
     n=384, dup_mod=96, caption_dup_mod=48, max_hamming=10, min_psnr=40.0,
     batch_size=4, n_shards=4))
@@ -2342,20 +409,6 @@ def image_training_mix_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         _images_df(spark, sf_dir, n=384, dup_mod=96, caption_dup_mod=48,
                    variant_fmts=("png", "jpeg", "jpeg16", "png")),
         max_hamming=10, min_psnr=40.0, batch_size=4, n_shards=4)
-
-
-@q("phash_band_eval", lambda: _oracles.phash_band_eval_sql(
-    n=384, dup_mod=96, thresholds=(0, 2, 4, 6, 8, 10), max_hamming=12,
-    min_psnr=40.0))
-def phash_band_eval_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Threshold-tuning report for the phash proposal tier: per Hamming
-    cutoff, candidates proposed vs pixel-verified — precision of the
-    cheap tier and recall within the proposal superset (the image
-    analog of dedup_eval's LSH band-config report)."""
-    return multimodal.phash_band_eval(
-        _images_df(spark, sf_dir, n=384, dup_mod=96,
-                   variant_fmts=("png", "jpeg", "jpeg16", "png")),
-        thresholds=(0, 2, 4, 6, 8, 10), max_hamming=12)
 
 
 @q("image_dedup_clusters", lambda: _oracles.image_clusters_sql(
@@ -2374,16 +427,6 @@ def image_dedup_clusters_q(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("image_id", "cluster_id", "is_canonical"))
 
 
-@q("caption_phash_dedup", lambda: _oracles.caption_phash_dedup_sql(
-    n=128, dup_mod=96, caption_dup_mod=48))
-def caption_phash_dedup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cross-modal dedup: caption groups (coarse, mod 48) span two payload
-    variants each (mod 96); text-only dedup would drop half the corpus,
-    the phash verification keeps one image per payload variant."""
-    return multimodal.caption_phash_dedup(
-        _images_df(spark, sf_dir, caption_dup_mod=48))
-
-
 @q("image_curation", lambda: _oracles.image_curation_sql(
     n=128, dup_mod=96, caption_dup_mod=48))
 def image_curation_q(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2391,163 +434,6 @@ def image_curation_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     cap, caption richness, format whitelist + short-side bucket."""
     return multimodal.image_curation(
         _images_df(spark, sf_dir, caption_dup_mod=48))
-
-
-@q("audio_features", lambda: _oracles.audio_features_sql())
-def audio_features_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Audio feature extraction over opaque binary clips (duration, RMS,
-    peak, zero-crossings) — deterministic synthetic payloads keyed by
-    doc_id, mirroring BASELINE.json's input-table shape for media."""
-    audios = _media_keys(spark, sf_dir, 96).mapInPandas(
-        multimodal.audios_for_keys(dup_mod=64), multimodal.SYNTH_AUDIO_SCHEMA)
-    return multimodal.audio_features(audios)
-
-
-@q("audio_snr_neardup", lambda: _oracles.audio_snr_neardup_sql(
-    n=288, dup_mod=96, max_hamming=10, min_snr_db=40.0))
-def audio_snr_neardup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Two-tier audio near-dup over a variant-requantized corpus (each
-    PCM group as lossless / shift-4 ≈71 dB / shift-12 ≈23 dB): energy
-    fingerprints propose via a banded Hamming join, decoded samples
-    verify at the 40 dB peak-SNR bar — the psnr_neardup pattern on the
-    audio modality."""
-    audios = _media_keys(spark, sf_dir, 288).mapInPandas(
-        multimodal.audios_for_keys(dup_mod=96, variant_shifts=(0, 4, 12)),
-        multimodal.SYNTH_AUDIO_SCHEMA)
-    return multimodal.audio_snr_verified_neardup(
-        audios, max_hamming=10, min_snr_db=40.0)
-
-
-@q("video_psnr_neardup", lambda: _oracles.video_psnr_neardup_sql(
-    n=288, dup_mod=96, max_hamming=10, min_psnr=40.0))
-def video_psnr_neardup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Two-tier video near-dup over a variant-requantized corpus (each
-    frame group as lossless / shift-1 ≈51 dB / shift-4 ≈29 dB):
-    spatiotemporal fingerprints propose, decoded frames verify at
-    40 dB — completing the image/audio/video two-tier dedup triple."""
-    videos = _media_keys(spark, sf_dir, 288).mapInPandas(
-        multimodal.videos_for_keys(dup_mod=96, variant_shifts=(0, 1, 4)),
-        multimodal.SYNTH_VIDEO_SCHEMA)
-    return multimodal.video_psnr_verified_neardup(
-        videos, max_hamming=10, min_psnr=40.0)
-
-
-@q("incremental_audio_dedup",
-   lambda: _oracles.incremental_media_dedup_sql(
-       "aud", "audio_id", "snr_db", "snr", n=288, n_old=48, dup_mod=96,
-       max_hamming=10, min_bar=40.0))
-def incremental_audio_dedup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """New audio batch vs accepted history (the incremental_image_dedup
-    shape over PCM): the first 48 keys are the committed lossless
-    corpus; the incoming 240 carry ~71 dB light requantizes of history
-    groups (SNR-verified matches), ~23 dB heavies (proposed, REJECTED at
-    the bar) and novel groups (kept)."""
-    old_keys = _media_keys(spark, sf_dir, 48)
-    new_keys = _media_keys(spark, sf_dir, 288).join(
-        old_keys, "doc_id", "left_anti")
-    mk = multimodal.audios_for_keys(dup_mod=96, variant_shifts=(0, 4, 12))
-    return multimodal.incremental_audio_dedup(
-        new_keys.mapInPandas(mk, multimodal.SYNTH_AUDIO_SCHEMA),
-        old_keys.mapInPandas(mk, multimodal.SYNTH_AUDIO_SCHEMA),
-        max_hamming=10, min_snr_db=40.0)
-
-
-@q("incremental_video_dedup",
-   lambda: _oracles.incremental_media_dedup_sql(
-       "vid", "video_id", "psnr_db", "psnr", n=288, n_old=48, dup_mod=96,
-       max_hamming=10, min_bar=40.0))
-def incremental_video_dedup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """New video batch vs accepted history: temporal-hash banded probe +
-    frame-PSNR verify of survivors against the committed corpus."""
-    old_keys = _media_keys(spark, sf_dir, 48)
-    new_keys = _media_keys(spark, sf_dir, 288).join(
-        old_keys, "doc_id", "left_anti")
-    mk = multimodal.videos_for_keys(dup_mod=96, variant_shifts=(0, 1, 4))
-    return multimodal.incremental_video_dedup(
-        new_keys.mapInPandas(mk, multimodal.SYNTH_VIDEO_SCHEMA),
-        old_keys.mapInPandas(mk, multimodal.SYNTH_VIDEO_SCHEMA),
-        max_hamming=10, min_psnr_db=40.0)
-
-
-@q("audio_variant_dedup", lambda: _oracles.audio_variant_dedup_sql(
-    n=288, dup_mod=96, max_hamming=10, min_snr_db=40.0))
-def audio_variant_dedup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Variant-aware audio dedup: SNR-verified components, one survivor
-    per PCM group preferring the largest payload (least-quantized
-    encoding); the ~23 dB requantize never verifies and stays its own
-    cluster."""
-    audios = _media_keys(spark, sf_dir, 288).mapInPandas(
-        multimodal.audios_for_keys(dup_mod=96, variant_shifts=(0, 4, 12)),
-        multimodal.SYNTH_AUDIO_SCHEMA)
-    pairs = (multimodal.audio_snr_verified_neardup(
-        audios, max_hamming=10, min_snr_db=40.0, prefilter="auto")
-        .where(F.col("verified")).select("aud_a", "aud_b"))
-    return multimodal.media_variant_dedup(
-        audios, pairs, id_col="audio_id", a_col="aud_a", b_col="aud_b")
-
-
-@q("video_variant_dedup", lambda: _oracles.video_variant_dedup_sql(
-    n=288, dup_mod=96, max_hamming=10, min_psnr=40.0))
-def video_variant_dedup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Variant-aware video dedup: PSNR-verified components, largest
-    payload survives; ~29 dB requantizes stay their own clusters."""
-    videos = _media_keys(spark, sf_dir, 288).mapInPandas(
-        multimodal.videos_for_keys(dup_mod=96, variant_shifts=(0, 1, 4)),
-        multimodal.SYNTH_VIDEO_SCHEMA)
-    pairs = (multimodal.video_psnr_verified_neardup(
-        videos, max_hamming=10, min_psnr=40.0, prefilter="auto")
-        .where(F.col("verified")).select("vid_a", "vid_b"))
-    return multimodal.media_variant_dedup(
-        videos, pairs, id_col="video_id", a_col="vid_a", b_col="vid_b")
-
-
-@q("video_frame_sample", lambda: _oracles.video_frame_sample_sql(every_k=3))
-def video_frame_sample_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Video frame sampling: every 3rd frame's features, exploded
-    worker-side so raw payloads never shuffle."""
-    videos = _media_keys(spark, sf_dir, 96).mapInPandas(
-        multimodal.videos_for_keys(dup_mod=64), multimodal.SYNTH_VIDEO_SCHEMA)
-    return multimodal.video_frame_sample(videos, every_k=3)
-
-
-@q("ann_recall", lambda: _oracles.ann_recall_sql(
-    k=5, n_lists=16, nprobe=4, n_queries=8))
-def ann_recall_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Index-quality eval: recall@5 of the IVF tier vs brute-force ground
-    truth for the first 8 queries — both retrievals the production
-    operators, both recomputed independently by the oracle."""
-    emb = _t(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("embedding"))
-    queries = (emb.where(F.col("vec_id") < 8)
-               .select(F.col("vec_id").alias("query_id"), "embedding"))
-    return similarity.ann_recall_at_k(emb, queries, k=5, n_lists=16,
-                                      nprobe=4)
-
-
-@q("oov_rate", r"""
-  WITH tok0 AS (
-    SELECT source,
-           unnest(string_split_regex(trim(lower(text)), '[ \t\n\r\f\x0B]+')) AS token
-    FROM documents),
-  c AS (SELECT source, token, count(*) AS cnt
-        FROM tok0 WHERE token <> '' GROUP BY 1, 2),
-  v AS (SELECT token FROM (
-          SELECT token, sum(cnt) AS tf FROM c GROUP BY token
-          ORDER BY tf DESC, token LIMIT 50)),
-  j AS (SELECT c.source, c.cnt, (v.token IS NOT NULL) AS in_v
-        FROM c LEFT JOIN v ON v.token = c.token)
-  SELECT source,
-         CAST(sum(cnt) AS BIGINT) AS n_tokens,
-         CAST(sum(CASE WHEN in_v THEN 0 ELSE cnt END) AS BIGINT) AS n_oov,
-         CAST(CAST(sum(CASE WHEN in_v THEN 0 ELSE cnt END) AS BIGINT)
-              AS DOUBLE)
-           / CAST(CAST(sum(cnt) AS BIGINT) AS DOUBLE) AS oov_rate
-  FROM j GROUP BY source
-""")
-def oov_rate_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tokenizer-coverage audit: per-source OOV rate against the corpus
-    top-50 vocabulary."""
-    return ptext.oov_rate(_t(spark, sf_dir, "documents"), vocab_size=50)
 
 
 @q("sitemap_extract", f"""
@@ -2621,41 +507,6 @@ def sitemap_extract_q(spark: SparkSession, sf_dir: str) -> DataFrame:
                           F.date_format("lastmod", "yyyy-MM-dd"))
 
 
-@q("hard_negatives", """
-  WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb, label
-             FROM embeddings),
-  q AS (SELECT vec_id AS query_id, emb AS q_emb, label AS q_label
-        FROM e WHERE vec_id < 16),
-  scored AS (
-    SELECT query_id, q_label, vec_id, label AS neg_label,
-           round(list_cosine_similarity(q_emb, emb), 6) AS cosine
-    FROM q JOIN e ON vec_id <> query_id),
-  pos AS (SELECT query_id, max(cosine) AS pos_cosine FROM scored
-          WHERE neg_label = q_label GROUP BY query_id),
-  negs AS (
-    SELECT query_id, vec_id, neg_label, cosine,
-           CAST(row_number() OVER (PARTITION BY query_id
-                                   ORDER BY cosine DESC, vec_id)
-                AS INTEGER) AS rank
-    FROM scored WHERE neg_label <> q_label
-    QUALIFY rank <= 5)
-  SELECT n.query_id, n.vec_id, n.neg_label, n.cosine, n.rank,
-         p.pos_cosine, n.cosine - p.pos_cosine AS margin
-  FROM negs n LEFT JOIN pos p USING (query_id)
-""")
-def hard_negatives_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Contrastive-training hard-negative mining for the first 16 anchors:
-    top-5 different-label neighbors with margin vs the hardest positive
-    (FaceNet triplet mining, arXiv:1503.03832 §3.2)."""
-    emb = _t(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("embedding"),
-        "label")
-    queries = (emb.where(F.col("vec_id") < 16)
-               .select(F.col("vec_id").alias("query_id"), "embedding",
-                       "label"))
-    return similarity.hard_negative_mining(emb, queries, k=5)
-
-
 @q("aspect_bucket", lambda: _oracles.aspect_bucket_sql(
     n=128, dup_mod=96, batch_size=4, n_shards=4))
 def aspect_bucket_q(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2664,31 +515,6 @@ def aspect_bucket_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     (arXiv:2307.01952 §2.3 is the published recipe)."""
     return multimodal.aspect_bucket_batches(
         _images_df(spark, sf_dir), batch_size=4, n_shards=4)
-
-
-@q("redirect_resolve", lambda: _oracles.redirect_resolve_sql(max_hops=8))
-def redirect_resolve_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Redirect-chain resolution by pointer doubling (3 self-joins for an
-    8-hop cap) over a deterministic redirect map derived from doc_ids:
-    binary-counter chains up to 4 hops deep plus genuine 2-cycles
-    (d%128 in {32, 96}) that exercise the loop/capped path. The oracle
-    walks the same map hop-by-hop with a bounded recursive CTE."""
-    d = F.col("d")
-    docs = _t(spark, sf_dir, "documents").select(
-        F.col("doc_id").cast("long").alias("d"))
-    step_dst = (
-        F.when(d % 128 == 32, d + 64)
-        .when(d % 128 == 96, d - 64)
-        .when(d % 2 == 1, d - 1)
-        .when(d % 4 == 2, d - 2)
-        .when(d % 8 == 4, d - 4)
-        .when(d % 16 == 8, d - 8))
-    url = lambda c: F.format_string("http://h%03d.example.com/r/%d",
-                                    c % 50, c)
-    edges = (docs.withColumn("_dst", step_dst)
-             .where(F.col("_dst").isNotNull())
-             .select(url(d).alias("url"), url(F.col("_dst")).alias("dst")))
-    return resolve_redirects(edges, max_hops=8, src="url", dst="dst")
 
 
 # ---------------------------------------------------------------------------
@@ -2794,144 +620,6 @@ def link_children(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# F9: metadata projection — strip the payload column
-# (storage/StorageService.java:61-69)
-# ---------------------------------------------------------------------------
-
-@q("metadata_projection", """
-  SELECT doc_id, source, lang, n_chars FROM documents WHERE n_chars >= 200
-""")
-def metadata_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return (_t(spark, sf_dir, "documents")
-            .where(F.col("n_chars") >= 200)
-            .select("doc_id", "source", "lang", "n_chars"))
-
-
-# ---------------------------------------------------------------------------
-# X8: URL scheme normalization (ui/MainView.java:281-283,309-311)
-# ---------------------------------------------------------------------------
-
-@q("url_normalize", """
-  SELECT p_partkey,
-         CASE WHEN regexp_matches(u, '^https?://') THEN u
-              ELSE 'https://' || u END AS url_norm
-  FROM (SELECT p_partkey,
-          CASE CAST(p_partkey % 3 AS INTEGER)
-            WHEN 0 THEN 'http://www.example.com/part/'
-                        || CAST(p_partkey AS VARCHAR)
-            WHEN 1 THEN 'https://example.org/part/'
-                        || CAST(p_partkey AS VARCHAR)
-            ELSE 'example.net/part/' || CAST(p_partkey AS VARCHAR)
-          END AS u
-        FROM part) s
-""")
-def url_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .functions.urls import normalize_scheme
-    key = F.col("p_partkey").cast("string")
-    u = (F.when(F.col("p_partkey") % 3 == 0,
-                F.concat(F.lit("http://www.example.com/part/"), key))
-         .when(F.col("p_partkey") % 3 == 1,
-               F.concat(F.lit("https://example.org/part/"), key))
-         .otherwise(F.concat(F.lit("example.net/part/"), key)))
-    return (_t(spark, sf_dir, "part")
-            .select("p_partkey", normalize_scheme(u).alias("url_norm")))
-
-
-@q("url_canonical_dedup", r"""
-  WITH raw AS (
-    SELECT p_partkey AS k,
-      CASE CAST(p_partkey % 3 AS INTEGER)
-        WHEN 0 THEN 'HTTP://WWW.Example.COM:80/item/'
-                    || CAST(p_partkey // 3 AS VARCHAR)
-                    || '/?utm_source=news&b=2&a=1#top'
-        WHEN 1 THEN 'http://www.example.com/item/'
-                    || CAST(p_partkey // 3 AS VARCHAR) || '?a=1&b=2'
-        ELSE 'http://www.example.com:80/item/'
-             || CAST(p_partkey // 3 AS VARCHAR) || '//?b=2&a=1&gclid=xyz'
-      END AS u
-    FROM part),
-  pieces AS (
-    SELECT k,
-      lower(regexp_extract(u, '^([A-Za-z][A-Za-z0-9+.-]*)://', 1))
-        AS scheme,
-      lower(regexp_extract(u, '^[^:]+://([^/?#]*)', 1)) AS hostport,
-      regexp_extract(u, '^[^:]+://[^/?#]*([^?#]*)', 1) AS raw_path,
-      array_to_string(list_sort(list_filter(
-        string_split(regexp_extract(u, '\?([^#]*)', 1), '&'),
-        x -> x <> '' AND NOT regexp_matches(
-               x, '^(utm_[^=]*|gclid|fbclid|ref)='))), '&') AS q
-    FROM raw),
-  canon AS (
-    SELECT k,
-      scheme || '://'
-      || CASE WHEN scheme = 'http'
-                THEN regexp_replace(hostport, ':80$', '')
-              WHEN scheme = 'https'
-                THEN regexp_replace(hostport, ':443$', '')
-              ELSE hostport END
-      || CASE WHEN regexp_replace(raw_path, '/+$', '') = '' THEN '/'
-              ELSE regexp_replace(raw_path, '/+$', '') END
-      || CASE WHEN q = '' THEN '' ELSE '?' || q END AS url_canon
-    FROM pieces)
-  SELECT url_canon, count(*) AS n_variants, min(k) AS first_key
-  FROM canon GROUP BY url_canon
-""")
-def url_canonical_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Crawler seen-set canonicalization: three messy aliases per logical
-    item (case, explicit default port, fragment, tracking params, param
-    order, trailing slashes) collapse to one canonical URL — pure
-    Catalyst, one partial-agg shuffle on the canonical key."""
-    from .functions.urls import canonicalize_url
-    k = F.col("p_partkey")
-    item = F.floor(k / 3).cast("string")
-    u = (F.when(k % 3 == 0,
-                F.concat(F.lit("HTTP://WWW.Example.COM:80/item/"), item,
-                         F.lit("/?utm_source=news&b=2&a=1#top")))
-         .when(k % 3 == 1,
-               F.concat(F.lit("http://www.example.com/item/"), item,
-                        F.lit("?a=1&b=2")))
-         .otherwise(
-             F.concat(F.lit("http://www.example.com:80/item/"), item,
-                      F.lit("//?b=2&a=1&gclid=xyz"))))
-    return (_t(spark, sf_dir, "part")
-            .select(k.alias("k"), canonicalize_url(u).alias("url_canon"))
-            .groupBy("url_canon")
-            .agg(F.count("*").alias("n_variants"),
-                 F.min("k").alias("first_key")))
-
-
-# ---------------------------------------------------------------------------
-# X2: URL → protocol extraction (core/WebCrawler.java:462)
-# ---------------------------------------------------------------------------
-
-@q("url_protocol", """
-  SELECT CASE WHEN regexp_matches(u, '^[a-z][a-z0-9+.-]*://')
-              THEN regexp_extract(u, '^([a-z][a-z0-9+.-]*)://', 1) END
-             AS protocol,
-         count(*) AS n
-  FROM (SELECT CASE CAST(p_partkey % 3 AS INTEGER)
-          WHEN 0 THEN 'http://www.example.com/part/'
-                      || CAST(p_partkey AS VARCHAR)
-          WHEN 1 THEN 'https://example.org/part/'
-                      || CAST(p_partkey AS VARCHAR)
-          ELSE 'example.net/part/' || CAST(p_partkey AS VARCHAR)
-        END AS u FROM part) s
-  GROUP BY 1
-""")
-def url_protocol(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .functions.urls import protocol_of
-    key = F.col("p_partkey").cast("string")
-    u = (F.when(F.col("p_partkey") % 3 == 0,
-                F.concat(F.lit("http://www.example.com/part/"), key))
-         .when(F.col("p_partkey") % 3 == 1,
-               F.concat(F.lit("https://example.org/part/"), key))
-         .otherwise(F.concat(F.lit("example.net/part/"), key)))
-    return (_t(spark, sf_dir, "part")
-            .select(protocol_of(u).alias("protocol"))
-            .groupBy("protocol").agg(F.count("*").alias("n")))
-
-
-# ---------------------------------------------------------------------------
 # X3: relative→absolute URL resolution (core/WebCrawler.java:341, Jsoup
 # abs:href). The oracle restates the resolution rules for each emitted ref
 # form; the Spark side runs the production Catalyst resolver.
@@ -2992,399 +680,6 @@ def url_resolve(spark: SparkSession, sf_dir: str) -> DataFrame:
             .withColumn("resolved", resolve_url(F.col("base"), F.col("href"))))
 
 
-# ---------------------------------------------------------------------------
-# X6: date partition key (storage/HybridStorageService.java:37-39 S3 key
-# prefix; our pages table partitions by the same fetch date)
-# ---------------------------------------------------------------------------
-
-@q("date_partition_key", """
-  SELECT strftime(ts, '%Y-%m-%d') AS fetch_date, count(*) AS n
-  FROM events GROUP BY 1
-""")
-def date_partition_key(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return (_t(spark, sf_dir, "events")
-            .groupBy(F.date_format(F.col("ts").cast("timestamp"),
-                                   "yyyy-MM-dd").alias("fetch_date"))
-            .agg(F.count("*").alias("n")))
-
-
-# ---------------------------------------------------------------------------
-# L5: content truncation (ui/MainView.java:385-387)
-# ---------------------------------------------------------------------------
-
-@q("content_truncate", """
-  SELECT doc_id, substring(text, 1, 120) AS preview,
-         length(text) AS n_len
-  FROM documents
-""")
-def content_truncate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _t(spark, sf_dir, "documents").select(
-        "doc_id", F.substring("text", 1, 120).alias("preview"),
-        F.length("text").alias("n_len"))
-
-
-# ---------------------------------------------------------------------------
-# A2: per-page link-count summaries rolled up per source
-# (core/WebCrawler.java:348-396) — tokens stand in for links
-# ---------------------------------------------------------------------------
-
-@q("link_count_stats", r"""
-  SELECT source, count(*) AS n_docs,
-         CAST(sum(len(string_split_regex(trim(text), '[ \t\n\r\f\x0B]+'))) AS BIGINT)
-             AS total_tokens,
-         CAST(max(len(string_split_regex(trim(text), '[ \t\n\r\f\x0B]+'))) AS INTEGER)
-             AS max_tokens
-  FROM documents GROUP BY 1
-""")
-def link_count_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    n_tok = ptext.token_count(F.col("text"))
-    return (_t(spark, sf_dir, "documents")
-            .groupBy("source")
-            .agg(F.count("*").alias("n_docs"),
-                 F.sum(n_tok).alias("total_tokens"),
-                 F.max(n_tok).alias("max_tokens")))
-
-
-# ---------------------------------------------------------------------------
-# S10: point lookup by primary key (storage/HybridStorageService.java:67-98)
-# ---------------------------------------------------------------------------
-
-@q("point_lookup", """
-  SELECT doc_id, lang, source, n_chars FROM documents
-  WHERE doc_id IN (7, 42, 123)
-""")
-def point_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return (_t(spark, sf_dir, "documents")
-            .where(F.col("doc_id").isin(7, 42, 123))
-            .select("doc_id", "lang", "source", "n_chars"))
-
-
-# ---------------------------------------------------------------------------
-# X7: robots.txt parsing — line split + trim + case-sensitive prefix match
-# (core/WebCrawler.java:509-528), all JVM higher-order functions
-# ---------------------------------------------------------------------------
-
-@q("robots_parse", """
-  WITH hosts AS (
-    SELECT DISTINCT
-      'h' || lpad(CAST(o_custkey % 20 AS VARCHAR), 4, '0')
-          || '.example.com' AS host,
-      CAST(o_custkey % 20 AS INTEGER) AS host_idx
-    FROM orders),
-  txt AS (
-    SELECT host,
-      'User-agent: *' || chr(10) || '# synthetic' || chr(10)
-      || 'Disallow: /p/' || CAST(host_idx % 10 AS VARCHAR) || chr(10)
-      || 'Allow: /pub' || chr(10) || '  disallow: /lowercase' || chr(10)
-      || 'Disallow: /admin' AS robots
-    FROM hosts),
-  lines AS (
-    SELECT host, trim(unnest(string_split(robots, chr(10)))) AS line
-    FROM txt)
-  SELECT host, trim(regexp_replace(line, '^Disallow:', '')) AS disallow_path
-  FROM lines WHERE starts_with(line, 'Disallow:')
-""")
-def robots_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
-    frontier = _frontier_from_orders(spark, sf_dir)
-    hosts = frontier.select("host", "host_idx").distinct()
-    robots = F.concat(
-        F.lit("User-agent: *\n# synthetic\nDisallow: /p/"),
-        (F.col("host_idx") % 10).cast("string"),
-        F.lit("\nAllow: /pub\n  disallow: /lowercase\nDisallow: /admin"))
-    paths = F.transform(
-        F.filter(F.split(robots, "\n"),
-                 lambda l: F.trim(l).startswith("Disallow:")),
-        lambda l: F.trim(F.regexp_replace(F.trim(l), "^Disallow:", "")))
-    return (hosts.select("host", F.explode(paths).alias("disallow_path")))
-
-
-# ---------------------------------------------------------------------------
-# X10: timestamp arithmetic — politeness remaining-delay / retry-at shapes
-# (core/WebCrawler.java:243-247,289)
-# ---------------------------------------------------------------------------
-
-# ---------------------------------------------------------------------------
-# as-of join (operators/asof.py): each click joined to the user's most
-# recent view at-or-before it, voided when staler than 10 minutes. The
-# oracle is DuckDB's NATIVE ASOF LEFT JOIN — the engine's union+running-
-# last implementation is value-checked against a reference implementation
-# of the semantics, not a restatement of its own formula.
-# ---------------------------------------------------------------------------
-
-@q("events_asof_join", """
-  WITH r0 AS (
-    SELECT user_id, ts, value FROM (
-      SELECT user_id, ts, value,
-             row_number() OVER (PARTITION BY user_id, ts
-                                ORDER BY event_id) AS rn
-      FROM events WHERE event_type = 'view') WHERE rn = 1),
-  l AS (SELECT user_id, ts, event_id, value FROM events
-        WHERE event_type = 'click')
-  SELECT l.event_id, l.user_id, l.ts, l.value,
-         epoch_us(CASE WHEN r.ts >= l.ts - INTERVAL 10 MINUTE
-                       THEN r.ts END) AS asof_ts_us,
-         CASE WHEN r.ts >= l.ts - INTERVAL 10 MINUTE THEN r.value END
-           AS asof_value
-  FROM l ASOF LEFT JOIN r0 r
-    ON l.user_id = r.user_id AND l.ts >= r.ts
-""")
-def events_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
-    clicks = (ev.where(F.col("event_type") == "click")
-              .select("user_id", "ts", "event_id", "value"))
-    # right side made unique per (user, ts) — min event_id wins — so the
-    # as-of match is deterministic; hash agg, map-side partial
-    views = (ev.where(F.col("event_type") == "view")
-             .groupBy("user_id", "ts")
-             .agg(F.min_by("value", "event_id").alias("value")))
-    joined = asof_join(clicks, views, on="user_id", ts_col="ts",
-                       tolerance=F.expr("INTERVAL 10 MINUTES"))
-    # matched ts projected as nullable epoch micros: the harness compare
-    # (pandas assert_frame_equal) can't equate NaT across the ns/us
-    # datetime units the two engines return; int64-with-null is stable
-    return joined.select("event_id", "user_id", "ts", "value",
-                         F.unix_micros(F.col("asof_ts").cast("timestamp"))
-                         .alias("asof_ts_us"),
-                         "asof_value")
-
-
-@q("time_arithmetic", """
-  SELECT event_id,
-         epoch_us(ts + INTERVAL 90 SECOND) AS retry_at_us,
-         epoch_us(ts) - epoch_us(TIMESTAMP '2024-01-10 00:00:00')
-             AS since_epoch_us
-  FROM events WHERE event_id % 97 = 0
-""")
-def time_arithmetic(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ts = F.col("ts").cast("timestamp")
-    base = F.lit("2024-01-10 00:00:00").cast("timestamp")
-    return (_t(spark, sf_dir, "events")
-            .where(F.col("event_id") % 97 == 0)
-            .select(
-                "event_id",
-                F.unix_micros(ts + F.make_interval(secs=F.lit(90)))
-                .alias("retry_at_us"),
-                (F.unix_micros(ts) - F.unix_micros(base))
-                .alias("since_epoch_us")))
-
-
-# ---------------------------------------------------------------------------
-# Structured Streaming: tumbling event-time window + watermark drained via
-# availableNow — equals the batch aggregation (streaming/events_stream.py)
-# ---------------------------------------------------------------------------
-
-@q("events_stream_tumbling", """
-  SELECT epoch_us(date_trunc('hour', ts)) AS win_start_us, event_type,
-         count(*) AS n
-  FROM events GROUP BY 1, 2
-""")
-def events_stream_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .streaming import tumbling_counts_stream
-    return tumbling_counts_stream(spark, sf_dir)
-
-
-@q("events_stream_sliding", """
-  WITH starts AS (
-    SELECT event_type, g
-    FROM events, UNNEST([
-      CAST(floor(epoch(ts) / 1800) * 1800 AS BIGINT),
-      CAST(floor(epoch(ts) / 1800) * 1800 - 1800 AS BIGINT)
-    ]) AS u(g)
-    WHERE epoch(ts) >= g AND epoch(ts) < g + 3600)
-  SELECT g * 1000000 AS win_start_us, event_type, count(*) AS n
-  FROM starts GROUP BY 1, 2
-""")
-def events_stream_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sliding 1h/30min event-time windows via Structured Streaming; the
-    oracle expands each event into its (window/slide)=2 covering windows
-    on the same epoch-aligned grid Spark uses."""
-    from .streaming import sliding_counts_stream
-    return sliding_counts_stream(spark, sf_dir)
-
-
-@q("events_stream_join", """
-  SELECT c.event_id AS click_id, c.user_id,
-         epoch_us(c.ts) AS click_ts_us, epoch_us(v.ts) AS view_ts_us,
-         v.value AS view_value
-  FROM events c JOIN events v
-    ON v.user_id = c.user_id
-   AND v.ts <= c.ts AND v.ts >= c.ts - INTERVAL 60 MINUTE
-  WHERE c.event_type = 'click' AND v.event_type = 'view'
-""")
-def events_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stream-stream interval join (clicks × views within the hour per
-    user), watermark-bounded state on both sides; the oracle is the batch
-    interval join."""
-    from .streaming import interval_join_stream
-    return interval_join_stream(spark, sf_dir, lookback="60 minutes")
-
-
-@q("events_stream_dedup", """
-  SELECT DISTINCT user_id, event_type FROM events
-""")
-def events_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bounded-state streaming dedup (dropDuplicatesWithinWatermark):
-    key-only output, one availableNow drain == batch DISTINCT."""
-    from .streaming import watermark_dedup_stream
-    return watermark_dedup_stream(spark, sf_dir)
-
-
-@q("events_stream_enrich", """
-  SELECT epoch_us(CAST(time_bucket(INTERVAL 1 HOUR, e.ts) AS TIMESTAMP))
-           AS win_start_us,
-         n.n_name AS nation, count(*) AS n
-  FROM events e JOIN nation n ON n.n_nationkey = e.user_id % 25
-  GROUP BY 1, 2
-""")
-def events_stream_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stream-static broadcast enrichment (event stream × geography dim)
-    feeding a watermarked windowed count; oracle is the batch join+agg."""
-    from .streaming import static_enriched_stream
-    return static_enriched_stream(spark, sf_dir)
-
-
-@q("cohort_retention", """
-  WITH cohort AS (
-    SELECT user_id, min(CAST(ts AS DATE)) AS cohort_day FROM events
-    GROUP BY user_id),
-  act AS (SELECT DISTINCT user_id, CAST(ts AS DATE) AS d FROM events)
-  SELECT CAST(c.cohort_day AS VARCHAR) AS cohort_day,
-         CAST(date_diff('day', c.cohort_day, a.d) AS INTEGER)
-           AS day_offset,
-         count(DISTINCT a.user_id) AS n_users
-  FROM act a JOIN cohort c USING (user_id)
-  GROUP BY c.cohort_day, date_diff('day', c.cohort_day, a.d)
-""")
-def cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cohort retention triangle: users bucketed by first-active day,
-    counted on each later active day. Both aggregates reduce on user_id
-    first (events never join raw); the cohort dim then hash-joins the
-    distinct (user, day) activity table — partitioning from the first
-    aggregate is reused by the join's user_id requirement."""
-    ev = _t(spark, sf_dir, "events")
-    cohort = (ev.groupBy("user_id")
-              .agg(F.min(F.to_date("ts")).alias("cohort_day")))
-    act = ev.select("user_id", F.to_date("ts").alias("d")).distinct()
-    return (act.join(cohort, "user_id")
-            .groupBy(F.col("cohort_day").cast("string")
-                     .alias("cohort_day"),
-                     F.datediff("d", "cohort_day").alias("day_offset"))
-            .agg(F.count_distinct("user_id").alias("n_users")))
-
-
-@q("funnel_stages", """
-  WITH s1 AS (
-    SELECT user_id, min(ts) AS t FROM events
-    WHERE event_type = 'signup' GROUP BY user_id),
-  s2 AS (
-    SELECT e.user_id, min(e.ts) AS t FROM events e JOIN s1 USING (user_id)
-    WHERE e.event_type = 'view' AND e.ts > s1.t GROUP BY e.user_id),
-  s3 AS (
-    SELECT e.user_id, min(e.ts) AS t FROM events e JOIN s2 USING (user_id)
-    WHERE e.event_type = 'click' AND e.ts > s2.t GROUP BY e.user_id),
-  s4 AS (
-    SELECT e.user_id, min(e.ts) AS t FROM events e JOIN s3 USING (user_id)
-    WHERE e.event_type = 'purchase' AND e.ts > s3.t GROUP BY e.user_id)
-  SELECT 1 AS stage, 'signup' AS event_type, count(*) AS n_users FROM s1
-  UNION ALL SELECT 2, 'view', count(*) FROM s2
-  UNION ALL SELECT 3, 'click', count(*) FROM s3
-  UNION ALL SELECT 4, 'purchase', count(*) FROM s4
-""")
-def funnel_stages(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Ordered funnel (signup → view → click → purchase) with the
-    earliest-possible-timestamp chain: stage k+1 keeps a user only with
-    an event strictly after their stage-k time. Each stage is one
-    filtered partial-agg + a join on user_id — the stage tables shrink
-    monotonically, so every later join is cheaper, and nothing ever
-    collects per-user event lists."""
-    ev = _t(spark, sf_dir, "events")
-
-    def stage(etype: str, prev: DataFrame | None) -> DataFrame:
-        e = ev.where(F.col("event_type") == etype)
-        if prev is not None:
-            e = (e.join(prev.select("user_id",
-                                    F.col("t").alias("prev_t")),
-                        "user_id")
-                 .where(F.col("ts") > F.col("prev_t")))
-        return e.groupBy("user_id").agg(F.min("ts").alias("t"))
-
-    out, prev = None, None
-    for i, etype in enumerate(("signup", "view", "click", "purchase"),
-                              start=1):
-        prev = stage(etype, prev)
-        cnt = (prev.agg(F.count("*").alias("n_users"))
-               .select(F.lit(i).alias("stage"),
-                       F.lit(etype).alias("event_type"), "n_users"))
-        out = cnt if out is None else out.unionAll(cnt)
-    return out
-
-
-@q("events_first_seen", """
-  SELECT user_id, event_id, epoch_us(ts) AS ts_us, event_type FROM (
-    SELECT user_id, event_id, ts, event_type,
-           row_number() OVER (PARTITION BY user_id
-                              ORDER BY ts, event_id) AS rn
-    FROM events) WHERE rn = 1
-""")
-def events_first_seen(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Custom STATEFUL streaming operator (applyInPandasWithState): per-key
-    first-seen dedup — the crawl's D4 URL-seen as an unbounded stream
-    (streaming/stateful.py). An availableNow drain over one file is a
-    single batch, so the result equals the per-user arg-min row (the
-    oracle); cross-batch state suppression is pinned by the two-trigger
-    pytest in tests/test_streaming.py."""
-    from .streaming import first_seen_stream
-    from .streaming.events_stream import _COUNTER
-
-    path = f"{sf_dir}/events.parquet"
-    schema = spark.read.parquet(path).schema
-    stream = (spark.readStream.schema(schema)
-              .option("pathGlobFilter", "events.parquet").parquet(sf_dir))
-    out = first_seen_stream(stream).select(
-        "user_id", "event_id", F.unix_micros("ts").alias("ts_us"),
-        "event_type")
-    qname = f"events_first_seen_{next(_COUNTER)}"
-    query = (out.writeStream.outputMode("append")
-             .format("memory").queryName(qname)
-             .trigger(availableNow=True).start())
-    query.awaitTermination()
-    return spark.table(qname)
-
-
-@q("events_session", """
-  WITH o AS (
-    SELECT user_id, ts, event_id,
-      CASE WHEN lag(ts) OVER w IS NULL
-             OR ts - lag(ts) OVER w >= INTERVAL 30 MINUTE
-           THEN 1 ELSE 0 END AS brk
-    FROM events
-    WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-  g AS (
-    SELECT *, sum(brk) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                             ROWS UNBOUNDED PRECEDING) AS grp
-    FROM o)
-  SELECT user_id, epoch_us(min(ts)) AS session_start_us,
-         epoch_us(max(ts) + INTERVAL 30 MINUTE) AS session_end_us,
-         CAST(count(*) AS BIGINT) AS n_events
-  FROM g GROUP BY user_id, grp
-""")
-def events_session(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Session windows (30-min inactivity gap) per user — Spark's
-    session_window aggregation; the oracle restates it as gaps-and-islands
-    SQL (a new session starts when the gap to the previous event is >= the
-    timeout, matching session_window's event_time < session_end merge
-    rule; window end = last event + gap)."""
-    return (_t(spark, sf_dir, "events")
-            .withColumn("ts", F.col("ts").cast("timestamp"))
-            .groupBy(F.session_window("ts", "30 minutes").alias("w"),
-                     "user_id")
-            .agg(F.count("*").alias("n_events"))
-            .select("user_id",
-                    F.unix_micros(F.col("w.start")).alias("session_start_us"),
-                    F.unix_micros(F.col("w.end")).alias("session_end_us"),
-                    "n_events"))
-
-
 @q("crawl_flagship", lambda: _oracles.crawl_flagship_sql())
 def crawl_flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end BSP crawl on the deterministic synthetic web: fetch →
@@ -3403,344 +698,6 @@ def crawl_flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (crawler.lineage()
             .groupBy("round", "metric").agg(F.sum("value").alias("value"))
             .orderBy("round", "metric"))
-
-
-# ---------------------------------------------------------------------------
-# sketch-and-sample operators (pipeline/sketches) + classifier + span dedup
-# ---------------------------------------------------------------------------
-
-@q("hll_distinct", lambda: _oracles.hll_distinct_sql(n=3, p=8))
-def hll_distinct_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-source distinct-3-gram cardinality: exact count next to an
-    explicit 256-register HyperLogLog estimate — the mergeable-sketch
-    answer when the exact distinct shuffle stops fitting."""
-    from .pipeline import sketches
-    return sketches.hll_distinct(_t(spark, sf_dir, "documents"), n=3, p=8)
-
-
-@q("cms_heavy_hitters", lambda: _oracles.cms_heavy_hitters_sql(
-    d=4, w=16, k=20))
-def cms_heavy_hitters_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Token heavy hitters with count-min point estimates (d=4, w=16 —
-    w kept small so collisions/overestimates are visible at test
-    scale); estimates are provably >= the exact counts."""
-    from .pipeline import sketches
-    return sketches.cms_heavy_hitters(_t(spark, sf_dir, "documents"),
-                                      d=4, w=16, k=20)
-
-
-@q("reservoir_sample", lambda: _oracles.weighted_reservoir_sql(k=8))
-def reservoir_sample_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-source weighted reservoir sample (Efraimidis-Spirakis A-Res,
-    P ∝ n_chars), deterministic via hash-derived uniforms so the
-    'random' sample is reproducible and oracle-checkable."""
-    from .pipeline import sketches
-    return sketches.weighted_reservoir(_t(spark, sf_dir, "documents"), k=8)
-
-
-@q("cross_doc_spans", r"""
-  WITH toks AS (
-    SELECT doc_id, string_split_regex(trim(lower(text)), '[ \t\n\r\f\x0B]+') AS t
-    FROM documents),
-  g0 AS (
-    SELECT doc_id, array_to_string(t[i:i+5], ' ') AS gram
-    FROM toks, UNNEST(range(1, len(t) - 4)) AS u(i)
-    WHERE len(t) >= 6),
-  gd AS (SELECT DISTINCT doc_id, gram FROM g0),
-  gdf AS (SELECT gram, count(*) AS ndocs FROM gd GROUP BY gram),
-  per AS (
-    SELECT doc_id, count(*) AS total_spans,
-           CAST(sum(CASE WHEN ndocs >= 2 THEN 1 ELSE 0 END) AS BIGINT)
-             AS dup_spans
-    FROM gd JOIN gdf USING (gram) GROUP BY doc_id)
-  SELECT doc_id, total_spans, dup_spans,
-         round(CAST(dup_spans AS DOUBLE) / CAST(total_spans AS DOUBLE), 6)
-           AS dup_frac
-  FROM per WHERE dup_spans > 0
-""")
-def cross_doc_spans_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cross-document duplicate 6-token spans (the Lee et al.
-    exact-substring dedup signal). Runs the SHIPPED fingerprint-keyed
-    path (key_mode='fp': 128-bit xxhash64 span keys on every exchange);
-    the DuckDB oracle restates the string-keyed semantics, which the
-    fp path matches exactly (tests/test_sketches.py pins equality)."""
-    return pdedup.cross_doc_spans(_t(spark, sf_dir, "documents"), n=6)
-
-
-@q("quality_classifier", lambda: _oracles.hashed_classifier_sql(
-    n_buckets=256))
-def quality_classifier_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hashed-feature linear quality classifier (fastText shape):
-    broadcast model-as-table scoring with an exact-integer score sum
-    and a bit-exact keep decision."""
-    return ptext.hashed_quality_classifier(_t(spark, sf_dir, "documents"),
-                                           n_buckets=256)
-
-
-@q("quantile_stats", """
-  SELECT source, count(*) AS n_docs,
-         round(avg(n_chars), 6) AS mean_chars,
-         round(quantile_cont(n_chars, 0.5), 6) AS p50,
-         round(quantile_cont(n_chars, 0.9), 6) AS p90,
-         round(quantile_cont(n_chars, 0.99), 6) AS p99
-  FROM documents GROUP BY source
-""")
-def quantile_stats_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-source EXACT length quantiles (linear interpolation at
-    p*(n-1)) — the distribution report a curation run reads before
-    setting length cutoffs. Spark's percentile() is a single
-    partial-aggregatable pass; no global sort."""
-    nc = F.col("n_chars")
-    return (_t(spark, sf_dir, "documents")
-            .groupBy("source")
-            .agg(F.count(F.lit(1)).alias("n_docs"),
-                 F.round(F.avg(nc), 6).alias("mean_chars"),
-                 F.round(F.percentile(nc, F.lit(0.5)), 6).alias("p50"),
-                 F.round(F.percentile(nc, F.lit(0.9)), 6).alias("p90"),
-                 F.round(F.percentile(nc, F.lit(0.99)), 6).alias("p99")))
-
-
-@q("trap_detection", r"""
-  WITH urls AS (
-    SELECT 'h' || lpad(CAST(o_custkey % 20 AS VARCHAR), 4, '0')
-             || '.example.com' AS host,
-           CASE
-             WHEN o_custkey % 20 >= 15 THEN
-               '/' || repeat(chr(97 + CAST(o_orderkey % 26 AS INTEGER)),
-                             CAST(1 + o_orderkey % 3 AS INTEGER))
-                   || '/detail'
-             WHEN o_orderkey % 2 = 0 THEN
-               '/p/' || CAST(o_orderkey AS VARCHAR)
-               || CASE WHEN o_orderkey % 5 = 0
-                       THEN '?sess=' || CAST(o_custkey AS VARCHAR)
-                       ELSE '' END
-             ELSE '/cat/' || CAST(o_orderkey % 7 AS VARCHAR)
-                  || '/item' || CAST(o_orderkey AS VARCHAR)
-           END AS path
-    FROM orders),
-  tpl AS (
-    SELECT host,
-           regexp_replace(regexp_replace(path, '\?.*$', ''),
-                          '[0-9]+', 'N', 'g') AS template
-    FROM urls),
-  agg AS (
-    SELECT host, count(*) AS n_urls,
-           count(DISTINCT template) AS n_templates
-    FROM tpl GROUP BY host)
-  SELECT host, n_urls, n_templates,
-         round(CAST(n_templates AS DOUBLE) / CAST(n_urls AS DOUBLE), 6)
-           AS template_ratio,
-         CASE WHEN n_urls >= 100
-                   AND CAST(n_templates AS DOUBLE)
-                       / CAST(n_urls AS DOUBLE) < 0.05
-              THEN 1 ELSE 0 END AS is_trap
-  FROM agg
-""")
-def trap_detection_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Crawler-trap detection: collapse each URL to a template (query
-    string stripped, digit runs folded to 'N') and flag hosts whose
-    template diversity collapses — the calendar/session-id/pagination
-    trap signal a frontier scheduler uses to throttle a host. One
-    partial-agg shuffle on host; the template fold is a pure
-    projection, pushed to the scan."""
-    okey, ckey = F.col("o_orderkey"), F.col("o_custkey")
-    host = F.concat(F.lit("h"),
-                    F.lpad((ckey % 20).cast("string"), 4, "0"),
-                    F.lit(".example.com"))
-    slug_path = F.concat(
-        F.lit("/"),
-        F.repeat(F.char(F.lit(97) + okey % 26), (1 + okey % 3).cast("int")),
-        F.lit("/detail"))
-    p_path = F.concat(
-        F.lit("/p/"), okey.cast("string"),
-        F.when(okey % 5 == 0,
-               F.concat(F.lit("?sess="), ckey.cast("string")))
-        .otherwise(F.lit("")))
-    cat_path = F.concat(F.lit("/cat/"), (okey % 7).cast("string"),
-                        F.lit("/item"), okey.cast("string"))
-    path = (F.when(ckey % 20 >= 15, slug_path)
-            .when(okey % 2 == 0, p_path)
-            .otherwise(cat_path))
-    template = F.regexp_replace(
-        F.regexp_replace(path, r"\?.*$", ""), "[0-9]+", "N")
-    nt, nu = F.col("n_templates"), F.col("n_urls")
-    return (_t(spark, sf_dir, "orders")
-            .select(host.alias("host"), template.alias("template"))
-            .groupBy("host")
-            .agg(F.count(F.lit(1)).alias("n_urls"),
-                 F.countDistinct("template").alias("n_templates"))
-            .select("host", "n_urls", "n_templates",
-                    F.round(nt.cast("double") / nu.cast("double"), 6)
-                    .alias("template_ratio"),
-                    F.when((nu >= 100)
-                           & (nt.cast("double") / nu.cast("double") < 0.05),
-                           1).otherwise(0).alias("is_trap")))
-
-
-@q("mirror_hosts", r"""
-  WITH urls AS (
-    SELECT 'h' || lpad(CAST(o_custkey % 20 AS VARCHAR), 4, '0')
-             || '.example.com' AS host,
-           CASE
-             WHEN o_custkey % 20 >= 15 THEN
-               '/' || repeat(chr(97 + CAST(o_orderkey % 26 AS INTEGER)),
-                             CAST(1 + o_orderkey % 3 AS INTEGER))
-                   || '/detail'
-             WHEN o_orderkey % 2 = 0 THEN
-               '/p/' || CAST(o_orderkey AS VARCHAR)
-               || CASE WHEN o_orderkey % 5 = 0
-                       THEN '?sess=' || CAST(o_custkey AS VARCHAR)
-                       ELSE '' END
-             ELSE '/cat/' || CAST(o_orderkey % 7 AS VARCHAR)
-                  || '/item' || CAST(o_orderkey AS VARCHAR)
-           END AS path
-    FROM orders),
-  hk AS (
-    SELECT DISTINCT host,
-           regexp_replace(path, '\?.*$', '') AS k
-    FROM urls),
-  dfreq AS (SELECT k, count(*) AS df FROM hk GROUP BY k),
-  capped AS (
-    SELECT host, hk.k FROM hk JOIN dfreq ON hk.k = dfreq.k
-    WHERE df <= 64),
-  sizes AS (SELECT host, count(*) AS n_keys FROM capped GROUP BY host),
-  pairs AS (
-    SELECT a.host AS host_a, b.host AS host_b, count(*) AS n_common
-    FROM capped a JOIN capped b
-      ON a.k = b.k AND a.host < b.host
-    GROUP BY a.host, b.host)
-  SELECT host_a, host_b, n_common,
-         round(CAST(n_common AS DOUBLE) / sa.n_keys, 6) AS c_ab,
-         round(CAST(n_common AS DOUBLE) / sb.n_keys, 6) AS c_ba
-  FROM pairs
-  JOIN sizes sa ON pairs.host_a = sa.host
-  JOIN sizes sb ON pairs.host_b = sb.host
-  WHERE greatest(round(CAST(n_common AS DOUBLE) / sa.n_keys, 6),
-                 round(CAST(n_common AS DOUBLE) / sb.n_keys, 6)) >= 0.9
-""")
-def mirror_hosts_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Host-mirror detection over the synthetic frontier: the five
-    low-diversity slug hosts serve the same query-stripped path sets and
-    surface as a mirror clique (containment ≥ 0.9 in either direction);
-    /p/ and /cat/ paths are order-key-unique so non-mirror host pairs
-    never even materialize a candidate row. The frontier scheduler uses
-    these pairs to collapse mirrors BEFORE spending fetch budget
-    (Bharat & Broder WWW'99; no reference analog — its dedup is
-    post-fetch content_hash, schema.cql:17)."""
-    return precrawl.mirror_hosts(
-        precrawl.synth_urls(_t(spark, sf_dir, "orders")), threshold=0.9)
-
-
-@q("adaptive_budget", r"""
-  WITH obs AS (
-    SELECT 'h' || lpad(CAST(o_custkey % 20 AS VARCHAR), 4, '0')
-             || '.example.com' AS host,
-           50 + (o_orderkey * 13 + o_custkey * 7) % 2000
-             + CASE WHEN o_orderkey % 97 = 0 THEN 5000 ELSE 0 END
-             AS latency_ms,
-           CASE WHEN o_orderkey % 23 = 0 THEN 1 ELSE 0 END AS failed
-    FROM orders),
-  ranked AS (
-    SELECT host, latency_ms, failed,
-           row_number() OVER (PARTITION BY host ORDER BY latency_ms)
-             AS rn,
-           count(*) OVER (PARTITION BY host) AS n,
-           sum(failed) OVER (PARTITION BY host) AS err_cnt
-    FROM obs),
-  p95 AS (
-    SELECT host, latency_ms AS p95_ms,
-           CAST(n AS BIGINT) AS n_obs, CAST(err_cnt AS BIGINT) AS err_cnt
-    FROM ranked WHERE rn = (n * 19 + 19) // 20)
-  SELECT host, n_obs, err_cnt, CAST(p95_ms AS BIGINT) AS p95_ms,
-         CAST(greatest(4, least(256,
-           CASE WHEN err_cnt * 10 > n_obs THEN 32
-                WHEN p95_ms > 1500 THEN (64 * 1500) // p95_ms
-                ELSE 72 END)) AS BIGINT) AS next_budget
-  FROM p95
-""")
-def adaptive_budget_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """AIMD per-host politeness budget from last-round fetch telemetry:
-    error rate > 10% halves, p95 latency over target backs off
-    proportionally, healthy hosts gain additively — all integer
-    arithmetic over integer telemetry, engine-exact."""
-    return precrawl.adaptive_host_budget(
-        precrawl.fetch_observations(_t(spark, sf_dir, "orders")))
-
-
-# ---------------------------------------------------------------------------
-# recrawl / crawl-maintenance operators (pipeline/recrawl) + containment
-# ---------------------------------------------------------------------------
-
-@q("snapshot_diff", r"""
-  WITH oldsnap AS (
-    SELECT doc_id, source,
-           CASE WHEN doc_id % 7 = 0 THEN text || ' [v1]' ELSE text END
-             AS content
-    FROM documents WHERE doc_id % 11 <> 3),
-  newsnap AS (
-    SELECT doc_id, source, text AS content
-    FROM documents WHERE doc_id % 13 <> 5),
-  j AS (
-    SELECT coalesce(o.source, n.source) AS source,
-           CASE WHEN o.doc_id IS NULL THEN 'added'
-                WHEN n.doc_id IS NULL THEN 'removed'
-                WHEN sha256(o.content) <> sha256(n.content) THEN 'changed'
-                ELSE 'unchanged' END AS status
-    FROM oldsnap o FULL OUTER JOIN newsnap n ON o.doc_id = n.doc_id),
-  per AS (
-    SELECT source,
-           CAST(sum(CASE WHEN status = 'added' THEN 1 ELSE 0 END)
-                AS BIGINT) AS n_added,
-           CAST(sum(CASE WHEN status = 'removed' THEN 1 ELSE 0 END)
-                AS BIGINT) AS n_removed,
-           CAST(sum(CASE WHEN status = 'changed' THEN 1 ELSE 0 END)
-                AS BIGINT) AS n_changed,
-           CAST(sum(CASE WHEN status = 'unchanged' THEN 1 ELSE 0 END)
-                AS BIGINT) AS n_unchanged
-    FROM j GROUP BY source)
-  SELECT source, n_added, n_removed, n_changed, n_unchanged,
-         round(CAST(n_added + n_removed + n_changed AS DOUBLE)
-               / CAST(n_removed + n_changed + n_unchanged AS DOUBLE), 6)
-           AS churn_rate
-  FROM per
-""")
-def snapshot_diff_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Recrawl delta between two deterministic crawl snapshots:
-    per-source added/removed/changed/unchanged counts via ONE
-    full-outer join on the URL key comparing sha2-256 content digests
-    (at scale: a storage-partitioned join over url-bucketed stores)."""
-    return precrawl.snapshot_diff(_t(spark, sf_dir, "documents"))
-
-
-@q("recrawl_schedule", r"""
-  WITH hist AS (
-    SELECT doc_id, u.i AS fetch_idx,
-           ((doc_id * 7 + u.i * 5) % 3 = 0) AS changed
-    FROM documents,
-         UNNEST(range(1, CAST(doc_id % 4 + 4 AS BIGINT))) AS u(i)),
-  agg AS (
-    SELECT doc_id, count(*) AS n_obs,
-           CAST(sum(CASE WHEN changed THEN 1 ELSE 0 END) AS BIGINT)
-             AS n_changes
-    FROM hist GROUP BY doc_id),
-  lam AS (
-    SELECT doc_id, n_obs, n_changes,
-           round(-ln((CAST(n_obs AS DOUBLE) - CAST(n_changes AS DOUBLE)
-                      + CAST('0.5' AS DOUBLE))
-                     / (CAST(n_obs AS DOUBLE) + CAST('0.5' AS DOUBLE)))
-                 / CAST('7.0' AS DOUBLE), 6) AS lambda_hat
-    FROM agg)
-  SELECT doc_id, n_obs, n_changes, lambda_hat,
-         round(least(greatest(CAST(1 AS DOUBLE) / lambda_hat,
-                              CAST(1 AS DOUBLE)), CAST(90 AS DOUBLE)), 6)
-           AS next_interval_days
-  FROM lam
-""")
-def recrawl_schedule_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cho & Garcia-Molina Poisson change-rate estimator over a
-    synthetic fetch history → per-URL next-fetch interval; closed-form
-    per group, one partial-agg shuffle."""
-    return precrawl.recrawl_schedule(_t(spark, sf_dir, "documents"))
 
 
 @q("revalidate_merge", r"""
@@ -3794,79 +751,6 @@ def revalidate_merge_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     return precrawl.revalidate_merge(stored, verdicts)
 
 
-@q("cache_ttl", r"""
-  WITH s AS (
-    SELECT doc_id,
-           'https://h' || lpad(CAST(doc_id % 20 AS VARCHAR), 4, '0')
-             || '.example.com/p/' || doc_id AS url,
-           CASE WHEN doc_id % 7 = 0 THEN 'private, no-cache'
-                WHEN doc_id % 5 = 0 THEN 'public, max-age=3600'
-                ELSE NULL END AS cache_control,
-           CASE WHEN doc_id % 7 <> 0 AND doc_id % 5 <> 0
-                     AND doc_id % 3 = 0
-                THEN 1700000000000 + doc_id * 1000
-                     - (doc_id % 1000) * 3600000
-                ELSE NULL END AS last_modified_ms,
-           1700000000000 + doc_id * 1000 AS fetch_time_ms
-    FROM documents),
-  t AS (
-    SELECT url, fetch_time_ms,
-           CASE WHEN cache_control IS NOT NULL
-                     AND (contains(lower(cache_control), 'no-store')
-                          OR contains(lower(cache_control), 'no-cache'))
-                THEN 'no-cache'
-                WHEN cache_control IS NOT NULL
-                     AND regexp_extract(lower(cache_control),
-                                        'max-age=(\d+)', 1) <> ''
-                THEN 'max-age'
-                WHEN last_modified_ms IS NOT NULL THEN 'heuristic'
-                ELSE 'default' END AS policy,
-           CASE WHEN cache_control IS NOT NULL
-                     AND (contains(lower(cache_control), 'no-store')
-                          OR contains(lower(cache_control), 'no-cache'))
-                THEN 0
-                WHEN cache_control IS NOT NULL
-                     AND regexp_extract(lower(cache_control),
-                                        'max-age=(\d+)', 1) <> ''
-                THEN CAST(regexp_extract(lower(cache_control),
-                                         'max-age=(\d+)', 1) AS BIGINT)
-                WHEN last_modified_ms IS NOT NULL
-                THEN greatest(0, (fetch_time_ms - last_modified_ms)
-                                 // 10000)
-                ELSE 86400 END AS ttl_raw
-    FROM s)
-  SELECT url, policy,
-         least(ttl_raw, 604800) AS ttl_sec,
-         fetch_time_ms + least(ttl_raw, 604800) * 1000
-           AS next_revalidate_ms
-  FROM t
-""")
-def cache_ttl_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """RFC 7234 freshness scheduling: per-URL revalidation policy and
-    earliest next-revalidation time from stored response headers —
-    no-cache/no-store → always revalidate, max-age wins, heuristic 10%
-    freshness when only Last-Modified is known, crawler default
-    otherwise. Pure scan projection, zero shuffle."""
-    return precrawl.cache_ttl_schedule(
-        precrawl.cache_ttl_fixture(_t(spark, sf_dir, "documents")))
-
-
-@q("warc_export", lambda: _oracles.warc_export_sql(n_shards=4))
-def warc_export_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """WARC export index (cdx): content-addressed shard assignment,
-    record grammar, sha256 and within-shard running offsets — all
-    JVM-side; index and archive come out of the same shard shuffle.
-    Round-trip with the segmenter (parse_warc) pinned in tests."""
-    from .sources import warc as warcmod
-    d = F.col("doc_id")
-    pages = _t(spark, sf_dir, "documents").select(
-        F.concat(F.lit("https://h"),
-                 F.lpad((d % 20).cast("string"), 4, "0"),
-                 F.lit(".example.com/p/"), d.cast("string")).alias("uri"),
-        F.col("text").alias("body"))
-    return warcmod.warc_export_index(pages, n_shards=4)
-
-
 @q("wds_index", lambda: _oracles.wds_index_sql(n=64, dup_mod=48,
                                                n_shards=4))
 def wds_index_q(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3881,567 +765,6 @@ def wds_index_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     return idx.drop("member_sha256")
 
 
-@q("wds_incremental_plan", lambda: _oracles.wds_incremental_plan_sql(
-    n_old=72, n_new=64, dup_mod=48, n_shards=4))
-def wds_incremental_plan_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Incremental re-export planner: diff two WebDataset member indexes
-    (previous corpus = clean images; current = meta-wrapped subset, so
-    all four member statuses occur) into per-shard dirtiness — clean
-    shards are byte-identical by construction and skip the rewrite.
-    One index-grain full-outer join + one shard-grain agg; O(index),
-    never O(archive)."""
-    from .sources import wds as wdsmod
-    old = wdsmod.wds_member_index(
-        _images_df(spark, sf_dir, n=72, dup_mod=48), n_shards=4)
-    new = wdsmod.wds_member_index(
-        _meta_images_df(spark, sf_dir, n=64, dup_mod=48), n_shards=4)
-    return wdsmod.wds_incremental_plan(old, new)
-
-
-@q("revalidation_planner", r"""
-  WITH s AS (
-    SELECT doc_id,
-           'https://h' || lpad(CAST(doc_id % 20 AS VARCHAR), 4, '0')
-             || '.example.com/p/' || doc_id AS url,
-           CASE WHEN doc_id % 7 = 0 THEN 'private, no-cache'
-                WHEN doc_id % 5 = 0 THEN 'public, max-age=3600'
-                ELSE NULL END AS cache_control,
-           CASE WHEN doc_id % 7 <> 0 AND doc_id % 5 <> 0
-                     AND doc_id % 3 = 0
-                THEN 1700000000000 + doc_id * 1000
-                     - (doc_id % 1000) * 3600000
-                ELSE NULL END AS last_modified_ms,
-           1700000000000 + doc_id * 1000 AS fetch_time_ms
-    FROM documents),
-  t AS (
-    SELECT url, fetch_time_ms,
-           CASE WHEN cache_control IS NOT NULL
-                     AND (contains(lower(cache_control), 'no-store')
-                          OR contains(lower(cache_control), 'no-cache'))
-                THEN 0
-                WHEN cache_control IS NOT NULL
-                     AND regexp_extract(lower(cache_control),
-                                        'max-age=(\d+)', 1) <> ''
-                THEN CAST(regexp_extract(lower(cache_control),
-                                         'max-age=(\d+)', 1) AS BIGINT)
-                WHEN last_modified_ms IS NOT NULL
-                THEN greatest(0, (fetch_time_ms - last_modified_ms)
-                                 // 10000)
-                ELSE 86400 END AS ttl_raw
-    FROM s),
-  due AS (
-    SELECT url,
-           fetch_time_ms + least(ttl_raw, 604800) * 1000
-             AS next_revalidate_ms
-    FROM t
-    WHERE fetch_time_ms + least(ttl_raw, 604800) * 1000
-          <= 1700100000000),
-  hist AS (
-    SELECT doc_id, u.i AS fetch_idx,
-           ((doc_id * 7 + u.i * 5) % 3 = 0) AS changed
-    FROM documents,
-         UNNEST(range(1, CAST(doc_id % 4 + 4 AS BIGINT))) AS u(i)),
-  agg AS (
-    SELECT doc_id, count(*) AS n_obs,
-           CAST(sum(CASE WHEN changed THEN 1 ELSE 0 END) AS BIGINT)
-             AS n_changes
-    FROM hist GROUP BY doc_id),
-  sched AS (
-    SELECT 'https://h' || lpad(CAST(doc_id % 20 AS VARCHAR), 4, '0')
-             || '.example.com/p/' || doc_id AS url,
-           round(-ln((CAST(n_obs AS DOUBLE) - CAST(n_changes AS DOUBLE)
-                      + CAST('0.5' AS DOUBLE))
-                     / (CAST(n_obs AS DOUBLE) + CAST('0.5' AS DOUBLE)))
-                 / CAST('7.0' AS DOUBLE), 6) AS lambda_hat
-    FROM agg),
-  j AS (
-    SELECT due.url,
-           regexp_extract(due.url, 'https://([^/]+)/', 1) AS host,
-           sched.lambda_hat, due.next_revalidate_ms
-    FROM due JOIN sched ON sched.url = due.url),
-  ranked AS (
-    SELECT url, host, lambda_hat, next_revalidate_ms,
-           CAST(row_number() OVER (PARTITION BY host
-                                   ORDER BY lambda_hat DESC, url)
-                AS INTEGER) AS rk
-    FROM j)
-  SELECT url, host, lambda_hat, next_revalidate_ms, rk
-  FROM ranked WHERE rk <= 8
-""")
-def revalidation_planner_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Composed recrawl flagship: due-by-TTL (RFC 7234 floor) ∩ ranked by
-    Cho change-rate ∩ capped per host — the round's conditional-GET pick
-    list, full-chain oracle over the three composed operators."""
-    return precrawl.revalidation_planner(_t(spark, sf_dir, "documents"))
-
-
-@q("change_prediction", lambda: _oracles.change_prediction_sql(
-    _FRONTIER_SQL, n_buckets=128))
-def change_prediction_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cold-start change propensity from URL-shape features — the
-    scheduler's prior for URLs with no verdict history (observed Cho
-    estimates win once history exists). Hashed-feature model-as-table,
-    one explode + broadcast join + url-keyed partial agg."""
-    return precrawl.change_prediction(
-        _frontier_from_orders(spark, sf_dir), n_buckets=128)
-
-
-@q("frontier_scoring", lambda: _oracles.frontier_scoring_sql(k=100))
-def frontier_scoring_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Composed crawl-side flagship: PageRank host authority × trap
-    penalty × depth prior over the synthetic frontier, global top-100
-    via TakeOrderedAndProject. FULL-CHAIN oracle — the unrolled
-    PageRank CTE chain, URL synthesis, trap aggregate and scoring are
-    all restated relationally."""
-    return precrawl.frontier_scoring(_t(spark, sf_dir, "documents"),
-                                     _t(spark, sf_dir, "orders"), k=100)
-
-
-@q("containment_pairs", r"""
-  WITH toks AS (
-    SELECT doc_id, string_split_regex(trim(lower(text)), '[ \t\n\r\f\x0B]+') AS t
-    FROM documents),
-  g0 AS (
-    SELECT doc_id, array_to_string(t[i:i+2], ' ') AS gram
-    FROM toks, UNNEST(range(1, len(t) - 1)) AS u(i)
-    WHERE len(t) >= 3),
-  gd AS (SELECT DISTINCT doc_id, gram FROM g0),
-  dfq AS (SELECT gram, count(*) AS df FROM gd GROUP BY gram),
-  capped AS (SELECT gd.doc_id, gd.gram
-             FROM gd JOIN dfq USING (gram) WHERE df <= 100),
-  sizes AS (SELECT doc_id, count(*) AS n_sh FROM capped GROUP BY doc_id),
-  pairs AS (
-    SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS n_common
-    FROM capped a JOIN capped b
-      ON a.gram = b.gram AND a.doc_id < b.doc_id
-    GROUP BY a.doc_id, b.doc_id),
-  c AS (
-    SELECT p.doc_a, p.doc_b,
-           round(CAST(p.n_common AS DOUBLE) / sa.n_sh, 6) AS c_ab,
-           round(CAST(p.n_common AS DOUBLE) / sb.n_sh, 6) AS c_ba
-    FROM pairs p JOIN sizes sa ON sa.doc_id = p.doc_a
-                 JOIN sizes sb ON sb.doc_id = p.doc_b)
-  SELECT doc_a, doc_b, c_ab, c_ba FROM c
-  WHERE greatest(c_ab, c_ba) >= 0.6
-""")
-def containment_pairs_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Asymmetric shingle containment pairs (quote / partial-mirror
-    detection): C(A→B) = |∩|/|S(A)|, either direction ≥ 0.6; df-capped
-    self-join, sizes joined back AFTER the pair aggregation."""
-    return pdedup.containment_pairs(_t(spark, sf_dir, "documents"),
-                                    n=3, threshold=0.6, max_df=100)
-
-
-@q("host_hits", lambda: _oracles.hits_sql(n_nodes=32, iterations=4))
-def host_hits_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """HITS hubs & authorities over the variable-degree host graph,
-    DIVISION-FREE iterations (scores stay exact integers) with one
-    final max-normalization — bit-exact vs the unrolled-CTE oracle."""
-    from .pipeline import graph as pgraph
-    nodes, edges = pgraph.irregular_graph(_t(spark, sf_dir, "documents"),
-                                          n_nodes=32)
-    return pgraph.hits(nodes, edges, iterations=4)
-
-
-@q("seed_distance", lambda: _oracles.seed_distance_sql(
-    n_nodes=32, seed_mod=8, iterations=6))
-def seed_distance_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BFS crawl-depth from the seed hosts by iterative min-plus
-    relaxation — integer-exact, broadcast distance vector, edges never
-    move after the initial dst-partition."""
-    from .pipeline import graph as pgraph
-    nodes, edges = pgraph.irregular_graph(_t(spark, sf_dir, "documents"),
-                                          n_nodes=32)
-    return pgraph.seed_distance(nodes, edges, seed_mod=8, iterations=6)
-
-
-@q("budget_allocation", r"""
-  WITH urls AS (
-    SELECT 'h' || lpad(CAST(o_custkey % 20 AS VARCHAR), 4, '0')
-             || '.example.com' AS host
-    FROM orders),
-  per AS (SELECT host, count(*) AS n_pending FROM urls GROUP BY host),
-  tot AS (SELECT CAST(sum(n_pending) AS BIGINT) AS t FROM per),
-  q AS (SELECT host, n_pending,
-               CAST(1000 AS DOUBLE) * n_pending / CAST(tot.t AS DOUBLE)
-                 AS ex
-        FROM per, tot),
-  f AS (SELECT host, n_pending,
-               CAST(floor(ex) AS BIGINT) AS base_quota,
-               ex - floor(ex) AS rem
-        FROM q),
-  bs AS (SELECT CAST(sum(base_quota) AS BIGINT) AS b FROM f),
-  r AS (SELECT f.host, f.n_pending, f.base_quota,
-               row_number() OVER (ORDER BY f.rem DESC, f.host) AS rk,
-               1000 - bs.b AS rr
-        FROM f, bs)
-  SELECT host, n_pending, base_quota,
-         CASE WHEN rk <= rr THEN 1 ELSE 0 END AS extra,
-         base_quota + CASE WHEN rk <= rr THEN 1 ELSE 0 END AS quota
-  FROM r
-""")
-def budget_allocation_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Largest-remainder fetch-budget apportionment across hosts:
-    integer per-host quotas that sum to exactly the global budget."""
-    return precrawl.budget_allocation(_t(spark, sf_dir, "orders"),
-                                      budget=1000)
-
-
-@q("pmi_collocations", r"""
-  WITH toks AS (
-    SELECT string_split_regex(trim(lower(text)), '[ \t\n\r\f\x0B]+') AS t
-    FROM documents),
-  bg AS (
-    SELECT t[i] AS w1, t[i + 1] AS w2
-    FROM toks, UNNEST(range(1, len(t))) AS u(i)
-    WHERE len(t) >= 2),
-  big AS (SELECT w1, w2, CAST(count(*) AS BIGINT) AS c_big
-          FROM bg GROUP BY w1, w2),
-  l AS (SELECT w1, CAST(sum(c_big) AS BIGINT) AS c_w1
-        FROM big GROUP BY w1),
-  r AS (SELECT w2, CAST(sum(c_big) AS BIGINT) AS c_w2
-        FROM big GROUP BY w2),
-  n AS (SELECT CAST(sum(c_big) AS BIGINT) AS nn FROM big)
-  SELECT b.w1, b.w2, b.c_big, l.c_w1, r.c_w2,
-         round(ln(CAST(b.c_big AS DOUBLE) * CAST(n.nn AS DOUBLE)
-                  / (CAST(l.c_w1 AS DOUBLE) * CAST(r.c_w2 AS DOUBLE))), 6)
-           AS pmi
-  FROM big b JOIN l USING (w1) JOIN r USING (w2), n
-  WHERE b.c_big >= 5
-""")
-def pmi_collocations_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Collocation extraction by PMI over exact integer bigram counts;
-    one guarded ln() rounded at 1e-6."""
-    return ptext.pmi_collocations(_t(spark, sf_dir, "documents"),
-                                  min_count=5)
-
-
-@q("chunk_texts", r"""
-  WITH staged AS (
-    SELECT doc_id, doc_id % 8 AS shard,
-           string_split_regex(trim(text), '[ \t\n\r\f\x0B]+') AS t,
-           CAST(len(string_split_regex(trim(text), '[ \t\n\r\f\x0B]+')) AS BIGINT)
-             AS n_tokens
-    FROM documents),
-  packed AS (
-    SELECT doc_id, shard, t, n_tokens,
-           CAST(coalesce(sum(n_tokens) OVER (
-             PARTITION BY shard ORDER BY doc_id
-             ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-             0) AS BIGINT) AS cum_before
-    FROM staged),
-  m AS (
-    SELECT doc_id, shard, t, n_tokens, cum_before,
-           unnest(range(cum_before // 256,
-                        (cum_before + n_tokens - 1) // 256 + 1))
-             AS chunk_id
-    FROM packed),
-  pieces AS (
-    SELECT shard, chunk_id,
-           greatest(cum_before - chunk_id * 256, 0) AS chunk_off,
-           least(n_tokens, (chunk_id + 1) * 256 - cum_before)
-             - greatest(chunk_id * 256 - cum_before, 0) AS n_toks,
-           array_to_string(
-             t[greatest(chunk_id * 256 - cum_before, 0) + 1 :
-               least(n_tokens, (chunk_id + 1) * 256 - cum_before)], ' ')
-             AS piece
-    FROM m)
-  SELECT shard, chunk_id, CAST(count(*) AS BIGINT) AS n_docs,
-         CAST(sum(n_toks) AS BIGINT) AS n_tokens,
-         string_agg(piece, ' ' ORDER BY chunk_off) AS text
-  FROM pieces GROUP BY shard, chunk_id
-""")
-def chunk_texts_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Materialized training chunks: the manifest's gather list executed
-    against the tokenized corpus — every (shard, chunk) assembled in
-    order, proving the packing layout is a faithful dataloader
-    program."""
-    return ptext.chunk_texts(_t(spark, sf_dir, "documents"),
-                             ctx_len=256, n_shards=8)
-
-
-@q("centroid_drift", r"""
-  WITH qz AS (
-    SELECT label,
-           list_transform(CAST(embedding AS DOUBLE[]),
-             x -> floor(x / greatest(
-               list_aggregate(list_transform(CAST(embedding AS DOUBLE[]),
-                                             y -> abs(y)), 'max')
-                 / 127.0, 1e-30) + 0.5)) AS qd
-    FROM embeddings),
-  ex AS (
-    SELECT label, u.i AS d, qd[u.i] AS x
-    FROM qz, UNNEST(range(1, 65)) AS u(i)),
-  s AS (SELECT label, d, sum(x) AS sx FROM ex GROUP BY label, d),
-  nv AS (SELECT label, CAST(count(*) AS BIGINT) AS n_vecs
-         FROM qz GROUP BY label),
-  g AS (SELECT d, sum(sx) AS gx FROM s GROUP BY d),
-  dots AS (
-    SELECT s.label, sum(s.sx * g.gx) AS dp,
-           sum(s.sx * s.sx) AS na, sum(g.gx * g.gx) AS nb
-    FROM s JOIN g USING (d) GROUP BY s.label),
-  c AS (
-    SELECT d.label, nv.n_vecs,
-           round(d.dp / (sqrt(d.na) * sqrt(d.nb)), 6) AS centroid_cosine
-    FROM dots d JOIN nv USING (label))
-  SELECT label, n_vecs, centroid_cosine,
-         round(CAST(1 AS DOUBLE) - centroid_cosine, 6) AS drift
-  FROM c
-""")
-def centroid_drift_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-label SQ8 centroid drift from the corpus centroid — exact
-    integer per-dimension sums (one label-keyed shuffle, no explode),
-    cosine via IEEE mul/div/sqrt only."""
-    return similarity.label_centroid_drift(_t(spark, sf_dir, "embeddings"),
-                                           dim=64)
-
-
-@q("embedding_outliers", r"""
-  WITH qz AS (
-    SELECT vec_id, label,
-           list_transform(CAST(embedding AS DOUBLE[]),
-             x -> floor(x / greatest(
-               list_aggregate(list_transform(CAST(embedding AS DOUBLE[]),
-                                             y -> abs(y)), 'max')
-                 / 127.0, 1e-30) + 0.5)) AS qd
-    FROM embeddings),
-  ex AS (
-    SELECT vec_id, label, u.i AS d, qd[u.i] AS x
-    FROM qz, UNNEST(range(1, 65)) AS u(i)),
-  s AS (SELECT label, d, sum(x) AS sx FROM ex GROUP BY label, d),
-  nb AS (SELECT label, sum(sx * sx) AS nb FROM s GROUP BY label),
-  dots AS (
-    SELECT e.vec_id, e.label,
-           sum(e.x * s.sx) AS dp, sum(e.x * e.x) AS na
-    FROM ex e JOIN s ON s.label = e.label AND s.d = e.d
-    GROUP BY e.vec_id, e.label),
-  c AS (
-    SELECT d.vec_id, d.label,
-           round(d.dp / (sqrt(d.na) * sqrt(nb.nb)), 6) AS centroid_cosine
-    FROM dots d JOIN nb USING (label))
-  SELECT vec_id, label, centroid_cosine,
-         CAST(rnk AS INTEGER) AS outlier_rank,
-         (rnk <= 3) AS is_outlier
-  FROM (SELECT *, row_number() OVER (
-          PARTITION BY label ORDER BY centroid_cosine, vec_id) AS rnk
-        FROM c)
-""")
-def embedding_outliers_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Label-noise scrub: per-vector cosine to its own label's SQ8
-    centroid, worst 3 per label flagged (integer-exact sums, the
-    centroid_drift recipe)."""
-    return similarity.embedding_outliers(_t(spark, sf_dir, "embeddings"),
-                                         dim=64, flag_per_label=3)
-
-
-@q("link_degree_stats", lambda: _oracles.degree_stats_sql(n_nodes=32))
-def link_degree_stats_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-node out/in degree + reciprocated-edge count over the
-    variable-degree host graph — the hub/spam-shape diagnostic."""
-    from .pipeline import graph as pgraph
-    nodes, edges = pgraph.irregular_graph(_t(spark, sf_dir, "documents"),
-                                          n_nodes=32)
-    return pgraph.degree_stats(nodes, edges)
-
-
-@q("two_hop_reach", lambda: _oracles.two_hop_reach_sql(n_nodes=32))
-def two_hop_reach_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distinct ≤2-hop neighborhood size per node (self excluded) — the
-    frontier fanout estimate; one edge self-join + distinct + agg."""
-    from .pipeline import graph as pgraph
-    nodes, edges = pgraph.irregular_graph(_t(spark, sf_dir, "documents"),
-                                          n_nodes=32)
-    return pgraph.two_hop_reach(nodes, edges)
-
-
-@q("latency_anomalies", r"""
-  WITH base AS (
-    SELECT 'h' || lpad(CAST(o_custkey % 20 AS VARCHAR), 4, '0')
-             || '.example.com' AS host,
-           o_orderkey,
-           50 + (o_orderkey * 13 + o_custkey * 7) % 2000
-              + CASE WHEN o_orderkey % 97 = 0 THEN 5000 ELSE 0 END
-             AS latency_ms
-    FROM orders),
-  mom AS (SELECT host, CAST(count(*) AS BIGINT) AS n,
-                 CAST(sum(latency_ms) AS BIGINT) AS s1,
-                 CAST(sum(latency_ms * latency_ms) AS BIGINT) AS s2
-          FROM base GROUP BY host),
-  z AS (
-    SELECT b.host, b.o_orderkey, b.latency_ms,
-           round((CAST(b.latency_ms AS DOUBLE)
-                  - CAST(m.s1 AS DOUBLE) / CAST(m.n AS DOUBLE))
-                 / sqrt(CAST(m.s2 AS DOUBLE) / CAST(m.n AS DOUBLE)
-                        - (CAST(m.s1 AS DOUBLE) / CAST(m.n AS DOUBLE))
-                          * (CAST(m.s1 AS DOUBLE) / CAST(m.n AS DOUBLE))),
-                 6) AS z
-    FROM base b JOIN mom m USING (host))
-  SELECT host, o_orderkey, latency_ms, z
-  FROM z WHERE abs(z) >= 3.0
-""")
-def latency_anomalies_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-host fetch-latency z-score anomalies from EXACT integer
-    moments (S1, S2) — engine-exact without any quantize-before-sum
-    contract; moments broadcast back onto the scan."""
-    return precrawl.fetch_latency_anomalies(_t(spark, sf_dir, "orders"),
-                                            z_threshold=3.0)
-
-
-@q("json_props_rollup", r"""
-  SELECT event_type,
-         CAST(count(*) AS BIGINT) AS n_events,
-         CAST(sum(CAST(json_extract_string(props, '$.k') AS BIGINT))
-              AS BIGINT) AS sum_k,
-         CAST(max(CAST(json_extract_string(props, '$.k') AS BIGINT))
-              AS BIGINT) AS max_k,
-         round(CAST(sum(CAST(json_extract_string(props, '$.k') AS BIGINT))
-                    AS DOUBLE) / count(*), 6) AS avg_k
-  FROM events GROUP BY event_type
-""")
-def json_props_rollup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Semi-structured extraction: pull the numeric field out of the
-    events table's JSON props column (get_json_object, JVM-side) and
-    roll it up per event type — integer sums exact, one partial-agg
-    shuffle; the JSON parse is a scan projection."""
-    k = F.get_json_object(F.col("props"), "$.k").cast("long")
-    return (_t(spark, sf_dir, "events")
-            .select("event_type", k.alias("_k"))
-            .groupBy("event_type")
-            .agg(F.count(F.lit(1)).alias("n_events"),
-                 F.sum("_k").alias("sum_k"),
-                 F.max("_k").alias("max_k"),
-                 F.round(F.sum("_k").cast("double") / F.count(F.lit(1)), 6)
-                 .alias("avg_k")))
-
-
-@q("triangle_count", lambda: _oracles.triangle_counts_sql(n_nodes=32))
-def triangle_count_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-node triangles over the undirected host graph via
-    degree-ordered orientation (wedge fan-out bounded O(sqrt(|E|)) —
-    the hub-skew remedy at 10^9 edges); oracle enumerates the same
-    orientation-invariant set under node-id ordering."""
-    from .pipeline import graph as pgraph
-    nodes, edges = pgraph.irregular_graph(_t(spark, sf_dir, "documents"),
-                                          n_nodes=32)
-    return pgraph.triangle_counts(nodes, edges)
-
-
-@q("degree_histogram", lambda: _oracles.degree_histogram_sql(n_nodes=32))
-def degree_histogram_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """log2-bucketed in/out degree distribution (integer bin-length
-    bucketing, no float boundary) — the web-graph power-law check."""
-    from .pipeline import graph as pgraph
-    nodes, edges = pgraph.irregular_graph(_t(spark, sf_dir, "documents"),
-                                          n_nodes=32)
-    return pgraph.degree_histogram(nodes, edges)
-
-
-@q("packing_efficiency", r"""
-  WITH t AS (
-    SELECT CAST(len(string_split_regex(trim(text), '[ \t\n\r\f\x0B]+')) AS BIGINT)
-             AS n_tokens
-    FROM documents),
-  b AS (
-    SELECT n_tokens // 64 AS bucket, n_tokens,
-           ((n_tokens + 255) // 256) * 256 AS padded
-    FROM t)
-  SELECT bucket, CAST(count(*) AS BIGINT) AS n_docs,
-         CAST(sum(n_tokens) AS BIGINT) AS total_tokens,
-         CAST(sum(padded) AS BIGINT) AS padded_tokens,
-         round(1.0 - CAST(sum(n_tokens) AS DOUBLE)
-                   / CAST(sum(padded) AS DOUBLE), 6) AS waste_frac
-  FROM b GROUP BY bucket
-""")
-def packing_efficiency_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pad-to-context waste audit per token-length bucket — the packing
-    vs padding decision table; integer sums, one rounded quotient."""
-    return ptext.packing_efficiency(_t(spark, sf_dir, "documents"),
-                                    ctx_len=256, bucket_tokens=64)
-
-
-@q("lang_source_pivot", r"""
-  SELECT source,
-         CAST(sum(CASE WHEN lang = 'de' THEN 1 ELSE 0 END) AS BIGINT) AS de,
-         CAST(sum(CASE WHEN lang = 'en' THEN 1 ELSE 0 END) AS BIGINT) AS en,
-         CAST(sum(CASE WHEN lang = 'es' THEN 1 ELSE 0 END) AS BIGINT) AS es,
-         CAST(sum(CASE WHEN lang = 'fr' THEN 1 ELSE 0 END) AS BIGINT) AS fr,
-         CAST(sum(CASE WHEN lang = 'zh' THEN 1 ELSE 0 END) AS BIGINT) AS zh,
-         CAST(count(*) AS BIGINT) AS total
-  FROM documents GROUP BY source
-""")
-def lang_source_pivot_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Source × language crosstab with an EXPLICIT pivot vocabulary (no
-    blocking distinct+collect job at 10^10 rows); absent cells are 0."""
-    return ptext.language_source_matrix(_t(spark, sf_dir, "documents"))
-
-
-# ---------------------------------------------------------------------------
-# Table maintenance (tables/maintenance.py): the Iceberg RewriteDataFiles /
-# ExpireSnapshots plans over a synthetic manifest derived from `orders`
-# (file per order, partition per order month, size = floor(o_totalprice)).
-# ---------------------------------------------------------------------------
-
-_MANIFEST_SQL = """
-  SELECT strftime(o_orderdate, '%Y-%m') AS partition_key,
-         o_orderkey AS file_id,
-         CAST(floor(o_totalprice) AS BIGINT) AS size_bytes
-  FROM orders
-"""
-
-
-def _manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return (_t(spark, sf_dir, "orders")
-            .select(F.date_format("o_orderdate", "yyyy-MM")
-                    .alias("partition_key"),
-                    F.col("o_orderkey").alias("file_id"),
-                    F.floor("o_totalprice").cast("long")
-                    .alias("size_bytes")))
-
-
-@q("compaction_plan", f"""
-  SELECT partition_key, file_id, size_bytes,
-         CAST(floor(CAST(sum(size_bytes) OVER (
-                PARTITION BY partition_key
-                ORDER BY size_bytes DESC, file_id
-                ROWS UNBOUNDED PRECEDING) - size_bytes AS DOUBLE)
-              / 400000) AS BIGINT) AS group_id
-  FROM ({_MANIFEST_SQL}) WHERE size_bytes < 300000
-""")
-def compaction_plan_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Small-file binPack rewrite plan at target 400 KB (per-file group
-    assignment; see tables/maintenance.compaction_plan for the
-    next-fit-over-one-window scale contract)."""
-    from .tables.maintenance import compaction_plan
-    return compaction_plan(_manifest(spark, sf_dir),
-                           target_bytes=400_000)
-
-
-@q("snapshot_expiry", """
-  WITH s AS (
-    SELECT year(o_orderdate) * 12 + month(o_orderdate) - 1 AS snapshot_id,
-           CAST(sum(CAST(floor(o_totalprice) AS BIGINT)) AS BIGINT) AS bytes
-    FROM orders GROUP BY 1),
-  c AS (SELECT max(snapshot_id) - 5 AS cut FROM s)
-  SELECT snapshot_id,
-         CASE WHEN snapshot_id > cut OR snapshot_id % 12 = 0
-              THEN 'keep' ELSE 'expire' END AS action,
-         bytes
-  FROM s, c
-""")
-def snapshot_expiry_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ExpireSnapshots plan: keep the 5 most recent snapshots + every
-    12th (archive points); recency cutoff is a 1-row broadcast max, not
-    a global window."""
-    from .tables.maintenance import snapshot_expiry
-    snaps = (_t(spark, sf_dir, "orders")
-             .groupBy((F.year("o_orderdate") * 12
-                       + F.month("o_orderdate") - 1).cast("long")
-                      .alias("snapshot_id"))
-             .agg(F.sum(F.floor("o_totalprice").cast("long"))
-                  .cast("long").alias("bytes")))
-    return snapshot_expiry(snaps, keep_last=5, keep_every=12)
-
-
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: 3-round crawl lineage + a sf0.001 corpus summary row."""
     lineage = crawl_flagship(spark, "/root/testdata/sf0.001")
@@ -4450,296 +773,6 @@ def entry(spark: SparkSession) -> DataFrame:
               .select(F.lit(-1).alias("round"),
                       F.lit("sf0001_documents").alias("metric"), "value"))
     return lineage.unionByName(docs_n)
-
-
-# ---------------------------------------------------------------------------
-# HTML head metadata (operators/htmlmeta.py) over synthetic pages built
-# from `documents`: deterministic field presence (description absent when
-# doc_id%7=0, canonical absent when %5=0, og:image present when %3=0,
-# noindex when %11=0) exercises every NULL/fallback branch.
-# ---------------------------------------------------------------------------
-
-@q("html_meta", r"""
-  WITH pages AS (
-    SELECT 'http://' || source || '.example.com/d/'
-             || CAST(doc_id AS VARCHAR) AS url,
-           '<html><head><title>Doc ' || CAST(doc_id AS VARCHAR)
-             || ' [' || lang || ']</title>'
-             || CASE WHEN doc_id % 7 <> 0 THEN
-                  '<meta name="description" content="'
-                    || substring(text, 1, 40) || '">' ELSE '' END
-             || CASE WHEN doc_id % 5 <> 0 THEN
-                  '<link rel="canonical" href="http://' || source
-                    || '.example.com/c/' || CAST(doc_id % 101 AS VARCHAR)
-                    || '">' ELSE '' END
-             || CASE WHEN doc_id % 11 = 0 THEN
-                  '<meta name="robots" content="noindex,nofollow">'
-                  ELSE '' END
-             || CASE WHEN doc_id % 3 = 0 THEN
-                  '<meta property="og:image" content="http://img.example.com/'
-                    || CAST(doc_id AS VARCHAR) || '.jpg">' ELSE '' END
-             || '</head><body>' || substring(text, 1, 60)
-             || '</body></html>' AS html
-    FROM documents)
-  SELECT url,
-         nullif(regexp_extract(html, '<title>([^<]*)</title>', 1), '')
-           AS title,
-         nullif(regexp_extract(html,
-           '<meta name="description" content="([^"]*)"', 1), '')
-           AS description,
-         coalesce(nullif(regexp_extract(html,
-           '<link rel="canonical" href="([^"]*)"', 1), ''), url)
-           AS canonical,
-         nullif(regexp_extract(html,
-           '<meta property="og:image" content="([^"]*)"', 1), '')
-           AS og_image,
-         regexp_matches(html, '<meta name="robots" content="[^"]*noindex')
-           AS noindex
-  FROM pages
-""")
-def html_meta_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Head-metadata extraction (title/description/canonical/og:image/
-    noindex) over deterministically synthesized page HTML — one
-    pure-Catalyst scan, five shared-with-oracle RE2 regexes; canonical
-    falls back to the fetch URL (operators/htmlmeta.py)."""
-    from .operators.htmlmeta import extract_page_metadata
-    d = F.col("doc_id")
-    docs = _t(spark, sf_dir, "documents")
-    url = F.concat(F.lit("http://"), F.col("source"),
-                   F.lit(".example.com/d/"), d.cast("string"))
-    part = lambda cond, *bits: F.when(cond, F.concat(*bits)).otherwise("")
-    html = F.concat(
-        F.lit("<html><head><title>Doc "), d.cast("string"),
-        F.lit(" ["), F.col("lang"), F.lit("]</title>"),
-        part(d % 7 != 0, F.lit('<meta name="description" content="'),
-             F.substring("text", 1, 40), F.lit('">')),
-        part(d % 5 != 0, F.lit('<link rel="canonical" href="http://'),
-             F.col("source"), F.lit(".example.com/c/"),
-             (d % 101).cast("string"), F.lit('">')),
-        part(d % 11 == 0,
-             F.lit('<meta name="robots" content="noindex,nofollow">')),
-        part(d % 3 == 0,
-             F.lit('<meta property="og:image" content="http://img.example.com/'),
-             d.cast("string"), F.lit(".jpg\">")),
-        F.lit("</head><body>"), F.substring("text", 1, 60),
-        F.lit("</body></html>"))
-    return extract_page_metadata(
-        docs.select(url.alias("url"), html.alias("html")))
-
-
-@q("anchor_text", """
-  WITH e AS (
-    SELECT l_suppkey AS dst,
-           regexp_extract(p_name, '^([a-z]+)', 1) AS anchor
-    FROM lineitem JOIN part ON p_partkey = l_partkey),
-  pa AS (SELECT dst, anchor, count(*) AS cnt FROM e GROUP BY dst, anchor),
-  top AS (SELECT dst, anchor AS top_anchor, cnt AS top_anchor_count,
-                 row_number() OVER (PARTITION BY dst
-                                    ORDER BY cnt DESC, anchor) AS rn
-          FROM pa)
-  SELECT pa.dst, CAST(sum(pa.cnt) AS BIGINT) AS inlinks,
-         CAST(count(*) AS BIGINT) AS distinct_anchors,
-         any_value(t.top_anchor) AS top_anchor,
-         CAST(any_value(t.top_anchor_count) AS BIGINT) AS top_anchor_count
-  FROM pa JOIN top t ON pa.dst = t.dst AND t.rn = 1
-  GROUP BY pa.dst
-""")
-def anchor_text_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-target anchor-text rollup (inlinks, distinct anchors, modal
-    anchor) over the lineitem→supplier link graph with the linking
-    part's first name-word as anchor — two hash aggs, min_by modal pick,
-    no window over the inlink fan-in (pipeline/graph.anchor_text_rollup)."""
-    from .pipeline.graph import anchor_text_rollup
-    li = _t(spark, sf_dir, "lineitem").select("l_partkey", "l_suppkey")
-    pt = _t(spark, sf_dir, "part").select("p_partkey", "p_name")
-    edges = (li.join(F.broadcast(pt),
-                     F.col("p_partkey") == F.col("l_partkey"))
-             .select(F.col("l_suppkey").alias("dst"),
-                     F.regexp_extract("p_name", r"^([a-z]+)", 1)
-                     .alias("anchor")))
-    return anchor_text_rollup(edges)
-
-
-@q("warc_ingest", r"""
-  WITH r AS (
-    SELECT doc_id // 64 AS blob_id, doc_id,
-           'http://' || source || '.example.com/d/'
-             || CAST(doc_id AS VARCHAR) AS uri,
-           length(text) AS clen,
-           'WARC/1.0' || e'\r\n' || 'WARC-Type: response' || e'\r\n'
-             || 'WARC-Target-URI: ' || 'http://' || source
-             || '.example.com/d/' || CAST(doc_id AS VARCHAR) || e'\r\n'
-             || 'Content-Length: ' || CAST(length(text) AS VARCHAR)
-             || e'\r\n\r\n' || text || e'\r\n\r\n' AS rec,
-           text
-    FROM documents)
-  SELECT CAST(blob_id AS BIGINT) AS blob_id, uri,
-         CAST(clen AS BIGINT) AS content_length,
-         CAST(sum(length(rec)) OVER (PARTITION BY blob_id ORDER BY doc_id
-                ROWS UNBOUNDED PRECEDING) - length(rec) AS BIGINT)
-           AS rec_offset,
-         sha256(text) AS body_sha256
-  FROM r
-""")
-def warc_ingest_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """WARC archive segmentation: documents are packed 64-per-blob into
-    deterministic WARC/1.0 response records, then the sources/warc.py
-    pointer parser (Content-Length-driven, offset-emitting) re-segments
-    them — the oracle recomputes each record's fields and offset in SQL."""
-    from .sources.warc import parse_warc
-    d = F.col("doc_id")
-    docs = _t(spark, sf_dir, "documents")
-    uri = F.concat(F.lit("http://"), F.col("source"),
-                   F.lit(".example.com/d/"), d.cast("string"))
-    crlf, sep = F.lit("\r\n"), F.lit("\r\n\r\n")
-    rec = F.concat(F.lit("WARC/1.0"), crlf,
-                   F.lit("WARC-Type: response"), crlf,
-                   F.lit("WARC-Target-URI: "), uri, crlf,
-                   F.lit("Content-Length: "),
-                   F.length("text").cast("string"),
-                   sep, F.col("text"), sep)
-    blobs = (docs
-             .select(F.expr("doc_id div 64").alias("blob_id"), d.alias("k"),
-                     rec.alias("rec"))
-             .groupBy("blob_id")
-             .agg(F.array_join(
-                 F.transform(
-                     F.array_sort(F.collect_list(F.struct("k", "rec"))),
-                     lambda x: x.rec), "").alias("data")))
-    return parse_warc(blobs)
-
-
-@q("caption_align", """
-  WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb, label
-             FROM embeddings),
-  p AS (SELECT a.vec_id // 2 AS pair_id, a.label AS img_label,
-               b.label AS cap_label,
-               round(list_cosine_similarity(a.emb, b.emb), 6) AS cosine
-        FROM e a JOIN e b ON b.vec_id = a.vec_id + 1
-        WHERE a.vec_id % 2 = 0)
-  SELECT pair_id, img_label, cap_label, cosine,
-         cosine >= 0.1 AS aligned,
-         img_label = cap_label AS label_match
-  FROM p
-""")
-def caption_align_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Image↔caption CLIP-score alignment over paired embedding rows
-    (even=image, odd=caption): single-shuffle pair assembly + rounded
-    cosine threshold (pipeline/similarity.caption_alignment)."""
-    return similarity.caption_alignment(
-        _t(spark, sf_dir, "embeddings"), threshold=0.1)
-
-
-@q("tokenizer_fertility", r"""
-  WITH per AS (
-    SELECT source, lang,
-           len(string_split_regex(trim(text), '[ \t\n\r\f\x0B]+')) AS w,
-           len(string_split_regex(trim(text), '[^A-Za-z0-9]+'))
-             + length(regexp_replace(text, '[A-Za-z0-9 \t\n\r\f\x0B]', '', 'g')) AS s,
-           length(text) AS c
-    FROM documents),
-  g AS (SELECT source, lang,
-               CAST(sum(w) AS BIGINT) AS words,
-               CAST(sum(s) AS BIGINT) AS subtokens,
-               CAST(sum(c) AS BIGINT) AS chars
-        FROM per GROUP BY source, lang)
-  SELECT source, lang, words, subtokens,
-         round(CAST(subtokens AS DOUBLE) / CAST(words AS DOUBLE), 6)
-           AS fertility,
-         round(CAST(chars AS DOUBLE) / CAST(subtokens AS DOUBLE), 6)
-           AS chars_per_subtoken
-  FROM g
-""")
-def tokenizer_fertility_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per source×lang tokenizer fertility (subtokens/word) and
-    compression (chars/subtoken) — the vocabulary-gap audit
-    (pipeline/text.tokenizer_fertility)."""
-    return ptext.tokenizer_fertility(_t(spark, sf_dir, "documents"))
-
-
-@q("wilson_quality", f"""
-  WITH {_lang_quality_ctes('documents')},
-  g AS (
-    SELECT d.source, CAST(count(*) AS BIGINT) AS n_docs,
-           CAST(sum(CASE WHEN s.quality >= 0.5 THEN 1 ELSE 0 END)
-                AS BIGINT) AS passes
-    FROM scored s JOIN documents d USING (doc_id)
-    GROUP BY d.source),
-  w AS (
-    SELECT source, n_docs, passes,
-           CAST(passes AS DOUBLE) / CAST(n_docs AS DOUBLE) AS p,
-           CAST(n_docs AS DOUBLE) AS n
-    FROM g)
-  SELECT source, n_docs, passes,
-         round(p, 6) AS pass_rate,
-         round((p + (1.96 * 1.96) / (2.0 * n)
-                - 1.96 * sqrt((p * (1.0 - p)
-                               + (1.96 * 1.96) / (4.0 * n)) / n))
-               / (1.0 + (1.96 * 1.96) / n), 6) AS wilson_lb
-  FROM w
-""")
-def wilson_quality_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-source quality pass rate with Wilson lower confidence bound —
-    the size-honest source ranking (pipeline/text.source_quality_bounds;
-    oracle reuses the one shared quality-score SQL mirror)."""
-    return ptext.source_quality_bounds(_t(spark, sf_dir, "documents"),
-                                       tau=0.5, z=1.96)
-
-
-# Two synthetic page snapshots from `orders`: v0 = floor(totalprice);
-# snapshot 1 deletes keys %17=0, rewrites keys %10=0 to 2*v0+1, and
-# inserts sibling keys -k for k%13=0 (k>0) valued v0+7.
-_SCD_S0_SQL = """
-  SELECT o_orderkey AS key,
-         CAST(floor(o_totalprice) AS BIGINT) AS v
-  FROM orders
-"""
-_SCD_S1_SQL = """
-  SELECT o_orderkey AS key,
-         CASE WHEN o_orderkey % 10 = 0
-              THEN CAST(floor(o_totalprice) AS BIGINT) * 2 + 1
-              ELSE CAST(floor(o_totalprice) AS BIGINT) END AS v
-  FROM orders WHERE o_orderkey % 17 <> 0
-  UNION ALL
-  SELECT -o_orderkey AS key,
-         CAST(floor(o_totalprice) AS BIGINT) + 7 AS v
-  FROM orders WHERE o_orderkey % 13 = 0 AND o_orderkey > 0
-"""
-
-
-def _scd_snapshots(spark: SparkSession, sf_dir: str):
-    orders = _t(spark, sf_dir, "orders")
-    k, v = F.col("o_orderkey"), F.floor("o_totalprice").cast("long")
-    s0 = orders.select(k.alias("key"), v.alias("v"))
-    s1 = (orders.where(k % 17 != 0)
-          .select(k.alias("key"),
-                  F.when(k % 10 == 0, v * 2 + 1).otherwise(v).alias("v"))
-          .unionAll(orders.where((k % 13 == 0) & (k > 0))
-                    .select((-k).alias("key"), (v + 7).alias("v"))))
-    return s0, s1
-
-
-@q("scd2_history", f"""
-  WITH s0 AS ({_SCD_S0_SQL}), s1 AS ({_SCD_S1_SQL}),
-  j AS (SELECT coalesce(s0.key, s1.key) AS key, s0.v AS v_old, s1.v AS v_new
-        FROM s0 FULL OUTER JOIN s1 ON s0.key = s1.key)
-  SELECT key, v_old AS content, CAST(0 AS BIGINT) AS valid_from,
-         CAST(NULL AS BIGINT) AS valid_to, TRUE AS is_current
-  FROM j WHERE v_old IS NOT NULL AND v_new = v_old
-  UNION ALL
-  SELECT key, v_old, CAST(0 AS BIGINT), CAST(1 AS BIGINT), FALSE
-  FROM j WHERE v_old IS NOT NULL AND (v_new IS NULL OR v_new <> v_old)
-  UNION ALL
-  SELECT key, v_new, CAST(1 AS BIGINT), CAST(NULL AS BIGINT), TRUE
-  FROM j WHERE v_new IS NOT NULL AND (v_old IS NULL OR v_new <> v_old)
-""")
-def scd2_history_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SCD2 MERGE of two synthetic page snapshots (update/delete/insert
-    branches all exercised): one full-outer key join + map-side row
-    generation, no window (tables/scd.scd2_merge)."""
-    from .tables.scd import scd2_merge
-    s0, s1 = _scd_snapshots(spark, sf_dir)
-    return scd2_merge(s0, s1, "key", "v")
 
 
 @q("robots_wildcard", f"""
@@ -4801,816 +834,6 @@ def robots_wildcard_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(F.array(*base)).alias("rules"))
     return (wildcard_rule_decisions(reqs)
             .select("url", "path", "allowed", "rule_len"))
-
-
-@q("margin_pairs", """
-  WITH e AS (SELECT vec_id AS id, CAST(embedding AS DOUBLE[]) AS emb
-             FROM embeddings),
-  s AS (SELECT id AS src_id, emb AS semb FROM e WHERE id % 2 = 0),
-  t AS (SELECT id AS tgt_id, emb AS temb FROM e WHERE id % 2 = 1),
-  sc AS (SELECT src_id, tgt_id,
-                CAST(round(round(list_cosine_similarity(semb, temb), 6)
-                           * 1000000.0, 0) AS BIGINT) AS c6
-         FROM s, t),
-  topx AS (SELECT src_id, tgt_id, c6,
-                  row_number() OVER (PARTITION BY src_id
-                                     ORDER BY c6 DESC, tgt_id) AS rx
-           FROM sc QUALIFY rx <= 4),
-  topy AS (SELECT src_id, tgt_id, c6,
-                  row_number() OVER (PARTITION BY tgt_id
-                                     ORDER BY c6 DESC, src_id) AS ry
-           FROM sc QUALIFY ry <= 4),
-  ax AS (SELECT src_id, CAST(sum(c6) AS BIGINT) AS ax_sum,
-                CAST(count(*) AS BIGINT) AS kx FROM topx GROUP BY src_id),
-  ay AS (SELECT tgt_id, CAST(sum(c6) AS BIGINT) AS ay_sum,
-                CAST(count(*) AS BIGINT) AS ky FROM topy GROUP BY tgt_id),
-  cand AS (
-    SELECT topx.src_id, topx.tgt_id,
-           CAST(c6 AS DOUBLE) / 1000000.0 AS cosine,
-           round((CAST(c6 AS DOUBLE) / 1000000.0)
-                 / ((CAST(ax_sum AS DOUBLE) / CAST(kx AS DOUBLE) / 1000000.0
-                     + CAST(ay_sum AS DOUBLE) / CAST(ky AS DOUBLE)
-                       / 1000000.0) / 2.0), 6) AS margin
-    FROM topx JOIN ax USING (src_id) JOIN ay USING (tgt_id))
-  SELECT src_id, tgt_id, cosine, margin
-  FROM (SELECT *, row_number() OVER (PARTITION BY src_id
-                                     ORDER BY margin DESC, tgt_id) AS rb
-        FROM cand)
-  WHERE rb = 1 AND margin >= 1.1
-""")
-def margin_pairs_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CCMatrix/LASER margin-scored pair mining (even ids = source side,
-    odd = target side): ratio margin over k=4 neighborhoods with
-    integer-micro-unit denominator sums for cross-engine bit stability
-    (pipeline/similarity.margin_pairs)."""
-    return similarity.margin_pairs(
-        _t(spark, sf_dir, "embeddings"), k=4, threshold=1.1)
-
-
-@q("cdc_chunks", lambda: _oracles.cdc_chunk_sql())
-def cdc_chunks_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Content-defined chunk dedup (FastCDC gear hash, min 8 / max 48 /
-    mask 0x1F): insertion-robust cross-document duplicate spans. The
-    boundary walk is Arrow-batched map-only; md5 + the rollup are
-    JVM-side; the oracle mirrors the spans and recomputes the
-    relational part (pipeline/dedup.cdc_chunk_stats)."""
-    return pdedup.cdc_chunk_stats(_t(spark, sf_dir, "documents"),
-                                  min_len=8, max_len=48, mask=0x1F)
-
-
-@q("jsonl_ingest", r"""
-  WITH src AS (
-    SELECT doc_id,
-           '{"id": ' || CAST(doc_id AS VARCHAR) || ', "lang": "' || lang
-             || '", "n": ' || CAST(n_chars AS VARCHAR) || '}' AS full_line
-    FROM documents),
-  lines AS (
-    SELECT doc_id AS line_id,
-           CASE WHEN doc_id % 13 = 0
-                THEN substring(full_line, 1, length(full_line) - 2)
-                ELSE full_line END AS line
-    FROM src),
-  p AS (SELECT line_id, line, try_cast(line AS JSON) AS j FROM lines)
-  SELECT line_id,
-         CAST(json_extract(j, '$.id') AS BIGINT) AS id,
-         json_extract_string(j, '$.lang') AS lang,
-         CAST(json_extract(j, '$.n') AS BIGINT) AS n,
-         j IS NULL AS is_corrupt,
-         CASE WHEN j IS NULL THEN line END AS raw
-  FROM p
-""")
-def jsonl_ingest_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Schema-on-read JSONL ingestion with corrupt-record quarantine
-    (1/13 of lines deliberately truncated): JVM from_json parse, NULL
-    struct -> quarantined raw line; the oracle re-parses the identical
-    lines with DuckDB's JSON reader (sources/jsonl.parse_jsonl)."""
-    from .sources.jsonl import parse_jsonl
-    d = F.col("doc_id")
-    full = F.concat(F.lit('{"id": '), d.cast("string"),
-                    F.lit(', "lang": "'), F.col("lang"),
-                    F.lit('", "n": '), F.col("n_chars").cast("string"),
-                    F.lit("}"))
-    lines = _t(spark, sf_dir, "documents").select(
-        d.alias("line_id"),
-        F.when(d % 13 == 0,
-               F.substring(full, F.lit(1), F.length(full) - 2))
-        .otherwise(full).alias("line"))
-    return parse_jsonl(lines, "id BIGINT, lang STRING, n BIGINT")
-
-
-@q("robots_semantics_diff", f"""
-  WITH fr AS ({_FRONTIER_SQL}),
-  paths AS (SELECT url, host, host_idx,
-                   regexp_extract(url, 'example\\.com(/.*)$', 1) AS path
-            FROM fr),
-  dec AS (
-    SELECT host, host_idx, url, path,
-           -- reference semantics: any disallow pattern substring of URL
-           (position('/p/' || CAST(host_idx % 10 AS VARCHAR) IN url) > 0
-            OR position('/q*' IN url) > 0) AS substr_blocked,
-           -- RFC 9309: longest match wins, allow wins ties
-           CASE
-             WHEN regexp_matches(path,
-                    '^/p/' || CAST(host_idx % 10 AS VARCHAR) || '5$')
-               THEN FALSE
-             WHEN regexp_matches(path,
-                    '^/p/' || CAST(host_idx % 10 AS VARCHAR))
-               THEN TRUE
-             ELSE FALSE
-           END AS rep_blocked
-    FROM paths)
-  SELECT host,
-         CAST(count(*) AS BIGINT) AS n_urls,
-         CAST(sum(CASE WHEN substr_blocked THEN 1 ELSE 0 END) AS BIGINT)
-           AS substr_blocked,
-         CAST(sum(CASE WHEN rep_blocked THEN 1 ELSE 0 END) AS BIGINT)
-           AS rep_blocked,
-         CAST(sum(CASE WHEN substr_blocked <> rep_blocked
-                       THEN 1 ELSE 0 END) AS BIGINT) AS diverging
-  FROM dec GROUP BY host
-""")
-def robots_semantics_diff_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Side-by-side audit of the reference's substring robots semantics
-    (operators/robots.filter_robots, bug-for-bug) vs RFC 9309
-    longest-match (wildcard_rule_decisions) over one rule set
-    — per host: how many URLs each tier blocks and where they diverge
-    (the anchored allow '/p/X5$' the substring matcher cannot honor)."""
-    from .operators.robots import wildcard_rule_decisions
-    fr = _frontier_from_orders(spark, sf_dir)
-    x = (F.col("host_idx") % 10).cast("string")
-    reqs = fr.select(
-        "url", "host",
-        F.regexp_extract("url", r"example\.com(/.*)$", 1).alias("path"),
-        F.array(F.concat(F.lit("/p/"), x), F.lit("/q*"))
-        .alias("robots_disallow"),
-        F.array(
-            F.struct(F.lit(False).alias("allow"),
-                     F.concat(F.lit("/p/"), x).alias("pattern")),
-            F.struct(F.lit(True).alias("allow"),
-                     F.concat(F.lit("/p/"), x, F.lit("5$"))
-                     .alias("pattern")),
-            F.struct(F.lit(False).alias("allow"),
-                     F.lit("/q*").alias("pattern"))).alias("rules"))
-    # reference tier: exists-substring over the URL (filter_robots core)
-    substr_blocked = F.exists(
-        "robots_disallow", lambda p: F.col("url").contains(p))
-    rep = wildcard_rule_decisions(reqs)
-    return (rep
-            .withColumn("substr_blocked", substr_blocked)
-            .withColumn("rep_blocked", ~F.col("allowed"))
-            .groupBy("host")
-            .agg(F.count(F.lit(1)).alias("n_urls"),
-                 F.sum(F.col("substr_blocked").cast("long")).cast("long")
-                 .alias("substr_blocked"),
-                 F.sum(F.col("rep_blocked").cast("long")).cast("long")
-                 .alias("rep_blocked"),
-                 F.sum((F.col("substr_blocked") != F.col("rep_blocked"))
-                       .cast("long")).cast("long").alias("diverging")))
-
-
-# ---------------------------------------------------------------------------
-# URL category blocklist (functions/urls.blocklist_category): the UT1-style
-# operational form of the reference's allow/exclude gates
-# (core/WebCrawler.java:218-238) — category host-suffix/path-prefix rules,
-# first match wins, folded map-side like the PSL (no join/shuffle/UDF).
-# ---------------------------------------------------------------------------
-
-_BLOCKLIST_RULES = (
-    ("ok", "h0003.example.com", "/p/1"),       # exemption: earlier rule wins
-    ("adult", "h0003.example.com", ""),
-    ("ads", "example.com", "/p/7"),            # suffix rule: any subdomain
-    ("tracker", "h0007.example.com", ""),
-)
-
-
-@q("blocklist_gate", f"""
-  WITH fr AS ({_FRONTIER_SQL}),
-  p AS (SELECT url, host,
-               regexp_extract(url, 'example\\.com(/.*)$', 1) AS path
-        FROM fr),
-  cat AS (
-    SELECT url, host,
-      CASE
-        WHEN host = 'h0003.example.com' AND starts_with(path, '/p/1')
-          THEN 'ok'
-        WHEN host = 'h0003.example.com' THEN 'adult'
-        WHEN (host = 'example.com' OR host LIKE '%.example.com')
-             AND starts_with(path, '/p/7') THEN 'ads'
-        WHEN host = 'h0007.example.com' THEN 'tracker'
-      END AS category
-    FROM p)
-  SELECT url, host, category,
-         (category IS NOT NULL AND category <> 'ok') AS blocked
-  FROM cat
-""")
-def blocklist_gate_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Category blocklist over the frontier: first-match-wins
-    (category, host_suffix, path_prefix) rules as one map-side literal
-    fold; 'ok' is an exemption category proving rule order. The oracle
-    restates the ordered rules as a CASE chain."""
-    from .functions.urls import blocklist_category
-    fr = _frontier_from_orders(spark, sf_dir)
-    cat = blocklist_category(F.col("url"), _BLOCKLIST_RULES)
-    return fr.select(
-        "url", "host", cat.alias("category"),
-        (cat.isNotNull() & (cat != "ok")).alias("blocked"))
-
-
-# ---------------------------------------------------------------------------
-# robots.txt Sitemap: discovery (operators/sitemap.robots_sitemap_urls):
-# the directive that feeds parse_sitemaps its inputs. The synthetic robots
-# text carries a mixed-case directive, a cross-host directive (legal), a
-# relative value (invalid, dropped) and an exact duplicate (collapsed).
-# ---------------------------------------------------------------------------
-
-@q("robots_sitemaps", """
-  WITH hosts AS (
-    SELECT DISTINCT
-      'h' || lpad(CAST(o_custkey % 20 AS VARCHAR), 4, '0')
-          || '.example.com' AS host,
-      CAST(o_custkey % 20 AS INTEGER) AS host_idx
-    FROM orders),
-  txt AS (
-    SELECT host,
-      'User-agent: *' || chr(10)
-      || 'Sitemap: http://' || host || '/sitemap.xml' || chr(10)
-      || 'Disallow: /admin' || chr(10)
-      || '  sitemap: https://cdn.example.org/sm/'
-         || CAST(host_idx AS VARCHAR) || '.xml' || chr(10)
-      || 'Sitemap: /relative.xml' || chr(10)
-      || 'Sitemap: http://' || host || '/sitemap.xml' AS robots_txt
-    FROM hosts),
-  lines AS (
-    SELECT host, trim(l) AS line
-    FROM (SELECT host, unnest(string_split(robots_txt, chr(10))) AS l
-          FROM txt)),
-  vals AS (
-    SELECT host,
-           trim(regexp_replace(line, '^[Ss][Ii][Tt][Ee][Mm][Aa][Pp]\\s*:',
-                               '')) AS sitemap_url
-    FROM lines WHERE regexp_matches(line, '^(?i)sitemap\\s*:'))
-  SELECT DISTINCT host, sitemap_url FROM vals
-  WHERE regexp_matches(sitemap_url, '^https?://')
-""")
-def robots_sitemaps_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sitemap discovery from robots.txt directives: case-insensitive
-    `Sitemap:` lines, absolute-URL validation, cross-host allowed,
-    duplicates collapsed."""
-    from .operators.sitemap import robots_sitemap_urls
-    frontier = _frontier_from_orders(spark, sf_dir)
-    hosts = frontier.select("host", "host_idx").distinct()
-    robots_txt = F.concat(
-        F.lit("User-agent: *\nSitemap: http://"), F.col("host"),
-        F.lit("/sitemap.xml\nDisallow: /admin\n  sitemap: "
-              "https://cdn.example.org/sm/"),
-        F.col("host_idx").cast("string"),
-        F.lit(".xml\nSitemap: /relative.xml\nSitemap: http://"),
-        F.col("host"), F.lit("/sitemap.xml"))
-    return robots_sitemap_urls(
-        hosts.select("host", robots_txt.alias("robots_txt")))
-
-
-# ---------------------------------------------------------------------------
-# host-scoped boilerplate removal (pipeline/text.host_boilerplate_scrub).
-# Derivation keeps `source` as the host grain: every doc gets its host's
-# nav bar (per-host df = 100% -> stripped), docs with doc_id%3==0 get a
-# corpus-popular quote (per-host df ~32% < 50% -> KEPT at host grain,
-# exactly the line corpus-wide line_dedup would remove), and a unique
-# "section <doc_id>" line (kept).
-# ---------------------------------------------------------------------------
-
-_HOSTED_DOCS_SQL = """hdocs AS (
-    SELECT doc_id, source,
-      array_to_string(
-        list_transform(range(0, CAST(ceil(len(toks) / 8.0) AS INT)),
-                       i -> array_to_string(toks[i*8+1 : i*8+8], ' ')),
-        chr(10))
-      || chr(10) || 'home | about | ' || source
-      || CASE WHEN doc_id % 3 = 0
-              THEN chr(10) || 'the quick brown fox' ELSE '' END
-      || chr(10) || 'section ' || CAST(doc_id AS VARCHAR) AS text
-    FROM (SELECT doc_id, source, string_split(text, ' ') AS toks
-          FROM documents))"""
-
-
-def _hosted_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _t(spark, sf_dir, "documents")
-    toks = F.split(F.col("text"), " ")
-    n_lines = F.ceil(F.size(toks) / F.lit(8.0)).cast("int")
-    body = F.array_join(
-        F.transform(F.sequence(F.lit(0), n_lines - 1),
-                    lambda i: F.array_join(
-                        F.slice(toks, i * 8 + 1, 8), " ")),
-        "\n")
-    d = F.col("doc_id")
-    return docs.select(
-        "doc_id", "source",
-        F.concat(body,
-                 F.lit("\nhome | about | "), F.col("source"),
-                 F.when(d % 3 == 0,
-                        F.lit("\nthe quick brown fox")).otherwise(F.lit("")),
-                 F.lit("\nsection "), d.cast("string")).alias("text"))
-
-
-@q("host_boilerplate", f"""
-  WITH {_HOSTED_DOCS_SQL},
-  lines AS (
-    SELECT source AS host, doc_id, i AS pos, trim(l[i]) AS line
-    FROM (SELECT doc_id, source, string_split(text, chr(10)) AS l
-          FROM hdocs),
-         UNNEST(range(1, len(l) + 1)) AS u(i)
-    WHERE length(trim(l[i])) > 0),
-  perhost AS (SELECT source AS host, count(*) AS n_docs
-              FROM hdocs GROUP BY source),
-  linedf AS (
-    SELECT host, line, count(*) AS df
-    FROM (SELECT DISTINCT host, doc_id, line FROM lines)
-    GROUP BY host, line),
-  chrome AS (
-    SELECT d.host, d.line
-    FROM linedf d JOIN perhost p USING (host)
-    WHERE p.n_docs >= 5
-      AND d.df >= greatest(CAST(ceil(0.5 * p.n_docs) AS BIGINT), 2)),
-  kept AS (
-    SELECT l.* FROM lines l
-    WHERE NOT EXISTS (SELECT 1 FROM chrome c
-                      WHERE c.host = l.host AND c.line = l.line)),
-  rebuilt AS (
-    SELECT host, doc_id,
-           string_agg(line, chr(10) ORDER BY pos) AS clean_text,
-           count(*) AS n_kept
-    FROM kept GROUP BY host, doc_id),
-  totals AS (SELECT host, doc_id, count(*) AS n_lines
-             FROM lines GROUP BY host, doc_id)
-  SELECT t.doc_id, t.host, coalesce(r.clean_text, '') AS clean_text,
-         CAST(t.n_lines AS BIGINT) AS n_lines,
-         CAST(coalesce(r.n_kept, 0) AS BIGINT) AS n_kept
-  FROM totals t LEFT JOIN rebuilt r
-    ON r.host = t.host AND r.doc_id = t.doc_id
-""")
-def host_boilerplate_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Host-grain template chrome removal: strip lines on >=50% of one
-    host's pages; a corpus-popular line under the per-host threshold
-    survives (the line corpus-wide line_dedup would cut)."""
-    return ptext.host_boilerplate_scrub(
-        _hosted_docs(spark, sf_dir), min_docs=5, frac=0.5)
-
-
-# ---------------------------------------------------------------------------
-# exact duplicate-span REMOVAL (pipeline/dedup.duplicate_span_scrub) — the
-# executed form of dup_span_stats. The derivation plants both duplication
-# modes: docs with doc_id%4==0 share a verbatim 12-token sentence
-# (cross-document; the min-(doc_id,pos) owner keeps it), and docs with
-# doc_id%10==7 repeat their own first 10 tokens at the end (within-doc).
-# ---------------------------------------------------------------------------
-
-_SPAN_DOCS_SQL = """sdocs AS (
-    SELECT doc_id,
-      text
-      || CASE WHEN doc_id % 4 = 0
-              THEN ' alpha beta gamma delta epsilon zeta eta theta'
-                   || ' iota kappa lambda mu' ELSE '' END
-      || CASE WHEN doc_id % 10 = 7
-              THEN ' ' || array_to_string(
-                     string_split_regex(trim(text), '[ \\t\\n\\r\\f\\x0B]+')[1:10], ' ')
-              ELSE '' END AS text
-    FROM documents)"""
-
-
-def _span_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _t(spark, sf_dir, "documents")
-    toks = F.split(F.trim(F.col("text")), ptext.WS_PLUS)
-    d = F.col("doc_id")
-    return docs.select(
-        "doc_id",
-        F.concat(
-            F.col("text"),
-            F.when(d % 4 == 0,
-                   F.lit(" alpha beta gamma delta epsilon zeta eta theta"
-                         " iota kappa lambda mu")).otherwise(F.lit("")),
-            F.when(d % 10 == 7,
-                   F.concat(F.lit(" "),
-                            F.array_join(F.slice(toks, 1, 10), " ")))
-            .otherwise(F.lit(""))).alias("text"))
-
-
-@q("dup_span_scrub", f"""
-  WITH {_SPAN_DOCS_SQL},
-  dt AS (
-    SELECT doc_id, string_split_regex(trim(text), '[ \\t\\n\\r\\f\\x0B]+') AS t FROM sdocs),
-  win AS (
-    SELECT doc_id, i AS pos, array_to_string(t[i:i + 7], ' ') AS key
-    FROM dt, UNNEST(range(1, len(t) - 8 + 2)) AS u(i)
-    WHERE len(t) >= 8),
-  fl AS (
-    SELECT doc_id, pos, pos + 7 AS e
-    FROM (SELECT doc_id, pos,
-                 count(*) OVER (PARTITION BY key) AS c,
-                 row_number() OVER (PARTITION BY key
-                                    ORDER BY doc_id, pos) AS rn
-          FROM win)
-    WHERE c > 1 AND rn > 1),
-  grps AS (
-    SELECT doc_id, pos, e,
-           sum(CASE WHEN pe IS NULL OR pos > pe + 1 THEN 1 ELSE 0 END)
-             OVER (PARTITION BY doc_id ORDER BY pos) AS grp
-    FROM (SELECT doc_id, pos, e,
-                 max(e) OVER (PARTITION BY doc_id ORDER BY pos
-                              ROWS BETWEEN UNBOUNDED PRECEDING
-                              AND 1 PRECEDING) AS pe
-          FROM fl)),
-  spans AS (SELECT doc_id, min(pos) AS s, max(e) AS e
-            FROM grps GROUP BY doc_id, grp),
-  cut AS (SELECT doc_id, unnest(range(s, e + 1)) AS tpos FROM spans),
-  tokens AS (
-    SELECT doc_id, i AS tpos, t[i] AS tok
-    FROM dt, UNNEST(range(1, len(t) + 1)) AS u(i)),
-  kept AS (
-    SELECT tk.doc_id, tk.tpos, tk.tok
-    FROM tokens tk LEFT JOIN cut c
-      ON c.doc_id = tk.doc_id AND c.tpos = tk.tpos
-    WHERE c.doc_id IS NULL),
-  rebuilt AS (
-    SELECT doc_id, string_agg(tok, ' ' ORDER BY tpos) AS clean_text,
-           count(*) AS nk
-    FROM kept GROUP BY doc_id),
-  tot AS (SELECT doc_id, len(t) AS n_tokens FROM dt)
-  SELECT t.doc_id, coalesce(r.clean_text, '') AS clean_text,
-         CAST(t.n_tokens AS BIGINT) AS n_tokens,
-         CAST(t.n_tokens - coalesce(r.nk, 0) AS BIGINT) AS n_removed
-  FROM tot t LEFT JOIN rebuilt r USING (doc_id)
-""")
-def dup_span_scrub_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact-substring dedup EXECUTED (Lee et al.): repeated 8-token
-    windows removed everywhere but their first (doc_id, pos) occurrence,
-    overlapping windows merged into maximal spans before cutting."""
-    return pdedup.duplicate_span_scrub(_span_docs(spark, sf_dir), w=8)
-
-
-# ---------------------------------------------------------------------------
-# composed discovery flagship: robots.txt Sitemap: declarations select
-# which hosts' sitemaps get parsed, sitemap entries become frontier
-# candidates, the category blocklist and the URL-seen set gate them, and
-# survivors carry sitemaps.org effective priority (absent -> 0.5 default).
-# Every stage is the standalone production operator; the oracle restates
-# the full chain. Seen fixture: hosts with host_idx%4==0 already fetched
-# their /s/0 page.
-# ---------------------------------------------------------------------------
-
-@q("discovery_pipeline", """
-  WITH hosts AS (
-    SELECT DISTINCT
-      'h' || lpad(CAST(o_custkey % 20 AS VARCHAR), 4, '0')
-          || '.example.com' AS host,
-      CAST(o_custkey % 20 AS INTEGER) AS host_idx
-    FROM orders),
-  rtxt AS (
-    SELECT host,
-      'User-agent: *' || chr(10)
-      || 'Sitemap: http://' || host || '/sitemap.xml' || chr(10)
-      || 'Disallow: /admin' || chr(10)
-      || '  sitemap: https://cdn.example.org/sm/'
-         || CAST(host_idx AS VARCHAR) || '.xml' AS robots_txt
-    FROM hosts),
-  rlines AS (
-    SELECT host, trim(l) AS line
-    FROM (SELECT host, unnest(string_split(robots_txt, chr(10))) AS l
-          FROM rtxt)),
-  declared AS (
-    SELECT host,
-           trim(regexp_replace(line, '^[Ss][Ii][Tt][Ee][Mm][Aa][Pp]\\s*:',
-                               '')) AS sitemap_url
-    FROM rlines WHERE regexp_matches(line, '^(?i)sitemap\\s*:')),
-  own AS (
-    SELECT DISTINCT host FROM declared
-    WHERE sitemap_url = 'http://' || host || '/sitemap.xml'),
-  sm AS (SELECT h.host, h.host_idx, '<urlset>'
-    || '<url><loc>http://' || h.host || '/s/0</loc><lastmod>2023-11-'
-       || lpad(CAST(h.host_idx % 27 + 1 AS VARCHAR), 2, '0')
-       || '</lastmod><priority>0.' || CAST(h.host_idx % 9 + 1 AS VARCHAR)
-       || '</priority></url>'
-    || '<url><loc>http://' || h.host || '/s/1</loc></url>'
-    || '<url><loc>http://' || h.host
-       || '/s/0</loc><lastmod>2024-01-01</lastmod></url>'
-    || '<url><loc>http://evil.example.org/x</loc></url>'
-    || '<url><lastmod>2023-01-01</lastmod></url></urlset>' AS xml
-    FROM hosts h JOIN own USING (host)),
-  blocks AS (
-    SELECT host, CAST(i AS INTEGER) AS entry_idx,
-           list_extract(regexp_extract_all(xml, '<url>(.*?)</url>', 1),
-                        CAST(i AS INTEGER)) AS block
-    FROM sm, range(1, 6) AS r(i)),
-  parsed AS (
-    SELECT host, entry_idx,
-           regexp_extract(block, '<loc>(.*?)</loc>', 1) AS url,
-           CAST(nullif(regexp_extract(block, '<lastmod>(.*?)</lastmod>', 1),
-                       '') AS DATE) AS lastmod,
-           CAST(nullif(regexp_extract(block,
-                                      '<priority>(.*?)</priority>', 1),
-                       '') AS DOUBLE) AS priority
-    FROM blocks),
-  kept AS (
-    SELECT * FROM parsed
-    WHERE length(url) > 0
-      AND (starts_with(url, 'http://' || host || '/')
-           OR starts_with(url, 'https://' || host || '/'))),
-  first_wins AS (
-    SELECT host, url, lastmod, priority FROM kept
-    QUALIFY row_number() OVER (PARTITION BY host, url
-                               ORDER BY entry_idx) = 1),
-  gated AS (
-    SELECT f.* FROM first_wins f
-    WHERE coalesce(
-      CASE
-        WHEN f.host = 'h0003.example.com'
-             AND starts_with(regexp_extract(f.url,
-                   'example\\.com(/.*)$', 1), '/p/1') THEN 'ok'
-        WHEN f.host = 'h0003.example.com' THEN 'adult'
-        WHEN (f.host = 'example.com' OR f.host LIKE '%.example.com')
-             AND starts_with(regexp_extract(f.url,
-                   'example\\.com(/.*)$', 1), '/p/7') THEN 'ads'
-        WHEN f.host = 'h0007.example.com' THEN 'tracker'
-      END, 'ok') IN ('ok')),
-  seen AS (
-    SELECT 'http://' || host || '/s/0' AS url
-    FROM hosts WHERE host_idx % 4 = 0)
-  SELECT g.url, g.host,
-         coalesce(g.priority, 0.5) AS eff_priority,
-         strftime(g.lastmod, '%Y-%m-%d') AS lastmod
-  FROM gated g LEFT JOIN seen s ON s.url = g.url
-  WHERE s.url IS NULL
-""")
-def discovery_pipeline_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Composed crawl-discovery chain: robots Sitemap: declarations ->
-    own-host sitemap parse -> category blocklist -> URL-seen anti-join;
-    survivors carry the sitemaps.org default priority 0.5 when the
-    entry had none. All stages are the production operators."""
-    from .functions.urls import blocklist_category
-    from .operators.sitemap import parse_sitemaps, robots_sitemap_urls
-    hosts = (_frontier_from_orders(spark, sf_dir)
-             .select("host", "host_idx").distinct())
-    robots_txt = F.concat(
-        F.lit("User-agent: *\nSitemap: http://"), F.col("host"),
-        F.lit("/sitemap.xml\nDisallow: /admin\n  sitemap: "
-              "https://cdn.example.org/sm/"),
-        F.col("host_idx").cast("string"), F.lit(".xml"))
-    declared = robots_sitemap_urls(
-        hosts.select("host", robots_txt.alias("robots_txt")))
-    own = (declared
-           .where(F.col("sitemap_url") ==
-                  F.concat(F.lit("http://"), F.col("host"),
-                           F.lit("/sitemap.xml")))
-           .select("host").distinct())
-    h = F.col("host")
-    d2 = F.lpad(((F.col("host_idx") % 27) + 1).cast("string"), 2, "0")
-    pr = ((F.col("host_idx") % 9) + 1).cast("string")
-    xml = F.concat(
-        F.lit("<urlset>"),
-        F.lit("<url><loc>http://"), h,
-        F.lit("/s/0</loc><lastmod>2023-11-"), d2,
-        F.lit("</lastmod><priority>0."), pr, F.lit("</priority></url>"),
-        F.lit("<url><loc>http://"), h, F.lit("/s/1</loc></url>"),
-        F.lit("<url><loc>http://"), h,
-        F.lit("/s/0</loc><lastmod>2024-01-01</lastmod></url>"),
-        F.lit("<url><loc>http://evil.example.org/x</loc></url>"),
-        F.lit("<url><lastmod>2023-01-01</lastmod></url></urlset>"))
-    cands = parse_sitemaps(
-        hosts.join(own, "host").select("host", xml.alias("xml")))
-    cat = blocklist_category(F.col("url"), _BLOCKLIST_RULES)
-    gated = cands.where(cat.isNull() | (cat == "ok"))
-    seen = (hosts.where(F.col("host_idx") % 4 == 0)
-            .select(F.concat(F.lit("http://"), F.col("host"),
-                             F.lit("/s/0")).alias("url")))
-    fresh = gated.join(seen, "url", "left_anti")
-    return fresh.select(
-        "url", "host",
-        F.coalesce("priority", F.lit(0.5)).alias("eff_priority"),
-        F.date_format("lastmod", "yyyy-MM-dd").alias("lastmod"))
-
-
-# ---------------------------------------------------------------------------
-# HTML body-text extraction (operators/htmlmeta.html_to_text): the
-# crawl→documents bridge. The fixture exercises every rule: script with a
-# '<' inside, style, comments, block boundaries, entity decode including
-# the double-escaped one-level case (&amp;lt; -> &lt;), whitespace runs.
-# ---------------------------------------------------------------------------
-
-@q("html_to_text", r"""
-  WITH h AS (
-    SELECT 'http://corpus.example.com/doc/' || CAST(doc_id AS VARCHAR)
-             AS url,
-           '<html><head><title>Doc ' || CAST(doc_id AS VARCHAR)
-           || '</title><style>p {color: red}</style></head>'
-           || '<body><script type="text/javascript">var x = 1 < 2;'
-           || '</script><h1>Doc ' || CAST(doc_id AS VARCHAR) || '</h1><p>'
-           || text || '</p><!-- generated -->'
-           || '<div>Tom &amp; Jerry &lt;3 &amp;lt;escaped&gt;</div>'
-           || '</body></html>' AS html
-    FROM documents),
-  s1 AS (SELECT url, regexp_replace(html,
-           '(?is)<(script|style)[^>]*>.*?</(script|style)>', '', 'g') AS t
-         FROM h),
-  s2 AS (SELECT url, regexp_replace(t, '(?s)<!--.*?-->', '', 'g') AS t
-         FROM s1),
-  s3 AS (SELECT url, regexp_replace(t,
-           '(?i)</(p|div|h[1-6]|li|tr|table|ul|ol|blockquote|section|article|header|footer)>|<br[^>]*>',
-           chr(10), 'g') AS t FROM s2),
-  s4 AS (SELECT url, regexp_replace(t, '(?s)<[^>]*>', '', 'g') AS t
-         FROM s3),
-  s5 AS (SELECT url,
-           replace(replace(replace(replace(replace(replace(t,
-             '&lt;', '<'), '&gt;', '>'), '&quot;', '"'),
-             '&#39;', chr(39)), '&nbsp;', ' '), '&amp;', '&') AS t
-         FROM s4),
-  s6 AS (SELECT url, regexp_replace(t, '[ \t\r]+', ' ', 'g') AS t FROM s5),
-  s7 AS (SELECT url, regexp_replace(t, ' ?\n ?', chr(10), 'g') AS t
-         FROM s6),
-  s8 AS (SELECT url, regexp_replace(t, '\n{2,}', chr(10), 'g') AS t
-         FROM s7)
-  SELECT url, regexp_replace(t, '^\n|\n$', '', 'g') AS text FROM s8
-""")
-def html_to_text_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Rendered body text from raw HTML: scripts/styles/comments dropped,
-    block boundaries kept as newlines, tags stripped, entities decoded
-    one level, whitespace normalized — one map-only RE2-safe chain."""
-    from .operators.htmlmeta import html_to_text
-    docs = _t(spark, sf_dir, "documents")
-    d = F.col("doc_id").cast("string")
-    html = F.concat(
-        F.lit("<html><head><title>Doc "), d,
-        F.lit("</title><style>p {color: red}</style></head>"
-              '<body><script type="text/javascript">var x = 1 < 2;'
-              "</script><h1>Doc "), d, F.lit("</h1><p>"),
-        F.col("text"),
-        F.lit("</p><!-- generated -->"
-              "<div>Tom &amp; Jerry &lt;3 &amp;lt;escaped&gt;</div>"
-              "</body></html>"))
-    pages = docs.select(
-        F.concat(F.lit("http://corpus.example.com/doc/"), d).alias("url"),
-        html.alias("html"))
-    return html_to_text(pages)
-
-
-# ---------------------------------------------------------------------------
-# extraction flagship: the crawl→clean-corpus chain EXECUTED end-to-end —
-# html_to_text → host_boilerplate_scrub → duplicate_span_scrub. Fixture:
-# per-doc HTML with a unique <h1>, the host's nav chrome (df=100% per
-# source → boilerplate-stripped), the body text, a shared 12-token
-# sentence on doc_id%4==0 (survives the host grain at ~25% df, then cut
-# by span scrub everywhere but its min-(doc_id,pos) owner), and a unique
-# section line. The oracle restates the whole chain.
-# ---------------------------------------------------------------------------
-
-@q("extraction_pipeline", r"""
-  WITH h AS (
-    SELECT doc_id, source,
-      '<html><body><h1>Doc ' || CAST(doc_id AS VARCHAR)
-      || '</h1><div>home | about | ' || source || '</div><p>' || text
-      || '</p>'
-      || CASE WHEN doc_id % 4 = 0
-              THEN '<p>alpha beta gamma delta epsilon zeta eta theta'
-                   || ' iota kappa lambda mu</p>' ELSE '' END
-      || '<div>section ' || CAST(doc_id AS VARCHAR) || '</div>'
-      || '</body></html>' AS html
-    FROM documents),
-  x1 AS (SELECT doc_id, source, regexp_replace(html,
-           '(?is)<(script|style)[^>]*>.*?</(script|style)>', '', 'g') AS t
-         FROM h),
-  x2 AS (SELECT doc_id, source,
-           regexp_replace(t, '(?s)<!--.*?-->', '', 'g') AS t FROM x1),
-  x3 AS (SELECT doc_id, source, regexp_replace(t,
-           '(?i)</(p|div|h[1-6]|li|tr|table|ul|ol|blockquote|section|article|header|footer)>|<br[^>]*>',
-           chr(10), 'g') AS t FROM x2),
-  x4 AS (SELECT doc_id, source,
-           regexp_replace(t, '(?s)<[^>]*>', '', 'g') AS t FROM x3),
-  x5 AS (SELECT doc_id, source,
-           replace(replace(replace(replace(replace(replace(t,
-             '&lt;', '<'), '&gt;', '>'), '&quot;', '"'),
-             '&#39;', chr(39)), '&nbsp;', ' '), '&amp;', '&') AS t
-         FROM x4),
-  x6 AS (SELECT doc_id, source,
-           regexp_replace(t, '[ \t\r]+', ' ', 'g') AS t FROM x5),
-  x7 AS (SELECT doc_id, source,
-           regexp_replace(t, ' ?\n ?', chr(10), 'g') AS t FROM x6),
-  x8 AS (SELECT doc_id, source,
-           regexp_replace(t, '\n{2,}', chr(10), 'g') AS t FROM x7),
-  txt AS (SELECT doc_id, source AS host,
-                 regexp_replace(t, '^\n|\n$', '', 'g') AS text FROM x8),
-  lines AS (
-    SELECT host, doc_id, i AS pos, trim(l[i]) AS line
-    FROM (SELECT host, doc_id, string_split(text, chr(10)) AS l
-          FROM txt),
-         UNNEST(range(1, len(l) + 1)) AS u(i)
-    WHERE length(trim(l[i])) > 0),
-  perhost AS (SELECT host, count(*) AS n_docs FROM txt GROUP BY host),
-  linedf AS (
-    SELECT host, line, count(*) AS df
-    FROM (SELECT DISTINCT host, doc_id, line FROM lines)
-    GROUP BY host, line),
-  chrome AS (
-    SELECT d.host, d.line
-    FROM linedf d JOIN perhost p USING (host)
-    WHERE p.n_docs >= 5
-      AND d.df >= greatest(CAST(ceil(0.5 * p.n_docs) AS BIGINT), 2)),
-  keptl AS (
-    SELECT l.* FROM lines l
-    WHERE NOT EXISTS (SELECT 1 FROM chrome c
-                      WHERE c.host = l.host AND c.line = l.line)),
-  rebuiltl AS (
-    SELECT host, doc_id,
-           string_agg(line, chr(10) ORDER BY pos) AS clean1,
-           count(*) AS n_kept
-    FROM keptl GROUP BY host, doc_id),
-  totalsl AS (SELECT host, doc_id, count(*) AS n_lines
-              FROM lines GROUP BY host, doc_id),
-  bp AS (
-    SELECT t.doc_id, t.host, coalesce(r.clean1, '') AS clean1,
-           t.n_lines, coalesce(r.n_kept, 0) AS n_kept
-    FROM totalsl t LEFT JOIN rebuiltl r
-      ON r.host = t.host AND r.doc_id = t.doc_id),
-  dt AS (
-    SELECT doc_id, string_split_regex(trim(clean1), '[ \t\n\r\f\x0B]+') AS t FROM bp),
-  win AS (
-    SELECT doc_id, i AS pos, array_to_string(t[i:i + 7], ' ') AS key
-    FROM dt, UNNEST(range(1, len(t) - 8 + 2)) AS u(i)
-    WHERE len(t) >= 8),
-  fl AS (
-    SELECT doc_id, pos, pos + 7 AS e
-    FROM (SELECT doc_id, pos,
-                 count(*) OVER (PARTITION BY key) AS c,
-                 row_number() OVER (PARTITION BY key
-                                    ORDER BY doc_id, pos) AS rn
-          FROM win)
-    WHERE c > 1 AND rn > 1),
-  grps AS (
-    SELECT doc_id, pos, e,
-           sum(CASE WHEN pe IS NULL OR pos > pe + 1 THEN 1 ELSE 0 END)
-             OVER (PARTITION BY doc_id ORDER BY pos) AS grp
-    FROM (SELECT doc_id, pos, e,
-                 max(e) OVER (PARTITION BY doc_id ORDER BY pos
-                              ROWS BETWEEN UNBOUNDED PRECEDING
-                              AND 1 PRECEDING) AS pe
-          FROM fl)),
-  spans AS (SELECT doc_id, min(pos) AS s, max(e) AS e
-            FROM grps GROUP BY doc_id, grp),
-  cut AS (SELECT doc_id, unnest(range(s, e + 1)) AS tpos FROM spans),
-  tokens AS (
-    SELECT doc_id, i AS tpos, t[i] AS tok
-    FROM dt, UNNEST(range(1, len(t) + 1)) AS u(i)),
-  kept2 AS (
-    SELECT tk.doc_id, tk.tpos, tk.tok
-    FROM tokens tk LEFT JOIN cut c
-      ON c.doc_id = tk.doc_id AND c.tpos = tk.tpos
-    WHERE c.doc_id IS NULL),
-  rebuilt2 AS (
-    SELECT doc_id, string_agg(tok, ' ' ORDER BY tpos) AS clean_text,
-           count(*) AS nk
-    FROM kept2 GROUP BY doc_id),
-  tot2 AS (SELECT doc_id, len(t) AS n_tokens FROM dt)
-  SELECT b.doc_id, b.host,
-         coalesce(r.clean_text, '') AS clean_text,
-         CAST(b.n_lines AS BIGINT) AS n_lines,
-         CAST(b.n_kept AS BIGINT) AS n_kept,
-         CAST(t.n_tokens AS BIGINT) AS n_tokens,
-         CAST(t.n_tokens - coalesce(r.nk, 0) AS BIGINT) AS n_removed
-  FROM bp b
-  JOIN tot2 t ON t.doc_id = b.doc_id
-  LEFT JOIN rebuilt2 r ON r.doc_id = b.doc_id
-""")
-def extraction_pipeline_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The crawl→clean-corpus extraction chain end-to-end: render HTML to
-    text, strip the host's template chrome, then cut corpus-duplicated
-    spans (owner survives). Every stage is the standalone operator."""
-    from .operators.htmlmeta import html_to_text
-    docs = _t(spark, sf_dir, "documents")
-    d = F.col("doc_id").cast("string")
-    html = F.concat(
-        F.lit("<html><body><h1>Doc "), d,
-        F.lit("</h1><div>home | about | "), F.col("source"),
-        F.lit("</div><p>"), F.col("text"), F.lit("</p>"),
-        F.when(F.col("doc_id") % 4 == 0,
-               F.lit("<p>alpha beta gamma delta epsilon zeta eta theta"
-                     " iota kappa lambda mu</p>")).otherwise(F.lit("")),
-        F.lit("<div>section "), d, F.lit("</div></body></html>"))
-    pages = docs.select(
-        F.concat(F.lit("http://"), F.col("source"),
-                 F.lit(".corpus.example.com/doc/"), d).alias("url"),
-        html.alias("html"))
-    texts = html_to_text(pages)
-    parsed = texts.select(
-        F.regexp_extract("url", r"/doc/([0-9]+)$", 1).cast("long")
-        .alias("doc_id"),
-        F.regexp_extract("url", r"^http://([^.]*)\.", 1).alias("source"),
-        "text")
-    bp = ptext.host_boilerplate_scrub(parsed, min_docs=5, frac=0.5)
-    scrubbed = pdedup.duplicate_span_scrub(
-        bp.select("doc_id", F.col("clean_text").alias("text")), w=8)
-    return (bp.select("doc_id", "host", "n_lines", "n_kept")
-            .join(scrubbed, "doc_id")
-            .select("doc_id", "host", "clean_text",
-                    F.col("n_lines").cast("long").alias("n_lines"),
-                    F.col("n_kept").cast("long").alias("n_kept"),
-                    "n_tokens", "n_removed"))
 
 
 # ---------------------------------------------------------------------------
@@ -5835,251 +1058,11 @@ def sitemap_index_q(spark: SparkSession, sf_dir: str) -> DataFrame:
                     "url", "priority"))
 
 
-@q("span_corruption",
-   lambda: _oracles.span_corruption_sql(span_len=3, block=16))
-def span_corruption_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """T5/UL2 denoising pair construction: deterministic one-span-per-
-    full-block masking (xxhash64-derived offsets — oracled through the
-    property-tested XXH64 mirror), sentinel inputs + span targets built
-    in one map-side projection + one doc-keyed aggregation."""
-    return ptext.span_corruption(_t(spark, sf_dir, "documents"),
-                                 span_len=3, block=16)
-
-
-@q("fim_transform", lambda: _oracles.fim_transform_sql(rate_denom=2))
-def fim_transform_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fill-in-the-middle reordering on a deterministic half of the
-    corpus: hash-derived cut points, PSM sentinel layout, pure map-side
-    slice/concat — zero shuffle. Oracled through the XXH64 mirror."""
-    return ptext.fim_transform(_t(spark, sf_dir, "documents"),
-                               rate_denom=2)
-
-
-@q("epoch_expansion", lambda: _oracles.epoch_expansion_sql(alpha=0.3))
-def epoch_expansion_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Materialized temperature-mix training stream over a skewed
-    corpus subset ((doc_id div 20) % 20 <= src_idx — each source keeps
-    a different fraction of its docs, so the n^0.3 rule produces
-    genuinely fractional repeat factors): floor copies + hash-uniform
-    fractional copy, each copy carrying its deterministic shuffle key."""
-    docs = _t(spark, sf_dir, "documents")
-    src_idx = F.substring("source", 4, 10).cast("int")
-    sub = docs.where(
-        F.floor(F.col("doc_id") / 20).cast("long") % 20 <= src_idx)
-    return ptext.epoch_expansion(sub, alpha=0.3)
-
-
 # ---------------------------------------------------------------------------
-# dedup-tuning eval: MinHash-LSH (16 hashes × 8 bands, exact-verified)
-# against the exact-Jaccard ground truth at the same threshold — the
-# recall report that justifies a band/hash configuration before a
-# corpus-scale run. Truth side restates the ngram CTEs (threshold-0.3
-# pair table filtered to ≥0.5 — the engine's prefilter is lossless, so
-# the sets agree); LSH side comes from the mirror generator.
-# ---------------------------------------------------------------------------
-
-_SIBLING_DOCS_SQL = """sibsrc AS (
-    SELECT doc_id, string_split_regex(trim(text), '[ \\t\\n\\r\\f\\x0B]+') AS t
-    FROM documents WHERE doc_id % 10 = 3),
-  sibs AS (
-    SELECT doc_id + 10000 AS doc_id,
-           array_to_string(
-             t[1:CAST(ceil(0.7 * len(t)) AS BIGINT)], ' ')
-           || CASE WHEN len(t) - CAST(ceil(0.7 * len(t)) AS BIGINT) > 0
-                   THEN ' ' || array_to_string(
-                     list_transform(
-                       range(1, len(t)
-                                - CAST(ceil(0.7 * len(t)) AS BIGINT) + 1),
-                       i -> 'u' || CAST(doc_id AS VARCHAR) || 'x'
-                            || CAST(i AS VARCHAR)), ' ')
-                   ELSE '' END AS text
-    FROM sibsrc),
-  sdocs AS (SELECT doc_id, text FROM documents
-            UNION ALL SELECT doc_id, text FROM sibs)"""
-
-
-def _dedup_eval_cfg_sql(bands: int) -> str:
-    lsh_sql = _oracles.minhash_lsh_sql(
-        num_hashes=16, bands=bands, threshold=0.5,
-        docs=_oracles.sibling_docs(), docs_tag="siblings")
-    ngram_ctes = _NGRAM_PAIRS_CTES.replace("FROM documents", "FROM sdocs")
-    return f"""
-  SELECT '16x{bands}' AS config,
-         CAST(sum(t) AS BIGINT) AS n_true,
-         CAST(sum(l) AS BIGINT) AS n_lsh,
-         CAST(sum(t * l) AS BIGINT) AS n_hit,
-         round(sum(t * l) / CAST(nullif(sum(t), 0) AS DOUBLE), 6)
-           AS recall,
-         round(sum(t * l) / CAST(nullif(sum(l), 0) AS DOUBLE), 6)
-           AS lsh_precision
-  FROM (
-    SELECT CASE WHEN t.doc_a IS NOT NULL THEN 1 ELSE 0 END AS t,
-           CASE WHEN l.doc_a IS NOT NULL THEN 1 ELSE 0 END AS l
-    FROM (
-      SELECT doc_a, doc_b FROM (
-        WITH {_SIBLING_DOCS_SQL},
-        {ngram_ctes}
-        SELECT doc_a, doc_b, jaccard FROM njp)
-      WHERE jaccard >= 0.5) t
-    FULL JOIN (SELECT doc_a, doc_b FROM ({lsh_sql})) l
-      ON t.doc_a = l.doc_a AND t.doc_b = l.doc_b)
-"""
-
-
-def _dedup_eval_sql() -> str:
-    return (_dedup_eval_cfg_sql(8) + "\n  UNION ALL\n"
-            + _dedup_eval_cfg_sql(2))
-
-
-def _sibling_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """documents plus ~0.54-Jaccard 'siblings' for doc_id%10==3: first
-    70% of tokens shared, unique filler after — the band-sensitivity
-    regime for the LSH eval (mirror: oracles.sibling_docs)."""
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    toks = F.split(F.trim(F.col("text")), ptext.WS_PLUS)
-    n = F.size(toks)
-    k = F.ceil(n * 0.7).cast("long")
-    filler = F.when(
-        n - k > 0,
-        F.concat(F.lit(" "), F.array_join(
-            F.transform(F.sequence(F.lit(1).cast("long"), n - k),
-                        lambda i: F.concat(F.lit("u"),
-                                           F.col("doc_id").cast("string"),
-                                           F.lit("x"), i.cast("string"))),
-            " "))).otherwise(F.lit(""))
-    # two-step select: building text FIRST keeps every doc_id reference
-    # bound to the ORIGINAL id (a one-step select with an aliased
-    # doc_id+10000 resolves the filler's doc_id to the NEW alias via
-    # lateral column aliasing — found the hard way)
-    sibs = (docs.where(F.col("doc_id") % 10 == 3)
-            .select("doc_id",
-                    F.concat(F.array_join(F.slice(toks, 1, k.cast("int")),
-                                          " "),
-                             filler).alias("text"))
-            .select((F.col("doc_id") + 10000).alias("doc_id"), "text"))
-    return docs.unionByName(sibs)
-
-
-@q("dedup_eval", _dedup_eval_sql)
-def dedup_eval_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Recall/precision of the verified MinHash-LSH tier vs exact
-    Jaccard ground truth at threshold 0.5, at two band settings (16x8
-    recall-generous, 16x2 strict) — the tuning report run before
-    committing a configuration to a corpus-scale pass. Both sides are
-    the production operators."""
-    docs = _sibling_corpus(spark, sf_dir)
-    truth = (pdedup.ngram_jaccard_pairs(docs, n=3, threshold=0.5,
-                                        max_df=200)
-             .select("doc_a", "doc_b", F.lit(1).alias("_t")))
-
-    def cfg(bands: int) -> DataFrame:
-        lsh = (pdedup.minhash_lsh_verified(docs, num_hashes=16,
-                                           bands=bands, threshold=0.5)
-               .select("doc_a", "doc_b", F.lit(1).alias("_l")))
-        j = truth.join(lsh, ["doc_a", "doc_b"], "full")
-        t = F.coalesce(F.col("_t"), F.lit(0))
-        ll = F.coalesce(F.col("_l"), F.lit(0))
-        return j.agg(
-            F.sum(t).cast("long").alias("n_true"),
-            F.sum(ll).cast("long").alias("n_lsh"),
-            F.sum(t * ll).cast("long").alias("n_hit"),
-            F.round(F.sum(t * ll) /
-                    F.nullif(F.sum(t), F.lit(0)).cast("double"), 6)
-            .alias("recall"),
-            F.round(F.sum(t * ll) /
-                    F.nullif(F.sum(ll), F.lit(0)).cast("double"), 6)
-            .alias("lsh_precision")).select(
-                F.lit(f"16x{bands}").alias("config"), "*")
-
-    return cfg(8).unionByName(cfg(2))
-
-
-# ---------------------------------------------------------------------------
-# main-content block selection (pipeline/text.main_content_block): the
-# density tier of extraction. Derivation: the dense body (8-word folded
-# lines, one contiguous run) vs a sparse "home" crumb, a second 6-word
-# qualifying run ("related items ..."), and a sparse copyright line —
-# the body run must win on total words.
-# ---------------------------------------------------------------------------
-
-@q("main_content", f"""
-  WITH {_MULTILINE_DOCS_SQL},
-  cdocs AS (
-    SELECT doc_id,
-      text || chr(10) || 'related items you may also like'
-           || chr(10) || 'home' AS text
-    FROM mdocs),
-  lines AS (
-    SELECT doc_id, i AS pos, trim(l[i]) AS line,
-           CASE WHEN length(trim(l[i])) > 0
-                THEN len(string_split_regex(trim(l[i]), '[ \\t\\n\\r\\f\\x0B]+'))
-                ELSE 0 END AS words
-    FROM (SELECT doc_id, string_split(text, chr(10)) AS l FROM cdocs),
-         UNNEST(range(1, len(l) + 1)) AS u(i)),
-  qual AS (
-    SELECT doc_id, pos, line, words,
-           pos - row_number() OVER (PARTITION BY doc_id ORDER BY pos)
-             AS grp
-    FROM lines WHERE words >= 5),
-  per_run AS (
-    SELECT doc_id, grp, sum(words) AS block_words,
-           count(*) AS block_lines, min(pos) AS start
-    FROM qual GROUP BY doc_id, grp),
-  best AS (
-    SELECT doc_id, grp, block_words, block_lines FROM per_run
-    QUALIFY row_number() OVER (PARTITION BY doc_id
-                               ORDER BY block_words DESC, start) = 1),
-  winlines AS (
-    SELECT q.doc_id, q.pos, q.line, b.block_words, b.block_lines
-    FROM qual q JOIN best b ON b.doc_id = q.doc_id AND b.grp = q.grp),
-  rebuilt AS (
-    SELECT doc_id, string_agg(line, chr(10) ORDER BY pos) AS main_text,
-           max(block_words) AS block_words,
-           max(block_lines) AS block_lines
-    FROM winlines GROUP BY doc_id),
-  totals AS (SELECT doc_id, count(*) AS n_lines FROM lines
-             WHERE length(line) > 0 GROUP BY doc_id)
-  SELECT t.doc_id, coalesce(r.main_text, '') AS main_text,
-         CAST(t.n_lines AS BIGINT) AS n_lines,
-         CAST(coalesce(r.block_lines, 0) AS BIGINT) AS block_lines,
-         CAST(coalesce(r.block_words, 0) AS BIGINT) AS block_words
-  FROM totals t LEFT JOIN rebuilt r USING (doc_id)
-""")
-def main_content_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Densest-run main-content selection: sparse crumb lines and a
-    shorter second dense run lose to the body block."""
-    base = _multiline_docs(spark, sf_dir)
-    docs = base.select(
-        "doc_id",
-        F.concat(F.col("text"),
-                 F.lit("\nrelated items you may also like\nhome"))
-        .alias("text"))
-    return ptext.main_content_block(docs, min_words=5)
-
-
-@q("mime_sniff", lambda: _oracles.mime_sniff_sql(n=128, dup_mod=96))
-def mime_sniff_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Magic-byte sniffing vs declared content type over the synthetic
-    image table, with planted mislabels (doc_id%7 declares the flipped
-    format): the sniff must recover the codec's true format — oracled
-    against the codec MIRROR's knowledge of what was written."""
-    imgs = _images_df(spark, sf_dir, n=128, dup_mod=96)
-    doc_id = F.substring("image_id", 5, 8).cast("long")
-    declared = F.when(
-        doc_id % 7 == 0,
-        F.when(F.col("fmt") == "png", F.lit("jpeg")).otherwise(F.lit("png"))
-    ).otherwise(F.col("fmt"))
-    return multimodal.mime_sniff(
-        imgs.withColumn("fmt", declared))
-
-
-# ---------------------------------------------------------------------------
-# Link-level HTML semantics (operators/html_links.py): REP rel hints,
-# meta-refresh redirects, hreflang clusters, feed autodiscovery + Atom
-# parse, charset sniffing — the standards-correct tier next to the
-# reference's bare a[href] collection (kept bug-for-bug on the crawl
-# path). Fixtures synthesize canonical HTML from `documents` on BOTH
-# sides; all parsing is shared-regex Catalyst vs DuckDB RE2.
+# Atom feed discovery (operators/html_links.parse_atom_feeds, the parser
+# feed_discovery runs) and feed-driven recrawl verdicts. Fixtures
+# synthesize feed XML from `documents` on BOTH sides; parsing is
+# shared-regex Catalyst vs DuckDB RE2.
 # ---------------------------------------------------------------------------
 
 _LINKS_URL_SQL = "'http://x.example.com/d/' || CAST(doc_id AS VARCHAR)"
@@ -6088,272 +1071,6 @@ _LINKS_URL_SQL = "'http://x.example.com/d/' || CAST(doc_id AS VARCHAR)"
 def _links_url_col():
     return F.concat(F.lit("http://x.example.com/d/"),
                     F.col("doc_id").cast("string"))
-
-
-_REL_HTML_SQL = f"""
-    SELECT {_LINKS_URL_SQL} AS url,
-           '<html><body>'
-           || '<a href="/p/' || CAST(doc_id AS VARCHAR) || '">in</a>'
-           || '<a href="http://x.example.com/f/' || CAST(doc_id AS VARCHAR)
-           || '" rel="' || CASE CAST(doc_id % 4 AS INTEGER)
-                WHEN 0 THEN 'nofollow'
-                WHEN 1 THEN 'ugc sponsored'
-                WHEN 2 THEN 'noopener nofollow'
-                ELSE 'author external' END
-           || '">out</a>'
-           || '<a name="top">anchor</a>'
-           || '</body></html>' AS html
-    FROM documents"""
-
-
-def _rel_html_col():
-    d = F.col("doc_id").cast("string")
-    rel = (F.when(F.col("doc_id") % 4 == 0, F.lit("nofollow"))
-           .when(F.col("doc_id") % 4 == 1, F.lit("ugc sponsored"))
-           .when(F.col("doc_id") % 4 == 2, F.lit("noopener nofollow"))
-           .otherwise(F.lit("author external")))
-    return F.concat(
-        F.lit('<html><body><a href="/p/'), d, F.lit('">in</a>'),
-        F.lit('<a href="http://x.example.com/f/'), d, F.lit('" rel="'),
-        rel, F.lit('">out</a>'),
-        F.lit('<a name="top">anchor</a></body></html>'))
-
-
-@q("link_rel_policy", f"""
-  WITH pages AS ({_REL_HTML_SQL}),
-  blocks AS (
-    SELECT url, CAST(i AS INTEGER) AS anchor_idx,
-           list_extract(regexp_extract_all(html, '<a ([^>]*)>', 1),
-                        CAST(i + 1 AS INTEGER)) AS attrs
-    FROM pages, range(0, 3) AS r(i)),
-  parsed AS (
-    SELECT url, anchor_idx,
-           regexp_extract(attrs, 'href="([^"]*)"', 1) AS href,
-           regexp_extract(attrs, 'rel="([^"]*)"', 1) AS rel
-    FROM blocks WHERE attrs IS NOT NULL),
-  flagged AS (
-    SELECT url, anchor_idx, href, rel,
-           list_contains(string_split_regex(lower(rel), ' +'),
-                         'nofollow') AS nofollow,
-           list_contains(string_split_regex(lower(rel), ' +'),
-                         'sponsored') AS sponsored,
-           list_contains(string_split_regex(lower(rel), ' +'),
-                         'ugc') AS ugc
-    FROM parsed WHERE length(href) > 0)
-  SELECT url, anchor_idx, href, rel, nofollow, sponsored, ugc,
-         NOT nofollow AS followable
-  FROM flagged
-""")
-def link_rel_policy_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REP link-hint parsing (rel=nofollow/sponsored/ugc as token
-    membership over the rel list) over three-anchor synthetic pages: a
-    bare internal link, an outlink cycling through rel variants, and an
-    href-less name anchor (dropped). `followable` keys on nofollow
-    alone; `noopener`/`author` must not confuse the token match."""
-    from .operators.html_links import anchor_rel_links
-    docs = _t(spark, sf_dir, "documents")
-    pages = docs.select(_links_url_col().alias("url"),
-                        _rel_html_col().alias("html"))
-    return anchor_rel_links(pages)
-
-
-@q("meta_refresh", f"""
-  WITH pages AS (
-    SELECT {_LINKS_URL_SQL} AS url, doc_id,
-           '<html><head>'
-           || CASE
-                WHEN doc_id % 12 = 0 THEN
-                  '<meta http-equiv="refresh" content="'
-                  || CAST(doc_id % 30 AS VARCHAR)
-                  || ';URL=http://x.example.com/r/'
-                  || CAST(doc_id + 1 AS VARCHAR) || '">'
-                WHEN doc_id % 6 = 0 THEN
-                  '<meta http-equiv="refresh" content="'
-                  || CAST(doc_id % 30 AS VARCHAR)
-                  || ';url=http://x.example.com/r/'
-                  || CAST(doc_id + 1 AS VARCHAR) || '">'
-                WHEN doc_id % 6 = 3 THEN
-                  '<meta http-equiv="refresh" content="'
-                  || CAST(doc_id % 30 AS VARCHAR) || '">'
-                ELSE '' END
-           || '</head></html>' AS html
-    FROM documents),
-  parsed AS (
-    SELECT url,
-           regexp_extract(html,
-             '<meta http-equiv="refresh" content="([^"]*)"', 1) AS content
-    FROM pages)
-  SELECT url,
-         TRY_CAST(regexp_extract(content, '^([0-9]+)', 1) AS INTEGER)
-           AS delay_sec,
-         regexp_extract(content, '(?i);\\s*url=(.*)$', 1) AS refresh_url
-  FROM parsed
-  WHERE length(regexp_extract(content, '(?i);\\s*url=(.*)$', 1)) > 0
-""")
-def meta_refresh_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Meta-refresh redirect edges: delay;url=target pairs extracted
-    case-insensitively (URL= vs url= variants planted), target-less
-    pure reloads dropped — the document-level redirect source that
-    composes with resolve_redirects like HTTP 3xx edges."""
-    from .operators.html_links import meta_refresh_targets
-    d = F.col("doc_id")
-    ds = d.cast("string")
-    delay = (d % 30).cast("string")
-    tgt = F.concat(F.lit("http://x.example.com/r/"),
-                   (d + 1).cast("string"))
-    html = F.concat(
-        F.lit("<html><head>"),
-        F.when(d % 12 == 0,
-               F.concat(F.lit('<meta http-equiv="refresh" content="'),
-                        delay, F.lit(";URL="), tgt, F.lit('">')))
-        .when(d % 6 == 0,
-              F.concat(F.lit('<meta http-equiv="refresh" content="'),
-                       delay, F.lit(";url="), tgt, F.lit('">')))
-        .when(d % 6 == 3,
-              F.concat(F.lit('<meta http-equiv="refresh" content="'),
-                       delay, F.lit('">')))
-        .otherwise(F.lit("")),
-        F.lit("</head></html>"))
-    docs = _t(spark, sf_dir, "documents")
-    pages = docs.select(_links_url_col().alias("url"), html.alias("html"))
-    return meta_refresh_targets(pages)
-
-
-_HREFLANG_HTML_SQL = f"""
-    SELECT {_LINKS_URL_SQL} AS url,
-           '<html><head>'
-           || '<link rel="alternate" hreflang="' || lang || '" href="'
-           || {_LINKS_URL_SQL} || '">'
-           || CASE WHEN doc_id % 9 = 0 THEN
-                '<link rel="alternate" hreflang="dup" href="'
-                || {_LINKS_URL_SQL} || '">' ELSE '' END
-           || '<link rel="alternate" hreflang="x-default" href="'
-           || 'http://x.example.com/d/'
-           || CAST(CASE WHEN doc_id % 2 = 0 THEN doc_id + 1
-                        ELSE doc_id - 1 END AS VARCHAR) || '">'
-           || '</head></html>' AS html
-    FROM documents"""
-
-
-def _hreflang_html_col():
-    d = F.col("doc_id")
-    own = _links_url_col()
-    partner = F.concat(
-        F.lit("http://x.example.com/d/"),
-        F.when(d % 2 == 0, d + 1).otherwise(d - 1).cast("string"))
-    return F.concat(
-        F.lit('<html><head><link rel="alternate" hreflang="'),
-        F.col("lang"), F.lit('" href="'), own, F.lit('">'),
-        F.when(d % 9 == 0,
-               F.concat(F.lit('<link rel="alternate" hreflang="dup" href="'),
-                        own, F.lit('">'))).otherwise(F.lit("")),
-        F.lit('<link rel="alternate" hreflang="x-default" href="'),
-        partner, F.lit('"></head></html>'))
-
-
-@q("hreflang_reciprocal", f"""
-  WITH pages AS ({_HREFLANG_HTML_SQL}),
-  blocks AS (
-    SELECT url, CAST(i AS INTEGER) AS tag_idx,
-           list_extract(regexp_extract_all(html,
-             '<link rel="alternate" hreflang="[^"]*" href="[^"]*"', 0),
-             CAST(i + 1 AS INTEGER)) AS tag
-    FROM pages, range(0, 3) AS r(i)),
-  parsed AS (
-    SELECT url, tag_idx,
-           regexp_extract(tag, 'hreflang="([^"]*)"', 1) AS hreflang,
-           regexp_extract(tag, 'href="([^"]*)"', 1) AS href
-    FROM blocks WHERE tag IS NOT NULL AND
-         length(regexp_extract(tag, 'href="([^"]*)"', 1)) > 0),
-  alt AS (
-    SELECT url, hreflang, href FROM parsed
-    QUALIFY row_number() OVER (PARTITION BY url, href
-                               ORDER BY tag_idx) = 1)
-  SELECT a.url, a.href, a.hreflang
-  FROM alt a
-  WHERE a.url < a.href
-    AND EXISTS (SELECT 1 FROM alt b
-                WHERE b.url = a.href AND b.href = a.url)
-""")
-def hreflang_reciprocal_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """hreflang cluster validation: each page lists itself (own lang, a
-    planted duplicate losing first-wins on doc_id%9) and its even/odd
-    partner (x-default); reciprocity keeps exactly the partner pairs
-    (self-edges die on url<href) reported once from the lower url."""
-    from .operators.html_links import (
-        hreflang_alternates,
-        hreflang_reciprocal,
-    )
-    docs = _t(spark, sf_dir, "documents")
-    pages = docs.select(_links_url_col().alias("url"),
-                        _hreflang_html_col().alias("html"))
-    return hreflang_reciprocal(hreflang_alternates(pages))
-
-
-@q("feed_discovery", f"""
-  WITH pages AS (
-    SELECT {_LINKS_URL_SQL} AS url, doc_id,
-           '<html><head>'
-           || CASE
-                WHEN doc_id % 3 = 0 THEN
-                  '<link rel="alternate" type="application/rss+xml" href="'
-                  || 'http://x.example.com/feed/' || CAST(doc_id AS VARCHAR)
-                  || '.rss">'
-                WHEN doc_id % 3 = 1 THEN
-                  repeat('<link rel="alternate" type="application/atom+xml"'
-                         || ' href="http://x.example.com/feed/'
-                         || CAST(doc_id AS VARCHAR) || '.atom">',
-                         CASE WHEN doc_id % 15 = 1 THEN 2 ELSE 1 END)
-                ELSE
-                  '<link rel="alternate" type="text/html" href="'
-                  || 'http://x.example.com/m/' || CAST(doc_id AS VARCHAR)
-                  || '">' END
-           || '</head></html>' AS html
-    FROM documents),
-  blocks AS (
-    SELECT url, CAST(i AS INTEGER) AS tag_idx,
-           list_extract(regexp_extract_all(html,
-             '<link rel="alternate" type="application/(rss|atom)\\+xml"'
-             || ' href="[^"]*"', 0),
-             CAST(i + 1 AS INTEGER)) AS tag
-    FROM pages, range(0, 2) AS r(i)),
-  parsed AS (
-    SELECT url, tag_idx,
-           regexp_extract(tag,
-             'type="application/(rss|atom)\\+xml"', 1) AS feed_type,
-           regexp_extract(tag, 'href="([^"]*)"', 1) AS feed_url
-    FROM blocks WHERE tag IS NOT NULL AND
-         length(regexp_extract(tag, 'href="([^"]*)"', 1)) > 0)
-  SELECT url, feed_type, feed_url FROM parsed
-  QUALIFY row_number() OVER (PARTITION BY url, feed_url
-                             ORDER BY tag_idx) = 1
-""")
-def feed_discovery_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """RSS/Atom autodiscovery: rss vs atom link types by doc_id%3, a
-    text/html alternate that must NOT match, and a doubled atom tag
-    (doc_id%15=1) collapsing first-wins."""
-    from .operators.html_links import feed_links
-    d = F.col("doc_id")
-    ds = d.cast("string")
-    rss = F.concat(
-        F.lit('<link rel="alternate" type="application/rss+xml" '
-              'href="http://x.example.com/feed/'), ds, F.lit('.rss">'))
-    atom = F.concat(
-        F.lit('<link rel="alternate" type="application/atom+xml" '
-              'href="http://x.example.com/feed/'), ds, F.lit('.atom">'))
-    other = F.concat(
-        F.lit('<link rel="alternate" type="text/html" '
-              'href="http://x.example.com/m/'), ds, F.lit('">'))
-    html = F.concat(
-        F.lit("<html><head>"),
-        F.when(d % 3 == 0, rss)
-        .when(d % 3 == 1,
-              F.when(d % 15 == 1, F.concat(atom, atom)).otherwise(atom))
-        .otherwise(other),
-        F.lit("</head></html>"))
-    docs = _t(spark, sf_dir, "documents")
-    pages = docs.select(_links_url_col().alias("url"), html.alias("html"))
-    return feed_links(pages)
 
 
 @q("atom_feed_parse", """
@@ -6437,161 +1154,6 @@ def atom_feed_parse_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = parse_atom_feeds(feeds)
     return out.withColumn("updated_date",
                           F.date_format("updated_date", "yyyy-MM-dd"))
-
-
-@q("charset_sniff", f"""
-  SELECT {_LINKS_URL_SQL} AS url,
-         CASE CAST(doc_id % 5 AS INTEGER)
-           WHEN 0 THEN 'text/html; charset=UTF-8'
-           WHEN 1 THEN 'text/html; charset=iso-8859-1'
-           ELSE 'text/html' END AS content_type,
-         CASE
-           WHEN doc_id % 5 = 0 THEN 'utf-8'
-           WHEN doc_id % 5 = 1 THEN 'iso-8859-1'
-           WHEN doc_id % 7 = 0 THEN 'utf-8'
-           WHEN doc_id % 7 = 1 THEN 'utf-16le'
-           WHEN doc_id % 7 = 2 THEN 'utf-16be'
-           WHEN doc_id % 3 = 0 THEN 'koi8-r'
-           ELSE 'windows-1252' END AS charset
-  FROM documents
-""")
-def charset_sniff_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Charset sniffing precedence — Content-Type param > BOM (UTF-8 /
-    UTF-16LE / UTF-16BE planted by doc_id%7) > <meta charset> (koi8-r
-    on doc_id%3) > the windows-1252 legacy default — over REAL binary
-    payloads built in-plan (BOM bytes unhexed onto UTF-8-encoded HTML).
-    The oracle restates the precedence arithmetically from doc_id: an
-    independent derivation of the same truth, not a re-parse."""
-    from .operators.html_links import sniff_charset
-    d = F.col("doc_id")
-    ct = (F.when(d % 5 == 0, F.lit("text/html; charset=UTF-8"))
-          .when(d % 5 == 1, F.lit("text/html; charset=iso-8859-1"))
-          .otherwise(F.lit("text/html")))
-    bom = (F.when(d % 7 == 0, F.unhex(F.lit("EFBBBF")))
-           .when(d % 7 == 1, F.unhex(F.lit("FFFE")))
-           .when(d % 7 == 2, F.unhex(F.lit("FEFF")))
-           .otherwise(F.unhex(F.lit(""))))
-    meta = (F.when(d % 3 == 0, F.lit('<meta charset="KOI8-R">'))
-            .otherwise(F.lit("")))
-    html = F.concat(F.lit("<html><head>"), meta,
-                    F.lit("</head><body>ok</body></html>"))
-    body = F.concat(bom, F.encode(html, "UTF-8"))
-    docs = _t(spark, sf_dir, "documents")
-    pages = docs.select(_links_url_col().alias("url"), ct.alias("content_type"),
-                        body.alias("body"))
-    return sniff_charset(pages).select("url", "content_type", "charset")
-
-
-_RSS_MONTHS = ("Jan", "Feb", "Mar", "Apr", "May", "Jun",
-               "Jul", "Aug", "Sep", "Oct", "Nov", "Dec")
-_RSS_MONTH_LIST_SQL = "['" + "', '".join(_RSS_MONTHS) + "']"
-_RSS_MONTH_CASE_SQL = "CASE mon_name " + " ".join(
-    f"WHEN '{m}' THEN {i + 1}" for i, m in enumerate(_RSS_MONTHS)) + " END"
-
-
-@q("rss_feed_parse", f"""
-  WITH feeds AS (
-    SELECT 'http://x.example.com/feed/' || CAST(doc_id AS VARCHAR)
-             || '.rss' AS feed_url, doc_id,
-           '<rss><channel>'
-           || repeat('<item><guid>tag:r' || CAST(doc_id AS VARCHAR)
-              || 'a</guid><link>http://x.example.com/d/'
-              || CAST(doc_id AS VARCHAR) || '</link>'
-              || '<pubDate>Mon, ' || lpad(CAST(doc_id % 27 + 1 AS VARCHAR),
-                                          2, '0')
-              || ' ' || list_extract({_RSS_MONTH_LIST_SQL},
-                                     CAST(doc_id % 12 + 1 AS INTEGER))
-              || ' 2024 01:02:03 GMT</pubDate>'
-              || '<title>Doc ' || CAST(doc_id AS VARCHAR)
-              || '</title></item>',
-              CASE WHEN doc_id % 7 = 0 THEN 2 ELSE 1 END)
-           || CASE WHEN doc_id % 4 <> 0 THEN
-                '<item><link>http://x.example.com/d/'
-                || CAST(doc_id AS VARCHAR) || 'b</link></item>' ELSE '' END
-           || CASE WHEN doc_id % 5 = 0 THEN
-                '<item><guid>tag:r' || CAST(doc_id AS VARCHAR)
-                || 'c</guid><pubDate>31 Feb 2024</pubDate></item>'
-                ELSE '' END
-           || CASE WHEN doc_id % 6 = 0 THEN
-                '<item><title>unkeyable</title></item>' ELSE '' END
-           || '</channel></rss>' AS xml
-    FROM documents),
-  blocks AS (
-    SELECT feed_url, CAST(i AS INTEGER) AS entry_idx,
-           list_extract(regexp_extract_all(xml, '<item>(.*?)</item>', 1),
-                        CAST(i + 1 AS INTEGER)) AS block
-    FROM feeds, range(0, 5) AS r(i)),
-  fields AS (
-    SELECT feed_url, entry_idx,
-           regexp_extract(block, '<guid>(.*?)</guid>', 1) AS guid,
-           regexp_extract(block, '<link>(.*?)</link>', 1) AS link,
-           regexp_extract(block,
-             '<pubDate>[^<]*?([0-9]{{1,2}}) ({"|".join(_RSS_MONTHS)})'
-             || ' ([0-9]{{4}})', 1) AS day_s,
-           regexp_extract(block,
-             '<pubDate>[^<]*?([0-9]{{1,2}}) ({"|".join(_RSS_MONTHS)})'
-             || ' ([0-9]{{4}})', 2) AS mon_name,
-           regexp_extract(block,
-             '<pubDate>[^<]*?([0-9]{{1,2}}) ({"|".join(_RSS_MONTHS)})'
-             || ' ([0-9]{{4}})', 3) AS year_s,
-           nullif(regexp_extract(block, '<title>(.*?)</title>', 1), '')
-             AS title
-    FROM blocks WHERE block IS NOT NULL),
-  parsed AS (
-    SELECT feed_url, entry_idx,
-           coalesce(nullif(guid, ''), nullif(link, '')) AS item_key,
-           link,
-           TRY_CAST(TRY_CAST(year_s AS INTEGER) || '-'
-                    || lpad(CAST({_RSS_MONTH_CASE_SQL} AS VARCHAR), 2, '0')
-                    || '-' || lpad(day_s, 2, '0') AS DATE) AS pub_date,
-           title
-    FROM fields),
-  kept AS (SELECT * FROM parsed WHERE item_key IS NOT NULL)
-  SELECT feed_url, item_key, link,
-         strftime(pub_date, '%Y-%m-%d') AS pub_date, title
-  FROM kept
-  QUALIFY row_number() OVER (PARTITION BY feed_url, item_key
-                             ORDER BY entry_idx) = 1
-""")
-def rss_feed_parse_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """RSS 2.0 item parse with the locale-free RFC-822 date fold: a
-    guid'd item (doubled on doc_id%7, first wins), a guid-less item
-    keyed by its link, an impossible '31 Feb' date that must null (not
-    raise, despite ANSI), and an unkeyable title-only item (dropped)."""
-    from .operators.html_links import parse_rss_feeds
-    d = F.col("doc_id")
-    ds = d.cast("string")
-    dd = F.lpad((d % 27 + 1).cast("string"), 2, "0")
-    mon = F.element_at(F.array(*[F.lit(m) for m in _RSS_MONTHS]),
-                       (d % 12 + 1).cast("int"))
-    item_a = F.concat(
-        F.lit("<item><guid>tag:r"), ds,
-        F.lit("a</guid><link>http://x.example.com/d/"), ds,
-        F.lit("</link><pubDate>Mon, "), dd, F.lit(" "), mon,
-        F.lit(" 2024 01:02:03 GMT</pubDate><title>Doc "), ds,
-        F.lit("</title></item>"))
-    item_b = F.concat(
-        F.lit("<item><link>http://x.example.com/d/"), ds,
-        F.lit("b</link></item>"))
-    item_c = F.concat(
-        F.lit("<item><guid>tag:r"), ds,
-        F.lit("c</guid><pubDate>31 Feb 2024</pubDate></item>"))
-    xml = F.concat(
-        F.lit("<rss><channel>"),
-        F.when(d % 7 == 0, F.concat(item_a, item_a)).otherwise(item_a),
-        F.when(d % 4 != 0, item_b).otherwise(F.lit("")),
-        F.when(d % 5 == 0, item_c).otherwise(F.lit("")),
-        F.when(d % 6 == 0,
-               F.lit("<item><title>unkeyable</title></item>"))
-        .otherwise(F.lit("")),
-        F.lit("</channel></rss>"))
-    feed_url = F.concat(F.lit("http://x.example.com/feed/"), ds,
-                        F.lit(".rss"))
-    docs = _t(spark, sf_dir, "documents")
-    feeds = docs.select(feed_url.alias("feed_url"), xml.alias("xml"))
-    out = parse_rss_feeds(feeds)
-    return out.withColumn("pub_date", F.date_format("pub_date",
-                                                    "yyyy-MM-dd"))
 
 
 @q("feed_recrawl", """

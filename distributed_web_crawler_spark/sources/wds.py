@@ -4,7 +4,7 @@ Image training loaders stream POSIX tar shards in which every sample is a
 group of adjacently-stored members sharing one basename key —
 ``<key>.<fmt>`` for the payload and ``<key>.txt`` for the caption (the
 WebDataset convention, github.com/webdataset/webdataset). This module is
-the image-axis analog of the WARC sink (sources/warc.py): the engine's
+the image-axis counterpart of a page blob sink: the engine's
 curated (image_id, bytes, fmt, caption) table becomes content-addressed
 tar shards plus a relational member index computed WITHOUT re-reading the
 archive. Reference analog: the crawler's blob sink writes one S3 object
@@ -152,41 +152,6 @@ def export_wds_shards(images: DataFrame, out_dir: str, n_shards: int = 4,
         F.col(caption_col).alias("caption"))
     return keyed.groupBy("shard").applyInPandas(write_group,
                                                 RECEIPT_SCHEMA)
-
-
-def wds_incremental_plan(old_index: DataFrame,
-                         new_index: DataFrame) -> DataFrame:
-    """Which tar shards a re-export must rewrite: compare two member
-    indexes (wds_member_index of the previous and the current corpus) —
-    a shard is dirty iff any member was added, removed, or its payload
-    sha changed; clean shards are byte-identical by construction
-    (deterministic USTAR + content-addressed membership), so the
-    re-export skips them entirely. Returns one row per shard:
-    (shard, n_added, n_removed, n_changed, n_same, dirty).
-
-    Scale shape: ONE (shard, member_name)-keyed full-outer join of two
-    index tables (member-grain, payload bytes never involved) + one
-    shard-grain aggregate — the incremental-export planner costs
-    O(index), not O(archive). The content-addressed shard key is what
-    makes this sound: membership can only move between shards if
-    image_ids change, in which case both touched shards show dirty."""
-    o = old_index.select("shard", "member_name",
-                         F.col("member_sha256").alias("old_sha"))
-    n = new_index.select("shard", "member_name",
-                         F.col("member_sha256").alias("new_sha"))
-    status = (F.when(F.col("old_sha").isNull(), "added")
-              .when(F.col("new_sha").isNull(), "removed")
-              .when(F.col("old_sha") != F.col("new_sha"), "changed")
-              .otherwise("same"))
-    j = (o.join(n, ["shard", "member_name"], "full_outer")
-         .select("shard", status.alias("status")))
-    agg = [F.sum(F.when(F.col("status") == s, 1).otherwise(0))
-           .alias(f"n_{s}") for s in ("added", "removed", "changed",
-                                      "same")]
-    return (j.groupBy("shard").agg(*agg)
-            .withColumn("dirty",
-                        (F.col("n_added") + F.col("n_removed")
-                         + F.col("n_changed")) > 0))
 
 
 def parse_wds(spark: SparkSession, shards_dir: str) -> DataFrame:

@@ -1,86 +1,16 @@
-"""Unit tests for operators/html_links.py — the link-level standards
-tier (REP rel hints, meta refresh, hreflang, feeds, charset) on tiny
-hand-built pages where every edge case is enumerable by eye."""
+"""Unit tests for the Atom feed parser (operators/html_links.py) and the
+sitemap parser on tiny hand-built documents where every edge case is
+enumerable by eye."""
 
 import pyspark.sql.functions as F
-import pytest
 
 from distributed_web_crawler_spark.operators.html_links import (
-    anchor_rel_links,
-    feed_links,
-    hreflang_alternates,
-    hreflang_reciprocal,
-    meta_refresh_targets,
     parse_atom_feeds,
-    sniff_charset,
 )
 
 
 def _pages(spark, rows):
     return spark.createDataFrame(rows, "url string, html string")
-
-
-def test_anchor_rel_token_membership(spark):
-    rows = [
-        ("u1", '<a href="/a" rel="nofollow">x</a>'
-               '<a href="/b" rel="nofollowed">y</a>'
-               '<a href="/c" rel="UGC Sponsored">z</a>'
-               '<a name="frag">no href</a>'),
-    ]
-    out = {r["href"]: r for r in
-           anchor_rel_links(_pages(spark, rows)).collect()}
-    assert set(out) == {"/a", "/b", "/c"}          # fragment anchor dropped
-    assert out["/a"]["nofollow"] and not out["/a"]["followable"]
-    # substring must not match: rel="nofollowed" is NOT a nofollow token
-    assert not out["/b"]["nofollow"] and out["/b"]["followable"]
-    # token match is case-insensitive; ugc+sponsored don't flip followable
-    assert out["/c"]["ugc"] and out["/c"]["sponsored"]
-    assert out["/c"]["followable"]
-    assert out["/c"]["anchor_idx"] == 2            # indexes count all <a >
-
-
-def test_meta_refresh_edge_cases(spark):
-    rows = [
-        ("u1", '<meta http-equiv="refresh" content="5;url=http://t/1">'),
-        ("u2", '<meta http-equiv="refresh" content="0;URL=http://t/2">'),
-        ("u3", '<meta http-equiv="refresh" content="30">'),  # pure reload
-        ("u4", "<p>no meta</p>"),
-    ]
-    out = {r["url"]: r for r in
-           meta_refresh_targets(_pages(spark, rows)).collect()}
-    assert set(out) == {"u1", "u2"}
-    assert out["u1"]["delay_sec"] == 5 and out["u1"]["refresh_url"] == "http://t/1"
-    assert out["u2"]["delay_sec"] == 0 and out["u2"]["refresh_url"] == "http://t/2"
-
-
-def test_hreflang_reciprocity_and_first_wins(spark):
-    def link(lang, href):
-        return f'<link rel="alternate" hreflang="{lang}" href="{href}">'
-    rows = [
-        # a <-> b reciprocal; a -> c unreciprocated; a lists b twice
-        ("a", link("en", "b") + link("dup", "b") + link("de", "c")),
-        ("b", link("fr", "a")),
-        ("c", ""),
-    ]
-    alts = hreflang_alternates(_pages(spark, rows))
-    got = {(r["url"], r["href"]): r["hreflang"] for r in alts.collect()}
-    assert got[("a", "b")] == "en"                 # first tag wins
-    pairs = hreflang_reciprocal(alts).collect()
-    assert [(p["url"], p["href"], p["hreflang"])
-            for p in pairs] == [("a", "b", "en")]  # once, from lower url
-
-
-def test_feed_links_types_and_nonmatch(spark):
-    rows = [
-        ("u1", '<link rel="alternate" type="application/rss+xml" '
-               'href="http://f/r">'
-               '<link rel="alternate" type="application/atom+xml" '
-               'href="http://f/a">'
-               '<link rel="alternate" type="text/html" href="http://f/h">'),
-    ]
-    out = {r["feed_url"]: r["feed_type"] for r in
-           feed_links(_pages(spark, rows)).collect()}
-    assert out == {"http://f/r": "rss", "http://f/a": "atom"}
 
 
 def test_atom_parse_required_id_and_dup_collapse(spark):
@@ -100,47 +30,6 @@ def test_atom_parse_required_id_and_dup_collapse(spark):
     assert str(out["e1"]["updated_date"]) == "2024-03-05"
     assert out["e2"]["link"] == "" and out["e2"]["updated_date"] is None
     assert out["e2"]["title"] is None
-
-
-def test_charset_precedence(spark):
-    utf8_bom, utf16le = b"\xef\xbb\xbf", b"\xff\xfe"
-    meta = b'<html><head><meta charset="KOI8-R"></head></html>'
-    rows = [
-        # header beats BOM beats meta beats default
-        ("h", "text/html; charset=UTF-8", utf16le + meta),
-        ("b8", "text/html", utf8_bom + meta),
-        ("b16", "text/html", utf16le + b"<html></html>"),
-        ("m", "text/html", meta),
-        ("d", "text/html", b"<html></html>"),
-    ]
-    df = spark.createDataFrame(
-        rows, "url string, content_type string, body binary")
-    out = {r["url"]: r["charset"] for r in sniff_charset(df).collect()}
-    assert out == {"h": "utf-8", "b8": "utf-8", "b16": "utf-16le",
-                   "m": "koi8-r", "d": "windows-1252"}
-
-
-def test_rss_parse_key_fallback_and_locale_free_date(spark):
-    from distributed_web_crawler_spark.operators.html_links import (
-        parse_rss_feeds,
-    )
-    xml = ("<rss><channel>"
-           "<item><guid>g1</guid><link>l1</link>"
-           "<pubDate>Tue, 05 Mar 2024 01:02:03 GMT</pubDate>"
-           "<title>T1</title></item>"
-           "<item><link>l2</link>"
-           "<pubDate>9 Dec 2023 00:00:00 +0000</pubDate></item>"
-           "<item><guid>g3</guid><pubDate>31 Feb 2024</pubDate></item>"
-           "<item><guid>g1</guid><link>dup</link></item>"
-           "<item><title>unkeyable</title></item>"
-           "</channel></rss>")
-    feeds = spark.createDataFrame([("f1", xml)], "feed_url string, xml string")
-    out = {r["item_key"]: r for r in parse_rss_feeds(feeds).collect()}
-    assert set(out) == {"g1", "l2", "g3"}          # keyless item dropped
-    assert out["g1"]["link"] == "l1"               # dup guid: first wins
-    assert str(out["g1"]["pub_date"]) == "2024-03-05"
-    assert str(out["l2"]["pub_date"]) == "2023-12-09"  # day-name-less form
-    assert out["g3"]["pub_date"] is None           # 31 Feb nulls, no raise
 
 
 def test_atom_parse_pretty_printed_real_world_form(spark):
@@ -169,25 +58,6 @@ def test_atom_parse_pretty_printed_real_world_form(spark):
     assert str(out["e1"]["updated_date"]) == "2024-03-05"
     assert out["e1"]["title"] == "T1"
     assert out["e2"]["link"] == "l2"
-
-
-def test_rss_parse_pretty_printed(spark):
-    from distributed_web_crawler_spark.operators.html_links import (
-        parse_rss_feeds,
-    )
-    xml = ("<rss><channel>\n"
-           "  <item>\n"
-           "    <guid>g1</guid>\n"
-           "    <link>l1</link>\n"
-           "    <pubDate>Tue, 05 Mar 2024 01:02:03 GMT</pubDate>\n"
-           "  </item>\n"
-           "</channel></rss>\n")
-    feeds = spark.createDataFrame([("f1", xml)],
-                                  "feed_url string, xml string")
-    out = {r["item_key"]: r for r in parse_rss_feeds(feeds).collect()}
-    assert set(out) == {"g1"}
-    assert out["g1"]["link"] == "l1"
-    assert str(out["g1"]["pub_date"]) == "2024-03-05"
 
 
 def test_sitemap_parse_pretty_printed(spark):

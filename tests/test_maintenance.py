@@ -1,63 +1,4 @@
-"""Table-maintenance planner invariants (tables/maintenance.py): the
-compaction plan must pack to ~target without rewriting already-compact
-files, and the expiry plan must keep recency + archive points — both with
-scale-shape plan pins (no global window/sort over the manifest)."""
-
-from pyspark.sql import functions as F
-
-from distributed_web_crawler_spark.tables.maintenance import (
-    compaction_plan,
-    snapshot_expiry,
-)
-
-TARGET = 1000
-
-
-def _files(spark):
-    # 3 partitions x 60 files, deterministic sizes 1..1500
-    return spark.range(180).select(
-        (F.col("id") % 3).cast("string").alias("partition_key"),
-        F.col("id").alias("file_id"),
-        (F.pmod(F.col("id") * 37, F.lit(1500)) + 1).alias("size_bytes"))
-
-
-def test_compaction_plan_invariants(spark):
-    files = _files(spark)
-    plan = compaction_plan(files, TARGET, small_ratio=0.75).toPandas()
-    src = files.toPandas()
-    # candidates are exactly the sub-threshold files
-    assert set(plan.file_id) == set(
-        src[src.size_bytes < 0.75 * TARGET].file_id)
-    for (_, g) in plan.groupby(["partition_key", "group_id"]):
-        # next-fit bound: a group overfills by at most one member
-        assert g.size_bytes.sum() <= TARGET + g.size_bytes.max()
-    # group ids are dense from 0 within each partition
-    for _, p in plan.groupby("partition_key"):
-        gids = sorted(p.group_id.unique())
-        assert gids == list(range(len(gids)))
-
-
-def test_compaction_plan_deterministic(spark):
-    files = _files(spark)
-    a = compaction_plan(files, TARGET).toPandas().sort_values("file_id")
-    b = (compaction_plan(files.repartition(7), TARGET)
-         .toPandas().sort_values("file_id"))
-    assert a.reset_index(drop=True).equals(b.reset_index(drop=True))
-
-
-def test_snapshot_expiry_policy_and_plan(spark):
-    snaps = spark.range(40).select(
-        F.col("id").alias("snapshot_id"),
-        (F.col("id") * 100).alias("bytes"))
-    plan = snapshot_expiry(snaps, keep_last=5, keep_every=12)
-    got = {r.snapshot_id: r.action for r in plan.collect()}
-    for sid in range(40):
-        want = "keep" if sid > 34 or sid % 12 == 0 else "expire"
-        assert got[sid] == want, sid
-    # scale pin: recency cutoff is an agg+broadcast, never a global window
-    p = plan._jdf.queryExecution().executedPlan().toString()
-    assert "Window" not in p, p
-
+"""Snapshot-store time travel: as-of reads reproduce past rounds."""
 
 def test_time_travel_reads_reproduce_past_snapshots(spark, tmp_path):
     """Iceberg-style as-of reads: pages(as_of_round=k) equals what the

@@ -1,14 +1,14 @@
-"""Training-data pipeline operators: dedup families, similarity search,
-multimodal plumbing (SURVEY.md §5 step 2 + the pipeline extensions)."""
+"""Training-handoff operators: image near-dup, variant dedup and the
+training mix, dedup-group formation, the text-mix rungs, and the
+synthetic media codecs."""
 
 from __future__ import annotations
 
 import numpy as np
 import pytest
-from pyspark.sql import functions as F
 
 from distributed_web_crawler_spark.pipeline import dedup as pdedup
-from distributed_web_crawler_spark.pipeline import multimodal, similarity
+from distributed_web_crawler_spark.pipeline import multimodal
 
 
 @pytest.fixture(scope="module")
@@ -26,110 +26,6 @@ def docs(spark):
 def test_exact_dedup_keeps_min_id(docs):
     kept = {r["doc_id"] for r in pdedup.exact_dedup(docs).collect()}
     assert kept == {1, 3, 4, 5}
-
-
-def test_ngram_jaccard_finds_near_dup(docs):
-    pairs = {(r["doc_a"], r["doc_b"]): r["jaccard"]
-             for r in pdedup.ngram_jaccard_pairs(docs, n=3, threshold=0.5).collect()}
-    assert pairs[(1, 2)] == 1.0            # exact dup
-    assert 0.5 <= pairs[(1, 3)] < 1.0      # near dup (one word differs)
-    assert (1, 4) not in pairs
-
-
-def test_minhash_lsh_catches_exact_and_near(docs):
-    pairs = {(r["doc_a"], r["doc_b"])
-             for r in pdedup.minhash_lsh_verified(
-                 docs, num_hashes=16, bands=8, threshold=0.5).collect()}
-    assert (1, 2) in pairs                 # identical signatures always collide
-    # verified output is a subset of true-Jaccard pairs
-    truth = {(r["doc_a"], r["doc_b"])
-             for r in pdedup.ngram_jaccard_pairs(docs, threshold=0.5).collect()}
-    assert pairs <= truth
-
-
-def test_simhash_exact_dup_hamming_zero(docs):
-    sigs = {r["doc_id"]: r["simhash"]
-            for r in pdedup.simhash_signatures(docs).collect()}
-    assert sigs[1] == sigs[2]
-    pairs = {(r["doc_a"], r["doc_b"]): r["hamming"]
-             for r in pdedup.simhash_neardup_pairs(docs, max_hamming=16).collect()}
-    assert pairs[(1, 2)] == 0
-
-
-@pytest.fixture(scope="module")
-def vecs(spark):
-    rng = np.random.default_rng(7)
-    base = rng.standard_normal((6, 16))
-    base[1] = base[0] + 0.01 * rng.standard_normal(16)   # near dup of 0
-    rows = [(i, [float(x) for x in base[i]]) for i in range(6)]
-    return spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-
-
-def test_embedding_neardup_brute_and_lsh_agree_on_top_pair(vecs):
-    brute = {(r["vec_a"], r["vec_b"])
-             for r in pdedup.embedding_neardup_pairs(vecs, threshold=0.99).collect()}
-    assert (0, 1) in brute
-    lsh = {(r["vec_a"], r["vec_b"])
-           for r in pdedup.embedding_neardup_pairs(
-               vecs, threshold=0.99, use_lsh=True, n_planes=4).collect()}
-    assert lsh <= brute                    # LSH candidates are verified
-
-
-def test_ann_brute_force_topk_rank1_is_near_dup(vecs):
-    queries = (vecs.where(F.col("vec_id") == 0)
-               .select(F.col("vec_id").alias("query_id"), "embedding"))
-    top = similarity.brute_force_topk(vecs, queries, k=3).collect()
-    assert top[0]["rank"] == 1 and top[0]["vec_id"] == 1
-
-
-def test_ivf_recall_vs_brute_force(vecs):
-    queries = (vecs.where(F.col("vec_id") < 2)
-               .select(F.col("vec_id").alias("query_id"), "embedding"))
-    brute = {(r["query_id"], r["vec_id"])
-             for r in similarity.brute_force_topk(vecs, queries, k=2).collect()}
-    ivf_all = {(r["query_id"], r["vec_id"])
-               for r in similarity.ivf_topk(vecs, queries, k=2,
-                                            n_lists=2, nprobe=2).collect()}
-    assert ivf_all == brute                # nprobe = n_lists ⇒ exact
-
-
-def test_ivf_index_parquet_roundtrip_identical(vecs, tmp_path):
-    """build_ivf_index → write to parquet → read back → probe: results
-    must be IDENTICAL to the inline build (build-once probe-forever is
-    only sound if the stored index is lossless)."""
-    queries = (vecs.where(F.col("vec_id") < 3)
-               .select(F.col("vec_id").alias("query_id"), "embedding"))
-    inline = {(r["query_id"], r["vec_id"], r["cosine"], r["rank"])
-              for r in similarity.ivf_topk(vecs, queries, k=3,
-                                           n_lists=4, nprobe=2).collect()}
-    idx = similarity.build_ivf_index(vecs, n_lists=4)
-    spark = vecs.sparkSession
-    for name, df in idx.items():
-        df.write.mode("overwrite").parquet(str(tmp_path / name))
-    loaded = {name: spark.read.parquet(str(tmp_path / name))
-              for name in idx}
-    stored = {(r["query_id"], r["vec_id"], r["cosine"], r["rank"])
-              for r in similarity.ivf_topk(None, queries, k=3, nprobe=2,
-                                           index=loaded).collect()}
-    assert stored == inline
-
-
-def test_image_stats_roundtrip(spark):
-    from distributed_web_crawler_spark.config import SynthWebConfig
-    from distributed_web_crawler_spark.crawl.synthweb import (
-        SYNTH_IMAGE_SCHEMA, images_for_keys)
-    ids = spark.createDataFrame([(i,) for i in range(16)], "doc_id long")
-    imgs = ids.mapInPandas(images_for_keys(SynthWebConfig()),
-                           SYNTH_IMAGE_SCHEMA)
-    stats = multimodal.image_stats(imgs).collect()
-    meta = {r["image_id"]: (r["w"], r["h"], r["fmt"], r["phash"])
-            for r in imgs.collect()}
-    assert len(stats) == 16
-    for r in stats:
-        w, h, fmt, phash = meta[r["image_id"]]
-        # decode recovers the typed metadata and the stored phash exactly
-        assert (r["w"], r["h"], r["fmt"], r["phash"]) == (w, h, fmt, phash)
-        assert 0.0 <= r["mean_px"] <= 255.0
 
 
 def test_phash_neardup_detects_duplicate_payloads(spark):
@@ -200,92 +96,9 @@ def test_image_variant_dedup_keeps_lossless_isolates_requantize(spark):
         assert rows[j16]["cluster_id"] == j16 and rows[j16]["keep"]
 
 
-def test_audio_snr_verify_rejects_heavy_requantize(spark):
-    """Audio two-tier: each PCM group appears lossless / shift-4
-    (~71 dB) / shift-12 (~23 dB). The sample tier must VERIFY the light
-    requantize and REJECT any pair touching the heavy one."""
-    ids = spark.createDataFrame([(i,) for i in range(12)], "doc_id long")
-    auds = ids.mapInPandas(
-        multimodal.audios_for_keys(dup_mod=4, variant_shifts=(0, 4, 12)),
-        multimodal.SYNTH_AUDIO_SCHEMA)
-    rows = multimodal.audio_snr_verified_neardup(
-        auds, max_hamming=10, min_snr_db=40.0).collect()
-    by_pair = {(r["aud_a"], r["aud_b"]): r for r in rows}
-    for g in range(4):
-        pcm, light, heavy = (f"aud-{g:08d}", f"aud-{g + 4:08d}",
-                             f"aud-{g + 8:08d}")
-        ok = by_pair[(pcm, light)]
-        assert ok["verified"] and not ok["exact_samples"]
-        assert ok["snr_db"] > 40.0
-        for pair in ((pcm, heavy), (light, heavy)):
-            if pair in by_pair:  # banding may or may not propose it
-                r = by_pair[pair]
-                assert not r["verified"]
-                assert r["snr_db"] is not None and r["snr_db"] < 40.0
-
-
 def test_decode_real_image_is_gated(spark):
     with pytest.raises(NotImplementedError):
         multimodal.decode_real_image(b"\x89PNG")
-
-
-def test_lsh_degenerate_corpus_tiles_into_bounded_tasks(spark):
-    """Every vector in one half-space ⇒ all rows share one LSH bucket; the
-    tiling must split the bucket into bounded sub-block pairs instead of
-    one O(bucket²) task, and still find every exact-threshold pair."""
-    rng = np.random.default_rng(11)
-    n, block = 120, 16
-    base = np.abs(rng.standard_normal((n, 8))) + 0.1   # all-positive octant
-    base[1] = base[0]                                   # one exact dup pair
-    rows = [(i, [float(x) for x in base[i]]) for i in range(n)]
-    vecs = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    got = pdedup.embedding_neardup_pairs(
-        vecs, threshold=0.9999, use_lsh=True, n_planes=4, dim=8,
-        block_size=block)
-    # plan check: the collect_list groups are keyed by (bucket, blk) — with
-    # n=120 and block=16 there must be ≥8 sub-blocks, so no single group
-    # holds the whole corpus
-    blocks = (vecs.selectExpr("vec_id")
-              .withColumn("blk", F.pmod(F.xxhash64("vec_id"),
-                                        F.lit(-(-n // block))))
-              .groupBy("blk").count().collect())
-    assert len(blocks) >= 8
-    assert max(r["count"] for r in blocks) < 3 * block
-    pairs = {(r["vec_a"], r["vec_b"]) for r in got.collect()}
-    assert (0, 1) in pairs
-
-
-def test_embedding_exact_tier_no_driver_count(vecs):
-    """The exact tier must not run a driver-side count(); its plan is fully
-    lazy until the action."""
-    df = pdedup.embedding_neardup_pairs(vecs, threshold=0.5)
-    assert df.count() >= 1
-
-
-def test_ivf_lloyd_refinement_improves_recall(spark):
-    """One-two Lloyd passes over the hash-sampled centroids must raise
-    recall@5 at fixed (n_lists, nprobe) on the real embeddings table —
-    measured against brute force. Observed: 0.425 unrefined vs 0.475 at
-    refine_iters=2 (sf0.001, n_lists=8, nprobe=2); asserted with margin
-    for float-sum ordering drift in the per-list means."""
-    vecs = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    queries = (vecs.where(F.col("vec_id") < 16)
-               .select(F.col("vec_id").alias("query_id"), "embedding"))
-    brute = {(r["query_id"], r["vec_id"])
-             for r in similarity.brute_force_topk(vecs, queries, k=5)
-             .collect()}
-
-    def recall(iters: int) -> float:
-        got = {(r["query_id"], r["vec_id"])
-               for r in similarity.ivf_topk(
-                   vecs, queries, k=5, n_lists=8, nprobe=2,
-                   refine_iters=iters).collect()}
-        return len(got & brute) / len(brute)
-
-    r0, r2 = recall(0), recall(2)
-    assert r0 <= 0.44, f"unrefined baseline moved: {r0}"
-    assert r2 >= 0.45, f"refined recall too low: {r2}"
-    assert r2 > r0
 
 
 def test_audio_codec_roundtrip():
@@ -304,146 +117,11 @@ def test_video_codec_roundtrip():
     assert fps == 8 and dec.shape == (3, 4, 5) and (dec == frames).all()
 
 
-def test_audio_features_match_payload_metadata(spark):
-    ids = spark.createDataFrame([(i,) for i in range(12)], "doc_id long")
-    audios = ids.mapInPandas(multimodal.audios_for_keys(),
-                             multimodal.SYNTH_AUDIO_SCHEMA)
-    meta = {r["audio_id"]: (r["sample_rate"], r["n_samples"])
-            for r in audios.select("audio_id", "sample_rate",
-                                   "n_samples").collect()}
-    feats = multimodal.audio_features(audios).collect()
-    assert len(feats) == 12
-    for r in feats:
-        rate, n = meta[r["audio_id"]]
-        # decode recovers the typed metadata; duration is n/rate exactly
-        assert (r["sample_rate"], r["n_samples"]) == (rate, n)
-        assert r["duration_s"] == n / rate
-        assert r["rms"] > 0.0 and r["peak"] > 0
-        assert 0 <= r["zero_crossings"] < n
-
-
-def test_video_frame_sample_fanout_and_determinism(spark):
-    ids = spark.createDataFrame([(i,) for i in range(6)], "doc_id long")
-    videos = ids.mapInPandas(multimodal.videos_for_keys(),
-                             multimodal.SYNTH_VIDEO_SCHEMA)
-    meta = {r["video_id"]: (r["n_frames"], r["fps"])
-            for r in videos.select("video_id", "n_frames", "fps").collect()}
-    rows = multimodal.video_frame_sample(videos, every_k=2).collect()
-    by_vid: dict = {}
-    for r in rows:
-        by_vid.setdefault(r["video_id"], []).append(r)
-    for vid, (n, fps) in meta.items():
-        got = sorted(by_vid[vid], key=lambda r: r["frame_idx"])
-        # every 2nd frame, starting at 0 — exact fan-out
-        assert [r["frame_idx"] for r in got] == list(range(0, n, 2))
-        for r in got:
-            assert r["t_ms"] == r["frame_idx"] * 1000 // fps
-            assert 0.0 <= r["mean_px"] <= 255.0
-    # duplicate payload groups (dup_mod) yield identical per-frame features
-    dups = ids.mapInPandas(multimodal.videos_for_keys(dup_mod=3),
-                           multimodal.SYNTH_VIDEO_SCHEMA)
-    drows = multimodal.video_frame_sample(dups, every_k=2).collect()
-    sig = {}
-    for r in drows:
-        k = int(r["video_id"][4:]) % 3
-        sig.setdefault((k, r["frame_idx"]), set()).add(
-            (r["t_ms"], r["mean_px"], r["phash"]))
-    assert all(len(v) == 1 for v in sig.values())
-
-
 def test_decode_real_audio_video_are_gated():
     with pytest.raises(NotImplementedError):
         multimodal.decode_real_audio(b"RIFF")
     with pytest.raises(NotImplementedError):
         multimodal.decode_real_video(b"\x00\x00\x00 ftyp")
-
-
-def test_pii_scrub_and_stats(spark):
-    from distributed_web_crawler_spark.pipeline import text as ptext
-    rows = [
-        (1, "reach me at bob.smith+x@corp.example.org today"),
-        (2, "server 192.168.1.17 answered"),
-        (3, "ssn is 123-45-6789 ok"),
-        (4, "call +14155551234 or 555-867-5309"),
-        (5, "clean document with no identifiers"),
-        # email whose local part contains digits: scrubbed as ONE email,
-        # not counted again as phone/ssn on the residual pass
-        (6, "mail 555-867-5309@spam.example.net now"),
-    ]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    clean = {r["doc_id"]: r["clean_text"]
-             for r in ptext.pii_scrub(docs).collect()}
-    assert clean[1] == "reach me at [EMAIL] today"
-    assert clean[2] == "server [IPV4] answered"
-    assert clean[3] == "ssn is [SSN] ok"
-    assert clean[4] == "call [PHONE] or [PHONE]"
-    assert clean[5] == rows[4][1]
-    assert clean[6] == "mail [EMAIL] now"
-    stats = {r["doc_id"]: r for r in ptext.pii_stats(docs).collect()}
-    assert (stats[1]["n_email"], stats[1]["n_pii"]) == (1, 1)
-    assert (stats[4]["n_phone"], stats[4]["n_pii"]) == (2, 2)
-    assert stats[5]["n_pii"] == 0
-    # category counts equal what the scrub redacted (residual-text rule)
-    assert (stats[6]["n_email"], stats[6]["n_phone"],
-            stats[6]["n_ssn"]) == (1, 0, 0)
-
-
-def test_deterministic_sample_is_stable_and_partition_invariant(spark):
-    from distributed_web_crawler_spark.pipeline import text as ptext
-    docs = spark.range(0, 2000).withColumnRenamed("id", "doc_id")
-    kept1 = {r["doc_id"] for r in
-             ptext.deterministic_sample(docs, "doc_id", 0.3).collect()}
-    kept2 = {r["doc_id"] for r in ptext.deterministic_sample(
-        docs.repartition(17), "doc_id", 0.3).collect()}
-    assert kept1 == kept2                      # partitioning-invariant
-    assert 0.25 < len(kept1) / 2000 < 0.35     # rate is approximately met
-    # mirror agreement: the Python XXH64 mirror picks the same rows
-    from distributed_web_crawler_spark.functions.xxh64 import xxhash64
-    mirror = {d for d in range(2000)
-              if xxhash64(d) % 1_000_000 < 300_000}
-    assert kept1 == mirror
-
-
-def test_sq8_quantization_bounds_and_topk_recall(spark):
-    rng = np.random.default_rng(11)
-    base = rng.standard_normal((40, 32))
-    base[1] = base[0] + 0.01 * rng.standard_normal(32)   # near dup of 0
-    rows = [(i, [float(x) for x in base[i]]) for i in range(40)]
-    vecs = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    # quantized components stay in the int8 envelope and reconstruct to
-    # within half a quantization step
-    for r in similarity.quantize_embeddings(vecs).collect():
-        assert all(-127 <= v <= 127 for v in r["qvec"])
-        orig = dict(rows)[r["vec_id"]]
-        recon = [v * r["scale"] for v in r["qvec"]]
-        assert max(abs(a - b) for a, b in zip(orig, recon)) <= r["scale"] / 2 + 1e-12
-    queries = (vecs.where(F.col("vec_id") < 4)
-               .select(F.col("vec_id").alias("query_id"), "embedding"))
-    brute = {(r["query_id"], r["vec_id"])
-             for r in similarity.brute_force_topk(vecs, queries, k=5).collect()}
-    sq8_rows = similarity.sq8_topk(vecs, queries, k=5).collect()
-    sq8 = {(r["query_id"], r["vec_id"]) for r in sq8_rows}
-    # int8 cosine error ~1e-2 worst case; on separated gaussians the
-    # top-5 sets should agree almost everywhere
-    assert len(brute & sq8) / len(brute) >= 0.9
-    # the engineered near-dup is always rank 1
-    top = {r["query_id"]: r["vec_id"] for r in sq8_rows if r["rank"] == 1}
-    assert top[0] == 1
-    # the pre-quantized path (the scale API: corpus persisted as qvec)
-    # ranks identically to quantize-on-the-fly
-    pre = {(r["query_id"], r["vec_id"], r["rank"]) for r in similarity
-           .sq8_topk(similarity.quantize_embeddings(vecs), queries, k=5)
-           .collect()}
-    assert pre == {(r["query_id"], r["vec_id"], r["rank"]) for r in sq8_rows}
-    # an all-zero corpus vector scores 0.0, never NaN-above-everything
-    import math
-    zvecs = vecs.union(spark.createDataFrame(
-        [(99, [0.0] * 32)], "vec_id long, embedding array<double>"))
-    zrows = similarity.sq8_topk(zvecs, queries, k=5).collect()
-    assert all(not math.isnan(r["cosine"]) for r in zrows)
-    assert all(r["vec_id"] != 99 or r["cosine"] == 0.0 for r in zrows)
-    assert {r["query_id"]: r["vec_id"] for r in zrows
-            if r["rank"] == 1}[0] == 1
 
 
 # -- property tests: the synthetic media codecs are lossless round-trips --
@@ -470,29 +148,6 @@ def test_video_codec_roundtrip_property(n, h, w, fps, seed):
     frames = rng.integers(0, 256, (n, h, w), dtype=np.uint8)
     dec, dfps = multimodal.decode_video(multimodal.encode_video(frames, fps))
     assert dfps == fps and dec.shape == (n, h, w) and (dec == frames).all()
-
-
-def test_ivf_sq8_full_probe_equals_sq8_brute_force(spark):
-    rng = np.random.default_rng(23)
-    rows = [(i, [float(x) for x in v])
-            for i, v in enumerate(rng.standard_normal((30, 16)))]
-    vecs = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    queries = (vecs.where(F.col("vec_id") < 3)
-               .select(F.col("vec_id").alias("query_id"), "embedding"))
-    brute = {(r["query_id"], r["vec_id"], r["rank"], r["cosine"])
-             for r in similarity.sq8_topk(vecs, queries, k=4).collect()}
-    # nprobe = n_lists ⇒ every list probed ⇒ identical to quantized brute
-    full = {(r["query_id"], r["vec_id"], r["rank"], r["cosine"])
-            for r in similarity.ivf_sq8_topk(vecs, queries, k=4,
-                                             n_lists=4, nprobe=4).collect()}
-    assert full == brute
-    # partial probe returns a subset of probed-list candidates with the
-    # same quantized scores for overlapping hits
-    part = similarity.ivf_sq8_topk(vecs, queries, k=4,
-                                   n_lists=4, nprobe=2).collect()
-    brute_cos = {(q, v): c for q, v, _, c in brute}
-    assert all(brute_cos.get((r["query_id"], r["vec_id"]), r["cosine"])
-               == r["cosine"] for r in part)
 
 
 # ---------------------------------------------------------------------------
@@ -548,304 +203,6 @@ def test_assign_clusters_singletons_and_canonicals(spark):
                     3: (3, True), 4: (3, False), 5: (5, True)}
 
 
-def test_line_dedup_drops_boilerplate_keeps_order(spark):
-    from distributed_web_crawler_spark.pipeline import text as ptext
-    docs = spark.createDataFrame(
-        [(1, "alpha one\nFOOTER\nbravo two"),
-         (2, "charlie\nFOOTER\n  \ndelta"),
-         (3, "FOOTER\necho"),
-         (4, "FOOTER"),               # every line boilerplate
-         (5, "FOOTER\nFOOTER\nfox")], # dup line within one doc: df counts once
-        ["doc_id", "text"])
-    out = {r["doc_id"]: (r["clean_text"], r["n_lines"], r["n_kept"])
-           for r in ptext.line_dedup(docs, max_df=2).collect()}
-    assert out[1] == ("alpha one\nbravo two", 3, 2)
-    assert out[2] == ("charlie\ndelta", 3, 2)   # blank line dropped outright
-    assert out[3] == ("echo", 2, 1)
-    assert out[4] == ("", 1, 0)                 # row survives full removal
-    assert out[5] == ("fox", 3, 1)
-
-
-def test_repetition_signals_closed_form(spark):
-    from distributed_web_crawler_spark.pipeline import text as ptext
-    docs = spark.createDataFrame(
-        [(1, "a b\na b\nc d"),    # dup line 1/3; grams: "a b","b a","a b","b c","c d" -> dup 1/5, top 2/5
-         (2, "x\n\n x "),         # blank dropped; "x" duplicated
-         (3, "solo")],            # one line, one token, no grams
-        ["doc_id", "text"])
-    out = {r["doc_id"]: r.asDict() for r in
-           ptext.repetition_signals(docs).collect()}
-    r1 = out[1]
-    assert r1["n_lines"] == 3 and abs(r1["dup_line_frac"] - 1/3) < 1e-6
-    assert abs(r1["dup_line_char_frac"] - 3/9) < 1e-6
-    assert abs(r1["dup_2gram_frac"] - 0.2) < 1e-6
-    assert abs(r1["top_2gram_frac"] - 0.4) < 1e-6
-    r2 = out[2]
-    assert r2["n_lines"] == 2 and abs(r2["dup_line_frac"] - 0.5) < 1e-6
-    r3 = out[3]
-    assert (r3["n_lines"], r3["dup_2gram_frac"], r3["top_2gram_frac"]) == \
-        (1, 0.0, 0.0)
-
-
-def test_asof_join_semantics(spark):
-    from datetime import datetime as dt
-    from distributed_web_crawler_spark.operators.asof import asof_join
-    left = spark.createDataFrame(
-        [(1, dt(2024, 1, 1, 10, 0), "l1"),
-         (1, dt(2024, 1, 1, 11, 0), "l2"),
-         (1, dt(2024, 1, 1, 9, 0), "l0"),   # before any right row
-         (2, dt(2024, 1, 1, 10, 30), "l3")],
-        ["k", "ts", "tag"])
-    right = spark.createDataFrame(
-        [(1, dt(2024, 1, 1, 10, 0), 100.0),   # equal ts: valid match
-         (1, dt(2024, 1, 1, 10, 45), 200.0),
-         (2, dt(2024, 1, 1, 7, 0), 300.0)],   # stale for the tolerance case
-        ["k", "ts", "v"])
-    out = {r["tag"]: (r["asof_ts"], r["asof_v"])
-           for r in asof_join(left, right, on="k").collect()}
-    assert out["l1"] == (dt(2024, 1, 1, 10, 0), 100.0)   # inclusive tie
-    assert out["l2"] == (dt(2024, 1, 1, 10, 45), 200.0)  # latest prior
-    assert out["l0"] == (None, None)                     # nothing before
-    assert out["l3"] == (dt(2024, 1, 1, 7, 0), 300.0)
-
-    tol = F.expr("INTERVAL 1 HOUR")
-    out2 = {r["tag"]: (r["asof_ts"], r["asof_v"])
-            for r in asof_join(left, right, on="k",
-                               tolerance=tol).collect()}
-    assert out2["l1"] == (dt(2024, 1, 1, 10, 0), 100.0)
-    assert out2["l3"] == (None, None)                    # match too stale
-
-
-def test_caption_phash_dedup_keeps_one_per_payload_variant(spark):
-    """Caption groups built at mod 48 span exactly two payload variants
-    (mod 96): text-only dedup would keep 48 canonicals, the cross-modal
-    verification must keep one per (caption, phash) variant instead."""
-    from distributed_web_crawler_spark import queries as Q
-
-    out = Q.QUERIES["caption_phash_dedup"](
-        spark, "/root/testdata/sf0.001").collect()
-    assert len(out) == 128
-    by_fp = {}
-    for r in out:
-        by_fp.setdefault(r["caption_fp"], []).append(r)
-    assert len(by_fp) == 48
-    kept = [r for r in out if r["keep"]]
-    assert all(r["n_phash_variants"] == 2 for r in out)
-    # one survivor per (caption, payload-variant): 96 keepers, not 48
-    assert len(kept) == 96
-
-
-def test_incremental_dedup_tiers(spark):
-    """Exact tier catches normalized-identical text, fuzzy tier catches
-    near-identical text, novel docs keep — and new×new duplicates are
-    deliberately NOT collapsed (history-only comparison)."""
-    from distributed_web_crawler_spark.pipeline import dedup as pdedup
-
-    base = ("the quick brown fox jumps over the lazy dog and then runs "
-            "far away into the deep dark woods tonight")
-    old = spark.createDataFrame(
-        [(0, base), (2, "completely different historical text about "
-                        "spark physical plans and shuffle exchanges")],
-        "doc_id long, text string")
-    new = spark.createDataFrame(
-        [(1, "  THE quick   brown fox jumps over the lazy dog and then "
-             "runs far away into the deep dark woods tonight "),  # exact
-         (3, base + " extra"),                                    # fuzzy
-         (5, "an entirely novel document with no relatives at all "
-             "anywhere in the corpus it is simply new today"),    # novel
-         (7, "an entirely novel document with no relatives at all "
-             "anywhere in the corpus it is simply new today")],   # new×new
-        "doc_id long, text string")
-    rows = {r["doc_id"]: r for r in pdedup.incremental_dedup(
-        new, old, n=3, threshold=0.3, max_df=100).collect()}
-    assert not rows[1]["keep"] and rows[1]["match_kind"] == "exact" \
-        and rows[1]["matched_old"] == 0 and rows[1]["jaccard"] is None
-    assert not rows[3]["keep"] and rows[3]["match_kind"] == "fuzzy" \
-        and rows[3]["matched_old"] == 0 and rows[3]["jaccard"] >= 0.3
-    assert rows[5]["keep"] and rows[7]["keep"]
-
-
-def test_incremental_dedup_with_materialized_index(spark, tmp_path):
-    """history_index() written to parquet and read back must yield output
-    identical to the inline build — the 100 TB contract: the history is
-    indexed once, batches only probe."""
-    from distributed_web_crawler_spark.pipeline import dedup as pdedup
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    new = docs.where("doc_id % 2 = 1")
-    old = docs.where("doc_id % 2 = 0")
-    inline = sorted(map(tuple, pdedup.incremental_dedup(
-        new, old, n=3, threshold=0.3, max_df=100).collect()))
-    idx = pdedup.history_index(old, n=3, max_df=100)
-    paths = {}
-    for k, df in idx.items():
-        paths[k] = f"{tmp_path}/{k}"
-        df.write.parquet(paths[k])
-    loaded = {k: spark.read.parquet(p) for k, p in paths.items()}
-    via_index = sorted(map(tuple, pdedup.incremental_dedup(
-        new, None, n=3, threshold=0.3, index=loaded).collect()))
-    assert via_index == inline and len(inline) > 0
-
-
-def test_range_bucket_join_boundaries(spark):
-    """Half-open semantics and bucket-boundary intervals: value == hi
-    never matches, value == lo does, intervals wholly inside one bucket
-    and spanning several both work, overlaps return multiple rows."""
-    from distributed_web_crawler_spark.operators.rangejoin import (
-        range_bucket_join,
-    )
-
-    points = spark.createDataFrame(
-        [(1, 0.0), (2, 16.0), (3, 15.999), (4, 47.5), (5, 500.0)],
-        "event_id long, value double")
-    ranges = spark.createDataFrame(
-        [(10, 0.0, 16.0),    # exactly one bucket [0,16)
-         (11, 8.0, 50.0),    # spans buckets 0..3
-         (12, 40.0, 48.0)],  # inside bucket 2, overlaps 11
-        "bracket_id long, lo double, hi double")
-    got = sorted((r["event_id"], r["bracket_id"])
-                 for r in range_bucket_join(points, ranges,
-                                            bucket_width=16).collect())
-    assert got == [(1, 10), (2, 11), (3, 10), (3, 11), (4, 11), (4, 12)]
-
-
-def test_sequence_packing_layout(spark):
-    """Docs lay end-to-end per shard: offsets are the running token sum,
-    chunk spans split exactly at ctx_len boundaries."""
-    from distributed_web_crawler_spark.pipeline import text as ptext
-
-    mk = lambda n: " ".join(["tok"] * n)
-    docs = spark.createDataFrame(
-        [(0, mk(100)), (8, mk(200)), (16, mk(300)), (1, mk(10))],
-        "doc_id long, text string")
-    rows = {r["doc_id"]: r for r in ptext.sequence_packing(
-        docs, ctx_len=256, n_shards=8).collect()}
-    assert (rows[0]["shard"], rows[0]["offset_in_chunk"],
-            rows[0]["chunk_start"], rows[0]["chunk_end"]) == (0, 0, 0, 0)
-    assert (rows[8]["offset_in_chunk"], rows[8]["chunk_start"],
-            rows[8]["chunk_end"]) == (100, 0, 1)       # spans the boundary
-    assert (rows[16]["offset_in_chunk"], rows[16]["chunk_start"],
-            rows[16]["chunk_end"]) == (300 % 256, 1, 2)
-    assert (rows[1]["shard"], rows[1]["offset_in_chunk"]) == (1, 0)
-
-
-def test_pq_exact_when_codebook_covers_corpus(spark):
-    # k_cent >= n: every vector is its own codeword (d2 = 0 to itself),
-    # so the ADC sum IS the exact subspace-rounded squared L2 and PQ
-    # reduces to brute-force L2 top-k.
-    rng = np.random.default_rng(7)
-    base = rng.standard_normal((12, 16))
-    rows = [(i, [float(x) for x in base[i]]) for i in range(12)]
-    vecs = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    queries = (vecs.where(F.col("vec_id") < 3)
-               .select(F.col("vec_id").alias("query_id"), "embedding"))
-    got = similarity.pq_topk(vecs, queries, k=3, m_sub=4, k_cent=12,
-                             dim=16).collect()
-    for q in range(3):
-        want = [v for _, v in sorted(
-            (round(sum(round(float(((base[q][j * 4:(j + 1) * 4]
-                                     - base[v][j * 4:(j + 1) * 4]) ** 2)
-                                   .sum()), 6) for j in range(4)), 6), v)
-            for v in range(12) if v != q)[:3]]
-        got_q = [r["vec_id"] for r in sorted(
-            (r for r in got if r["query_id"] == q), key=lambda r: r["rank"])]
-        assert got_q == want
-
-
-def test_pq_near_dup_is_rank1_in_lossy_regime(spark):
-    # k_cent << n: the near dup of the query encodes to the query's own
-    # codes, so its ADC distance is the per-subspace table minimum -- no
-    # candidate can beat it, and vec_id tie-break keeps it rank 1.
-    rng = np.random.default_rng(13)
-    base = rng.standard_normal((40, 32))
-    base[1] = base[0] + 1e-4 * rng.standard_normal(32)
-    rows = [(i, [float(x) for x in base[i]]) for i in range(40)]
-    vecs = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    queries = (vecs.where(F.col("vec_id") == 0)
-               .select(F.col("vec_id").alias("query_id"), "embedding"))
-    got = similarity.pq_topk(vecs, queries, k=3, m_sub=4, k_cent=8,
-                             dim=32).collect()
-    assert [r["vec_id"] for r in got if r["rank"] == 1] == [1]
-
-
-def test_ivf_pq_full_probe_equals_pq_brute_force(spark):
-    # nprobe = n_lists: IVF prunes nothing, so IVF-PQ must rank exactly
-    # like plain PQ over the whole corpus (shared codebook + ADC).
-    rng = np.random.default_rng(23)
-    base = rng.standard_normal((30, 16))
-    rows = [(i, [float(x) for x in base[i]]) for i in range(30)]
-    vecs = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    queries = (vecs.where(F.col("vec_id") < 3)
-               .select(F.col("vec_id").alias("query_id"), "embedding"))
-    pq = {(r["query_id"], r["vec_id"], r["rank"], r["adist"])
-          for r in similarity.pq_topk(vecs, queries, k=4, m_sub=4,
-                                      k_cent=8, dim=16).collect()}
-    full = {(r["query_id"], r["vec_id"], r["rank"], r["adist"])
-            for r in similarity.ivf_pq_topk(
-                vecs, queries, k=4, n_lists=4, nprobe=4, m_sub=4,
-                k_cent=8, dim=16).collect()}
-    assert full == pq
-    # partial probe returns a per-query subset of the full-probe ranking
-    # universe (candidates only shrink)
-    part = similarity.ivf_pq_topk(vecs, queries, k=4, n_lists=4, nprobe=1,
-                                  m_sub=4, k_cent=8, dim=16).collect()
-    pq_pairs = {(t[0], t[1]) for t in pq}
-    assert len(part) > 0
-    for r in part:
-        assert r["rank"] <= 4
-
-
-def test_lm_perplexity_hand_computed(spark):
-    import math
-
-    from distributed_web_crawler_spark.pipeline import text as ptext
-    docs = spark.createDataFrame(
-        [(0, "a b a b"), (1, "a b x"), (2, "z")],
-        "doc_id long, text string")
-    model = docs.where(F.col("doc_id") == 0)
-    # model bigrams: (a,b)x2, (b,a)x1 -> c_a=2, c_b=1, V=2 contexts
-    got = {r["doc_id"]: r
-           for r in ptext.lm_perplexity(docs, model).collect()}
-    assert 2 not in got                      # single token: no bigrams
-    lab = round(math.log((2 + 1) / (2 + 2.0)), 6)   # seen (a,b)
-    lba = round(math.log((1 + 1) / (1 + 2.0)), 6)   # seen (b,a)
-    lbx = round(math.log((0 + 1) / (1 + 2.0)), 6)   # unseen (b,x), seen ctx
-    d0 = got[0]
-    assert (d0["n_bigrams"], d0["n_oov"]) == (3, 0)
-    avg0 = round((2 * lab + lba) / 3, 6)
-    assert d0["avg_logprob"] == avg0
-    assert d0["ppl"] == round(math.exp(-avg0), 6)
-    d1 = got[1]
-    assert (d1["n_bigrams"], d1["n_oov"]) == (2, 1)
-    assert d1["avg_logprob"] == round((lab + lbx) / 2, 6)
-    # the in-domain doc is more fluent under its own model
-    assert d0["ppl"] < d1["ppl"]
-
-
-def test_duplicate_span_stats_hand_computed(spark):
-    docs = spark.createDataFrame(
-        [(0, "a b c d e f"),        # shares "a b c d" with doc 1
-         (1, "x y a b c d q"),
-         (2, "m m m m"),            # self-repeating window
-         (3, "p q")],               # < w tokens: excluded
-        "doc_id long, text string")
-    got = {r["doc_id"]: r
-           for r in pdedup.duplicate_span_stats(docs, w=3).collect()}
-    assert set(got) == {0, 1, 2}
-    # doc0 windows: abc bcd cde def; abc+bcd shared with doc1 -> run 2
-    assert (got[0]["n_windows"], got[0]["n_dup_windows"],
-            got[0]["max_dup_run"]) == (4, 2, 2)
-    assert got[0]["dup_fraction"] == 0.5
-    # doc1 dups at pos 3,4 (consecutive)
-    assert (got[1]["n_windows"], got[1]["n_dup_windows"],
-            got[1]["max_dup_run"]) == (5, 2, 2)
-    # doc2: "m m m" occurs at pos 1 AND 2 -> both windows dup via
-    # same-document repetition
-    assert (got[2]["n_windows"], got[2]["n_dup_windows"],
-            got[2]["max_dup_run"]) == (2, 2, 2)
-    assert got[2]["dup_fraction"] == 1.0
-
-
 def test_decontaminate_flags_hand_computed(spark):
     train = spark.createDataFrame(
         [(0, "the secret eval answer is forty two ok extra pad"),
@@ -887,348 +244,6 @@ def test_source_quota_cap_and_determinism(spark):
     kept2 = ptext.source_quota_sample(df.repartition(7), cap=4).collect()
     assert {(r["doc_id"], r["quota_rank"]) for r in kept2} == \
            {(r["doc_id"], r["quota_rank"]) for r in kept}
-
-
-def test_semantic_dedup_drops_within_cluster_near_dup(spark):
-    rng = np.random.default_rng(31)
-    base = rng.standard_normal((24, 16))
-    base[7] = base[3] + 1e-3 * rng.standard_normal(16)   # near-dup of 3
-    rows = [(i, [float(x) for x in base[i]]) for i in range(24)]
-    vecs = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    got = {r["vec_id"]: r
-           for r in pdedup.semantic_dedup(vecs, n_lists=4,
-                                          threshold=0.95).collect()}
-    assert len(got) == 24                       # every vector classified
-    # the near-identical pair shares a cluster; the higher id is dropped,
-    # the lower id survives
-    assert got[7]["list_id"] == got[3]["list_id"]
-    assert not got[7]["keep"]
-    assert got[3]["keep"]
-    # random gaussians in 16-d are nowhere near 0.95 cosine: only the
-    # engineered duplicate is dropped
-    assert sum(not r["keep"] for r in got.values()) == 1
-
-
-def test_mixture_weights_temperature_math(spark):
-    from distributed_web_crawler_spark.pipeline import text as ptext
-    rows = ([(i, "big") for i in range(80)]
-            + [(100 + i, "small") for i in range(10)])
-    df = spark.createDataFrame(rows, "doc_id long, source string")
-    got = {r["source"]: r
-           for r in ptext.mixture_weights(df, alpha=0.5).collect()}
-    z = 80 ** 0.5 + 10 ** 0.5
-    assert got["big"]["weight"] == round(80 ** 0.5 / z, 6)
-    assert got["small"]["weight"] == round(10 ** 0.5 / z, 6)
-    # alpha < 1 upsamples the tail: small repeats, big is downsampled
-    assert got["small"]["repeat_factor"] > 1.0 > got["big"]["repeat_factor"]
-    assert got["small"]["repeat_factor"] == round(
-        (10 ** 0.5 / z) * 90 / 10, 6)
-    # weights sum to 1 (up to the per-row rounding)
-    assert abs(sum(r["weight"] for r in got.values()) - 1.0) < 2e-6
-    # alpha = 1 is proportional sampling: every repeat factor is exactly 1
-    prop = {r["source"]: r for r in ptext.mixture_weights(df, 1.0).collect()}
-    assert all(r["repeat_factor"] == 1.0 for r in prop.values())
-
-
-def test_distribution_drift_js_properties(spark):
-    import math
-
-    from distributed_web_crawler_spark.pipeline import text as ptext
-    old = spark.createDataFrame(
-        [(i, "a") for i in range(6)] + [(10 + i, "b") for i in range(2)],
-        "doc_id long, source string")
-    new = spark.createDataFrame(
-        [(i, "a") for i in range(2)] + [(10 + i, "b") for i in range(2)]
-        + [(20 + i, "c") for i in range(4)],
-        "doc_id long, source string")
-    got = {r["source"]: r
-           for r in ptext.distribution_drift(old, new).collect()}
-    assert set(got) == {"a", "b", "c"}
-    # hand-computed: p = (.75, .25, 0), q = (.25, .25, .5)
-    def term(p, q):
-        m = (p + q) / 2
-        return round((p / 2 * math.log2(p / m) if p else 0)
-                     + (q / 2 * math.log2(q / m) if q else 0), 6)
-    assert got["a"]["js_term"] == term(0.75, 0.25)
-    assert got["b"]["js_term"] == term(0.25, 0.25) == 0.0
-    # 'c' exists only in the new snapshot: KL would be infinite, the JS
-    # term is finite and positive
-    assert got["c"]["p_old"] == 0.0 and got["c"]["js_term"] == term(0, 0.5)
-    total = sum(r["js_term"] for r in got.values())
-    assert 0.0 < total <= 1.0 + 1e-9        # JSD (base 2) is in [0, 1]
-    # identical snapshots -> zero divergence everywhere
-    same = ptext.distribution_drift(old, old).collect()
-    assert all(r["js_term"] == 0.0 for r in same)
-
-
-def test_packed_chunk_manifest_reconstructs_full_chunks(spark):
-    from distributed_web_crawler_spark.pipeline import text as ptext
-    # shard 0 only (ids all multiples of 2, n_shards=2): token counts
-    # 3, 5, 4, 10 -> stream of 22 tokens in ctx_len=8 chunks
-    docs = spark.createDataFrame(
-        [(0, "a " * 3), (2, "b " * 5), (4, "c " * 4), (6, "d " * 10),
-         (1, "x " * 8)],
-        "doc_id long, text string")
-    rows = ptext.packed_chunk_manifest(docs, ctx_len=8, n_shards=2).collect()
-    s0 = [r for r in rows if r["shard"] == 0]
-    # doc 6 (10 tokens at offset 12) spans chunks 1 and 2
-    spans = {(r["doc_id"], r["chunk_id"]): r for r in s0}
-    assert (6, 1) in spans and (6, 2) in spans
-    a, b = spans[(6, 1)], spans[(6, 2)]
-    assert (a["tok_from"], a["tok_to"], a["chunk_off"]) == (0, 4, 4)
-    assert (b["tok_from"], b["tok_to"], b["chunk_off"]) == (4, 10, 0)
-    # every doc's slices cover [0, n_tokens) without gap or overlap
-    per_doc = {}
-    for r in rows:
-        per_doc.setdefault(r["doc_id"], []).append((r["tok_from"], r["tok_to"]))
-    n_tok = {0: 3, 2: 5, 4: 4, 6: 10, 1: 8}
-    for d, sl in per_doc.items():
-        sl.sort()
-        assert sl[0][0] == 0 and sl[-1][1] == n_tok[d]
-        assert all(sl[i][1] == sl[i + 1][0] for i in range(len(sl) - 1))
-    # every FULL chunk gathers exactly ctx_len tokens
-    per_chunk = {}
-    for r in rows:
-        per_chunk.setdefault((r["shard"], r["chunk_id"]), 0)
-        per_chunk[(r["shard"], r["chunk_id"])] += r["tok_to"] - r["tok_from"]
-    # shard 0 holds 22 tokens: chunks 0,1 full (8), chunk 2 tail (6)
-    assert per_chunk[(0, 0)] == 8 and per_chunk[(0, 1)] == 8
-    assert per_chunk[(0, 2)] == 6
-
-
-def test_stratified_split_exact_fractions_and_stability(spark):
-    from distributed_web_crawler_spark.pipeline import text as ptext
-    rows = ([(i, "en") for i in range(200)]
-            + [(1000 + i, "de") for i in range(20)])
-    df = spark.createDataFrame(rows, "doc_id long, lang string")
-    got = ptext.stratified_split(df, strata_col="lang",
-                                 pct=(90, 5, 5)).collect()
-    by = {}
-    for r in got:
-        by.setdefault((r["lang"], r["split"]), 0)
-        by[(r["lang"], r["split"])] += 1
-    # exact per-stratum fractions — even the 20-row stratum keeps its
-    # 1-row val and test slices (a global hash split would often not)
-    assert by[("en", "train")] == 180 and by[("en", "val")] == 10
-    assert by[("en", "test")] == 10
-    assert by[("de", "train")] == 18 and by[("de", "val")] == 1
-    assert by[("de", "test")] == 1
-    # partition-invariant: same assignment under a different layout
-    got2 = ptext.stratified_split(df.repartition(13), strata_col="lang",
-                                  pct=(90, 5, 5)).collect()
-    assert {(r["doc_id"], r["split"]) for r in got2} == \
-           {(r["doc_id"], r["split"]) for r in got}
-
-
-def test_ivf_pq_residual_exact_when_codebook_covers(spark):
-    # residual invariant: ||(u-c)-(q-c)|| == ||u-q||, so with the
-    # codebook covering every residual (k_cent >= n) and a full probe,
-    # residual IVF-PQ equals brute-force L2 over the unit vectors.
-    rng = np.random.default_rng(29)
-    base = rng.standard_normal((12, 16))
-    unit = base / np.linalg.norm(base, axis=1, keepdims=True)
-    rows = [(i, [float(x) for x in base[i]]) for i in range(12)]
-    vecs = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    queries = (vecs.where(F.col("vec_id") < 3)
-               .select(F.col("vec_id").alias("query_id"), "embedding"))
-    got = similarity.ivf_pq_topk(vecs, queries, k=3, n_lists=3, nprobe=3,
-                                 m_sub=4, k_cent=12, dim=16,
-                                 residual=True).collect()
-    for q in range(3):
-        want = [v for _, v in sorted(
-            (round(sum(round(float(((unit[q][j * 4:(j + 1) * 4]
-                                     - unit[v][j * 4:(j + 1) * 4]) ** 2)
-                                   .sum()), 6) for j in range(4)), 6), v)
-            for v in range(12) if v != q)[:3]]
-        got_q = [r["vec_id"] for r in sorted(
-            (r for r in got if r["query_id"] == q), key=lambda r: r["rank"])]
-        assert got_q == want
-
-
-def test_ivf_pq_residual_reduces_adc_error_on_clustered_data(spark):
-    # 6 well-separated blobs, k_cent=6: the raw codebook must cover 6
-    # distant blobs with 6 codewords (hash sampling leaves some blobs
-    # uncovered -> large errors); residual clouds all live in one small
-    # ball, so the same budget quantizes them far more finely.
-    # Measured with seed 17: mean |adist - true| 0.151 raw vs 0.027
-    # residual (5.6x).
-    rng = np.random.default_rng(17)
-    centers = rng.standard_normal((6, 16)) * 3
-    pts = np.vstack([c + 0.05 * rng.standard_normal((8, 16))
-                     for c in centers])
-    pts = pts / np.linalg.norm(pts, axis=1, keepdims=True)
-    n = len(pts)
-    rows = [(i, [float(x) for x in pts[i]]) for i in range(n)]
-    vecs = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    queries = (vecs.where(F.col("vec_id") < 4)
-               .select(F.col("vec_id").alias("query_id"), "embedding"))
-
-    def true_d2(q, v):
-        return round(sum(
-            round(float(((pts[q][j * 4:(j + 1) * 4]
-                          - pts[v][j * 4:(j + 1) * 4]) ** 2).sum()), 6)
-            for j in range(4)), 6)
-
-    def mean_err(residual):
-        got = similarity.ivf_pq_topk(
-            vecs, queries, k=n, n_lists=6, nprobe=6, m_sub=4, k_cent=6,
-            dim=16, residual=residual).collect()
-        errs = [abs(r["adist"] - true_d2(r["query_id"], r["vec_id"]))
-                for r in got]
-        return sum(errs) / len(errs)
-
-    e_raw, e_res = mean_err(False), mean_err(True)
-    assert e_res < e_raw / 2
-
-
-def test_knn_label_vote_majority_and_ties(spark):
-    rng = np.random.default_rng(37)
-    centers = rng.standard_normal((2, 8)) * 4
-    # class 0: vectors 0..4 around center A; class 1: 5..9 around B
-    pts = np.vstack([centers[i // 5] + 0.05 * rng.standard_normal(8)
-                     for i in range(10)])
-    rows = [(i, [float(x) for x in pts[i]], i // 5) for i in range(10)]
-    vecs = spark.createDataFrame(
-        rows, "vec_id long, embedding array<double>, label int")
-    queries = (vecs.where(F.col("vec_id").isin(0, 5))
-               .select(F.col("vec_id").alias("query_id"), "embedding",
-                       F.col("label").alias("true_label")))
-    got = {r["query_id"]: r
-           for r in similarity.knn_label_vote(vecs, queries, k=3).collect()}
-    # each query's 3 nearest neighbors are its own tight cluster
-    assert got[0]["pred_label"] == 0 and got[0]["correct"]
-    assert got[5]["pred_label"] == 1 and got[5]["correct"]
-    assert got[0]["votes"] == 3 and got[5]["votes"] == 3
-    # with k=4 the vote can split 2-2 across labels only if a cross-
-    # cluster neighbor enters; clusters are far apart, so still 4-0
-    got4 = {r["query_id"]: r
-            for r in similarity.knn_label_vote(vecs, queries, k=4).collect()}
-    assert got4[0]["votes"] == 4 and got4[0]["pred_label"] == 0
-
-
-def test_bpe_train_hand_computed_merges(spark):
-    from distributed_web_crawler_spark.pipeline import text as ptext
-    docs = spark.createDataFrame(
-        [(0, "aaab aaab"), (1, "ab ab ab")], "doc_id long, text string")
-    got = [(r["rank"], r["left"], r["right"], r["freq"])
-           for r in ptext.bpe_train(docs, n_merges=3)
-           .orderBy("rank").collect()]
-    # pair counts: (a,b) = 2+3 = 5 beats (a,a) = 4 -> merge 1
-    # then (a,a) = 2 ties (a,ab) = 2 -> lexicographically smallest wins
-    # then the only pair left in "aaab" is (aa, ab)
-    assert got == [(1, "a", "b", 5), (2, "a", "a", 2), (3, "aa", "ab", 2)]
-    # greedy left-to-right: "aaaa" under merge (a,a) yields aa,aa -> the
-    # follow-up merge is (aa,aa), never an overlapping (a,aa)
-    docs2 = spark.createDataFrame([(0, "aaaa")], "doc_id long, text string")
-    got2 = [(r["rank"], r["left"], r["right"])
-            for r in ptext.bpe_train(docs2, n_merges=2)
-            .orderBy("rank").collect()]
-    assert got2 == [(1, "a", "a"), (2, "aa", "aa")]
-
-
-def test_bm25_matches_python_mirror(spark):
-    import math
-    from distributed_web_crawler_spark.pipeline import text as ptext
-    corpus = [(0, "spark spark merge"), (1, "merge table"),
-              (2, "table row"), (3, "spark row row table")]
-    terms, k1, b = ["spark", "merge"], 1.2, 0.75
-    lens = {d: len(t.split()) for d, t in corpus}
-    avgdl = sum(lens.values()) / len(corpus)
-    tf = {(d, w): t.split().count(w)
-          for d, t in corpus for w in terms if w in t.split()}
-    df = {w: sum(1 for (d2, w2) in tf if w2 == w) for w in terms}
-    want = {}
-    for (d, w), f in tf.items():
-        idf = math.log(1 + (len(corpus) - df[w] + 0.5) / (df[w] + 0.5))
-        ts = round(idf * f * (k1 + 1)
-                   / (f + k1 * (1 - b + b * lens[d] / avgdl)), 6)
-        s, n = want.get(d, (0.0, 0))
-        want[d] = (round(s + ts, 6), n + 1)
-    docs = spark.createDataFrame(corpus, "doc_id long, text string")
-    got = {r["doc_id"]: (r["score"], r["n_terms"])
-           for r in ptext.bm25_search(docs, terms, k=10).collect()}
-    assert got == want
-    # ranking is (score desc, doc_id): doc 0 has both terms and the
-    # highest tf, so it must lead
-    top = ptext.bm25_search(docs, terms, k=1).collect()[0]
-    assert top["doc_id"] == 0
-
-
-def test_bpe_encode_lengths_hand_computed(spark):
-    from distributed_web_crawler_spark.pipeline import text as ptext
-    docs = spark.createDataFrame(
-        [(0, "aaab aaab"), (1, "ab ab ab")], "doc_id long, text string")
-    # merges learned: (a,b) then (a,a); "aaab" -> [aa, ab], "ab" -> [ab]
-    got = {r["doc_id"]: (r["n_words"], r["n_tokens"])
-           for r in ptext.bpe_encode_lengths(docs, n_merges=2,
-                                             checkpoint_every=1).collect()}
-    assert got == {0: (2, 4), 1: (3, 3)}
-
-
-def test_funnel_requires_strict_order(spark, tmp_path):
-    import datetime as dt
-    from distributed_web_crawler_spark import queries as Q
-    t0 = dt.datetime(2024, 1, 1)
-    rows = [
-        # user 1 completes the funnel in order
-        (1, t0, 1, "signup", 0.0, ""), (2, t0.replace(hour=1), 1, "view", 0.0, ""),
-        (3, t0.replace(hour=2), 1, "click", 0.0, ""),
-        (4, t0.replace(hour=3), 1, "purchase", 0.0, ""),
-        # user 2's purchase precedes the click -> stops at stage 3
-        (5, t0, 2, "signup", 0.0, ""), (6, t0.replace(hour=1), 2, "view", 0.0, ""),
-        (7, t0.replace(hour=3), 2, "click", 0.0, ""),
-        (8, t0.replace(hour=2), 2, "purchase", 0.0, ""),
-        # user 3 never signs up -> in no stage
-        (9, t0, 3, "view", 0.0, ""), (10, t0.replace(hour=1), 3, "purchase", 0.0, ""),
-    ]
-    spark.createDataFrame(
-        rows, "event_id long, ts timestamp, user_id long, event_type string,"
-              " value double, props string"
-    ).write.mode("overwrite").parquet(f"{tmp_path}/events.parquet")
-    got = {r["stage"]: r["n_users"]
-           for r in Q.QUERIES["funnel_stages"](spark, str(tmp_path)).collect()}
-    assert got == {1: 2, 2: 2, 3: 2, 4: 1}
-
-
-def test_rrf_fuse_one_sided_and_order(spark):
-    from distributed_web_crawler_spark.pipeline.similarity import rrf_fuse
-    sparse = spark.createDataFrame(
-        [(10, 1), (11, 2), (12, 3)], "doc_id long, rank int")
-    dense = spark.createDataFrame(
-        [(11, 1), (13, 2)], "doc_id long, rank int")
-    got = {r["doc_id"]: r for r in rrf_fuse(sparse, dense, k=10).collect()}
-    # doc 11 in both lists: 1/(60+2) + 1/(60+1) -> top of the fused order
-    assert [d for d in sorted(got, key=lambda d: got[d]["rank"])][0] == 11
-    # one-sided docs keep a null rank on the missing side, contribute 0
-    assert got[10]["dense_rank"] is None and got[10]["sparse_rank"] == 1
-    assert got[13]["sparse_rank"] is None and got[13]["dense_rank"] == 2
-    # micro-unit scores: 1e6/61 -> 16393, 1e6/62 -> 16129
-    assert got[11]["rrf_score"] == round((16393 + 16129) / 1e6, 6)
-    assert got[10]["rrf_score"] == round(16393 / 1e6, 6)
-    assert len(got) == 4
-
-
-def test_video_psnr_verify_rejects_heavy_requantize(spark):
-    """Video two-tier: lossless / shift-1 (~51 dB) / shift-4 (~29 dB)
-    variants of each frame group — light merges, heavy is rejected."""
-    ids = spark.createDataFrame([(i,) for i in range(12)], "doc_id long")
-    vids = ids.mapInPandas(
-        multimodal.videos_for_keys(dup_mod=4, variant_shifts=(0, 1, 4)),
-        multimodal.SYNTH_VIDEO_SCHEMA)
-    rows = multimodal.video_psnr_verified_neardup(
-        vids, max_hamming=10, min_psnr=40.0).collect()
-    by_pair = {(r["vid_a"], r["vid_b"]): r for r in rows}
-    for g in range(4):
-        raw, light, heavy = (f"vid-{g:08d}", f"vid-{g + 4:08d}",
-                             f"vid-{g + 8:08d}")
-        ok = by_pair[(raw, light)]
-        assert ok["verified"] and not ok["exact_frames"]
-        assert ok["psnr_db"] > 40.0
-        for pair in ((raw, heavy), (light, heavy)):
-            if pair in by_pair:
-                r = by_pair[pair]
-                assert not r["verified"]
-                assert r["psnr_db"] is not None and r["psnr_db"] < 40.0
 
 
 def test_image_training_mix_composes_all_four_stages(spark):
@@ -1274,99 +289,6 @@ def test_image_training_mix_composes_all_four_stages(spark):
     for key, pairs in per_bs.items():
         pairs.sort()
         assert [b for _, b in pairs] == list(range(len(pairs))), key
-
-
-def test_incremental_image_dedup_tiers_and_novelty(spark):
-    """History = png of groups 0..3; batch carries a byte-identical png
-    re-crawl (exact), a ~51 dB jpeg re-encode (psnr match), a ~29 dB
-    jpeg16 requantize (proposed but rejected -> kept) and novel groups
-    the history never saw (kept, no match)."""
-    from distributed_web_crawler_spark.config import SynthWebConfig
-    from distributed_web_crawler_spark.crawl.synthweb import (
-        SYNTH_IMAGE_SCHEMA, images_for_keys)
-    vf = ("png", "jpeg", "jpeg16", "png")
-
-    def imgs(keys):
-        df = spark.createDataFrame([(k,) for k in keys], "doc_id long")
-        return df.mapInPandas(
-            images_for_keys(SynthWebConfig(), dup_mod=8, variant_fmts=vf),
-            SYNTH_IMAGE_SCHEMA)
-
-    # dup_mod=8: groups 0..3 in history (png, rep 0); batch reps 1..3
-    old = imgs(range(4))
-    new = imgs(list(range(8, 20)) + list(range(24, 28)))
-    rows = {r["image_id"]: r for r in multimodal.incremental_image_dedup(
-        new, old, max_hamming=10, min_psnr=40.0).collect()}
-    assert len(rows) == 16
-    for g in range(4):
-        jpeg = rows[f"img-{8 + g:08d}"]       # rep 1, group g
-        j16 = rows[f"img-{16 + g:08d}"]       # rep 2, group g
-        png2 = rows[f"img-{24 + g:08d}"]      # rep 3, byte-identical
-        novel = rows[f"img-{12 + g:08d}"]     # rep 1, group 4+g: no history
-        assert png2["match_kind"] == "exact" and not png2["keep"]
-        assert png2["matched_old"] == f"img-{g:08d}"
-        assert png2["hamming"] is None and png2["psnr_db"] is None
-        assert jpeg["match_kind"] == "psnr" and not jpeg["keep"]
-        assert jpeg["matched_old"] == f"img-{g:08d}"
-        assert jpeg["psnr_db"] is None or jpeg["psnr_db"] >= 40.0
-        assert j16["keep"] and j16["match_kind"] is None
-        assert novel["keep"] and novel["matched_old"] is None
-
-
-def test_incremental_image_dedup_materialized_index_identical(spark):
-    """A history index round-tripped through parquet yields bit-identical
-    verdicts to the inline build (the materialized-artifact contract)."""
-    import tempfile
-
-    from distributed_web_crawler_spark.config import SynthWebConfig
-    from distributed_web_crawler_spark.crawl.synthweb import (
-        SYNTH_IMAGE_SCHEMA, images_for_keys)
-    vf = ("png", "jpeg", "jpeg16", "png")
-
-    def imgs(keys):
-        df = spark.createDataFrame([(k,) for k in keys], "doc_id long")
-        return df.mapInPandas(
-            images_for_keys(SynthWebConfig(), dup_mod=8, variant_fmts=vf),
-            SYNTH_IMAGE_SCHEMA)
-
-    old, new = imgs(range(4)), imgs(range(8, 20))
-    inline = sorted(map(tuple, multimodal.incremental_image_dedup(
-        new, old, max_hamming=10, min_psnr=40.0).collect()))
-    with tempfile.TemporaryDirectory() as d:
-        idx = multimodal.image_history_index(old)
-        for k, df in idx.items():
-            df.write.mode("overwrite").parquet(f"{d}/{k}")
-        stored = {k: spark.read.parquet(f"{d}/{k}") for k in idx}
-        via_index = sorted(map(tuple, multimodal.incremental_image_dedup(
-            new, old, max_hamming=10, min_psnr=40.0,
-            index=stored).collect()))
-    assert inline == via_index
-
-
-def test_image_mix_report_counts_are_internally_consistent(spark):
-    """The dataset card's rungs are monotone non-increasing, reconcile
-    with the manifest, and the reject breakdown sums to raw - curated."""
-    from distributed_web_crawler_spark.config import SynthWebConfig
-    from distributed_web_crawler_spark.crawl.synthweb import (
-        SYNTH_IMAGE_SCHEMA, images_for_keys)
-    ids = spark.createDataFrame([(i,) for i in range(16)], "doc_id long")
-    imgs = ids.mapInPandas(
-        images_for_keys(SynthWebConfig(), dup_mod=4,
-                        variant_fmts=("png", "jpeg", "jpeg16", "png")),
-        SYNTH_IMAGE_SCHEMA)
-    rep = multimodal.image_mix_report(
-        imgs, max_hamming=10, min_psnr=40.0, batch_size=1, n_shards=1)
-    rows = {(r["kind"], r["key"]): r["rows"] for r in rep.collect()}
-    stages = [rows[("stage", k)] for k in
-              ("raw", "curated", "payload_unique", "variant_survivors",
-               "batched")]
-    assert stages[0] == 16
-    assert all(a >= b for a, b in zip(stages, stages[1:]))
-    rejects = sum(v for (k, _), v in rows.items() if k == "reject")
-    assert rejects == stages[0] - stages[1]
-    manifest = multimodal.image_training_mix(
-        imgs, max_hamming=10, min_psnr=40.0, batch_size=1, n_shards=1)
-    assert manifest.count() == stages[4] == stages[3]  # batch_size=1
 
 
 def test_thumb_screen_soundness_and_edge_equality(spark):
@@ -1428,210 +350,3 @@ def test_thumb_screen_soundness_and_edge_equality(spark):
     imgs.unpersist()
 
 
-def test_audio_video_screen_soundness_and_edge_equality(spark):
-    """The block-mean screen rung for audio and video (the thumbnail
-    screen generalized): (a) the screen PSNR/SNR upper-bounds the full
-    decode-compare (Jensen over the fixed block partition), so (b)
-    verified edges with the screen on equal the unscreened run, and
-    (c) the screen genuinely prunes candidates on the variant corpus
-    (heavy requantizes die on sigs before any payload byte moves)."""
-    import numpy as np
-
-    # (a) direct bound check on decoded payloads
-    rng_keys = list(range(12))
-    for modality, mk, schema, dec, pfn, means, counts, peak in [
-        ("audio",
-         multimodal.audios_for_keys(dup_mod=4, variant_shifts=(0, 4, 12)),
-         multimodal.SYNTH_AUDIO_SCHEMA, multimodal.decode_audio,
-         multimodal.audio_psnr, multimodal.audio_screen_means,
-         lambda p: multimodal._audio_screen_counts(len(p)), 32767.0),
-        ("video",
-         multimodal.videos_for_keys(dup_mod=4, variant_shifts=(0, 1, 4)),
-         multimodal.SYNTH_VIDEO_SCHEMA, multimodal.decode_video,
-         multimodal.video_psnr, multimodal.video_screen_means,
-         lambda p: multimodal._video_screen_counts(*p.shape), 255.0),
-    ]:
-        items = spark.createDataFrame([(i,) for i in rng_keys],
-                                      "doc_id long").mapInPandas(mk, schema)
-        payloads = [dec(bytes(r["bytes"])) for r in items.collect()]
-        checked = 0
-        for i in range(len(payloads)):
-            for j in range(i + 1, len(payloads)):
-                (pa, ma), (pb, mb) = payloads[i], payloads[j]
-                if pa.shape != pb.shape or ma != mb:
-                    continue
-                full = pfn(pa, pb)
-                d = means(pa) - means(pb)
-                cnts = counts(pa)
-                mse = float((cnts * d * d).sum() / cnts.sum())
-                bound = float("inf") if mse == 0.0 else \
-                    20.0 * np.log10(peak) - 10.0 * np.log10(mse)
-                assert bound >= full - 1e-9, (modality, i, j, bound, full)
-                checked += 1
-        assert checked > 4, modality
-
-    # (b)+(c) audio: edge equality + pruning
-    aud = spark.createDataFrame([(i,) for i in range(24)], "doc_id long") \
-        .mapInPandas(multimodal.audios_for_keys(
-            dup_mod=8, variant_shifts=(0, 4, 12)),
-            multimodal.SYNTH_AUDIO_SCHEMA).cache()
-
-    def a_edges(prefilter):
-        return {(r["aud_a"], r["aud_b"]) for r in
-                multimodal.audio_snr_verified_neardup(
-                    aud, max_hamming=10, min_snr_db=40.0,
-                    prefilter=prefilter).where("verified").collect()}
-
-    assert a_edges("screen") == a_edges(None)
-    assert a_edges("auto") == a_edges(None)
-    a_sigs = multimodal._media_fp_pass(
-        aud, "audio_id", "ahash", multimodal.audio_energy_hash,
-        multimodal.decode_audio)
-    a_pairs = multimodal.banded_hamming_pairs(
-        a_sigs, "audio_id", "ahash", "aud_a", "aud_b", 10)
-    n_banded = a_pairs.count()
-    n_screened = multimodal.media_screened_pairs(
-        aud, a_pairs, 40.0, multimodal.AUDIO_SCREEN,
-        "audio_id", "aud_a", "aud_b").count()
-    assert 0 < n_screened < n_banded
-    aud.unpersist()
-
-    # (b)+(c) video: edge equality + pruning
-    vid = spark.createDataFrame([(i,) for i in range(24)], "doc_id long") \
-        .mapInPandas(multimodal.videos_for_keys(
-            dup_mod=8, variant_shifts=(0, 1, 4)),
-            multimodal.SYNTH_VIDEO_SCHEMA).cache()
-
-    def v_edges(prefilter):
-        return {(r["vid_a"], r["vid_b"]) for r in
-                multimodal.video_psnr_verified_neardup(
-                    vid, max_hamming=10, min_psnr=40.0,
-                    prefilter=prefilter).where("verified").collect()}
-
-    assert v_edges("screen") == v_edges(None)
-    v_sigs = multimodal._media_fp_pass(
-        vid, "video_id", "vhash", multimodal.video_temporal_hash,
-        multimodal.decode_video)
-    v_pairs = multimodal.banded_hamming_pairs(
-        v_sigs, "video_id", "vhash", "vid_a", "vid_b", 10)
-    assert 0 < multimodal.media_screened_pairs(
-        vid, v_pairs, 40.0, multimodal.VIDEO_SCREEN,
-        "video_id", "vid_a", "vid_b").count() < v_pairs.count()
-    vid.unpersist()
-
-
-def test_incremental_media_dedup_screen_equivalence(spark):
-    """The cross-table screen in incremental_audio/video_dedup must be
-    a pure prune: verdicts with the screen forced on (min_pairs=0),
-    auto, and off are identical."""
-    for mk, schema, fn in [
-        (multimodal.audios_for_keys(dup_mod=2, variant_shifts=(0, 4, 12)),
-         multimodal.SYNTH_AUDIO_SCHEMA, multimodal.incremental_audio_dedup),
-        (multimodal.videos_for_keys(dup_mod=2, variant_shifts=(0, 1, 4)),
-         multimodal.SYNTH_VIDEO_SCHEMA, multimodal.incremental_video_dedup),
-    ]:
-        old = spark.createDataFrame([(i,) for i in range(4)],
-                                    "doc_id long").mapInPandas(mk, schema)
-        new = spark.createDataFrame([(i,) for i in range(2, 10)],
-                                    "doc_id long").mapInPandas(mk, schema)
-
-        def verdicts(**kw):
-            return sorted(tuple(r) for r in fn(new, old, **kw).collect())
-
-        base = verdicts(prefilter=None)
-        assert verdicts(prefilter="screen") == base
-        assert verdicts(prefilter="auto", screen_min_pairs=0) == base
-        assert verdicts(prefilter="auto") == base
-        assert len(base) == 8
-
-
-def test_incremental_audio_dedup_exact_and_near_tiers(spark):
-    """incremental_audio_dedup: byte-identical re-crawls hit the exact
-    sha2 tier (the fixture the oracle's distinct-shift corpus cannot
-    produce), light requantizes of history groups match via SNR, heavy
-    requantizes and novel groups are kept."""
-    old_ids = spark.createDataFrame([(i,) for i in range(4)],
-                                    "doc_id long")
-    new_ids = spark.createDataFrame([(i,) for i in range(2, 10)],
-                                    "doc_id long")
-    # groups of 2: ids g, g+2 (light shift-4), g+4... with dup_mod=2 and
-    # shifts (0, 4, 12): ids 0-1 pcm, 2-3 light, 4-5 heavy, 6+ wrap
-    mk = multimodal.audios_for_keys(dup_mod=2, variant_shifts=(0, 4, 12))
-    old = old_ids.mapInPandas(mk, multimodal.SYNTH_AUDIO_SCHEMA)
-    new = new_ids.mapInPandas(mk, multimodal.SYNTH_AUDIO_SCHEMA)
-    rows = {r["audio_id"]: r for r in
-            multimodal.incremental_audio_dedup(new, old).collect()}
-    assert len(rows) == 8
-    # ids 2,3 (light) exist in BOTH batches byte-identically -> exact
-    for i in (2, 3):
-        r = rows[f"aud-{i:08d}"]
-        assert not r["keep"] and r["match_kind"] == "exact"
-        assert r["matched_old"] == f"aud-{i:08d}"
-    # ids 4,5 are heavy requantizes of history pcm 0,1: proposed near
-    # the pcm but rejected at 40 dB -> kept
-    for i in (4, 5):
-        assert rows[f"aud-{i:08d}"]["keep"]
-    # ids 6,7 wrap to shift-0*... whatever their relation, the verdict
-    # must be consistent: kept XOR carries a match
-    for i in (6, 7, 8, 9):
-        r = rows[f"aud-{i:08d}"]
-        assert r["keep"] == (r["match_kind"] is None)
-
-
-def test_incremental_image_dedup_screen_equivalence(spark):
-    """The cross-table thumbnail screen in incremental_image_dedup must
-    be a pure prune: verdicts with the screen on equal the unscreened
-    run over a corpus with exact re-crawls, light re-encodes, heavy
-    requantizes and novel groups."""
-    from distributed_web_crawler_spark.config import SynthWebConfig
-    from distributed_web_crawler_spark.crawl.synthweb import (
-        SYNTH_IMAGE_SCHEMA, images_for_keys)
-    mk = images_for_keys(SynthWebConfig(), dup_mod=8,
-                         variant_fmts=("png", "jpeg", "jpeg16"))
-    old = spark.createDataFrame([(i,) for i in range(8)], "doc_id long") \
-        .mapInPandas(mk, SYNTH_IMAGE_SCHEMA)
-    new = spark.createDataFrame([(i,) for i in range(4, 24)],
-                                "doc_id long") \
-        .mapInPandas(mk, SYNTH_IMAGE_SCHEMA)
-
-    def verdicts(prefilter):
-        return sorted(
-            (r["image_id"], r["keep"], r["match_kind"], r["matched_old"])
-            for r in multimodal.incremental_image_dedup(
-                new, old, prefilter=prefilter).collect())
-
-    on, off = verdicts("thumb"), verdicts(None)
-    assert on == off and len(on) == 20
-    # the fixture has power: some matched, some kept
-    assert any(not k for _, k, _, _ in on)
-    assert any(k for _, k, _, _ in on)
-
-
-def test_incremental_image_dedup_auto_gate(spark):
-    """prefilter='auto' is a runtime volume gate, never a semantics
-    change: whichever side of screen_min_pairs the banded candidate
-    count lands on, verdicts equal the unscreened run."""
-    from distributed_web_crawler_spark.config import SynthWebConfig
-    from distributed_web_crawler_spark.crawl.synthweb import (
-        SYNTH_IMAGE_SCHEMA, images_for_keys)
-    import pytest
-    mk = images_for_keys(SynthWebConfig(), dup_mod=8,
-                         variant_fmts=("png", "jpeg", "jpeg16"))
-    old = spark.createDataFrame([(i,) for i in range(8)], "doc_id long") \
-        .mapInPandas(mk, SYNTH_IMAGE_SCHEMA)
-    new = spark.createDataFrame([(i,) for i in range(4, 24)],
-                                "doc_id long") \
-        .mapInPandas(mk, SYNTH_IMAGE_SCHEMA)
-
-    def verdicts(**kw):
-        return sorted(
-            (r["image_id"], r["keep"], r["match_kind"], r["matched_old"])
-            for r in multimodal.incremental_image_dedup(
-                new, old, **kw).collect())
-
-    base = verdicts(prefilter=None)
-    # below the gate: screen stays off; above (min_pairs=0): forced on
-    assert verdicts(prefilter="auto") == base
-    assert verdicts(prefilter="auto", screen_min_pairs=0) == base
-    with pytest.raises(ValueError):
-        multimodal.incremental_image_dedup(new, old, prefilter="bogus")

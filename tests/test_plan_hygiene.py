@@ -7,21 +7,13 @@ invariants the per-query pins in test_plans.py check locally:
 - ``BatchEvalPython`` (row-at-a-time Python UDF) appears NOWHERE: all
   Python on the board rides Arrow (ArrowEvalPython / MapInPandas /
   FlatMapGroupsInPandas).
-- ``CartesianProduct`` appears only in the one documented place: the
-  embedding near-dup's tile-bounded exact verification tier, where every
-  task is capped at ~2·block_size rows (pipeline/dedup._tiled_pairs).
-- ``BroadcastNestedLoopJoin`` / ``Exchange SinglePartition`` appear only
-  in the whitelisted queries where the pattern is a bounded scalar
-  shape, one of:
-  (a) a 1-row global aggregate (corpus size, total token count, config
-      row) broadcast-crossed onto the data — map-side, no data shuffle
-      (bm25's corpus stats, lm_perplexity's totals, tf-idf's N, ANN's
-      tiling count);
-  (b) the final single-partition agg of a global scalar (page_count) or
-      a deliberately tiny report (dedup_eval's per-config rollup,
-      image_mix_report's per-rung dataset-card counts).
+- ``CartesianProduct``, ``BroadcastNestedLoopJoin`` and ``Exchange
+  SinglePartition`` appear only in whitelisted queries where the pattern
+  is a bounded scalar shape (a 1-row global aggregate broadcast-crossed
+  onto the data, or the final single-partition agg of a tiny report).
+  No query on the crawl board needs one, so every whitelist is empty.
 
-Any query OUTSIDE the whitelist growing one of these markers is a plan
+Any query OUTSIDE a whitelist growing one of these markers is a plan
 regression and fails here, board-wide, without needing a bespoke pin.
 """
 
@@ -31,34 +23,9 @@ import __spark_entry__ as entrymod
 
 SF_DIR = "/root/testdata/sf0.01"
 
-# CartesianProduct: the tile-bounded exact tier only.
-CARTESIAN_OK = {"embedding_neardup"}
-
-# BroadcastNestedLoopJoin with a 1-row / bounded broadcast side (scalar
-# corpus stats, tiling counts, config rows) — benign pattern (a) above.
-NESTED_LOOP_OK = {
-    "ann_ivf_pq_topk", "ann_ivf_sq8_topk", "ann_ivf_topk", "ann_pq_topk",
-    "ann_recall", "ann_sq8_topk", "ann_topk", "bm25_search",
-    "budget_allocation", "centroid_drift", "corpus_drift", "embedding_neardup",
-    "epoch_expansion", "hard_negatives", "host_hits", "hybrid_rrf",
-    "knn_label_vote", "lm_perplexity", "margin_pairs", "mix_weights",
-    "phash_band_eval", "pmi_collocations", "semantic_dedup",
-    "snapshot_expiry", "tfidf_topterms",
-}
-
-# Exchange SinglePartition feeding a global scalar aggregate or a tiny
-# final report — benign pattern (b) above.
-SINGLE_PARTITION_OK = {
-    "bm25_search", "budget_allocation", "centroid_drift", "corpus_drift",
-    "dedup_eval", "epoch_expansion", "funnel_stages", "host_hits",
-    "hybrid_rrf", "image_mix_report", "lm_perplexity", "mix_weights",
-    "page_count",
-    "pmi_collocations", "snapshot_expiry", "tfidf_topterms",
-    # dataset-card rollup: one row per pipeline rung — each rung's count
-    # partial-aggregates map-side and the single-partition exchange
-    # carries ~#partitions rows, the image_mix_report shape
-    "training_mix_report",
-}
+CARTESIAN_OK: set[str] = set()
+NESTED_LOOP_OK: set[str] = set()
+SINGLE_PARTITION_OK: set[str] = set()
 
 
 def test_every_query_plan_is_scale_clean(spark):

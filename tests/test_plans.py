@@ -2,8 +2,6 @@
 claims (pushdown, column pruning, map-side combine, broadcast joins) so a
 refactor that silently degrades the 100 TB plan fails loudly here."""
 
-from pyspark.sql import functions as F
-
 from distributed_web_crawler_spark import queries as Q
 
 SF = "/root/testdata/sf0.001"
@@ -11,13 +9,6 @@ SF = "/root/testdata/sf0.001"
 
 def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
-
-
-def test_metadata_projection_pushdown_and_pruning(spark):
-    plan = _plan(Q.QUERIES["metadata_projection"](spark, SF))
-    assert "PushedFilters: [IsNotNull(n_chars)" in plan, plan[:1500]
-    read = plan.split("ReadSchema", 1)[1][:200]
-    assert "text" not in read, f"text column not pruned: {read}"
 
 
 def test_exact_dedup_partial_agg_no_window(spark):
@@ -33,12 +24,6 @@ def test_politeness_crawl_delay_join_broadcasts(spark):
     plan = _plan(Q.QUERIES["politeness_crawl_delay"](spark, SF))
     assert "BroadcastExchange" in plan, plan[:1500]
     assert "SortMergeJoin" not in plan, "delay join must broadcast"
-
-
-def test_ann_brute_force_no_cartesian(spark):
-    plan = _plan(Q.QUERIES["ann_topk"](spark, SF))
-    assert "CartesianProduct" not in plan, plan[:1500]
-    assert "BroadcastNestedLoopJoin" in plan or "BroadcastHashJoin" in plan
 
 
 def test_crawl_phase_b_never_reads_payload_bytes(spark, tmp_path):
@@ -64,324 +49,10 @@ def test_crawl_phase_b_never_reads_payload_bytes(spark, tmp_path):
         assert "bytes" not in chunk[:400], chunk[:400]
 
 
-def test_text_curation_ops_are_single_scan_no_exchange(spark):
-    # pii_stats / pii_scrub / doc_sample: one pruned parquet scan inside
-    # whole-stage codegen — no exchange, no UDF (PLANS.md)
-    for name in ("pii_stats", "pii_scrub", "doc_sample"):
-        plan = _plan(Q.QUERIES[name](spark, SF))
-        assert "Exchange" not in plan, f"{name} shuffles: {plan[:1200]}"
-        assert "Python" not in plan, f"{name} leaves the JVM: {plan[:1200]}"
-        read = plan.split("ReadSchema", 1)[1][:200]
-        assert "doc_id" in read and "lang" not in read, read
-
-
-def test_media_ops_are_map_only(spark):
-    # audio_features / video_frame_sample: MapInPandas chains with no
-    # exchange after the (test-input-only) key limit — raw media bytes
-    # never cross a shuffle (PLANS.md)
-    for name in ("audio_features", "video_frame_sample"):
-        plan = _plan(Q.QUERIES[name](spark, SF))
-        body = plan.split("TakeOrderedAndProject", 1)[0]
-        assert "Exchange" not in body, f"{name}: {plan[:1200]}"
-        assert "MapInPandas" in plan, plan[:1200]
-
-
-def test_sq8_topk_broadcasts_queries_no_cartesian(spark):
-    plan = _plan(Q.QUERIES["ann_sq8_topk"](spark, SF))
-    assert "CartesianProduct" not in plan, plan[:1200]
-    assert "BroadcastNestedLoopJoin" in plan or "BroadcastExchange" in plan
-
-
-def test_curation_pipeline_single_exchange_no_python(spark):
-    # lang/quality gate → exact dedup → PII scrub → sample fuse into ONE
-    # exchange (the dedup hash agg, partial map-side) with zero Python
-    plan = _plan(Q.QUERIES["curation_pipeline"](spark, SF))
-    assert plan.count("Exchange") == 1, plan[:1500]
-    assert "Python" not in plan
-    assert "partial_min_by" in plan
-
-
-def test_curation_pipeline_codegen_compiles(spark):
-    # The fused gate+dedup stage once blew the JVM 64 KB method limit
-    # (per-stopword regex splits inlined into sort_addToSorter_0) and
-    # silently fell back to interpreted execution. With fallback disabled
-    # a compile failure raises instead of degrading — run the whole plan
-    # that way so a codegen-size regression fails loudly.
-    old = spark.conf.get("spark.sql.codegen.fallback")
-    spark.conf.set("spark.sql.codegen.fallback", "false")
-    try:
-        rows = Q.QUERIES["curation_pipeline"](spark, SF).count()
-        assert rows >= 0
-        assert Q.QUERIES["text_lang_quality"](spark, SF).count() > 0
-    finally:
-        spark.conf.set("spark.sql.codegen.fallback", old)
-
-
-def test_asof_join_is_union_window_not_range_join(spark):
-    # one hash exchange + window sort; never a cartesian/range explosion
-    plan = _plan(Q.QUERIES["events_asof_join"](spark, SF))
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-    assert "Window" in plan
-
-
-def test_bucketed_join_no_exchange(spark, tmp_path):
-    # bucketBy records the hash layout in the catalog: an equi-join of two
-    # tables bucketed the same way on the join key shuffles NOTHING
-    from distributed_web_crawler_spark.tables.bucketed import write_bucketed
-
-    docs = spark.read.parquet(f"{SF}/documents.parquet")
-    old_thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        a = write_bucketed(spark, docs.select("doc_id", "text"),
-                           "bkt_docs_a", "doc_id", 8,
-                           path=str(tmp_path / "a"))
-        b = write_bucketed(spark, docs.select(
-                               "doc_id", F.length("text").alias("n")),
-                           "bkt_docs_b", "doc_id", 8,
-                           path=str(tmp_path / "b"))
-        j = a.join(b, "doc_id")
-        plan = _plan(j)
-        assert "Exchange" not in plan, plan[:2000]
-        assert j.count() == docs.count()
-        # the same join on unbucketed parquet shuffles both sides
-        plain = docs.select("doc_id", "text").join(
-            docs.select("doc_id", F.length("text").alias("n")), "doc_id")
-        assert "Exchange" in _plan(plain)
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_thresh)
-        spark.sql("DROP TABLE IF EXISTS bkt_docs_a")
-        spark.sql("DROP TABLE IF EXISTS bkt_docs_b")
-
-
-def test_vocab_topk_take_ordered_no_global_sort(spark):
-    plan = _plan(Q.QUERIES["vocab_topk"](spark, SF))
-    assert "TakeOrderedAndProject" in plan, plan[:1500]
-    assert "partial_count" in plan, "must combine map-side"
-
-
-def test_tfidf_topk_window_group_limit(spark):
-    """The per-doc top-k must push below the window exchange as a partial
-    WindowGroupLimit (rank filter evaluated per-partition first)."""
-    plan = _plan(Q.QUERIES["tfidf_topterms"](spark, SF))
-    assert "WindowGroupLimit" in plan, plan[:2000]
-    assert "CartesianProduct" not in plan
-
-
-def test_pagerank_iteration_aggregate_is_exchange_free(spark):
-    """Each PageRank iteration must reuse the cached dst-partitioning of
-    the edge table: no ENSURE_REQUIREMENTS shuffle on dst in the loop
-    body (the only dst exchange is the one-time REPARTITION_BY_COL cache
-    build), and the rank vector must broadcast, never sort-merge."""
-    from distributed_web_crawler_spark.pipeline import graph as pgraph
-
-    docs = spark.read.parquet(f"{SF}/documents.parquet")
-    nodes, edges = pgraph.host_graph(docs, 32)
-    df = pgraph.pagerank(nodes, edges, 32, iterations=3)
-    plan = _plan(df)
-    ensure_dst = [ln for ln in plan.splitlines()
-                  if "Exchange hashpartitioning(dst" in ln
-                  and "ENSURE_REQUIREMENTS" in ln]
-    assert not ensure_dst, ensure_dst
-    assert "SortMergeJoin" not in plan
-
-
-def test_pagerank_mass_is_exactly_conserved(spark):
-    """4-regular bijective graph + dyadic damping ⇒ total rank mass is
-    EXACTLY 1.0 after any number of iterations — the bit-exactness
-    contract the oracle relies on."""
-    from distributed_web_crawler_spark.pipeline import graph as pgraph
-
-    docs = spark.read.parquet(f"{SF}/documents.parquet")
-    nodes, edges = pgraph.host_graph(docs, 32)
-    rows = pgraph.pagerank(nodes, edges, 32, iterations=6).collect()
-    assert sum(r["rank"] for r in rows) == 1.0
-    assert len(rows) == 32
-
-
-def test_caption_phash_dedup_single_exchange(spark):
-    """Both windows (caption-level stats, per-variant winner) must share
-    ONE hash exchange: the (caption_fp, phash) window's clustering is
-    satisfied by the caption_fp partitioning, costing only a re-sort."""
-    from distributed_web_crawler_spark.pipeline import multimodal
-
-    imgs = spark.range(256).repartition(8).select(
-        F.concat(F.lit("img-"), F.col("id")).alias("image_id"),
-        (F.col("id") % 48).cast("string").alias("caption"),
-        (F.col("id") % 96).alias("phash"))
-    plan = _plan(multimodal.caption_phash_dedup(imgs))
-    n_hash_ex = plan.count("Exchange hashpartitioning")
-    assert n_hash_ex == 1, plan[:2000]
-    assert plan.count("+- Window") == 2
-
-
 def test_image_curation_is_map_only(spark):
     plan = _plan(Q.QUERIES["image_curation"](spark, SF))
     assert "Exchange hashpartitioning" not in plan
     assert "bytes" not in plan.split("ReadSchema", 1)[-1][:300]
-
-
-def test_range_bucket_join_is_hash_join_not_nested_loop(spark):
-    """The bucket rewrite must plan as an equi hash join — never the
-    O(n*m) BroadcastNestedLoopJoin the naive BETWEEN predicate gets."""
-    plan = _plan(Q.QUERIES["range_bracket_join"](spark, SF))
-    assert "BroadcastNestedLoopJoin" not in plan, plan[:2000]
-    assert "CartesianProduct" not in plan
-    assert "BroadcastHashJoin" in plan or "SortMergeJoin" in plan
-
-
-def test_pq_topk_broadcast_join_no_cartesian_no_global_sort(spark):
-    plan = _plan(Q.QUERIES["ann_pq_topk"](spark, SF))
-    assert "CartesianProduct" not in plan, plan[:1200]
-    assert "BroadcastNestedLoopJoin" in plan or "BroadcastExchange" in plan
-    # codebook pick is TakeOrderedAndProject, final rank a per-query
-    # window -- nothing range-partitions the corpus
-    assert "rangepartitioning" not in plan, plan[:1200]
-
-
-def test_ivf_pq_topk_no_cartesian_no_corpus_self_join(spark):
-    plan = _plan(Q.QUERIES["ann_ivf_pq_topk"](spark, SF))
-    assert "CartesianProduct" not in plan, plan[:1200]
-    # coarse assignment + PQ encode fuse map-only over broadcasts; the
-    # only non-broadcast join key is list_id (the probe)
-    assert "SortMergeJoin" not in plan, plan[:1200]
-    assert "rangepartitioning" not in plan, plan[:1200]
-
-
-def test_decontaminate_probe_is_broadcast_join(spark):
-    # the eval fingerprint set broadcasts: the corpus window stream is
-    # probed map-only, never shuffled on the window key
-    plan = _plan(Q.QUERIES["decontaminate"](spark, SF))
-    assert "BroadcastHashJoin" in plan, plan[:1500]
-    assert "SortMergeJoin" not in plan, plan[:1500]
-
-
-def test_source_quota_window_group_limit(spark):
-    # the rank<=cap filter must plan as WindowGroupLimit (partial below
-    # the exchange): map tasks forward at most cap rows per group
-    plan = _plan(Q.QUERIES["source_quota"](spark, SF))
-    assert "WindowGroupLimit" in plan, plan[:1500]
-
-
-def test_training_mix_flagship_no_python_no_cartesian(spark):
-    # six composed stages stay entirely JVM-side and join-safe
-    plan = _plan(Q.QUERIES["training_mix"](spark, SF))
-    assert "Python" not in plan, plan[:1500]
-    assert "CartesianProduct" not in plan, plan[:1500]
-
-
-def test_bm25_take_ordered_broadcast_no_corpus_shuffle_of_text(spark):
-    """Top-k must be a TakeOrderedAndProject (no global sort); df/stats
-    sides must broadcast (no SortMergeJoin); the only exchange carries
-    reduced postings, with map-side partial aggregation."""
-    plan = _plan(Q.QUERIES["bm25_search"](spark, SF))
-    assert "TakeOrderedAndProject" in plan, plan[:2000]
-    assert "SortMergeJoin" not in plan
-    assert "CartesianProduct" not in plan
-    assert "partial_count" in plan
-
-
-def test_triangle_count_oriented_hash_joins_no_cartesian(spark):
-    """Triangle enumeration must stay hash joins over the degree-oriented
-    edge set (wedge fan-out bounded) with a semi-join close — never a
-    cartesian/nested-loop pairing of edges."""
-    plan = _plan(Q.QUERIES["triangle_count"](spark, SF))
-    assert "CartesianProduct" not in plan, plan[:2000]
-    assert "BroadcastNestedLoopJoin" not in plan, plan[:2000]
-    assert "LeftSemi" in plan, "closing edge probe must be a semi join"
-
-
-def test_lang_source_pivot_no_distinct_collect_job(spark):
-    """pivot() is given the explicit language list, so building the plan
-    must not trigger a Spark job (the implicit-pivot distinct+collect);
-    the plan is a single-exchange partial aggregate."""
-    from distributed_web_crawler_spark.pipeline import text as ptext
-
-    docs = spark.read.parquet(f"{SF}/documents.parquet")
-    tracker = spark.sparkContext.statusTracker()
-    before = len(tracker.getJobIdsForGroup() or [])
-    df = ptext.language_source_matrix(docs)
-    after = len(tracker.getJobIdsForGroup() or [])
-    assert after == before, "pivot ran a driver-blocking distinct job"
-    plan = _plan(df)
-    assert "partial_pivot" in plan or "partial_count" in plan, plan[:2000]
-
-
-def test_adaptive_budget_single_exchange(spark):
-    """The discrete-rank p95 window and the per-host aggregates share
-    the host clustering, so the whole AIMD budget computation must plan
-    exactly ONE hash exchange (shuffle by host)."""
-    plan = _plan(Q.QUERIES["adaptive_budget"](spark, SF))
-    import re
-    n = len(re.findall(r"Exchange (?:hash|range)partitioning"
-                       r"|Exchange SinglePartition", plan))
-    assert n == 1, f"expected 1 exchange, found {n}:\n{plan[:2000]}"
-
-
-def test_blocklist_fold_is_map_only(spark):
-    """The category fold must stay a scan-side expression: no exchange,
-    no join, no Python in the plan (PLANS.md session-6 audit)."""
-    frontier_rules = Q.QUERIES["blocklist_gate"](spark, SF)
-    plan = _plan(frontier_rules.drop("blocked"))
-    assert "Exchange" not in plan, plan[:1500]
-    assert "Join" not in plan, plan[:1500]
-    assert "Python" not in plan, plan[:1500]
-
-
-def test_robots_sitemaps_single_exchange(spark):
-    """Directive parse rides the scan; only the host-grain distinct
-    exchanges (the hosts().distinct() input contributes its own)."""
-    plan = _plan(Q.QUERIES["robots_sitemaps"](spark, SF))
-    assert "Python" not in plan, plan[:1500]
-    assert "Generate" in plan, plan[:1500]  # posexplode rides the scan
-
-
-def test_dup_span_scrub_single_owner_agg_and_fingerprint_shuffle(spark):
-    """One hash agg must carry BOTH the window count and the min-owner
-    (partial_min over the struct); window text must not be a shuffle
-    key (only h1/h2 fingerprints)."""
-    plan = _plan(Q.QUERIES["dup_span_scrub"](spark, SF))
-    assert "partial_min" in plan, plan[:2000]
-    assert "partial_count" in plan, plan[:2000]
-
-
-def test_extraction_pipeline_no_python_and_fingerprint_owner_agg(spark):
-    """The composed extraction chain must stay JVM-side end to end (the
-    three stages are pure Catalyst) and keep the span stage's fused
-    count+owner aggregation."""
-    plan = _plan(Q.QUERIES["extraction_pipeline"](spark, SF))
-    assert "Python" not in plan and "ArrowEvalPython" not in plan, \
-        plan[:2000]
-    assert "partial_min" in plan, plan[:2000]
-
-
-def test_discovery_pipeline_no_python(spark):
-    plan = _plan(Q.QUERIES["discovery_pipeline"](spark, SF))
-    assert "Python" not in plan, plan[:2000]
-
-
-def test_fim_transform_zero_exchange_map_only(spark):
-    plan = _plan(Q.QUERIES["fim_transform"](spark, SF))
-    assert "Exchange" not in plan, plan[:1500]
-    assert "Python" not in plan, plan[:1500]
-
-
-def test_span_corruption_single_doc_aggregation(spark):
-    """One partial+final agg pair on doc_id and nothing else: the mask
-    rule must not introduce a join or a second exchange."""
-    plan = _plan(Q.QUERIES["span_corruption"](spark, SF))
-    assert plan.count("Exchange hashpartitioning(doc_id") <= 1, \
-        plan[:2000]
-    assert "Join" not in plan, plan[:1500]
-
-
-def test_epoch_expansion_broadcast_mix_no_preshuffle(spark):
-    """The group-level mix table must broadcast onto the doc stream;
-    the stream itself must not exchange before the explode."""
-    plan = _plan(Q.QUERIES["epoch_expansion"](spark, SF))
-    assert "BroadcastHashJoin" in plan, plan[:2000]
-    assert "SortMergeJoin" not in plan, plan[:2000]
 
 
 def test_revalidate_merge_one_join_no_window(spark):
@@ -390,18 +61,6 @@ def test_revalidate_merge_one_join_no_window(spark):
                 ("SortMergeJoin", "BroadcastHashJoin", "ShuffledHashJoin"))
     assert joins == 1, plan[:2000]
     assert "Window" not in plan and "CartesianProduct" not in plan
-
-
-def test_cache_ttl_map_only_zero_exchange(spark):
-    plan = _plan(Q.QUERIES["cache_ttl"](spark, SF))
-    assert "Exchange" not in plan, plan[:1500]
-    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
-
-
-def test_revalidation_planner_partial_window_limit(spark):
-    plan = _plan(Q.QUERIES["revalidation_planner"](spark, SF))
-    assert "WindowGroupLimit" in plan and "Partial" in plan, plan[:2000]
-    assert "CartesianProduct" not in plan
 
 
 def test_arrow_batches_are_payload_bounded(spark):
@@ -413,41 +72,3 @@ def test_arrow_batches_are_payload_bounded(spark):
         "spark.sql.execution.arrow.maxRecordsPerBatch") == "1024"
 
 
-def test_bpe_batched_job_count_sublinear(spark):
-    """bpe_train(pairs_per_pass=M) must run O(n_merges/M) Spark jobs,
-    not one count-job per merge: 32 merges at M=8 is <= ~5 passes, each
-    pass costing a bounded few jobs (count+collect, checkpoint) plus the
-    vocab build — well under the ~2-per-merge the sequential path pays."""
-    from distributed_web_crawler_spark.pipeline import text as ptext
-
-    docs = spark.read.parquet(f"{SF}/documents.parquet")
-    sc = spark.sparkContext
-    n_merges, m = 32, 8
-
-    sc.setJobGroup("bpe_batched", "job-count probe")
-    tracker = sc.statusTracker()
-    before = len(tracker.getJobIdsForGroup("bpe_batched") or [])
-    out = ptext.bpe_train(docs, n_merges=n_merges, pairs_per_pass=m)
-    n_rows = out.count()
-    jobs = len(tracker.getJobIdsForGroup("bpe_batched") or []) - before
-    sc.setJobGroup(None, None)
-
-    assert n_rows == n_merges
-    # sequential = ~2 jobs/merge (64+ for 32 merges); batched: a
-    # bounded few jobs per PASS, and compatibility skips can stretch
-    # passes past ceil(32/8) — but never anywhere near per-merge cost
-    assert jobs <= 24, jobs
-
-
-def test_bpe_batched_prefix_matches_sequential_when_compatible(spark):
-    """With pairs_per_pass=1 the new loop must be byte-identical to the
-    old exact-Sennrich path (same argmax, same tie order)."""
-    from distributed_web_crawler_spark.pipeline import text as ptext
-
-    docs = spark.read.parquet(f"{SF}/documents.parquet").limit(60)
-    seq = [(r["rank"], r["left"], r["right"], r["freq"])
-           for r in ptext.bpe_train(docs, n_merges=6).collect()]
-    again = [(r["rank"], r["left"], r["right"], r["freq"])
-             for r in ptext.bpe_train(docs, n_merges=6,
-                                      pairs_per_pass=1).collect()]
-    assert seq == again and len(seq) == 6

@@ -1,60 +1,11 @@
-"""Unit invariants for operators.redirects.resolve_redirects and
-pipeline.multimodal.aspect_bucket_batches (values are oracle-checked via
-redirect_resolve / aspect_bucket; these pin the algorithmic properties)."""
+"""Unit invariants for pipeline.multimodal.aspect_bucket_batches (values
+are oracle-checked via aspect_bucket; these pin the algorithmic
+properties)."""
 
-import pytest
 from pyspark.sql import functions as F
 
-from distributed_web_crawler_spark.operators.redirects import (
-    resolve_redirects)
 from distributed_web_crawler_spark.pipeline.multimodal import (
     aspect_bucket_batches)
-
-
-def _resolve(spark, edges, max_hops=8):
-    df = spark.createDataFrame(edges, "src string, dst string")
-    rows = resolve_redirects(df, max_hops=max_hops).collect()
-    return {r["src"]: (r["final_url"], r["hops"], r["capped"]) for r in rows}
-
-
-def test_chain_resolves_to_terminal(spark):
-    got = _resolve(spark, [("a", "b"), ("b", "c"), ("c", "d")])
-    assert got == {"a": ("d", 3, False),
-                   "b": ("d", 2, False),
-                   "c": ("d", 1, False)}
-
-
-def test_loop_is_capped_and_chain_into_loop_too(spark):
-    got = _resolve(spark, [("x", "y"), ("y", "x"), ("pre", "x")],
-                   max_hops=8)
-    assert got["x"] == ("x", 8, True)      # 8 hops around a 2-cycle
-    assert got["y"] == ("y", 8, True)
-    assert got["pre"][2] is True           # enters the loop -> capped
-    assert got["pre"][1] == 8
-
-
-def test_duplicate_observations_tolerated(spark):
-    got = _resolve(spark, [("a", "b"), ("a", "b"), ("b", "c")])
-    assert got["a"] == ("c", 2, False)
-
-
-def test_chain_exactly_at_cap_resolves(spark):
-    edges = [(f"n{i}", f"n{i+1}") for i in range(8)]  # n0 -> ... -> n8
-    got = _resolve(spark, edges, max_hops=8)
-    assert got["n0"] == ("n8", 8, False)
-
-
-def test_doubling_join_count_is_logarithmic(spark):
-    df = spark.createDataFrame([("a", "b")], "src string, dst string")
-    plan = resolve_redirects(df, max_hops=8)._jdf.queryExecution() \
-        .optimizedPlan().toString()
-    # every doubling iteration ran eagerly against checkpointed inputs,
-    # so the returned plan holds ONLY the terminal-test join over the
-    # materialized pointer table — not the 2^k - 1 unrolled join tree
-    # a lazy self-join recursion would build; and no cartesian anywhere
-    assert plan.count("Join") == 1
-    assert plan.count("LogicalRDD") >= 2  # checkpointed inputs
-    assert "Cartesian" not in plan
 
 
 def test_aspect_buckets_are_exact_integer_ladder(spark):

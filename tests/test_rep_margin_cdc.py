@@ -1,12 +1,9 @@
-"""RFC 9309 wildcard robots, margin mining, content-defined chunking."""
-
-from pyspark.sql import functions as F
+"""RFC 9309 wildcard robots, content-defined chunking."""
 
 from distributed_web_crawler_spark.operators.robots import (
     wildcard_rule_decisions,
 )
 from distributed_web_crawler_spark.pipeline.dedup import cdc_boundaries
-from distributed_web_crawler_spark.pipeline.similarity import margin_pairs
 
 
 def _decide(spark, path, rules):
@@ -63,20 +60,3 @@ def test_cdc_spans_partition_text_exactly():
     assert all(ln <= 48 for _, ln in spans)
 
 
-def test_margin_discounts_hub_vector(spark):
-    # tgt 1 is a hub (high cosine to everything); tgt 3 is specific to
-    # src 0. Raw cosine picks the hub; margin must pick the specific pair.
-    rows = [
-        (0, [1.0, 0.05, 0.0]),   # src A
-        (2, [0.0, 0.05, 1.0]),   # src B
-        (4, [0.5, 0.05, 0.5]),   # src C (near both, pads neighborhoods)
-        (1, [0.57, 0.57, 0.57]),  # tgt hub: close to every src
-        (3, [0.99, 0.0, 0.0]),   # tgt specific to A
-        (5, [0.0, 0.0, 0.99]),   # tgt specific to B
-    ]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    df = df.withColumn("label", F.lit(0))
-    got = {r.src_id: r for r in
-           margin_pairs(df, k=2, threshold=0.0).collect()}
-    assert got[0].tgt_id == 3
-    assert got[2].tgt_id == 5

@@ -1,103 +1,4 @@
-"""Unit semantics for the two text-scrubbing operators added after
-round-2 certification: host-grain boilerplate removal and exact
-duplicate-span removal (the executed Lee-et-al dedup)."""
-
-from distributed_web_crawler_spark.pipeline.dedup import (
-    duplicate_span_scrub,
-)
-from distributed_web_crawler_spark.pipeline.text import (
-    host_boilerplate_scrub,
-)
-
-
-def test_host_boilerplate_is_host_scoped(spark):
-    nav = "home | about"
-    quote = "famous shared quote"
-    rows = []
-    # host A: 6 docs, all carry the nav bar; half carry the quote
-    for i in range(6):
-        body = f"unique line {i}"
-        text = "\n".join([nav, body] + ([quote] if i < 3 else []))
-        rows.append((i, "hostA", text))
-    # host B: 3 docs (< min_docs=5) — even a 100%-df line survives
-    for i in range(6, 9):
-        rows.append((i, "hostB", f"{nav}\nother line {i}"))
-    df = spark.createDataFrame(rows, "doc_id long, source string, "
-                               "text string")
-    got = {r["doc_id"]: r for r in
-           host_boilerplate_scrub(df, min_docs=5, frac=0.5).collect()}
-    # host A: nav stripped (6/6 >= 50%), quote kept (3/6 not > threshold?
-    # 3 >= ceil(0.5*6)=3 -> stripped too; unique line survives)
-    assert got[0]["clean_text"] == "unique line 0"
-    assert got[4]["clean_text"] == "unique line 4"
-    # host B below min_docs: nav survives there
-    assert got[6]["clean_text"] == f"{nav}\nother line 6"
-    assert got[6]["n_kept"] == 2
-
-
-def test_dup_span_scrub_owner_keeps_and_spans_merge(spark):
-    rows = [
-        (0, "a b c d e f g h i j"),              # owner of the shared span
-        (1, "x a b c d e f g h i j y"),          # 3 overlapping dup windows
-        (2, "m n o p q r s t m n o p q r s t"),  # within-doc repeat
-        (3, "short doc"),                        # < w tokens: untouched
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    got = {r["doc_id"]: r for r in duplicate_span_scrub(df, w=8).collect()}
-    # the canonical first occurrence survives verbatim
-    assert got[0]["clean_text"] == "a b c d e f g h i j"
-    assert got[0]["n_removed"] == 0
-    # overlapping flagged windows merged into ONE span [2..11] then cut
-    assert got[1]["clean_text"] == "x y"
-    assert got[1]["n_removed"] == 10
-    # within-document repetition: second copy cut, first kept
-    assert got[2]["clean_text"] == "m n o p q r s t"
-    assert got[2]["n_removed"] == 8
-    # sub-window documents pass through
-    assert got[3]["clean_text"] == "short doc"
-    assert got[3]["n_removed"] == 0
-
-
-def test_main_content_block_picks_densest_run(spark):
-    from distributed_web_crawler_spark.pipeline.text import (
-        main_content_block,
-    )
-    text = ("home\n"
-            "one two three four five six\n"      # run A: 6+7=13 words
-            "seven eight nine ten eleven tw th\n"
-            "login\n"
-            "alpha beta gamma delta epsilon\n"    # run B: 5 words
-            "© 2024\n")
-    df = spark.createDataFrame([(1, text)], "doc_id long, text string")
-    got = main_content_block(df, min_words=5).collect()[0]
-    assert got["main_text"] == ("one two three four five six\n"
-                                "seven eight nine ten eleven tw th")
-    assert got["block_lines"] == 2 and got["block_words"] == 13
-    assert got["n_lines"] == 6
-    # a doc with no qualifying line yields an empty block
-    sparse = spark.createDataFrame([(2, "a b\nc d\n")],
-                                   "doc_id long, text string")
-    got2 = main_content_block(sparse, min_words=5).collect()[0]
-    assert got2["main_text"] == "" and got2["block_words"] == 0
-
-
-def test_mime_sniff_magic_beats_declared(spark):
-    from distributed_web_crawler_spark.pipeline.multimodal import (
-        mime_sniff,
-    )
-    rows = [
-        ("a", bytearray(b"sPNGxxxx"), "png"),     # honest
-        ("b", bytearray(b"sJPGxxxx"), "png"),     # mislabeled
-        ("c", bytearray(b"GARBAGE!"), "jpeg"),    # unknown signature
-        ("d", bytearray(b"sP"), "png"),           # truncated payload
-    ]
-    df = spark.createDataFrame(rows, "image_id string, bytes binary, "
-                               "fmt string")
-    got = {r["image_id"]: r for r in mime_sniff(df).collect()}
-    assert not got["a"]["mismatch"] and got["a"]["sniffed"] == "png"
-    assert got["b"]["mismatch"] and got["b"]["sniffed"] == "jpeg"
-    assert got["c"]["mismatch"] and got["c"]["sniffed"] == "unknown"
-    assert got["d"]["mismatch"] and got["d"]["sniffed"] == "unknown"
+"""Image metadata-envelope scrub (the manifest's scrub_meta rung)."""
 
 
 def test_image_meta_envelope_roundtrip_and_scrub(spark):
@@ -108,11 +9,10 @@ def test_image_meta_envelope_roundtrip_and_scrub(spark):
     import numpy as np
 
     from distributed_web_crawler_spark.crawl.synthweb import (
-        decode_image, encode_image, meta_for_key, split_meta,
-        wrap_with_meta,
+        decode_image, encode_image, split_meta, wrap_with_meta,
     )
     from distributed_web_crawler_spark.pipeline.multimodal import (
-        image_meta_scrub, image_meta_stats,
+        image_meta_scrub,
     )
 
     rng = np.random.default_rng(7)
@@ -137,15 +37,6 @@ def test_image_meta_envelope_roundtrip_and_scrub(spark):
     assert {r.image_id: bytes(r.bytes) for r in df2.collect()} == scrubbed
     # schema preserved: scrub composes anywhere in the ladder
     assert image_meta_scrub(df).schema == df.schema
-
-    stats = {r.image_id: r for r in image_meta_stats(df).collect()}
-    assert stats["w"].n_meta == 3 and stats["w"].has_gps
-    assert stats["c"].n_meta == 0 and not stats["c"].has_gps
-    assert stats["w"].payload_sha256 == stats["c"].payload_sha256
-
-    # the fixture generator is deterministic and mirrors meta_for_key
-    assert meta_for_key(15).keys() == {"device", "gps", "software"}
-    assert meta_for_key(1) == {"device": "cam-1"}
 
 
 def test_training_mix_scrub_collapses_meta_divergent_copies(spark):

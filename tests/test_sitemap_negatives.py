@@ -1,13 +1,8 @@
-"""Unit invariants for operators.sitemap.parse_sitemaps and
-pipeline.similarity.hard_negative_mining (values oracle-checked via
-sitemap_extract / hard_negatives; these pin edge cases the synthetic
+"""Unit invariants for operators.sitemap.parse_sitemaps (values
+oracle-checked via sitemap_extract; these pin edge cases the synthetic
 query corpus can't reach)."""
 
-from pyspark.sql import functions as F
-
 from distributed_web_crawler_spark.operators.sitemap import parse_sitemaps
-from distributed_web_crawler_spark.pipeline.similarity import (
-    hard_negative_mining)
 
 
 def _rows(spark, xml, host="a.com"):
@@ -86,99 +81,3 @@ def test_duplicate_loc_first_entry_wins_even_across_files(spark):
     assert str(rows[0]["lastmod"]) == "2024-01-01"  # idx ties -> min struct
 
 
-def _mine(spark, vecs, queries, k=2):
-    e = spark.createDataFrame(
-        vecs, "vec_id long, embedding array<double>, label string")
-    q = spark.createDataFrame(
-        queries, "query_id long, embedding array<double>, label string")
-    return {(r["query_id"], r["rank"]):
-            (r["vec_id"], r["neg_label"], r["cosine"], r["pos_cosine"],
-             r["margin"])
-            for r in hard_negative_mining(e, q, k=k).collect()}
-
-
-def test_hard_negatives_exclude_own_label_and_self(spark):
-    vecs = [(0, [1.0, 0.0], "a"), (1, [0.9, 0.1], "a"),
-            (2, [0.8, 0.2], "b"), (3, [0.0, 1.0], "b")]
-    got = _mine(spark, vecs, [(0, [1.0, 0.0], "a")], k=3)
-    mined = [got[(0, r)][0] for r in sorted(r for (_, r) in got)]
-    assert mined == [2, 3]            # only label-b vectors, cosine order
-    assert all(got[(0, r)][1] == "b" for (_, r) in got)
-
-
-def test_margin_positive_when_negative_beats_best_positive(spark):
-    # anchor label a; nearest positive is far, nearest negative is close
-    vecs = [(0, [1.0, 0.0], "a"), (1, [0.0, 1.0], "a"),
-            (2, [1.0, 0.01], "b")]
-    got = _mine(spark, vecs, [(0, [1.0, 0.0], "a")], k=1)
-    vec_id, _, cos, pos_cos, margin = got[(0, 1)]
-    assert vec_id == 2 and margin == cos - pos_cos and margin > 0
-
-
-def test_singleton_class_yields_null_margin(spark):
-    vecs = [(0, [1.0, 0.0], "only"), (1, [0.5, 0.5], "b")]
-    got = _mine(spark, vecs, [(0, [1.0, 0.0], "only")], k=1)
-    _, _, _, pos_cos, margin = got[(0, 1)]
-    assert pos_cos is None and margin is None
-
-
-def test_recall_is_one_when_probing_every_list(spark):
-    from distributed_web_crawler_spark.pipeline.similarity import (
-        ann_recall_at_k)
-    emb = (spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-           .selectExpr("vec_id",
-                       "CAST(embedding AS array<double>) AS embedding"))
-    q = (emb.where("vec_id < 4")
-         .selectExpr("vec_id AS query_id", "embedding"))
-    got = ann_recall_at_k(emb, q, k=5, n_lists=8, nprobe=8).collect()
-    assert len(got) == 4
-    assert all(r["recall"] == 1.0 for r in got)  # exhaustive probe = brute
-
-
-def test_oov_rate_vocab_covering_everything_is_zero(spark):
-    from distributed_web_crawler_spark.pipeline.text import oov_rate
-    docs = spark.createDataFrame(
-        [(1, "a b c", "s1"), (2, "a a b zzz", "s2")],
-        "doc_id long, text string, source string")
-    got = {r["source"]: r for r in oov_rate(docs, vocab_size=100).collect()}
-    assert got["s1"]["n_oov"] == 0 and got["s1"]["oov_rate"] == 0.0
-    assert got["s2"]["n_oov"] == 0
-
-
-def test_oov_rate_counts_tokens_outside_topk(spark):
-    from distributed_web_crawler_spark.pipeline.text import oov_rate
-    # vocab_size=1 -> vocab = {a} (most frequent); everything else OOV
-    docs = spark.createDataFrame(
-        [(1, "a a b", "s1"), (2, "a c c c", "s2")],
-        "doc_id long, text string, source string")
-    got = {r["source"]: r for r in oov_rate(docs, vocab_size=1).collect()}
-    assert (got["s1"]["n_tokens"], got["s1"]["n_oov"]) == (3, 1)
-    assert (got["s2"]["n_tokens"], got["s2"]["n_oov"]) == (4, 3)
-    assert got["s2"]["oov_rate"] == 0.75
-
-
-def test_embedding_outliers_flags_planted_mislabel(spark):
-    from distributed_web_crawler_spark.pipeline.similarity import (
-        embedding_outliers)
-    # label 'a' clusters near e1; vec 99 is labeled 'a' but points at e2
-    rows = ([(i, [10.0 + (i % 3) * 0.1, 1.0, 0.0], "a") for i in range(6)]
-            + [(99, [0.0, 0.0, 25.0], "a")])
-    emb = spark.createDataFrame(
-        rows, "vec_id long, embedding array<double>, label string")
-    got = embedding_outliers(emb, dim=3, flag_per_label=1).collect()
-    flagged = [r["vec_id"] for r in got if r["is_outlier"]]
-    assert flagged == [99]
-    worst = min(got, key=lambda r: (r["centroid_cosine"], r["vec_id"]))
-    assert worst["vec_id"] == 99 and worst["outlier_rank"] == 1
-
-
-def test_embedding_outliers_plan_has_no_explode(spark):
-    from distributed_web_crawler_spark.pipeline.similarity import (
-        embedding_outliers)
-    emb = spark.createDataFrame(
-        [(0, [1.0, 0.0], "a")],
-        "vec_id long, embedding array<double>, label string")
-    plan = embedding_outliers(emb, dim=2)._jdf.queryExecution() \
-        .optimizedPlan().toString()
-    # the dim x n row blowup never exists: dots are element_at folds
-    assert "Generate" not in plan

@@ -2,7 +2,7 @@
 must count tokens IDENTICALLY over exotic whitespace, or every packing /
 chunking / n-gram oracle silently diverges (the round-3 driver red on
 sequence_packing/training_mix). The engine splits on the explicit class
-``pipeline.text.WS_PLUS`` = ``[ \\t\\n\\r\\f\\x0B]+`` — Java's \\s spelled
+``pipeline.multimodal.WS_PLUS`` = ``[ \\t\\n\\r\\f\\x0B]+`` — Java's \\s spelled
 out, because RE2's \\s omits \\x0B — and every string_split_regex oracle
 uses the same literal. These tests fail if either side drifts back to
 ``\\s+``."""
@@ -75,22 +75,3 @@ def test_token_count_parity_fuzz(spark, docs):
     assert _spark_counts(spark, docs) == _duck_counts(docs)
 
 
-def test_sequence_packing_oracle_bigint_types():
-    """The r3 driver hash-mismatch root cause: DuckDB window sum(BIGINT)
-    returns HUGEINT (int128) which converts to float64 through pandas,
-    while Spark emits int64 — dtype-sensitive value hashing then fails
-    even when values agree. Pin: every numeric column of the
-    sequence_packing and training_mix oracles must come back int64."""
-    from distributed_web_crawler_spark.queries import ORACLES
-
-    sql = ORACLES["sequence_packing"]
-    if callable(sql):
-        sql = sql()
-    con = duckdb.connect()
-    con.execute("CREATE VIEW documents AS SELECT * FROM read_parquet("
-                "'/root/testdata/sf0.001/documents.parquet')")
-    df = con.execute(sql).df()
-    con.close()
-    for c in ("doc_id", "n_tokens", "offset_in_chunk",
-              "chunk_start", "chunk_end"):
-        assert str(df[c].dtype) == "int64", (c, df[c].dtype)

@@ -115,27 +115,6 @@ def test_fuzz_python_mirror_matches_urljoin(base, href):
         f"resolve_ref_py({base!r}, {href!r})"
 
 
-def test_canonicalize_url_edge_cases(spark):
-    from distributed_web_crawler_spark.functions.urls import canonicalize_url
-    from pyspark.sql import functions as F
-    cases = [
-        # case + default port + fragment + tracking + param order + slash
-        ("HTTP://WWW.Ex.COM:80/a/?utm_x=1&b=2&a=1#f",
-         "http://www.ex.com/a?a=1&b=2"),
-        ("https://ex.com:443/", "https://ex.com/"),
-        ("https://ex.com:8443/", "https://ex.com:8443/"),  # non-default kept
-        ("http://ex.com", "http://ex.com/"),               # empty path -> /
-        ("http://ex.com/x//", "http://ex.com/x"),
-        ("http://ex.com/?gclid=z&fbclid=y&ref=r", "http://ex.com/"),
-        ("http://ex.com/?z=1&a=2", "http://ex.com/?a=2&z=1"),
-        ("http://ex.com:443/", "http://ex.com:443/"),      # https port on http
-    ]
-    df = spark.createDataFrame([(u,) for u, _ in cases], "u string")
-    got = [r["c"] for r in
-           df.select(canonicalize_url(F.col("u")).alias("c")).collect()]
-    assert got == [w for _, w in cases]
-
-
 # ---------------------------------------------------------------------------
 # eTLD+1: Catalyst fold vs Python mirror, edge cases + hypothesis fuzz
 # ---------------------------------------------------------------------------

@@ -89,34 +89,26 @@ def test_wds_index_is_jvm_only(spark):
     assert "BatchEvalPython" not in after_scan
 
 
-def test_wds_incremental_plan_statuses_and_clean_shard_identity(
-        spark, tmp_path):
-    """The planner's four statuses are exact, and a shard it calls clean
-    really is byte-identical across re-exports (so skipping it is
-    sound), while dirty shards differ."""
-    from pyspark.sql import functions as F
 
-    from distributed_web_crawler_spark.sources.wds import (
-        wds_incremental_plan,
-    )
 
+def test_wds_reexport_rewrites_only_shards_that_changed(spark, tmp_path):
+    """Content-addressed shards: dropping images changes exactly the
+    shards that held them; every other shard is byte-identical across
+    the two exports, so a re-export after an incremental crawl may skip
+    it."""
+    dropped = ("img-00000022", "img-00000023")
     old_imgs = _images(spark, n=24).cache()
-    # new corpus: drop two images, keep the rest byte-identical
-    new_imgs = old_imgs.where(
-        ~F.col("image_id").isin("img-00000022", "img-00000023")).cache()
-    plan = {r.shard: r for r in wds_incremental_plan(
-        wds_member_index(old_imgs, n_shards=4),
-        wds_member_index(new_imgs, n_shards=4)).collect()}
-    removed = sum(r.n_removed for r in plan.values())
-    assert removed == 4  # 2 images x 2 members
-    assert sum(r.n_added + r.n_changed for r in plan.values()) == 0
-    dirty = {s for s, r in plan.items() if r.dirty}
-    assert dirty and dirty != set(plan)  # some dirty, some clean
+    new_imgs = old_imgs.where(~F.col("image_id").isin(*dropped)).cache()
+    touched = {r.shard for r in wds_member_index(old_imgs, n_shards=4)
+               .where(F.col("member_name").startswith(dropped[0])
+                      | F.col("member_name").startswith(dropped[1]))
+               .collect()}
+    assert touched
 
     a, b = str(tmp_path / "a"), str(tmp_path / "b")
     export_wds_shards(old_imgs, a, n_shards=4).collect()
     export_wds_shards(new_imgs, b, n_shards=4).collect()
-    for s, r in plan.items():
+    for s in range(4):
         fa = open(os.path.join(a, f"shard-{s:05d}.tar"), "rb").read()
         fb = open(os.path.join(b, f"shard-{s:05d}.tar"), "rb").read()
-        assert (fa != fb) == r.dirty, f"shard {s}"
+        assert (fa != fb) == (s in touched), f"shard {s}"
